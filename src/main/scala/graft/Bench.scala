@@ -1,59 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // batch main: inputs are never rewritten mid-run — memoize the
     // per-path fingerprint walk (Tables.pathFingerprint) for the run
     System.setProperty("graft.fp.ttlMs", "3600000")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // engine defaults: AQE replans skew/small shuffles at runtime; a
-      // raised broadcast ceiling keeps every dimension table on the hash
-      // side (orders at bench scale is ~15 MB — well worth shipping to all
-      // executors instead of shuffling lineitem)
-      .config("spark.sql.adaptive.enabled",
-              sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.RewriteLatestWinsWindow
-    // untimed warmup: REAL data-page scans, not count() — parquet answers
-    // count() from footer metadata alone, so an r07-style footer-only warmup
-    // left every data page cold and the first ~20 measured queries absorbed
-    // 54 s of file I/O + scan-codegen JIT. A hash-agg over every column
-    // forces each page through decode + whole-stage codegen once, untimed.
-    locally {
-      import org.apache.spark.sql.functions.{col, count, struct, sum, xxhash64}
-      Seq("lineitem", "events", "documents", "embeddings", "orders",
-          "customer", "part", "supplier", "nation", "region").foreach { t =>
-        try {
-          val df = Tables.load(spark, sfDir, t)
-          df.agg(sum(xxhash64(struct(df.columns.toIndexedSeq.map(col): _*)))).first()
-        } catch { case _: Throwable => () }
-      }
-      // one throwaway shuffle-join + agg plan: JITs the exchange/hash-join/
-      // hash-agg codegen paths the measured queries share
-      try {
-        Tables.load(spark, sfDir, "orders").join(
-            Tables.load(spark, sfDir, "customer"),
-            col("o_custkey") === col("c_custkey"))
-          .groupBy(col("c_mktsegment")).agg(count(col("*"))).first()
-      } catch { case _: Throwable => () }
-    }
-    // ingest-time artifacts (the persisted historical LSH index) built
-    // untimed: their cost is amortized across a corpus's lifetime in
-    // production, so charging it to one query misstates that operator's
-    // steady-state cost — see SparkEntry.warmIngestArtifacts
-    try SparkEntry.warmIngestArtifacts(spark, sfDir) catch { case _: Throwable => () }
-    // streaming-runtime class-loading warmup (see warmStreamingRuntime): a
-    // per-JVM cost on any real cluster, not the first streaming query's
-    try SparkEntry.warmStreamingRuntime(spark, sfDir) catch { case _: Throwable => () }
+    val spark = GraftSession()
+    // untimed warm-up (Warmup.run): data pages of every table, one join
+    // plan, the ingest-time artifacts, the streaming runtime. Failures are
+    // published as `warm_errors`, never swallowed.
+    val warmErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    warmErrors ++= Warmup.run(spark, sfDir)
     // plan/codegen warm pass (untimed): run the whole contract once at the
     // smallest SF. Compiles each plan's whole-stage codegen and JITs the
     // operator paths on the REAL schemas (a per-JVM cost on any long-lived
@@ -65,22 +22,10 @@ object Bench {
     locally {
       val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
         sfDir.replaceAll("sf[0-9.]+$", "sf0.001"))
-      if (warmDir != sfDir && new java.io.File(warmDir).isDirectory) {
-        // a dead warm pass must be VISIBLE (the warmStreamingRuntime
-        // incident class): failures stay non-fatal — the warm is an
-        // optimization — but their names + exception classes are printed so
-        // a silently-reverted ~13% normalized win shows up in the bench log
-        val warmFails = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        SparkEntry.queries.foreach { case (name, fn) =>
-          try fn(spark, warmDir).count()
-          catch { case t: Throwable =>
-            warmFails += ((name, t.getClass.getSimpleName)) }
-        }
-        if (warmFails.nonEmpty)
-          System.err.println(s"[bench] WARM PASS FAILURES (${warmFails.size}/" +
-            s"${SparkEntry.queries.size}): " +
-            warmFails.map { case (n, e) => s"$n:$e" }.mkString(", "))
-      }
+      if (warmDir != sfDir && new java.io.File(warmDir).isDirectory)
+        warmErrors ++= Warmup.steps(SparkEntry.queries.toSeq.map { case (name, fn) =>
+          s"plan:$name" -> { () => fn(spark, warmDir).count(); () }
+        })
     }
     // machine-contention calibration: a fixed-cost 10M-row codegen scan with
     // NO data dependence, timed like a query but kept out of the total. Its
@@ -94,11 +39,11 @@ object Bench {
     // and BENCH_FULL.json carries the raw list.
     val calibrations = scala.collection.mutable.ArrayBuffer.empty[Double]
     // start offset of each calibration pass (seconds since the timed loop
-    // began; negative = before it) — lets the artifact map any query's run
-    // window to its nearest calibration reading (r18: the self-adjudication
+    // began; -1.0 = the pass before it) — lets the artifact map any query's
+    // run window to its nearest calibration reading (r18: the self-adjudication
     // the r17 verdict asked for, instead of post-hoc local re-profiles)
     val calStarts = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var calClock: () => Double = () => 0.0
+    var calClock: () => Double = () => -1.0
     def calibrate(): Unit = {
       import org.apache.spark.sql.functions.{sum, xxhash64, col, shiftright}
       // first() (NOT count()): count() prunes the aggregate away and would
@@ -180,10 +125,19 @@ object Bench {
     val steady = rerun.map { case (name, t1) =>
       val t0 = System.nanoTime()
       starts(s"steady:$name") = (t0 - loopStart) / 1e9
-      try SparkEntry.queries(name)(spark, sfDir).count() catch { case _: Throwable => () }
-      name -> math.min(t1, (System.nanoTime() - t0) / 1e9)
+      // a failed rerun keeps its first-run time and is recorded by name
+      val failed = Warmup.steps(Seq(s"steady:$name" -> { () =>
+        SparkEntry.queries(name)(spark, sfDir).count(); () }))
+      warmErrors ++= failed
+      name -> (if (failed.nonEmpty) t1 else math.min(t1, (System.nanoTime() - t0) / 1e9))
     }
     val steadyTotal = total - rerun.map(_._2).sum + steady.map(_._2).sum
+    // the same sum over only the fixed 12 slowest first runs: `steady_total`
+    // reruns a variable set (the polluted queries join it), so only this
+    // figure compares across rounds
+    val fixed12 = ok.sortBy(-_._2).take(12)
+    val steadyMap = steady.toMap
+    val steadyTotal12 = total - fixed12.map(_._2).sum + fixed12.map(q => steadyMap(q._1)).sum
     // cold-ratio telemetry (soft gate): first-run / steady for the rerun
     // set. On a quiet host a non-streaming query above ~3 flags a cold
     // artifact being billed to the first timed run (the r09 editdist
@@ -191,7 +145,6 @@ object Bench {
     // Streaming lifecycles legitimately carry per-query scaffolding and sit
     // higher; contention episodes inflate every ratio in a time window
     // (check `starts`/`calibrations` first, as always).
-    val steadyMap = steady.toMap
     val coldRatio = rerun.collect {
       case (name, t1) if steadyMap.getOrElse(name, 0.0) > 0.0 =>
         name -> t1 / steadyMap(name)
@@ -211,8 +164,8 @@ object Bench {
     def qstr(s: String): String =
       "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
                          case c if c < ' ' => " "; case c => c.toString } + "\""
-    val errJson = errors.map { case (k, v) => s"${qstr(k)}:${qstr(v)}" }
-      .mkString("{", ",", "}")
+    def strMap(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => s"${qstr(k)}:${qstr(v)}" }.mkString("{", ",", "}")
     val calJson = calibrations.map(num).mkString("[", ",", "]")
     val calStartsJson = calStarts.map(num).mkString("[", ",", "]")
     val pollutedJson = polluted.map(qstr).mkString("[", ",", "]")
@@ -221,7 +174,7 @@ object Bench {
     // per-position cost (should warmup ever regress) is attributable
     val orderJson = results.map { case (n, _) => qstr(n) }.mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","calibration":${num(calibration)},"calibrations":$calJson,"cal_starts":$calStartsJson,"polluted":$pollutedJson,"order":$orderJson,"queries":${fmt(results)},"starts":${fmt(starts)},"steady":${fmt(steady)},"steady_total":${num(steadyTotal)},"cold_ratio":${fmt(coldRatio)},"errors":$errJson,"n_failed":${errors.size},"sf":"$sfDir","n_queries":${results.size}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","calibration":${num(calibration)},"calibrations":$calJson,"cal_starts":$calStartsJson,"polluted":$pollutedJson,"order":$orderJson,"queries":${fmt(results)},"starts":${fmt(starts)},"steady":${fmt(steady)},"steady_total":${num(steadyTotal)},"steady_total_fixed12":${num(steadyTotal12)},"cold_ratio":${fmt(coldRatio)},"errors":${strMap(errors)},"warm_errors":${strMap(warmErrors)},"n_failed":${errors.size},"sf":"$sfDir","n_queries":${results.size}}"""
     val fullPath = java.nio.file.Paths.get("BENCH_FULL.json")
     java.nio.file.Files.write(fullPath, (fullLine + "\n").getBytes("UTF-8"))
     val headline = Seq(
@@ -235,7 +188,7 @@ object Bench {
       "ann_topk_brute", "ann_topk_ivf", "ann_topk_quant", "range_join_orders",
       "asof_assignment", "funnel_levels")
       .flatMap(n => results.toMap.get(n).map(n -> _))
-    println(s"""{"metric":"total","value":${num(total)},"unit":"sec","calibration":${num(calibration)},"steady_total":${num(steadyTotal)},"queries":${fmt(headline)},"sf":"$sfDir","n_queries":${results.size},"n_failed":${errors.size},"full":"BENCH_FULL.json"}""")
+    println(s"""{"metric":"total","value":${num(total)},"unit":"sec","calibration":${num(calibration)},"steady_total":${num(steadyTotal)},"steady_total_fixed12":${num(steadyTotal12)},"queries":${fmt(headline)},"sf":"$sfDir","n_queries":${results.size},"n_failed":${errors.size},"full":"BENCH_FULL.json"}""")
     spark.stop()
   }
 }

@@ -1,23 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc inspection main: `runMain graft.Debug <sfDir> <query> [explain]` —
   * prints row count, wall time, and optionally the formatted physical plan
-  * of one SparkEntry query. Development tool for plan/skew hunting.
+  * of one SparkEntry query. Development tool for plan/skew hunting; with
+  * `SPARK_GRAFT_CPUS=4` and sf0.001 it shows the plan PlanShuffleCount pins,
+  * for eyeballing before a re-pin.
   */
 object Debug {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val name = args.lift(1).getOrElse("seg_naive")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // time construction + action together: streaming contract queries run
     // their (eager) streaming work while the DataFrame is being built
     val t0 = System.nanoTime()

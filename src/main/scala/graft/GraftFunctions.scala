@@ -12,8 +12,9 @@ import graft.functions._
   * Two deployment forms:
   *  - [[GraftFunctions.register]]: imperative, for an existing session
   *    (tests, notebooks);
-  *  - [[GraftExtensions]]: `spark.sql.extensions=graft.GraftExtensions` on a
-  *    cluster — functions exist in every session from startup.
+  *  - [[GraftExtensions]]: `spark.sql.extensions=graft.GraftExtensions`,
+  *    which [[GraftSession]] sets on every session it builds (and a cluster
+  *    sets in its conf) — functions exist in every session from startup.
   */
 object GraftFunctions {
 
@@ -192,7 +193,8 @@ object GraftFunctions {
     }
 }
 
-/** `--conf spark.sql.extensions=graft.GraftExtensions` */
+/** `--conf spark.sql.extensions=graft.GraftExtensions`; every
+  * [[GraftSession]] installs it. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.inject(ext)

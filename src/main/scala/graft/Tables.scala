@@ -91,11 +91,11 @@ object Tables {
     case other => throw new IllegalStateException(s"unknown epoch unit: $other")
   }
 
-  /** Cheap file-identity fingerprint of a table path, folded into every
-    * probe-cache key below: a path REWRITTEN within one JVM's lifetime (e.g.
-    * iterating regen sims into the same /tmp dst, which `tools/regen_sim.py`
-    * encourages) re-probes instead of silently applying a stale schema or
-    * epoch unit. For a single file, (mtime, length). For a DIRECTORY table
+  /** Cheap file-identity fingerprint of a table path, stamped on every
+    * [[Artifacts]] entry built from it: a path REWRITTEN within one JVM's
+    * lifetime (e.g. iterating regen sims into the same /tmp dst, which
+    * `tools/regen_sim.py` encourages) re-probes instead of silently applying
+    * a stale schema or epoch unit. For a single file, (mtime, length). For a DIRECTORY table
     * (part-file and hive-partitioned layouts) the top directory's own
     * (mtime, length) is NOT enough — an in-place rewrite of partition
     * contents leaves both untouched — so the fingerprint also folds the
@@ -132,13 +132,11 @@ object Tables {
     computeFingerprint(path)
   }
 
-  /** File-identity fingerprint of a table under `sfDir`, for folding into
-    * probe-cache keys OUTSIDE this object (SparkEntry's corpus-constant
-    * caches — collapse bounds, rebalance/domain caps, contamination bloom):
-    * a same-JVM rewrite of the source parquet re-probes instead of serving
-    * stale constants, the same rewrite-reprobe invariant the schema/unit
-    * probes here already honor (and EventsTsUnitSpec pins). Batch mains
-    * memoize the underlying tree walk via -Dgraft.fp.ttlMs. */
+  /** File-identity fingerprint of a table under `sfDir`: the source stamp
+    * of every [[Artifacts]] entry, so a same-JVM rewrite of the source
+    * parquet rebuilds instead of serving a stale artifact (the
+    * rewrite-reprobe invariant EventsTsUnitSpec pins). Batch mains memoize
+    * the underlying tree walk via -Dgraft.fp.ttlMs. */
   private[graft] def tableFingerprint(sfDir: String, name: String): Long =
     pathFingerprint(s"$sfDir/$name.parquet")
 
@@ -169,28 +167,6 @@ object Tables {
     h
   }
 
-  // Inferred epoch unit per (sfDir, table, column, file fingerprint): the
-  // probe is one full-column max() ACTION, and normalizeWidths runs at every
-  // frame construction — on a long-epoch date regen an uncached probe would
-  // re-scan lineitem/orders once per query built, not once per run. Mirrors
-  // eventsLongUnits.
-  private val longDateUnits =
-    scala.collection.concurrent.TrieMap.empty[((String, String, String), Long), String]
-
-  /** getOrElseUpdate that also EVICTS entries superseded by a new
-    * fingerprint of the same logical key: a long-lived sim-iterating JVM
-    * rewrites the same path many times, and without eviction the
-    * fingerprint-keyed caches grow one dead entry per rewrite. */
-  private def cachedForFp[P, V](cache: scala.collection.concurrent.TrieMap[(P, Long), V],
-                                prefix: P, fp: Long)(compute: => V): V =
-    cache.get((prefix, fp)) match {
-      case Some(v) => v
-      case None =>
-        cache.keysIterator
-          .filter(k => k._1 == prefix && k._2 != fp).foreach(cache.remove)
-        cache.getOrElseUpdate((prefix, fp), compute)
-    }
-
   private def normalizeWidths(df: DataFrame, name: String, sfDir: String): DataFrame =
     canonicalWidths.get(name).fold(df) { want =>
       want.foldLeft(df) { case (d, (c, t)) =>
@@ -198,12 +174,14 @@ object Tables {
         else if (t == TimestampType && d.schema(c).dataType == LongType) {
           // a TIMESTAMP(NANOS)-or-plain-long regen of a date column: a bare
           // cast would read the long as SECONDS; infer the unit from the
-          // data instead (one max() scan, paid once per (dir, table, column))
-          val unit = cachedForFp(longDateUnits,
-            (sfDir, name, c), pathFingerprint(s"$sfDir/$name.parquet"))(
+          // data instead (one max() scan, paid once per (dir, table, column):
+          // normalizeWidths runs at every frame construction, so an uncached
+          // probe would re-scan lineitem/orders once per query built)
+          val unit = Artifacts.value(d.sparkSession, sfDir, s"long_date_unit:$name.$c", name) {
             inferLongEpochUnit(
               Option(d.agg(org.apache.spark.sql.functions.max(col(c))).head().get(0))
-                .map(_.asInstanceOf[Long])))
+                .map(_.asInstanceOf[Long]))
+          }
           d.withColumn(c, longEpochToTs(c, unit))
         } else if (t == StringType && (d.schema(c).dataType match {
           case _: StructType | _: MapType | _: ArrayType => true
@@ -217,10 +195,6 @@ object Tables {
         } else d.withColumn(c, col(c).cast(t))
       }
     }
-
-  // keyed by (sfDir, file fingerprint) — see pathFingerprint
-  private val eventsSchemas =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), StructType]
 
   /** Parquet-footer schema of `events.parquet` under the nanos-as-long
     * conf, probed once per directory (footer-only, no data scan). `ts` comes
@@ -236,23 +210,19 @@ object Tables {
     * no other query's semantics depend on it.
     */
   private def eventsFileSchema(spark: SparkSession, sfDir: String): StructType = {
-    // conf set BEFORE the cache lookup: the schema cache is keyed by dir, but
+    // conf set BEFORE the registry lookup: the schema entry is keyed by dir, but
     // the conf is per-SparkSession — a second session in the same JVM hitting
     // a cached dir must still be configured, or a TIMESTAMP(NANOS) file would
     // fail at ITS scan time even though the probe succeeded elsewhere
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    cachedForFp(eventsSchemas,
-      sfDir, pathFingerprint(s"$sfDir/events.parquet"))(
-      spark.read.parquet(s"$sfDir/events.parquet").schema)
+    Artifacts.value(spark, sfDir, "events_schema", "events") {
+      spark.read.parquet(s"$sfDir/events.parquet").schema
+    }
   }
 
   /** Stored type of `events.ts` (see [[eventsFileSchema]]). */
   def eventsTsType(spark: SparkSession, sfDir: String): DataType =
     eventsFileSchema(spark, sfDir)("ts").dataType
-
-  // keyed by (sfDir, file fingerprint) — see pathFingerprint
-  private val eventsLongUnits =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
 
   /** Epoch unit of a LONG-typed `events.ts`, inferred once per directory by
     * magnitude ([[inferLongEpochUnit]]) from one `max(ts)` scan of the ts
@@ -262,8 +232,7 @@ object Tables {
     * the STREAMING read path (which cannot aggregate its own frame) share
     * the same inference. Only consulted when [[eventsTsType]] is LongType. */
   def eventsTsLongUnit(spark: SparkSession, sfDir: String): String =
-    cachedForFp(eventsLongUnits,
-        sfDir, pathFingerprint(s"$sfDir/events.parquet")) {
+    Artifacts.value(spark, sfDir, "events_long_unit", "events") {
       eventsFileSchema(spark, sfDir) // ensures nanosAsLong is set for the scan
       inferLongEpochUnit(
         Option(spark.read.parquet(s"$sfDir/events.parquet")

@@ -59,18 +59,7 @@ object Verify {
     System.setProperty("graft.fp.ttlMs", "3600000")
     // optional trailing args: restrict the dump to these query names (dev use)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.RewriteLatestWinsWindow
+    val spark = GraftSession()
     val errors = dumpQueries(spark, sfDir, outDir, only)
     writeOracleJson(outDir)
     val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }

@@ -34,8 +34,9 @@ import org.apache.spark.sql.types.IntegerType
   * forms are only deterministic under a total order, which callers establish
   * via tie-break keys (`LatestWins` always does).
   *
-  * Deployment: `spark.experimental.extraOptimizations ++= Seq(RewriteLatestWinsWindow)`
-  * on a live session, or `spark.sql.extensions=graft.GraftExtensions`.
+  * Deployment: `spark.sql.extensions=graft.GraftExtensions`, which every
+  * [[graft.GraftSession]] sets. To plan without it, add the rule's name to
+  * `spark.sql.optimizer.excludedRules`.
   */
 object RewriteLatestWinsWindow extends Rule[LogicalPlan] {
 

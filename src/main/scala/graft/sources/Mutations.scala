@@ -250,14 +250,10 @@ object Mutations {
     // survivors materialization → overwrite). Concurrent first actions over
     // the lazy checkpoint are safe: local-checkpoint materialization is a
     // cache-put race both jobs settle idempotently, and the batch is tiny
-    // by contract. Validation failures surface after both probes quiesce —
-    // nothing has been written yet.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val bF = Future(bAgg.head())
-    val tbF = Future(tbAgg.head())
-    val (b, tb) = (Await.result(bF, Duration.Inf), Await.result(tbF, Duration.Inf))
+    // by contract. Any failure, a probe job's included, surfaces only after
+    // both probes quiesce — nothing has been written yet, and no orphaned
+    // probe job can race a caller's retry.
+    val Seq(b, tb) = graft.Concurrency.concurrently(() => bAgg.head(), () => tbAgg.head())
     val nApplied = b.getLong(0)
     // empty batch: the sum() columns below are NULL over zero rows — bail
     // before touching them (public API; callers needn't pre-check isEmpty)

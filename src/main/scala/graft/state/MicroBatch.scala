@@ -108,38 +108,21 @@ class MicroBatchPipeline(
     // the state append and the change-log co-write are independent reads of
     // the same cached block (the MV trigger fires on the INSERTED block, not
     // on the committed table), so they run CONCURRENTLY — the merge pass
-    // below is the only consumer that needs either on disk, and it awaits
-    // both. Halves the serial write latency of every micro-batch.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val stateWrite = Future {
-      sized.write.mode("append").partitionBy("computed_date").parquet(paths.states)
-    }
-    // --- the "materialized view": co-write the same inserted block's keys to
-    //     the change log (3-microBatch.test.ts:50-56 — ClickHouse MVs trigger
-    //     on the inserted block, so we project from `partials`, not a rescan)
-    val changeLogWrite = Future {
-      sized.select(col(userCol), col("computed_at"), col("computed_date"))
-        .write.mode("append").partitionBy("computed_date").parquet(paths.changeLog)
-    }
-    // BOTH writes must be quiesced before this method exits — even on
-    // failure: rethrowing while the sibling write is still appending would
-    // let the engine's batch RETRY race the orphaned in-flight append, and
-    // the cached block would leak. First failure propagates after both end,
-    // carrying any sibling failure as a suppressed exception so a
-    // double-fault keeps both causes visible.
+    // below is the only consumer that needs either on disk. Halves the
+    // serial write latency of every micro-batch. `concurrently` quiesces
+    // BOTH writes before it rethrows: rethrowing while the sibling is still
+    // appending would let the engine's batch RETRY race the orphaned
+    // in-flight append, and the cached block would leak.
     try {
-      val failures = Seq(stateWrite, changeLogWrite).flatMap { f =>
-        try { Await.result(f, Duration.Inf); None }
-        catch { case e: Throwable => Some(e) }
-      }
-      failures.headOption.foreach { first =>
-        // `ne` guard: both futures can surface the SAME throwable instance
-        // (a shared upstream failure), and self-suppression throws
-        failures.drop(1).filter(_ ne first).foreach(first.addSuppressed)
-        throw first
-      }
+      graft.Concurrency.concurrently(
+        () => sized.write.mode("append").partitionBy("computed_date")
+          .parquet(paths.states),
+        // --- the "materialized view": co-write the same inserted block's
+        //     keys to the change log (3-microBatch.test.ts:50-56 —
+        //     ClickHouse MVs trigger on the inserted block, so we project
+        //     from `partials`, not a rescan)
+        () => sized.select(col(userCol), col("computed_at"), col("computed_date"))
+          .write.mode("append").partitionBy("computed_date").parquet(paths.changeLog))
 
       // --- segment merge restricted to this batch's users
       //     (3-microBatch.test.ts:135-154 / 4-eventTime.test.ts:149-169)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throwaway interleaved A-B for the editdist verify lane: long-gram count
@@ -9,16 +8,8 @@ import org.apache.spark.sql.functions._
 object AbEditdist {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try SparkEntry.warmIngestArtifacts(spark, sfDir) catch { case t: Throwable =>
-      System.err.println(s"warm failed: $t") }
+    val spark = GraftSession()
+    Warmup.run(spark, sfDir)
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), substring(col("text"), 1, 64).as("key"))
     // both keys frames carry the SAME schema (id, s, len, g, g32); the long

@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Throwaway: q8's FINAL (AQE-executed) plan at bench scale + interleaved
   * timing, to confirm runtime broadcast conversion after the hint drop. */
 object AbQ8 {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     Seq("lineitem", "orders", "customer", "part", "supplier", "nation", "region")
       .foreach(t => Tables.load(spark, sfDir, t).count())
     val names = if (args.nonEmpty) args.toSeq else Seq("q8_market_share")

@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` of contract queries to files — the
   * optimization-round evidence artifacts (`plans/<tag>/<query>_<suffix>.txt`).
-  * Runs under the bench environment (local[32], 32 shuffle partitions, AQE
-  * on, 64m broadcast ceiling, sf0.1) so the captured initial plans are the
-  * ones the driver's bench executes. Eagerly-executed lifecycles (stream
+  * Runs on a [[GraftSession]] at sf0.1 after the bench warm-up, so the
+  * captured initial plans are the ones the bench executes (set
+  * `SPARK_GRAFT_CPUS` to the bench's core count). Eagerly-executed lifecycles (stream
   * scopes, mutations) run their pipeline during construction and return a
   * checkpoint scan — their files record that honestly.
   *
@@ -20,24 +18,10 @@ object PlanDump {
                 else SparkEntry.queries.keys.toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     System.setProperty("graft.fp.ttlMs", "3600000")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.RewriteLatestWinsWindow
+    val spark = GraftSession()
     // a dead warmup changes the captured plans (missing cached artifacts
-    // plan differently), so a warm failure must be VISIBLE in the dump run
-    // even though the dump itself proceeds — the repo's warmups-fail-loudly
-    // rule applied to an evidence tool
-    try SparkEntry.warmIngestArtifacts(spark, sfDir) catch { case t: Throwable =>
-      System.err.println(s"[plandump] WARM FAILED warmIngestArtifacts: ${t.getClass.getName}: ${t.getMessage}") }
-    try SparkEntry.warmStreamingRuntime(spark, sfDir) catch { case t: Throwable =>
-      System.err.println(s"[plandump] WARM FAILED warmStreamingRuntime: ${t.getClass.getName}: ${t.getMessage}") }
+    // plan differently); Warmup prints every failed step by name
+    Warmup.run(spark, sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

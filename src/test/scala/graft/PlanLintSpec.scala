@@ -198,4 +198,16 @@ class PlanLintSpec extends SparkSpec {
       }
     }
   }
+
+  test("every suite order plans with the same rules: GraftExtensions' alone") {
+    // no spec installs rules into the shared session, so the pins above
+    // hold whichever suites ran first
+    import spark.implicits._
+    assert(spark.experimental.extraOptimizations.isEmpty)
+    val latest = graft.operators.LatestWins.latestRows(
+      Seq(("u", 1L, 2L)).toDF("user_id", "ts", "seq"), Seq("user_id"),
+      org.apache.spark.sql.functions.col("ts"))
+    assert(!latest.queryExecution.optimizedPlan.toString.contains("Window"),
+      "RewriteLatestWinsWindow must be installed by the session itself")
+  }
 }

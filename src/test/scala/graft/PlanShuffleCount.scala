@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures the shuffle-exchange count of each non-streaming contract query's
-  * physical plan (AQE off, sf0.001) and REGENERATES the golden ledger
-  * PlanLintSpec pins against (`src/test/resources/shuffle_golden.txt`),
+  * physical plan (sf0.001, a 4-core [[GraftSession]]; AQE stays on, and the
+  * count is read from the INITIAL plan, since nothing is executed) and
+  * REGENERATES the golden ledger PlanLintSpec pins against
+  * (`src/test/resources/shuffle_golden.txt`),
   * printing a diff of every changed entry first — a legitimate plan change is
   * re-pinned by running this tool and committing the ledger diff it shows,
   * never by hand-editing numbers. Run: `Test/runMain graft.PlanShuffleCount`. */
@@ -67,12 +67,7 @@ object PlanShuffleCount {
     "seg_stream_attribution", "sessions_stream_closed")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(4)
     val prev = loadGolden()
     val measured = (for ((name, fn) <- SparkEntry.queries.toSeq
                          if !streamingQueries(name)) yield {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.concurrent.TrieMap
 
@@ -22,20 +21,8 @@ object ProfileJobs {
     val reps = numericArgs.headOption.getOrElse(3)
     require(reps >= 1, s"reps must be >= 1 (got $reps): zero recorded runs is a misread profile, not a profile")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.RewriteLatestWinsWindow
-    Seq("lineitem", "events", "documents", "embeddings", "orders", "customer")
-      .foreach(t => try Tables.load(spark, sfDir, t).count() catch { case _: Throwable => () })
-    try SparkEntry.warmIngestArtifacts(spark, sfDir) catch { case _: Throwable => () }
-    try SparkEntry.warmStreamingRuntime(spark, sfDir) catch { case _: Throwable => () }
+    val spark = GraftSession()
+    Warmup.run(spark, sfDir)
 
     val starts = TrieMap.empty[Int, (Long, String)]
     val lastJobEnd = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Warm profiling for individual contract queries: runs each named query
   * twice (cold, warm) against sf0.1 and prints both timings. Bench noise is
@@ -7,22 +6,10 @@ import org.apache.spark.sql.SparkSession
 object ProfileQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.RewriteLatestWinsWindow
-    Seq("lineitem", "events", "documents", "embeddings", "orders", "customer")
-      .foreach(t => try Tables.load(spark, sfDir, t).count() catch { case _: Throwable => () })
-    // same untimed ingest-artifact warmup as Bench, so profiled numbers
-    // match what the driver's timed pass sees
-    try SparkEntry.warmIngestArtifacts(spark, sfDir) catch { case _: Throwable => () }
-    try SparkEntry.warmStreamingRuntime(spark, sfDir) catch { case _: Throwable => () }
+    val spark = GraftSession()
+    // same untimed warm-up as Bench, so profiled numbers match what its
+    // timed pass sees
+    Warmup.run(spark, sfDir)
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -11,13 +11,6 @@ import graft.plans.RewriteRangeJoin
 class RewriteRangeJoinSpec extends SparkSpec {
   import spark.implicits._
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    if (!spark.experimental.extraOptimizations.contains(RewriteRangeJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteRangeJoin
-  }
-
   private def withWidth[T](w: Long)(body: => T): T = {
     spark.conf.set(RewriteRangeJoin.BandWidthConf, w.toString)
     try body finally spark.conf.unset(RewriteRangeJoin.BandWidthConf)

@@ -9,11 +9,11 @@ import graft.plans.RewriteLatestWinsWindow
 class RewriteRuleSpec extends SparkSpec {
   import spark.implicits._
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    if (!spark.experimental.extraOptimizations.contains(RewriteLatestWinsWindow))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteLatestWinsWindow
+  // every GraftSession installs the rule (GraftExtensions); the rule-off
+  // reference runs with it excluded by name
+  private def withoutRule[T](body: => T): T = {
+    spark.conf.set("spark.sql.optimizer.excludedRules", RewriteLatestWinsWindow.ruleName)
+    try body finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   // toDF over Long/Boolean primitives → non-nullable sort key (rule eligible)
@@ -36,15 +36,10 @@ class RewriteRuleSpec extends SparkSpec {
   test("results identical with and without the rule") {
     val withRule = LatestWins.latestRows(log, Seq("user_id"), col("assigned_at"),
         tieBreak = Seq(col("seq"))).collect().toSet
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == RewriteLatestWinsWindow)
-    try {
+    withoutRule {
       val without = LatestWins.latestRows(log, Seq("user_id"), col("assigned_at"),
           tieBreak = Seq(col("seq"))).collect().toSet
       assert(withRule == without)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteLatestWinsWindow
     }
   }
 
@@ -146,14 +141,9 @@ class RewriteRuleSpec extends SparkSpec {
     val ascRewritten = ascForm()
     val ascWith = ascRewritten.collect().toSet
     assert(!ascRewritten.queryExecution.optimizedPlan.toString.contains("Window"))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == RewriteLatestWinsWindow)
-    try {
+    withoutRule {
       assert(rankForm(rank()).collect().toSet == withRule)
       assert(ascForm().collect().toSet == ascWith)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteLatestWinsWindow
     }
   }
 }

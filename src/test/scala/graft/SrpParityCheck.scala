@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Recall probe for the SRP path: compares `ann_topk_srp` against the exact
   * `ann_topk_brute` top-k at each test scale. On this corpus the two DIVERGE
   * (weakly-similar embeddings, cosines ≈ 0.25-0.36, so 4-bit/8-table buckets
@@ -15,11 +13,7 @@ object SrpParityCheck {
     val dirs = if (args.nonEmpty) args.toSeq
                else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
                         "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     for (dir <- dirs) {
       val brute = SparkEntry.queries("ann_topk_brute")(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(2))).toSet

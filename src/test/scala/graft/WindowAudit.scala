@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -15,16 +14,8 @@ import org.apache.spark.sql.execution.window.WindowExec
 object WindowAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.RewriteLatestWinsWindow
-    try SparkEntry.warmIngestArtifacts(spark, sfDir) catch { case t: Throwable =>
-      System.err.println(s"[windowaudit] WARM FAILED: $t") }
+    val spark = GraftSession()
+    Warmup.run(spark, sfDir)
     var total = 0
     SparkEntry.queries.foreach { case (name, fn) =>
       try {
