@@ -65,7 +65,7 @@ object Artifacts {
     value(s, dir, label, sources: _*) {
       val p = java.nio.file.Files.createTempDirectory(s"graft_art_$label").toString
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try SparkEntry.deleteTree(p) catch { case _: Throwable => () }))
+        try graft.streaming.StreamScope.deleteTree(p) catch { case _: Throwable => () }))
       write(p)
       p
     }

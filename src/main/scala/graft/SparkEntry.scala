@@ -1,18 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
-import graft.functions.{NativeExprs, Sketches, TextAnalysis}
-import graft.operators._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+import graft.queries._
+
+/** Driver contract: every query, in run order, with its DuckDB oracle.
   *
-  * Every entry pairs a Spark DataFrame implementation with a DuckDB oracle
-  * (`oracleSql`) over the same parquet tables; non-SQL-expressible operators
-  * (sketch merges, LSH candidate generation, mapPartitions decode) register a
-  * rows-only query instead and are property-tested in ScalaTest.
+  * Each query is one [[QueryDef]] in its family object under
+  * `graft.queries`, which holds the query's body, its oracle SQL over the
+  * same parquet tables and their constants. This object only orders them:
+  * `queries` and `oracleSql` are both derived from the one registry below.
   *
   * Determinism rules applied throughout (the driver hash-compares values):
   *  - every query ends in a total ORDER BY;
@@ -22,8435 +21,232 @@ import graft.operators._
   */
 object SparkEntry {
 
-  // --- shared query parameters (sf-independent) -----------------------------
-  private val ClickSeg   = SegmentDef("click", 12)  // flagship: ≥12 clicks
-  private val DailySeg   = 3                        // daily assignment: ≥3 clicks/day
-  private val SplitDate  = "2024-01-15"             // micro-batch split point
-  private val PriceFloor = 450000.0                 // semi/anti join threshold
-  private val AnnK       = 5
-  private val AnnQueries = 8                        // vec_id < 8 are the ANN probes
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Exact decimal sum of a double expression, surfaced as double again:
-    * per-row double math is IEEE-identical across engines, the decimal sum is
-    * exact, so the result is bit-deterministic regardless of partitioning. */
-  private def dsum(c: Column): Column = sum(c.cast("decimal(27,6)")).cast("double")
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("seg_naive")(spark, "/root/testdata/sf0.001")
 
-  // ======================================================================
-  // Reference-parity queries (events table ≈ user_events_*, SURVEY §2)
-  // ======================================================================
-
-  private def segNaive(s: SparkSession, dir: String): DataFrame =
-    Segments.naive(t(s, dir, "events"), ClickSeg).orderBy("user_id")
-
-  private def segIdempotent(s: SparkSession, dir: String): DataFrame =
-    Segments.idempotentExact(t(s, dir, "events"), ClickSeg).orderBy("user_id")
-
-  /** Daily assignment log derived deterministically from events — the shared
-    * input of the W4 semantic pair (SURVEY §2.4). */
-  private def dailyAssignments(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .filter(col("event_type") === ClickSeg.eventType)
-      .groupBy(col("user_id"), to_date(col("ts")).as("assigned_at"))
-      .agg((count(lit(1)) >= DailySeg).as("value"))
-
-  private def segW4Any(s: SparkSession, dir: String): DataFrame =
-    Segments.membersAnyHistorical(dailyAssignments(s, dir)).orderBy("user_id")
-
-  private def segW4Latest(s: SparkSession, dir: String): DataFrame =
-    Segments.membersLatest(dailyAssignments(s, dir)).orderBy("user_id")
-
-  private def segLatestEvent(s: SparkSession, dir: String): DataFrame =
-    LatestWins.latestRows(t(s, dir, "events"), Seq("user_id"), col("ts"),
-                          tieBreak = Seq(col("event_id")))
-      .select(col("user_id"), col("event_type").as("latest_type"),
-              col("value").as("latest_value"))
-      .orderBy("user_id")
-
-  /** argMin complement of [[segLatestEvent]]: each user's EARLIEST event via
-    * `min_by` with the same pinned tie-break discipline. */
-  private def segFirstEvent(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg(min_by(col("event_type"), struct(col("ts"), col("event_id"))).as("first_type"),
-           min_by(col("value"), struct(col("ts"), col("event_id"))).as("first_value"))
-      .orderBy("user_id")
-
-  private def segEventTime(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .filter(col("event_type") === ClickSeg.eventType)
-      .groupBy(col("user_id"))
-      .agg(count_distinct(col("event_id")).as("n_unique"),
-           unix_timestamp(max(col("ts"))).as("last_event_time"))
-      .withColumn("in_segment", col("n_unique") >= ClickSeg.minCount)
-      .orderBy("user_id")
-
-  /** Micro-batch split-invariance, exact form: two disjoint processing-time
-    * batches produce partial states; their merge must equal the global
-    * aggregate (the invariant behind /root/reference/src/3-microBatch.test.ts).
-    * The DuckDB oracle IS the global aggregate — the equality is the check. */
-  private def segMicroBatchEquiv(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").filter(col("event_type") === ClickSeg.eventType)
-    val cut = lit(SplitDate).cast("timestamp")
-    def partial(batch: DataFrame) =
-      batch.groupBy(col("user_id")).agg(collect_set(col("event_id")).as("ids"))
-    partial(ev.filter(col("ts") < cut))
-      .unionByName(partial(ev.filter(col("ts") >= cut)))
-      .groupBy(col("user_id"))
-      .agg(size(array_distinct(flatten(collect_list(col("ids"))))).cast("long").as("n_unique"))
-      .withColumn("in_segment", col("n_unique") >= ClickSeg.minCount)
-      .orderBy("user_id")
-  }
-
-  /** Same pipeline with mergeable HLL sketches (uniqState → uniqMerge) — the
-    * form that holds at 100 TB (bounded state).
-    *
-    * Oracle-able by construction: the emitted columns are the EXACT distinct
-    * counts (carried through the same two-batch split/merge), plus `est_ok` —
-    * the driver-visible assertion that the merged sketch estimate lands
-    * within its error envelope of the exact count. The envelope
-    * (max(1, 5% of n)) is > 3σ for lgK=12 (rsd ≈ 1.6%), and the per-user
-    * cardinalities here sit far below 2^lgK where the sketch is exact
-    * anyway, so the column is deterministically `true` — which is exactly
-    * what DuckDB reproduces. A broken sketch (merge, serialization, or
-    * estimator) flips it and fails the hash gate. */
-  private def segMicroBatchHll(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").filter(col("event_type") === ClickSeg.eventType)
-    val cut = lit(SplitDate).cast("timestamp")
-    def partial(batch: DataFrame) =
-      batch.groupBy(col("user_id"))
-        .agg(Sketches.uniqState(col("event_id")).as("state"),
-             collect_set(col("event_id")).as("ids"))
-    partial(ev.filter(col("ts") < cut))
-      .unionByName(partial(ev.filter(col("ts") >= cut)))
-      .groupBy(col("user_id"))
-      .agg(Sketches.uniqMerge(col("state")).as("n_unique_approx"),
-           size(array_distinct(flatten(collect_list(col("ids"))))).cast("long").as("n_unique"))
-      .withColumn("in_segment", col("n_unique") >= ClickSeg.minCount)
-      .withColumn("est_ok",
-        abs(col("n_unique_approx") - col("n_unique")).cast("double")
-          <= greatest(lit(1.0), lit(0.05) * col("n_unique")))
-      .select(col("user_id"), col("n_unique"), col("in_segment"), col("est_ok"))
-      .orderBy("user_id")
-  }
-
-  /** ClickHouse `uniq` (A2, the approximate form) through the oracle gate:
-    * one scan computes BOTH the exact distinct count (which DuckDB
-    * reproduces) and Spark's HLL++ `approx_count_distinct`; `est_ok`
-    * asserts the approximation within max(1, 0.15·n) — ≈9× the rsd=0.016
-    * envelope; per-user cardinalities here sit in HLL++'s exact sparse
-    * regime anyway, so the column is deterministically true and a broken
-    * estimator fails the hash gate. Membership derives from the exact
-    * count. */
-  private def segIdempotentApprox(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .filter(col("event_type") === ClickSeg.eventType)
-      .groupBy(col("user_id"))
-      .agg(count_distinct(col("event_id")).as("n_unique"),
-           Sketches.uniq(col("event_id")).as("n_approx"))
-      .withColumn("in_segment", col("n_unique") >= ClickSeg.minCount)
-      .withColumn("est_ok",
-        abs(col("n_approx") - col("n_unique")).cast("double")
-          <= greatest(lit(1.0), lit(0.15) * col("n_unique")))
-      .select(col("user_id"), col("n_unique"), col("in_segment"), col("est_ok"))
-      .orderBy("user_id")
-
-  // ======================================================================
-  // Relational coverage beyond the reference (joins, windows, TPC-H-ish)
-  // ======================================================================
-
-  private def q1Pricing(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .filter(col("l_shipdate") < lit("2001-01-01").cast("timestamp"))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(dsum(col("l_quantity")).as("sum_qty"),
-           dsum(col("l_extendedprice")).as("sum_base_price"),
-           dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("sum_disc_price"),
-           count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
-
-  // customer/supplier SCALE WITH SF (unlike nation/region/1-row aggregates),
-  // so they carry no forced broadcast() hint anywhere in the TPC-H family:
-  // size-based planning broadcasts them at bench scale (same plan) and
-  // correctly shuffles them at 100 TB where they cannot fit a broadcast.
-  private def q3Revenue(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"))
-      .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
-           count_distinct(col("o_orderkey")).as("n_orders"))
-      .orderBy("c_mktsegment")
-
-  private def q5Revenue(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(t(s, dir, "supplier"), // SF-scaling: no forced hint (see q3 note)
-            col("l_suppkey") === col("s_suppkey") &&
-            col("c_nationkey") === col("s_nationkey"))
-      // nation/region are BOUNDED dims (25/5 rows at any SF): hints stay
-      .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("r_name"), col("n_name"))
-      .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"))
-      .orderBy("r_name", "n_name")
-
-  /** Q2-style: for each part, the supplier(s) offering it at the minimum
-    * lineitem price — correlated-aggregate join (the classic decorrelated
-    * min-subquery shape). */
-  private def q2MinCostSupplier(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-      .select(col("l_partkey"), col("l_suppkey"), col("l_extendedprice"))
-    val minPrice = li.groupBy(col("l_partkey"))
-      .agg(min(col("l_extendedprice")).as("min_price"))
-    li.join(minPrice, Seq("l_partkey"))
-      .filter(col("l_extendedprice") === col("min_price"))
-      .groupBy(col("l_partkey"))
-      .agg(min(col("l_suppkey")).as("cheapest_suppkey"), // deterministic among ties
-           min(col("min_price")).as("min_price"))
-      .orderBy("l_partkey")
-  }
-
-  /** Segment-overlap estimation via mergeable HLL sketches: |A∩B| by
-    * inclusion-exclusion over per-segment user sketches — the sketch-algebra
-    * read pattern segment products run at 100 TB.
-    *
-    * Oracle-able the same way as [[segMicroBatchHll]]: the emitted counts
-    * are EXACT (DuckDB reproduces them), and `est_ok` asserts every sketch
-    * estimate — per-segment, union, and the derived intersection — within
-    * max(2, 5% of the union) of its exact value. Inclusion-exclusion error
-    * scales with the UNION cardinality, hence that bound; at these
-    * cardinalities (≪ 2^lgK) the sketches are exact, so the column is
-    * deterministically `true` and a broken sketch algebra fails the gate. */
-  private def segOverlapHll(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val both = ev.filter(col("event_type").isin("click", "purchase"))
-    val perType = both
-      .groupBy(col("event_type"))
-      .agg(Sketches.uniqState(col("user_id")).as("sk"))
-    val est = perType.agg(
-        Sketches.uniqMerge(col("sk")).as("e_union"),
-        sum(when(col("event_type") === "click",
-          Sketches.uniqEstimate(col("sk"))).otherwise(0L)).as("e_click"),
-        sum(when(col("event_type") === "purchase",
-          Sketches.uniqEstimate(col("sk"))).otherwise(0L)).as("e_purchase"))
-    val exact = both.agg(
-        count_distinct(when(col("event_type") === "click", col("user_id"))).as("n_click"),
-        count_distinct(when(col("event_type") === "purchase", col("user_id"))).as("n_purchase"),
-        count_distinct(col("user_id")).as("n_union"))
-      .withColumn("n_intersect", col("n_click") + col("n_purchase") - col("n_union"))
-    // 1 row × 1 row: planes as a broadcast nested loop over scalars
-    exact.crossJoin(est)
-      .withColumn("tol", greatest(lit(2.0), lit(0.05) * col("n_union")))
-      .withColumn("est_ok",
-        abs(col("e_click") - col("n_click")).cast("double") <= col("tol") &&
-        abs(col("e_purchase") - col("n_purchase")).cast("double") <= col("tol") &&
-        abs(col("e_union") - col("n_union")).cast("double") <= col("tol") &&
-        abs((col("e_click") + col("e_purchase") - col("e_union")) - col("n_intersect"))
-          .cast("double") <= lit(2.0) * col("tol"))
-      .select(col("n_click"), col("n_purchase"), col("n_union"),
-              col("n_intersect"), col("est_ok"))
-  }
-
-  private def bigSpenders(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders").filter(col("o_totalprice") > PriceFloor)
-      .select(col("o_custkey").as("c_custkey"))
-
-  private def semiCustomers(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .join(bigSpenders(s, dir), Seq("c_custkey"), "left_semi")
-      .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-      .orderBy("c_custkey")
-
-  private def antiCustomers(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .join(bigSpenders(s, dir), Seq("c_custkey"), "left_anti")
-      .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-      .orderBy("c_custkey")
-
-  private def windowTop2Orders(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    t(s, dir, "orders")
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 2)
-      .select(col("o_custkey"), col("rnk"), col("o_orderkey"), col("o_totalprice"))
-      .orderBy("o_custkey", "rnk")
-  }
-
-  private def aggEventStats(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-           count_distinct(col("user_id")).as("n_users"),
-           dsum(col("value")).as("sum_value"),
-           min(col("value")).as("min_value"),
-           max(col("value")).as("max_value"))
-      .withColumn("avg_value", col("sum_value") / col("n"))
-      .orderBy("event_type")
-
-  private def eventsDaily(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
-      .agg(count(lit(1)).as("n"),
-           count_distinct(col("user_id")).as("n_users"),
-           dsum(col("value")).as("sum_value"))
-      .orderBy("day")
-
-  /** ClickHouse `ORDER BY day WITH FILL` analog: daily counts with every
-    * missing calendar day emitted as a zero row. The day spine is generated
-    * from the aggregated bounds (a 1-row subplan broadcast into the join) —
-    * no driver round-trip, no assumption the data is dense. */
-  private def eventsDailyFilled(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "events")
-      .groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-    val spine = daily.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"),
-                               expr("interval 1 day"))).as("day"))
-    spine.join(daily, Seq("day"), "left")
-      .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-              coalesce(col("n"), lit(0L)).as("n"))
-      .orderBy("day")
-  }
-
-  /** ClickHouse `WITH FILL ... INTERPOLATE`-style gap fill with
-    * last-observation-carried-forward: each user's daily closing value
-    * (latest event of the day, (ts, event_id)-tie-broken) forward-filled
-    * across a dense date spine from the user's first active day. The window
-    * is per-user (150 partitions here, millions at scale — never global),
-    * and the spine seed is the 1-row global bounds aggregate, the same
-    * shape events_daily_filled uses. The value rides through untouched —
-    * no arithmetic, so both engines carry the identical double. */
-  private def eventsLocf(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-      .select(col("user_id"), to_date(col("ts")).as("day"),
-              col("ts"), col("event_id"), col("value"))
-    val daily = ev.groupBy(col("user_id"), col("day"))
-      .agg(max_by(col("value"), struct(col("ts"), col("event_id"))).as("v"))
-    // 1-row global upper bound; each user's spine explodes from their own
-    // first day — no user × date cross join ever materializes
-    val bounds = ev.agg(max(col("day")).as("hi"))
-    val firstDay = daily.groupBy(col("user_id")).agg(min(col("day")).as("fday"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    firstDay.crossJoin(broadcast(bounds))
-      .select(col("user_id"),
-              explode(sequence(col("fday"), col("hi"),
-                               expr("interval 1 day"))).as("day"))
-      .join(daily, Seq("user_id", "day"), "left")
-      .withColumn("value_filled", last(col("v"), ignoreNulls = true).over(w))
-      .select(col("user_id"), date_format(col("day"), "yyyy-MM-dd").as("day"),
-              col("v").isNotNull.as("observed"), col("value_filled"))
-      .orderBy("user_id", "day")
-  }
-
-  /** Linear interpolation between daily closes — `WITH FILL INTERPOLATE`'s
-    * linear lane next to [[eventsLocf]]'s step fill: each unobserved day
-    * between a user's first and last observation gets
-    * `vp + (vn − vp) · (d − dp)/(dn − dp)` from its bracketing observed
-    * days. Two per-user windows (backward and forward ignore-null carries)
-    * over the dense per-user spine; the arithmetic is one pinned IEEE
-    * sequence over exact day deltas, mirrored verbatim in the oracle. */
-  private def eventsInterp(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-      .select(col("user_id"), to_date(col("ts")).as("day"),
-              col("ts"), col("event_id"), col("value"))
-    val daily = ev.groupBy(col("user_id"), col("day"))
-      .agg(max_by(col("value"), struct(col("ts"), col("event_id"))).as("v"))
-    val span = daily.groupBy(col("user_id"))
-      .agg(min(col("day")).as("fday"), max(col("day")).as("lday"))
-    val wPast = Window.partitionBy(col("user_id")).orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wNext = Window.partitionBy(col("user_id")).orderBy(col("day"))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    span
-      .select(col("user_id"),
-              explode(sequence(col("fday"), col("lday"),
-                               expr("interval 1 day"))).as("day"))
-      .join(daily, Seq("user_id", "day"), "left")
-      .withColumn("vp", last(col("v"), ignoreNulls = true).over(wPast))
-      .withColumn("dp", last(when(col("v").isNotNull, col("day")), ignoreNulls = true).over(wPast))
-      .withColumn("vn", first(col("v"), ignoreNulls = true).over(wNext))
-      .withColumn("dn", first(when(col("v").isNotNull, col("day")), ignoreNulls = true).over(wNext))
-      .withColumn("value_interp",
-        when(col("v").isNotNull, col("v"))
-          .otherwise(col("vp") + (col("vn") - col("vp")) *
-            (datediff(col("day"), col("dp")).cast("double") /
-             datediff(col("dn"), col("dp")).cast("double"))))
-      .select(col("user_id"), date_format(col("day"), "yyyy-MM-dd").as("day"),
-              col("v").isNotNull.as("observed"), col("value_interp"))
-      .orderBy("user_id", "day")
-  }
-
-  /** Running distinct users per day — the SCALABLE rewrite of a running
-    * `uniqExact` window: distinct-per-day is a normal aggregate, and the
-    * cumulative count folds each user into their FIRST-seen day (a user
-    * contributes exactly once), so the running sum runs over the
-    * #days-sized aggregated frame, never over raw events or per-day user
-    * sets. The only single-partition stage is that #days-row cumsum. */
-  private def eventsRunningUsers(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-      .select(col("user_id"), to_date(col("ts")).as("day"))
-    val active = ev.groupBy(col("day"))
-      .agg(count_distinct(col("user_id")).as("n_active"))
-    val firstSeen = ev.groupBy(col("user_id")).agg(min(col("day")).as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("new_users"))
-    val w = Window.orderBy(col("day"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    active.join(firstSeen, Seq("day"), "left")
-      .withColumn("new_users", coalesce(col("new_users"), lit(0L)))
-      .withColumn("cum_users", sum(col("new_users")).over(w))
-      .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-              col("n_active"), col("new_users"), col("cum_users"))
-      .orderBy("day")
-  }
-
-  /** ClickHouse `groupArrayMovingAvg(7)` analogue: trailing 7-event mean
-    * value per user over the (ts, event_id)-ordered stream. The frame sum
-    * runs in exact decimal (value has ≤2 decimal digits — string-routed
-    * cast) and surfaces through the digit string, so frame-iteration order
-    * can never change a bit; the divide by the frame count is the single
-    * IEEE op. Per-user window — partitioned, never global. */
-  private def eventsMovingAvg(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-      .rowsBetween(-6, Window.currentRow)
-    val dv = col("value").cast("string").cast("decimal(12,2)")
-    t(s, dir, "events")
-      .select(col("event_id"), col("user_id"), col("value"),
-              count(lit(1)).over(w).as("n_window"),
-              (sum(dv).over(w).cast("string").cast("double") /
-               count(lit(1)).over(w).cast("double")).as("mavg"))
-      .orderBy("event_id")
-  }
-
-  /** ClickHouse `groupArrayMovingSum(7)` analogue: trailing 7-event value
-    * sum per user on the `events_moving_avg` frame — same (ts, event_id)
-    * order, same exact-decimal frame sum surfaced through the digit string
-    * (no divide at all, so the whole column is float-free). */
-  private def eventsMovingSum(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-      .rowsBetween(-6, Window.currentRow)
-    val dv = col("value").cast("string").cast("decimal(12,2)")
-    t(s, dir, "events")
-      .select(col("event_id"), col("user_id"),
-              count(lit(1)).over(w).as("n_window"),
-              sum(dv).over(w).cast("string").cast("double").as("msum"))
-      .orderBy("event_id")
-  }
-
-  /** ClickHouse `exponentialMovingAverage` / `exponentialTimeDecayedSum`
-    * ([[EventAnalytics.exponentialMovingStats]]): per-user decay
-    * recurrences in (ts, event_id) order — α=1/4 index EMA and a
-    * day-granular half-life decayed sum. Exact-power-of-two decay factors
-    * (no exp/pow) + pinned fold order make every step one correctly-
-    * rounded IEEE op; the oracle replays the identical recurrence through
-    * a recursive CTE (the packed_chunks discipline) bit-for-bit. */
-  private def eventsEma(s: SparkSession, dir: String): DataFrame =
-    EventAnalytics.exponentialMovingStats(t(s, dir, "events"))
-      .select(col("event_id"), col("user_id"),
-              col("ema"), col("tds"), col("tdavg"))
-      .orderBy("event_id")
-
-  /** The remaining ClickHouse decay pair — `exponentialTimeDecayedMax` /
-    * `exponentialTimeDecayedCount` — off the same per-key fold as
-    * [[eventsEma]] (one recurrence pass computes the whole family; this
-    * query surfaces the max/count lanes). Same exact power-of-two decay,
-    * same recursive-CTE oracle shape. */
-  private def eventsDecayMax(s: SparkSession, dir: String): DataFrame =
-    EventAnalytics.exponentialMovingStats(t(s, dir, "events"))
-      .select(col("event_id"), col("user_id"),
-              col("tdmax"), col("tdcount"))
-      .orderBy("event_id")
-
-  /** Holt linear (double-exponential) smoothing off the same shared per-key
-    * decay fold as [[eventsEma]]/[[eventsDecayMax]]: per-event level/trend
-    * with exact dyadic gains (α = 1/4, β = 1/8) and the one-step-ahead
-    * forecast `level + trend` — the recursive-CTE oracle replays the
-    * identical pinned IEEE recurrence. */
-  private def eventsHolt(s: SparkSession, dir: String): DataFrame =
-    EventAnalytics.exponentialMovingStats(t(s, dir, "events"))
-      .select(col("event_id"), col("user_id"),
-              col("holt_level"), col("holt_trend"),
-              (col("holt_level") + col("holt_trend")).as("holt_forecast"))
-      .orderBy("event_id")
-
-  /** LTTB downsampling ([[EventAnalytics.lttbDownsample]]): each user's
-    * (ts, value) series reduced to 10 visually-representative points —
-    * integer-exact triangle areas (cross-product form, centroid division
-    * multiplied away), so the selected point SET replays exactly in the
-    * oracle's unrolled bucket walk. */
-  private def eventsLttb(s: SparkSession, dir: String): DataFrame =
-    EventAnalytics.lttbDownsample(t(s, dir, "events"), k = 10)
-      .orderBy("user_id", "pos")
-
-  private def lttbOracleSql: String = {
-    val k = 10; val km2 = k - 2
-    val steps = (1 to km2).map { b =>
-      val nextEnd = if (b == km2) "p.n" else s"((${b + 1} * (p.n - 2)) // $km2 + 1)"
-      s"""c$b AS (SELECT p.user_id, CAST(count(*) AS HUGEINT) AS m,
-                        CAST(sum(p.x) AS HUGEINT) AS sx,
-                        CAST(sum(p.y) AS HUGEINT) AS sy
-                 FROM p2 p JOIN big USING (user_id)
-                 WHERE p.i >= (($b * (p.n - 2)) // $km2 + 1) AND p.i < $nextEnd
-                 GROUP BY p.user_id),
-         s$b AS (SELECT p.user_id,
-                        (min(struct_pack(na := -abs(
-                             (c.m * pv.x - c.sx) * (c.m * p.y - c.sy)
-                           - (c.m * p.x - c.sx) * (c.m * pv.y - c.sy)),
-                           i := p.i))).i AS sel_i
-                 FROM p2 p
-                 JOIN s${b - 1} sp ON sp.user_id = p.user_id
-                 JOIN p2 pv ON pv.user_id = p.user_id AND pv.i = sp.sel_i
-                 JOIN c$b c ON c.user_id = p.user_id
-                 WHERE p.i >= ((${b - 1} * (p.n - 2)) // $km2 + 1)
-                   AND p.i < (($b * (p.n - 2)) // $km2 + 1)
-                 GROUP BY p.user_id)"""
-    }.mkString(",\n         ")
-    val unions = (1 to km2).map(b => s"SELECT user_id, sel_i FROM s$b")
-      .mkString(" UNION ALL ")
-    s"""WITH pts AS (
-           SELECT user_id, event_id, epoch_us(ts) AS xa,
-                  CAST(CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2)) * 100 AS BIGINT) AS y,
-                  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS i,
-                  count(*) OVER (PARTITION BY user_id) AS n
-           FROM events),
-         p2 AS (SELECT user_id, event_id, xa, y, i, n,
-                       xa - min(xa) OVER (PARTITION BY user_id) AS x
-                FROM pts),
-         big AS (SELECT DISTINCT user_id FROM p2 WHERE n > $k),
-         s0 AS (SELECT user_id, 0 AS sel_i FROM big),
-         $steps,
-         allsel AS (
-           SELECT user_id, sel_i FROM s0
-           UNION ALL $unions
-           UNION ALL SELECT p.user_id, p.n - 1 AS sel_i
-                     FROM (SELECT DISTINCT user_id, n FROM p2 WHERE n > $k) p
-           UNION ALL SELECT user_id, i AS sel_i FROM p2 WHERE n <= $k)
-         SELECT p.user_id, CAST(row_number() OVER (PARTITION BY p.user_id
-                                                   ORDER BY p.i) AS BIGINT) AS pos,
-                p.xa AS sel_us, p.y AS sel_v100
-         FROM p2 p JOIN allsel a ON a.user_id = p.user_id AND a.sel_i = p.i
-         ORDER BY p.user_id, pos"""
-  }
-
-  /** ClickHouse `deltaSum` per user: the sum of POSITIVE value increments
-    * over the (ts, event_id)-ordered stream (counter-reset-tolerant rate
-    * accounting). Deltas are exact decimal differences (value has ≤2
-    * decimal digits), conditionally summed in decimal and surfaced through
-    * the digit string — no float subtraction anywhere. */
-  private def eventsDeltaSum(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val dv = col("value").cast("string").cast("decimal(12,2)")
-    val delta = dv - lag(dv, 1).over(w)
-    t(s, dir, "events")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      .withColumn("__d", delta)
-      .groupBy(col("user_id"))
-      .agg(coalesce(sum(when(col("__d") > 0, col("__d")))
-                      .cast("string").cast("double"), lit(0.0)).as("delta_sum"),
-           count(when(col("__d") > 0, lit(1))).as("n_increases"),
-           count(lit(1)).as("n_events"))
-      .orderBy("user_id")
-  }
-
-  /** ClickHouse `boundingRatio(ts, value)` per user: (last − first value)
-    * / (last − first second) over the event stream — the end-to-end rate.
-    * First/last picked by `min_by`/`max_by` over the unique (ts, event_id)
-    * order; the subtraction and single division are one pinned IEEE
-    * sequence over a data double and an exact integer span. Flat-span
-    * users (one event) emit NULL rate on both sides. */
-  private def eventsBoundingRatio(s: SparkSession, dir: String): DataFrame = {
-    val ord = struct(col("ts"), col("event_id"))
-    t(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg(min_by(col("value"), ord).as("first_value"),
-           max_by(col("value"), ord).as("last_value"),
-           (unix_timestamp(max(col("ts"))) - unix_timestamp(min(col("ts"))))
-             .as("span_s"),
-           count(lit(1)).as("n_events"))
-      .withColumn("rate_per_s",
-        (col("last_value") - col("first_value")) /
-          nullif(col("span_s"), lit(0L)).cast("double"))
-      .orderBy("user_id")
-  }
-
-  private def eventsPropsExtract(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-      .groupBy(col("event_type"))
-      .agg(sum(col("k")).as("sum_k"), count(col("k")).as("n_k"))
-      .orderBy("event_type")
-
-  /** TPC-H Q14 shape — promoted-part revenue share for one ship month:
-    * conditional decimal aggregation + one final pinned ratio. */
-  private def q14Promo(s: SparkSession, dir: String): DataFrame = {
-    val disc = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-    t(s, dir, "lineitem")
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-              col("l_shipdate") < lit("1996-02-01").cast("timestamp"))
-      .join(t(s, dir, "part").select(col("p_partkey"), col("p_type")),
-            col("l_partkey") === col("p_partkey"))
-      .agg(sum(when(col("p_type").startsWith("PROMO"), disc.cast("decimal(27,6)"))
-                 .otherwise(lit(0).cast("decimal(27,6)")))
-             .cast("double").as("promo_revenue"),
-           dsum(disc).as("total_revenue"),
-           count(lit(1)).as("n_items"))
-      .withColumn("promo_pct",
-        lit(100.0) * col("promo_revenue") / col("total_revenue"))
-  }
-
-  /** TPC-H Q17 shape — revenue lost to small-quantity orders of one brand:
-    * the correlated `l_quantity < 0.2 · avg(quantity) per part` subquery
-    * decorrelated into a per-part aggregate joined back (broadcast — one
-    * row per brand part). The threshold is computed through the exact
-    * decimal sum + digit string, so its double bits — and therefore every
-    * boundary comparison — are identical in any engine. */
-  private def q17SmallQty(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val brandParts = t(s, dir, "part")
-      .filter(col("p_brand") === "Brand#23").select(col("p_partkey"))
-    val thresh = li
-      .join(broadcast(brandParts), col("l_partkey") === col("p_partkey"))
-      .groupBy(col("l_partkey"))
-      .agg(((sum(col("l_quantity").cast("decimal(27,6)"))
-               .cast("string").cast("double")
-             / count(lit(1)).cast("double")) * lit(0.2)).as("qty_thresh"))
-    li.select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
-      .join(broadcast(thresh), Seq("l_partkey"))
-      .filter(col("l_quantity") < col("qty_thresh"))
-      .agg((dsum(col("l_extendedprice")) / lit(7.0)).as("avg_yearly"),
-           count(lit(1)).as("n_rows"))
-  }
-
-  /** TPC-H Q11 shape — group-HAVING against a scalar-threshold subquery
-    * (the "important stock" pattern; adapted to the generated tables:
-    * supply value = extendedprice·quantity of lines from the nation-subset
-    * suppliers, partsupp not being generated). The classic hazard is the
-    * fractional threshold (total·0.0001): computed in floats it can
-    * mis-classify boundary parts per engine, so the whole comparison stays
-    * in exact scaled INTEGERS — cents·quantity sums as decimals, and
-    * `10000·part_value > total` replaces `part_value > total·0.0001`
-    * (same inequality, zero rounding anywhere). Dims broadcast; one
-    * fact-table aggregate, then a 1-row total broadcast back. */
-  private def q11ImportantParts(s: SparkSession, dir: String): DataFrame = {
-    val cents = (col("l_extendedprice").cast("string").cast("decimal(12,2)")
-                   * lit(100)).cast("decimal(14,0)")
-    val qty = col("l_quantity").cast("string").cast("decimal(4,0)")
-    val supp = t(s, dir, "supplier")
-      .filter(col("s_nationkey").isin(1, 3, 5)).select(col("s_suppkey"))
-    val parts = t(s, dir, "lineitem")
-      .select(col("l_partkey"), col("l_suppkey"), (cents * qty).as("v"))
-      // supp is a supplier FRACTION (3 of 25 nations) — still SF-scaling:
-      // no forced hint (see q3 note); the 1-row total below stays hinted
-      .join(supp, col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("l_partkey"))
-      .agg(sum(col("v")).as("val_cq"))
-    val total = parts.agg(sum(col("val_cq")).as("tot"))
-    parts.crossJoin(broadcast(total))
-      .filter(col("val_cq") * lit(10000) > col("tot"))
-      .select(col("l_partkey"), col("val_cq").cast("long").as("value_cents"))
-      .orderBy(col("value_cents").desc, col("l_partkey"))
-  }
-
-  /** TPC-H Q12 shape — two-way conditional aggregation over the
-    * lineitem ⋈ orders join (the q14 CASE-sum pattern, keyed by a line
-    * attribute while counting an ORDER attribute; shipmode not being
-    * generated, returnflag classes stand in): per flag in a ship-year
-    * window, how many lines belong to high- vs low-priority orders. Both
-    * sides are fact-sized — the one honest shuffle join — with the date
-    * filter pushed to the lineitem scan. */
-  private def q12ShipPriority(s: SparkSession, dir: String): DataFrame = {
-    val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    t(s, dir, "lineitem")
-      .filter(col("l_shipdate") >= lit("1995-01-01").cast("timestamp") &&
-              col("l_shipdate") < lit("1996-01-01").cast("timestamp") &&
-              col("l_returnflag").isin("A", "R"))
-      .select(col("l_orderkey"), col("l_returnflag"))
-      .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_orderpriority")),
-            col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("l_returnflag"))
-      .agg(sum(when(high, 1L).otherwise(0L)).as("high_line_count"),
-           sum(when(high, 0L).otherwise(1L)).as("low_line_count"))
-      .orderBy("l_returnflag")
-  }
-
-  /** TPC-H Q19 shape — disjunctive multi-attribute join predicates (OR of
-    * brand/size/quantity conjuncts), the classic pushdown-through-OR test. */
-  private def q19Disjunctive(s: SparkSession, dir: String): DataFrame = {
-    val cond =
-      (col("p_brand") === "Brand#12" && col("p_size").between(1, 15) &&
-       col("l_quantity").between(1, 20)) ||
-      (col("p_brand") === "Brand#23" && col("p_size").between(10, 30) &&
-       col("l_quantity").between(10, 40))
-    t(s, dir, "lineitem")
-      .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-      .filter(cond)
-      .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-             .as("revenue"),
-           count(lit(1)).as("n_items"))
-  }
-
-  /** TPC-H Q7 shape — bilateral shipping volume between two nations per
-    * ship year: the 6-way star join (lineitem ⋈ orders ⋈ customer ⋈
-    * supplier ⋈ nation×2) with a symmetric nation-pair predicate; dims
-    * broadcast, the fact table never reshuffles before the final
-    * small-key aggregate. */
-  private def q7Volume(s: SparkSession, dir: String): DataFrame = {
-    val (na, nb) = ("NATION_1", "NATION_2")
-    val nations = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
-    val supp = t(s, dir, "supplier")
-      .join(broadcast(nations), col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-    val cust = t(s, dir, "customer")
-      .join(broadcast(nations), col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("n_name").as("cust_nation"))
-    // cust/supp are customer/supplier-sized (SF-scaling): no forced hint —
-    // size-based planning broadcasts them here, shuffles them at 100 TB
-    t(s, dir, "lineitem")
-      .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-            col("l_orderkey") === col("o_orderkey"))
-      .join(cust, col("o_custkey") === col("c_custkey"))
-      .join(supp, col("l_suppkey") === col("s_suppkey"))
-      .filter((col("supp_nation") === na && col("cust_nation") === nb) ||
-              (col("supp_nation") === nb && col("cust_nation") === na))
-      .groupBy(col("supp_nation"), col("cust_nation"),
-               year(col("l_shipdate")).as("l_year"))
-      .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-             .as("revenue"),
-           count(lit(1)).as("n_items"))
-      .orderBy("supp_nation", "cust_nation", "l_year")
-  }
-
-  /** TPC-H Q10 shape — top-20 customers by returned-item revenue: 3-way
-    * join, exact decimal revenue (so the TakeOrdered boundary is
-    * bit-stable), custkey tie-break. */
-  private def q10ReturnedTop(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .filter(col("l_returnflag") === "R")
-      .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-            col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "customer")
-              .select(col("c_custkey"), col("c_name"), col("c_acctbal")),
-            col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_custkey"), col("c_name"))
-      .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-             .as("revenue"),
-           count(lit(1)).as("n_items"))
-      .orderBy(col("revenue").desc, col("c_custkey"))
-      .limit(20)
-
-  /** TPC-H Q15 shape — the top revenue supplier(s) for one ship quarter:
-    * revenue "view" + max-subquery join-back. Revenue goes through the
-    * exact decimal sum, so the max and the equality against it are
-    * bit-stable; ties (multiple suppliers at the max) all surface. */
-  private def q15TopSupplier(s: SparkSession, dir: String): DataFrame = {
-    val rev = t(s, dir, "lineitem")
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-              col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
-      .groupBy(col("l_suppkey"))
-      .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-             .as("total_rev"))
-    val top = rev.agg(max(col("total_rev")).as("max_rev"))
-    t(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))
-      .join(rev, col("s_suppkey") === col("l_suppkey"))
-      .join(broadcast(top), col("total_rev") === col("max_rev"))
-      .select(col("s_suppkey"), col("s_name"), col("total_rev"))
-      .orderBy("s_suppkey")
-  }
-
-  /** TPC-H Q18 shape — large-volume orders: the HAVING-subquery join
-    * (orders whose lineitems total > 200 units), top-100 by price. All
-    * sums integral-exact (quantity is integral), price is a raw data
-    * double — every boundary bit-stable. */
-  private def q18LargeOrders(s: SparkSession, dir: String): DataFrame = {
-    val big = t(s, dir, "lineitem")
-      .groupBy(col("l_orderkey"))
-      .agg(sum(col("l_quantity").cast("decimal(27,6)")).cast("double").as("sum_qty"))
-      .filter(col("sum_qty") > 200.0)
-    t(s, dir, "orders")
-      .join(big, col("o_orderkey") === col("l_orderkey"))
-      .join(t(s, dir, "customer").select(col("c_custkey"), col("c_name")),
-            col("o_custkey") === col("c_custkey"))
-      .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
-              col("o_totalprice"), col("sum_qty"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .limit(100)
-  }
-
-  /** TPC-H Q21 shape — "suppliers who kept orders waiting": the multi
-    * EXISTS / NOT-EXISTS SELF-JOIN family (reference capability J1
-    * generalized to correlated self-subqueries). The testdata has no
-    * l_receiptdate/l_commitdate, so `l_returnflag = 'R'` plays the "late
-    * line" role: for finished orders, a supplier is solely to blame when
-    * its line is flagged, ANOTHER supplier's line exists in the order
-    * (EXISTS → left-semi self-join with an inequality conjunct on the
-    * orderkey hash join), and NO other supplier's line is flagged
-    * (NOT EXISTS → left-anti self-join, same shape). Both correlated
-    * subqueries become hash joins on `l_orderkey` with the suppkey
-    * inequality as a post-probe conjunct — no nested-loop anywhere; the
-    * classic aggregate rewrite (per-order distinct-supplier counts) trades
-    * one lineitem shuffle for this plan's two and loses the shape this
-    * query exists to exercise. Top-k via TakeOrdered on a total order. */
-  private def q21WaitingSupplier(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_returnflag"))
-    val l1 = li.filter(col("l_returnflag") === "R")
-      .join(t(s, dir, "orders").filter(col("o_orderstatus") === "F")
-              .select(col("o_orderkey")),
-            col("l_orderkey") === col("o_orderkey"))
-      .select(col("l_orderkey"), col("l_suppkey"))
-    val l2 = li.select(col("l_orderkey").as("l2_orderkey"),
-                       col("l_suppkey").as("l2_suppkey"))
-    val l3 = li.filter(col("l_returnflag") === "R")
-      .select(col("l_orderkey").as("l3_orderkey"),
-              col("l_suppkey").as("l3_suppkey"))
-    l1.join(l2, col("l_orderkey") === col("l2_orderkey") &&
-                col("l_suppkey") =!= col("l2_suppkey"), "left_semi")
-      .join(l3, col("l_orderkey") === col("l3_orderkey") &&
-                col("l_suppkey") =!= col("l3_suppkey"), "left_anti")
-      .join(t(s, dir, "supplier") // SF-scaling: no forced hint (see q3 note)
-              .select(col("s_suppkey"), col("s_name")),
-            col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("s_name"))
-      .agg(count(lit(1)).as("numwait"))
-      .orderBy(col("numwait").desc, col("s_name"))
-      .limit(100)
-  }
-
-  /** TPC-H Q22 shape — "global sales opportunity": NOT EXISTS + scalar
-    * subquery. `c_nationkey` stands in for the phone country code (the
-    * testdata has no c_phone): among customers of seven nations, those with
-    * above-average positive balance (the scalar AVG bound — computed as a
-    * 1-row sum/count frame cross-joined back, the q15 bound-seeding shape,
-    * with the division done identically in both engines) who have never
-    * placed an URGENT-priority order (left-anti against the filtered orders
-    * keys — broadcast at contract scale, a shuffled anti join at 100 TB,
-    * same plan shape either way). */
-  private def q22SalesOpportunity(s: SparkSession, dir: String): DataFrame = {
-    val cset = t(s, dir, "customer")
-      .filter(col("c_nationkey").isin(1, 3, 5, 7, 9, 11, 13))
-      .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
-    val stats = cset.filter(col("c_acctbal") > 0.0)
-      .agg(dsum(col("c_acctbal")).as("s"), count(lit(1)).as("n"))
-    cset
-      .crossJoin(broadcast(stats))
-      .filter(col("c_acctbal") > col("s") / col("n"))
-      .join(t(s, dir, "orders").filter(col("o_orderpriority") === "1-URGENT")
-              .select(col("o_custkey")),
-            col("c_custkey") === col("o_custkey"), "left_anti")
-      .groupBy(col("c_nationkey").as("cntry"))
-      .agg(count(lit(1)).as("numcust"), dsum(col("c_acctbal")).as("totacctbal"))
-      .orderBy("cntry")
-  }
-
-  /** TPC-H Q8 shape — national market share: the 8-table star join (fact ⋈
-    * part ⋈ orders ⋈ customer ⋈ nation ⋈ REGION ⋈ supplier ⋈ nation again)
-    * with a conditional-numerator share aggregate per order year. All dims
-    * broadcast; lineitem reshuffles once for the year aggregate. Share =
-    * decimal-exact numerator / decimal-exact denominator, divided in
-    * double — the identical IEEE operation the oracle performs. */
-  private def q8MarketShare(s: SparkSession, dir: String): DataFrame = {
-    val nations = t(s, dir, "nation")
-      .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-    val custAsia = t(s, dir, "customer")
-      .join(broadcast(nations), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, dir, "region").filter(col("r_name") === "ASIA")),
-            col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey"))
-    val supp = t(s, dir, "supplier")
-      .join(broadcast(nations.select(col("n_nationkey"),
-                                     col("n_name").as("supp_nation"))),
-            col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("supp_nation"))
-    val volume = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-    t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part").filter(col("p_type") === "ECONOMY")
-              .select(col("p_partkey"))),
-            col("l_partkey") === col("p_partkey"))
-      .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
-                                       col("o_orderdate")),
-            col("l_orderkey") === col("o_orderkey"))
-      // custAsia/supp are customer/supplier-sized (SF-scaling, a fixed
-      // region FRACTION is still linear in SF): no forced hint — a shuffled
-      // semi/hash join is the correct 100 TB plan, broadcast at bench scale
-      .join(custAsia, col("o_custkey") === col("c_custkey"), "left_semi")
-      .join(supp, col("l_suppkey") === col("s_suppkey"))
-      .groupBy(year(col("o_orderdate")).as("o_year"))
-      .agg((dsum(when(col("supp_nation") === "NATION_5", volume).otherwise(lit(0.0)))
-              / dsum(volume)).as("mkt_share"))
-      .orderBy("o_year")
-  }
-
-  /** TPC-H Q13 shape — customer order-count distribution: the LEFT OUTER
-    * join with a join-side predicate (so zero-order customers survive with
-    * count 0) under a two-level aggregate. The outer join shuffles once on
-    * custkey; the second aggregate runs over the #distinct-counts-sized
-    * frame. o_orderpriority plays the q13 comment-filter role. */
-  private def q13OrderDistribution(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-      .filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_custkey"), col("o_orderkey"))
-    t(s, dir, "customer").select(col("c_custkey"))
-      .join(o, col("c_custkey") === col("o_custkey"), "left_outer")
-      .groupBy(col("c_custkey"))
-      .agg(count(col("o_orderkey")).as("c_count"))
-      .groupBy(col("c_count"))
-      .agg(count(lit(1)).as("custdist"))
-      .orderBy(col("custdist").desc, col("c_count").desc)
-  }
-
-  /** TPC-H Q16 shape — supplier count by part attributes with a NOT-IN
-    * exclusion: lineitem's (partkey, suppkey) pairs stand in for partsupp;
-    * suppliers with negative balance are excluded via an anti join (the
-    * NOT IN keys are non-null, so anti-join semantics coincide), then
-    * count(DISTINCT suppkey) per (brand, type, size) bucket. */
-  private def q16SupplierCnt(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem").select(col("l_partkey"), col("l_suppkey"))
-      .join(broadcast(t(s, dir, "part")
-              .filter(col("p_brand") =!= "Brand#1" && col("p_type") =!= "PROMO" &&
-                      col("p_size").isin(1, 5, 9, 14, 19, 23, 36, 45))
-              .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))),
-            col("l_partkey") === col("p_partkey"))
-      .join(t(s, dir, "supplier").filter(col("s_acctbal") < 0.0)
-              .select(col("s_suppkey")), // supplier fraction: SF-scaling, no hint
-            col("l_suppkey") === col("s_suppkey"), "left_anti")
-      .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-      .agg(count_distinct(col("l_suppkey")).as("supplier_cnt"))
-      .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"), col("p_size"))
-
-  /** TPC-H Q20 shape — the nested IN chain: suppliers who DOMINATE a
-    * STANDARD part's shipments (pair quantity > 2.5× the part's mean
-    * per-supplier quantity — the scale-invariant rendition of q20's
-    * half-of-availqty test, since share thresholds dilute as supplier
-    * count grows) feed an IN-subquery semi join against the supplier dim.
-    * lineitem is scanned ONCE: the per-part totals derive from the
-    * per-pair DECIMAL sums (decimal addition is exact, so the two-level
-    * sum equals the direct one the oracle computes, and the pair row
-    * count IS the distinct-supplier count); the tiny per-part frame then
-    * broadcasts back onto the pairs, and the dominant supplier-id set
-    * broadcasts into the semi join. */
-  private def q20DominantSupplier(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part").filter(col("p_type") === "STANDARD")
-              .select(col("p_partkey"))),
-            col("l_partkey") === col("p_partkey"), "left_semi")
-      .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
-    val pairDec = li.groupBy(col("l_partkey"), col("l_suppkey"))
-      .agg(sum(col("l_quantity").cast("decimal(27,6)")).as("pair_dec"))
-    val tot = pairDec.groupBy(col("l_partkey"))
-      .agg(sum(col("pair_dec")).as("tot_dec"), count(lit(1)).as("ns"))
-    val dominant = pairDec.join(broadcast(tot), Seq("l_partkey"))
-      .filter(col("pair_dec").cast("double") * col("ns") >
-              lit(2.5) * col("tot_dec").cast("double"))
-      .select(col("l_suppkey")).distinct()
-    t(s, dir, "supplier")
-      .join(broadcast(t(s, dir, "nation")
-              .select(col("n_nationkey"), col("n_name"))),
-            col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(dominant), col("s_suppkey") === col("l_suppkey"), "left_semi")
-      .select(col("s_suppkey"), col("s_name"), col("n_name"))
-      .orderBy("s_suppkey")
-  }
-
-  /** TPC-H Q9 shape — product-type profit by nation and year: the 6-way
-    * join with a part-NAME pattern filter and a two-measure profit
-    * expression, aggregated over (nation, year). The testdata has no
-    * partsupp, so supply cost proxies as 0.6 × p_retailprice (the plan
-    * shape — fact ⋈ part[LIKE] ⋈ supplier ⋈ orders ⋈ nation with dims
-    * broadcast and one fact shuffle into the small-key aggregate — is what
-    * this query exercises, not the cost constant). The profit expression
-    * evaluates left-associated in double on both engines, then sums
-    * decimal-exact. */
-  private def q9ProductProfit(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part").filter(col("p_name").like("%red%"))
-              .select(col("p_partkey"), col("p_retailprice"))),
-            col("l_partkey") === col("p_partkey"))
-      .join(t(s, dir, "supplier") // SF-scaling: no forced hint (see q3 note)
-              .select(col("s_suppkey"), col("s_nationkey")),
-            col("l_suppkey") === col("s_suppkey"))
-      .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_orderdate")),
-            col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(t(s, dir, "nation")
-              .select(col("n_nationkey"), col("n_name"))),
-            col("s_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name").as("nation"), year(col("o_orderdate")).as("o_year"))
-      .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")) -
-                lit(0.6) * col("p_retailprice") * col("l_quantity")).as("profit"),
-           count(lit(1)).as("n_items"))
-      .orderBy(col("nation"), col("o_year").desc)
-
-  private def q6Revenue(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-              col("l_shipdate") < lit("1998-01-01").cast("timestamp") &&
-              col("l_discount").between(0.02, 0.06) &&
-              col("l_quantity") < 10)
-      .agg(dsum(col("l_extendedprice") * col("l_discount")).as("revenue"),
-           count(lit(1)).as("n"))
-
-  /** Q4-style: orders with at least one lineitem shipped more than 30 days
-    * after the order date (semi join with a non-equi conjunct + interval
-    * arithmetic, F5). */
-  private def q4LateShipments(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    t(s, dir, "orders")
-      .join(li.select(col("l_orderkey"), col("l_shipdate")),
-            col("l_orderkey") === col("o_orderkey") &&
-              col("l_shipdate") > col("o_orderdate") + expr("interval 30 days"),
-            "left_semi")
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"))
-      .orderBy("o_orderpriority")
-  }
-
-  private def rollupPricing(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .rollup(col("l_returnflag"), col("l_linestatus"))
-      .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
-      .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-
-  private def cubePricing(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .cube(col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-
-  /** GROUPING SETS through the SQL surface (the generalization rollup/cube
-    * specialize): per-flag totals, per-status totals, and the grand total in
-    * one scan. */
-  private def groupingSetsPricing(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("lineitem_gs")
-    s.sql("""
-      SELECT l_returnflag, l_linestatus, count(*) AS n
-      FROM lineitem_gs
-      GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-      ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""")
-  }
-
-  /** ClickHouse groupUniqArray analog: per-user sorted distinct event types,
-    * emitted as a CSV string so the contract comparator stays scalar. */
-  private def userEventTypes(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg(array_join(array_sort(collect_set(col("event_type"))), ",").as("types"),
-           count(lit(1)).as("n_events"))
-      .orderBy("user_id")
-
-  private def setOpUsers(s: SparkSession, dir: String, op: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    def users(tpe: String) =
-      ev.filter(col("event_type") === tpe).select(col("user_id")).distinct()
-    val (a, b) = (users("click"), users("purchase"))
-    (if (op == "intersect") a.intersect(b) else a.except(b)).orderBy("user_id")
-  }
-
-  private def top10Customers(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      // customer is SF-scaling: no forced hint (see q3 note)
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_custkey"), col("c_name"))
-      .agg(dsum(col("o_totalprice")).as("revenue"))
-      .orderBy(col("revenue").desc, col("c_custkey"))
-      .limit(10)
-
-  /** Deterministic stddev: exact decimal Σx and Σx², double-combined with a
-    * fixed formula — reproducible regardless of partitioning (a plain
-    * `stddev` aggregate is float-order-dependent). */
-  private def aggValueStatsExt(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-           dsum(col("value")).as("s1"),
-           dsum(col("value") * col("value")).as("s2"))
-      .select(col("event_type"), col("n"),
-              (col("s1") / col("n")).as("mean_value"),
-              sqrt((col("s2") - col("s1") * col("s1") / col("n")) / (col("n") - 1))
-                .as("stddev_value"))
-      .orderBy("event_type")
-
-  /** Tumbling event-time windows (T8 generalization): Spark's `window()`
-    * operator; hourly buckets align with epoch so the oracle is
-    * date_trunc. */
-  private def eventsHourlyWindows(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-              col("event_type"), col("n"))
-      .orderBy("window_start", "event_type")
-
-  /** Repetition-signal scoring per document (duplicate-trigram fraction). */
-  private def textRepetition(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"),
-              size(TextAnalysis.wordTrigrams(col("text"))).as("n_trigrams"),
-              TextAnalysis.repetitionRatio(col("text")).as("rep_ratio"))
-      .orderBy("doc_id")
-
-  /** Relational pivot: per-user wide activity counts (explicit value list —
-    * at scale an implicit pivot would scan once just to discover columns). */
-  private def pivotUserActivity(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("user_id"))
-      .pivot("event_type", Seq("click", "purchase", "view"))
-      .agg(count(lit(1)))
-      .na.fill(0L)
-      .orderBy("user_id")
-
-  /** Unpivot (melt): the wide activity table back to long form. */
-  private def unpivotUserActivity(s: SparkSession, dir: String): DataFrame =
-    pivotUserActivity(s, dir)
-      .unpivot(Array(col("user_id")), Array(col("click"), col("purchase"), col("view")),
-               "event_type", "n")
-      .orderBy("user_id", "event_type")
-
-  /** ntile quartiles by order value — distributed rank ([[Ranks.ntileExact]]),
-    * not a global single-task window; semantics identical to SQL ntile(4). */
-  private def ntileOrders(s: SparkSession, dir: String): DataFrame =
-    Ranks.ntileExact(
-        t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")),
-        Seq(col("o_totalprice").desc, col("o_orderkey").asc), k = 4, out = "quartile")
-      .groupBy(col("quartile"))
-      .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
-      .orderBy("quartile")
-
-  /** Fixed-size token chunking with overlap (sequence prep). Per-row
-    * tokenize+slice is compute-bound, so it consumes the shared
-    * [[docsSharded]] fan-out rather than the corpus's single local split. */
-  private def docChunks(s: SparkSession, dir: String): DataFrame =
-    TextChunking.chunk(docsSharded(s, dir), chunkTokens = 64, overlap = 16)
-      .orderBy("doc_id", "chunk_idx")
-
-  /** The corpus chunk stream as a per-(session,dir) ingest artifact: chunk
-    * CONSUMERS (packing, chunk dedup) read the one materialization — in
-    * production the chunk table is a persisted intermediate written when
-    * docs arrive (the newBatchPairs discipline). `doc_chunks` itself still
-    * computes chunking live: it IS the chunking operator's demo. */
-  private def chunkStream(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, dir, "chunk_stream", "documents") {
-      TextChunking.chunk(docsSharded(s, dir), chunkTokens = 64, overlap = 16)
-    }
-
-  /** Historical chunk-digest index: what a production chunk-dedup pipeline
-    * PERSISTS beside the corpus (appended per ingest batch, like the LSH
-    * index) — the 80% historical slice's distinct chunk digests. */
-  private def chunkDigestIndex(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, dir, "chunk_digest_index", "documents") {
-      chunkStream(s, dir).filter(col("doc_id") % 5 =!= 0)
-        .select(md5(col("chunk_text").cast("binary")).as("__d")).distinct()
-    }
-
-  /** Incremental chunk dedup ([[Dedup.incrementalChunkDedup]]): the 20%
-    * batch slice probes the persisted digest index — batch digests
-    * broadcast into the index scan, the index never shuffles. Same output
-    * contract as `chunk_dedup`, restricted to batch docs. */
-  private def incrementalChunkDedup(s: SparkSession, dir: String): DataFrame = {
-    val stats = Dedup.incrementalChunkDedup(
-      chunkStream(s, dir).filter(col("doc_id") % 5 === 0),
-      chunkDigestIndex(s, dir))
-    t(s, dir, "documents").filter(col("doc_id") % 5 === 0).select(col("doc_id"))
-      .join(stats, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-              coalesce(col("n_chunks"), lit(0L)).as("n_chunks"),
-              coalesce(col("n_dup_chunks"), lit(0L)).as("n_dup_chunks"),
-              coalesce(col("kept_md5"), md5(lit("").cast("binary"))).as("kept_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** Chunk-level cross-document dedup ([[Dedup.chunkLevelDedup]], the
-    * CCNet/RefinedWeb line-dedup stage at chunk granularity) over the SAME
-    * chunk stream as `doc_chunks` — the oracle reproduces the chunks (the
-    * proven doc_chunks SQL) and replays the ≥2-distinct-docs rule on md5
-    * digests. Wordless docs come back via a left join as (0, 0, md5("")). */
-  private def chunkDedup(s: SparkSession, dir: String): DataFrame = {
-    val stats = Dedup.chunkLevelDedup(chunkStream(s, dir))
-    t(s, dir, "documents").select(col("doc_id"))
-      .join(stats, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-              coalesce(col("n_chunks"), lit(0L)).as("n_chunks"),
-              coalesce(col("n_dup_chunks"), lit(0L)).as("n_dup_chunks"),
-              coalesce(col("kept_md5"), md5(lit("").cast("binary"))).as("kept_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** Greedy context-window packing of the same chunk stream
-    * ([[TextChunking.packChunks]]); the oracle replays the integer
-    * recurrence as a recursive CTE. */
-  private def packedChunks(s: SparkSession, dir: String): DataFrame =
-    TextChunking.packChunks(chunkStream(s, dir), budgetTokens = 150)
-      .orderBy("doc_id", "chunk_idx")
-
-  /** Deterministic multiplicative-hash sample (~7%). */
-  private def sampleEventsHash(s: SparkSession, dir: String): DataFrame =
-    Sampling.hashSample(t(s, dir, "events"), "event_id", pct = 7)
-      .select(col("event_id"), col("user_id"), col("event_type"))
-      .orderBy("event_id")
-
-  /** Deterministic stratified sample: 5 representatives per event type. */
-  private def stratifiedSampleEvents(s: SparkSession, dir: String): DataFrame =
-    Sampling.stratifiedSample(t(s, dir, "events"), "event_type", "event_id", 5)
-      .select(col("event_type"), col("event_id"), col("user_id"))
-      .orderBy("event_type", "event_id")
-
-  /** Higher moments with deterministic math: skewness/kurtosis from exact
-    * decimal power sums combined by a fixed double formula (the built-in
-    * `skewness`/`kurtosis` aggregates are float-order-dependent).
-    *
-    * The powers are raised in DECIMAL, not double: `value` is an exact
-    * 2-decimal quantity, so d·d·d at scale 6 is exact integer arithmetic —
-    * cubing in doubles first puts the rounding-to-decimal step close enough
-    * to grid midpoints (|err| ~1e-8 vs half-step 5e-7 at 1e8 magnitude)
-    * that engines occasionally disagree on the row (seen at sf0.1). Tight
-    * precisions keep Spark's product types well under 38 so no rescale —
-    * and no rounding — ever happens.
-    *
-    * The sums convert decimal→double THROUGH THEIR DIGIT STRING: a direct
-    * cast of a scale-6 decimal whose scaled integer exceeds 2^53 (the cube
-    * sum is ~1.5e16 at sf0.1) is double-rounded by engines that compute
-    * (double)int / 10^scale, landing one ulp off a single correct rounding;
-    * and rescaling the decimal first hits half-way digits engines also
-    * round differently. The digit string is exact and identical everywhere,
-    * and string→double parse is correctly rounded in every engine — one
-    * deterministic rounding, same bits. */
-  private def aggMoments(s: SparkSession, dir: String): DataFrame = {
-    // DECIMAL(12,2): wide enough that ANSI mode can't throw on plausible
-    // value magnitudes (|value| < 1e10), yet the cube's product type is
-    // exactly (38,6) — still no rescale, so the arithmetic stays exact
-    val d = col("value").cast("string").cast("decimal(12,2)")
-    def d2d(c: Column) = c.cast("string").cast("double")
-    t(s, dir, "events")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-           d2d(sum(d)).as("s1"),
-           d2d(sum(d * d)).as("s2"),
-           d2d(sum(d * d * d)).as("s3"))
-      .select(col("event_type"), col("n"),
-              (col("s1") / col("n")).as("mean"), col("s2"), col("s3"))
-      .withColumn("m2", col("s2") / col("n") - col("mean") * col("mean"))
-      .withColumn("m3", col("s3") / col("n") - lit(3.0) * col("mean") * col("s2") / col("n")
-                          + lit(2.0) * col("mean") * col("mean") * col("mean"))
-      .select(col("event_type"), col("n"), col("mean"),
-              (col("m3") / (col("m2") * sqrt(col("m2")))).as("skewness"))
-      .orderBy("event_type")
-  }
-
-  /** Exact Pearson correlation (ClickHouse `corr`) of value vs hour-of-day
-    * per type: all power/cross sums exact in decimal (agg_moments
-    * technique — string-route into DECIMAL, digit-string back out), the
-    * final arithmetic a pinned IEEE sequence mirrored verbatim in SQL. */
-  private def corrValueHour(s: SparkSession, dir: String): DataFrame = {
-    val dx = col("value").cast("string").cast("decimal(12,2)")
-    def d2d(c: Column) = c.cast("string").cast("double")
-    t(s, dir, "events")
-      .select(col("event_type"), dx.as("x"), hour(col("ts")).cast("long").as("y"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-           d2d(sum(col("x"))).as("sx"),
-           sum(col("y")).cast("double").as("sy"),          // integer-exact
-           d2d(sum(col("x") * col("x"))).as("sxx"),
-           sum(col("y") * col("y")).cast("double").as("syy"),
-           d2d(sum(col("x") * col("y").cast("decimal(4,0)"))).as("sxy"))
-      .select(col("event_type"), col("n"),
-              ((col("n") * col("sxy") - col("sx") * col("sy"))
-                 / (sqrt(col("n") * col("sxx") - col("sx") * col("sx"))
-                    * sqrt(col("n") * col("syy") - col("sy") * col("sy"))))
-                .as("corr_value_hour"))
-      .orderBy("event_type")
-  }
-
-  /** ClickHouse `welchTTest` / `studentTTest`: two-sample location tests of
-    * value between the even/odd user cohorts per event_type. Cohort sums
-    * and sums-of-squares are decimal-exact via the string route (the
-    * agg_moments technique; squares of 2-decimal values are exact 4-decimal
-    * decimals); every downstream op — means, variances, both t statistics
-    * and the Welch–Satterthwaite df — is one pinned IEEE sequence mirrored
-    * verbatim in SQL, so the doubles reproduce bit-for-bit (each IEEE
-    * op is correctly rounded; identical inputs + identical tree =
-    * identical bits). One conditional-aggregate shuffle, no Expand. */
-  private def abTTestValue(s: SparkSession, dir: String): DataFrame = {
-    val dv = col("value").cast("string").cast("decimal(12,2)")
-    def d2d(c: Column) = c.cast("string").cast("double")
-    val isA = pmod(col("user_id"), lit(2)) === 0
-    val g = t(s, dir, "events")
-      .select(col("event_type"), isA.as("a"), dv.as("d"))
-      .groupBy(col("event_type"))
-      .agg(count(when(col("a"), 1)).as("n_a"),
-           count(when(!col("a"), 1)).as("n_b"),
-           d2d(sum(when(col("a"), col("d")))).as("sa"),
-           d2d(sum(when(col("a"), col("d") * col("d")))).as("saa"),
-           d2d(sum(when(!col("a"), col("d")))).as("sb"),
-           d2d(sum(when(!col("a"), col("d") * col("d")))).as("sbb"))
-    val na = col("n_a").cast("double"); val nb = col("n_b").cast("double")
-    val ma = col("sa") / na; val mb = col("sb") / nb
-    val va = (col("saa") - col("sa") * ma) / (na - lit(1.0))
-    val vb = (col("sbb") - col("sb") * mb) / (nb - lit(1.0))
-    val sea = va / na; val seb = vb / nb
-    val se2 = sea + seb
-    val tW = (ma - mb) / sqrt(se2)
-    val dfW = se2 * se2 / (sea * sea / (na - lit(1.0)) + seb * seb / (nb - lit(1.0)))
-    val sp2 = ((na - lit(1.0)) * va + (nb - lit(1.0)) * vb) / (na + nb - lit(2.0))
-    val tS = (ma - mb) / sqrt(sp2 * (lit(1.0) / na + lit(1.0) / nb))
-    g.select(col("event_type"), col("n_a"), col("n_b"),
-             ma.as("mean_a"), mb.as("mean_b"),
-             tW.as("t_welch"), dfW.as("df_welch"), tS.as("t_student"))
-      .orderBy("event_type")
-  }
-
-  /** Chi-squared independence test (event_type × 3-way user cohort): are a
-    * type's cohort proportions consistent with the corpus-wide cohort
-    * margins? Cells and margins are exact integer conditional counts
-    * (pivoted into COLUMNS, so the χ² is one pinned per-row IEEE tree —
-    * there is no float summation across rows anywhere, the hazard that
-    * makes a naive Σ(o−e)²/e partition-order-dependent). The 95% df=2 gate
-    * (5.991) rides enormous headroom on a bit-identical statistic. */
-  private def chi2CohortUniformity(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-      .select(col("event_type"), pmod(col("user_id"), lit(3)).as("c"))
-    val cells = ev.groupBy(col("event_type"))
-      .agg(count(when(col("c") === 0, 1)).as("n0"),
-           count(when(col("c") === 1, 1)).as("n1"),
-           count(when(col("c") === 2, 1)).as("n2"))
-    val margins = ev.agg(count(when(col("c") === 0, 1)).as("m0"),
-                         count(when(col("c") === 1, 1)).as("m1"),
-                         count(when(col("c") === 2, 1)).as("m2"),
-                         count(lit(1)).as("mt"))
-    val rowN = (col("n0") + col("n1") + col("n2")).cast("double")
-    def term(n: Column, m: Column) = {
-      val e = rowN * (m.cast("double") / col("mt").cast("double"))
-      (n.cast("double") - e) * (n.cast("double") - e) / e
-    }
-    val chi2 = term(col("n0"), col("m0")) + term(col("n1"), col("m1")) +
-               term(col("n2"), col("m2"))
-    cells.crossJoin(broadcast(margins))
-      .select(col("event_type"), col("n0"), col("n1"), col("n2"),
-              chi2.as("chi2"), (chi2 > lit(5.991)).as("nonuniform"))
-      .orderBy("event_type")
-  }
-
-  /** Cramér's V, bias-corrected V, and the contingency coefficient
-    * (ClickHouse `cramersV` / `cramersVBiasCorrected` / `contingency`)
-    * over the `chi2_cohort` contingency table (event_type × 3 cohorts).
-    * Per-row χ² terms are chi2_cohort's pinned per-row IEEE tree; the
-    * GLOBAL χ² is a left fold over the event_type-sorted term list
-    * (collect_list over the #event_type-sized frame → array_sort →
-    * aggregate), a pinned sequential float sum DuckDB replays with
-    * `list_reduce(list(... ORDER BY event_type))` — the seeds differ
-    * (0.0 vs first element) but 0.0 + x ≡ x for the non-negative terms,
-    * so the sums agree bit-for-bit. Everything downstream is one shared
-    * correctly-rounded tree over exact integers. */
-  private def cramersVCohort(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-      .select(col("event_type"), pmod(col("user_id"), lit(3)).as("c"))
-    val cells = ev.groupBy(col("event_type"))
-      .agg(count(when(col("c") === 0, 1)).as("n0"),
-           count(when(col("c") === 1, 1)).as("n1"),
-           count(when(col("c") === 2, 1)).as("n2"))
-    val margins = ev.agg(count(when(col("c") === 0, 1)).as("m0"),
-                         count(when(col("c") === 1, 1)).as("m1"),
-                         count(when(col("c") === 2, 1)).as("m2"),
-                         count(lit(1)).as("mt"))
-    val rowN = (col("n0") + col("n1") + col("n2")).cast("double")
-    def term(n: Column, m: Column) = {
-      val e = rowN * (m.cast("double") / col("mt").cast("double"))
-      (n.cast("double") - e) * (n.cast("double") - e) / e
-    }
-    val chi2r = term(col("n0"), col("m0")) + term(col("n1"), col("m1")) +
-                term(col("n2"), col("m2"))
-    val g = cells.crossJoin(broadcast(margins))
-      .select(col("event_type"), chi2r.as("chi2r"), col("mt"))
-      .agg(aggregate(
-             array_sort(collect_list(struct(col("event_type"), col("chi2r")))),
-             lit(0.0), (acc, x) => acc + x.getField("chi2r")).as("chi2"),
-           count(lit(1)).as("r"),
-           max(col("mt")).as("n"))
-    val nD = col("n").cast("double")
-    val rD = col("r").cast("double")
-    val kD = least(col("r") - 1, lit(2L)).cast("double") // min(r−1, c−1), c=3
-    val phi2 = col("chi2") / nD
-    val phi2c = greatest(lit(0.0),
-                         phi2 - (rD - lit(1.0)) * lit(2.0) / (nD - lit(1.0)))
-    val rT = rD - (rD - lit(1.0)) * (rD - lit(1.0)) / (nD - lit(1.0))
-    val cT = lit(3.0) - lit(4.0) / (nD - lit(1.0))
-    g.select(col("n"), col("r"), col("chi2"),
-             sqrt(col("chi2") / (nD * kD)).as("cramers_v"),
-             sqrt(phi2c / least(rT - lit(1.0), cT - lit(1.0)))
-               .as("cramers_v_corrected"),
-             sqrt(col("chi2") / (col("chi2") + nD)).as("contingency_coef"))
-  }
-
-  /** One-way ANOVA F-test (ClickHouse `analysisOfVariance` — the k-sample
-    * extension of [[abTTestValue]]'s location tests): does mean(value)
-    * differ across the event types? Per-group count/sum/sum-of-squares are
-    * decimal-exact via the string route (squares of 2-decimal values are
-    * exact 4-decimal decimals); the grand Σv and Σv² are DECIMAL sums of
-    * the per-group decimals (order-free, exact), and the one float
-    * cross-group reduction — Σᵢ (Σv_i)²/n_i — folds in pinned event_type
-    * order (the cramers_v list-fold discipline). The closing F arithmetic
-    * is one pinned IEEE tree mirrored verbatim in SQL. One conditional-
-    * aggregate shuffle; the final fold is a 1-row global aggregate over
-    * the #event_type-sized frame (PlanLint scalar-output class). */
-  private def anovaValue(s: SparkSession, dir: String): DataFrame = {
-    val dv = col("value").cast("string").cast("decimal(12,2)")
-    def d2d(c: Column) = c.cast("string").cast("double")
-    val g = t(s, dir, "events")
-      .select(col("event_type"), dv.as("d"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-           sum(col("d")).as("s1d"),
-           sum(col("d") * col("d")).as("s2d"))
-    val term = d2d(col("s1d")) * d2d(col("s1d")) / col("n").cast("double")
-    val f = g.agg(
-        count(lit(1)).as("k"),
-        sum(col("n")).as("n_total"),
-        d2d(sum(col("s1d"))).as("sg"),
-        d2d(sum(col("s2d"))).as("sqg"),
-        aggregate(array_sort(collect_list(struct(col("event_type"),
-                                                 term.as("t")))),
-          lit(0.0), (acc, x) => acc + x.getField("t")).as("tsum"))
-    val nD = col("n_total").cast("double")
-    val ssb = col("tsum") - col("sg") * col("sg") / nD
-    val ssw = col("sqg") - col("tsum")
-    f.select(col("k"), col("n_total"),
-             ssb.as("ss_between"), ssw.as("ss_within"),
-             ((ssb / (col("k") - 1).cast("double"))
-                / (ssw / (col("n_total") - col("k")).cast("double"))).as("f_stat"))
-  }
-
-  /** Median absolute deviation of value per event type
-    * ([[RobustStats.madStats]]): exact discrete medians via value-domain
-    * cumulative picks — completes the robust-stats family next to
-    * winsorized means and exact weighted quantiles. */
-  private def madValue(s: SparkSession, dir: String): DataFrame =
-    RobustStats.madStats(t(s, dir, "events"), "event_type", "value")
-      .orderBy("event_type")
-
-  /** Mann-Whitney U test (ClickHouse `mannWhitneyUTest`): rank-based
-    * two-sample test of value between the even/odd user cohorts per
-    * event_type. DOUBLED midranks keep tie handling integer-exact
-    * (2·midrank = first + last = 2·rank + tiecount − 1), so 2R_A, 2U_A and
-    * the tie-correction term Σ(t³−t) are exact BIGINTs on both engines;
-    * only the final normal approximation is float — one pinned IEEE tree
-    * over integer-valued doubles, bit-identical. 2R_A grows as N² per
-    * group: long accumulation is exact to ~3·10⁹ rows per event_type;
-    * beyond that the sums must move to DECIMAL(38,0). */
-  private def mannWhitneyValue(s: SparkSession, dir: String): DataFrame = {
-    val dv = col("value").cast("string").cast("decimal(12,2)")
-    val ev = t(s, dir, "events")
-      .select(col("event_type"), (pmod(col("user_id"), lit(2)) === 0).as("a"),
-              dv.as("d"))
-    // 100-TB shape: the EVENT-sized frame passes exactly one map-side-
-    // combined groupBy; ranking happens on the tie-GROUP frame (distinct
-    // values per type — bounded by the measure's quantized domain, not the
-    // row count), where a per-type window is calendar-class small. A
-    // row-level rank window partitioned by 5 event types would funnel the
-    // whole table through 5 tasks. With [first, last] the positions of a
-    // tie group, Σ_A 2·midrank = Σ_groups cntA·(first+last)
-    // = Σ cntA·(2·cumBefore + cnt + 1) — integer-exact throughout.
-    val g = ev.groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("cnt"), count(when(col("a"), 1)).as("cnt_a"))
-    val wCum = Window.partitionBy(col("event_type")).orderBy(col("d"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val grouped = g.withColumn("cum_before",
-      coalesce(sum(col("cnt")).over(wCum), lit(0L)))
-    val sums = grouped.groupBy(col("event_type"))
-      .agg(sum(col("cnt_a")).as("n_a"),
-           sum(col("cnt") - col("cnt_a")).as("n_b"),
-           sum(col("cnt_a") * (col("cum_before") * 2 + col("cnt") + 1)).as("r2a"),
-           sum(col("cnt") * col("cnt") * col("cnt") - col("cnt")).as("tie3"))
-    val na = col("n_a").cast("double"); val nb = col("n_b").cast("double")
-    val nn = na + nb
-    val ua = (col("r2a").cast("double") - na * (na + lit(1.0))) / lit(2.0)
-    val mu = (na * nb) / lit(2.0)
-    val sg = sqrt(((na * nb) / lit(12.0)) *
-      ((nn + lit(1.0)) - (col("tie3").cast("double") / (nn * (nn - lit(1.0))))))
-    val z = (ua - mu) / sg
-    sums
-      .select(col("event_type"), col("n_a"), col("n_b"),
-              (col("r2a") - col("n_a") * (col("n_a") + 1)).as("u2_a"),
-              col("tie3"), z.as("z"), (abs(z) > lit(1.96)).as("significant"))
-      .orderBy("event_type")
-  }
-
-  /** Theil's U — the uncertainty coefficient (ClickHouse `theilsU`),
-    * completing the association family next to Cramér's V / contingency:
-    * U(X|Y) = I(X;Y)/H(X), U(Y|X) = I(X;Y)/H(Y) over the event_type ×
-    * cohort contingency table. All counts are exact integers; the three
-    * entropy sums (row, column, joint) fold over their key-sorted
-    * contingency-sized frames in pinned order (the cramers_v list-fold
-    * discipline), and every ln-bearing output is rounded to 9 decimals on
-    * both sides (the entropy_value stance on non-correctly-rounded libm). */
-  private def theilsUCohort(s: SparkSession, dir: String): DataFrame = {
-    def entTerm(nc: Column, nt: Column): Column =
-      (nc.cast("double") / nt.cast("double")) *
-        log(nt.cast("double") / nc.cast("double"))
-    def fold(keyed: Column): Column =
-      aggregate(array_sort(keyed), lit(0.0), (a, x) => a + x.getField("t"))
-    val ev = t(s, dir, "events")
-      .select(col("event_type"), pmod(col("user_id"), lit(3)).as("c"))
-    val cells = ev.groupBy(col("event_type"), col("c"))
-      .agg(count(lit(1)).as("n"))
-    val tot = cells.agg(sum(col("n")).as("nt"))
-    val hx = cells.groupBy(col("event_type")).agg(sum(col("n")).as("rn"))
-      .crossJoin(broadcast(tot))
-      .select(struct(col("event_type"), entTerm(col("rn"), col("nt")).as("t")).as("kt"),
-              col("nt"))
-      .agg(fold(collect_list(col("kt"))).as("h_x"), max(col("nt")).as("nt"))
-    val hy = cells.groupBy(col("c")).agg(sum(col("n")).as("cn"))
-      .crossJoin(broadcast(tot))
-      .select(struct(col("c"), entTerm(col("cn"), col("nt")).as("t")).as("kt"))
-      .agg(fold(collect_list(col("kt"))).as("h_y"))
-    val hxy = cells.crossJoin(broadcast(tot))
-      .select(struct(col("event_type"), col("c"),
-                     entTerm(col("n"), col("nt")).as("t")).as("kt"))
-      .agg(fold(collect_list(col("kt"))).as("h_xy"))
-    val mi = col("h_x") + col("h_y") - col("h_xy")
-    hx.crossJoin(broadcast(hy)).crossJoin(broadcast(hxy))
-      .select(col("nt").as("n_total"),
-              round(col("h_x"), 9).as("h_x"),
-              round(col("h_y"), 9).as("h_y"),
-              round(col("h_xy"), 9).as("h_xy"),
-              round(mi / col("h_x"), 9).as("u_x_given_y"),
-              round(mi / col("h_y"), 9).as("u_y_given_x"))
-  }
-
-  /** Interval-sweep family — ClickHouse `maxIntersections` /
-    * `maxIntersectionsPosition` / `intervalLengthSum` — over per-(user,
-    * event_type) 30-minute-gap activity episodes: per event_type, the
-    * peak number of simultaneously active episodes, the earliest
-    * microsecond attaining it, and the exact length of the episode-
-    * interval union. Distributed two-level prefix sum (day-domain offset
-    * cascade — see [[EventAnalytics.intervalSweep]]); the oracle runs
-    * the equivalent single-window sweep, exact epoch-micros integers
-    * end to end. */
-  private def intervalConcurrency(s: SparkSession, dir: String): DataFrame =
-    EventAnalytics.intervalSweep(t(s, dir, "events"), gapSeconds = 1800L)
-      .orderBy(col("event_type"))
-
-  /** Spearman rank correlation (ClickHouse `rankCorr`) between value and
-    * hour-of-day per event_type: Pearson over fractional (midrank) ranks,
-    * tie handling exact via DOUBLED midranks (the mannwhitney_value
-    * discipline). Ranks are computed on the VALUE-DOMAIN marginal frames
-    * (distinct quantized values / 24 hours per type — never a row-level
-    * rank window partitioned by 5 skewed keys), broadcast back onto the
-    * (type, d, h) joint-group frame, and all five moments accumulate as
-    * exact decimals; the closing ρ is one pinned IEEE tree over
-    * digit-string doubles, mirrored verbatim in SQL. One corpus shuffle
-    * (the joint groupBy); everything after is value-domain-sized. */
-  private def spearmanValueHour(s: SparkSession, dir: String): DataFrame = {
-    val dv = col("value").cast("string").cast("decimal(12,2)")
-    def d2d(c: Column) = c.cast("string").cast("double")
-    def dec(c: Column) = c.cast("decimal(18,0)")
-    val grp = t(s, dir, "events")
-      .select(col("event_type"), dv.as("d"), hour(col("ts")).cast("long").as("h"))
-      .groupBy(col("event_type"), col("d"), col("h"))
-      .agg(count(lit(1)).as("cnt"))
-    val wV = Window.partitionBy(col("event_type")).orderBy(col("d"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val vRanks = grp.groupBy(col("event_type"), col("d"))
-      .agg(sum(col("cnt")).as("vc"))
-      .withColumn("rx2",
-        coalesce(sum(col("vc")).over(wV), lit(0L)) * 2 + col("vc") + 1)
-      .select(col("event_type"), col("d"), col("rx2"))
-    val wH = Window.partitionBy(col("event_type")).orderBy(col("h"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val hRanks = grp.groupBy(col("event_type"), col("h"))
-      .agg(sum(col("cnt")).as("hc"))
-      .withColumn("ry2",
-        coalesce(sum(col("hc")).over(wH), lit(0L)) * 2 + col("hc") + 1)
-      .select(col("event_type"), col("h"), col("ry2"))
-    val moms = grp.join(broadcast(vRanks), Seq("event_type", "d"))
-      .join(broadcast(hRanks), Seq("event_type", "h"))
-      .groupBy(col("event_type"))
-      .agg(sum(col("cnt")).as("n"),
-           sum(dec(col("cnt")) * dec(col("rx2"))).as("sx"),
-           sum(dec(col("cnt")) * dec(col("ry2"))).as("sy"),
-           sum(dec(col("cnt")) * (dec(col("rx2")) * dec(col("ry2")))).as("sxy"),
-           sum(dec(col("cnt")) * (dec(col("rx2")) * dec(col("rx2")))).as("sxx"),
-           sum(dec(col("cnt")) * (dec(col("ry2")) * dec(col("ry2")))).as("syy"))
-    val nD = col("n").cast("double")
-    val cov = nD * d2d(col("sxy")) - d2d(col("sx")) * d2d(col("sy"))
-    val vx = nD * d2d(col("sxx")) - d2d(col("sx")) * d2d(col("sx"))
-    val vy = nD * d2d(col("syy")) - d2d(col("sy")) * d2d(col("sy"))
-    moms.select(col("event_type"), col("n"),
-                (cov / (sqrt(vx) * sqrt(vy))).as("rank_corr"))
-      .orderBy("event_type")
-  }
-
-  /** Shannon entropy (ClickHouse `entropy`) of the quantized value
-    * distribution per event_type: H = log2(n) − (Σ c·log2 c)/n over the
-    * tie-group counts. The float sum over log2 terms is ORDER-SENSITIVE,
-    * so it folds over the COUNT-DOMAIN frame — (count value, multiplicity)
-    * pairs, bounded far below the tie-group count — in pinned ascending-c
-    * order (the cramers_v / anova list-fold discipline), and the entropy
-    * is rounded to 9 decimals on both sides: libm log2 is not guaranteed
-    * correctly rounded across engines, and the ≤ulp-scale discrepancy must
-    * not hash-flip the compare (the est_ok-envelope stance, applied to a
-    * transcendental). All integer inputs (n, distinct values) are exact. */
-  private def entropyValue(s: SparkSession, dir: String): DataFrame = {
-    val dv = col("value").cast("string").cast("decimal(12,2)")
-    val ties = t(s, dir, "events")
-      .select(col("event_type"), dv.as("d"))
-      .groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("c"))
-    val byCount = ties.groupBy(col("event_type"), col("c"))
-      .agg(count(lit(1)).as("m"))
-    val g = byCount.groupBy(col("event_type"))
-      .agg(sum(col("c") * col("m")).as("n"),
-           sum(col("m")).as("n_distinct"),
-           aggregate(array_sort(collect_list(struct(col("c"), col("m")))),
-             lit(0.0), (acc, x) =>
-               acc + x.getField("m").cast("double") *
-                 x.getField("c").cast("double") * log2(x.getField("c")))
-             .as("clog"))
-    val nD = col("n").cast("double")
-    g.select(col("event_type"), col("n"), col("n_distinct"),
-             round(log2(nD) - col("clog") / nD, 9).as("entropy_bits"))
-      .orderBy("event_type")
-  }
-
-  /** ClickHouse `simpleLinearRegression(x, y)`: least-squares slope and
-    * intercept of value against hour-of-day per type — the corr_value_hour
-    * frame, solved in closed form. Sums exact in decimal; the solve is one
-    * pinned IEEE tree mirrored in SQL (bit-identical). */
-  private def linregValueHour(s: SparkSession, dir: String): DataFrame = {
-    val dx = col("value").cast("string").cast("decimal(12,2)")
-    def d2d(c: Column) = c.cast("string").cast("double")
-    val g = t(s, dir, "events")
-      .select(col("event_type"), hour(col("ts")).cast("long").as("x"), dx.as("y"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-           sum(col("x")).cast("double").as("sx"),           // integer-exact
-           d2d(sum(col("y"))).as("sy"),
-           sum(col("x") * col("x")).cast("double").as("sxx"),
-           d2d(sum(col("y") * col("x").cast("decimal(4,0)"))).as("sxy"))
-    val nD = col("n").cast("double")
-    val k = (nD * col("sxy") - col("sx") * col("sy")) /
-            (nD * col("sxx") - col("sx") * col("sx"))
-    val b = (col("sy") - k * col("sx")) / nD
-    g.select(col("event_type"), col("n"), k.as("slope"), b.as("intercept"))
-      .orderBy("event_type")
-  }
-
-  /** Kolmogorov-Smirnov two-sample test (ClickHouse
-    * `kolmogorovSmirnovTest`): sup-distance between the even/odd cohort
-    * ECDFs of value per event_type. The statistic's NUMERATOR is exact:
-    * D = max|F_a − F_b| = max|cumA·nb − cumB·na| / (na·nb), and the max
-    * runs over INTEGERS — order-free, engine-exact. Same tie-group frame
-    * as mannwhitney_value (cum sums over distinct quantized values, never
-    * a row-level window); one divide + the 5% critical-value tree are the
-    * only floats, pinned verbatim in SQL. Long products are exact to
-    * ~3·10⁹ rows per type (the MWU bound). */
-  private def ksTestValue(s: SparkSession, dir: String): DataFrame = {
-    val dv = col("value").cast("string").cast("decimal(12,2)")
-    val ev = t(s, dir, "events")
-      .select(col("event_type"), (pmod(col("user_id"), lit(2)) === 0).as("a"),
-              dv.as("d"))
-    val g = ev.groupBy(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("cnt"), count(when(col("a"), 1)).as("cnt_a"))
-    val byType = Window.partitionBy(col("event_type"))
-    val wCum = byType.orderBy(col("d"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = g
-      .withColumn("ca", sum(col("cnt_a")).over(wCum))
-      .withColumn("ct", sum(col("cnt")).over(wCum))
-      .withColumn("na", sum(col("cnt_a")).over(byType))
-      .withColumn("nt", sum(col("cnt")).over(byType))
-    val cb = col("ct") - col("ca")
-    val nb = col("nt") - col("na")
-    val stats = cum
-      .select(col("event_type"), col("na"), nb.as("nb"),
-              abs(col("ca") * nb - cb * col("na")).as("dn"))
-      .groupBy(col("event_type"))
-      .agg(max(col("dn")).as("d_num"), min(col("na")).as("n_a"),
-           min(col("nb")).as("n_b"))
-    val naD = col("n_a").cast("double"); val nbD = col("n_b").cast("double")
-    val d = col("d_num").cast("double") / (naD * nbD)
-    val crit = lit(1.358) * sqrt((naD + nbD) / (naD * nbD)) // α = 0.05
-    stats.select(col("event_type"), col("n_a"), col("n_b"), col("d_num"),
-                 d.as("d_stat"), (d > crit).as("reject_same_dist"))
-      .orderBy("event_type")
-  }
-
-  /** Equi-width histogram (ClickHouse `histogram`-style, fixed 10 bins over
-    * the observed [min, max] per type). Bin math is one pinned IEEE
-    * sequence over exact bounds; the top edge folds into the last bin. */
-  private def histValue(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").select(col("event_type"), col("value"))
-    val bounds = ev.groupBy(col("event_type"))
-      .agg(min(col("value")).as("lo"), max(col("value")).as("hi"))
-    ev.join(broadcast(bounds), Seq("event_type"))
-      .withColumn("bin",
-        when(col("hi") === col("lo"), lit(0L))
-          .otherwise(least(floor((col("value") - col("lo")) * lit(10.0)
-                             / (col("hi") - col("lo"))).cast("long"), lit(9L))))
-      .groupBy(col("event_type"), col("bin"))
-      .agg(count(lit(1)).as("n"), min(col("lo")).as("lo"), min(col("hi")).as("hi"),
-           dsum(col("value")).as("sum_value"))
-      .orderBy("event_type", "bin")
-  }
-
-  /** Pipeline composition: quality-gate the corpus, then aggregate — the
-    * filter predicates reuse the text metrics the oracle recomputes in SQL. */
-  private def docsFilteredStats(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .filter(TextAnalysis.stopwordRatio(col("text")) >= 0.05 &&
-              TextAnalysis.tokenCount(col("text")) >= 20)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy("lang")
-
-  /** Gap-based batch sessionization → per-user session stats. */
-  private def sessionsStats(s: SparkSession, dir: String): DataFrame = {
-    val sess = EventAnalytics.sessionize(t(s, dir, "events"), gapSeconds = 3600)
-    EventAnalytics.sessionStats(sess)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_sessions"),
-           max(col("n_events")).as("max_session_events"),
-           sum(col("duration_s")).as("total_duration_s"))
-      .orderBy("user_id")
-  }
-
-  private val FunnelSteps = Seq("click", "purchase", "signup")
-  private val FunnelWindowS = 3L * 86400L
-
-  /** ClickHouse windowFunnel: deepest step chain within 3 days, per user. */
-  private def funnelLevels(s: SparkSession, dir: String): DataFrame =
-    EventAnalytics.windowFunnel(t(s, dir, "events"), FunnelSteps, FunnelWindowS)
-      .orderBy("user_id")
-
-  /** ClickHouse sequenceMatch: did the user ever click → purchase → signup
-    * in order (any gaps, unbounded window)? */
-  private def sequenceMatchUsers(s: SparkSession, dir: String): DataFrame =
-    EventAnalytics.sequenceMatch(t(s, dir, "events"), FunnelSteps)
-      .orderBy("user_id")
-
-  /** ClickHouse sequenceCount: how many DISJOINT click → purchase → signup
-    * completions per user ([[EventAnalytics.sequenceCount]]); the oracle
-    * replays the greedy automaton with a recursive CTE over the same
-    * (µs-total) event order. */
-  /** Event transition matrix (the Markov-flow / Sankey primitive next to
-    * the funnel family): corpus-wide counts of consecutive event-type
-    * pairs in each user's (ts, event_id)-ordered stream, plus how many
-    * DISTINCT users exhibit each transition. The distinct-user count is a
-    * two-level aggregate (per-(pair, user) counts, then sum/count), never
-    * a mixed distinct-agg Expand over the event-sized frame (the r13
-    * lesson). The per-user lag window partitions on the HIGH-cardinality
-    * user key — the normal per-entity window, not the skewed-low-card
-    * class. All integer; the oracle replays the identical lag + two-level
-    * rollup. */
-  private def eventTransitions(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val pairs = t(s, dir, "events")
-      .select(col("user_id"), col("event_type").as("to_type"),
-              lag(col("event_type"), 1).over(w).as("from_type"))
-      .filter(col("from_type").isNotNull)
-      .groupBy(col("from_type"), col("to_type"), col("user_id"))
-      .agg(count(lit(1)).as("c"))
-    pairs.groupBy(col("from_type"), col("to_type"))
-      .agg(sum(col("c")).as("n_transitions"),
-           count(lit(1)).as("n_users"))
-      .orderBy("from_type", "to_type")
-  }
-
-  /** ClickHouse `sequenceNextNode` (forward, first_match): per user, the
-    * event type following the first click→purchase chain in the full
-    * µs-ordered stream — completes the funnel family next to windowFunnel
-    * (+3 strict modes), sequenceMatch and sequenceCount. The oracle
-    * replays the scan over the same ordered list with DuckDB list
-    * lambdas. */
-  private def seqNextNode(s: SparkSession, dir: String): DataFrame =
-    EventAnalytics.sequenceNextNode(t(s, dir, "events"), Seq("click", "purchase"))
-      .orderBy("user_id")
-
-  private def sequenceCountUsers(s: SparkSession, dir: String): DataFrame =
-    EventAnalytics.sequenceCount(t(s, dir, "events"), FunnelSteps)
-      .orderBy("user_id")
-
-  /** windowFunnel `strict_order` (ClickHouse flag: "don't allow
-    * interventions of other events" — A→B→D→C stops at D, level 2): the
-    * chain must be CONSECUTIVE in the user's full event stream, so every
-    * event rides the DP (non-funnel types as step 0) on µs-total times. */
-  private def funnelStrictOrder(s: SparkSession, dir: String): DataFrame =
-    EventAnalytics.windowFunnel(t(s, dir, "events"), FunnelSteps, FunnelWindowS,
-        mode = "strict_order")
-      .orderBy("user_id")
-
-  /** windowFunnel `strict_dedup` (ClickHouse flag: "a repeating event
-    * interrupts"): a valid chain's span holds exactly one event of each
-    * matched step — see FunnelLevelExpr's declarative definition. */
-  private def funnelStrictDedup(s: SparkSession, dir: String): DataFrame =
-    EventAnalytics.windowFunnel(t(s, dir, "events"), FunnelSteps, FunnelWindowS,
-        mode = "strict_dedup")
-      .orderBy("user_id")
-
-  /** windowFunnel `strict_increase` (ClickHouse flag: "apply conditions
-    * only to events with strictly increasing timestamps"): the default
-    * mode's semantics and SECOND granularity, but tied timestamps can no
-    * longer chain — observable exactly where second-floored times tie. */
-  private def funnelStrictIncrease(s: SparkSession, dir: String): DataFrame =
-    EventAnalytics.windowFunnel(t(s, dir, "events"), FunnelSteps, FunnelWindowS,
-        mode = "strict_increase")
-      .orderBy("user_id")
-
-  /** ReplacingMergeTree PHYSICAL collapse through the oracle gate
-    * (`OPTIMIZE TABLE … FINAL`, the background merge the reference's
-    * `Engine = ReplacingMergeTree()` at 1-naive.test.ts:27 relies on): a
-    * 3-slice append-only segment log — per (user, time-tercile of clicks):
-    * slice click count + a threshold boolean, partitioned by slice — is
-    * physically collapsed to each user's newest row via
-    * [[graft.sources.Mutations.collapseLatest]], then read back FLAT (no
-    * read-time argMax — the collapse already did the merge). The oracle
-    * recomputes the log and picks max-slice rows; MutationsSpec pins the
-    * byte-identity of untouched partitions and idempotency. */
-  // click-stream time bounds: corpus constants (the domainCapFor caching
-  // class) — probing them per execution billed one driver job to every
-  // timed run of the collapse lifecycle; warmed at ingest
-  private def collapseBoundsFor(s: SparkSession, dir: String): (Long, Long) =
-    Artifacts.value(s, dir, "collapse_bounds", "events") {
-      val b = t(s, dir, "events").filter(col("event_type") === "click")
-        .agg(min(unix_micros(col("ts"))).as("lo"),
-             max(unix_micros(col("ts"))).as("hi")).head()
-      (b.getLong(0), b.getLong(1))
-    }
-
-  private def optimizeFinalCollapse(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").filter(col("event_type") === "click")
-      .select(col("user_id"), unix_micros(col("ts")).as("t"))
-    val (lo, hi) = collapseBoundsFor(s, dir)
-    val span = hi - lo + 1 // integer tercile arithmetic — exact in both engines
-    val log = ev
-      .withColumn("slice", (expr(s"(t - ${lo}L) * 3 DIV ${span}L") + 1).cast("int"))
-      .groupBy(col("user_id"), col("slice"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("value", col("n") >= lit(4L))
-      .select("user_id", "value", "n", "slice")
-    val scratch = java.nio.file.Files.createTempDirectory("graft_collapse").toString
-    log.write.mode("overwrite").partitionBy("slice").parquet(scratch)
-    graft.sources.Mutations.collapseLatest(s, scratch, Seq("user_id"),
-      ordCol = "slice", partitionCol = "slice", sortCols = Seq("user_id"))
-    val out = s.read.parquet(scratch)
-      .select(col("user_id"), col("value"), col("n"),
-              col("slice").cast("int").as("slice"))
-      .localCheckpoint() // materialize before the scratch tree is reaped
-    deleteTreeAsync(scratch)
-    out.orderBy("user_id")
-  }
-
-  /** CDC keyed merge-apply through the oracle gate: a per-user click
-    * profile table (partitioned by cohort) takes one compacted change
-    * batch — updates for purchasers (corrected totals), deletes for a
-    * deterministic no-purchase slice, inserts of offset synthetic users —
-    * in one [[graft.sources.Mutations.mergeApply]] pass, then reads back.
-    * The oracle replays base − changed-keys ∪ upserts declaratively;
-    * MutationsSpec pins minimal partition touch and idempotent re-apply. */
-  /** The CDC demos' shared DuckDB oracle: base minus changed keys, plus the
-    * update/insert payloads. The batch merge lands exactly this table; the
-    * streaming twin is DEFINED to land the same one (disjoint-key batches +
-    * per-batch compaction), so both map here. */
-  private def cdcOracleSql: String = {
-    // data-dependent literal (the bpe_merges pattern — Verify runs every
-    // query before dumping SQL): the insert-key offset the engine actually
-    // derived. The untrained fallback is an IMPOSSIBLE sentinel so a dump
-    // produced without the query having run mismatches loudly instead of
-    // vacuously passing on today's files.
-    val off = Artifacts.last[Long]("cdc_offset").getOrElse(-1L)
-    s"""WITH base AS (SELECT user_id, count(*) AS n_clicks,
-                            CAST(user_id % 10 AS INT) AS cohort
-                     FROM events WHERE event_type = 'click' GROUP BY 1),
-       p AS (SELECT user_id, count(*) AS n_p FROM events
-             WHERE event_type = 'purchase' GROUP BY 1),
-       upd AS (SELECT b.user_id, b.n_clicks + p.n_p AS n_clicks, b.cohort
-               FROM base b JOIN p ON b.user_id = p.user_id),
-       del AS (SELECT user_id FROM base WHERE user_id % 7 = 3
-                 AND user_id NOT IN (SELECT user_id FROM p)),
-       ins AS (SELECT user_id + $off AS user_id, 1 AS n_clicks,
-                      CAST((user_id + $off) % 10 AS INT) AS cohort
-               FROM base WHERE user_id % 9 = 4),
-       fin AS (SELECT * FROM base
-               WHERE user_id NOT IN (SELECT user_id FROM upd)
-                 AND user_id NOT IN (SELECT user_id FROM del)
-               UNION ALL SELECT * FROM upd
-               UNION ALL SELECT * FROM ins)
-       SELECT user_id, CAST(n_clicks AS BIGINT) AS n_clicks, cohort
-       FROM fin ORDER BY user_id"""
-  }
-
-  /** Insert-key offset for the CDC demos: the next power of ten ≥ 10^6
-    * strictly above the observed max user_id, so synthetic insert keys can
-    * never collide with real ones at any scale factor or testdata regen —
-    * a collision would either trip mergeApply's one-row-per-key require
-    * (insert key == update/delete key) or silently diverge from the
-    * oracle's UNION ALL (one upserted row vs two). One tiny job over the
-    * already-checkpointed stats frame; cached for the data-dependent
-    * oracle above. */
-  private def cdcOffset(s: SparkSession, dir: String, stats: DataFrame): Long =
-    Artifacts.value(s, dir, "cdc_offset", "events") {
-      val maxId = stats.agg(max(col("user_id")).cast("long")).head().getLong(0)
-      var o = 1000000L
-      while (o <= maxId) o *= 10
-      o
-    }
-
-  /** Shared CDC-demo derivation: ONE events pass feeds base, updates,
-    * deletes, and inserts (the consumers would otherwise each re-scan +
-    * re-shuffle events). Both the batch query and its streaming twin build
-    * from these, so they stay in lockstep with the one oracle.
-    * MATERIALIZED per (session, dir) like [[docsSharded]]: the per-user
-    * profile is the PERSISTED table a real CDC flow lands changes onto —
-    * rebuilding it per run is fixture cost, not operator cost. The scratch
-    * WRITES and the merge itself stay in the timed path. */
-  private def cdcStats(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, dir, "cdc_stats", "events") {
-      t(s, dir, "events").filter(col("event_type").isin("click", "purchase"))
-        .groupBy("user_id")
-        .agg(count(when(col("event_type") === "click", 1)).as("n_clicks"),
-             count(when(col("event_type") === "purchase", 1)).as("n_p"))
-    }
-
-  private def cdcBase(stats: DataFrame): DataFrame =
-    stats.filter(col("n_clicks") > 0)
-      .select(col("user_id"), col("n_clicks"),
-              pmod(col("user_id"), lit(10)).cast("int").as("cohort"))
-
-  private def cdcChanges(s: SparkSession, dir: String,
-                         stats: DataFrame): DataFrame = {
-    val base = cdcBase(stats)
-    val purch = stats.filter(col("n_p") > 0).select(col("user_id"), col("n_p"))
-    val upd = base.join(purch, "user_id")
-      .select(col("user_id"), (col("n_clicks") + col("n_p")).as("n_clicks"),
-              col("cohort"), lit("U").as("op"))
-    val del = base.join(purch, Seq("user_id"), "left_anti")
-      .filter(pmod(col("user_id"), lit(7)) === 3)
-      .select(col("user_id"), col("n_clicks"), col("cohort"), lit("D").as("op"))
-    val off = cdcOffset(s, dir, stats)
-    val ins = base.filter(pmod(col("user_id"), lit(9)) === 4)
-      .select((col("user_id") + off).as("user_id"),
-              lit(1L).as("n_clicks"),
-              pmod(col("user_id") + off, lit(10)).cast("int").as("cohort"),
-              lit("I").as("op"))
-    upd.unionByName(del).unionByName(ins)
-  }
-
-  /** Pristine CDC landing-table layout (per session, sfDir): the table a
-    * real CDC flow mutates exists before any batch arrives, so building it
-    * is ingest cost — runs link it into scratch and mutate the links.
-    * coalesce: 2 writer tasks × 10 cohort dirs beats 32 × 10 tiny files
-    * (every later scan and overwrite lists them all). */
-  private def cdcBaseTree(s: SparkSession, dir: String): String =
-    Artifacts.tree(s, dir, "cdc_base", "events") { p =>
-      cdcBase(cdcStats(s, dir)).coalesce(2)
-        .write.mode("overwrite").partitionBy("cohort").parquet(p)
-    }
-
-  /** Pristine CDC source feed (two disjoint-key shard files + the decoy-'D'
-    * rows): what the upstream transport already wrote — fixture, not
-    * operator cost. */
-  private def cdcFeedTree(s: SparkSession, dir: String): String =
-    Artifacts.tree(s, dir, "cdc_feed", "events") { p =>
-      val changes = cdcChanges(s, dir, cdcStats(s, dir))
-      val feed = changes.withColumn("seq", lit(2L))
-        .unionByName(changes.filter(col("op") === "U")
-          .withColumn("op", lit("D")).withColumn("seq", lit(1L)))
-        .withColumn("shard", pmod(col("user_id"), lit(2)).cast("int"))
-      feed.repartition(2, col("shard")) // exactly one file per shard dir
-        .write.mode("overwrite").partitionBy("shard").parquet(p)
-    }
-
-  private def cdcMergeApply(s: SparkSession, dir: String): DataFrame = {
-    val stats = cdcStats(s, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_cdc").toString
-    linkTree(cdcBaseTree(s, dir), scratch) // driver-ms landing-table copy
-    graft.sources.Mutations.mergeApply(s, scratch, cdcChanges(s, dir, stats),
-      Seq("user_id"), opCol = "op", partitionCol = "cohort",
-      sortCols = Seq("user_id"))
-    val out = s.read.parquet(scratch)
-      .select(col("user_id"), col("n_clicks"),
-              col("cohort").cast("int").as("cohort"))
-      .localCheckpoint() // materialize before the scratch tree is reaped
-    deleteTreeAsync(scratch)
-    out.orderBy("user_id")
-  }
-
-  /** The LIVE CDC landing ([[graft.streaming.StreamingCdc]]) through the
-    * same oracle as [[cdcMergeApply]]: the change set streams in as two
-    * disjoint-key micro-batch files (sequential application of disjoint
-    * keys == the one-shot merge), and every 'U' key carries an
-    * earlier-seq decoy 'D' in the SAME batch, so the per-batch
-    * highest-seq-wins compaction is exercised through the oracle gate —
-    * a broken compaction deletes those users and hash-mismatches. */
-  private def cdcMergeStream(s: SparkSession, dir: String): DataFrame =
-    withStreamScope(s, "graft_cdc_stream") { tmp =>
-      // landing table + source feed are pristine per-(session,dir) layouts
-      // hard-linked into this run's scratch (driver-side ms) — the two
-      // fixture WRITE jobs that used to open every run now happen once,
-      // at ingest (warmIngestArtifacts), like cdcStats itself
-      linkTree(cdcBaseTree(s, dir), s"$tmp/table")
-      linkTree(cdcFeedTree(s, dir), s"$tmp/src")
-      val stream = s.readStream.schema(s.read.parquet(s"$tmp/src").schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src")
-      val q = graft.streaming.StreamingCdc.foreachBatchMergeApply(
-          stream, s"$tmp/table", Seq("user_id"), opCol = "op", seqCol = "seq",
-          partitionCol = "cohort", sortCols = Seq("user_id"),
-          trigger = Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/table")
-        .select(col("user_id"), col("n_clicks"),
-                col("cohort").cast("int").as("cohort"))
-        .orderBy("user_id")
-    }
-
-  /** ClickHouse retention: weekly cohort counts anchored on week 1. */
-  private def cohortRetention(s: SparkSession, dir: String): DataFrame = {
-    def week(i: Int): Column = {
-      val lo = lit(s"2024-01-${"%02d".format(1 + 7 * i)}").cast("timestamp")
-      val hi = lit(s"2024-01-${"%02d".format(8 + 7 * i)}").cast("timestamp")
-      col("ts") >= lo && col("ts") < hi
-    }
-    EventAnalytics.retention(t(s, dir, "events"), (0 until 4).map(week))
-  }
-
-  /** Keyed map aggregation (ClickHouse `sumMap`/`minMap`/`maxMap`,
-    * [[graft.functions.MapAgg]]): per 20-wide user cohort, fold event
-    * observations into key→value maps — count, min, max and sum of the
-    * integerized measure per event_type. The maps ride the single-shuffle
-    * TypedImperativeAggregate path (map-side partial maps shuffle, never
-    * row-expanded entries — the explode + groupBy(grp, k) + re-collect
-    * alternative pays two shuffles of exploded rows). Output digests the
-    * KEY-SORTED entries (the comparator takes scalars only); DuckDB
-    * replays each map as `string_agg(k || '=' || v, ',' ORDER BY k)`. */
-  /** Key-sorted map → md5 over "k=v" entries (MapAgg emits entries sorted,
-    * so the digest is deterministic; DuckDB replays it as
-    * `string_agg(k || '=' || v, ',' ORDER BY k)`). */
-  private def mapDigest(m: Column): Column =
-    md5(concat_ws(",", transform(map_entries(m),
-      e => concat(e("key"), lit("="), e("value").cast("string")))))
-
-  private def mapAggEventsBase(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .select(pmod(col("user_id"), lit(20)).cast("long").as("grp"),
-              col("event_type").as("k"),
-              floor(col("value") * 1000).cast("long").as("v"))
-
-  private def mapAggEvents(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.MapAgg
-    mapAggEventsBase(s, dir).groupBy("grp")
-      .agg(MapAgg.sumMap(col("k"), lit(1L)).as("cm"),
-           MapAgg.minMap(col("k"), col("v")).as("nm"),
-           MapAgg.maxMap(col("k"), col("v")).as("xm"),
-           MapAgg.sumMap(col("k"), col("v")).as("sm"))
-      .select(col("grp"), size(col("cm")).cast("long").as("n_keys"),
-              mapDigest(col("cm")).as("count_map"),
-              mapDigest(col("nm")).as("min_map"),
-              mapDigest(col("xm")).as("max_map"),
-              mapDigest(col("sm")).as("sum_map"))
-      .orderBy("grp")
-  }
-
-  /** The persisted-STATE form of the map aggregation family
-    * (`sumMapState`/`sumMapMerge`, the AggregatingMergeTree S3 discipline
-    * applied to maps, exactly like uniqState/uniqMerge for HLL): per
-    * (grp, half-of-events) partial map states — opaque BinaryType blobs a
-    * state table would persist per micro-batch — re-merged per grp.
-    * Output and oracle are map_agg_events's: merge-of-partials == one-shot
-    * is the invariant the gate checks; a broken state serialization or a
-    * non-commutative merge hash-mismatches. */
-  private def mapAggStateMerge(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.MapAgg
-    val states = mapAggEventsBase(s, dir)
-      .withColumn("half", pmod(col("v"), lit(2)))
-      .groupBy(col("grp"), col("half"))
-      .agg(MapAgg.sumMapState(col("k"), lit(1L)).as("cs"),
-           MapAgg.minMapState(col("k"), col("v")).as("ns"),
-           MapAgg.maxMapState(col("k"), col("v")).as("xs"),
-           MapAgg.sumMapState(col("k"), col("v")).as("ss"))
-    states.groupBy("grp")
-      .agg(MapAgg.sumMapMerge(col("cs")).as("cm"),
-           MapAgg.minMapMerge(col("ns")).as("nm"),
-           MapAgg.maxMapMerge(col("xs")).as("xm"),
-           MapAgg.sumMapMerge(col("ss")).as("sm"))
-      .select(col("grp"), size(col("cm")).cast("long").as("n_keys"),
-              mapDigest(col("cm")).as("count_map"),
-              mapDigest(col("nm")).as("min_map"),
-              mapDigest(col("xm")).as("max_map"),
-              mapDigest(col("sm")).as("sum_map"))
-      .orderBy("grp")
-  }
-
-  /** ClickHouse `sumMapFiltered`/`minMapFiltered`
-    * ([[graft.functions.MapAgg.sumMapFiltered]]): the map aggregation
-    * restricted to a key keep-list, applied at UPDATE time — dropped keys
-    * never enter a buffer or the shuffle (NOT a post-agg map_filter, which
-    * would carry every key through the exchange). Same cohort frame and
-    * digest contract as `map_agg_events`; DuckDB replays the filter as
-    * `WHERE k IN (…)`. */
-  private def mapAggFiltered(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.MapAgg
-    val keep = Seq("click", "purchase")
-    mapAggEventsBase(s, dir).groupBy("grp")
-      .agg(MapAgg.sumMapFiltered(col("k"), lit(1L), keep).as("cm"),
-           MapAgg.minMapFiltered(col("k"), col("v"), keep).as("nm"),
-           MapAgg.maxMapFiltered(col("k"), col("v"), keep).as("xm"),
-           MapAgg.sumMapFiltered(col("k"), col("v"), keep).as("sm"))
-      .select(col("grp"), size(col("cm")).cast("long").as("n_keys"),
-              mapDigest(col("cm")).as("count_map"),
-              mapDigest(col("nm")).as("min_map"),
-              mapDigest(col("xm")).as("max_map"),
-              mapDigest(col("sm")).as("sum_map"))
-      .orderBy("grp")
-  }
-
-  /** ClickHouse `uniqUpTo(N)(x)` through the oracle gate
-    * ([[graft.functions.Sketches.uniqUpTo]], hard-capped N+1-value state):
-    * per event_type — a domain wider than N (sentinel regime, 7 values vs
-    * N=5 → 6), a domain inside N (exact regime, 4 values → 4), and a
-    * string-child lane over the props payload (capped). DuckDB replays all
-    * three as `least(count(DISTINCT …), N+1)`. */
-  private def uniqUpToEvents(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events").groupBy(col("event_type"))
-      .agg(Sketches.uniqUpTo(pmod(col("user_id"), lit(7)), 5).as("up_capped"),
-           Sketches.uniqUpTo(pmod(col("user_id"), lit(4)), 5).as("up_exact"),
-           Sketches.uniqUpTo(col("props"), 12).as("up_props"))
-      .orderBy("event_type")
-
-  /** The mojibake plant/repair pattern set shared by the `fix_mojibake`
-    * query and its generated oracle: (ASCII source to replace, repaired
-    * non-ASCII form). The GARBLED literals are derived — never hand-
-    * transcribed — via [[graft.functions.FixMojibakeExpr.garble]], the
-    * exact corruption inverse of the repair. Covers latin-1-range accents
-    * (é, ö), cp1252 specials (’ U+2019, € U+20AC — the 0x80-0x9F block a
-    * plain latin-1 repair would miss). */
-  private val MojibakePats = Seq(
-    "the" -> "thé", "of" -> "öf",
-    "was" -> "w’s", "to" -> "t€o")
-
-  /** Encoding repair (ftfy-lite, [[graft.functions.FixMojibakeExpr]])
-    * through the oracle gate: ASCII-only docs (bytes == chars, so the
-    * plant is the ONLY non-ASCII) get mojibake planted at single and
-    * double encoding depth, then repaired by the native expression; the
-    * oracle replays the repair declaratively as a replace-chain of the
-    * FIXED forms. A broken repair — wrong cp1252 table, missed double
-    * encoding, over-eager rewrite of clean text — hash-mismatches. */
-  private def fixMojibakeQ(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.{FixMojibakeExpr, NativeExprs}
-    def plant(depth: Int): Column =
-      MojibakePats.foldLeft(col("text")) { case (c, (src, fixedForm)) =>
-        val g = (1 to depth).foldLeft(fixedForm)((x, _) => FixMojibakeExpr.garble(x))
-        replace(c, lit(src), lit(g))
-      }
-    t(s, dir, "documents")
-      .filter(length(col("text")) === octet_length(col("text")))
-      .withColumn("g1", plant(1)).withColumn("g2", plant(2))
-      .withColumn("f1", NativeExprs.fixMojibake(col("g1")))
-      .withColumn("f2", NativeExprs.fixMojibake(col("g2")))
-      .select(col("doc_id"),
-              length(col("f1")).cast("long").as("n_chars"),
-              (col("f1") =!= col("g1")).as("was_garbled"),
-              md5(col("f1")).as("fixed1_md5"),
-              md5(col("f2")).as("fixed2_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** HTML boilerplate extraction ([[graft.operators.HtmlExtract]] /
-    * [[graft.functions.HtmlExtractExpr]]) through the oracle gate, via the
-    * plant-inverse discipline: each document's (canonicalized) text is
-    * wrapped in a deterministic web-page template — head/title, style +
-    * script raw-text elements (one containing a fake closing tag and a bare
-    * `>`), header/nav/footer boilerplate, an HTML comment, a quoted-`>`
-    * attribute, the content split across two `<p>`s, a LINK-DENSITY
-    * borderline block whose plain-word count is doc_id % 6 against a
-    * 3-link-word anchor (kept iff `2·3 ≤ words`, i.e. doc_id % 6 ≥ 3), an
-    * entity gauntlet (named, numeric dec/hex, unknown), a list, and a
-    * below-min-words block — then extracted by the native expression. The
-    * oracle replays the rule outcomes declaratively from the raw text:
-    * which blocks survive is a closed-form function of (text, doc_id).
-    * A broken tag scanner, entity decoder, density rule, or container rule
-    * hash-mismatches. */
-  private def htmlExtractQ(s: SparkSession, dir: String): DataFrame = {
-    // canonical base: identity on today's corpus (lint-checked), keeps the
-    // plant well-formed under any future regen's charset drift
-    val base = trim(regexp_replace(
-      regexp_replace(lower(col("text")), "[^a-z ]+", ""), " +", " "))
-    val w = split(base, " ")
-    val half = ceil(size(w) / lit(2.0)).cast("int")
-    val p1 = array_join(slice(w, lit(1), half), " ")
-    val p2 = array_join(slice(w, half + lit(1), size(w) - half), " ")
-    val wb = pmod(col("doc_id"), lit(6)).cast("int")
-    val bw = array_join(slice(w, lit(1), wb), " ")
-    val id = col("doc_id").cast("string")
-    val html = concat(
-      lit("<!DOCTYPE html><html><head><title>t "), id,
-      lit("</title><style>p { color: #000; }</style>" +
-          "<script>var x = '</nope>'; if (1 > 0) x;</script></head>" +
-          "<body><header><h1>Doc "), id, lit("</h1></header>" +
-          "<nav><a href=\"/\">home</a> <a href=\"/a\">about us</a> " +
-          "<a href=\"/c\">contact</a></nav><!-- tracking "), id,
-      lit(" --><div class=\"main\"><p>"), p1,
-      lit("</p><p data-x=\"a>b\">"), p2, lit("</p></div><p>"), bw,
-      lit(" <a href=\"#\">click here now</a></p>" +
-          "<p>a &amp; b &lt;c&gt; &quot;d&quot;&nbsp;e &bogus; &#65;&#x42;</p>" +
-          "<ul><li>alpha beta</li><li>gamma delta</li></ul><p>ok</p>" +
-          "<footer>(c) 2026 <a href=\"#\">terms</a></footer></body></html>"))
-    t(s, dir, "documents")
-      .filter(size(w) >= 4) // p1/p2 each ≥ 2 words (min-words-safe); no-op today
-      .withColumn("ex", NativeExprs.htmlExtract(html))
-      .select(col("doc_id"),
-              md5(col("ex.text")).as("extracted_md5"),
-              col("ex.n_kept").as("n_blocks_kept"),
-              col("ex.n_dropped").as("n_blocks_dropped"),
-              length(col("ex.text")).cast("long").as("n_chars_extracted"))
-      .orderBy("doc_id")
-  }
-
-  /** As-of join: each purchase event picks up the user's latest daily
-    * click-segment assignment at-or-before the purchase time. Oracled by
-    * DuckDB's native ASOF JOIN. */
-  private def asofAssignment(s: SparkSession, dir: String): DataFrame = {
-    val purchases = t(s, dir, "events")
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val assignments = dailyAssignments(s, dir)
-      .select(col("user_id"), col("assigned_at").cast("timestamp").as("assigned_ts"),
-              col("value"))
-    AsOf.joinAsOf(purchases, assignments, Seq("user_id"),
-                  leftTime = "ts", rightTime = "assigned_ts",
-                  payload = Seq("value"))
-      .select(col("event_id"), col("user_id"), col("value").as("seg_value"))
-      .orderBy("event_id")
-  }
-
-  /** FORWARD as-of with tolerance ([[AsOf.joinAsOfForward]], the `<=`
-    * direction of the ClickHouse/kdb ASOF family + pandas `merge_asof`
-    * tolerance): each purchase picks up the user's NEXT daily assignment
-    * at-or-after the purchase, nulled when it lands more than 3 days out.
-    * Oracled by DuckDB's native `ASOF LEFT JOIN` on `<=` with the
-    * tolerance replayed as a µs-exact CASE. */
-  private def asofForwardTolerance(s: SparkSession, dir: String): DataFrame = {
-    val purchases = t(s, dir, "events")
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val assignments = dailyAssignments(s, dir)
-      .select(col("user_id"), col("assigned_at").cast("timestamp").as("assigned_ts"),
-              col("value"))
-    AsOf.joinAsOfForward(purchases, assignments, Seq("user_id"),
-                         leftTime = "ts", rightTime = "assigned_ts",
-                         payload = Seq("value"),
-                         toleranceSeconds = Some(3L * 86400L))
-      .select(col("event_id"), col("user_id"),
-              col("value").as("seg_value_next"), col("matched"))
-      .orderBy("event_id")
-  }
-
-  /** BACKWARD as-of with tolerance — pandas `merge_asof`'s DEFAULT form
-    * (direction='backward', tolerance): each purchase picks up the user's
-    * latest daily assignment at-or-before the purchase, nulled when it is
-    * more than 2 days stale. Completes the ASOF matrix next to
-    * `asof_assignment` (backward, no tolerance) and
-    * `asof_forward_tolerance`. Oracled by DuckDB's native `ASOF LEFT JOIN`
-    * on `>=` with the tolerance replayed as a µs-exact CASE. */
-  private def asofBackwardTolerance(s: SparkSession, dir: String): DataFrame = {
-    val purchases = t(s, dir, "events")
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val assignments = dailyAssignments(s, dir)
-      .select(col("user_id"), col("assigned_at").cast("timestamp").as("assigned_ts"),
-              col("value"))
-    AsOf.joinAsOf(purchases, assignments, Seq("user_id"),
-                  leftTime = "ts", rightTime = "assigned_ts",
-                  payload = Seq("value"),
-                  toleranceSeconds = Some(2L * 86400L))
-      .select(col("event_id"), col("user_id"),
-              col("value").as("seg_value_prev"), col("matched"))
-      .orderBy("event_id")
-  }
-
-  /** Banded range join ([[graft.operators.RangeJoin.pointInInterval]]):
-    * overlapping per-(priority, year) order-date windows, every order joined
-    * to every window containing its date — the every-containing-interval
-    * complement of `asof_assignment`'s latest-at-or-before. Oracled by a
-    * plain inequality join in DuckDB; the Spark plan is the banded
-    * equi-join (no nested-loop node — PlanLintSpec checks). */
-  private def rangeOrdersBase(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .withColumn("o_day", unix_date(col("o_orderdate").cast("date")).cast("long"))
-
-  // eager-materialized (metadata-sized) derived interval table: the
-  // operator evaluates its interval frame once per lane/width decision,
-  // and each evaluation would otherwise re-run the full orders
-  // aggregation. Cached per (session, dir) and warmed at ingest — a
-  // derived corpus artifact, not per-execution work.
-  private def rangeJoinIntervalsFor(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, dir, "range_join_intervals", "orders") {
-      rangeOrdersBase(s, dir)
-        .groupBy(concat(col("o_orderpriority"), lit("|"),
-                        year(col("o_orderdate")).cast("string")).as("interval_id"))
-        .agg(min(col("o_day")).as("lo"), max(col("o_day")).as("hi"))
-    }
-
-  private def rangeJoinOrders(s: SparkSession, dir: String): DataFrame = {
-    val base = rangeOrdersBase(s, dir)
-    val intervals = rangeJoinIntervalsFor(s, dir)
-    RangeJoin.pointInInterval(base.select("o_orderkey", "o_totalprice", "o_day"),
-                              "o_day", intervals, "lo", "hi")
-      .groupBy(col("interval_id"), col("lo"), col("hi"))
-      .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total_price"))
-      .orderBy("interval_id")
-  }
-
-  /** Interval×interval overlap join through the oracle gate — the BATCH twin
-    * of [[graft.streaming.StatefulOps.streamStreamAttribution]]'s
-    * stream-stream interval join: per-user daily click sessions
-    * [min ts, max ts] overlap-joined to purchase sessions under the user key
-    * via the double-banded [[RangeJoin.intervalOverlap]] (both sides band,
-    * first-shared-band dedupe, long-interval straggler lanes) — a plain
-    * equi-join on (user, band), never a nested loop over the pair space. */
-  // ONE events scan builds both session tables (conditional split of the
-  // small per-(user,type,day) aggregate), eager-materialized and cached per
-  // (session, dir): the operator evaluates each side several times
-  // (band-width derivation, straggler counts, the join itself), and
-  // re-materializing billed the events agg + checkpoint job to every timed
-  // execution (the domainCapFor constant class). Warmed at ingest.
-  private def rangeSessionsFor(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, dir, "range_overlap_sessions", "events") {
-      t(s, dir, "events").filter(col("event_type").isin("click", "purchase"))
-        .groupBy(col("user_id"), col("event_type"), to_date(col("ts")).as("__day"))
-        .agg(min(unix_micros(col("ts"))).as("lo"), max(unix_micros(col("ts"))).as("hi"))
-        // 2 partitions, not 32: the operator's metadata passes (band-width
-        // percentile, straggler counts) each launch a job over this ~32k-row
-        // frame, and at 32 tiny tasks per job the scheduler overhead dwarfs
-        // the work; the overlap join re-shuffles to full width anyway
-        .coalesce(2)
-    }
-
-  private def rangeOverlapSessions(s: SparkSession, dir: String): DataFrame = {
-    val sess = rangeSessionsFor(s, dir)
-    def sessions(tpe: String, p: String) =
-      sess.filter(col("event_type") === tpe)
-        .select(col("user_id"), col("lo").as(s"${p}_lo"), col("hi").as(s"${p}_hi"))
-    RangeJoin.intervalOverlap(
-        sessions("click", "c"), "c_lo", "c_hi",
-        sessions("purchase", "p"), "p_lo", "p_hi", keys = Seq("user_id"))
-      .withColumn("overlap_us",
-        least(col("c_hi"), col("p_hi")) - greatest(col("c_lo"), col("p_lo")))
-      .orderBy("user_id", "c_lo", "p_lo", "c_hi", "p_hi")
-  }
-
-  /** Salted two-phase aggregation through the oracle gate (hot-key safety at
-    * scale; must equal the plain count). */
-  private def skewSaltedCounts(s: SparkSession, dir: String): DataFrame =
-    Skew.saltedCount(t(s, dir, "events"), Seq("event_type"))
-      .orderBy("event_type")
-
-  /** N segment definitions in one scan (conditional aggregation). */
-  private def segMulti(s: SparkSession, dir: String): DataFrame =
-    Segments.evaluateMany(t(s, dir, "events"),
-      Seq(SegmentDef("click", 12), SegmentDef("purchase", 8), SegmentDef("view", 10)))
-      .orderBy("user_id")
-
-  /** The raw events file-stream source with `ts` normalized to micros
-    * TimestampType, unit-agnostic: the stream schema types `ts` exactly as
-    * the parquet footer stores it (probed batch-side in [[Tables]]) and the
-    * same normalization as the batch path runs on top — a micros file can
-    * never be silently read as raw int64 again. */
-  private def eventsStream(s: SparkSession, dir: String,
-                           maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    var reader = s.readStream.schema(Tables.eventsRawSchema(s, dir))
-    maxFilesPerTrigger.foreach(n => reader = reader.option("maxFilesPerTrigger", n.toString))
-    // Layout-probed source path: testdata ships events.parquet as a single
-    // FILE (streamed as $dir + a name glob — the file source's basePath must
-    // be a directory, so the file cannot be the path itself), but a regen
-    // via df.write.parquet would ship a DIRECTORY of part files, which the
-    // name glob would silently match NOTHING for (zero rows, no error) —
-    // that layout streams the directory directly. Both lanes are spec-pinned
-    // in EventsTsUnitSpec.
-    val path = s"$dir/events.parquet"
-    val src =
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path)))
-        reader.parquet(path)
-      else reader.option("pathGlobFilter", "events.parquet").parquet(dir)
-    Tables.normalizeEventsTs(s, dir, src) // type + long-unit from batch probes
-  }
-
-  /** Scopes a streaming contract query: sets the nanos-as-long legacy conf
-    * for the duration of the (eagerly executed) streaming run and restores it
-    * after; hands the body a fresh temp dir (state store / sink / checkpoint)
-    * and deletes it once the result is materialized (localCheckpoint). No
-    * session conf or /tmp residue leaks into later bench queries. */
-  private def withStreamScope(s: SparkSession, prefix: String,
-                              statePartitions: Int = 2)
-                             (body: String => DataFrame): DataFrame = {
-    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-    val shufKey = "spark.sql.shuffle.partitions"
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ckptMgrKey = "spark.sql.streaming.checkpointFileManagerClass"
-    val retainKey = "spark.sql.streaming.minBatchesToRetain"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevNanos = s.conf.getOption(nanosKey)
-    val prevShuf = s.conf.getOption(shufKey)
-    val prevNoData = s.conf.getOption(noDataKey)
-    val prevCkptMgr = s.conf.getOption(ckptMgrKey)
-    val prevRetain = s.conf.getOption(retainKey)
-    val prevAqe = s.conf.getOption(aqeKey)
-    s.conf.set(nanosKey, "true")
-    // Everything under this scope is explicitly sized already — writes are
-    // coalesced from observed batch key counts, shuffles run at the scoped
-    // statePartitions — so AQE has nothing to re-plan, but it still charges
-    // a driver re-optimization pause between every pair of tiny stages
-    // (ProfileJobs: ~0.45 s of inter-job gaps in one seg_stream_equiv run,
-    // the single largest slice of the query). Streaming stateful plans
-    // disable AQE internally anyway; this extends that to the scope's batch
-    // reads/writes. A 100 TB deployment re-enables it per-pipeline where
-    // stage sizes are unknown.
-    s.conf.set(aqeKey, "false")
-    // Checkpoint-log I/O is a measured ~half of the bare AvailableNow
-    // lifecycle here (ProfileStreamFloor: 0.25 s -> 0.13 s warm): the default
-    // FileContext-based manager re-resolves a FileContext per metadata write,
-    // while the FileSystem-based one reuses the cached FileSystem handle with
-    // the same write-temp-then-rename atomicity. These checkpoints are
-    // per-run scratch (fresh dir, deleted below), so recovery-across-restart
-    // subtleties don't apply; production pipelines on object stores would
-    // pick the manager to match the store's rename semantics anyway.
-    s.conf.set(ckptMgrKey,
-      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-    // scratch checkpoints are never restarted from: retain the minimum
-    s.conf.set(retainKey, "1")
-    // v2 commit: task output renames directly into the table dir instead of
-    // task-temp -> job-temp -> final double renames. The state tables these
-    // pipelines write per micro-batch are small-file-heavy, so commit
-    // renames are a real slice of per-batch cost; v2's weaker guarantee
-    // (a failed task may leave partial files) is immaterial for per-run
-    // scratch state on a local FS, and production object-store deployments
-    // substitute a cloud committer here regardless.
-    val hconf = s.sparkContext.hadoopConfiguration
-    val committerKey = "mapreduce.fileoutputcommitter.algorithm.version"
-    val prevCommitter = Option(hconf.get(committerKey))
-    // the hadoopConfiguration is SparkContext-wide, so for the scope's
-    // duration v2 also governs the oracle-checked SINK writes, not just
-    // scratch checkpoints. That is only safe because these runs are serial
-    // local-mode with no task re-attempts (a failed task aborts the job
-    // before any read-back); assert the no-re-attempt assumptions instead
-    // of trusting them silently. A cluster deployment must instead scope
-    // the committer per-path (or use a cloud committer) — v2 under retry/
-    // speculation can leave partial files that a read-back double-counts.
-    require(!s.sparkContext.getConf.getBoolean("spark.speculation", false),
-      "withStreamScope sets fileoutputcommitter v2 on the shared hadoopConf; " +
-        "unsafe with speculative execution — scope the committer per-path instead")
-    hconf.set(committerKey, "2")
-    // state-store partition count follows shuffle.partitions at query start;
-    // per-partition checkpoint/delta files dominate the WRITE-heavy pipelines
-    // (foreachBatch state-table queries), so those scope streaming to few,
-    // fatter state partitions — but operators whose per-batch cost is per-KEY
-    // STATE COMPUTE (flatMapGroupsWithState sessionization, stream-stream
-    // join state, watermarked dedup+agg) serialize genuine work into that
-    // count (ProfileJobs: sessions_stream_closed's one batch = 2 tasks x
-    // ~450 ms), so they ask for more via `statePartitions`. A fresh
-    // checkpoint dir per run means the count never has to match an older
-    // checkpoint; on a cluster this is the operator's state-shard count.
-    s.conf.set(shufKey, statePartitions.toString)
-    // no contract query emits on event-time TIMEOUT (inner joins and
-    // update-mode aggregates emit during data batches), so the trailing
-    // no-data watermark-finalization batch is pure trigger overhead here.
-    // Operators that close state on timeout (statefulSessionize) need it ON
-    // — their specs run outside this scope with the default.
-    s.conf.set(noDataKey, "false")
-    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
-    try body(tmp).localCheckpoint(true)
-    finally {
-      prevNanos.fold(s.conf.unset(nanosKey))(v => s.conf.set(nanosKey, v))
-      prevShuf.fold(s.conf.unset(shufKey))(v => s.conf.set(shufKey, v))
-      prevNoData.fold(s.conf.unset(noDataKey))(v => s.conf.set(noDataKey, v))
-      prevCkptMgr.fold(s.conf.unset(ckptMgrKey))(v => s.conf.set(ckptMgrKey, v))
-      prevRetain.fold(s.conf.unset(retainKey))(v => s.conf.set(retainKey, v))
-      prevAqe.fold(s.conf.unset(aqeKey))(v => s.conf.set(aqeKey, v))
-      prevCommitter.fold(hconf.unset(committerKey))(v => hconf.set(committerKey, v))
-      // the result is already materialized (localCheckpoint above), so
-      // nothing reads `tmp` again — hand the walk+unlink of a few hundred
-      // checkpoint/state/sink files to the reaper thread instead of billing
-      // it to the query
-      deleteTreeAsync(tmp)
-    }
-  }
-
-  private[graft] def deleteTree(dir: String): Unit = {
-    val root = java.nio.file.Paths.get(dir)
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(root).iterator().asScala.toSeq
-      .sortBy(-_.getNameCount)
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
-  }
-
-  /** Single daemon reaper for per-run scratch trees: deletion is ordered
-    * (one queue), off the query's wall-clock, and still guaranteed best-effort
-    * at JVM exit for anything not yet drained. */
-  private val reaperQueue = new java.util.concurrent.LinkedBlockingQueue[String]()
-  // trees the daemon has take()n but not yet (or not successfully) deleted:
-  // a dir in flight at JVM exit, or one whose deletion FAILED, lands here so
-  // the shutdown-hook drain retries it — silently swallowing failures would
-  // let scratch residue accumulate across a long bench session
-  private val reaperPending =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val reaper: Thread = locally {
-    val t = new Thread(() => {
-      while (true) {
-        val dir = reaperQueue.take()
-        reaperPending.add(dir)
-        try { deleteTree(dir); reaperPending.remove(dir) } catch {
-          case _: InterruptedException => throw new InterruptedException
-          case e: Throwable => // stays in reaperPending for the exit retry
-            System.err.println(
-              s"[graft] scratch reap failed for $dir (${e.getClass.getSimpleName}); will retry at exit")
-        }
-      }
-    }, "graft-scratch-reaper")
-    t.setDaemon(true)
-    t.start()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var dir = reaperQueue.poll()
-      while (dir != null) {
-        try deleteTree(dir) catch { case _: Throwable => () }
-        dir = reaperQueue.poll()
-      }
-      reaperPending.forEach(d =>
-        try deleteTree(d) catch { case _: Throwable => () })
-    }))
-    t
-  }
-  private def deleteTreeAsync(dir: String): Unit = { reaper; reaperQueue.put(dir) }
-
-  /** End-to-end STREAMING correctness through the oracle gate: the events
-    * table is replayed through a real file-stream source into the
-    * foreachBatch persisted-state pipeline (fresh state dir per run), and the
-    * resulting segment read-back must equal the global batch aggregate the
-    * DuckDB oracle computes. Trigger.AvailableNow = the reference's
-    * "drain everything in micro-batches, then stop" loop. */
-  private def segStreamEquiv(s: SparkSession, dir: String): DataFrame =
-    withStreamScope(s, "graft_stream") { tmp =>
-      val pipe = new graft.state.MicroBatchPipeline(
-        s, ClickSeg, graft.state.StateStorePaths(s"$tmp/state"), procTimeCol = "ts")
-      val stream = eventsStream(s, dir, maxFilesPerTrigger = Some(1))
-      val q = graft.streaming.StreamingSegments.foreachBatchPipeline(
-          stream, pipe,
-          epochToTs = id => java.sql.Timestamp.valueOf(s"2030-01-01 00:00:${"%02d".format(id % 60)}"),
-          trigger = Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .start()
-      q.awaitTermination()
-      pipe.members().orderBy("user_id")
-    }
-
-  /** Stream-STATIC enrichment join — the one Structured Streaming join
-    * shape the other streaming queries don't cover: each micro-batch of the
-    * event stream joins a static broadcast dimension (user → market
-    * segment, from the customer table) before landing in the sink; the
-    * read-back aggregates the enriched sink per segment. At scale the
-    * static side is a broadcast (or pre-bucketed) dim table and the stream
-    * side never reshuffles — exactly Spark's stream-static contract. The
-    * oracle is the equivalent batch join+aggregate. */
-  private def segStreamEnrich(s: SparkSession, dir: String): DataFrame =
-    withStreamScope(s, "graft_stream_enrich") { tmp =>
-      val dim = t(s, dir, "customer")
-        .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
-      val stream = eventsStream(s, dir, maxFilesPerTrigger = Some(1))
-      val enriched = stream
-        .join(broadcast(dim), Seq("user_id"), "left")
-        .select(col("event_id"), col("user_id"), col("segment"), col("value"))
-      val q = enriched.writeStream
-        .format("parquet").option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/out")
-        .groupBy(coalesce(col("segment"), lit("<none>")).as("segment"))
-        .agg(count(lit(1)).as("n_events"),
-             count_distinct(col("user_id")).as("n_users"),
-             dsum(col("value")).as("sum_value"))
-        .orderBy("segment")
-    }
-
-  /** Change-log TTL under a LIVE stream, through the oracle gate (T9/S5 —
-    * the reference's `TTL … + interval 100 day` on the trigger table,
-    * 3-microBatch.test.ts:36-38). The segment's events are split into three
-    * source files so the drain runs three micro-batches; each batch's stamp
-    * advances one day and a 1-day retention expires the first day's
-    * change-log partition WHILE the stream is still running (inside the
-    * last batch's foreachBatch, before the drain finishes). The segment
-    * read-back must still equal the global batch aggregate: the merge pass
-    * only reads the current batch's change-log partition, so aging out old
-    * trigger rows is invisible to results (exactly why ClickHouse can TTL
-    * this table). The StateAndStreamingSpec MemoryStream test pins the
-    * partitions actually dropped across 5 batches; this query asserts
-    * dropping them changed nothing. */
-  /** The retention demo's 2-shard replay source — one file per shard dir so
-    * the drain runs exactly two micro-batches. The SOURCE LAYOUT is ingest
-    * infrastructure, not the operator under test (mid-stream change-log
-    * TTL), so it is written once per (session, dir) on a stable temp path —
-    * the same amortization class as the LSH index — and the timed query
-    * measures the replay + TTL drop. */
-  private def retentionSourceFor(s: SparkSession, dir: String): String =
-    Artifacts.tree(s, dir, "retention_src", "events") { src =>
-      // replay only the segment's event type (processBatch filters to it
-      // anyway, and so does the oracle)
-      t(s, dir, "events").filter(col("event_type") === ClickSeg.eventType)
-        .withColumn("shard", pmod(col("event_id"), lit(2)).cast("int"))
-        .repartition(2, col("shard")) // exactly one file per shard dir
-        .write.mode("overwrite").partitionBy("shard").parquet(src)
-    }
-
-  private def segRetentionStream(s: SparkSession, dir: String): DataFrame =
-    withStreamScope(s, "graft_stream_retention") { tmp =>
-      // TWO source files → two micro-batches; per-trigger fixed cost
-      // dominates this query, so the batch count IS its bench cost — two is
-      // the minimum that still fires the TTL mid-stream (batch 0 writes a
-      // change-log day, batch 1's epoch sits past the retention horizon and
-      // drops it)
-      val pipe = new graft.state.MicroBatchPipeline(
-        s, ClickSeg, graft.state.StateStorePaths(s"$tmp/state"), procTimeCol = "ts")
-      val stream = s.readStream
-        .schema(t(s, dir, "events").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(retentionSourceFor(s, dir))
-      val q = graft.streaming.StreamingSegments.foreachBatchPipeline(
-          stream, pipe,
-          // 2-day stride: batch 1's cutoff (epoch − 1 day retention) lands
-          // strictly past batch 0's change-log partition, so the TTL drop
-          // happens while the stream is still running
-          epochToTs = id => java.sql.Timestamp.valueOf(
-            java.time.LocalDate.parse("2030-01-01").plusDays(2 * id).atStartOfDay()),
-          trigger = Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-          retentionDays = Some(1))
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .start()
-      q.awaitTermination()
-      pipe.members().orderBy("user_id")
-    }
-
-  /** The NATIVE streaming rendition through the oracle gate: watermarked
-    * streaming aggregation (dedup + count + max event time) over the same
-    * file-stream source, drained with AvailableNow in UPDATE mode through a
-    * foreachBatch parquet upsert log, then reconciled latest-wins per user.
-    * Update mode keeps per-trigger output proportional to CHANGED users and
-    * leaves watermark state pruning active — unlike a complete-mode memory
-    * sink, which rebuilds (and collects to the driver) the full result every
-    * trigger. The final per-user rows must equal the batch aggregate. */
-  private def segStreamNative(s: SparkSession, dir: String): DataFrame =
-    withStreamScope(s, "graft_stream_native", statePartitions = 8) { tmp =>
-      val stream = eventsStream(s, dir)
-        .withColumn("event_id", col("event_id").cast("string"))
-      val agg = graft.streaming.StreamingSegments.watermarkedCounts(
-        stream, ClickSeg, eventTimeCol = "ts", watermarkDelay = "40 days")
-      val q = graft.streaming.StreamingSegments
-        .updateModeParquetUpsert(agg, s"$tmp/sink",
-          Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .start()
-      q.awaitTermination()
-      LatestWins.maxBy(s.read.parquet(s"$tmp/sink"), Seq("user_id"),
-          col("batch_id"), Seq("n_unique", "last_event_time", "in_segment"))
-        .select(col("user_id"), col("n_unique"),
-                unix_timestamp(col("last_event_time")).as("last_event_time"),
-                col("in_segment"))
-        .orderBy("user_id")
-    }
-
-  /** Custom streaming STATE through the oracle gate: one mergeable HLL
-    * sketch per user held in mapGroupsWithState (the AggregatingMergeTree
-    * uniqState loop as native engine state), drained with AvailableNow into
-    * the update-mode upsert log. At contract-scale cardinalities the sketch
-    * is still in its exact (coupon) regime, so the estimates equal exact
-    * distinct counts and the DuckDB oracle can hash-check them. */
-  private def segStreamStateful(s: SparkSession, dir: String): DataFrame =
-    withStreamScope(s, "graft_stream_stateful", statePartitions = 8) { tmp =>
-      val stream = eventsStream(s, dir)
-      val updates = graft.streaming.StatefulOps
-        .statefulSegmentMembers(stream, ClickSeg)
-      val q = graft.streaming.StreamingSegments
-        .updateModeParquetUpsert(updates.toDF(), s"$tmp/sink",
-          Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .start()
-      q.awaitTermination()
-      LatestWins.maxBy(s.read.parquet(s"$tmp/sink"), Seq("user_id"),
-          col("batch_id"), Seq("n_unique", "in_segment"))
-        .select(col("user_id").cast("long").as("user_id"),
-                col("n_unique"), col("in_segment"))
-        .orderBy("user_id")
-    }
-
-  /** Streaming gap sessionization through the oracle gate — the session
-    * shape previously attested only by specs (T8 streaming generalization):
-    * the events stream replays in a single AvailableNow batch through
-    * [[graft.streaming.StatefulOps.statefulSessionize]]
-    * (flatMapGroupsWithState, O(1) open-session state per user), each
-    * session is APPENDED to the parquet sink the moment a later event
-    * closes it, and the read-back must equal the batch sessionizer minus
-    * each user's FINAL session: with no-data batches disabled
-    * ([[withStreamScope]]) the final open session stays in state awaiting
-    * more data — the live-pipeline semantics — so the emitted set is
-    * exactly the inline-closed sessions. That contract is boundary-free
-    * (no dependence on watermark-vs-timeout-timestamp tie-breaking, which
-    * is the one part of the close-out path an engine-independent oracle
-    * cannot pin; the timeout path is spec-pinned against the batch
-    * sessionizer in StateAndStreamingSpec instead). */
-  private def sessionsStreamClosed(s: SparkSession, dir: String): DataFrame =
-    withStreamScope(s, "graft_stream_sessions", statePartitions = 8) { tmp =>
-      val stream = eventsStream(s, dir)
-      val closed = graft.streaming.StatefulOps.statefulSessionize(
-        stream, gapSeconds = 3600)
-      val q = closed.toDF().writeStream.format("parquet")
-        .option("path", s"$tmp/sink")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/sink")
-        .select(col("user_id").cast("long").as("user_id"),
-                col("session_start"), col("session_end"), col("n_events"))
-        .orderBy("user_id", "session_start")
-    }
-
-  /** Stream-stream interval join through the oracle gate: clicks and
-    * purchases replay as two streams; each purchase joins same-user clicks
-    * within the hour before it (watermarked on both sides, AvailableNow).
-    * The drained result must equal the batch interval join the oracle runs. */
-  private def segStreamAttribution(s: SparkSession, dir: String): DataFrame =
-    withStreamScope(s, "graft_stream_attr", statePartitions = 8) { tmp =>
-      def source() = eventsStream(s, dir)
-      val joined = graft.streaming.StatefulOps.streamStreamAttribution(
-        source().filter(col("event_type") === "click"),
-        source().filter(col("event_type") === "purchase"),
-        attributionWindow = "1 hour", watermarkDelay = "40 days")
-      val q = joined.writeStream.format("parquet")
-        .option("path", s"$tmp/sink")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/sink")
-        .select(col("purchase_id"), col("user_id").cast("long").as("user_id"),
-                unix_timestamp(col("purchase_ts")).as("purchase_t"),
-                col("click_id"), unix_timestamp(col("click_ts")).as("click_t"))
-        .orderBy("purchase_id", "click_id")
-    }
-
-  private def outerJoinNationSuppliers(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "nation")
-      .join(t(s, dir, "supplier"), col("n_nationkey") === col("s_nationkey"), "left_outer")
-      .groupBy(col("n_name"))
-      .agg(count(col("s_suppkey")).as("n_suppliers"))
-      .orderBy("n_name")
-
-  /** FULL OUTER: daily click vs purchase activity — days where either side is
-    * absent surface as nulls/zeros. */
-  private def fullOuterDailyActivity(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    def daily(tpe: String, as: String) =
-      ev.filter(col("event_type") === tpe)
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
-        .agg(count(lit(1)).as(as))
-    daily("click", "n_clicks")
-      .join(daily("purchase", "n_purchases"), Seq("day"), "full_outer")
-      .select(col("day"), coalesce(col("n_clicks"), lit(0L)).as("n_clicks"),
-              coalesce(col("n_purchases"), lit(0L)).as("n_purchases"))
-      .orderBy("day")
-  }
-
-  /** lag/lead analytics: days since each customer's previous order. */
-  private def windowOrderGaps(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate"), col("o_orderkey"))
-    t(s, dir, "orders")
-      .withColumn("prev_date", lag(col("o_orderdate"), 1).over(w))
-      .withColumn("gap_days", datediff(col("o_orderdate"), col("prev_date")))
-      .select(col("o_custkey"), col("o_orderkey"), col("gap_days"))
-      .orderBy("o_custkey", "o_orderkey")
-  }
-
-  /** Exact percentiles (continuous interpolation) per event type. */
-  /** Winsorized per-type value stats
-    * ([[graft.operators.RobustStats.winsorizedStats]]): values clipped into
-    * the exact discrete [p05, p95] band before summing — outlier-robust
-    * feature aggregation with every number on the proven decimal path. */
-  private def winsorizedStats(s: SparkSession, dir: String): DataFrame =
-    RobustStats.winsorizedStats(t(s, dir, "events"), "event_type", "value",
-                                qLo = 0.05, qHi = 0.95)
-      .orderBy("event_type")
-
-  private def pctValueByType(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(col("event_type"))
-      .agg(expr("percentile(value, 0.5)").as("p50"),
-           expr("percentile(value, 0.9)").as("p90"))
-      .orderBy("event_type")
-
-  /** Mergeable quantile sketch algebra (ClickHouse quantileState /
-    * quantileMerge): per-type partial KLL states built on two disjoint halves
-    * of the data, re-merged, then estimated — the split-merge lifecycle the
-    * micro-batch state store runs.
-    *
-    * Oracle-able via an exact-RANK gate (the value-space estimate is
-    * engine-defined and KLL compaction flips unseeded coins, so the VALUE
-    * can differ run to run): the emitted booleans assert the estimate's
-    * exact inclusive rank sits within 0.05 of the target quantile — 3× the
-    * k=200 sketch's ~1.65% normalized rank-error bound, far into its
-    * subgaussian tail, so the gate holds for every compaction outcome. The
-    * rank is computed by one exact pass over the data (count of values ≤
-    * estimate), which is what DuckDB reproduces as a literal TRUE. */
-  private def pctValueSketch(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.QuantileSketch
-    val ev = t(s, dir, "events")
-    val cut = lit(SplitDate).cast("timestamp")
-    def partial(batch: DataFrame) =
-      batch.groupBy(col("event_type"))
-        .agg(QuantileSketch.quantileState(col("value")).as("state"))
-    val est = partial(ev.filter(col("ts") < cut))
-      .unionByName(partial(ev.filter(col("ts") >= cut)))
-      .groupBy(col("event_type"))
-      .agg(QuantileSketch.quantileMergeState(col("state")).as("merged"))
-      .select(col("event_type"),
-              QuantileSketch.quantileEstimate(col("merged"), 0.5).as("p50_est"),
-              QuantileSketch.quantileEstimate(col("merged"), 0.9).as("p90_est"))
-    ev.join(broadcast(est), Seq("event_type"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-           sum(when(col("value") <= col("p50_est"), 1L).otherwise(0L)).as("le50"),
-           sum(when(col("value") <= col("p90_est"), 1L).otherwise(0L)).as("le90"))
-      .select(col("event_type"), col("n"),
-              (abs(col("le50").cast("double") / col("n") - 0.5) <= 0.05).as("p50_rank_ok"),
-              (abs(col("le90").cast("double") / col("n") - 0.9) <= 0.05).as("p90_rank_ok"))
-      .orderBy("event_type")
-  }
-
-  /** Correlated scalar subquery through the SQL surface. */
-  private def sqlOrdersPerCustomer(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "customer").createOrReplaceTempView("customer_v")
-    t(s, dir, "orders").createOrReplaceTempView("orders_v")
-    s.sql("""
-      SELECT c_custkey,
-             (SELECT count(*) FROM orders_v o WHERE o.o_custkey = c.c_custkey) AS n_orders
-      FROM customer_v c ORDER BY c_custkey""")
-  }
-
-  // ======================================================================
-  // Training-data pipeline operators (documents / embeddings)
-  // ======================================================================
-
-  /** Exact dedup semantics probe: double the corpus, dedup must restore one
-    * row per text (lowest id wins). */
-  private def dedupExactDemo(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    Dedup.dropExactDuplicates(docs.unionByName(docs))
-      .select(col("doc_id"), col("source"))
-      .orderBy("doc_id")
-  }
-
-  private def dedupExactStats(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-           count_distinct(TextAnalysis.fingerprintMd5(col("text"))).as("n_distinct"),
-           sum(col("n_chars")).as("sum_chars"))
-      .orderBy("source")
-
-  private def textQuality(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(
-      col("doc_id"),
-      TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-      size(TextAnalysis.words(col("text"))).as("n_words"),
-      TextAnalysis.bpeIshTokenCount(col("text")).as("n_bpe_tokens"),
-      TextAnalysis.charCount(col("text")).as("n_chars_m"),
-      TextAnalysis.punctRatio(col("text")).as("punct_ratio"),
-      TextAnalysis.stopwordRatio(col("text")).as("stop_ratio"))
-      .orderBy("doc_id")
-
-  private val BpeNumMerges = 40
-
-  // learned merges per (session identity, sfDir) — training is one
-  // vocabulary-sized shuffle + a driver loop, run once per corpus like the
-  // corpus-model bigram table; the last-trained list feeds the data-dependent
-  // oracle generation below (Verify dumps oracle SQL AFTER running queries)
-  private def bpeMergesFor(s: SparkSession, dir: String): Seq[(String, String)] =
-    Artifacts.value(s, dir, "bpe_merges", "documents") {
-      BpeModel.learnMerges(t(s, dir, "documents"), BpeNumMerges)
-    }
-
-  /** Learned-vocabulary BPE token counts ([[BpeModel]]): merges trained on
-    * the corpus's own word-type dictionary, applied per doc by the native
-    * expression. The oracle replays the LEARNED merges as literal nested
-    * `replace()` calls over the separator-wrapped encoding — the same
-    * embedded-constants technique as [[srpOracleSql]], here with
-    * data-dependent constants (generated after the query has trained). */
-  private def bpeTokens(s: SparkSession, dir: String): DataFrame = {
-    val merges = bpeMergesFor(s, dir)
-    // coalesce to 0: a NULL text row null-propagates through size()/the
-    // native expression, while the oracle's LEFT JOIN + COALESCE emits 0/0
-    t(s, dir, "documents").select(
-        col("doc_id"),
-        coalesce(size(TextAnalysis.words(col("text"))).cast("long"), lit(0L)).as("n_words"),
-        coalesce(graft.functions.NativeExprs.bpeTokenCount(col("text"), merges),
-                 lit(0L)).as("n_bpe_tokens"))
-      .orderBy("doc_id")
-  }
-
-  /** Full BPE tokenization DIGEST: the per-doc encoded symbol stream
-    * ([[BpeModel.encodeChain]] inside an in-row `transform` — no shuffle),
-    * fingerprinted with md5 alongside the native token count. Two
-    * independent implementations of the merge application cross-check each
-    * other inside one query, and the oracle replays both from the learned
-    * merges. */
-  private def bpeEncodeHash(s: SparkSession, dir: String): DataFrame = {
-    val merges = bpeMergesFor(s, dir)
-    val ws = TextAnalysis.words(col("text"))
-    val encDoc = concat_ws("|", transform(ws, w => BpeModel.encodeChain(w, merges)))
-    t(s, dir, "documents").select(
-        col("doc_id"),
-        coalesce(size(ws).cast("long"), lit(0L)).as("n_words"),
-        coalesce(graft.functions.NativeExprs.bpeTokenCount(col("text"), merges),
-                 lit(0L)).as("n_bpe_tokens"),
-        md5(encDoc.cast("binary")).as("enc_md5"))
-      .orderBy("doc_id")
-  }
-
-  // learned unigram-LM model per (session identity, sfDir) — same train-once
-  // discipline and data-dependent-oracle plumbing as the BPE merges above
-  private def unigramModelFor(s: SparkSession, dir: String): UnigramLm.Model =
-    Artifacts.value(s, dir, "unigram_model", "documents") {
-      UnigramLm.learn(t(s, dir, "documents"))
-    }
-
-  /** Unigram-LM (SentencePiece-style) token stats ([[UnigramLm]]): a piece
-    * vocabulary with integer costs learned by fixed-round Viterbi-EM on the
-    * corpus's own word-type dictionary, applied per doc by the native
-    * expression (integer combined-key Viterbi — the (cost, n_pieces)
-    * optimum is exact and unique on both engines). The oracle replays the
-    * LEARNED vocabulary as literals through an unrolled per-position DP
-    * ([[UnigramLm.oracleTokenSql]]). */
-  private def unigramTokens(s: SparkSession, dir: String): DataFrame = {
-    val model = unigramModelFor(s, dir)
-    val st = graft.functions.NativeExprs.unigramStats(col("text"), model)
-    t(s, dir, "documents").select(
-        col("doc_id"),
-        coalesce(size(TextAnalysis.words(col("text"))).cast("long"), lit(0L)).as("n_words"),
-        coalesce(st.getField("n_pieces"), lit(0L)).as("n_pieces"),
-        coalesce(st.getField("unigram_cost"), lit(0L)).as("unigram_cost"))
-      .orderBy("doc_id")
-  }
-
-  // learned WordPiece vocabulary per (session identity, sfDir) — same
-  // train-once discipline and data-dependent-oracle plumbing as the BPE
-  // merges / unigram model above
-  private def wordpieceModelFor(s: SparkSession, dir: String): WordPiece.Model =
-    Artifacts.value(s, dir, "wordpiece_model", "documents") {
-      WordPiece.learn(t(s, dir, "documents"))
-    }
-
-  /** WordPiece (BERT-family) tokenization stats ([[WordPiece]]): a
-    * likelihood-merged vocabulary learned from the corpus's own word-type
-    * dictionary, applied per doc by the native greedy longest-match
-    * expression. Beyond counts, `wp_sig` (the summed per-word boundary
-    * signature) pins the exact SEGMENTATION each side produced. The oracle
-    * replays the LEARNED vocabulary as literals through a precomputed
-    * longest-match table + unrolled greedy walk
-    * ([[WordPiece.oracleTokenSql]]). */
-  private def wordpieceTokens(s: SparkSession, dir: String): DataFrame = {
-    val model = wordpieceModelFor(s, dir)
-    val st = graft.functions.NativeExprs.wordpieceStats(col("text"), model)
-    t(s, dir, "documents").select(
-        col("doc_id"),
-        coalesce(size(TextAnalysis.words(col("text"))).cast("long"), lit(0L)).as("n_words"),
-        coalesce(st.getField("n_pieces"), lit(0L)).as("n_pieces"),
-        coalesce(st.getField("n_unk"), lit(0L)).as("n_unk"),
-        coalesce(st.getField("wp_sig"), lit(0L)).as("wp_sig"))
-      .orderBy("doc_id")
-  }
-
-  /** CCNet perplexity filter (Wenzek et al.) on the learned unigram LM —
-    * the canonical stage between lang-id and quality classification: each
-    * doc's LM cost-per-token (integer milli-cost `(unigram_cost·1000) DIV
-    * n_pieces` — exact on any engine), bucketed head/middle/tail per
-    * language by EXACT discrete terciles (positional picks at ceil(n/3),
-    * ceil(2n/3) over the (score, doc_id)-ordered per-lang frame — the
-    * winsorized_stats bounds discipline, all-integer so no rational-
-    * threshold rounding hazard). Docs with no tokenizable words land in an
-    * explicit 'empty' bucket.
-    *
-    * Plan shape for 100 TB (CCNet itself buckets against PRECOMPUTED
-    * quantile boundaries, never by ranking the corpus): a rank window
-    * partitioned by `lang` would shuffle every document by a handful of
-    * skewed language keys — English alone funnels most of a real corpus
-    * through one task. Instead the ONE per-doc DP scoring scan collapses
-    * immediately into a (lang, has-tokens, score) GROUP frame (value-domain
-    * granularity — the Mann-Whitney tie-group discipline; score is an
-    * integer milli-cost, so distinct values per lang are bounded far below
-    * doc count), carrying each group's order-free exact-integer membership
-    * hash sum for the bucket digests (constant bytes per group — never a
-    * materialized id list).
-    * Tercile bounds are cumulative-count picks over that tiny frame — the
-    * score at position r is `min{s : cum(s) ≥ r}`, identical to the
-    * positional pick because the order is (score, doc_id) — and the
-    * #langs-sized bounds frame broadcasts back. No window ever touches a
-    * doc-sized frame. */
-  // learned byte-level BPE merges per (session identity, sfDir) — fourth
-  // tokenizer, same train-once discipline and data-dependent-oracle
-  // plumbing as the char-BPE merges above
-  private def byteBpeModelFor(s: SparkSession, dir: String): ByteBpe.Model =
-    Artifacts.value(s, dir, "bytebpe_model", "documents") {
-      ByteBpe.learn(t(s, dir, "documents"))
-    }
-
-  /** Byte-level BPE (GPT-2/tiktoken class, [[ByteBpe]]): regex
-    * pre-tokenization, UTF-8 byte alphabet, learned merges, no UNK. The
-    * enc_md5 digest pins the exact SEGMENTATION of every document (the
-    * bpe_encode_hash discipline); the oracle replays the learned merges as
-    * literal nested `replace()` calls over the hex-pair separator
-    * encoding. */
-  private def byteBpeTokens(s: SparkSession, dir: String): DataFrame = {
-    val model = byteBpeModelFor(s, dir)
-    val st = graft.functions.NativeExprs.byteBpeStats(col("text"), model)
-    t(s, dir, "documents").select(
-        col("doc_id"),
-        coalesce(st.getField("n_pretokens"), lit(0L)).as("n_pretokens"),
-        coalesce(st.getField("n_tokens"), lit(0L)).as("n_tokens"),
-        md5(coalesce(st.getField("enc"), lit("")).cast("binary")).as("enc_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** Modulus for the order-free bucket membership digest: 2^61 − 1 (a
-    * Mersenne prime). The reduced sum fits a BIGINT on every engine; the
-    * pre-reduction sums stay exact (Spark DECIMAL / DuckDB HUGEINT). */
-  private val CcnetDigestMod = 2305843009213693951L
-
-  private def ccnetPerplexityBuckets(s: SparkSession, dir: String): DataFrame = {
-    val model = unigramModelFor(s, dir)
-    val st = graft.functions.NativeExprs.unigramStats(col("text"), model)
-    val scored = t(s, dir, "documents")
-      .select(col("doc_id"), col("lang"),
-              st.getField("n_pieces").as("np"),
-              st.getField("unigram_cost").as("uc"))
-      .withColumn("score", expr("CASE WHEN np > 0 THEN (uc * 1000) DIV np END"))
-      .withColumn("__tok", col("np") > 0)
-    // map-side partial agg collapses the doc-sized frame to value-domain
-    // granularity in the one corpus shuffle; the empty lane rides along as
-    // the __tok=false sub-group (a union branch would re-run the DP scan).
-    // Membership is digested ORDER-FREE as an exact integer hash SUM — a
-    // per-group constant-size buffer (a bucket of billions of docs is one
-    // DECIMAL, never a materialized id list), and a wrong membership flips
-    // the sum. The 60-bit md5 prefix is engine-portable; decimal sums stay
-    // exact to 10^38 ≫ any corpus's n_docs · 2^60.
-    val idh = conv(substring(md5(col("doc_id").cast("string").cast("binary")),
-                             1, 15), 16, 10).cast("long")
-    val grp = scored.groupBy(col("lang"), col("__tok"), col("score"))
-      .agg(count(lit(1)).as("c"),
-           sum(idh.cast("decimal(20,0)")).as("hsum"))
-    val wCum = Window.partitionBy(col("lang")).orderBy(col("score"))
-    val wAll = Window.partitionBy(col("lang"))
-    val bounds = grp.filter(col("__tok"))
-      .withColumn("cum", sum(col("c")).over(wCum))
-      .withColumn("n", sum(col("c")).over(wAll))
-      .groupBy(col("lang"))
-      .agg(min(when(col("cum") >= expr("(n + 2) DIV 3"), col("score"))).as("b1"),
-           min(when(col("cum") >= expr("(2 * n + 2) DIV 3"), col("score"))).as("b2"))
-    grp.join(broadcast(bounds), Seq("lang"), "left")
-      .withColumn("bucket",
-        when(!col("__tok"), lit("empty"))
-          .when(col("score") <= col("b1"), lit("head"))
-          .when(col("score") <= col("b2"), lit("middle"))
-          .otherwise(lit("tail")))
-      .groupBy(col("lang"), col("bucket"))
-      .agg(sum(col("c")).as("n_docs"),
-           min(col("score")).as("min_score"),
-           max(col("score")).as("max_score"),
-           (sum(col("hsum")) % lit(CcnetDigestMod).cast("decimal(20,0)"))
-             .cast("long").as("ids_hash"))
-      .orderBy("lang", "bucket")
-  }
-
-  private def embeddingCentroids(s: SparkSession, dir: String): DataFrame =
-    Similarity.labelCentroids(t(s, dir, "embeddings"))
-      .orderBy("label", "pos")
-
-  /** Recursive hard-link copy (fallback: byte copy when the FS refuses a
-    * link): how mutation queries consume an [[Artifacts.tree]] fixture (the
-    * CDC landing target and its source feed both exist BEFORE any batch
-    * arrives in production) — the copy is a driver-side millisecond walk.
-    * Scratch mutations delete LINKS; the artifact's files are immutable
-    * through their original paths. */
-  private def linkTree(src: String, dst: String): Unit = {
-    import java.nio.file.{Files, Path, Paths}
-    val from = Paths.get(src); val to = Paths.get(dst)
-    Files.createDirectories(to)
-    val walk = Files.walk(from)
-    try {
-      val it = walk.iterator()
-      while (it.hasNext) {
-        val p: Path = it.next()
-        val rel = from.relativize(p)
-        if (rel.toString.nonEmpty) {
-          val target = to.resolve(rel)
-          if (Files.isDirectory(p)) Files.createDirectories(target)
-          else
-            try Files.createLink(target, p)
-            catch { case _: UnsupportedOperationException | _: java.io.IOException =>
-              Files.copy(p, target) }
-        }
-      }
-    } finally walk.close()
-  }
-
-  /** MinHash+LSH pair list shared by `minhash_neardup` and `dedup_clusters`:
-    * the signature/banding/verification pipeline runs ONCE per (session,
-    * sfDir) and is materialized (localCheckpoint); both queries then read the
-    * tiny 3-column pair rows. At 100 TB this is the same discipline — the
-    * pair list is a persisted intermediate table, never recomputed per
-    * consumer. */
-  private def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, dir, "minhash_pairs", "documents") {
-      Dedup.minhashNearDuplicates(t(s, dir, "documents"), threshold = 0.5)
-    }
-
-  /** The historical corpus's cluster-assignment table — what the incremental
-    * dedup pipeline PERSISTS between batches (each batch's probe output is
-    * folded in via [[Dedup.updateClusters]]). Built here from the historical
-    * slice's own near-dup pairs: LSH candidacy, the signature-estimate prune,
-    * and exact verification are all per-PAIR deterministic, so pairs internal
-    * to the 80% slice computed stand-alone are identical to filtering the
-    * full-corpus pair list — the shared closure oracle still holds. */
-  private def histAssignments(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, dir, "hist_assignments", "documents") {
-      Dedup.clusterNearDuplicates(
-        Dedup.minhashNearDuplicates(
-          t(s, dir, "documents").filter(col("doc_id") % 5 =!= 0), threshold = 0.5))
-    }
-
-  /** The new batch's near-dup pair list — the OUTPUT of the incremental
-    * probe stage ([[Dedup.incrementalNearDuplicates]], the operator
-    * `incremental_neardup` itself times), which the cluster maintainer
-    * consumes as an upstream artifact: in production the probe already ran
-    * when the batch was ingested. Per-pair-deterministic like the above, so
-    * it equals the full pair list restricted to pairs touching a new doc. */
-  private def newBatchPairs(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, dir, "new_batch_pairs", "documents") {
-      val docs = t(s, dir, "documents")
-      val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-      val (index, sigs, hot) = lshHist(s, dir, corpus)
-      Dedup.incrementalNearDuplicates(docs.filter(col("doc_id") % 5 === 0),
-          corpus, index, threshold = 0.5, corpusSigs = Some(sigs),
-          corpusHot = Some(hot))
-        .select("id_a", "id_b")
-    }
-
-  /** The historical slice's LSH index and signatures, plus its bucket
-    * HISTOGRAM (the right-side, hot-historical-bucket lane of the skew
-    * guard) — ingest-time artifacts: a production pipeline appends to them
-    * per batch, so no timed probe pays a corpus-sized scan for them. */
-  private def lshHist(s: SparkSession, dir: String,
-                      corpus: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val index = Artifacts.frame(s, dir, "lsh_index_hist", "documents") { Dedup.lshIndex(corpus) }
-    val sigs = Artifacts.frame(s, dir, "lsh_sigs_hist", "documents") { Dedup.lshSignatures(corpus) }
-    val hot = Artifacts.frame(s, dir, "lsh_index_hist_hot", "documents") { Dedup.hotBuckets(index) }
-    (index, sigs, hot)
-  }
-
-  /** Pre-builds the materialized intermediates that production writes at
-    * INGEST time, not query time: the historical LSH index + signatures
-    * (`StreamingDedup.processBatch` appends to them per micro-batch; a batch
-    * pipeline persists them beside the corpus), the historical cluster
-    * assignments (maintained continuously by the dedup pipeline), and the
-    * new batch's probe pairs (produced by the probe stage when the batch
-    * arrived). `Bench` calls this in its untimed warmup so the timed
-    * `incremental_neardup` / `incremental_clusters` measure each operator's
-    * steady-state cost — the probe, and the star-edge fold — rather than
-    * replaying amortized ingest work. Correctness runs build them lazily
-    * and are unaffected. The full-corpus minhash pair LIST is deliberately
-    * NOT warmed: its build is genuine query-time work for the first
-    * consumer (`minhash_neardup`'s own operator). */
-  def warmIngestArtifacts(s: SparkSession, dir: String): Unit = {
-    val corpus = t(s, dir, "documents").filter(col("doc_id") % 5 =!= 0)
-    lshHist(s, dir, corpus)
-    histAssignments(s, dir)
-    newBatchPairs(s, dir)
-    contamArtifacts(s, dir)
-    quantScalesFor(s, dir) // learned int8 scales: one corpus pass, reused by every probe
-    qcWeightsFor(s, dir)   // trained classifier weights: a model is the canonical
-                           // ingest-time artifact — scoring is the steady-state op
-    bpeMergesFor(s, dir)   // learned tokenizer models: same artifact class —
-    unigramModelFor(s, dir) // trained once per corpus, applied per query
-    wordpieceModelFor(s, dir) // third tokenizer: same train-once class
-    byteBpeModelFor(s, dir)   // fourth tokenizer (byte-level): same class
-    dsirWeightsFor(s, dir)  // DSIR bucket models: one corpus feature pass,
-                            // weights reused by every selection run
-    kmeansFor(s, dir)      // learned cluster centroids: fixed-round Lloyd's,
-                           // trained once per corpus (ingest-time artifact)
-    pcaModelFor(s, dir)    // learned PCA model: one exact moment pass +
-                           // driver Jacobi (ingest-time artifact)
-    // the shared MinHash pair list is the same class of corpus artifact as
-    // the LSH index above — every consumer (clustering, leakage split,
-    // incremental fold) reads the one materialization, so the first
-    // consumer should not be billed for building it
-    minhashPairs(s, dir)
-    ivfLayoutFor(s, dir)    // cell-partitioned corpus layout: written at ingest,
-    ivfCentroidsFor(s, dir) // probed per query; quantizer likewise
-    ivfHistLayoutFor(s, dir)    // historical-snapshot index + frozen quantizer:
-    ivfHistCentroidsFor(s, dir) // the incremental lane's persisted artifacts
-    docsSharded(s, dir)     // corpus sharding: ingest-time at real scale
-    editdistKeysFor(s, dir) // edit-distance key+gram table: same artifact
-                            // class as the LSH index (appended per batch)
-    retentionSourceFor(s, dir) // retention demo's sharded replay source
-    chunkStream(s, dir)     // persisted chunk table: consumers (packing,
-                            // chunk dedup) read it, chunking demo computes
-    chunkDigestIndex(s, dir) // historical chunk-digest index (appended per
-                             // ingest batch, like the LSH index)
-    domainCapFor(s, dir)     // mixture cap/targets: corpus constants
-    urlDomainCapFor(s, dir)  // registrable-domain cap/targets: same class
-    collapseBoundsFor(s, dir) // collapse time bounds + rebalance minority
-    rebalanceKMinFor(s, dir)  // count: the same corpus-constant class
-    rangeJoinIntervalsFor(s, dir) // derived interval/session tables: the
-    rangeSessionsFor(s, dir)      // range operators' persisted artifacts
-    locally {                  // CDC demos' persisted profile table + the
-      val stats = cdcStats(s, dir)     // derived insert-key offset — the
-      cdcOffset(s, dir, stats)         // landing TARGET exists before any
-      cdcBaseTree(s, dir)              // change batch arrives; its pristine
-      cdcFeedTree(s, dir)              // layout + the transport's feed files
-      ()                               // are the same ingest-time artifacts
-    }
-    ()
-  }
-
-  /** One throwaway AvailableNow drain over a 2-row scratch source: loads and
-    * JITs the streaming runtime (MicroBatchExecution, checkpoint file
-    * manager, offset/commit logs, the parquet file-stream source) once,
-    * untimed. On a real cluster these framework classes load once per
-    * executor lifetime; without this, the FIRST measured streaming query
-    * absorbs ~0.5-1 s of one-time class-loading that is not its cost.
-    *
-    * When `dir` is given, the scratch source carries the REAL raw events
-    * schema (a 2-row sample of the actual file, streamed through the same
-    * [[graft.Tables.normalizeEventsTs]] the timed queries use): whole-stage
-    * codegen caches on the generated source, so a warm drain over a
-    * synthetic 4-column shape still leaves every real-schema plan compiling
-    * ~100-300 ms inside the first timed run of each operator family. The
-    * data stays 2 scratch rows — only the PLAN SHAPES match production. */
-  def warmStreamingRuntime(s: SparkSession, dir: String = ""): Unit = {
-    // run under the SAME scope as every timed streaming query, so the
-    // classes warmed are the ones those queries load (the FileSystem-based
-    // checkpoint manager + v2 committer, not the default FileContext path)
-    withStreamScope(s, "graft_stream_warm") { tmp =>
-      // Scratch source laid out to drain the SAME lifecycle the timed
-      // streaming queries pay: TWO source files under maxFilesPerTrigger=1
-      // (so the AvailableNow loop runs the multi-batch trigger path, one
-      // batch per file — `seg_stream_equiv`'s exact option) and an ordered
-      // member read-back (the TakeOrdered/sort plan the query surfaces
-      // through). All the REAL pipeline plans run: sketch partial/merge
-      // codegen, partitioned state writes, change-log co-write, the
-      // latest-wins readback window, and the change-log TTL drop
-      // (`seg_retention_stream`'s mid-stream expire path).
-      val rawSample: Option[DataFrame] =
-        if (dir.isEmpty) None
-        else scala.util.Try {
-          val reader = s.read.schema(Tables.eventsRawSchema(s, dir))
-          val path = s"$dir/events.parquet"
-          val raw =
-            if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path)))
-              reader.parquet(path)
-            else reader.option("pathGlobFilter", "events.parquet").parquet(dir)
-          // Deterministic sample: two rows OF THE SEGMENT'S EVENT TYPE on
-          // two distinct event dates (earliest event_id per date). A bare
-          // `limit(2)` picks arbitrary rows — and when neither is a click,
-          // the warm drain's first micro-batch slices to EMPTY, the pipeline
-          // writes zero files, and the change-log read-back dies of
-          // UNABLE_TO_INFER_SCHEMA, killing the warmup before ANY of the
-          // four stateful families has drained (observed against the r11
-          // testdata regen: first 2 raw rows were non-click → every first
-          // timed streaming run absorbed its own cold scaffolding).
-          // Distinct dates also deterministically exercise the partitioned-
-          // state multi-partition dynamic-append path the synthetic
-          // fallback was designed around. Selection normalizes ts the same
-          // way the streamed plan will; the WRITTEN rows stay raw.
-          val picks = Tables.normalizeEventsTs(s, dir, raw)
-            .filter(col("event_type") === ClickSeg.eventType)
-            .groupBy(to_date(col("ts")).as("d"))
-            .agg(min(col("event_id")).as("event_id"))
-            .orderBy(col("d")).limit(2)
-            .select(col("event_id")).collect().map(_.get(0)).toSeq
-          require(picks.nonEmpty, "no rows of the warm segment's event type")
-          raw.filter(col("event_id").isin(picks: _*)).localCheckpoint()
-        }.toOption
-      rawSample match {
-        case Some(raw) =>
-          raw.coalesce(1).write.mode("overwrite").parquet(s"$tmp/src")
-          raw.coalesce(1).write.mode("append").parquet(s"$tmp/src")
-        case None =>
-          s.range(0, 2, 1, 1).selectExpr("id AS user_id", "'click' AS event_type",
-              "id AS event_id", "timestamp'2030-01-01 00:00:00' AS ts")
-            .write.mode("overwrite").parquet(s"$tmp/src")
-          s.range(2, 4, 1, 1).selectExpr("id AS user_id", "'click' AS event_type",
-              "id AS event_id", "timestamp'2030-01-02 00:00:00' AS ts")
-            .write.mode("append").parquet(s"$tmp/src")
-      }
-      val schema = rawSample.map(_ => Tables.eventsRawSchema(s, dir))
-        .getOrElse(s.read.parquet(s"$tmp/src").schema)
-      // the same raw-schema + normalize pipeline eventsStream applies, so
-      // the analyzed/codegen'd plans are the timed queries' plans verbatim
-      def normalized(src: DataFrame): DataFrame =
-        rawSample.map(_ => Tables.normalizeEventsTs(s, dir, src)).getOrElse(src)
-      val pipe = new graft.state.MicroBatchPipeline(
-        s, ClickSeg, graft.state.StateStorePaths(s"$tmp/state"), procTimeCol = "ts")
-      val q = graft.streaming.StreamingSegments.foreachBatchPipeline(
-          normalized(s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-            .parquet(s"$tmp/src")), pipe,
-          epochToTs = id => java.sql.Timestamp.valueOf(
-            s"2030-01-0${id % 2 + 1} 00:00:01"),
-          trigger = Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
-          retentionDays = Some(1))
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .start()
-      q.awaitTermination()
-      pipe.members().orderBy("user_id").count()
-
-      // The OTHER stateful operator families load their own executor/state
-      // classes and compile their own codegen the first time they run:
-      // watermarked streaming aggregation + dropDuplicatesWithinWatermark
-      // (StateStoreSave/Restore, dedup store), mapGroupsWithState /
-      // flatMapGroupsWithState (FlatMapGroupsWithStateExec, timeout
-      // handling), and the stream-stream symmetric hash join (its four
-      // per-task state stores). Measured cold-vs-warm on the contract
-      // queries this is 0.3-0.5 s apiece of one-time cost — per-JVM on a
-      // real cluster, so it belongs in the untimed warmup, one tiny
-      // AvailableNow drain per family over the same scratch source.
-      def scratchStream() =
-        normalized(s.readStream.schema(schema).parquet(s"$tmp/src"))
-      locally { // watermarked dedup+agg -> update-mode upsert (native shape)
-        val agg = graft.streaming.StreamingSegments.watermarkedCounts(
-          scratchStream().withColumn("event_id", col("event_id").cast("string")),
-          ClickSeg, eventTimeCol = "ts", watermarkDelay = "40 days")
-        val q2 = graft.streaming.StreamingSegments
-          .updateModeParquetUpsert(agg, s"$tmp/sink_native",
-            Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-          .option("checkpointLocation", s"$tmp/ckpt_native")
-          .start()
-        q2.awaitTermination()
-      }
-      locally { // mapGroupsWithState sketch state (stateful shape)
-        val updates = graft.streaming.StatefulOps
-          .statefulSegmentMembers(scratchStream(), ClickSeg)
-        val q2 = graft.streaming.StreamingSegments
-          .updateModeParquetUpsert(updates.toDF(), s"$tmp/sink_stateful",
-            Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-          .option("checkpointLocation", s"$tmp/ckpt_stateful")
-          .start()
-        q2.awaitTermination()
-      }
-      locally { // flatMapGroupsWithState sessionization (sessions shape)
-        val closed = graft.streaming.StatefulOps.statefulSessionize(
-          scratchStream(), gapSeconds = 3600)
-        val q2 = closed.toDF().writeStream.format("parquet")
-          .option("path", s"$tmp/sink_sessions")
-          .option("checkpointLocation", s"$tmp/ckpt_sessions")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q2.awaitTermination()
-      }
-      locally { // stream-stream interval join (attribution shape)
-        val joined = graft.streaming.StatefulOps.streamStreamAttribution(
-          scratchStream(), scratchStream(),
-          attributionWindow = "1 hour", watermarkDelay = "40 days")
-        val q2 = joined.writeStream.format("parquet")
-          .option("path", s"$tmp/sink_attr")
-          .option("checkpointLocation", s"$tmp/ckpt_attr")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q2.awaitTermination()
-      }
-      pipe.members().orderBy("user_id")
-    }
-    ()
-  }
-
-  /** Near-dup connected components over the MinHash pair list (canonical-doc
-    * assignment). Iterative — rows-only, validated against union-find in
-    * tests. */
-  private def dedupClusters(s: SparkSession, dir: String): DataFrame =
-    Dedup.clusterNearDuplicates(minhashPairs(s, dir))
-      .orderBy("id")
-
-  /** Cluster-representative selection by QUALITY — the keep policy real
-    * dedup pipelines use (keep the longest/highest-quality member, not the
-    * lowest id): every document joins its near-dup cluster (singletons are
-    * their own cluster), and each cluster emits the member with the most
-    * characters, ties to the lowest doc_id. One equi-join against the
-    * cluster assignment + one `max_by` aggregate — the representative pick
-    * never shuffles text, only (id, n_chars). */
-  private def dedupKeepBest(s: SparkSession, dir: String): DataFrame = {
-    val clusters = Dedup.clusterNearDuplicates(minhashPairs(s, dir))
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("n_chars"))
-    docs.join(clusters, docs("doc_id") === clusters("id"), "left")
-      .select(col("doc_id"), col("n_chars"),
-              coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-      .groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("n_members"),
-           max_by(col("doc_id"), struct(col("n_chars"), -col("doc_id")))
-             .as("rep_doc_id"),
-           max(col("n_chars")).as("rep_n_chars"))
-      .orderBy("cluster_id")
-  }
-
-  /** Trailing 7-day distinct users + event volume per observed day — the
-    * SCALABLE rewrite of a rolling `uniqExact` window: instead of carrying
-    * a per-day user-set state, each (user, day) observation fans out to the
-    * ≤7 window-ends it can contribute to (a bounded explode), and each
-    * window-end runs an ordinary distinct aggregate. Shuffle is
-    * 7·|distinct (user, day)| fixed-width rows; no quadratic window frame,
-    * no mergeable-set state. (The sketch path for wider windows is the
-    * same fan-out over per-day HLL states via [[graft.functions
-    * .Sketches]].) */
-  /** Fan each row's `day` out to the `width` trailing-window ends it
-    * contributes to (day .. day+width−1), restricted to OBSERVED days —
-    * the shared shape of every rolling-window rewrite here (exact 7-day,
-    * HLL 30-day): a bounded explode plus an ordinary aggregate, never a
-    * running set state. */
-  private def fanToWindowEnds(df: DataFrame, days: DataFrame, width: Int): DataFrame =
-    df.select(col("*"),
-              explode(sequence(col("day"), date_add(col("day"), width - 1),
-                               expr("interval 1 day"))).as("wend"))
-      .join(days.select(col("day").as("wend")), Seq("wend"), "left_semi")
-
-  private def rolling7dUsers(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").select(col("user_id"), to_date(col("ts")).as("day"))
-    val ud = ev.distinct()
-    val days = ud.select(col("day")).distinct()
-    val userFan = fanToWindowEnds(ud, days, 7)
-      .groupBy(col("wend"))
-      .agg(count_distinct(col("user_id")).as("users_7d"))
-    val evFan = fanToWindowEnds(ev.groupBy(col("day")).agg(count(lit(1)).as("n")),
-                                days, 7)
-      .groupBy(col("wend")).agg(sum(col("n")).as("n_events_7d"))
-    userFan.join(evFan, Seq("wend"))
-      .select(date_format(col("wend"), "yyyy-MM-dd").as("day"),
-              col("users_7d"), col("n_events_7d"))
-      .orderBy("day")
-  }
-
-  /** Incremental cluster maintenance through the oracle gate: the PERSISTED
-    * historical assignment ([[histAssignments]], an ingest-time artifact)
-    * folded together with the new batch's probe pairs ([[newBatchPairs]],
-    * the upstream probe stage's output) via [[Dedup.updateClusters]] must
-    * equal clustering the cumulative pair graph from scratch — so it shares
-    * dedup_clusters' closure oracle verbatim (hist-internal pairs ∪ pairs
-    * touching a new doc = all pairs, and star edges preserve connectivity).
-    * The timed work is ONLY the star-edge fold, the operator's actual
-    * steady-state cost. */
-  private def incrementalClusters(s: SparkSession, dir: String): DataFrame =
-    Dedup.updateClusters(histAssignments(s, dir), newBatchPairs(s, dir))
-      .orderBy("id")
-
-  /** Leakage-free train/test split over the same shared pair list: every
-    * near-dup cluster lands wholly in one split ([[Dedup.leakageFreeSplit]];
-    * the oracle recomputes the cluster closure and the integer split hash). */
-  private def leakageSplit(s: SparkSession, dir: String): DataFrame =
-    Dedup.leakageFreeSplit(t(s, dir, "documents"), minhashPairs(s, dir),
-        testPct = 10)
-      .orderBy("doc_id")
-
-  /** Quality-tiered downsampling ([[Sampling.tieredSample]]): long documents
-    * kept outright, mid-length at 30%, short at 10% — all-integer tier CASE
-    * and keep hash, so the kept set is exactly engine-reproducible. */
-  private def qualityTieredSample(s: SparkSession, dir: String): DataFrame = {
-    val pct = when(col("n_chars") >= 400, lit(100L))
-      .when(col("n_chars") >= 250, lit(30L)).otherwise(lit(10L))
-    Sampling.tieredSample(t(s, dir, "documents"), "doc_id", pct)
-      .select(col("doc_id"), col("n_chars"), pct.as("keep_pct"))
-      .orderBy("doc_id")
-  }
-
-  private def textLangDist(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .groupBy(TextAnalysis.langId(col("text")).as("lang_pred"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy("lang_pred")
-
-  private def docFingerprints(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"), TextAnalysis.fingerprintMd5(col("text")).as("fp_md5"))
-      .orderBy("doc_id")
-
-  /** Rolling / winnowing fingerprints — engine-defined hashes, rows-only. */
-  private def docFingerprintsExt(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"),
-              TextAnalysis.fingerprintRolling(col("text")).as("fp_rolling"),
-              TextAnalysis.fingerprintKgramMin(col("text")).as("fp_kgram_min"))
-      .orderBy("doc_id")
-
-  private def annTopK(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < AnnQueries), AnnK)
-      .orderBy("query_id", "rank")
-  }
-
-  // embedding dimensionality, probed from the data once per (session, dir)
-  // — the generator owns the corpus, so a regen at a different dim must not
-  // leave SRP hyperplanes / int8 scales spanning the wrong width. The SRP
-  // oracle SQL is generated from the same cached value (the data-dependent
-  // oracle pattern: Verify runs every query before dumping oracle_sql.json).
-  private def embDim(s: SparkSession, dir: String): Int =
-    Artifacts.value(s, dir, "emb_dim", "embeddings") {
-      t(s, dir, "embeddings").select(size(col("embedding")).as("d")).head().getInt(0)
-    }
-
-  private def annTopKSrp(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Similarity.srpBucketedTopK(emb, emb.filter(col("vec_id") < AnnQueries), AnnK,
-        dim = embDim(s, dir))
-      .orderBy("query_id", "rank")
-  }
-
-  private val AnnQuantCandK = 40
-
-  // per-dim int8 scales per (session, corpus) — learned from the data like
-  // the BPE merges, and fed into the data-dependent oracle the same way
-  private def quantScalesFor(s: SparkSession, dir: String): Array[Double] =
-    Artifacts.value(s, dir, "quant_scales", "embeddings") {
-      Similarity.quantScales(t(s, dir, "embeddings"), dim = embDim(s, dir))
-    }
-
-  /** int8-quantized ANN ([[Similarity.quantizedTopK]]): integer prescreen
-    * over 4×-smaller vectors, exact re-rank of the top-candK candidates.
-    * Deterministic end to end — the oracle replays the learned scales as
-    * literals, the quantization/score path is integer-exact, and the
-    * re-rank matches ann_topk_brute's. */
-  private def annTopKQuant(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Similarity.quantizedTopK(emb, emb.filter(col("vec_id") < AnnQueries), AnnK,
-        AnnQuantCandK, quantScalesFor(s, dir))
-      .orderBy("query_id", "rank")
-  }
-
-  private val PqM = 16         // subspaces (D=64 → 4 dims each): near-random
-  private val PqKCent = 32     // unit vectors need fine subquantizers — the
-                               // top-5 cosine signal (~0.2-0.4) sits barely
-                               // above the 1/√D noise floor, so residual
-                               // variance must be cut hard (K^(-2/sd) ≈ 0.18)
-  private val PqScaleBits = 20 // fixed-point ADC precision
-  private val PqCandK = 40     // prescreen width, same as the int8 lane
-
-  // PQ sub-codebooks per (session, corpus) — learned ingest-time artifact,
-  // embedded into the data-dependent oracle as literals (quantScales twin)
-  private def pqCodebooksFor(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    Artifacts.value(s, dir, "pq_codebooks", "embeddings") {
-      Similarity.pqTrain(t(s, dir, "embeddings"), dim = embDim(s, dir),
-                         m = PqM, k = PqKCent)
-    }
-
-  // Retained components: the synthetic corpus's spectrum is FLAT (near-
-  // isotropic gaussian vectors — PCA's worst case), so r = dim/2 is what
-  // holds prescreen recall ≥ 0.9 at sf0.1 (measured: r=16 → 0.53, r=32 →
-  // 0.93 at candK=160). On real embedding corpora (low-rank spectra) the
-  // same machinery runs at r ≪ dim; r is a per-corpus knob, not a law.
-  private val PcaR = 32
-  private val PcaCandK = 160 // prescreen width (recall-driven, see PcaR)
-
-  // learned PCA model per (session, corpus) — ingest-time artifact,
-  // embedded into the data-dependent oracle as literals (quantScales twin)
-  private def pcaModelFor(s: SparkSession, dir: String): Pca.Model =
-    Artifacts.value(s, dir, "pca_model", "embeddings") {
-      Pca.train(t(s, dir, "embeddings"), dim = embDim(s, dir), r = PcaR)
-    }
-
-  /** Embedding PCA projection ([[Pca]]): integer-exact covariance moments,
-    * fixed-sweep Jacobi on the driver, top-r components — the projected
-    * coordinates of every vector, flat (vec_id, comp, proj). The oracle
-    * replays the learned mean/components as literals through the identical
-    * left-assoc multiply-add chains. */
-  private def embeddingPca(s: SparkSession, dir: String): DataFrame =
-    Pca.projectAll(t(s, dir, "embeddings"), pcaModelFor(s, dir))
-      .orderBy("vec_id", "comp")
-
-  /** Reduced-dimension ANN ([[Pca.pcaTopK]]): prescreen in the r-dim
-    * projected space (r doubles of scan residency per vector instead of
-    * dim floats; a persisted ingest artifact at scale), exact full-width
-    * cosine re-rank of the top-candK — result deterministic regardless of
-    * projection error (the ann_topk_quant contract); recall vs true top-k
-    * is RecallCheck-gated. */
-  private def annTopKPca(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Pca.pcaTopK(emb, emb.filter(col("vec_id") < AnnQueries), AnnK, PcaCandK,
-        pcaModelFor(s, dir))
-      .orderBy("query_id", "rank")
-  }
-
-  private val KmK = 8      // clusters
-  private val KmIters = 4  // fixed Lloyd rounds — determinism, not convergence
-
-  // learned k-means centroids per (session, corpus) — ingest-time artifact,
-  // embedded into the data-dependent oracle as literals (pqTrain twin)
-  private def kmeansFor(s: SparkSession, dir: String): Array[Array[Double]] =
-    Artifacts.value(s, dir, "kmeans_centroids", "embeddings") {
-      Similarity.kmeansTrain(t(s, dir, "embeddings"), KmK, KmIters)
-    }
-
-  /** Distributed Lloyd's k-means ([[Similarity.kmeansTrain]]) — cluster
-    * assignment over LEARNED centroids (no pre-supplied labels): per
-    * vector, argmax cosine against the k trained centroids, ties to the
-    * lowest index. The oracle replays the learned centroids as literals
-    * through the identical IEEE chains (dot / norms / argmax fold), the
-    * srpOracleSql discipline; KmeansSpec pins retrain determinism and
-    * assignment == brute argmax-cosine. */
-  private def kmeansAssignQ(s: SparkSession, dir: String): DataFrame = {
-    val best = Similarity.kmeansArgmax(col("embedding"), kmeansFor(s, dir))
-    t(s, dir, "embeddings")
-      .select(col("vec_id"),
-              best.getField("i").cast("long").as("label"),
-              round(best.getField("c"), 4).as("cosine"))
-      .orderBy("vec_id")
-  }
-
-  /** DuckDB SQL for `kmeans_assign` with the learned centroids embedded.
-    * Exactness: per-vector dot and squared-norm chains are the explicit
-    * left-assoc sequences CosineSimExpr's loop runs; each centroid's
-    * squared norm is computed driver-side by the SAME loop and embedded as
-    * a literal (shortest-repr doubles parse back identically); the argmax
-    * fold is the engine's strictly-greater/keep-earlier comparison
-    * unrolled. Identical inputs + identical IEEE trees ⇒ identical labels
-    * and cosines. */
-  private def kmeansOracleSql(cents: Array[Array[Double]]): String = {
-    val dim = cents(0).length
-    def e(j: Int) = s"CAST(CAST(embedding[${j + 1}] AS FLOAT) AS DOUBLE)"
-    val nx = (0 until dim).map(j => s"${e(j)} * ${e(j)}").mkString(" + ")
-    val dots = cents.map(c =>
-      (0 until dim).map(j => s"${e(j)} * ${dlit(c(j))}").mkString(" + "))
-    val nys = cents.map { c =>
-      var s = 0.0; var j = 0
-      while (j < c.length) { s += c(j) * c(j); j += 1 }
-      s
-    }
-    val cosCols = cents.indices.map { i =>
-      s"""CASE WHEN sqrt(nx) * sqrt(${dlit(nys(i))}) = 0.0 THEN 0.0
-               ELSE d$i / (sqrt(nx) * sqrt(${dlit(nys(i))})) END AS c$i"""
-    }.mkString(",\n                ")
-    // unrolled argmax fold: (m, l) starts at (c0, 0); strictly-greater
-    // advances — the kmeansArgmax when(b.c > a.c, b) tie rule
-    val (mExpr, lExpr) = cents.indices.drop(1).foldLeft(("c0", "0")) {
-      case ((m, l), i) =>
-        (s"CASE WHEN c$i > $m THEN c$i ELSE $m END",
-         s"CASE WHEN c$i > $m THEN $i ELSE $l END")
-    }
-    s"""WITH b AS (SELECT vec_id,
-                ${dots.zipWithIndex.map { case (d, i) => s"$d AS d$i" }
-                      .mkString(",\n                ")},
-                $nx AS nx
-              FROM embeddings),
-        s AS (SELECT vec_id,
-                $cosCols
-              FROM b)
-        SELECT vec_id, CAST($lExpr AS BIGINT) AS label,
-               round($mExpr, 4) AS cosine
-        FROM s ORDER BY vec_id"""
-  }
-
-  /** Product-quantized ANN ([[Similarity.pqTopK]]): the memory-bound lane —
-    * M=8 byte codes per vector (32× residency cut vs float32 at D=64),
-    * fixed-point ADC prescreen (sum of longs: addition-order-exact), exact
-    * re-rank of the top-candK. The oracle replays the learned codebooks as
-    * literals; encoding argmin and ADC entries are pinned IEEE chains. */
-  private def annTopKPq(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Similarity.pqTopK(emb, emb.filter(col("vec_id") < AnnQueries), AnnK,
-        PqCandK, pqCodebooksFor(s, dir), PqScaleBits)
-      .orderBy("query_id", "rank")
-  }
-
-  private val IvfProbes = 3
-
-  private def annTopKIvf(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Similarity.ivfTopK(emb, emb.filter(col("vec_id") < AnnQueries), AnnK, IvfProbes)
-      .orderBy("query_id", "rank")
-  }
-
-  /** Stable per-(session,sfDir) IVF disk layout — the cell-partitioned
-    * corpus directory is an INGEST-TIME artifact (same amortization class as
-    * `lsh_index_hist`): built once, probed by every `ann_topk_ivf_disk`
-    * execution. At 100 TB the alternative — rewriting the corpus per probe —
-    * would make a read query pay a full ingest. */
-  private def ivfLayoutFor(s: SparkSession, dir: String): String =
-    Artifacts.tree(s, dir, "ivf_layout", "embeddings") { p =>
-      Similarity.writeIvfLayout(t(s, dir, "embeddings"), p)
-    }
-
-  /** The IVF coarse quantizer (cell → centroid), the layout's companion
-    * ingest-time artifact — broadcast-sized, built once per (session, dir). */
-  private def ivfCentroidsFor(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, dir, "ivf_centroids", "embeddings") {
-      Similarity.ivfCentroidTable(t(s, dir, "embeddings"))
-    }
-
-  /** The IVF DISK lane's steady-state op: probe a PERSISTED cell-partitioned
-    * layout ([[ivfLayoutFor]], warmed at ingest) through partition pruning +
-    * exact re-rank. Result is defined to be identical to [[annTopKIvf]] —
-    * same quantizer, same probe ranking, same candidates — so it shares that
-    * oracle; what this query additionally exercises is the pruned read path
-    * (PartitionFilters plan shape is spec-asserted in PipelineOpsSpec). */
-  private def annTopKIvfDisk(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Similarity.ivfTopKFromLayout(s, ivfLayoutFor(s, dir),
-        emb.filter(col("vec_id") < AnnQueries), AnnK, IvfProbes,
-        centroids = Some(ivfCentroidsFor(s, dir)))
-      .orderBy("query_id", "rank")
-  }
-
-  /** The HISTORICAL snapshot's IVF index — layout + frozen quantizer built
-    * over the corpus minus the incoming batch (`vec_id % 5 != 0`, the same
-    * snapshot split the document-side incremental operators use). Ingest
-    * artifacts: a production pipeline builds them when the historical
-    * snapshot lands, then every subsequent batch probes/appends. */
-  private def ivfHistLayoutFor(s: SparkSession, dir: String): String =
-    Artifacts.tree(s, dir, "ivf_hist_layout", "embeddings") { p =>
-      Similarity.writeIvfLayout(
-        t(s, dir, "embeddings").filter(col("vec_id") % 5 =!= 0), p)
-    }
-
-  private def ivfHistCentroidsFor(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, dir, "ivf_hist_centroids", "embeddings") {
-      Similarity.ivfCentroidTable(
-        t(s, dir, "embeddings").filter(col("vec_id") % 5 =!= 0))
-    }
-
-  /** Cross-snapshot incremental ANN: the new batch (`vec_id % 5 == 0`)
-    * joins the persisted historical index under the FROZEN quantizer
-    * ([[Similarity.ivfIncrementalTopK]]), and the standard probe set —
-    * which spans both snapshots — is answered over the updated index.
-    * The timed op is the steady-state maintenance + probe; index build is
-    * the warmed ingest artifact, exactly as for `ann_topk_ivf_disk`. */
-  private def annIncrementalIvf(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    Similarity.ivfIncrementalTopK(s, ivfHistLayoutFor(s, dir),
-        newBatch = emb.filter(col("vec_id") % 5 === 0),
-        queries = emb.filter(col("vec_id") < AnnQueries),
-        AnnK, IvfProbes, centroids = Some(ivfHistCentroidsFor(s, dir)))
-      .orderBy("query_id", "rank")
-  }
-
-  private def minhashNearDup(s: SparkSession, dir: String): DataFrame =
-    minhashPairs(s, dir).orderBy("id_a", "id_b")
-
-  private def simhashNearDup(s: SparkSession, dir: String): DataFrame =
-    Dedup.simhashNearDuplicates(t(s, dir, "documents"), maxHamming = 3)
-      .orderBy("id_a", "id_b")
-
-  /** Z-order (Morton) key math through the oracle gate: the 50 events whose
-    * (user, second-of-day) interleave lowest on the space-filling curve. The
-    * layout op itself is write-time (Layout.appendZOrdered, plan-asserted in
-    * tests); this pins the bit math an external engine must agree on. */
-  private def zorderEventKeys(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .select(col("event_id"),
-              (col("user_id").cast("long") % 65536).as("u"),
-              (unix_timestamp(col("ts")) % 65536).as("sec"))
-      .withColumn("z", graft.sources.Layout.zvalue(Seq(col("u"), col("sec")), bits = 16))
-      .orderBy("z", "event_id")
-      .limit(50)
-
-  /** Top-3 rarity-weighted terms per doc (log-free tf-idf variant; see
-    * CorpusModel.topTermsByRarity for the determinism rationale). Consumes
-    * the shared [[docsSharded]] fan-out: the whole-corpus tokenize + term
-    * count is a compute-bound pass that a single parquet split would
-    * serialize onto one task (the same artifact the similarity joins pay —
-    * at real scale the corpus arrives as thousands of splits). */
-  private def tfidfTopTerms(s: SparkSession, dir: String): DataFrame =
-    CorpusModel.topTermsByRarity(docsSharded(s, dir), k = 3)
-      .orderBy("doc_id", "term")
-
-  private val Bm25Terms = Seq("spark", "vector", "customer")
-
-  /** BM25 ranked retrieval ([[CorpusModel.bm25TopK]]): top-10 documents for
-    * a fixed 3-term query. The emitted columns are the integer per-doc
-    * stats; the float score stays internal (libm `ln` is not bit-pinned
-    * across engines) — the top-k SET is the oracle-checked contract. The
-    * only cross-engine hazard is a rank-10/11 near-tie between DISTINCT
-    * profiles; MEASURED boundary gaps on the pinned corpora are 3.1e-3 /
-    * 1.6e-2 / 9.8e-3 relative (sf0.1/0.01/0.001) — ~10^13 ulps of headroom
-    * over the ≤1-ulp `ln` divergence, the same verified-at-all-scales
-    * justification as the SRP oracle. Exact ties (identical profiles)
-    * break on doc_id identically in both engines. */
-  private def bm25Search(s: SparkSession, dir: String): DataFrame =
-    CorpusModel.bm25TopK(t(s, dir, "documents"), Bm25Terms, topK = 10)
-      .select(col("doc_id"), col("n_hits"), col("tf_total"), col("dl"))
-      .orderBy("doc_id")
-
-  /** Reciprocal-rank fusion (Cormack et al.'s RRF, the standard hybrid-
-    * search combiner): BM25 top-20 fused with an all-integer raw-term-
-    * frequency ranking of the SAME query — both rankings derive from one
-    * [[CorpusModel.bm25Scores]] tf pass, no re-tokenization per ranker.
-    * rrf(d) = Σ_r 1/(60 + rank_r(d)), absent rankings contribute 0; each
-    * term is one correctly-rounded division of exact integers, the sum is
-    * one pinned addition — so scores (and the final ranking) reproduce
-    * bit-for-bit.
-    *
-    * Plan shape for 100 TB: each ranker's top-20 is a TakeOrderedAndProject
-    * over the ONCE-materialized score frame (distributed per-partition
-    * top-k, driver merge of 20·P rows) — never a rank window over the
-    * matching-doc-sized frame, which would funnel every scored document
-    * through one task. Ranks over ranks > 20 contribute nothing to RRF
-    * (absent = 0), so cutting BEFORE ranking is semantically exact. The
-    * rank assignment itself is window-free: a constant-size global fold
-    * (collect_list → array_sort → posexplode) over ≤20 rows per ranker and
-    * ≤40 fused rows (the bounded single-partition aggregates PlanLint
-    * allow-lists, like bm25_search's 1-row corpus stats). */
-  private def hybridRrfSearch(s: SparkSession, dir: String): DataFrame = {
-    // ONE tf pass, materialized: both top-20 cuts read the checkpointed
-    // frame instead of re-running the tokenize/tf/df pipeline per ranker
-    val scores = CorpusModel.bm25Scores(t(s, dir, "documents"), Bm25Terms)
-      .localCheckpoint(true)
-    // positional ranks for a ≤20-row frame without a WindowExec: sort key
-    // ascending = desired order (negating a finite double/long is exact),
-    // doc_id breaks ties, payload fields after the unique tie-break never
-    // participate in the comparison
-    def foldRanks(top: DataFrame, sortKey: Column, rankName: String): DataFrame =
-      top.agg(array_sort(collect_list(struct(sortKey.as("k"),
-                col("doc_id").as("doc_id")))).as("a"))
-        .select(posexplode(col("a")).as(Seq("pos", "x")))
-        .select(col("x.doc_id").as("doc_id"),
-                (col("pos") + 1).cast("long").as(rankName))
-    val bmR = foldRanks(
-      scores.orderBy(col("score").desc, col("doc_id")).limit(20),
-      negate(col("score")), "rank_bm25")
-    val tfR = foldRanks(
-      scores.orderBy(col("tf_total").desc, col("n_hits").desc,
-                     col("doc_id")).limit(20),
-      struct(negate(col("tf_total")).as("t"), negate(col("n_hits")).as("h")),
-      "rank_tf")
-    // union-of-top-20s fusion: one hash aggregate over ≤40 rows (a full
-    // outer join would plan a sort-merge over two exchanges for the same
-    // constant-size result)
-    val fused = bmR.withColumn("rank_tf", lit(null).cast("long"))
-      .unionByName(tfR.withColumn("rank_bm25", lit(null).cast("long")))
-      .groupBy(col("doc_id"))
-      .agg(max(col("rank_bm25")).as("rank_bm25"),
-           max(col("rank_tf")).as("rank_tf"))
-      .withColumn("rrf_score",
-        coalesce(lit(1.0) / (lit(60L) + col("rank_bm25")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60L) + col("rank_tf")), lit(0.0)))
-    fused.agg(array_sort(collect_list(struct(negate(col("rrf_score")).as("k"),
-          col("doc_id").as("doc_id"), col("rank_bm25").as("rank_bm25"),
-          col("rank_tf").as("rank_tf")))).as("a"))
-      .select(posexplode(col("a")).as(Seq("pos", "x")))
-      .select(col("x.doc_id").as("doc_id"), col("x.rank_bm25").as("rank_bm25"),
-              col("x.rank_tf").as("rank_tf"),
-              negate(col("x.k")).as("rrf_score"),
-              (col("pos") + 1).cast("long").as("final_rank"))
-      .orderBy("final_rank")
-  }
-
-  /** Incremental near-dup — the daily-ingest shape: docs with doc_id % 5 == 0
-    * replay as the NEW batch against the remaining 80% as the historical
-    * corpus, whose persisted LSH index is probed without recomputing any
-    * historical signature. Pairs restricted to those touching a new doc.
-    *
-    * The historical index is `materialized` per (session, sfDir): in
-    * production it is a table written incrementally at ingest (see
-    * [[graft.streaming.StreamingDedup]]), so its build cost is amortized
-    * across the corpus's lifetime — the steady-state cost of this operator,
-    * and what the query measures, is the PROBE. */
-  private def incrementalNearDup(s: SparkSession, dir: String): DataFrame = {
-    val docs = docsSharded(s, dir) // ingest-sharded corpus (see docsSharded)
-    val newDocs = docs.filter(col("doc_id") % 5 === 0)
-    val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-    val (index, sigs, hot) = lshHist(s, dir, corpus)
-    Dedup.incrementalNearDuplicates(newDocs, corpus, index, threshold = 0.5,
-        corpusSigs = Some(sigs), corpusHot = Some(hot), allDocs = Some(docs))
-      .orderBy("id_a", "id_b")
-  }
-
-  /** Exact word-bigram Jaccard pairs (adaptive AllPairs / count-based plan)
-    * — the deterministic complement to the probabilistic MinHash path. The
-    * corpus's true near-dups all score ≥ 0.909, so 0.8 keeps the same pair
-    * set as 0.5 with wide margins on both sides of the gate. */
-  /** The documents table fanned to one task per core and pinned — an
-    * INGEST-TIME artifact like the LSH index: at real scale the corpus
-    * arrives as thousands of splits, so the tiny local corpus's single
-    * parquet split (plus a per-query `.rdd` probe and repartition) is a
-    * bench artifact each similarity join would otherwise re-pay (~2-3 s of
-    * the 4.5 s containment cold time was exactly this). Queries that scan
-    * once stay on the plain reader — pushdown/pruning matter more there. */
-  private def docsSharded(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, dir, "docs_sharded", "documents") {
-      val docs = t(s, dir, "documents")
-      docs.repartition(s.sparkContext.defaultParallelism)
-    }
-
-  /** Directed containment (quote/subset) pairs over word trigrams — the
-    * asymmetric complement to [[ngramJaccardNearDup]] (a doc 90%-contained
-    * in a much larger one scores high here while its Jaccard stays low). */
-  private def containmentNearDup(s: SparkSession, dir: String): DataFrame =
-    Dedup.containmentPairs(docsSharded(s, dir), threshold = 0.8, n = 3)
-      .orderBy("id_a", "id_b")
-
-  private def ngramJaccardNearDup(s: SparkSession, dir: String): DataFrame =
-    Dedup.ngramJaccardPairs(docsSharded(s, dir), threshold = 0.8, n = 2)
-      .orderBy("id_a", "id_b")
-
-  /** Fuzzy key dedup: exact edit-distance self-join (Ed-Join q-gram prefix
-    * filter + banded thresholded levenshtein, [[graft.operators.Dedup
-    * .editDistancePairs]]) on each document's leading 64 characters — the
-    * "same record, typo-level divergence" dedup a title/URL key carries in a
-    * real pipeline. k=8 on this corpus surfaces the exact-prefix groups plus
-    * one genuine fuzzy pair; the oracle brute-forces thresholded
-    * levenshtein over the length-banded pair space in DuckDB. */
-  /** The edit-distance key+gram table (see [[Dedup.editDistanceKeys]]) is a
-    * per-corpus ingest artifact — one native shingle pass over the 64-char
-    * keys, persisted beside the corpus in production — so it is built once
-    * per (session, sfDir) and warmed untimed by [[warmIngestArtifacts]]:
-    * the timed `editdist_neardup` measures the candidate join + verify, not
-    * a replay of amortized ingest work (it was the largest cold-artifact
-    * line in BENCH_r09: 10.25 s first-run vs 2.25 s steady). */
-  private def editdistKeysFor(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, dir, "editdist_keys", "documents") {
-      Dedup.editDistanceKeys(
-        docsSharded(s, dir).select(col("doc_id"),
-          substring(col("text"), 1, 64).as("key")),
-        q = 2, keyCol = "key")
-    }
-
-  private def editDistNearDup(s: SparkSession, dir: String): DataFrame =
-    Dedup.editDistancePairs(
-        docsSharded(s, dir).select(col("doc_id"),
-          substring(col("text"), 1, 64).as("key")),
-        maxDist = 8, q = 2, keyCol = "key",
-        precomputedKeys = Some(editdistKeysFor(s, dir)))
-      .orderBy("id_a", "id_b")
-
-  /** The synthetic corpus holds no true near-duplicate pairs (max pairwise
-    * cosine ≈ 0.51 at sf0.01), which made a threshold-0.95 run vacuously
-    * empty. The contract query therefore PLANTS near-dups: every 25th vector
-    * gets a perturbed copy (pos-0 component ×1.25 in double space, id shifted
-    * by 1e6) unioned into the corpus — each copy must pair with its source at
-    * ≥0.95 (cosine ≈ 0.999) and with nothing else. Deterministic and
-    * reproducible in SQL, so the query is exactly oracle-checked. */
-  private def embeddingNearDup(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-    val planted = base.filter(col("vec_id") % 25 === 0)
-      .select((col("vec_id") + lit(1000000L)).as("vec_id"),
-              transform(col("embedding"),
-                        (x, i) => when(i === 0, x * lit(1.25)).otherwise(x)).as("embedding"))
-    Similarity.embeddingNearDuplicates(base.unionByName(planted),
-                                       threshold = 0.95, dim = embDim(s, dir))
-      .orderBy("id_a", "id_b")
-  }
-
-  /** SemDeDup over the planted corpus ([[Similarity.semanticDedup]]):
-    * cluster-bounded pairwise cosine, keep-lowest-id policy. Reuses
-    * embedding_neardup's planted copies (the natural corpus has no
-    * semantic duplicates — max pairwise cosine ≈ 0.51) with each copy
-    * keeping its source's cluster label, so every copy must be dropped and
-    * nothing else. Emitted per cluster: sizes plus an md5 digest of the
-    * kept id set — the oracle replays plant, pairwise, policy, and digest. */
-  private def semanticDedupStats(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "embeddings")
-      .select(col("vec_id"), col("label"),
-              col("embedding").cast("array<double>").as("embedding"))
-    val planted = base.filter(col("vec_id") % 25 === 0)
-      .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("label"),
-              transform(col("embedding"),
-                        (x, i) => when(i === 0, x * lit(1.25)).otherwise(x)).as("embedding"))
-    Similarity.semanticDedup(base.unionByName(planted), threshold = 0.95)
-      .groupBy(col("label").cast("int").as("label"))
-      .agg(count(lit(1)).as("n_total"),
-           sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"),
-           md5(concat_ws(",",
-                 sort_array(collect_list(when(col("kept"), col("vec_id"))))
-                   .cast("array<string>")).cast("binary")).as("kept_md5"))
-      .orderBy("label")
-  }
-
-  /** Gopher/MassiveText-style per-document quality rules (Rae et al. 2021),
-    * the word-level subset (the corpus has no line structure): word count in
-    * [50, 100k], mean word length in [3, 10], ≥ 80% of whitespace tokens
-    * contain a letter, symbol-to-word ratio ≤ 0.1, ≥ 2 stopword hits. Every
-    * boundary is evaluated in INTEGER cross-multiplied form (sum ≥ 3·n
-    * instead of sum/n ≥ 3) so no engine ever divides — the flags are exact
-    * everywhere. Pure codegen'd projection, parquet-scan speed. */
-  private def gopherQuality(s: SparkSession, dir: String): DataFrame = {
-    // all eight counters from ONE native byte pass (TextStatsExpr; codegen
-    // subexpression elimination evaluates the shared struct once per row) —
-    // the HOF regex/aggregate forms survive as GopherStatsParity's reference
-    val st = graft.functions.NativeExprs.textStats(
-      col("text"), TextAnalysis.Stopwords("en"))
-    val nWords = st.getField("n_words")
-    val sumWlen = st.getField("sum_wlen")
-    val nToks = st.getField("n_toks")
-    val nAlphaToks = st.getField("n_alpha_toks")
-    val nSym = st.getField("n_hash") + st.getField("n_ellipsis")
-    val nStop = st.getField("n_stop")
-    t(s, dir, "documents").select(
-        col("doc_id"), nWords.as("n_words"), sumWlen.as("sum_wlen"),
-        (nWords >= 50L && nWords <= 100000L).as("ok_nwords"),
-        (sumWlen >= nWords * 3L && sumWlen <= nWords * 10L).as("ok_wlen"),
-        (nAlphaToks * 5L >= nToks * 4L).as("ok_alpha"),
-        (nSym * 10L <= nWords).as("ok_symbols"),
-        (nStop >= 2L).as("ok_stopwords"))
-      .withColumn("gopher_pass",
-        col("ok_nwords") && col("ok_wlen") && col("ok_alpha") &&
-        col("ok_symbols") && col("ok_stopwords"))
-      .orderBy("doc_id")
-  }
-
-  private val QcIters = 30
-  private val QcLr = 1.0
-  private val QcLabelChars = 300
-
-  // learned classifier weights per (session, corpus) — the same
-  // data-dependent-oracle lifecycle as the BPE merges and the int8 scales
-  private def qcWeightsFor(s: SparkSession, dir: String): Array[Double] =
-    Artifacts.value(s, dir, "qc_weights", "documents") {
-      QualityClassifier.train(t(s, dir, "documents"),
-        col("n_chars") >= QcLabelChars, QcIters, QcLr)
-    }
-
-  /** Model-based quality filter ([[QualityClassifier]]): logistic
-    * regression trained on the corpus (label: long documents), applied as a
-    * LINEAR-margin scoring pass. The oracle replays the learned weights as
-    * literals over the identical left-associated feature fold, so every
-    * margin — and the `pass` flag — reproduces bit-for-bit. */
-  private def qualityClassifierQ(s: SparkSession, dir: String): DataFrame =
-    QualityClassifier.score(t(s, dir, "documents"), qcWeightsFor(s, dir))
-      .select(col("doc_id"), col("n_chars"), col("margin"), col("pass"))
-      .orderBy("doc_id")
-
-  private def qcOracleSql(w: Array[Double]): String =
-    s"""WITH f AS (
-          SELECT doc_id, n_chars,
-                 CAST(len(ws) AS DOUBLE) AS nw,
-                 CAST(coalesce(list_sum(list_transform(ws, x -> length(x))), 0)
-                      AS DOUBLE) AS swl,
-                 CAST(len(list_filter(ws, x -> x IN ($EnStop))) AS DOUBLE) AS nstop,
-                 CAST(length(regexp_replace(text, '[^!-/:-@\\[-`{-~]', '', 'g'))
-                      AS DOUBLE) AS np,
-                 CAST(length(text) AS DOUBLE) AS nc
-          FROM (SELECT doc_id, n_chars, text,
-                       regexp_extract_all(lower(text), '[a-z]+') AS ws
-                FROM documents)),
-        m AS (
-          SELECT doc_id, n_chars,
-                 1.0 * ${w(0)}
-                 + (nw / 100.0) * ${w(1)}
-                 + coalesce(nstop / nullif(nw, 0), 0.0) * ${w(2)}
-                 + (coalesce(swl / nullif(nw, 0), 0.0) / 10.0) * ${w(3)}
-                 + coalesce(np / nullif(nc, 0), 0.0) * ${w(4)} AS margin
-          FROM f)
-        SELECT doc_id, n_chars, margin, margin > 0 AS pass
-        FROM m ORDER BY doc_id"""
-
-  private val PhraseTerms = Seq("key", "value")
-
-  /** Exact phrase search ([[CorpusModel.phraseSearch]]): positional-postings
-    * adjacency join for the fixed phrase — the scalable `LIKE '%key value%'`.
-    * All-integer output (match count, first 0-based word position). */
-  private def phraseSearchDocs(s: SparkSession, dir: String): DataFrame =
-    CorpusModel.phraseSearch(t(s, dir, "documents"), PhraseTerms)
-      .orderBy("doc_id")
-
-  /** ClickHouse `quantileExactWeighted(0.5)(price, quantity)` per return
-    * flag ([[RobustStats.weightedQuantile]]): the smallest price whose
-    * cumulative quantity reaches half the group total. The result is a
-    * data value — no interpolation, exact in any engine. */
-  private def weightedMedianPrice(s: SparkSession, dir: String): DataFrame =
-    RobustStats.weightedQuantiles(t(s, dir, "lineitem"), "l_returnflag",
-        "l_extendedprice", "l_quantity", qs = Seq(0.25, 0.5, 0.75))
-      .withColumnRenamed("wq_0.25", "p25_price")
-      .withColumnRenamed("wq_0.5", "weighted_median")
-      .withColumnRenamed("wq_0.75", "p75_price")
-      .orderBy("l_returnflag")
-
-  /** Time-weighted average value per user ([[EventAnalytics
-    * .timeWeightedAvg]]): step-function mean over closed inter-event
-    * intervals, decimal-exact numerator, digit-string surfaced. */
-  private def twaValue(s: SparkSession, dir: String): DataFrame =
-    EventAnalytics.timeWeightedAvg(t(s, dir, "events"))
-      .orderBy("user_id")
-
-  /** ClickHouse `intervalLengthSum` per supplier: the union length (in
-    * days) of each supplier's [ship, receipt] intervals, overlapping spans
-    * merged by the classic sweep: within the (start, end, unique-key)-
-    * ordered per-key stream, an interval opens a new ISLAND iff its start
-    * exceeds the running max end of all earlier intervals; islands then
-    * aggregate to (min start, max end). Per-key windows over a total order
-    * — deterministic, all-integer (dates), and the per-key outputs are
-    * provably independent of how ties were ordered (a tied interval always
-    * lands in its peer's island). */
-  private def intervalUnionDays(s: SparkSession, dir: String): DataFrame = {
-    // interval = [ship, ship + quantity days] (the schema carries no
-    // receipt date; quantity is integral 1..50, so ends are exact dates)
-    val li = t(s, dir, "lineitem").select(
-      col("l_suppkey"), to_date(col("l_shipdate")).as("s"),
-      date_add(to_date(col("l_shipdate")), col("l_quantity").cast("int")).as("e"),
-      col("l_orderkey"), col("l_linenumber"))
-    val w = Window.partitionBy(col("l_suppkey"))
-      .orderBy(col("s").asc, col("e").asc, col("l_orderkey").asc,
-               col("l_linenumber").asc)
-    val prevMax = max(col("e")).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    // day granularity: an interval starting the DAY AFTER the running max
-    // end continues the same covered run, so adjacency merges too —
-    // islands are exactly the maximal runs of covered days
-    val isNew = when(prevMax.isNull || col("s") > date_add(prevMax, 1), 1L)
-      .otherwise(0L)
-    li.withColumn("island",
-        sum(isNew).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("l_suppkey"), col("island"))
-      .agg(min(col("s")).as("i_s"), max(col("e")).as("i_e"),
-           count(lit(1)).as("n"))
-      .groupBy(col("l_suppkey"))
-      .agg(sum(col("n")).as("n_intervals"),
-           count(lit(1)).as("n_islands"),
-           sum(datediff(col("i_e"), col("i_s")) + 1).cast("long").as("covered_days"))
-      .orderBy("l_suppkey")
-  }
-
-  /** Per-GROUP mergeable frequent-items states ([[graft.functions
-    * .FrequencySketch]]): top-5 words per source via one sketch state per
-    * (source, half), re-merged per source — the grouped form of
-    * topk_words_sketch's split-merge lifecycle. Oracled because the
-    * corpus vocabulary is far below the sketch map size (never evicts →
-    * exact); the evicting regime is error-bound-tested in ScalaTest. */
-  private def topkWordsBySource(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.FrequencySketch
-    val wr = Window.partitionBy(col("source"))
-      .orderBy(col("n").desc, col("word"))
-    t(s, dir, "documents")
-      .select(col("source"), (col("doc_id") % 2).as("half"),
-              explode(TextAnalysis.words(col("text"))).as("word"))
-      .groupBy(col("source"), col("half"))
-      .agg(FrequencySketch.topKState(col("word")).as("state"))
-      .groupBy(col("source"))
-      .agg(FrequencySketch.topKMergeState(col("state")).as("merged"))
-      .select(col("source"), explode(FrequencySketch.topKEstimate(col("merged"), 40)).as("t"))
-      .select(col("source"), col("t.item").as("word"), col("t.est").as("n"))
-      .withColumn("rank", row_number().over(wr))
-      .filter(col("rank") <= 5)
-      .select(col("source"), col("rank"), col("word"), col("n"))
-      .orderBy("source", "rank")
-  }
-
-  /** Trailing 30-day distinct users via MERGED PER-DAY HLL STATES — the
-    * sketch path for wide rolling windows where [[rolling7dUsers]]'s exact
-    * fan-out gets expensive: one `uniqState` per day (30 small binary
-    * sketches here; always #days sketches regardless of corpus size), each
-    * fanned to the ≤30 window ends it covers, `uniqMerge` per window end.
-    * At 100 TB the per-day states are the ingest-time rollup and the
-    * window merge never touches raw events — ClickHouse's
-    * `uniqState`-in-a-materialized-view idiom. The exact count rides along
-    * (same fan-out over the distinct (user, day) pairs) and gates the
-    * estimate through the oracled `est_ok` envelope (HLL lgK=12 ⇒ σ ≈
-    * 1.6%; the gate allows 5% + a small absolute floor). */
-  private def rolling30dUsersHll(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events").select(col("user_id"), to_date(col("ts")).as("day"))
-    val days = ev.select(col("day")).distinct()
-    val exact = fanToWindowEnds(ev.distinct(), days, 30)
-      .groupBy(col("wend")).agg(count_distinct(col("user_id")).as("users_30d"))
-    val est = fanToWindowEnds(ev.groupBy(col("day"))
-        .agg(Sketches.uniqState(col("user_id")).as("st")), days, 30)
-      .groupBy(col("wend")).agg(Sketches.uniqMerge(col("st")).as("est"))
-    exact.join(est, Seq("wend"))
-      .select(date_format(col("wend"), "yyyy-MM-dd").as("day"),
-              col("users_30d"),
-              (abs(col("est") - col("users_30d")) <=
-                 greatest(lit(4.0), col("users_30d") * lit(0.05))).as("est_ok"))
-      .orderBy("day")
-  }
-
-  /** Exact bitmap segment algebra ([[graft.functions.BitmapAgg]] —
-    * ClickHouse `groupBitmap` family): the click and purchase audiences
-    * built as mergeable bitmap states (one per (segment, half), re-merged
-    * per segment — the same split-merge lifecycle every persisted state
-    * leg proves), then AND/OR/ANDNOT cardinalities between the two
-    * segments. Exact set algebra, unlike the HLL leg: audience overlap is
-    * precise. 1-row output — the sketch-algebra tail. */
-  private def segBitmapAlgebra(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.BitmapAgg
-    // each side ends in a GLOBAL merge aggregate, so an empty segment still
-    // yields one row holding the empty bitmap (zero counts), exactly like
-    // the oracle's scalar subqueries — a groupBy(segment) pivot would
-    // instead drop the output row when a segment has no events
-    def segmentState(tpe: String, as: String): DataFrame =
-      t(s, dir, "events")
-        .filter(col("event_type") === tpe)
-        .withColumn("half", pmod(col("user_id"), lit(2)))
-        .groupBy(col("half"))
-        .agg(BitmapAgg.bitmapState(col("user_id")).as("st"))
-        .agg(BitmapAgg.bitmapMergeState(col("st")).as(as))
-    val a = segmentState("click", "a")
-    val b = segmentState("purchase", "b")
-    a.crossJoin(b).select(
-      BitmapAgg.bitmapCard(col("a")).as("n_click"),
-      BitmapAgg.bitmapCard(col("b")).as("n_purchase"),
-      BitmapAgg.bitmapAndCard(col("a"), col("b")).as("n_both"),
-      BitmapAgg.bitmapOrCard(col("a"), col("b")).as("n_either"),
-      BitmapAgg.bitmapAndNotCard(col("a"), col("b")).as("n_click_only"))
-  }
-
-  /** Theta-sketch segment set algebra through the oracle gate — the
-    * ClickHouse `uniqTheta` combinator family ([[graft.functions
-    * .ThetaSketch]]): persisted per-half states built and re-merged like a
-    * state table, then INTERSECTED / DIFFERENCED after aggregation — the ops
-    * HLL states cannot do. Output carries the exact audience counts
-    * (hash-matched against DuckDB) plus `*_est_ok` booleans asserting each
-    * sketch/set-op estimate sits inside its own deterministic ±3σ bounds —
-    * TRUE on both sides at any scale, flipped by a broken sketch. Each side
-    * ends in a GLOBAL aggregate so an empty segment still yields one row. */
-  private def segThetaAlgebra(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.ThetaSketch
-    def segmentState(tpe: String, as: String): DataFrame =
-      t(s, dir, "events")
-        .filter(col("event_type") === tpe)
-        .withColumn("half", pmod(col("user_id"), lit(2)))
-        .groupBy(col("half"))
-        .agg(ThetaSketch.thetaState(col("user_id")).as("st"))
-        .agg(ThetaSketch.thetaUnionState(col("st")).as(as))
-    val flags = t(s, dir, "events")
-      .filter(col("event_type").isin("click", "purchase"))
-      .groupBy(col("user_id"))
-      .agg(max(when(col("event_type") === "click", 1).otherwise(0)).as("c"),
-           max(when(col("event_type") === "purchase", 1).otherwise(0)).as("p"))
-    val exact = flags.agg(
-      sum(col("c")).cast("long").as("n_click"),
-      sum(col("p")).cast("long").as("n_purchase"),
-      count(lit(1)).as("n_either"),
-      sum(col("c") * col("p")).cast("long").as("n_both"),
-      sum(col("c") * (lit(1) - col("p"))).cast("long").as("n_click_only"))
-    val a = segmentState("click", "a")
-    val b = segmentState("purchase", "b")
-    exact.crossJoin(a).crossJoin(b).select(
-      col("n_click"), col("n_purchase"), col("n_either"), col("n_both"),
-      col("n_click_only"),
-      ThetaSketch.thetaBoundsContain(col("a"), col("n_click")).as("click_est_ok"),
-      ThetaSketch.thetaBoundsContain(col("b"), col("n_purchase")).as("purchase_est_ok"),
-      ThetaSketch.thetaBoundsContain(
-        ThetaSketch.thetaUnion(col("a"), col("b")), col("n_either")).as("union_est_ok"),
-      ThetaSketch.thetaBoundsContain(
-        ThetaSketch.thetaIntersect(col("a"), col("b")), col("n_both")).as("both_est_ok"),
-      ThetaSketch.thetaBoundsContain(
-        ThetaSketch.thetaAnotB(col("a"), col("b")), col("n_click_only")).as("clickonly_est_ok"))
-  }
-
-  /** Weekly audience retention FROM PERSISTED SKETCH STATES — the canonical
-    * uniqTheta production shape: one theta state per week survives in a
-    * state table, and "how many of last week's actives returned" is a
-    * lag-window INTERSECTION over adjacent states — no re-scan of the event
-    * log, the operation HLL states cannot answer. The exact adjacent-week
-    * counts ride along (hash-matched against DuckDB) and each intersection
-    * estimate is gated by its own deterministic ±3σ bounds. The lag window
-    * runs over the #weeks-sized aggregated frame — metadata-sized at any
-    * corpus scale. */
-  private def thetaWeeklyRetention(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.ThetaSketch
-    val uw = t(s, dir, "events")
-      .select(col("user_id"), date_trunc("week", col("ts")).cast("date").as("week"))
-      .distinct()
-      .localCheckpoint() // consumed by both the exact join and the states
-    val exact = uw.alias("a")
-      .join(uw.alias("b"),
-        col("b.user_id") === col("a.user_id") &&
-        col("b.week") === date_sub(col("a.week"), 7))
-      .groupBy(col("a.week").as("week"))
-      .agg(count(lit(1)).as("n_retained"))
-    val states = uw.groupBy(col("week"))
-      .agg(ThetaSketch.thetaState(col("user_id")).as("st"),
-           count(lit(1)).as("n_active"))
-    val w = Window.orderBy(col("week"))
-    states
-      .withColumn("prev_st", lag(col("st"), 1).over(w))
-      .withColumn("prev_week", lag(col("week"), 1).over(w))
-      .join(exact, Seq("week"), "left")
-      .filter(col("prev_st").isNotNull && col("prev_week") === date_sub(col("week"), 7))
-      .withColumn("n_retained", coalesce(col("n_retained"), lit(0L)))
-      .select(date_format(col("week"), "yyyy-MM-dd").as("week"),
-              col("n_active"), col("n_retained"),
-              ThetaSketch.thetaBoundsContain(
-                ThetaSketch.thetaIntersect(col("prev_st"), col("st")),
-                col("n_retained")).as("retained_est_ok"))
-      .orderBy("week")
-  }
-
-  /** Full cohort-retention matrix ([[EventAnalytics.cohortMatrix]]):
-    * distinct active users per (first-seen cohort day, day offset). */
-  private def cohortMatrixQ(s: SparkSession, dir: String): DataFrame =
-    EventAnalytics.cohortMatrix(t(s, dir, "events"))
-      .select(date_format(col("cohort_day"), "yyyy-MM-dd").as("cohort_day"),
-              col("offset"), col("n_active"))
-      .orderBy("cohort_day", "offset")
-
-  /** Tokenizer-vocabulary induction: the 100 most frequent words with
-    * counts — the seed step of building a BPE/WordPiece vocab over a corpus.
-    * One explode + count; map-side partial aggregation makes the shuffle
-    * O(distinct words), and the top-k is a TakeOrdered, not a global sort. */
-  private def vocabTopWords(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(explode(TextAnalysis.words(col("text"))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("word"))
-      .limit(100)
-
-  /** Shard-vs-shard vocabulary drift ([[CorpusModel.vocabOverlap]]): the
-    * two doc_id-parity halves of the corpus compared by top-200-word
-    * overlap — all-integer sets with word-string tie-breaks, exactly
-    * engine-reproducible. */
-  private def vocabDrift(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    CorpusModel.vocabOverlap(
-      docs.filter(col("doc_id") % 2 === 0),
-      docs.filter(col("doc_id") % 2 =!= 0), k = 200)
-  }
-
-  /** Composed cleaning pipeline — the operators chained the way a real
-    * pre-training pass runs them: PII-redact → quality-gate (stopword ratio,
-    * token count, repetition) → exact-dedup (lowest id per normalized masked
-    * text) → per-language stats. Verifies COMPOSITION, not just each stage.
-    *
-    * The redaction stage is MATERIALIZED (localCheckpoint) before the gates:
-    * otherwise Catalyst's projection collapse inlines the redaction regexes
-    * into every downstream consumer — filters, dedup key, token sum — and
-    * recomputes them per use (observed 6×: 23 s instead of ~2 s at sf0.1).
-    * A production pipeline persists each stage's output for the same reason. */
-  private def pipelineCleanStats(s: SparkSession, dir: String): DataFrame = {
-    val masked = t(s, dir, "documents")
-      .select(col("doc_id"), col("lang"),
-              TextAnalysis.redactPii(col("text")).as("text"))
-      .localCheckpoint(true)
-    val gated = masked.filter(
-      TextAnalysis.stopwordRatio(col("text")) >= 0.05 &&
-      TextAnalysis.tokenCount(col("text")) >= 20 &&
-      TextAnalysis.repetitionRatio(col("text")) < 0.2)
-    Dedup.dropExactDuplicates(gated)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-           sum(TextAnalysis.tokenCount(col("text"))).cast("long").as("sum_tokens"))
-      .orderBy("lang")
-  }
-
-  /** ClickHouse `topK` via mergeable frequent-items sketches: per-half
-    * partial states over the corpus words, re-merged, top-20 extracted — the
-    * same split-merge lifecycle as the HLL/KLL states. Oracle-checked
-    * because the corpus vocabulary (31 words) is far below the sketch's
-    * map size, so it never evicts and estimates are EXACT; the evicting
-    * (approximate) regime is error-bound-tested in ScalaTest. */
-  private def topkWordsSketch(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.FrequencySketch
-    t(s, dir, "documents")
-      .select((col("doc_id") % 2).as("part"),
-              explode(TextAnalysis.words(col("text"))).as("word"))
-      .groupBy(col("part"))
-      .agg(FrequencySketch.topKState(col("word")).as("state"))
-      .agg(FrequencySketch.topKMergeState(col("state")).as("merged"))
-      .select(explode(FrequencySketch.topKEstimate(col("merged"), 20)).as("t"))
-      .select(col("t.item").as("word"), col("t.est").as("n"))
-      .orderBy(col("n").desc, col("word"))
-  }
-
-  /** Count-Min sketch point-frequency estimates
-    * ([[graft.functions.CountMin]], Cormode–Muthukrishnan) — the
-    * any-key frequency leg of the persisted-state algebra (FI answers
-    * "which keys are hot"; CMS answers "how hot is THIS key" from a fixed
-    * 5×2048 counter matrix). Two per-half states built over the event
-    * stream's user ids, re-merged (counters are additive — split-merge is
-    * byte-identical to one-shot, CountMinSpec pins it), then every probe
-    * user's estimate is gated against its EXACT count: never-undercount
-    * (a hard CMS guarantee) and within the 3·N/width envelope (>13×
-    * expected worst-row overcount). The oracle reproduces the exact
-    * counts and the gate booleans; a broken sketch flips the gate. */
-  private def cmsUserCounts(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.CountMin
-    val ev = t(s, dir, "events")
-    val merged = ev
-      .groupBy(pmod(col("event_id"), lit(2)).as("h"))
-      .agg(CountMin.cmsState(col("user_id")).as("st"), count(lit(1)).as("n"))
-      .agg(CountMin.cmsMergeState(col("st")).as("st"),
-           sum(col("n")).as("n_total"))
-    val probes = ev.filter(pmod(col("user_id"), lit(11)) === 0)
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
-    probes.crossJoin(broadcast(merged))
-      .withColumn("est", CountMin.cmsEstimate(col("st"), col("user_id")))
-      // upper envelope 6·N/width (+3 slack): the per-probe Markov bound at
-      // factor 3 is (1/3)^depth ≈ 0.4% — real enough that a data regen
-      // could flip one gate and spuriously redden Verify; at factor 6 it is
-      // (1/6)^5 ≈ 1e-4 per probe, while a BROKEN sketch (wrong hash, lost
-      // merge) still overshoots by orders of magnitude and fails loudly
-      .withColumn("est_ok",
-        col("est") >= col("n_events") &&
-          col("est").cast("double") <= col("n_events").cast("double") +
-            lit(6.0) * col("n_total").cast("double") / lit(CountMin.DefaultWidth.toDouble) + lit(3.0))
-      .select(col("user_id"), col("n_events"), col("est_ok"))
-      .orderBy("user_id")
-  }
-
-  /** PII redaction pass: per-doc mask counts + digest of the masked text
-    * (the digest proves the byte-exact transform, even where counts are 0). */
-  private def piiRedaction(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select(
-        col("doc_id"),
-        TextAnalysis.emailCount(col("text")).as("n_emails"),
-        TextAnalysis.longNumberCount(col("text")).as("n_longnums"),
-        md5(TextAnalysis.redactPii(col("text")).cast("binary")).as("fp_redacted"))
-      .orderBy("doc_id")
-
-  private val RareP = 0.01
-
-  /** Corpus-model scoring: train the char-bigram table on the whole corpus,
-    * score every document's transitions against it (see [[CorpusModel]]). */
-  private def textBigramRarity(s: SparkSession, dir: String): DataFrame =
-    CorpusModel.rareTransitionStats(t(s, dir, "documents"), RareP)
-      .orderBy("doc_id")
-
-  private val ContamN = 5
-
-  /** Decontamination probe: every 50th document plays the "benchmark eval
-    * set"; the rest are the training corpus. Fraction of each probe's
-    * distinct word 5-grams found anywhere in the corpus. */
-  private def contaminationCheck(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    Dedup.ngramContamination(
-        corpus = docs.filter(col("doc_id") % 50 =!= 0),
-        probes = docs.filter(col("doc_id") % 50 === 0),
-        n = ContamN)
-      .orderBy("doc_id")
-  }
-
-  /** The corpus's distinct-gram frame and its Bloom filter — ingest-time
-    * artifacts (one corpus pass each, consumed by every probe set
-    * thereafter), warmed by [[warmIngestArtifacts]] like the LSH index. The
-    * Bloom bytes ride in a 1-row frame so they live in the same
-    * materialized cache; the query-time read-back is a 1-row collect. */
-  // the bloom BYTES are a per-(session, dir) constant: re-head()ing the
-  // 1-row materialized frame billed a driver job to every probe execution
-  private def contamArtifacts(s: SparkSession, dir: String): (DataFrame, Array[Byte]) = {
-    val cg = Artifacts.frame(s, dir, "contam_corpus_grams", "documents") {
-      Dedup.corpusGramFrame(
-        t(s, dir, "documents").filter(col("doc_id") % 50 =!= 0), ContamN)
-    }
-    val bytes = Artifacts.value(s, dir, "contam_bloom_bytes", "documents") {
-      val bloomDf = Artifacts.frame(s, dir, "contam_gram_bloom", "documents") {
-        import s.implicits._
-        val b = Dedup.buildGramBloom(cg, math.max(1L, cg.count()))
-        Seq(b).toDF("bloom")
-      }
-      bloomDf.head().getAs[Array[Byte]]("bloom")
-    }
-    (cg, bytes)
-  }
-
-  /** Same decontamination result behind the corpus Bloom prefilter — the
-    * shape that sheds the probe-gram shuffle at 100 TB. Exact (see
-    * [[graft.operators.Dedup.ngramContaminationBloom]]), so it shares the
-    * plain operator's oracle. The gram frame and the filter are the warmed
-    * [[contamArtifacts]]; the timed work is the probe itself — the
-    * codegen'd Bloom shed plus the residual semi join. */
-  private def contaminationBloom(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    Dedup.ngramContaminationBloom(
-        corpus = docs.filter(col("doc_id") % 50 =!= 0),
-        probes = docs.filter(col("doc_id") % 50 === 0),
-        n = ContamN,
-        prebuilt = Some(contamArtifacts(s, dir)))
-      .orderBy("doc_id")
-  }
-
-  private val DupN = 8
-
-  /** Inter-document duplication profile: per doc, the fraction of its
-    * distinct word 8-grams shared with at least one OTHER document
-    * ([[graft.operators.Dedup.interDocDupNgramStats]]). The corpus-health
-    * complement of `text_repetition` (within-doc) and `contamination_check`
-    * (train-vs-eval). */
-  private def dupNgramFrac(s: SparkSession, dir: String): DataFrame =
-    Dedup.interDocDupNgramStats(t(s, dir, "documents"), DupN)
-      .orderBy("doc_id")
-
-  /** Mixture rebalancing ([[graft.operators.Sampling.mixtureSample]]): every
-    * source downsampled to the minority source's count — the equal-mix
-    * recipe; kept set chosen by the engine-agnostic multiplicative hash, so
-    * the oracle reproduces it integer-for-integer. */
-  // minority-source count: a corpus constant (domainCapFor caching class);
-  // warmed at ingest
-  private def rebalanceKMinFor(s: SparkSession, dir: String): Long =
-    Artifacts.value(s, dir, "rebalance_kmin", "documents") {
-      t(s, dir, "documents").groupBy(col("source"))
-        .agg(count(lit(1)).as("n")).agg(min(col("n"))).head().getLong(0)
-    }
-
-  private def sourceRebalance(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val counts = docs.groupBy(col("source")).agg(count(lit(1)).as("n"))
-    val kMin = rebalanceKMinFor(s, dir)
-    val targets = counts.select(col("source"), lit(kMin).as("k"))
-    Sampling.mixtureSample(docs, "source", "doc_id", targets)
-      .select(col("doc_id"), col("source"))
-      .orderBy("doc_id")
-  }
-
-  /** Per-domain cap + mixture sampling
-    * ([[graft.operators.Sampling.domainCappedSample]], the RefinedWeb
-    * discipline): no language may contribute more than ~60% of the mean
-    * per-lang share (all-integer boundary — no rational-threshold rounding
-    * hazard), then every source is downsampled to the minority source's
-    * POST-CAP count. Both stages rank by the engine-agnostic multiplicative
-    * hash, so the oracle replays the kept set integer-for-integer. */
-  // cap + per-source targets are corpus CONSTANTS (the quantScales/cdcOffset
-  // class): derived once per (session, dir) at ingest, consumed per query —
-  // re-deriving them would bill two driver-scalar jobs to every run
-  private def domainCapFor(s: SparkSession, dir: String): (Int, Long, Seq[String]) =
-    Artifacts.value(s, dir, "domain_cap", "documents") {
-      val docs = t(s, dir, "documents")
-      // two-level aggregate (never a mixed distinct-agg Expand): lang
-      // counts, then their sum/count — total and nLang in one shuffle
-      val lr = docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
-        .agg(sum(col("n")), count(lit(1))).head()
-      val total = lr.getLong(0); val nLang = lr.getLong(1)
-      val cap = ((6L * total) / (10L * nLang) + 1L).toInt // Long div == floor (positive)
-      val sc = Sampling.stratifiedSample(docs, "lang", "doc_id", cap)
-        .groupBy(col("source")).agg(count(lit(1)).as("n"))
-        .collect() // group-cardinality-sized
-      (cap, sc.map(_.getLong(1)).min, sc.map(_.getString(0)).sorted.toSeq)
-    }
-
-  /** Deterministic URL planting (closed-form in doc_id — the htmlify
-    * corruption-inverse pattern): scheme/subdomain/case/port/query variants
-    * around a registrable core `site<id%10>.<suffix(id%4)>`, plus an IPv4
-    * lane. The oracle never parses these — it regenerates the EXPECTED
-    * registrable domain from the same arithmetic, so the native extraction
-    * is tested end-to-end. */
-  private def plantedUrl: Column = {
-    val id = col("doc_id")
-    val scheme = when(pmod(id, lit(2)) === 0, lit("http://")).otherwise(lit("https://"))
-    val sub = element_at(array(lit(""), lit("www."), lit("blog."), lit("a.b."),
-                               lit("cdn.www.")), pmod(id, lit(5)).cast("int") + 1)
-    val hostBase = when(pmod(id, lit(7)) === 0, lit("Site")).otherwise(lit("site"))
-    val sfx = element_at(array(lit("com"), lit("co.uk"), lit("github.io"),
-                               lit("org")), pmod(id, lit(4)).cast("int") + 1)
-    val port = when(pmod(id, lit(11)) === 0, lit(":8080")).otherwise(lit(""))
-    val qs = when(pmod(id, lit(3)) === 0, lit("?x=1&y=2")).otherwise(lit(""))
-    when(pmod(id, lit(13)) === 0,
-         concat(lit("http://192.168.0."), pmod(id, lit(9)).cast("string"), lit("/x")))
-      .otherwise(concat(scheme, sub, hostBase, pmod(id, lit(10)).cast("string"),
-                        lit("."), sfx, port, lit("/p/"), id.cast("string"), qs))
-  }
-
-  private def docsWithUrlDomain(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .withColumn("url", plantedUrl)
-      .withColumn("domain", TextAnalysis.registeredDomain(col("url")))
-
-  // registrable-domain cap constants: same corpus-constant class (and the
-  // same 60%-of-mean integer rule) as domainCapFor, keyed on the EXTRACTED
-  // domain instead of a clean label — derived once per (session, dir)
-  private def urlDomainCapFor(s: SparkSession, dir: String): (Int, Long, Seq[String]) =
-    Artifacts.value(s, dir, "url_domain_cap", "documents") {
-      val docs = docsWithUrlDomain(s, dir)
-      val dr = docs.groupBy(col("domain")).agg(count(lit(1)).as("n"))
-        .agg(sum(col("n")), count(lit(1))).head()
-      val total = dr.getLong(0); val nDom = dr.getLong(1)
-      val cap = ((6L * total) / (10L * nDom) + 1L).toInt
-      val sc = Sampling.stratifiedSample(docs, "domain", "doc_id", cap)
-        .groupBy(col("source")).agg(count(lit(1)).as("n"))
-        .collect() // group-cardinality-sized
-      (cap, sc.map(_.getLong(1)).min, sc.map(_.getString(0)).sorted.toSeq)
-    }
-
-  /** RefinedWeb per-DOMAIN cap on the registrable domain
-    * ([[TextAnalysis.registeredDomain]], a native single-pass public-
-    * suffix-lite extraction) feeding [[Sampling.domainCappedSample]] —
-    * real-world caps key on `cutToFirstSignificantSubdomain(url)`, not a
-    * clean source label. URLs are planted closed-form (scheme / subdomain
-    * / case / port / IPv4 variants), so the oracle replays the expected
-    * domain arithmetically and the whole extract→cap→mixture pipeline
-    * gates on exact kept-set equality. */
-  private def urlDomainCaps(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val (cap, kMin, sources) = urlDomainCapFor(s, dir)
-    val targets = sources.toDF("source").withColumn("k", lit(kMin))
-    Sampling.domainCappedSample(docsWithUrlDomain(s, dir), "domain", cap,
-                                "source", "doc_id", targets)
-      .groupBy(col("domain"))
-      .agg(count(lit(1)).as("n_kept"),
-           md5(concat_ws(",",
-             transform(sort_array(collect_list(col("doc_id"))), _.cast("string")))
-             .cast("binary")).as("ids_md5"))
-      .orderBy("domain")
-  }
-
-  private def domainCappedSampleQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = t(s, dir, "documents")
-    val (cap, kMin, sources) = domainCapFor(s, dir)
-    val targets = sources.toDF("source").withColumn("k", lit(kMin)) // LocalRelation
-    Sampling.domainCappedSample(docs, "lang", cap, "source", "doc_id", targets)
-      .groupBy(col("source"), col("lang"))
-      .agg(count(lit(1)).as("n_kept"),
-           md5(concat_ws(",",
-             transform(sort_array(collect_list(col("doc_id"))), _.cast("string")))
-             .cast("binary")).as("ids_md5"))
-      .orderBy("source", "lang")
-  }
-
-  // learned DSIR bucket weights per (session identity, sfDir) — the
-  // train-once + data-dependent-oracle discipline of the tokenizer models:
-  // one feature pass fits both bucket models (raw + the lang='en' target
-  // slice), the ≤1024-row count frame collects, integer weights embed in
-  // plan and oracle alike
-  private def dsirWeightsFor(s: SparkSession, dir: String): Dsir.Weights =
-    Artifacts.value(s, dir, "dsir_weights", "documents") {
-      Dsir.learnWeights(
-        Dsir.features(docsSharded(s, dir),
-                      extra = Seq((col("lang") === "en").as("t"))), "t")
-    }
-
-  /** DSIR importance resampling ([[graft.operators.Dsir]], Xie et al.):
-    * hashed-ngram importance weights fit against the English slice as the
-    * target domain, every doc scored by the integer-exact weight sum, and
-    * the top 20% kept by the deterministic (score desc, doc_id) order —
-    * ranked with the distributed two-pass [[Ranks.globalRowNumber]], never
-    * a global window (scores are near-unique integers, so the value-domain
-    * bounds trick can't shrink this one). The oracle replays the learned
-    * weights as literals over the same portable 60-bit gram hash. */
-  private def dsirSample(s: SparkSession, dir: String): DataFrame = {
-    val w = dsirWeightsFor(s, dir)
-    val scored = Dsir.docScores(Dsir.features(docsSharded(s, dir)), w)
-    val (kept, _) = Dsir.select(scored)
-    kept.select(col("doc_id"), col("n_feats"), col("dsir_score"))
-      .orderBy("doc_id")
-  }
-
-  private def dsirOracleSql(w: Dsir.Weights): String = {
-    val parse15 = (1 to 15).map { j =>
-      val pow = 1L << (4 * (15 - j)) // 16^(15-j)
-      s"(strpos('0123456789abcdef', substr(m, $j, 1)) - 1) * $pow"
-    }.mkString(" + ")
-    val values = w.byBucket.toSeq.sorted
-      .map { case (b, wt) => s"($b,CAST($wt AS BIGINT))" }.mkString(",")
-    s"""WITH w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
-                   FROM documents),
-        g AS (SELECT doc_id, unnest(ws) AS gram FROM w
-              UNION ALL
-              SELECT doc_id, array_to_string(list_slice(ws, i, i + 1), ' ') AS gram
-              FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i FROM w)),
-        h AS (SELECT doc_id, ($parse15) % ${Dsir.Buckets} AS b
-              FROM (SELECT doc_id, md5(gram) AS m FROM g)),
-        wt(b, wt) AS (SELECT * FROM (VALUES $values) t(b, wt)),
-        sc AS (SELECT h.doc_id, CAST(count(*) AS BIGINT) AS n_feats,
-                      CAST(sum(coalesce(wt.wt, ${w.default})) AS BIGINT) AS dsir_score
-               FROM h LEFT JOIN wt USING (b) GROUP BY h.doc_id),
-        ranked AS (SELECT doc_id, n_feats, dsir_score,
-                          row_number() OVER (ORDER BY dsir_score DESC, doc_id) AS r,
-                          count(*) OVER () AS n
-                   FROM sc)
-        SELECT doc_id, n_feats, dsir_score FROM ranked
-        WHERE r <= (n + 4) // 5 ORDER BY doc_id"""
-  }
-
-  /** Duplicated-span removal ([[graft.operators.Dedup.removeDuplicatedSpans]]):
-    * tokens covered by any cross-document duplicated 8-gram are masked and
-    * the doc rebuilt; the oracle replays the hashed pipeline and re-derives
-    * each cleaned text's md5. */
-  private def dedupSpans(s: SparkSession, dir: String): DataFrame =
-    Dedup.removeDuplicatedSpans(t(s, dir, "documents"), DupN)
-      .orderBy("doc_id")
-
-  private val SubstrL = 30
-
-  /** CHARACTER-granular exact substring duplication
-    * ([[graft.operators.Dedup.exactSubstringSpans]] — Lee et al.'s
-    * ExactSubstr, the sub-n-gram-granularity complement of `dedup_spans`'s
-    * word-8-gram span remover): per doc, the maximal ≥30-codepoint spans
-    * whose text occurs at least twice anywhere in the corpus, with exact
-    * 1-based boundaries pinned through `span_digest`. The oracle replays
-    * the definition directly on substrings (no hashes), which exactly
-    * matches because the engine's hash stage is candidate-only and
-    * verified on the text itself. */
-  private def exactSubstrSpans(s: SparkSession, dir: String): DataFrame =
-    // consumes the SHARED fanned corpus materialization: the operator reads
-    // its input three times (window pass, candidate-text join, per-doc
-    // lengths), so the checkpointed docsSharded frame turns those into
-    // cached-block reads instead of three parquet scans
-    Dedup.exactSubstringSpans(docsSharded(s, dir), SubstrL)
-      .orderBy("doc_id")
-
-  /** Perceptual (average-hash) media near-dup pairs
-    * ([[graft.operators.Multimodal.phashNearDuplicates]]): pigeonhole chunk
-    * join on the Spark side, brute-force XOR-popcount replay in the oracle
-    * (which also re-derives every 60-bit hash from the byte stream). */
-  private def mediaPhashNearDup(s: SparkSession, dir: String): DataFrame =
-    Multimodal.phashNearDuplicates(
-        Multimodal.syntheticMediaTable(t(s, dir, "documents")))
-      .orderBy("id_a", "id_b")
-
-  private def multimodalByteStats(s: SparkSession, dir: String): DataFrame =
-    Multimodal.byteStats(Multimodal.syntheticMediaTable(t(s, dir, "documents")))
-      .orderBy("media_id")
-
-  /** Contract projection keeps every column scalar (frame_plan joined to a
-    * CSV string) so the driver's pandas sort/hash can digest the rows. */
-  private def multimodalDecode(s: SparkSession, dir: String): DataFrame = {
-    val media = Multimodal.syntheticMediaTable(t(s, dir, "documents"))
-    Multimodal.frameSamplePlan(
-      Multimodal.resizePlan(Multimodal.decodeAll(media).toDF(), maxSide = 512),
-      stride = 10, maxFrames = 8)
-      .select(col("media_id"), col("format"), col("width"), col("height"),
-              col("n_frames"), col("n_bytes"), col("out_width"), col("out_height"),
-              size(col("frame_plan")).cast("int").as("n_frames_planned"),
-              array_join(col("frame_plan"), ",").as("frame_plan"))
-      .orderBy("media_id")
-  }
-
-  // ======================================================================
-  // Contract maps
-  // ======================================================================
-
-  // ListMap: iteration order == insertion order, so Bench's run order is
-  // deterministic and new queries append at the END — existing queries keep
-  // their run position round-over-round (a plain Map hash-reshuffles the
-  // order whenever an entry is added, which made cold-start cost land on
-  // different queries every round and manufactured phantom regressions).
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    scala.collection.immutable.ListMap(
-    "seg_naive"            -> (segNaive _),
-    "seg_idempotent"       -> (segIdempotent _),
-    "seg_idempotent_approx" -> (segIdempotentApprox _),
-    "seg_w4_any"           -> (segW4Any _),
-    "seg_w4_latest"        -> (segW4Latest _),
-    "seg_latest_event"     -> (segLatestEvent _),
-    "seg_first_event"      -> (segFirstEvent _),
-    "seg_eventtime"        -> (segEventTime _),
-    "seg_microbatch_equiv" -> (segMicroBatchEquiv _),
-    "seg_stream_equiv"     -> (segStreamEquiv _),
-    "seg_retention_stream" -> (segRetentionStream _),
-    "seg_stream_native"    -> (segStreamNative _),
-    "seg_stream_stateful"  -> (segStreamStateful _),
-    "seg_stream_attribution" -> (segStreamAttribution _),
-    "seg_multi"            -> (segMulti _),
-    "skew_salted_counts"   -> (skewSaltedCounts _),
-    "asof_assignment"      -> (asofAssignment _),
-    "range_join_orders"    -> (rangeJoinOrders _),
-    "range_overlap_sessions" -> (rangeOverlapSessions _),
-    "winsorized_stats"     -> (winsorizedStats _),
-    "corr_value_hour"      -> (corrValueHour _),
-    "hist_value"           -> (histValue _),
-    "sessions_stats"       -> (sessionsStats _),
-    "agg_moments"          -> (aggMoments _),
-    "doc_chunks"           -> (docChunks _),
-    "packed_chunks"        -> (packedChunks _),
-    "pivot_user_activity"  -> (pivotUserActivity _),
-    "text_repetition"      -> (textRepetition _),
-    "unpivot_user_activity" -> (unpivotUserActivity _),
-    "ntile_orders"         -> (ntileOrders _),
-    "sample_events_hash"   -> (sampleEventsHash _),
-    "stratified_sample"    -> (stratifiedSampleEvents _),
-    "docs_filtered_stats"  -> (docsFilteredStats _),
-    "funnel_levels"        -> (funnelLevels _),
-    "sequence_match"       -> (sequenceMatchUsers _),
-    "sequence_count"       -> (sequenceCountUsers _),
-    "cohort_retention"     -> (cohortRetention _),
-    "seg_microbatch_hll"   -> (segMicroBatchHll _),
-    "q1_pricing"           -> (q1Pricing _),
-    "q2_min_cost_supplier" -> (q2MinCostSupplier _),
-    "seg_overlap_hll"      -> (segOverlapHll _),
-    "q3_revenue"           -> (q3Revenue _),
-    "q5_revenue"           -> (q5Revenue _),
-    "semi_customers"       -> (semiCustomers _),
-    "anti_customers"       -> (antiCustomers _),
-    "window_top2_orders"   -> (windowTop2Orders _),
-    "agg_event_stats"      -> (aggEventStats _),
-    "events_daily"         -> (eventsDaily _),
-    "events_daily_filled"  -> (eventsDailyFilled _),
-    "events_locf"          -> (eventsLocf _),
-    "events_interp"        -> (eventsInterp _),
-    "events_running_users" -> (eventsRunningUsers _),
-    "events_moving_avg"    -> (eventsMovingAvg _),
-    "events_delta_sum"     -> (eventsDeltaSum _),
-    "events_bounding_ratio" -> (eventsBoundingRatio _),
-    "q15_top_supplier"     -> (q15TopSupplier _),
-    "q18_large_orders"     -> (q18LargeOrders _),
-    "seg_stream_enrich"    -> (segStreamEnrich _),
-    "semantic_dedup"       -> (semanticDedupStats _),
-    "gopher_quality"       -> (gopherQuality _),
-    "phrase_search"        -> (phraseSearchDocs _),
-    "weighted_median_price" -> (weightedMedianPrice _),
-    "twa_value"            -> (twaValue _),
-    "cohort_matrix"        -> (cohortMatrixQ _),
-    "dedup_keep_best"      -> (dedupKeepBest _),
-    "rolling_7d_users"     -> (rolling7dUsers _),
-    "quality_classifier"   -> (qualityClassifierQ _),
-    "interval_union_days"  -> (intervalUnionDays _),
-    "topk_words_by_source" -> (topkWordsBySource _),
-    "seg_bitmap_algebra"   -> (segBitmapAlgebra _),
-    "seg_theta_algebra"    -> (segThetaAlgebra _),
-    "theta_weekly_retention" -> (thetaWeeklyRetention _),
-    "rolling_30d_users_hll" -> (rolling30dUsersHll _),
-    "events_props_extract" -> (eventsPropsExtract _),
-    "q6_revenue"           -> (q6Revenue _),
-    "q4_late_shipments"    -> (q4LateShipments _),
-    "q14_promo"            -> (q14Promo _),
-    "q17_small_qty"        -> (q17SmallQty _),
-    "q19_disjunctive"      -> (q19Disjunctive _),
-    "q7_volume"            -> (q7Volume _),
-    "q10_returned_top20"   -> (q10ReturnedTop _),
-    "rollup_pricing"       -> (rollupPricing _),
-    "cube_pricing"         -> (cubePricing _),
-    "grouping_sets_pricing" -> (groupingSetsPricing _),
-    "user_event_types"     -> (userEventTypes _),
-    "intersect_users"      -> ((s: SparkSession, d: String) => setOpUsers(s, d, "intersect")),
-    "except_users"         -> ((s: SparkSession, d: String) => setOpUsers(s, d, "except")),
-    "top10_customers"      -> (top10Customers _),
-    "agg_value_stats_ext"  -> (aggValueStatsExt _),
-    "events_hourly_windows" -> (eventsHourlyWindows _),
-    "outer_nation_suppliers" -> (outerJoinNationSuppliers _),
-    "full_outer_daily"     -> (fullOuterDailyActivity _),
-    "window_order_gaps"    -> (windowOrderGaps _),
-    "pct_value_by_type"    -> (pctValueByType _),
-    "pct_value_sketch"     -> (pctValueSketch _),
-    "sql_orders_per_customer" -> (sqlOrdersPerCustomer _),
-    "dedup_exact_demo"     -> (dedupExactDemo _),
-    "dedup_exact_stats"    -> (dedupExactStats _),
-    "text_quality"         -> (textQuality _),
-    "bpe_tokens"           -> (bpeTokens _),
-    "bpe_encode_hash"      -> (bpeEncodeHash _),
-    "embedding_centroids"  -> (embeddingCentroids _),
-    "dedup_clusters"       -> (dedupClusters _),
-    "incremental_clusters" -> (incrementalClusters _),
-    "text_lang_dist"       -> (textLangDist _),
-    "doc_fingerprints"     -> (docFingerprints _),
-    "doc_fingerprints_ext" -> (docFingerprintsExt _),
-    "ann_topk_brute"       -> (annTopK _),
-    "ann_topk_srp"         -> (annTopKSrp _),
-    "ann_topk_ivf"         -> (annTopKIvf _),
-    "ann_topk_ivf_disk"    -> (annTopKIvfDisk _),
-    "ann_topk_quant"       -> (annTopKQuant _),
-    "minhash_neardup"      -> (minhashNearDup _),
-    "ngram_jaccard_neardup" -> (ngramJaccardNearDup _),
-    "containment_neardup"  -> (containmentNearDup _),
-    "editdist_neardup"     -> (editDistNearDup _),
-    "bm25_search"          -> (bm25Search _),
-    "leakage_split"        -> (leakageSplit _),
-    "quality_tiered_sample" -> (qualityTieredSample _),
-    "incremental_neardup"  -> (incrementalNearDup _),
-    "tfidf_top_terms"      -> (tfidfTopTerms _),
-    "zorder_event_keys"    -> (zorderEventKeys _),
-    "simhash_neardup"      -> (simhashNearDup _),
-    "embedding_neardup"    -> (embeddingNearDup _),
-    "multimodal_bytestats" -> (multimodalByteStats _),
-    "contamination_check"  -> (contaminationCheck _),
-    "contamination_bloom"  -> (contaminationBloom _),
-    "dup_ngram_frac"       -> (dupNgramFrac _),
-    "dedup_spans"          -> (dedupSpans _),
-    "source_rebalance"     -> (sourceRebalance _),
-    "media_phash_neardup"  -> (mediaPhashNearDup _),
-    "text_bigram_rarity"   -> (textBigramRarity _),
-    "pii_redaction"        -> (piiRedaction _),
-    "vocab_top_words"      -> (vocabTopWords _),
-    "vocab_drift"          -> (vocabDrift _),
-    "topk_words_sketch"    -> (topkWordsSketch _),
-    "pipeline_clean_stats" -> (pipelineCleanStats _),
-    "multimodal_decode"    -> (multimodalDecode _),
-    "sessions_stream_closed" -> (sessionsStreamClosed _),
-    "q21_waiting_supplier" -> (q21WaitingSupplier _),
-    "q22_sales_opportunity" -> (q22SalesOpportunity _),
-    "q8_market_share"      -> (q8MarketShare _),
-    "q13_order_distribution" -> (q13OrderDistribution _),
-    "q16_supplier_cnt"     -> (q16SupplierCnt _),
-    "q20_dominant_supplier" -> (q20DominantSupplier _),
-    "q9_product_profit"    -> (q9ProductProfit _),
-    "exact_substring_spans" -> (exactSubstrSpans _),
-    "ann_incremental_ivf"  -> (annIncrementalIvf _),
-    "funnel_strict_order"  -> (funnelStrictOrder _),
-    "funnel_strict_dedup"  -> (funnelStrictDedup _),
-    "funnel_strict_increase" -> (funnelStrictIncrease _),
-    "optimize_final_collapse" -> (optimizeFinalCollapse _),
-    "cdc_merge_apply"      -> (cdcMergeApply _),
-    "cdc_merge_stream"     -> (cdcMergeStream _),
-    "map_agg_events"       -> (mapAggEvents _),
-    "fix_mojibake"         -> (fixMojibakeQ _),
-    "uniq_upto_events"     -> (uniqUpToEvents _),
-    "map_agg_state_merge"  -> (mapAggStateMerge _),
-    "html_extract"         -> (htmlExtractQ _),
-    "ann_topk_pq"          -> (annTopKPq _),
-    "unigram_tokens"       -> (unigramTokens _),
-    "domain_capped_sample" -> (domainCappedSampleQ _),
-    // (url_domain_caps appended at the map tail — ListMap order is the
-    // published bench order, so new queries never reorder old positions)
-    "map_agg_filtered"     -> (mapAggFiltered _),
-    "events_moving_sum"    -> (eventsMovingSum _),
-    "ab_ttest_value"       -> (abTTestValue _),
-    "chi2_cohort"          -> (chi2CohortUniformity _),
-    "mannwhitney_value"    -> (mannWhitneyValue _),
-    "chunk_dedup"          -> (chunkDedup _),
-    "linreg_value_hour"    -> (linregValueHour _),
-    "incremental_chunk_dedup" -> (incrementalChunkDedup _),
-    "ks_test_value"        -> (ksTestValue _),
-    "asof_forward_tolerance" -> (asofForwardTolerance _),
-    "asof_backward_tolerance" -> (asofBackwardTolerance _),
-    "events_ema"           -> (eventsEma _),
-    "cramers_v_cohort"     -> (cramersVCohort _),
-    "ccnet_perplexity_buckets" -> (ccnetPerplexityBuckets _),
-    "kmeans_assign"        -> (kmeansAssignQ _),
-    "url_domain_caps"      -> (urlDomainCaps _),
-    "hybrid_rrf_search"    -> (hybridRrfSearch _),
-    "wordpiece_tokens"     -> (wordpieceTokens _),
-    "dsir_sample"          -> (dsirSample _),
-    "events_decay_max"     -> (eventsDecayMax _),
-    "anova_value"          -> (anovaValue _),
-    "events_lttb"          -> (eventsLttb _),
-    "events_holt"          -> (eventsHolt _),
-    "mad_value"            -> (madValue _),
-    "cms_user_counts"      -> (cmsUserCounts _),
-    "seq_next_node"        -> (seqNextNode _),
-    "event_transitions"    -> (eventTransitions _),
-    "bytebpe_tokens"       -> (byteBpeTokens _),
-    "embedding_pca"        -> (embeddingPca _),
-    "ann_topk_pca"         -> (annTopKPca _),
-    "spearman_value_hour"  -> (spearmanValueHour _),
-    "entropy_value"        -> (entropyValue _),
-    "q11_important_parts"  -> (q11ImportantParts _),
-    "q12_ship_priority"    -> (q12ShipPriority _),
-    "theils_u_cohort"      -> (theilsUCohort _),
-    "interval_concurrency" -> (intervalConcurrency _),
-  )
-
+  // Run order == registry order, published as Bench's run order: new
+  // queries APPEND at the end so existing queries keep their run position
+  // round-over-round (a hash-ordered map reshuffles the order whenever an
+  // entry is added, which made cold-start cost land on different queries
+  // every round and manufactured phantom regressions). query_order.txt
+  // pins it.
+  private val registry: Seq[QueryDef] = Seq(
+    SegmentQueries.SegNaive,
+    SegmentQueries.SegIdempotent,
+    SegmentQueries.SegIdempotentApprox,
+    SegmentQueries.SegW4Any,
+    SegmentQueries.SegW4Latest,
+    SegmentQueries.SegLatestEvent,
+    SegmentQueries.SegFirstEvent,
+    SegmentQueries.SegEventtime,
+    SegmentQueries.SegMicrobatchEquiv,
+    SegmentQueries.SegStreamEquiv,
+    SegmentQueries.SegRetentionStream,
+    SegmentQueries.SegStreamNative,
+    SegmentQueries.SegStreamStateful,
+    SegmentQueries.SegStreamAttribution,
+    SegmentQueries.SegMulti,
+    SegmentQueries.SkewSaltedCounts,
+    SegmentQueries.AsofAssignment,
+    EventQueries.RangeJoinOrders,
+    EventQueries.RangeOverlapSessions,
+    StatsQueries.WinsorizedStats,
+    StatsQueries.CorrValueHour,
+    StatsQueries.HistValue,
+    EventQueries.SessionsStats,
+    StatsQueries.AggMoments,
+    DedupQueries.DocChunks,
+    DedupQueries.PackedChunks,
+    EventQueries.PivotUserActivity,
+    TextQueries.TextRepetition,
+    EventQueries.UnpivotUserActivity,
+    TpchQueries.NtileOrders,
+    EventQueries.SampleEventsHash,
+    EventQueries.StratifiedSample,
+    TextQueries.DocsFilteredStats,
+    FunnelQueries.FunnelLevels,
+    FunnelQueries.SequenceMatch,
+    FunnelQueries.SequenceCount,
+    FunnelQueries.CohortRetention,
+    SegmentQueries.SegMicrobatchHll,
+    TpchQueries.Q1Pricing,
+    TpchQueries.Q2MinCostSupplier,
+    SegmentQueries.SegOverlapHll,
+    TpchQueries.Q3Revenue,
+    TpchQueries.Q5Revenue,
+    TpchQueries.SemiCustomers,
+    TpchQueries.AntiCustomers,
+    TpchQueries.WindowTop2Orders,
+    EventQueries.AggEventStats,
+    EventQueries.EventsDaily,
+    EventQueries.EventsDailyFilled,
+    EventQueries.EventsLocf,
+    EventQueries.EventsInterp,
+    EventQueries.EventsRunningUsers,
+    EventQueries.EventsMovingAvg,
+    EventQueries.EventsDeltaSum,
+    EventQueries.EventsBoundingRatio,
+    TpchQueries.Q15TopSupplier,
+    TpchQueries.Q18LargeOrders,
+    SegmentQueries.SegStreamEnrich,
+    DedupQueries.SemanticDedup,
+    TextQueries.GopherQuality,
+    TextQueries.PhraseSearch,
+    TpchQueries.WeightedMedianPrice,
+    EventQueries.TwaValue,
+    FunnelQueries.CohortMatrix,
+    DedupQueries.DedupKeepBest,
+    EventQueries.Rolling7dUsers,
+    TextQueries.QualityClassifier,
+    EventQueries.IntervalUnionDays,
+    TextQueries.TopkWordsBySource,
+    SegmentQueries.SegBitmapAlgebra,
+    SegmentQueries.SegThetaAlgebra,
+    EventQueries.ThetaWeeklyRetention,
+    EventQueries.Rolling30dUsersHll,
+    EventQueries.EventsPropsExtract,
+    TpchQueries.Q6Revenue,
+    TpchQueries.Q4LateShipments,
+    TpchQueries.Q14Promo,
+    TpchQueries.Q17SmallQty,
+    TpchQueries.Q19Disjunctive,
+    TpchQueries.Q7Volume,
+    TpchQueries.Q10ReturnedTop20,
+    TpchQueries.RollupPricing,
+    TpchQueries.CubePricing,
+    TpchQueries.GroupingSetsPricing,
+    EventQueries.UserEventTypes,
+    EventQueries.IntersectUsers,
+    EventQueries.ExceptUsers,
+    TpchQueries.Top10Customers,
+    EventQueries.AggValueStatsExt,
+    EventQueries.EventsHourlyWindows,
+    TpchQueries.OuterNationSuppliers,
+    EventQueries.FullOuterDaily,
+    TpchQueries.WindowOrderGaps,
+    StatsQueries.PctValueByType,
+    StatsQueries.PctValueSketch,
+    TpchQueries.SqlOrdersPerCustomer,
+    DedupQueries.DedupExactDemo,
+    DedupQueries.DedupExactStats,
+    TextQueries.TextQuality,
+    TokenizerQueries.BpeTokens,
+    TokenizerQueries.BpeEncodeHash,
+    AnnQueries.EmbeddingCentroids,
+    DedupQueries.DedupClusters,
+    DedupQueries.IncrementalClusters,
+    TextQueries.TextLangDist,
+    DedupQueries.DocFingerprints,
+    DedupQueries.DocFingerprintsExt,
+    AnnQueries.AnnTopkBrute,
+    AnnQueries.AnnTopkSrp,
+    AnnQueries.AnnTopkIvf,
+    AnnQueries.AnnTopkIvfDisk,
+    AnnQueries.AnnTopkQuant,
+    DedupQueries.MinhashNeardup,
+    DedupQueries.NgramJaccardNeardup,
+    DedupQueries.ContainmentNeardup,
+    DedupQueries.EditdistNeardup,
+    TextQueries.Bm25Search,
+    DedupQueries.LeakageSplit,
+    TextQueries.QualityTieredSample,
+    DedupQueries.IncrementalNeardup,
+    TextQueries.TfidfTopTerms,
+    EventQueries.ZorderEventKeys,
+    DedupQueries.SimhashNeardup,
+    AnnQueries.EmbeddingNeardup,
+    TextQueries.MultimodalBytestats,
+    TextQueries.ContaminationCheck,
+    TextQueries.ContaminationBloom,
+    TextQueries.DupNgramFrac,
+    DedupQueries.DedupSpans,
+    TextQueries.SourceRebalance,
+    DedupQueries.MediaPhashNeardup,
+    TextQueries.TextBigramRarity,
+    TextQueries.PiiRedaction,
+    TextQueries.VocabTopWords,
+    TextQueries.VocabDrift,
+    TextQueries.TopkWordsSketch,
+    TextQueries.PipelineCleanStats,
+    TextQueries.MultimodalDecode,
+    SegmentQueries.SessionsStreamClosed,
+    TpchQueries.Q21WaitingSupplier,
+    TpchQueries.Q22SalesOpportunity,
+    TpchQueries.Q8MarketShare,
+    TpchQueries.Q13OrderDistribution,
+    TpchQueries.Q16SupplierCnt,
+    TpchQueries.Q20DominantSupplier,
+    TpchQueries.Q9ProductProfit,
+    DedupQueries.ExactSubstringSpans,
+    AnnQueries.AnnIncrementalIvf,
+    FunnelQueries.FunnelStrictOrder,
+    FunnelQueries.FunnelStrictDedup,
+    FunnelQueries.FunnelStrictIncrease,
+    SegmentQueries.OptimizeFinalCollapse,
+    SegmentQueries.CdcMergeApply,
+    SegmentQueries.CdcMergeStream,
+    EventQueries.MapAggEvents,
+    TextQueries.FixMojibake,
+    EventQueries.UniqUptoEvents,
+    EventQueries.MapAggStateMerge,
+    TextQueries.HtmlExtract,
+    AnnQueries.AnnTopkPq,
+    TokenizerQueries.UnigramTokens,
+    TextQueries.DomainCappedSample,
+    EventQueries.MapAggFiltered,
+    EventQueries.EventsMovingSum,
+    StatsQueries.AbTtestValue,
+    StatsQueries.Chi2Cohort,
+    StatsQueries.MannwhitneyValue,
+    DedupQueries.ChunkDedup,
+    StatsQueries.LinregValueHour,
+    DedupQueries.IncrementalChunkDedup,
+    StatsQueries.KsTestValue,
+    SegmentQueries.AsofForwardTolerance,
+    SegmentQueries.AsofBackwardTolerance,
+    EventQueries.EventsEma,
+    StatsQueries.CramersVCohort,
+    TokenizerQueries.CcnetPerplexityBuckets,
+    AnnQueries.KmeansAssign,
+    TextQueries.UrlDomainCaps,
+    TextQueries.HybridRrfSearch,
+    TokenizerQueries.WordpieceTokens,
+    TextQueries.DsirSample,
+    EventQueries.EventsDecayMax,
+    StatsQueries.AnovaValue,
+    EventQueries.EventsLttb,
+    EventQueries.EventsHolt,
+    StatsQueries.MadValue,
+    EventQueries.CmsUserCounts,
+    FunnelQueries.SeqNextNode,
+    FunnelQueries.EventTransitions,
+    TokenizerQueries.BytebpeTokens,
+    AnnQueries.EmbeddingPca,
+    AnnQueries.AnnTopkPca,
+    StatsQueries.SpearmanValueHour,
+    StatsQueries.EntropyValue,
+    TpchQueries.Q11ImportantParts,
+    TpchQueries.Q12ShipPriority,
+    StatsQueries.TheilsUCohort,
+    EventQueries.IntervalConcurrency,
   // ----------------------------------------------------------------------
   // DuckDB oracles — one per query; the rows-only set is EMPTY since round
   // 4. Approximate operators gate through deterministic est_ok/rank-gate
   // envelope columns over exact quantities; pinned-seed LSH (ann_topk_srp)
   // gates through generated SQL with the hash constants embedded.
   // ----------------------------------------------------------------------
-
-  private val EnStop = TextAnalysis.Stopwords("en").map(w => s"'$w'").mkString(", ")
-
-  private lazy val contaminationOracle: String =
-    s"""WITH w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
-                   FROM documents),
-        g AS (SELECT doc_id,
-                     CASE WHEN len(ws) >= $ContamN THEN
-                       list_distinct(list_transform(
-                         range(1, len(ws) - ${ContamN - 2}),
-                         i -> array_to_string(list_slice(ws, i, i + ${ContamN - 1}), ' ')))
-                     ELSE [] END AS grams
-              FROM w),
-        corpus AS (SELECT DISTINCT unnest(grams) AS gram FROM g
-                   WHERE doc_id % 50 <> 0),
-        probe AS (SELECT doc_id, grams FROM g WHERE doc_id % 50 = 0),
-        pg AS (SELECT doc_id, unnest(grams) AS gram FROM probe),
-        m AS (SELECT pg.doc_id, count(*) AS n_contaminated
-              FROM pg WHERE EXISTS (SELECT 1 FROM corpus c WHERE c.gram = pg.gram)
-              GROUP BY pg.doc_id)
-        SELECT p.doc_id, len(p.grams) AS n_grams,
-               coalesce(m.n_contaminated, 0) AS n_contaminated,
-               coalesce(CAST(coalesce(m.n_contaminated, 0) AS DOUBLE)
-                        / nullif(len(p.grams), 0), 0.0) AS contamination
-        FROM probe p LEFT JOIN m ON p.doc_id = m.doc_id
-        ORDER BY p.doc_id"""
-
-  /** DuckDB SQL for `ann_topk_srp`, generated with the SRP hyperplane
-    * constants embedded. Exactness argument: each plane coefficient is
-    * emitted via `Double.toString` (shortest repr — parses back to the
-    * identical double in any engine); each projection is an explicit
-    * left-associated `e[1]*p1 + e[2]*p2 + …` chain, the same sequential
-    * double accumulation as `SrpSigsExpr.nullSafeEval`'s loop; float→double
-    * element casts are exact. Identical inputs + identical IEEE op sequence
-    * → identical sign bits → identical buckets → identical candidate set;
-    * the re-rank then matches exactly as `ann_topk_brute`'s does. */
-  private def srpOracleSql: String = {
-    // dim comes from the same per-(session,dir) probe the query used —
-    // oracleSql is a def re-evaluated at dump time, AFTER Verify ran the
-    // query (the bpe_merges/quant_scales pattern)
-    val nBits = 4; val tables = 8; val dim = Artifacts.last[Int]("emb_dim").getOrElse(64); val seed = 42L
-    def bucketCol(t: Int): String = {
-      // same gaussian stream as SrpSigsExpr / Similarity.hyperplanes
-      val rnd = new scala.util.Random(seed + t * 7919L)
-      val planes = Array.fill(nBits * dim)(rnd.nextGaussian())
-      (0 until nBits).map { j =>
-        val chain = (0 until dim).map { i =>
-          s"CAST(CAST(embedding[${i + 1}] AS FLOAT) AS DOUBLE) * ${dlit(planes(j * dim + i))}"
-        }.mkString(" + ")
-        s"(CASE WHEN ($chain) >= 0 THEN ${1L << j} ELSE 0 END)"
-      }.mkString(" + ")
-    }
-    val bucketCols = (0 until tables)
-      .map(t => s"(${bucketCol(t)}) AS b$t").mkString(", ")
-    val sameBucket = (0 until tables).map(t => s"cb.b$t = qb.b$t").mkString(" OR ")
-    s"""WITH b AS (SELECT vec_id, $bucketCols FROM embeddings),
-        qb AS (SELECT * FROM b WHERE vec_id < $AnnQueries),
-        cb AS (SELECT * FROM b),
-        cand AS (
-          SELECT DISTINCT qb.vec_id AS query_id, cb.vec_id AS neighbor_id
-          FROM cb JOIN qb ON ($sameBucket)
-          WHERE cb.vec_id <> qb.vec_id),
-        s AS (
-          SELECT cand.query_id, cand.neighbor_id,
-                 list_cosine_similarity(CAST(CAST(qe.embedding AS FLOAT[]) AS DOUBLE[]),
-                                        CAST(CAST(ce.embedding AS FLOAT[]) AS DOUBLE[])) AS sim
-          FROM cand
-          JOIN embeddings qe ON qe.vec_id = cand.query_id
-          JOIN embeddings ce ON ce.vec_id = cand.neighbor_id),
-        r AS (SELECT query_id, neighbor_id, sim,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY sim DESC, neighbor_id) AS rnk
-              FROM s)
-        SELECT query_id, rnk AS rank, neighbor_id, round(sim, 4) AS cosine
-        FROM r WHERE rnk <= $AnnK ORDER BY query_id, rnk"""
-  }
-
-  /** DuckDB SQL for `ann_topk_quant`, generated with the LEARNED per-dim
-    * scales embedded (Double.toString shortest-repr literals — identical
-    * parse everywhere, the srpOracleSql argument). Quantization is
-    * floor(x·s + 0.5) clamped — floor, not round, because round's
-    * half-case differs across engines — so the int vectors, the integer
-    * prescreen scores (64 products ≤ 127² summed: exact in doubles), the
-    * candidate cut, and the exact re-rank all replay bit-for-bit. */
-  private def quantOracleSql(scales: Array[Double]): String = {
-    val qvList = scales.indices.map { d =>
-      s"CAST(LEAST(127.0, GREATEST(-127.0, FLOOR(CAST(CAST(embedding[${d + 1}] AS FLOAT) AS DOUBLE) * ${dlit(scales(d))} + 0.5))) AS INT)"
-    }.mkString("[", ", ", "]")
-    s"""WITH b AS (SELECT vec_id, $qvList AS qv FROM embeddings),
-        qb AS (SELECT * FROM b WHERE vec_id < $AnnQueries),
-        sc AS (SELECT qb.vec_id AS query_id, cb.vec_id AS neighbor_id,
-                      CAST(list_dot_product(CAST(cb.qv AS DOUBLE[]),
-                                            CAST(qb.qv AS DOUBLE[])) AS BIGINT) AS score
-               FROM b cb, qb WHERE cb.vec_id <> qb.vec_id),
-        cand AS (SELECT query_id, neighbor_id FROM (
-                   SELECT query_id, neighbor_id,
-                          row_number() OVER (PARTITION BY query_id
-                                             ORDER BY score DESC, neighbor_id) AS prn
-                   FROM sc) WHERE prn <= $AnnQuantCandK),
-        s AS (SELECT cand.query_id, cand.neighbor_id,
-                     list_cosine_similarity(CAST(CAST(qe.embedding AS FLOAT[]) AS DOUBLE[]),
-                                            CAST(CAST(ce.embedding AS FLOAT[]) AS DOUBLE[])) AS sim
-              FROM cand
-              JOIN embeddings qe ON qe.vec_id = cand.query_id
-              JOIN embeddings ce ON ce.vec_id = cand.neighbor_id),
-        r AS (SELECT query_id, neighbor_id, sim,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY sim DESC, neighbor_id) AS rnk
-              FROM s)
-        SELECT query_id, rnk AS rank, neighbor_id, round(sim, 4) AS cosine
-        FROM r WHERE rnk <= $AnnK ORDER BY query_id, rnk"""
-  }
-
-  /** DuckDB SQL for `ann_topk_pq`, generated with the LEARNED sub-codebooks
-    * embedded as a VALUES literal table (the quantOracleSql technique). The
-    * per-subspace encode distance and the query·centroid dots are written
-    * as left-assoc `+` chains — the exact IEEE sequence the engine's
-    * ascending loops execute — and the ADC entries are fixed-point longs,
-    * so codes, LUTs, the candidate cut, and the exact re-rank replay
-    * bit-for-bit. */
-  private def pqOracleSql(cb: Array[Array[Array[Double]]]): String = {
-    val m = cb.length; val kc = cb(0).length; val sd = cb(0)(0).length
-    val centVals = (for (mi <- 0 until m; ki <- 0 until kc) yield {
-      val arr = cb(mi)(ki).map(dlit).mkString("[", ", ", "]")
-      s"($mi, $ki, CAST($arr AS DOUBLE[]))"
-    }).mkString(", ")
-    val distChain = (1 to sd).map(j =>
-      s"(e[m*$sd+$j]-c[$j])*(e[m*$sd+$j]-c[$j])").mkString(" + ")
-    val dotChain = (1 to sd).map(j => s"e[m*$sd+$j]*c[$j]").mkString(" + ")
-    // unit-sphere projection (PqExprs.readVec): ascending squared-sum chain,
-    // one sqrt, element-wise divide — the engine's exact IEEE sequence
-    val n2Chain = (1 to m * sd).map(j => s"e[$j]*e[$j]").mkString(" + ")
-    s"""WITH cent(m, cidx, c) AS (VALUES $centVals),
-        v0 AS (SELECT vec_id, CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]) AS e
-               FROM embeddings),
-        vn AS (SELECT vec_id, e, $n2Chain AS n2 FROM v0),
-        v AS (SELECT vec_id,
-                     CASE WHEN n2 > 0 THEN list_transform(e, x -> x / sqrt(n2))
-                          ELSE e END AS e
-              FROM vn),
-        d AS (SELECT vec_id, m, cidx, $distChain AS dist FROM v, cent),
-        code AS (SELECT vec_id, m, cidx FROM (
-            SELECT vec_id, m, cidx,
-                   row_number() OVER (PARTITION BY vec_id, m
-                                      ORDER BY dist, cidx) AS rn
-            FROM d) WHERE rn = 1),
-        lut AS (SELECT vec_id AS query_id, m, cidx,
-                       CAST(floor(($dotChain) * ${(1L << PqScaleBits).toDouble} + 0.5) AS BIGINT) AS l
-                FROM v, cent WHERE vec_id < $AnnQueries),
-        sc AS (SELECT l.query_id, co.vec_id AS neighbor_id,
-                      CAST(sum(l.l) AS BIGINT) AS score
-               FROM code co JOIN lut l ON l.m = co.m AND l.cidx = co.cidx
-               WHERE co.vec_id <> l.query_id GROUP BY 1, 2),
-        cand AS (SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY score DESC, neighbor_id) AS prn
-            FROM sc) WHERE prn <= $PqCandK),
-        s AS (SELECT cand.query_id, cand.neighbor_id,
-                     list_cosine_similarity(CAST(CAST(qe.embedding AS FLOAT[]) AS DOUBLE[]),
-                                            CAST(CAST(ce.embedding AS FLOAT[]) AS DOUBLE[])) AS sim
-              FROM cand JOIN embeddings qe ON qe.vec_id = cand.query_id
-                        JOIN embeddings ce ON ce.vec_id = cand.neighbor_id),
-        r AS (SELECT query_id, neighbor_id, sim,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY sim DESC, neighbor_id) AS rnk
-              FROM s)
-        SELECT query_id, rnk AS rank, neighbor_id, round(sim, 4) AS cosine
-        FROM r WHERE rnk <= $AnnK ORDER BY query_id, rnk"""
-  }
-
-  /** A double constant as SQL text that DuckDB parses to the EXACT bits
-    * the JVM holds: scientific notation (17 sig digits) takes DuckDB's
-    * strtod DOUBLE path. A plain decimal literal (`0.0091298…`) parses as
-    * DECIMAL first and the DECIMAL→DOUBLE conversion is NOT correctly
-    * rounded — measured 12/64 learned constants off by one ulp, which is
-    * invisible under round(4)/rank gates but fatal to bit-exact replay. */
-  private def dlit(d: Double): String =
-    String.format(java.util.Locale.ROOT, "%.17e", Double.box(d))
-
-  /** The r projection chains of [[Pca.project]] as SQL text: per component
-    * a left-assoc `comp*(e_p − mean_p)` multiply-add sequence — the exact
-    * IEEE tree the engine's literal chain evaluates ([[dlit]] literals
-    * parse back bit-identically). */
-  private def pcaChainsSql(m: Pca.Model): Seq[String] = {
-    val dim = m.mean.length
-    m.comps.indices.map { c =>
-      (0 until dim).map { p =>
-        s"${dlit(m.comps(c)(p))} * (CAST(CAST(embedding[${p + 1}] AS FLOAT) AS DOUBLE) - ${dlit(m.mean(p))})"
-      }.mkString(" + ")
-    }
-  }
-
-  /** DuckDB SQL for `embedding_pca`: the learned model as literal chains,
-    * unnested to the flat (vec_id, comp, proj) contract. */
-  private def pcaOracleSql(m: Pca.Model): String = {
-    val arr = pcaChainsSql(m).mkString("[", ", ", "]")
-    s"""WITH v AS (SELECT vec_id, $arr AS pr FROM embeddings)
-        SELECT vec_id, CAST(generate_subscripts(pr, 1) - 1 AS BIGINT) AS comp,
-               unnest(pr) AS proj
-        FROM v ORDER BY vec_id, comp"""
-  }
-
-  /** DuckDB SQL for `ann_topk_pca`: projected coordinates via the literal
-    * chains, prescreen dot in comp order, candidate cut, exact full-width
-    * re-rank — the quantOracleSql shape in PCA space. */
-  private def pcaAnnOracleSql(m: Pca.Model): String = {
-    val projCols = pcaChainsSql(m).zipWithIndex
-      .map { case (ch, c) => s"$ch AS p$c" }.mkString(",\n               ")
-    val dotChain = m.comps.indices.map(c => s"q.p$c * c.p$c").mkString(" + ")
-    s"""WITH v AS (SELECT vec_id, $projCols FROM embeddings),
-        q AS (SELECT * FROM v WHERE vec_id < $AnnQueries),
-        sc AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                      $dotChain AS score
-               FROM v c, q WHERE c.vec_id <> q.vec_id),
-        cand AS (SELECT query_id, neighbor_id FROM (
-                   SELECT query_id, neighbor_id,
-                          row_number() OVER (PARTITION BY query_id
-                                             ORDER BY score DESC, neighbor_id) AS prn
-                   FROM sc) WHERE prn <= $PcaCandK),
-        s AS (SELECT cand.query_id, cand.neighbor_id,
-                     list_cosine_similarity(CAST(CAST(qe.embedding AS FLOAT[]) AS DOUBLE[]),
-                                            CAST(CAST(ce.embedding AS FLOAT[]) AS DOUBLE[])) AS sim
-              FROM cand JOIN embeddings qe ON qe.vec_id = cand.query_id
-                        JOIN embeddings ce ON ce.vec_id = cand.neighbor_id),
-        r AS (SELECT query_id, neighbor_id, sim,
-                     row_number() OVER (PARTITION BY query_id
-                                        ORDER BY sim DESC, neighbor_id) AS rnk
-              FROM s)
-        SELECT query_id, rnk AS rank, neighbor_id, round(sim, 4) AS cosine
-        FROM r WHERE rnk <= $AnnK ORDER BY query_id, rnk"""
-  }
-
-  /** Shared CTE chain (normalized text → distinct 5-gram sets → candidate
-    * pairs with intersection/union sizes) used by the `minhash_neardup` and
-    * `dedup_clusters` oracles. */
-  private val NearDupPairCtes: String =
-    """n AS (
-         SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-         FROM documents),
-       g AS (
-         SELECT doc_id,
-                list_distinct(list_transform(range(1, greatest(length(t) - 4, 1) + 1),
-                                             i -> substr(t, i, 5))) AS sh
-         FROM n),
-       pairs AS (
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                len(list_intersect(a.sh, b.sh)) AS inter,
-                len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS uni
-         FROM g a JOIN g b
-           ON a.doc_id < b.doc_id
-          AND least(len(a.sh), len(b.sh)) * 2 >= greatest(len(a.sh), len(b.sh)))"""
-
-  /** Connected-components closure over the brute-force pair list — the
-    * oracle for both batch clustering (`dedup_clusters`) and its
-    * incremental-maintenance twin (`incremental_clusters`), which must
-    * converge to the identical fixpoint. */
-  private val DedupClustersOracle: String =
-    s"""WITH RECURSIVE $NearDupPairCtes,
-        np AS (SELECT id_a, id_b FROM pairs
-               WHERE CAST(inter AS DOUBLE) / uni >= 0.5),
-        e AS (SELECT id_a AS a, id_b AS b FROM np
-              UNION ALL SELECT id_b, id_a FROM np),
-        reach(src, dst) AS (
-          SELECT DISTINCT a, a FROM e
-          UNION
-          SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a)
-        SELECT src AS id, min(dst) AS cluster_id
-        FROM reach GROUP BY src ORDER BY id"""
-
-  /** Same closure, extended with the keep-best representative pick:
-    * max n_chars per cluster, ties to the lowest doc_id, singletons their
-    * own cluster. */
-  private val DedupKeepBestOracle: String =
-    s"""WITH RECURSIVE $NearDupPairCtes,
-        np AS (SELECT id_a, id_b FROM pairs
-               WHERE CAST(inter AS DOUBLE) / uni >= 0.5),
-        e AS (SELECT id_a AS a, id_b AS b FROM np
-              UNION ALL SELECT id_b, id_a FROM np),
-        reach(src, dst) AS (
-          SELECT DISTINCT a, a FROM e
-          UNION
-          SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a),
-        cl AS (SELECT src AS id, min(dst) AS cluster_id FROM reach GROUP BY src),
-        f AS (SELECT d.doc_id, coalesce(cl.cluster_id, d.doc_id) AS cluster_id,
-                     d.n_chars
-              FROM documents d LEFT JOIN cl ON d.doc_id = cl.id),
-        b AS (SELECT cluster_id, count(*) AS n_members,
-                     max(n_chars) AS rep_n_chars
-              FROM f GROUP BY 1),
-        r AS (SELECT f.cluster_id, min(f.doc_id) AS rep_doc_id
-              FROM f JOIN b ON f.cluster_id = b.cluster_id
-                           AND f.n_chars = b.rep_n_chars
-              GROUP BY 1)
-        SELECT b.cluster_id, b.n_members, r.rep_doc_id, b.rep_n_chars
-        FROM b JOIN r USING (cluster_id) ORDER BY cluster_id"""
-
-
-  /** Shared DuckDB oracle for the two IVF lanes: ann_topk_ivf (in-memory)
-    * and ann_topk_ivf_disk (cell-partitioned layout + pruned probe scan) —
-    * same quantizer, probe ranking and candidate sets by construction. */
-  private def ivfOracleSql: String =
-    s"""WITH e AS (SELECT vec_id, label, CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]) AS v
-                   FROM embeddings),
-          f AS (SELECT label, generate_subscripts(embedding, 1) - 1 AS pos,
-                       unnest(CAST(embedding AS FLOAT[])) AS x
-                FROM embeddings),
-          cent AS (
-            SELECT label, pos,
-                   CAST(sum(CAST(CAST(x AS VARCHAR) AS DECIMAL(27,12))) AS DOUBLE)
-                     / count(*) AS c
-            FROM f GROUP BY label, pos),
-          centarr AS (SELECT label, list(c ORDER BY pos) AS cv FROM cent GROUP BY label),
-          q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $AnnQueries),
-          probe AS (
-            SELECT query_id, qv, label,
-                   row_number() OVER (PARTITION BY query_id
-                     ORDER BY list_cosine_similarity(qv, cv) DESC, label) AS pr
-            FROM q CROSS JOIN centarr),
-          cand AS (
-            SELECT p.query_id, e.vec_id AS neighbor_id,
-                   list_cosine_similarity(p.qv, e.v) AS sim
-            FROM (SELECT * FROM probe WHERE pr <= $IvfProbes) p
-            JOIN e ON e.label = p.label
-            WHERE e.vec_id <> p.query_id),
-          r AS (SELECT query_id, neighbor_id, sim,
-                       row_number() OVER (PARTITION BY query_id
-                                          ORDER BY sim DESC, neighbor_id) AS rnk
-                FROM cand)
-          SELECT query_id, rnk AS rank, neighbor_id, round(sim, 4) AS cosine
-          FROM r WHERE rnk <= $AnnK ORDER BY query_id, rnk"""
-
-  /** The incremental lane reproduced end-to-end in SQL: centroids from the
-    * HISTORICAL snapshot only (frozen quantizer), the new batch assigned to
-    * its nearest centroid (nprobe=1, ties to the lowest cell — the same
-    * pinned order the engine's probe ranking uses), and the probe running
-    * over historical ∪ assigned exactly as the engine's updated index. */
-  private def incrementalIvfOracleSql: String =
-    s"""WITH e AS (SELECT vec_id, label, CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]) AS v
-                   FROM embeddings),
-          f AS (SELECT label, generate_subscripts(embedding, 1) - 1 AS pos,
-                       unnest(CAST(embedding AS FLOAT[])) AS x
-                FROM embeddings WHERE vec_id % 5 <> 0),
-          cent AS (
-            SELECT label, pos,
-                   CAST(sum(CAST(CAST(x AS VARCHAR) AS DECIMAL(27,12))) AS DOUBLE)
-                     / count(*) AS c
-            FROM f GROUP BY label, pos),
-          centarr AS (SELECT label, list(c ORDER BY pos) AS cv FROM cent GROUP BY label),
-          hist AS (SELECT vec_id, CAST(label AS BIGINT) AS cell, v
-                   FROM e WHERE vec_id % 5 <> 0),
-          assign AS (
-            SELECT vec_id, cell, v FROM (
-              SELECT n.vec_id, n.v, CAST(c.label AS BIGINT) AS cell,
-                     row_number() OVER (PARTITION BY n.vec_id
-                       ORDER BY list_cosine_similarity(n.v, c.cv) DESC, c.label) AS rn
-              FROM (SELECT vec_id, v FROM e WHERE vec_id % 5 = 0) n
-              CROSS JOIN centarr c) WHERE rn = 1),
-          updated AS (SELECT * FROM hist UNION ALL SELECT * FROM assign),
-          q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $AnnQueries),
-          probe AS (
-            SELECT query_id, qv, CAST(label AS BIGINT) AS cell,
-                   row_number() OVER (PARTITION BY query_id
-                     ORDER BY list_cosine_similarity(qv, cv) DESC, label) AS pr
-            FROM q CROSS JOIN centarr),
-          cand AS (
-            SELECT p.query_id, u.vec_id AS neighbor_id,
-                   list_cosine_similarity(p.qv, u.v) AS sim
-            FROM (SELECT * FROM probe WHERE pr <= $IvfProbes) p
-            JOIN updated u ON u.cell = p.cell
-            WHERE u.vec_id <> p.query_id),
-          r AS (SELECT query_id, neighbor_id, sim,
-                       row_number() OVER (PARTITION BY query_id
-                                          ORDER BY sim DESC, neighbor_id) AS rnk
-                FROM cand)
-          SELECT query_id, rnk AS rank, neighbor_id, round(sim, 4) AS cosine
-          FROM r WHERE rnk <= $AnnK ORDER BY query_id, rnk"""
-
-  def oracleSql: Map[String, String] = Map(
-    "dedup_keep_best" -> DedupKeepBestOracle,
-
-    // Q14 ratio: identical decimal conditional sums, identical final ops.
-    // Q11 shape: the fractional HAVING threshold replayed as the exact
-    // integer inequality 10000·part > total — cents·quantity HUGEINT-exact.
-    "q11_important_parts" ->
-      """WITH f AS (SELECT l_partkey,
-                           CAST(CAST(CAST(CAST(l_extendedprice AS DOUBLE) AS VARCHAR)
-                                     AS DECIMAL(12,2)) * 100 AS HUGEINT)
-                           * CAST(CAST(CAST(CAST(l_quantity AS DOUBLE) AS VARCHAR)
-                                       AS DECIMAL(4,0)) AS HUGEINT) AS v
-                    FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-                    WHERE s_nationkey IN (1, 3, 5)),
-         p AS (SELECT l_partkey, sum(v) AS val_cq FROM f GROUP BY 1),
-         t AS (SELECT sum(val_cq) AS tot FROM p)
-         SELECT l_partkey, CAST(val_cq AS BIGINT) AS value_cents
-         FROM p, t WHERE val_cq * 10000 > tot
-         ORDER BY value_cents DESC, l_partkey""",
-
-    // Q12 shape: two-way conditional aggregation over the fact-fact join,
-    // all-integer outputs.
-    "q12_ship_priority" ->
-      """SELECT l_returnflag,
-                CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                              THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-                CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                              THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-           AND l_shipdate < TIMESTAMP '1996-01-01'
-           AND l_returnflag IN ('A', 'R')
-         GROUP BY 1 ORDER BY 1""",
-
-    "q14_promo" ->
-      """WITH j AS (
-           SELECT p_type, CAST(l_extendedprice AS DOUBLE) * (1.0 - CAST(l_discount AS DOUBLE)) AS disc
-           FROM lineitem JOIN part ON l_partkey = p_partkey
-           WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-             AND l_shipdate < TIMESTAMP '1996-02-01'),
-         a AS (
-           SELECT CAST(sum(CASE WHEN p_type LIKE 'PROMO%'
-                                THEN CAST(CAST(disc AS VARCHAR) AS DECIMAL(27,6))
-                                ELSE CAST(CAST(0 AS VARCHAR) AS DECIMAL(27,6)) END) AS DOUBLE)
-                    AS promo_revenue,
-                  CAST(sum(CAST(CAST(disc AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE)
-                    AS total_revenue,
-                  count(*) AS n_items
-           FROM j)
-         SELECT promo_revenue, total_revenue, n_items,
-                100.0 * promo_revenue / total_revenue AS promo_pct
-         FROM a""",
-
-    // Q17: the per-part threshold reproduces bit-for-bit (decimal sum →
-    // digit string → one division, one multiply), so the < comparison and
-    // the final sums agree exactly.
-    "q17_small_qty" ->
-      """WITH bp AS (SELECT p_partkey FROM part WHERE p_brand = 'Brand#23'),
-         th AS (SELECT l_partkey,
-                       (CAST(CAST(sum(CAST(CAST(CAST(l_quantity AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6)))
-                                  AS VARCHAR) AS DOUBLE)
-                        / CAST(count(*) AS DOUBLE)) * 0.2 AS qty_thresh
-                FROM lineitem JOIN bp ON l_partkey = p_partkey
-                GROUP BY l_partkey)
-         SELECT CAST(sum(CAST(CAST(CAST(l.l_extendedprice AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE)
-                  / 7.0 AS avg_yearly,
-                count(*) AS n_rows
-         FROM lineitem l JOIN th ON l.l_partkey = th.l_partkey
-         WHERE CAST(l.l_quantity AS DOUBLE) < th.qty_thresh""",
-
-    "q19_disjunctive" ->
-      """SELECT CAST(sum(CAST(CAST(CAST(l_extendedprice AS DOUBLE) * (1.0 - CAST(l_discount AS DOUBLE)) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS revenue,
-                count(*) AS n_items
-         FROM lineitem JOIN part ON l_partkey = p_partkey
-         WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-                AND CAST(l_quantity AS DOUBLE) BETWEEN 1 AND 20)
-            OR (p_brand = 'Brand#23' AND p_size BETWEEN 10 AND 30
-                AND CAST(l_quantity AS DOUBLE) BETWEEN 10 AND 40)""",
-
-    // Greedy non-overlapping automaton replayed with a recursive CTE over
-    // the same µs-total event order (the packed_chunks recurrence-replay
-    // technique applied to a state machine).
-    // Transition matrix: identical lag + two-level rollup, all integer.
-    "event_transitions" ->
-      """WITH t AS (SELECT user_id, event_type AS to_type,
-                           lag(event_type) OVER (PARTITION BY user_id
-                                                 ORDER BY ts, event_id) AS from_type
-                    FROM events),
-          pu AS (SELECT from_type, to_type, user_id, count(*) AS c
-                 FROM t WHERE from_type IS NOT NULL GROUP BY 1, 2, 3)
-          SELECT from_type, to_type,
-                 CAST(sum(c) AS BIGINT) AS n_transitions,
-                 CAST(count(*) AS BIGINT) AS n_users
-          FROM pu GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    // sequenceNextNode: the first-match scan replayed over the identical
-    // (µs, event_id)-ordered per-user list with DuckDB list lambdas; NULL
-    // when no chain or nothing follows. next_node is a value column, not a
-    // sort key, so the null-position divergence rule doesn't bite.
-    "seq_next_node" ->
-      """WITH u AS (SELECT user_id,
-                           list(event_type ORDER BY epoch_us(ts), event_id) AS evs
-                    FROM events GROUP BY user_id),
-          m AS (SELECT user_id, evs,
-                       list_filter(range(1, len(evs) - 1),
-                                   i -> evs[i] = 'click' AND evs[i + 1] = 'purchase') AS hits
-                FROM u)
-          SELECT user_id,
-                 CASE WHEN len(hits) > 0 THEN evs[hits[1] + 2] END AS next_node
-          FROM m ORDER BY user_id""",
-
-    "sequence_count" -> {
-      val k = FunnelSteps.length
-      val stepCase = FunnelSteps.zipWithIndex
-        .map { case (t, i) => s"WHEN '$t' THEN ${i + 1}" }.mkString(" ")
-      val inList = FunnelSteps.map(t => s"'$t'").mkString(", ")
-      s"""WITH RECURSIVE ev AS (
-            SELECT user_id,
-                   row_number() OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id) AS rn,
-                   CASE event_type $stepCase END AS step
-            FROM events WHERE event_type IN ($inList)),
-          n AS (SELECT user_id, max(rn) AS n FROM ev GROUP BY 1),
-          walk(user_id, rn, state, cnt) AS (
-            SELECT user_id, 0, 1, 0 FROM n
-            UNION ALL
-            SELECT w.user_id, w.rn + 1,
-                   CASE WHEN e.step = w.state
-                        THEN CASE WHEN w.state = $k THEN 1 ELSE w.state + 1 END
-                        ELSE w.state END,
-                   w.cnt + CASE WHEN e.step = w.state AND w.state = $k
-                                THEN 1 ELSE 0 END
-            FROM walk w JOIN ev e ON e.user_id = w.user_id AND e.rn = w.rn + 1)
-          SELECT w.user_id, CAST(w.cnt AS BIGINT) AS n_matches
-          FROM walk w JOIN n ON w.user_id = n.user_id AND w.rn = n.n
-          ORDER BY w.user_id"""
-    },
-
-    "q7_volume" ->
-      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-                CAST(year(l_shipdate) AS INT) AS l_year,
-                CAST(sum(CAST(CAST(CAST(l_extendedprice AS DOUBLE) * (1.0 - CAST(l_discount AS DOUBLE)) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS revenue,
-                count(*) AS n_items
-         FROM lineitem
-         JOIN orders   ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation sn ON s_nationkey = sn.n_nationkey
-         JOIN nation cn ON c_nationkey = cn.n_nationkey
-         WHERE (sn.n_name = 'NATION_1' AND cn.n_name = 'NATION_2')
-            OR (sn.n_name = 'NATION_2' AND cn.n_name = 'NATION_1')
-         GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-
-    // Exact decimal revenue makes the top-20 boundary bit-stable; ties
-    // break on custkey identically in both engines.
-    "q10_returned_top20" ->
-      """SELECT c_custkey, c_name,
-                CAST(sum(CAST(CAST(CAST(l_extendedprice AS DOUBLE) * (1.0 - CAST(l_discount AS DOUBLE)) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS revenue,
-                count(*) AS n_items
-         FROM lineitem
-         JOIN orders   ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         WHERE l_returnflag = 'R'
-         GROUP BY 1, 2
-         ORDER BY revenue DESC, c_custkey LIMIT 20""",
-
-    // The exact trailing count is SQL; the HLL estimate gates through the
-    // deterministic est_ok envelope (TRUE on both sides, a broken sketch
-    // flips it) — the seg_idempotent_approx technique.
-    "rolling_30d_users_hll" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
-         days AS (SELECT DISTINCT day FROM ev)
-         SELECT strftime(d.day, '%Y-%m-%d') AS day,
-                count(DISTINCT e.user_id) AS users_30d,
-                TRUE AS est_ok
-         FROM days d JOIN ev e ON e.day BETWEEN d.day - 29 AND d.day
-         GROUP BY d.day ORDER BY 1""",
-
-    // Exact bitmap algebra == exact distinct-set algebra in SQL.
-    "seg_bitmap_algebra" ->
-      """WITH c AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'click'),
-         p AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
-         SELECT (SELECT count(*) FROM c) AS n_click,
-                (SELECT count(*) FROM p) AS n_purchase,
-                (SELECT count(*) FROM c JOIN p USING (user_id)) AS n_both,
-                (SELECT count(*) FROM (SELECT user_id FROM c
-                                       UNION SELECT user_id FROM p)) AS n_either,
-                (SELECT count(*) FROM c
-                 WHERE user_id NOT IN (SELECT user_id FROM p)) AS n_click_only""",
-
-    // Exact audience counts hash-match; the est_ok booleans are TRUE here by
-    // definition and on the Spark side iff each theta estimate sits inside
-    // its own deterministic ±3σ bounds (exact equality in the exact regime).
-    "seg_theta_algebra" ->
-      """WITH f AS (SELECT user_id,
-                           max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS c,
-                           max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS p
-                    FROM events WHERE event_type IN ('click', 'purchase')
-                    GROUP BY user_id)
-         SELECT CAST(sum(c) AS BIGINT) AS n_click,
-                CAST(sum(p) AS BIGINT) AS n_purchase,
-                count(*) AS n_either,
-                CAST(sum(c * p) AS BIGINT) AS n_both,
-                CAST(sum(c * (1 - p)) AS BIGINT) AS n_click_only,
-                TRUE AS click_est_ok, TRUE AS purchase_est_ok,
-                TRUE AS union_est_ok, TRUE AS both_est_ok,
-                TRUE AS clickonly_est_ok
-         FROM f""",
-
-    // Exact adjacent-week retention counts hash-match; the est_ok gate is
-    // TRUE on the Spark side iff the lag-window theta INTERSECTION of the
-    // two weeks' persisted states brackets the exact count.
-    "theta_weekly_retention" ->
-      """WITH uw AS (SELECT DISTINCT user_id,
-                            CAST(date_trunc('week', ts) AS DATE) AS week
-                     FROM events),
-          act AS (SELECT week, count(*) AS n_active FROM uw GROUP BY week),
-          ret AS (SELECT a.week, count(*) AS n_retained
-                  FROM uw a JOIN uw b
-                    ON b.user_id = a.user_id AND b.week = a.week - 7
-                  GROUP BY a.week)
-         SELECT strftime(a.week, '%Y-%m-%d') AS week, a.n_active,
-                CAST(coalesce(r.n_retained, 0) AS BIGINT) AS n_retained,
-                TRUE AS retained_est_ok
-         FROM act a LEFT JOIN ret r ON r.week = a.week
-         WHERE EXISTS (SELECT 1 FROM act p WHERE p.week = a.week - 7)
-         ORDER BY week""",
-
-    // Sweep-line interval union replay: identical windows over the same
-    // total order; per-key outputs are tie-order invariant by construction.
-    "interval_union_days" ->
-      """WITH iv AS (SELECT l_suppkey, CAST(l_shipdate AS DATE) AS s,
-                            CAST(l_shipdate AS DATE) + CAST(CAST(l_quantity AS DOUBLE) AS INT) AS e,
-                            l_orderkey, l_linenumber
-                     FROM lineitem),
-         pm AS (SELECT *, max(e) OVER (PARTITION BY l_suppkey
-                                       ORDER BY s, e, l_orderkey, l_linenumber
-                                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                                AND 1 PRECEDING) AS prev_max
-                FROM iv),
-         fl AS (SELECT *, CASE WHEN prev_max IS NULL OR s > prev_max + 1
-                               THEN 1 ELSE 0 END AS isnew FROM pm),
-         isl AS (SELECT *, sum(isnew) OVER (PARTITION BY l_suppkey
-                                            ORDER BY s, e, l_orderkey, l_linenumber
-                                            ROWS BETWEEN UNBOUNDED PRECEDING
-                                                     AND CURRENT ROW) AS island
-                 FROM fl),
-         g AS (SELECT l_suppkey, island, min(s) AS i_s, max(e) AS i_e,
-                      count(*) AS n
-               FROM isl GROUP BY 1, 2)
-         SELECT l_suppkey, CAST(sum(n) AS BIGINT) AS n_intervals,
-                count(*) AS n_islands,
-                CAST(sum(i_e - i_s + 1) AS BIGINT) AS covered_days
-         FROM g GROUP BY 1 ORDER BY 1""",
-
-    // Per-source top-5 words — the sketch runs in its exact (non-evicting)
-    // regime, so plain counts + a deterministic rank replay it.
-    "topk_words_by_source" ->
-      """WITH w AS (SELECT source, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-                    FROM documents),
-         c AS (SELECT source, word, count(*) AS n FROM w GROUP BY 1, 2),
-         r AS (SELECT source, word, n,
-                      row_number() OVER (PARTITION BY source
-                                         ORDER BY n DESC, word) AS rank
-               FROM c)
-         SELECT source, CAST(rank AS INT) AS rank, word, n
-         FROM r WHERE rank <= 5 ORDER BY source, rank""",
-
-    // Trailing 7-day window stats: the fan-out rewrite must equal the
-    // direct interval join over observed days.
-    "rolling_7d_users" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
-         days AS (SELECT DISTINCT day FROM ev)
-         SELECT strftime(d.day, '%Y-%m-%d') AS day,
-                count(DISTINCT e.user_id) AS users_7d,
-                count(*) AS n_events_7d
-         FROM days d JOIN ev e ON e.day BETWEEN d.day - 6 AND d.day
-         GROUP BY d.day ORDER BY 1""",
-    "seg_naive" ->
-      s"""SELECT user_id, count(*) AS n_events, count(*) >= ${ClickSeg.minCount} AS in_segment
-          FROM events WHERE event_type = '${ClickSeg.eventType}'
-          GROUP BY user_id ORDER BY user_id""",
-
-    "seg_idempotent" ->
-      s"""SELECT user_id, count(DISTINCT event_id) AS n_unique,
-                 count(DISTINCT event_id) >= ${ClickSeg.minCount} AS in_segment
-          FROM events WHERE event_type = '${ClickSeg.eventType}'
-          GROUP BY user_id ORDER BY user_id""",
-
-    "seg_idempotent_approx" ->
-      s"""SELECT user_id, count(DISTINCT event_id) AS n_unique,
-                 count(DISTINCT event_id) >= ${ClickSeg.minCount} AS in_segment,
-                 TRUE AS est_ok
-          FROM events WHERE event_type = '${ClickSeg.eventType}'
-          GROUP BY user_id ORDER BY user_id""",
-
-    "seg_w4_any" ->
-      s"""WITH a AS (
-            SELECT user_id, CAST(ts AS DATE) AS assigned_at, count(*) >= $DailySeg AS value
-            FROM events WHERE event_type = '${ClickSeg.eventType}' GROUP BY 1, 2)
-          SELECT DISTINCT user_id FROM a WHERE value ORDER BY user_id""",
-
-    "seg_w4_latest" ->
-      s"""WITH a AS (
-            SELECT user_id, CAST(ts AS DATE) AS assigned_at, count(*) >= $DailySeg AS value
-            FROM events WHERE event_type = '${ClickSeg.eventType}' GROUP BY 1, 2),
-          r AS (
-            SELECT user_id, value,
-                   row_number() OVER (PARTITION BY user_id ORDER BY assigned_at DESC) AS rn
-            FROM a)
-          SELECT user_id FROM r WHERE rn = 1 AND value ORDER BY user_id""",
-
-    "seg_latest_event" ->
-      """SELECT user_id, event_type AS latest_type, CAST(value AS DOUBLE) AS latest_value
-         FROM (SELECT user_id, event_type, CAST(value AS DOUBLE) AS value,
-                      row_number() OVER (PARTITION BY user_id
-                                         ORDER BY ts DESC, event_id DESC) AS rn
-               FROM events)
-         WHERE rn = 1 ORDER BY user_id""",
-
-    "seg_first_event" ->
-      """SELECT user_id, event_type AS first_type, CAST(value AS DOUBLE) AS first_value
-         FROM (SELECT user_id, event_type, CAST(value AS DOUBLE) AS value,
-                      row_number() OVER (PARTITION BY user_id
-                                         ORDER BY ts ASC, event_id ASC) AS rn
-               FROM events)
-         WHERE rn = 1 ORDER BY user_id""",
-
-    "seg_eventtime" ->
-      s"""SELECT user_id, count(DISTINCT event_id) AS n_unique,
-                 CAST(floor(epoch(max(ts))) AS BIGINT) AS last_event_time,
-                 count(DISTINCT event_id) >= ${ClickSeg.minCount} AS in_segment
-          FROM events WHERE event_type = '${ClickSeg.eventType}'
-          GROUP BY user_id ORDER BY user_id""",
-
-    "seg_microbatch_equiv" ->
-      s"""SELECT user_id, count(DISTINCT event_id) AS n_unique,
-                 count(DISTINCT event_id) >= ${ClickSeg.minCount} AS in_segment
-          FROM events WHERE event_type = '${ClickSeg.eventType}'
-          GROUP BY user_id ORDER BY user_id""",
-
-    // est_ok is the sketch's driver-visible gate: deterministically TRUE
-    // when the merged HLL estimate sits inside its error envelope of the
-    // exact count (see segMicroBatchHll scaladoc) — DuckDB asserts the
-    // exact counts and the literal
-    "seg_microbatch_hll" ->
-      s"""SELECT user_id, count(DISTINCT event_id) AS n_unique,
-                 count(DISTINCT event_id) >= ${ClickSeg.minCount} AS in_segment,
-                 TRUE AS est_ok
-          FROM events WHERE event_type = '${ClickSeg.eventType}'
-          GROUP BY user_id ORDER BY user_id""",
-
-    "seg_overlap_hll" ->
-      """WITH x AS (
-           SELECT count(DISTINCT CASE WHEN event_type = 'click' THEN user_id END) AS n_click,
-                  count(DISTINCT CASE WHEN event_type = 'purchase' THEN user_id END) AS n_purchase,
-                  count(DISTINCT user_id) AS n_union
-           FROM events WHERE event_type IN ('click', 'purchase'))
-         SELECT n_click, n_purchase, n_union,
-                n_click + n_purchase - n_union AS n_intersect,
-                TRUE AS est_ok
-         FROM x""",
-
-    "text_repetition" ->
-      """WITH g AS (
-           SELECT doc_id,
-                  CASE WHEN len(regexp_extract_all(lower(text), '[a-z]+')) >= 3
-                       THEN list_transform(
-                              range(1, len(regexp_extract_all(lower(text), '[a-z]+')) - 1),
-                              i -> array_to_string(
-                                     list_slice(regexp_extract_all(lower(text), '[a-z]+'),
-                                                i, i + 2), ' '))
-                       ELSE [] END AS t3
-           FROM documents)
-         SELECT doc_id, len(t3) AS n_trigrams,
-                coalesce((len(t3) - len(list_distinct(t3)))::DOUBLE / nullif(len(t3), 0), 0.0)
-                  AS rep_ratio
-         FROM g ORDER BY doc_id""",
-
-    "pivot_user_activity" ->
-      """SELECT user_id,
-                count(*) FILTER (WHERE event_type = 'click') AS click,
-                count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-                count(*) FILTER (WHERE event_type = 'view') AS "view"
-         FROM events GROUP BY user_id ORDER BY user_id""",
-
-    "unpivot_user_activity" ->
-      """WITH w AS (
-           SELECT user_id,
-                  count(*) FILTER (WHERE event_type = 'click') AS click,
-                  count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-                  count(*) FILTER (WHERE event_type = 'view') AS "view"
-           FROM events GROUP BY user_id)
-         SELECT user_id, event_type, n FROM (
-           SELECT user_id, 'click' AS event_type, click AS n FROM w
-           UNION ALL SELECT user_id, 'purchase', purchase FROM w
-           UNION ALL SELECT user_id, 'view', "view" FROM w)
-         ORDER BY user_id, event_type""",
-
-    "ntile_orders" ->
-      """SELECT quartile, count(*) AS n,
-                CAST(sum(CAST(CAST(CAST(o_totalprice AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS sum_price
-         FROM (SELECT CAST(o_totalprice AS DOUBLE) AS o_totalprice,
-                      ntile(4) OVER (ORDER BY CAST(o_totalprice AS DOUBLE) DESC, o_orderkey) AS quartile
-               FROM orders)
-         GROUP BY quartile ORDER BY quartile""",
-
-    "doc_chunks" ->
-      """WITH d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS toks
-                    FROM documents WHERE len(regexp_extract_all(text, '\S+')) > 0)
-         SELECT doc_id,
-                CAST(s.start / 48 AS INT) AS chunk_idx,
-                array_to_string(list_slice(toks, s.start + 1, s.start + 64), ' ') AS chunk_text,
-                len(list_slice(toks, s.start + 1, s.start + 64)) AS n_chunk_tokens
-         FROM d, LATERAL (SELECT unnest(range(0, len(toks), 48)) AS start) s
-         ORDER BY doc_id, chunk_idx""",
-
-    // The greedy packing recurrence replayed row-by-row as a recursive CTE
-    // over the same reproduced chunk stream — pure integer state, so the
-    // assignment is exactly engine-portable.
-    "packed_chunks" ->
-      """WITH RECURSIVE d AS (
-           SELECT doc_id, regexp_extract_all(text, '\S+') AS toks
-           FROM documents WHERE len(regexp_extract_all(text, '\S+')) > 0),
-         c AS (SELECT doc_id,
-                      CAST(s.start / 48 AS INT) AS chunk_idx,
-                      CAST(len(list_slice(toks, s.start + 1, s.start + 64)) AS INT)
-                        AS n_chunk_tokens,
-                      row_number() OVER (PARTITION BY doc_id ORDER BY s.start) AS rn
-               FROM d, LATERAL (SELECT unnest(range(0, len(toks), 48)) AS start) s),
-         r AS (
-           SELECT doc_id, rn, chunk_idx, n_chunk_tokens,
-                  0 AS pack_id, n_chunk_tokens AS used
-           FROM c WHERE rn = 1
-           UNION ALL
-           SELECT c.doc_id, c.rn, c.chunk_idx, c.n_chunk_tokens,
-                  CASE WHEN r.used + c.n_chunk_tokens <= 150
-                       THEN r.pack_id ELSE r.pack_id + 1 END,
-                  CASE WHEN r.used + c.n_chunk_tokens <= 150
-                       THEN r.used + c.n_chunk_tokens ELSE c.n_chunk_tokens END
-           FROM r JOIN c ON c.doc_id = r.doc_id AND c.rn = r.rn + 1)
-         SELECT doc_id, chunk_idx, n_chunk_tokens, pack_id
-         FROM r ORDER BY doc_id, chunk_idx""",
-
-    "sample_events_hash" ->
-      s"""SELECT event_id, user_id, event_type FROM events
-          WHERE (event_id * ${Sampling.Knuth}) % 100 < 7
-          ORDER BY event_id""",
-
-    "source_rebalance" ->
-      s"""WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-          k AS (SELECT min(n) AS k FROM c),
-          r AS (SELECT doc_id, source,
-                       row_number() OVER (PARTITION BY source
-                         ORDER BY (doc_id * ${Sampling.Knuth}) % 1000000007, doc_id) AS rn
-                FROM documents)
-          SELECT doc_id, source FROM r, k WHERE rn <= k.k
-          ORDER BY doc_id""",
-
-    "stratified_sample" ->
-      s"""SELECT event_type, event_id, user_id
-          FROM (SELECT event_type, event_id, user_id,
-                       row_number() OVER (PARTITION BY event_type
-                         ORDER BY (event_id * ${Sampling.Knuth}) % 1000000007, event_id) AS rn
-                FROM events)
-          WHERE rn <= 5 ORDER BY event_type, event_id""",
-
-    // powers raised in exact DECIMAL from the shortest string repr (2-decimal
-    // source values → scale-6 cubes are exact), never cubed in doubles first:
-    // double→decimal rounding near grid midpoints diverges across engines
-    "agg_moments" ->
-      """WITH dv AS (
-           SELECT event_type, CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2)) AS d
-           FROM events),
-         s AS (
-           SELECT event_type, count(*) AS n,
-                  CAST(CAST(sum(d) AS VARCHAR) AS DOUBLE) AS s1,
-                  CAST(CAST(sum(d * d) AS VARCHAR) AS DOUBLE) AS s2,
-                  CAST(CAST(sum(d * d * d) AS VARCHAR) AS DOUBLE) AS s3
-           FROM dv GROUP BY event_type),
-         m AS (
-           SELECT event_type, n, s1 / n AS mean, s2, s3 FROM s),
-         mm AS (
-           SELECT event_type, n, mean,
-                  s2 / n - mean * mean AS m2,
-                  s3 / n - 3.0 * mean * s2 / n + 2.0 * mean * mean * mean AS m3
-           FROM m)
-         SELECT event_type, n, mean, m3 / (m2 * sqrt(m2)) AS skewness
-         FROM mm ORDER BY event_type""",
-
-    "corr_value_hour" ->
-      """WITH dv AS (
-           SELECT event_type, CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2)) AS x,
-                  CAST(hour(ts) AS BIGINT) AS y
-           FROM events),
-         s AS (
-           SELECT event_type, count(*) AS n,
-                  CAST(CAST(sum(x) AS VARCHAR) AS DOUBLE) AS sx,
-                  CAST(CAST(sum(y) AS BIGINT) AS DOUBLE) AS sy,
-                  CAST(CAST(sum(x * x) AS VARCHAR) AS DOUBLE) AS sxx,
-                  CAST(CAST(sum(y * y) AS BIGINT) AS DOUBLE) AS syy,
-                  CAST(CAST(sum(x * CAST(y AS DECIMAL(4,0))) AS VARCHAR) AS DOUBLE) AS sxy
-           FROM dv GROUP BY event_type)
-         SELECT event_type, n,
-                (n * sxy - sx * sy)
-                  / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy))
-                  AS corr_value_hour
-         FROM s ORDER BY event_type""",
-
-    "hist_value" ->
-      """WITH b AS (SELECT event_type, min(CAST(value AS DOUBLE)) AS lo, max(CAST(value AS DOUBLE)) AS hi
-                    FROM events GROUP BY 1)
-         SELECT e.event_type,
-                CASE WHEN b.hi = b.lo THEN 0
-                     ELSE least(CAST(floor((CAST(e.value AS DOUBLE) - b.lo) * 10.0 / (b.hi - b.lo))
-                                     AS BIGINT), 9) END AS bin,
-                count(*) AS n, min(b.lo) AS lo, min(b.hi) AS hi,
-                CAST(sum(CAST(CAST(CAST(e.value AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS sum_value
-         FROM events e JOIN b USING (event_type)
-         GROUP BY 1, 2 ORDER BY event_type, bin""",
-
-    "docs_filtered_stats" -> {
-      val toks = "regexp_extract_all(lower(text), '[a-z]+')"
-      s"""SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-          FROM documents
-          WHERE coalesce(len(list_filter($toks, w -> list_contains([$EnStop], w)))::DOUBLE
-                         / nullif(len($toks), 0), 0.0) >= 0.05
-            AND len(regexp_extract_all(text, '\\S+')) >= 20
-          GROUP BY lang ORDER BY lang"""
-    },
-
-    "sessions_stats" ->
-      """WITH o AS (
-           SELECT user_id, ts,
-                  lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev,
-                  event_id
-           FROM events),
-         s AS (
-           SELECT user_id, ts,
-                  sum(CASE WHEN prev IS NULL
-                            OR CAST(floor(epoch(ts)) AS BIGINT)
-                               - CAST(floor(epoch(prev)) AS BIGINT) > 3600
-                           THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS session_id
-           FROM o),
-         g AS (
-           SELECT user_id, session_id, count(*) AS n_events,
-                  CAST(floor(epoch(max(ts))) AS BIGINT)
-                    - CAST(floor(epoch(min(ts))) AS BIGINT) AS duration_s
-           FROM s GROUP BY 1, 2)
-         SELECT user_id, count(*) AS n_sessions, max(n_events) AS max_session_events,
-                CAST(sum(duration_s) AS BIGINT) AS total_duration_s
-         FROM g GROUP BY user_id ORDER BY user_id""",
-
-    // batch sessionization MINUS each user's final session == the streaming
-    // sessionizer's inline-closed emission set (the final open session stays
-    // in state — see sessionsStreamClosed). The recurrence runs on
-    // floor-second epochs, matching the streaming state's second-granular
-    // OpenSession envelope.
-    "sessions_stream_closed" ->
-      """WITH o AS (
-           SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t,
-                  lag(CAST(floor(epoch(ts)) AS BIGINT))
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev,
-                  ts, event_id
-           FROM events),
-         s AS (
-           SELECT user_id, t,
-                  sum(CASE WHEN prev IS NULL OR t - prev > 3600 THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS session_id
-           FROM o),
-         g AS (
-           SELECT user_id, session_id, min(t) AS session_start,
-                  max(t) AS session_end, count(*) AS n_events
-           FROM s GROUP BY 1, 2),
-         m AS (SELECT user_id, max(session_id) AS last_id FROM g GROUP BY 1)
-         SELECT g.user_id, session_start, session_end,
-                CAST(n_events AS BIGINT) AS n_events
-         FROM g JOIN m ON g.user_id = m.user_id AND g.session_id < m.last_id
-         ORDER BY g.user_id, session_start""",
-
-    "funnel_levels" -> {
-      val w = FunnelWindowS
-      s"""WITH u AS (SELECT DISTINCT user_id FROM events
-                     WHERE event_type IN ('click', 'purchase', 'signup')),
-          e AS (SELECT user_id, event_type,
-                       CAST(floor(epoch(ts)) AS BIGINT) AS t FROM events)
-          SELECT u.user_id,
-            CASE
-              WHEN EXISTS (SELECT 1 FROM e a, e b, e c
-                           WHERE a.user_id = u.user_id AND b.user_id = u.user_id
-                             AND c.user_id = u.user_id
-                             AND a.event_type = 'click' AND b.event_type = 'purchase'
-                             AND c.event_type = 'signup'
-                             AND a.t <= b.t AND b.t <= c.t AND c.t - a.t <= $w) THEN 3
-              WHEN EXISTS (SELECT 1 FROM e a, e b
-                           WHERE a.user_id = u.user_id AND b.user_id = u.user_id
-                             AND a.event_type = 'click' AND b.event_type = 'purchase'
-                             AND a.t <= b.t AND b.t - a.t <= $w) THEN 2
-              WHEN EXISTS (SELECT 1 FROM e a WHERE a.user_id = u.user_id
-                             AND a.event_type = 'click') THEN 1
-              ELSE 0 END AS funnel_level
-          FROM u ORDER BY u.user_id"""
-    },
-
-    "sequence_match" ->
-      s"""WITH u AS (SELECT DISTINCT user_id FROM events
-                     WHERE event_type IN ('click', 'purchase', 'signup')),
-          e AS (SELECT user_id, event_type,
-                       CAST(floor(epoch(ts)) AS BIGINT) AS t FROM events)
-          SELECT u.user_id,
-                 EXISTS (SELECT 1 FROM e a, e b, e c
-                         WHERE a.user_id = u.user_id AND b.user_id = u.user_id
-                           AND c.user_id = u.user_id
-                           AND a.event_type = 'click' AND b.event_type = 'purchase'
-                           AND c.event_type = 'signup'
-                           AND a.t <= b.t AND b.t <= c.t) AS matched
-          FROM u ORDER BY u.user_id""",
-
-    "cohort_retention" -> {
-      def wk(i: Int) =
-        s"ts >= TIMESTAMP '2024-01-${"%02d".format(1 + 7 * i)}' AND ts < TIMESTAMP '2024-01-${"%02d".format(8 + 7 * i)}'"
-      s"""WITH p AS (
-            SELECT user_id,
-                   ${(0 until 4).map(i => s"max(CASE WHEN ${wk(i)} THEN 1 ELSE 0 END) AS r$i").mkString(", ")}
-            FROM events GROUP BY user_id)
-          SELECT ${(0 until 4).map(i =>
-              s"CAST(sum(CASE WHEN r0 = 1 AND r$i = 1 THEN 1 ELSE 0 END) AS BIGINT) AS retained_$i").mkString(", ")}
-          FROM p"""
-    },
-
-    "asof_assignment" ->
-      s"""WITH a AS (
-            SELECT user_id, CAST(CAST(ts AS DATE) AS TIMESTAMP) AS assigned_ts,
-                   count(*) >= $DailySeg AS value
-            FROM events WHERE event_type = '${ClickSeg.eventType}' GROUP BY 1, 2),
-          p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
-          SELECT p.event_id, p.user_id, a.value AS seg_value
-          FROM p ASOF LEFT JOIN a
-            ON p.user_id = a.user_id AND p.ts >= a.assigned_ts
-          ORDER BY p.event_id""",
-
-    // Forward ASOF (`<=`) with a µs-exact 3-day tolerance: DuckDB picks the
-    // nearest following assignment; the CASE nulls matches beyond tolerance
-    // while the row survives (merge_asof semantics).
-    "asof_forward_tolerance" ->
-      s"""WITH a AS (
-            SELECT user_id, CAST(CAST(ts AS DATE) AS TIMESTAMP) AS assigned_ts,
-                   count(*) >= $DailySeg AS value
-            FROM events WHERE event_type = '${ClickSeg.eventType}' GROUP BY 1, 2),
-          p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
-          SELECT p.event_id, p.user_id,
-                 CASE WHEN a.assigned_ts IS NOT NULL
-                       AND epoch_us(a.assigned_ts) - epoch_us(p.ts) <= 259200000000
-                      THEN a.value END AS seg_value_next,
-                 (a.assigned_ts IS NOT NULL
-                  AND epoch_us(a.assigned_ts) - epoch_us(p.ts) <= 259200000000) AS matched
-          FROM p ASOF LEFT JOIN a
-            ON p.user_id = a.user_id AND p.ts <= a.assigned_ts
-          ORDER BY p.event_id""",
-
-    // Backward ASOF (`>=`) with a µs-exact 2-day tolerance — pandas
-    // merge_asof's default form: nearest preceding assignment, nulled when
-    // more than 2 days stale, row survives with matched=false.
-    "asof_backward_tolerance" ->
-      s"""WITH a AS (
-            SELECT user_id, CAST(CAST(ts AS DATE) AS TIMESTAMP) AS assigned_ts,
-                   count(*) >= $DailySeg AS value
-            FROM events WHERE event_type = '${ClickSeg.eventType}' GROUP BY 1, 2),
-          p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
-          SELECT p.event_id, p.user_id,
-                 CASE WHEN a.assigned_ts IS NOT NULL
-                       AND epoch_us(p.ts) - epoch_us(a.assigned_ts) <= 172800000000
-                      THEN a.value END AS seg_value_prev,
-                 (a.assigned_ts IS NOT NULL
-                  AND epoch_us(p.ts) - epoch_us(a.assigned_ts) <= 172800000000) AS matched
-          FROM p ASOF LEFT JOIN a
-            ON p.user_id = a.user_id AND p.ts >= a.assigned_ts
-          ORDER BY p.event_id""",
-
-    "range_join_orders" ->
-      """WITH b AS (SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice, o_orderpriority,
-                           CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS o_day,
-                           year(CAST(o_orderdate AS DATE)) AS yr
-                    FROM orders),
-          iv AS (SELECT o_orderpriority || '|' || CAST(yr AS VARCHAR) AS interval_id,
-                        min(o_day) AS lo, max(o_day) AS hi
-                 FROM b GROUP BY 1)
-          SELECT iv.interval_id, iv.lo, iv.hi,
-                 count(*) AS n_orders,
-                 CAST(sum(CAST(CAST(CAST(b.o_totalprice AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS total_price
-          FROM iv JOIN b ON b.o_day BETWEEN iv.lo AND iv.hi
-          GROUP BY 1, 2, 3 ORDER BY interval_id""",
-
-    "range_overlap_sessions" ->
-      """WITH c AS (SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS d,
-                           epoch_us(min(ts)) AS c_lo, epoch_us(max(ts)) AS c_hi
-                    FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-          p AS (SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS d,
-                       epoch_us(min(ts)) AS p_lo, epoch_us(max(ts)) AS p_hi
-                FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-          SELECT c.user_id AS user_id, c_lo, c_hi, p_lo, p_hi,
-                 least(c_hi, p_hi) - greatest(c_lo, p_lo) AS overlap_us
-          FROM c JOIN p ON c.user_id = p.user_id AND c_lo <= p_hi AND p_lo <= c_hi
-          ORDER BY user_id, c_lo, p_lo, c_hi, p_hi""",
-
-    "skew_salted_counts" ->
-      """SELECT event_type, count(*) AS n FROM events
-         GROUP BY event_type ORDER BY event_type""",
-
-    "seg_multi" ->
-      """SELECT user_id,
-                count(*) FILTER (WHERE event_type = 'click') AS click_n,
-                count(*) FILTER (WHERE event_type = 'purchase') AS purchase_n,
-                count(*) FILTER (WHERE event_type = 'view') AS view_n,
-                count(*) FILTER (WHERE event_type = 'click') >= 12 AS click_in,
-                count(*) FILTER (WHERE event_type = 'purchase') >= 8 AS purchase_in,
-                count(*) FILTER (WHERE event_type = 'view') >= 10 AS view_in
-         FROM events WHERE event_type IN ('click', 'purchase', 'view')
-         GROUP BY user_id ORDER BY user_id""",
-
-    "seg_stream_native" ->
-      s"""SELECT user_id, count(*) AS n_unique,
-                 CAST(floor(epoch(max(ts))) AS BIGINT) AS last_event_time,
-                 count(*) >= ${ClickSeg.minCount} AS in_segment
-          FROM events WHERE event_type = '${ClickSeg.eventType}'
-          GROUP BY user_id ORDER BY user_id""",
-
-    "seg_stream_equiv" ->
-      s"""SELECT user_id, CAST(1 AS BOOLEAN) AS latest_value
-          FROM events WHERE event_type = '${ClickSeg.eventType}'
-          GROUP BY user_id HAVING count(DISTINCT event_id) >= ${ClickSeg.minCount}
-          ORDER BY user_id""",
-
-    // change-log TTL fires mid-stream; results must still equal the global
-    // aggregate (the TTL'd table is a trigger log, not an input to results)
-    "seg_retention_stream" ->
-      s"""SELECT user_id, CAST(1 AS BOOLEAN) AS latest_value
-          FROM events WHERE event_type = '${ClickSeg.eventType}'
-          GROUP BY user_id HAVING count(DISTINCT event_id) >= ${ClickSeg.minCount}
-          ORDER BY user_id""",
-
-    "seg_stream_attribution" ->
-      """SELECT p.event_id AS purchase_id, p.user_id,
-                CAST(floor(epoch(p.ts)) AS BIGINT) AS purchase_t,
-                c.event_id AS click_id,
-                CAST(floor(epoch(c.ts)) AS BIGINT) AS click_t
-         FROM events p JOIN events c
-           ON p.user_id = c.user_id
-          AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 1 HOUR
-         WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-         ORDER BY purchase_id, click_id""",
-
-    // exact because the per-user HLL sketch is still in coupon (exact) mode
-    // at these cardinalities — see segStreamStateful
-    "seg_stream_stateful" ->
-      s"""SELECT user_id, count(DISTINCT event_id) AS n_unique,
-                 count(DISTINCT event_id) >= ${ClickSeg.minCount} AS in_segment
-          FROM events WHERE event_type = '${ClickSeg.eventType}'
-          GROUP BY user_id ORDER BY user_id""",
-
-    "q2_min_cost_supplier" ->
-      """WITH m AS (SELECT l_partkey, min(CAST(l_extendedprice AS DOUBLE)) AS min_price
-                    FROM lineitem GROUP BY l_partkey)
-         SELECT l.l_partkey, min(l.l_suppkey) AS cheapest_suppkey,
-                min(m.min_price) AS min_price
-         FROM lineitem l JOIN m ON l.l_partkey = m.l_partkey
-                              AND CAST(l.l_extendedprice AS DOUBLE) = m.min_price
-         GROUP BY l.l_partkey ORDER BY l.l_partkey""",
-
-    "q1_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-                CAST(sum(CAST(CAST(CAST(l_quantity AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS sum_qty,
-                CAST(sum(CAST(CAST(CAST(l_extendedprice AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS sum_base_price,
-                CAST(sum(CAST(CAST(CAST(l_extendedprice AS DOUBLE) * (1.0 - CAST(l_discount AS DOUBLE)) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS sum_disc_price,
-                count(*) AS count_order
-         FROM lineitem WHERE l_shipdate < TIMESTAMP '2001-01-01'
-         GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""",
-
-    "q3_revenue" ->
-      """SELECT c_mktsegment,
-                CAST(sum(CAST(CAST(CAST(l_extendedprice AS DOUBLE) * (1.0 - CAST(l_discount AS DOUBLE)) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS revenue,
-                count(DISTINCT o_orderkey) AS n_orders
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-
-    "q5_revenue" ->
-      """SELECT r_name, n_name,
-                CAST(sum(CAST(CAST(CAST(l_extendedprice AS DOUBLE) * (1.0 - CAST(l_discount AS DOUBLE)) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS revenue
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-         JOIN nation ON s_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name, n_name ORDER BY r_name, n_name""",
-
-    "semi_customers" ->
-      s"""SELECT c_custkey, c_name, c_mktsegment FROM customer
-          WHERE EXISTS (SELECT 1 FROM orders
-                        WHERE o_custkey = c_custkey AND CAST(o_totalprice AS DOUBLE) > $PriceFloor)
-          ORDER BY c_custkey""",
-
-    "anti_customers" ->
-      s"""SELECT c_custkey, c_name, c_mktsegment FROM customer
-          WHERE NOT EXISTS (SELECT 1 FROM orders
-                            WHERE o_custkey = c_custkey AND CAST(o_totalprice AS DOUBLE) > $PriceFloor)
-          ORDER BY c_custkey""",
-
-    "window_top2_orders" ->
-      """SELECT o_custkey, rnk, o_orderkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice
-         FROM (SELECT o_custkey, o_orderkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice,
-                      row_number() OVER (PARTITION BY o_custkey
-                                         ORDER BY CAST(o_totalprice AS DOUBLE) DESC, o_orderkey) AS rnk
-               FROM orders)
-         WHERE rnk <= 2 ORDER BY o_custkey, rnk""",
-
-    "agg_event_stats" ->
-      """SELECT event_type, count(*) AS n, count(DISTINCT user_id) AS n_users,
-                CAST(sum(CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS sum_value,
-                min(CAST(value AS DOUBLE)) AS min_value, max(CAST(value AS DOUBLE)) AS max_value,
-                CAST(sum(CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) / count(*) AS avg_value
-         FROM events GROUP BY event_type ORDER BY event_type""",
-
-    "events_daily" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS day, count(*) AS n,
-                count(DISTINCT user_id) AS n_users,
-                CAST(sum(CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1 ORDER BY 1""",
-
-    "events_daily_filled" ->
-      """WITH daily AS (
-           SELECT CAST(ts AS DATE) AS day, count(*) AS n FROM events GROUP BY 1),
-         spine AS (
-           SELECT unnest(generate_series(
-                    (SELECT min(day) FROM daily),
-                    (SELECT max(day) FROM daily),
-                    INTERVAL 1 DAY))::DATE AS day)
-         SELECT strftime(s.day, '%Y-%m-%d') AS day, coalesce(d.n, 0) AS n
-         FROM spine s LEFT JOIN daily d ON s.day = d.day
-         ORDER BY day""",
-
-    // LOCF gap fill: same daily-close pick (row_number DESC == max_by on the
-    // (ts, event_id) struct), same dense spine, same windowed forward fill.
-    // The double value is never touched by arithmetic on either side.
-    "events_locf" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day, ts, event_id, CAST(value AS DOUBLE) AS value
-                     FROM events),
-         ranked AS (SELECT user_id, day, CAST(value AS DOUBLE) AS value,
-                           row_number() OVER (PARTITION BY user_id, day
-                                              ORDER BY ts DESC, event_id DESC) AS rn
-                    FROM ev),
-         daily AS (SELECT user_id, day, CAST(value AS DOUBLE) AS v FROM ranked WHERE rn = 1),
-         fd AS (SELECT user_id, min(day) AS fday FROM daily GROUP BY 1),
-         spine AS (SELECT fd.user_id,
-                          unnest(generate_series(fd.fday,
-                                                 (SELECT max(day) FROM ev),
-                                                 INTERVAL 1 DAY))::DATE AS day
-                   FROM fd)
-         SELECT s.user_id, strftime(s.day, '%Y-%m-%d') AS day,
-                d.v IS NOT NULL AS observed,
-                last_value(d.v IGNORE NULLS)
-                  OVER (PARTITION BY s.user_id ORDER BY s.day
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_filled
-         FROM spine s LEFT JOIN daily d ON d.user_id = s.user_id AND d.day = s.day
-         ORDER BY s.user_id, s.day""",
-
-    // Linear interpolation: same bracketing carries, same IEEE sequence
-    // (vp + (vn−vp) · (Δd / Δspan)), exact integer day deltas.
-    "events_interp" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day, ts, event_id, CAST(value AS DOUBLE) AS value
-                     FROM events),
-         ranked AS (SELECT user_id, day, CAST(value AS DOUBLE) AS value,
-                           row_number() OVER (PARTITION BY user_id, day
-                                              ORDER BY ts DESC, event_id DESC) AS rn
-                    FROM ev),
-         daily AS (SELECT user_id, day, CAST(value AS DOUBLE) AS v FROM ranked WHERE rn = 1),
-         sp AS (SELECT user_id, min(day) AS fday, max(day) AS lday
-                FROM daily GROUP BY 1),
-         spine AS (SELECT sp.user_id,
-                          unnest(generate_series(sp.fday, sp.lday,
-                                                 INTERVAL 1 DAY))::DATE AS day
-                   FROM sp),
-         j AS (SELECT s.user_id, s.day, d.v
-               FROM spine s LEFT JOIN daily d
-                 ON d.user_id = s.user_id AND d.day = s.day),
-         c AS (SELECT user_id, day, v,
-                      last_value(v IGNORE NULLS)
-                        OVER (PARTITION BY user_id ORDER BY day
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS vp,
-                      last_value(CASE WHEN v IS NOT NULL THEN day END IGNORE NULLS)
-                        OVER (PARTITION BY user_id ORDER BY day
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS dp,
-                      first_value(v IGNORE NULLS)
-                        OVER (PARTITION BY user_id ORDER BY day
-                              ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS vn,
-                      first_value(CASE WHEN v IS NOT NULL THEN day END IGNORE NULLS)
-                        OVER (PARTITION BY user_id ORDER BY day
-                              ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS dn
-               FROM j)
-         SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
-                v IS NOT NULL AS observed,
-                CASE WHEN v IS NOT NULL THEN v
-                     ELSE vp + (vn - vp) * (CAST(day - dp AS DOUBLE)
-                                            / CAST(dn - dp AS DOUBLE)) END
-                  AS value_interp
-         FROM c ORDER BY user_id, day""",
-
-    // Q15: exact decimal revenue makes max and its equality bit-stable.
-    "q15_top_supplier" ->
-      """WITH rev AS (
-           SELECT l_suppkey,
-                  CAST(sum(CAST(CAST(CAST(l_extendedprice AS DOUBLE) * (1.0 - CAST(l_discount AS DOUBLE)) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS total_rev
-           FROM lineitem
-           WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-             AND l_shipdate < TIMESTAMP '1996-04-01'
-           GROUP BY 1)
-         SELECT s_suppkey, s_name, total_rev
-         FROM supplier JOIN rev ON s_suppkey = l_suppkey
-         WHERE total_rev = (SELECT max(total_rev) FROM rev)
-         ORDER BY s_suppkey""",
-
-    "q18_large_orders" ->
-      """WITH big AS (
-           SELECT l_orderkey,
-                  CAST(sum(CAST(CAST(CAST(l_quantity AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS sum_qty
-           FROM lineitem GROUP BY 1 HAVING sum_qty > 200.0)
-         SELECT c_custkey, c_name, o_orderkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice, sum_qty
-         FROM orders
-         JOIN big ON o_orderkey = l_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         ORDER BY CAST(o_totalprice AS DOUBLE) DESC, o_orderkey LIMIT 100""",
-
-    // Running distinct users via the first-seen rewrite (identical fold).
-    "events_running_users" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
-         active AS (SELECT day, count(DISTINCT user_id) AS n_active
-                    FROM ev GROUP BY 1),
-         fs AS (SELECT user_id, min(day) AS day FROM ev GROUP BY 1),
-         nu AS (SELECT day, count(*) AS new_users FROM fs GROUP BY 1)
-         SELECT strftime(a.day, '%Y-%m-%d') AS day, a.n_active,
-                CAST(coalesce(nu.new_users, 0) AS BIGINT) AS new_users,
-                CAST(sum(coalesce(nu.new_users, 0))
-                       OVER (ORDER BY a.day
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                     AS BIGINT) AS cum_users
-         FROM active a LEFT JOIN nu ON a.day = nu.day
-         ORDER BY day""",
-
-    // boundingRatio: arg-extremes over the unique (ts, event_id) order, one
-    // pinned subtraction + division; NULL rate for zero spans on both sides.
-    "events_bounding_ratio" ->
-      """WITH o AS (
-           SELECT user_id, CAST(value AS DOUBLE) AS value, ts, event_id,
-                  row_number() OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS rn,
-                  row_number() OVER (PARTITION BY user_id
-                                     ORDER BY ts DESC, event_id DESC) AS rrn
-           FROM events),
-         a AS (
-           SELECT user_id,
-                  min(CASE WHEN rn = 1 THEN CAST(value AS DOUBLE) END) AS first_value,
-                  min(CASE WHEN rrn = 1 THEN CAST(value AS DOUBLE) END) AS last_value,
-                  CAST(floor(epoch(max(ts))) AS BIGINT)
-                    - CAST(floor(epoch(min(ts))) AS BIGINT) AS span_s,
-                  count(*) AS n_events
-           FROM o GROUP BY 1)
-         SELECT user_id, first_value, last_value, span_s, n_events,
-                (last_value - first_value)
-                  / CAST(nullif(span_s, 0) AS DOUBLE) AS rate_per_s
-         FROM a ORDER BY user_id""",
-
-    // deltaSum: exact decimal differences and conditional sums, digit-string
-    // surfaced — no float subtraction on either side.
-    "events_delta_sum" ->
-      """WITH d AS (
-           SELECT user_id,
-                  CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2))
-                  - lag(CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2)))
-                      OVER (PARTITION BY user_id ORDER BY ts, event_id) AS delta
-           FROM events)
-         SELECT user_id,
-                coalesce(CAST(CAST(sum(CASE WHEN delta > 0 THEN delta END)
-                                   AS VARCHAR) AS DOUBLE), 0.0) AS delta_sum,
-                CAST(count(CASE WHEN delta > 0 THEN 1 END) AS BIGINT)
-                  AS n_increases,
-                count(*) AS n_events
-         FROM d GROUP BY 1 ORDER BY 1""",
-
-    // Trailing 7-event moving average: identical frame, exact decimal frame
-    // sums via the string route on both sides, one IEEE divide.
-    "events_moving_avg" ->
-      """SELECT event_id, user_id, CAST(value AS DOUBLE) AS value,
-                count(*) OVER w AS n_window,
-                CAST(CAST(sum(CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2)))
-                            OVER w AS VARCHAR) AS DOUBLE)
-                  / CAST(count(*) OVER w AS DOUBLE) AS mavg
-         FROM events
-         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                      ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-         ORDER BY event_id""",
-
-    // Stream-static enrichment == the equivalent batch join+aggregate; the
-    // left join surfaces unmatched users under a pinned sentinel so null
-    // sort-position differences can never appear.
-    "seg_stream_enrich" ->
-      """SELECT coalesce(c.c_mktsegment, '<none>') AS segment,
-                count(*) AS n_events,
-                count(DISTINCT e.user_id) AS n_users,
-                CAST(sum(CAST(CAST(CAST(e.value AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS sum_value
-         FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-         GROUP BY 1 ORDER BY 1""",
-
-    // SemDeDup replay: plant the perturbed copies (same label), all-pairs
-    // cosine WITHIN label, keep-lowest-id policy, md5 of the kept id list.
-    // Planted pairs sit at cosine ≈ 0.999 vs a 0.51 natural maximum, so the
-    // 0.95 gate has enormous float headroom on both engines.
-    "semantic_dedup" ->
-      """WITH base AS (SELECT vec_id, label, CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]) AS v
-                       FROM embeddings),
-         p AS (SELECT vec_id + 1000000 AS vec_id, label,
-                      list_concat([v[1] * 1.25], v[2:]) AS v
-               FROM base WHERE vec_id % 25 = 0),
-         c AS (SELECT * FROM base UNION ALL SELECT * FROM p),
-         dropped AS (SELECT DISTINCT a.vec_id
-                     FROM c a JOIN c b ON a.label = b.label AND b.vec_id < a.vec_id
-                     WHERE list_cosine_similarity(a.v, b.v) >= 0.95)
-         SELECT CAST(c.label AS INT) AS label,
-                count(*) AS n_total,
-                CAST(sum(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-                md5(string_agg(CASE WHEN d.vec_id IS NULL
-                                    THEN CAST(c.vec_id AS VARCHAR) END,
-                               ',' ORDER BY c.vec_id)) AS kept_md5
-         FROM c LEFT JOIN dropped d ON c.vec_id = d.vec_id
-         GROUP BY c.label ORDER BY label""",
-
-    // Gopher word-level rules: every boundary is integer cross-multiplied on
-    // both sides — no division anywhere, the flags are exact in any engine.
-    "gopher_quality" ->
-      s"""WITH w AS (
-            SELECT doc_id,
-                   regexp_extract_all(lower(text), '[a-z]+') AS ws,
-                   regexp_extract_all(text, '\\S+') AS toks,
-                   length(text) - length(replace(text, '#', '')) AS nhash,
-                   (length(text) - length(replace(text, '...', ''))) // 3 AS nell
-            FROM documents),
-          m AS (
-            SELECT doc_id,
-                   CAST(len(ws) AS BIGINT) AS n_words,
-                   CAST(coalesce(list_sum(list_transform(ws, x -> length(x))), 0)
-                        AS BIGINT) AS sum_wlen,
-                   CAST(len(toks) AS BIGINT) AS n_toks,
-                   CAST(len(list_filter(toks, t -> regexp_matches(t, '[A-Za-z]')))
-                        AS BIGINT) AS n_alpha,
-                   CAST(nhash + nell AS BIGINT) AS n_sym,
-                   CAST(len(list_filter(ws, x -> x IN ($EnStop))) AS BIGINT) AS n_stop
-            FROM w)
-          SELECT doc_id, n_words, sum_wlen,
-                 (n_words >= 50 AND n_words <= 100000) AS ok_nwords,
-                 (sum_wlen >= n_words * 3 AND sum_wlen <= n_words * 10) AS ok_wlen,
-                 (n_alpha * 5 >= n_toks * 4) AS ok_alpha,
-                 (n_sym * 10 <= n_words) AS ok_symbols,
-                 (n_stop >= 2) AS ok_stopwords,
-                 ((n_words >= 50 AND n_words <= 100000)
-                  AND (sum_wlen >= n_words * 3 AND sum_wlen <= n_words * 10)
-                  AND (n_alpha * 5 >= n_toks * 4)
-                  AND (n_sym * 10 <= n_words)
-                  AND (n_stop >= 2)) AS gopher_pass
-          FROM m ORDER BY doc_id""",
-
-    // Positional-postings phrase search replayed as a direct adjacency scan
-    // over the word list (1-based in DuckDB; start is 0-based on both sides).
-    "phrase_search" -> {
-      val conds = PhraseTerms.zipWithIndex.map { case (term, j) =>
-        s"ws[CAST(i.i AS INT) + $j] = '$term'"
-      }.mkString(" AND ")
-      s"""WITH w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
-                     FROM documents),
-          s AS (SELECT doc_id, CAST(i.i - 1 AS INT) AS start
-                FROM w, LATERAL (SELECT unnest(range(1, len(ws) - ${PhraseTerms.length - 2}))
-                                 AS i) i
-                WHERE $conds)
-          SELECT doc_id, count(*) AS n_matches, min(start) AS first_pos
-          FROM s GROUP BY 1 ORDER BY 1"""
-    },
-
-    // Weighted exact median: identical cumulative-weight fold; the min-value-
-    // reaching-the-target result is invariant to intra-tie order (see
-    // RobustStats.weightedQuantile).
-    "weighted_median_price" ->
-      """WITH clean AS (SELECT l_returnflag, CAST(l_extendedprice AS DOUBLE) AS v,
-                               CAST(CAST(l_quantity AS DOUBLE) AS BIGINT) AS wt
-                        FROM lineitem
-                        WHERE CAST(l_extendedprice AS DOUBLE) IS NOT NULL AND CAST(l_quantity AS DOUBLE) > 0),
-         r AS (SELECT l_returnflag, v,
-                      sum(wt) OVER (PARTITION BY l_returnflag ORDER BY v
-                                    ROWS BETWEEN UNBOUNDED PRECEDING
-                                             AND CURRENT ROW) AS cumw,
-                      sum(wt) OVER (PARTITION BY l_returnflag) AS tw
-               FROM clean)
-         SELECT l_returnflag, CAST(max(tw) AS BIGINT) AS total_weight,
-                min(CASE WHEN cumw >= CAST(ceil(0.25 * tw - 1e-9) AS BIGINT)
-                         THEN v END) AS p25_price,
-                min(CASE WHEN cumw >= CAST(ceil(0.5 * tw - 1e-9) AS BIGINT)
-                         THEN v END) AS weighted_median,
-                min(CASE WHEN cumw >= CAST(ceil(0.75 * tw - 1e-9) AS BIGINT)
-                         THEN v END) AS p75_price
-         FROM r GROUP BY 1 ORDER BY 1""",
-
-    // Time-weighted average: same second-floored interval lengths, same
-    // exact decimal value·Δt sums (string-routed both ways), one final
-    // IEEE division on both sides.
-    "twa_value" ->
-      """WITH d AS (
-           SELECT user_id,
-                  CAST(floor(epoch(lead(ts) OVER (PARTITION BY user_id
-                                                  ORDER BY ts, event_id)))
-                       AS BIGINT)
-                  - CAST(floor(epoch(ts)) AS BIGINT) AS dt,
-                  CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2)) AS dv
-           FROM events)
-         SELECT user_id, count(*) AS n_intervals,
-                CAST(sum(dt) AS BIGINT) AS total_seconds,
-                CAST(CAST(sum(dv * CAST(dt AS DECIMAL(20,0))) AS VARCHAR)
-                     AS DOUBLE) AS vt_sum,
-                CAST(CAST(sum(dv * CAST(dt AS DECIMAL(20,0))) AS VARCHAR)
-                     AS DOUBLE)
-                  / CAST(CAST(sum(dt) AS BIGINT) AS DOUBLE) AS twa
-         FROM d WHERE dt IS NOT NULL
-         GROUP BY 1 ORDER BY 1""",
-
-    // Cohort matrix: first-seen day per user, then distinct active users per
-    // (cohort, offset) — all integer.
-    "cohort_matrix" ->
-      """WITH days AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-         cohorts AS (SELECT user_id, min(day) AS cohort_day FROM days GROUP BY 1)
-         SELECT strftime(c.cohort_day, '%Y-%m-%d') AS cohort_day,
-                CAST(d.day - c.cohort_day AS INT) AS offset,
-                count(*) AS n_active
-         FROM days d JOIN cohorts c ON d.user_id = c.user_id
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    // NB: DuckDB sum(BIGINT) yields HUGEINT, which pandas fetches as float64
-    // and the driver's value hash then disagrees with Spark's int64 — every
-    // integral SUM below is therefore CAST back to BIGINT.
-    // props is viewed at the ENGINE'S canonical width (JSON text): CAST(props
-    // AS JSON) is identity on today's varchar-JSON files and converts a
-    // materialized-struct regen (propstruct sim) to the same JSON document —
-    // the engine-side twin is Tables.normalizeWidths' to_json on complex
-    // props.
-    "events_props_extract" ->
-      """SELECT event_type,
-                CAST(sum(CAST(json_extract_string(CAST(props AS JSON), '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-                count(json_extract_string(CAST(props AS JSON), '$.k')) AS n_k
-         FROM events GROUP BY event_type ORDER BY event_type""",
-
-    "q6_revenue" ->
-      """SELECT CAST(sum(CAST(CAST(CAST(l_extendedprice AS DOUBLE) * CAST(l_discount AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS revenue,
-                count(*) AS n
-         FROM lineitem
-         WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-           AND CAST(l_discount AS DOUBLE) BETWEEN 0.02 AND 0.06 AND CAST(l_quantity AS DOUBLE) < 10""",
-
-    "q4_late_shipments" ->
-      """SELECT o_orderpriority, count(*) AS n_orders
-         FROM orders
-         WHERE EXISTS (SELECT 1 FROM lineitem
-                       WHERE l_orderkey = o_orderkey
-                         AND l_shipdate > o_orderdate + INTERVAL 30 DAY)
-         GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-
-    "rollup_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-                CAST(sum(CAST(CAST(CAST(l_quantity AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS sum_qty,
-                count(*) AS n
-         FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
-
-    "cube_pricing" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n
-         FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
-
-    "grouping_sets_pricing" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n
-         FROM lineitem
-         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
-
-    "user_event_types" ->
-      """SELECT user_id,
-                array_to_string(list_sort(list(DISTINCT event_type)), ',') AS types,
-                count(*) AS n_events
-         FROM events GROUP BY user_id ORDER BY user_id""",
-
-    "intersect_users" ->
-      """SELECT user_id FROM events WHERE event_type = 'click'
-         INTERSECT
-         SELECT user_id FROM events WHERE event_type = 'purchase'
-         ORDER BY user_id""",
-
-    "except_users" ->
-      """SELECT user_id FROM events WHERE event_type = 'click'
-         EXCEPT
-         SELECT user_id FROM events WHERE event_type = 'purchase'
-         ORDER BY user_id""",
-
-    "top10_customers" ->
-      """SELECT c_custkey, c_name,
-                CAST(sum(CAST(CAST(CAST(o_totalprice AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS revenue
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY c_custkey, c_name
-         ORDER BY revenue DESC, c_custkey LIMIT 10""",
-
-    "agg_value_stats_ext" ->
-      """WITH s AS (
-           SELECT event_type, count(*) AS n,
-                  CAST(sum(CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS s1,
-                  CAST(sum(CAST(CAST(CAST(value AS DOUBLE) * CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS s2
-           FROM events GROUP BY event_type)
-         SELECT event_type, n, s1 / n AS mean_value,
-                sqrt((s2 - s1 * s1 / n) / (n - 1)) AS stddev_value
-         FROM s ORDER BY event_type""",
-
-    "events_hourly_windows" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-                event_type, count(*) AS n
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "outer_nation_suppliers" ->
-      """SELECT n_name, count(s_suppkey) AS n_suppliers
-         FROM nation LEFT JOIN supplier ON n_nationkey = s_nationkey
-         GROUP BY n_name ORDER BY n_name""",
-
-    "full_outer_daily" ->
-      """WITH c AS (SELECT strftime(ts, '%Y-%m-%d') AS day, count(*) AS n_clicks
-                    FROM events WHERE event_type = 'click' GROUP BY 1),
-              p AS (SELECT strftime(ts, '%Y-%m-%d') AS day, count(*) AS n_purchases
-                    FROM events WHERE event_type = 'purchase' GROUP BY 1)
-         SELECT coalesce(c.day, p.day) AS day,
-                coalesce(n_clicks, 0) AS n_clicks,
-                coalesce(n_purchases, 0) AS n_purchases
-         FROM c FULL OUTER JOIN p ON c.day = p.day ORDER BY day""",
-
-    "window_order_gaps" ->
-      """SELECT o_custkey, o_orderkey,
-                datediff('day', lag(o_orderdate, 1) OVER (PARTITION BY o_custkey
-                    ORDER BY o_orderdate, o_orderkey), o_orderdate) AS gap_days
-         FROM orders ORDER BY o_custkey, o_orderkey""",
-
-    "pct_value_by_type" ->
-      """SELECT event_type, quantile_cont(CAST(value AS DOUBLE), 0.5) AS p50,
-                quantile_cont(CAST(value AS DOUBLE), 0.9) AS p90
-         FROM events GROUP BY event_type ORDER BY event_type""",
-
-    // Discrete-rank winsorization replayed with the same under-ceil guard
-    // (0.05*n in doubles can overshoot the rational product); bounds are
-    // data values, so the sum stays on the exact decimal path.
-    "winsorized_stats" ->
-      """WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS value FROM events WHERE CAST(value AS DOUBLE) IS NOT NULL),
-          s AS (SELECT event_type, CAST(value AS DOUBLE) AS value,
-                       row_number() OVER (PARTITION BY event_type ORDER BY CAST(value AS DOUBLE)) AS rn,
-                       count(*) OVER (PARTITION BY event_type) AS n
-                FROM v),
-          b AS (SELECT event_type, max(n) AS n,
-                       min(CASE WHEN rn = CAST(ceil(0.05 * n - 1e-9) AS BIGINT)
-                                THEN CAST(value AS DOUBLE) END) AS lo,
-                       min(CASE WHEN rn = CAST(ceil(0.95 * n - 1e-9) AS BIGINT)
-                                THEN CAST(value AS DOUBLE) END) AS hi
-                FROM s GROUP BY 1)
-          SELECT v.event_type, b.n, b.lo, b.hi,
-                 CAST(sum(CAST(CAST(v.value AS DOUBLE) < b.lo OR CAST(v.value AS DOUBLE) > b.hi AS INT)) AS BIGINT)
-                   AS n_clipped,
-                 CAST(sum(CAST(CAST(least(greatest(CAST(v.value AS DOUBLE), b.lo), b.hi) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS wins_sum,
-                 CAST(sum(CAST(CAST(least(greatest(CAST(v.value AS DOUBLE), b.lo), b.hi) AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) / b.n AS wins_mean
-          FROM v JOIN b USING (event_type)
-          GROUP BY 1, 2, 3, 4 ORDER BY event_type""",
-
-    // the rank-gate booleans are deterministically TRUE for every KLL
-    // compaction outcome (0.05 ≈ 3× the sketch's rank-error bound); DuckDB
-    // asserts the exact counts and the literals
-    "pct_value_sketch" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                TRUE AS p50_rank_ok, TRUE AS p90_rank_ok
-         FROM events GROUP BY event_type ORDER BY event_type""",
-
-    "sql_orders_per_customer" ->
-      """SELECT c_custkey,
-                (SELECT count(*) FROM orders o WHERE o.o_custkey = c.c_custkey) AS n_orders
-         FROM customer c ORDER BY c_custkey""",
-
-    // Keep the lowest doc_id per normalized-text digest — NOT just "all
-    // docs": the corpus itself contains exact duplicates at sf0.1 (8 digest
-    // collisions among 5000 docs), which the doubled-then-deduped Spark side
-    // rightly collapses. Caught by the sf0.1 spot-check; at sf0.01 all 500
-    // texts are unique, so the two formulations coincided.
-    "dedup_exact_demo" ->
-      """WITH k AS (
-           SELECT doc_id, source,
-                  md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS dg
-           FROM documents),
-         r AS (
-           SELECT doc_id, source,
-                  row_number() OVER (PARTITION BY dg ORDER BY doc_id) AS rn
-           FROM k)
-         SELECT doc_id, source FROM r WHERE rn = 1 ORDER BY doc_id""",
-
-    "dedup_exact_stats" ->
-      """SELECT source, count(*) AS n_docs,
-                count(DISTINCT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))) AS n_distinct,
-                CAST(sum(n_chars) AS BIGINT) AS sum_chars
-         FROM documents GROUP BY source ORDER BY source""",
-
-    "embedding_centroids" ->
-      """WITH f AS (
-           SELECT label, generate_subscripts(embedding, 1) - 1 AS pos,
-                  unnest(CAST(embedding AS FLOAT[])) AS e
-           FROM embeddings)
-         SELECT label, pos,
-                CAST(sum(CAST(CAST(e AS VARCHAR) AS DECIMAL(27,12))) AS DOUBLE)
-                  / count(*) AS centroid,
-                count(*) AS n_vectors
-         FROM f GROUP BY label, pos ORDER BY label, pos""",
-
-    "text_quality" ->
-      s"""SELECT doc_id,
-                 len(regexp_extract_all(text, '\\S+')) AS n_tokens,
-                 len(regexp_extract_all(lower(text), '[a-z]+')) AS n_words,
-                 len(regexp_extract_all(lower(text), '${TextAnalysis.BpeIshPattern.replace("'", "''")}')) AS n_bpe_tokens,
-                 length(text) AS n_chars_m,
-                 coalesce(length(regexp_replace(text, '[^!-/:-@\\[-`{-~]', '', 'g'))::DOUBLE
-                          / nullif(length(text), 0), 0.0) AS punct_ratio,
-                 coalesce(len(list_filter(regexp_extract_all(lower(text), '[a-z]+'),
-                                          w -> list_contains([$EnStop], w)))::DOUBLE
-                          / nullif(len(regexp_extract_all(lower(text), '[a-z]+')), 0), 0.0)
-                   AS stop_ratio
-          FROM documents ORDER BY doc_id""",
-
-    "text_lang_dist" -> {
-      def hits(lang: String): String = {
-        val list = TextAnalysis.Stopwords(lang).map(w => s"'$w'").mkString(", ")
-        s"len(list_filter(regexp_extract_all(lower(text), '[a-z]+'), w -> list_contains([$list], w)))"
-      }
-      s"""WITH s AS (
-            SELECT ${hits("en")} AS s_en, ${hits("es")} AS s_es, ${hits("fr")} AS s_fr,
-                   ${hits("de")} AS s_de,
-                   ${hits("zh")} + length(regexp_replace(text, '[^\\x{4e00}-\\x{9fff}]', '', 'g')) AS s_zh
-            FROM documents),
-          p AS (
-            SELECT CASE
-              WHEN s_zh > greatest(s_en, s_es, s_fr, s_de) THEN 'zh'
-              WHEN s_de > greatest(s_en, s_es, s_fr) THEN 'de'
-              WHEN s_fr > greatest(s_en, s_es) THEN 'fr'
-              WHEN s_es > s_en THEN 'es'
-              ELSE 'en' END AS lang_pred
-            FROM s)
-          SELECT lang_pred, count(*) AS n FROM p GROUP BY 1 ORDER BY 1"""
-    },
-
-    "doc_fingerprints" ->
-      """SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp_md5
-         FROM documents ORDER BY doc_id""",
-
-    // The SRP pipeline recomputed end-to-end in SQL: the pinned-seed
-    // hyperplanes are EMBEDDED as literals (Double.toString round-trips
-    // exactly; the projection is an explicit left-associated sum chain, the
-    // same sequential double accumulation as SrpSigsExpr's loop), buckets
-    // re-derived per table, candidates = same-bucket-in-same-table pairs,
-    // then the exact cosine re-rank the brute oracle already hash-matches.
-    // This oracles the APPROXIMATE result itself — no recall proviso needed.
-    "ann_topk_srp" -> srpOracleSql,
-
-    "ann_topk_brute" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]) AS qv
-                     FROM embeddings WHERE vec_id < $AnnQueries),
-          s AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-                       list_cosine_similarity(q.qv, CAST(CAST(e.embedding AS FLOAT[]) AS DOUBLE[])) AS sim
-                FROM q CROSS JOIN embeddings e WHERE e.vec_id <> q.query_id),
-          r AS (SELECT query_id, neighbor_id, sim,
-                       row_number() OVER (PARTITION BY query_id
-                                          ORDER BY sim DESC, neighbor_id) AS rnk
-                FROM s)
-          SELECT query_id, rnk AS rank, neighbor_id, round(sim, 4) AS cosine
-          FROM r WHERE rnk <= $AnnK ORDER BY query_id, rnk""",
-
-    "multimodal_bytestats" ->
-      """SELECT doc_id AS media_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-                md5(text) AS digest
-         FROM documents ORDER BY media_id""",
-
-    "vocab_top_words" ->
-      """SELECT word, count(*) AS n
-         FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-               FROM documents)
-         GROUP BY word ORDER BY n DESC, word LIMIT 100""",
-
-    // Both deterministic top-k sets rebuilt in SQL (count DESC, word ties),
-    // all-integer overlap; the one division is a single IEEE op on two
-    // integers, identical in both engines.
-    "vocab_drift" ->
-      """WITH wa AS (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-                     FROM documents WHERE doc_id % 2 = 0),
-         wb AS (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-                FROM documents WHERE doc_id % 2 <> 0),
-         ta AS (SELECT word FROM (SELECT word, count(*) AS n FROM wa GROUP BY word
-                                  ORDER BY n DESC, word LIMIT 200)),
-         tb AS (SELECT word FROM (SELECT word, count(*) AS n FROM wb GROUP BY word
-                                  ORDER BY n DESC, word LIMIT 200)),
-         st AS (SELECT (SELECT count(*) FROM ta) AS n_top_a,
-                       (SELECT count(*) FROM tb) AS n_top_b,
-                       (SELECT count(*) FROM ta WHERE word IN (SELECT word FROM tb))
-                         AS n_common)
-         SELECT n_top_a, n_top_b, n_common,
-                round(CAST(n_common AS DOUBLE) / (n_top_a + n_top_b - n_common), 4)
-                  AS vocab_jaccard
-         FROM st""",
-
-    // exact while the vocabulary fits the sketch map (it does, by 8×) — see
-    // topkWordsSketch
-    "topk_words_sketch" ->
-      """SELECT word, count(*) AS n
-         FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-               FROM documents)
-         GROUP BY word ORDER BY n DESC, word LIMIT 20""",
-
-    "pipeline_clean_stats" -> {
-      val toks = "regexp_extract_all(lower(text), '[a-z]+')"
-      val rep =
-        s"""coalesce((len(t3) - len(list_distinct(t3)))::DOUBLE / nullif(len(t3), 0), 0.0)"""
-      s"""WITH m AS (
-            SELECT doc_id, lang,
-                   regexp_replace(regexp_replace(text,
-                     '${TextAnalysis.EmailPattern}', '<email>', 'g'),
-                     '${TextAnalysis.LongNumberPattern}', '<num>', 'g') AS text
-            FROM documents),
-          r AS (
-            SELECT *, CASE WHEN len($toks) >= 3
-                        THEN list_transform(range(1, len($toks) - 1),
-                               i -> array_to_string(list_slice($toks, i, i + 2), ' '))
-                        ELSE [] END AS t3
-            FROM m),
-          g AS (
-            SELECT doc_id, lang, text FROM r
-            WHERE coalesce(len(list_filter($toks, w -> list_contains([$EnStop], w)))::DOUBLE
-                           / nullif(len($toks), 0), 0.0) >= 0.05
-              AND len(regexp_extract_all(text, '\\S+')) >= 20
-              AND $rep < 0.2),
-          d AS (
-            SELECT *, row_number() OVER (
-                        PARTITION BY md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
-                        ORDER BY doc_id) AS rn
-            FROM g)
-          SELECT lang, count(*) AS n_docs,
-                 CAST(sum(len(regexp_extract_all(text, '\\S+'))) AS BIGINT) AS sum_tokens
-          FROM d WHERE rn = 1 GROUP BY lang ORDER BY lang"""
-    },
-
-    "pii_redaction" -> {
-      // DuckDB's standard SQL strings keep backslashes literal — embed the
-      // Scala regex strings (single backslash) verbatim
-      val email = TextAnalysis.EmailPattern
-      val num = TextAnalysis.LongNumberPattern
-      s"""SELECT doc_id,
-                 len(regexp_extract_all(text, '$email')) AS n_emails,
-                 len(regexp_extract_all(text, '$num')) AS n_longnums,
-                 md5(regexp_replace(regexp_replace(text, '$email', '<email>', 'g'),
-                                    '$num', '<num>', 'g')) AS fp_redacted
-          FROM documents ORDER BY doc_id"""
-    },
-
-    // Same Laplace-smoothed bigram model retrained in SQL; only exact ints,
-    // IEEE division, and order-independent count/min — bit-reproducible.
-    // Morton interleave regenerated term-by-term in SQL (bit b of u → even
-    // position, bit b of sec → odd): pure integer shifts, engine-portable.
-    "zorder_event_keys" -> {
-      val zTerms = (0 until 16).flatMap(b => Seq(
-        s"(((u >> $b) & 1) << ${2 * b})",
-        s"(((sec >> $b) & 1) << ${2 * b + 1})")).mkString(" | ")
-      s"""WITH k AS (
-            SELECT event_id, CAST(user_id AS BIGINT) % 65536 AS u,
-                   CAST(floor(epoch(ts)) AS BIGINT) % 65536 AS sec
-            FROM events),
-          z AS (SELECT event_id, u, sec, ($zTerms) AS z FROM k)
-          SELECT event_id, u, sec, z FROM z ORDER BY z, event_id LIMIT 50"""
-    },
-
-    // Log-free rarity score: tf·(N+1)/(df+1) in per-row double math over
-    // exact integers — identical bits in both engines, unlike libm ln().
-    // Rounded BEFORE ranking on both sides so rank and value agree.
-    "tfidf_top_terms" ->
-      """WITH nrm AS (
-           SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-           FROM documents),
-         tok AS (SELECT doc_id, unnest(string_split(t, ' ')) AS term FROM nrm),
-         tf AS (SELECT doc_id, term, count(*) AS tf
-                FROM tok WHERE term <> '' GROUP BY 1, 2),
-         dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         nn AS (SELECT count(*) AS n FROM documents),
-         scored AS (
-           SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-                  round(CAST(tf.tf AS DOUBLE) * (nn.n + 1) / (dfreq.df + 1), 4) AS score
-           FROM tf JOIN dfreq USING (term), nn),
-         ranked AS (
-           SELECT *, row_number() OVER (PARTITION BY doc_id
-                                        ORDER BY score DESC, term) AS rn
-           FROM scored)
-         SELECT doc_id, term, tf, df, score
-         FROM ranked WHERE rn <= 3
-         ORDER BY doc_id, term""",
-
-    "text_bigram_rarity" ->
-      s"""WITH n AS (
-            SELECT doc_id,
-                   regexp_replace(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
-                                  '[^a-z ]', '', 'g') AS t
-            FROM documents),
-          db AS (SELECT doc_id, substr(t, CAST(i AS INT), 2) AS b
-                 FROM n, LATERAL (SELECT unnest(range(1, length(t))) AS i) s),
-          bc AS (SELECT b, count(*) AS c FROM db GROUP BY b),
-          pc AS (SELECT substr(b, 1, 1) AS p, CAST(sum(c) AS BIGINT) AS pt
-                 FROM bc GROUP BY 1),
-          scored AS (
-            SELECT d.doc_id,
-                   (coalesce(bc.c, 0) + 1.0) / (coalesce(pc.pt, 0) + 27.0) AS prob
-            FROM db d
-            LEFT JOIN bc ON d.b = bc.b
-            LEFT JOIN pc ON substr(d.b, 1, 1) = pc.p),
-          agg AS (SELECT doc_id, count(*) AS n_transitions,
-                         CAST(count(*) FILTER (WHERE prob < $RareP) AS BIGINT) AS n_rare,
-                         min(prob) AS min_p
-                  FROM scored GROUP BY doc_id)
-          SELECT n.doc_id,
-                 CAST(coalesce(agg.n_transitions, 0) AS BIGINT) AS n_transitions,
-                 coalesce(agg.n_rare, 0) AS n_rare, agg.min_p
-          FROM n LEFT JOIN agg ON n.doc_id = agg.doc_id
-          ORDER BY n.doc_id""",
-
-    "contamination_check" -> contaminationOracle,
-
-    // Span removal replayed end-to-end: positions of duplicated grams →
-    // covered-token union → kept-token rebuild → md5 of the cleaned text.
-    "dedup_spans" -> {
-      val parse15 = (1 to 15).map { j =>
-        val pow = 1L << (4 * (15 - j)) // 16^(15-j)
-        s"(strpos('0123456789abcdef', substr(m, $j, 1)) - 1) * $pow"
-      }.mkString(" + ")
-      s"""WITH w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
-                     FROM documents),
-          g AS (SELECT doc_id, pos, $parse15 AS gh
-                FROM (SELECT doc_id, i.i - 1 AS pos,
-                             md5(array_to_string(list_slice(ws, i.i, i.i + ${DupN - 1}), ' ')) AS m
-                      FROM w, LATERAL (SELECT unnest(range(1, len(ws) - ${DupN - 2})) AS i) i
-                      WHERE len(ws) >= $DupN)),
-          dup AS (SELECT gh FROM (SELECT gh, count(DISTINCT doc_id) AS df
-                                  FROM g GROUP BY 1) WHERE df >= 2),
-          rm AS (SELECT DISTINCT g.doc_id, r.p
-                 FROM g JOIN dup USING (gh),
-                      LATERAL (SELECT unnest(range(g.pos, g.pos + $DupN)) AS p) r),
-          rml AS (SELECT doc_id, list(p ORDER BY p) AS l FROM rm GROUP BY 1)
-          SELECT w.doc_id,
-                 CAST(len(ws) AS BIGINT) AS n_tokens,
-                 CAST(coalesce(len(rml.l), 0) AS BIGINT) AS n_removed,
-                 coalesce(CAST(len(ws) - coalesce(len(rml.l), 0) AS DOUBLE)
-                          / nullif(len(ws), 0), 1.0) AS kept_frac,
-                 md5(coalesce(array_to_string(
-                   list_transform(
-                     list_filter(range(0, len(ws)),
-                                 i -> NOT list_contains(coalesce(rml.l, CAST([] AS BIGINT[])), i)),
-                     i -> ws[CAST(i + 1 AS INT)]), ' '), '')) AS cleaned_md5
-          FROM w LEFT JOIN rml USING (doc_id)
-          ORDER BY w.doc_id"""
-    },
-
-    // The hashed pipeline replayed literally: same [a-z]+ words, same
-    // distinct 8-gram strings, same 60-bit md5 parse (so even a collision
-    // would reproduce identically), same count/join/divide.
-    "dup_ngram_frac" -> {
-      val parse15 = (1 to 15).map { j =>
-        val pow = 1L << (4 * (15 - j)) // 16^(15-j)
-        s"(strpos('0123456789abcdef', substr(m, $j, 1)) - 1) * $pow"
-      }.mkString(" + ")
-      s"""WITH w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS ws
-                     FROM documents),
-          g AS (SELECT doc_id,
-                       CASE WHEN len(ws) >= $DupN THEN
-                         list_distinct(list_transform(
-                           range(1, len(ws) - ${DupN - 2}),
-                           i -> array_to_string(list_slice(ws, i, i + ${DupN - 1}), ' ')))
-                       ELSE [] END AS grams
-                FROM w),
-          pg AS (SELECT doc_id, $parse15 AS gh
-                 FROM (SELECT doc_id, md5(unnest(grams)) AS m FROM g)),
-          gdf AS (SELECT gh, count(*) AS df FROM pg GROUP BY 1),
-          st AS (SELECT pg.doc_id, count(*) AS n_grams,
-                        sum(CASE WHEN gdf.df >= 2 THEN 1 ELSE 0 END) AS n_dup_grams
-                 FROM pg JOIN gdf USING (gh) GROUP BY pg.doc_id)
-          SELECT d.doc_id,
-                 CAST(coalesce(st.n_grams, 0) AS BIGINT) AS n_grams,
-                 CAST(coalesce(st.n_dup_grams, 0) AS BIGINT) AS n_dup_grams,
-                 coalesce(CAST(st.n_dup_grams AS DOUBLE) / nullif(st.n_grams, 0),
-                          0.0) AS dup_frac
-          FROM documents d LEFT JOIN st USING (doc_id)
-          ORDER BY d.doc_id"""
-    },
-    // exact by construction (Bloom has no false negatives; false positives
-    // die in the verify join) → shares the plain operator's oracle
-    "contamination_bloom" -> contaminationOracle,
-
-    // IVF reproduced end-to-end: exact decimal centroids per label cell,
-    // probe the 3 nearest cells per query, exact re-rank inside them. The
-    // centroid math mirrors embedding_centroids so both engines agree bitwise.
-    "ann_topk_ivf" -> ivfOracleSql,
-    // the disk lane is DEFINED to produce the in-memory lane's results —
-    // same quantizer, probe ranking, candidates; only the read path differs
-    "ann_topk_ivf_disk" -> ivfOracleSql,
-    "ann_incremental_ivf" -> incrementalIvfOracleSql,
-
-    // strict_order: the chain must be consecutive in the user's FULL event
-    // stream (row_number over µs-total times); window in µs to match the
-    // engine's total-order contract
-    "funnel_strict_order" -> {
-      val w = FunnelWindowS * 1000000L
-      s"""WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS t,
-                            row_number() OVER (PARTITION BY user_id
-                                               ORDER BY epoch_us(ts)) AS rn
-                     FROM events),
-          u AS (SELECT DISTINCT user_id FROM events)
-          SELECT u.user_id,
-            CASE
-              WHEN EXISTS (SELECT 1 FROM e a, e b, e c
-                           WHERE a.user_id = u.user_id AND b.user_id = u.user_id
-                             AND c.user_id = u.user_id
-                             AND a.event_type = 'click' AND b.event_type = 'purchase'
-                             AND c.event_type = 'signup'
-                             AND b.rn = a.rn + 1 AND c.rn = a.rn + 2
-                             AND c.t - a.t <= $w) THEN 3
-              WHEN EXISTS (SELECT 1 FROM e a, e b
-                           WHERE a.user_id = u.user_id AND b.user_id = u.user_id
-                             AND a.event_type = 'click' AND b.event_type = 'purchase'
-                             AND b.rn = a.rn + 1 AND b.t - a.t <= $w) THEN 2
-              WHEN EXISTS (SELECT 1 FROM e a WHERE a.user_id = u.user_id
-                             AND a.event_type = 'click') THEN 1
-              ELSE 0 END AS funnel_level
-          FROM u ORDER BY u.user_id"""
-    },
-
-    // strict_dedup: a valid chain's CLOSED span holds exactly one event of
-    // each matched step (the declarative definition FunnelLevelExpr mode 2
-    // implements and InvariantSpec brute-forces)
-    "funnel_strict_dedup" -> {
-      val w = FunnelWindowS * 1000000L
-      def one(step: String, lo: String, hi: String) =
-        s"""(SELECT count(*) FROM e x WHERE x.user_id = u.user_id
-              AND x.event_type = '$step' AND x.t BETWEEN $lo AND $hi) = 1"""
-      s"""WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS t FROM events
-                     WHERE event_type IN ('click', 'purchase', 'signup')),
-          u AS (SELECT DISTINCT user_id FROM e)
-          SELECT u.user_id,
-            CASE
-              WHEN EXISTS (SELECT 1 FROM e a, e b, e c
-                           WHERE a.user_id = u.user_id AND b.user_id = u.user_id
-                             AND c.user_id = u.user_id
-                             AND a.event_type = 'click' AND b.event_type = 'purchase'
-                             AND c.event_type = 'signup'
-                             AND a.t < b.t AND b.t < c.t AND c.t - a.t <= $w
-                             AND ${one("click", "a.t", "c.t")}
-                             AND ${one("purchase", "a.t", "c.t")}
-                             AND ${one("signup", "a.t", "c.t")}) THEN 3
-              WHEN EXISTS (SELECT 1 FROM e a, e b
-                           WHERE a.user_id = u.user_id AND b.user_id = u.user_id
-                             AND a.event_type = 'click' AND b.event_type = 'purchase'
-                             AND a.t < b.t AND b.t - a.t <= $w
-                             AND ${one("click", "a.t", "b.t")}
-                             AND ${one("purchase", "a.t", "b.t")}) THEN 2
-              WHEN EXISTS (SELECT 1 FROM e a WHERE a.user_id = u.user_id
-                             AND a.event_type = 'click') THEN 1
-              ELSE 0 END AS funnel_level
-          FROM u ORDER BY u.user_id"""
-    },
-
-    // strict_increase: the funnel_levels oracle with STRICT chain
-    // inequalities at the same second granularity
-    "funnel_strict_increase" -> {
-      val w = FunnelWindowS
-      s"""WITH u AS (SELECT DISTINCT user_id FROM events
-                     WHERE event_type IN ('click', 'purchase', 'signup')),
-          e AS (SELECT user_id, event_type,
-                       CAST(floor(epoch(ts)) AS BIGINT) AS t FROM events)
-          SELECT u.user_id,
-            CASE
-              WHEN EXISTS (SELECT 1 FROM e a, e b, e c
-                           WHERE a.user_id = u.user_id AND b.user_id = u.user_id
-                             AND c.user_id = u.user_id
-                             AND a.event_type = 'click' AND b.event_type = 'purchase'
-                             AND c.event_type = 'signup'
-                             AND a.t < b.t AND b.t < c.t AND c.t - a.t <= $w) THEN 3
-              WHEN EXISTS (SELECT 1 FROM e a, e b
-                           WHERE a.user_id = u.user_id AND b.user_id = u.user_id
-                             AND a.event_type = 'click' AND b.event_type = 'purchase'
-                             AND a.t < b.t AND b.t - a.t <= $w) THEN 2
-              WHEN EXISTS (SELECT 1 FROM e a WHERE a.user_id = u.user_id
-                             AND a.event_type = 'click') THEN 1
-              ELSE 0 END AS funnel_level
-          FROM u ORDER BY u.user_id"""
-    },
-
-    // the collapsed log replayed declaratively: rebuild the 3-tercile
-    // per-(user, slice) log with the same integer arithmetic, keep each
-    // user's max-slice row — must equal the physically collapsed table
-    "optimize_final_collapse" ->
-      """WITH c AS (SELECT user_id, epoch_us(ts) AS t FROM events
-                    WHERE event_type = 'click'),
-         b AS (SELECT min(t) AS lo, max(t) AS hi FROM c),
-         s AS (SELECT user_id,
-                      CAST(1 + ((t - lo) * 3) // (hi - lo + 1) AS INT) AS slice
-               FROM c, b),
-         g AS (SELECT user_id, slice, count(*) AS n FROM s GROUP BY 1, 2),
-         w AS (SELECT user_id, max(slice) AS slice FROM g GROUP BY 1)
-         SELECT g.user_id, (g.n >= 4) AS value, CAST(g.n AS BIGINT) AS n,
-                g.slice
-         FROM g JOIN w ON g.user_id = w.user_id AND g.slice = w.slice
-         ORDER BY g.user_id""",
-
-    // CDC merge replayed declaratively: base minus changed keys, plus the
-    // update/insert payloads — must equal the merged table
-    "cdc_merge_apply" -> cdcOracleSql,
-    // the streaming twin is DEFINED to land the batch merge's table: two
-    // disjoint-key micro-batches applied sequentially + per-batch
-    // highest-seq compaction == the one-shot merge; same oracle
-    "cdc_merge_stream" -> cdcOracleSql,
-
-    // Brute-force all-pairs Jaccard over distinct char 5-grams of normalized
-    // text. Valid as an exact oracle because (a) the LSH banding has full
-    // recall on this corpus at threshold 0.5 (verified: identical 25-pair
-    // set), and (b) the 31-bit shingle hashing is collision-free here, so
-    // hashed-set Jaccard == string-set Jaccard. The size-ratio prefilter is
-    // a necessary condition of j >= 0.5 (j <= min/max), not an approximation.
-    "minhash_neardup" ->
-      s"""WITH $NearDupPairCtes
-          SELECT id_a, id_b, round(CAST(inter AS DOUBLE) / uni, 4) AS jaccard
-          FROM pairs WHERE CAST(inter AS DOUBLE) / uni >= 0.5
-          ORDER BY id_a, id_b""",
-
-    // Same brute-force 5-gram pair list as minhash_neardup (whose banding
-    // recall is verified total on this corpus), restricted to pairs touching
-    // the 20% "new batch" — the incremental path verifies candidates with the
-    // same exact-Jaccard join, so the sets must agree identically.
-    "incremental_neardup" ->
-      s"""WITH $NearDupPairCtes
-          SELECT id_a, id_b, round(CAST(inter AS DOUBLE) / uni, 4) AS jaccard
-          FROM pairs
-          WHERE CAST(inter AS DOUBLE) / uni >= 0.5
-            AND (id_a % 5 = 0 OR id_b % 5 = 0)
-          ORDER BY id_a, id_b""",
-
-    // Exact word-bigram Jaccard, brute-forced over all pairs in SQL; the
-    // Spark side's prefix filter is exact (AllPairs bound), so the sets must
-    // agree identically. The size prefilter is the same J<=min/max necessary
-    // condition used by the minhash oracle.
-    "ngram_jaccard_neardup" ->
-      """WITH n AS (
-           SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-           FROM documents),
-         w AS (SELECT doc_id, string_split(t, ' ') AS w FROM n),
-         g AS (
-           SELECT doc_id,
-                  list_distinct(list_transform(range(1, len(w)),
-                                               i -> w[i] || ' ' || w[i + 1])) AS sh
-           FROM w WHERE len(w) >= 2),
-         pairs AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                  len(list_intersect(a.sh, b.sh)) AS inter,
-                  len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS uni
-           FROM g a JOIN g b
-             ON a.doc_id < b.doc_id
-            AND least(len(a.sh), len(b.sh)) * 2 >= greatest(len(a.sh), len(b.sh)))
-         SELECT id_a, id_b, round(CAST(inter AS DOUBLE) / uni, 4) AS jaccard
-         FROM pairs WHERE CAST(inter AS DOUBLE) / uni >= 0.8
-         ORDER BY id_a, id_b""",
-
-    // Directed trigram containment replayed brute-force: same normalization
-    // and gram sets as the jaccard oracle, one-sided size filter, C = inter
-    // over |A|'s grams. Single double division + round on both sides.
-    "containment_neardup" ->
-      """WITH n AS (
-           SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-           FROM documents),
-         w AS (SELECT doc_id, string_split(t, ' ') AS w FROM n),
-         g AS (
-           SELECT doc_id,
-                  list_distinct(list_transform(range(1, len(w) - 1),
-                                               i -> w[i] || ' ' || w[i + 1] || ' ' || w[i + 2])) AS sh
-           FROM w WHERE len(w) >= 3)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / len(a.sh), 4)
-                  AS containment
-         FROM g a JOIN g b
-           ON a.doc_id <> b.doc_id
-          AND len(b.sh) >= 0.8 * len(a.sh) - 1e-9
-         WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / len(a.sh) >= 0.8
-         ORDER BY id_a, id_b""",
-
-    // BM25 recomputed end-to-end: same tokenization as tfidf_top_terms, same
-    // Lucene-idf formula with identical parenthesization (the IEEE op
-    // sequence matches the Spark side except libm ln's ≤1 ulp), per-doc
-    // score folded in term order (sum ... ORDER BY term). Only the top-10
-    // SET with integer stats is emitted; boundary ties break on doc_id in
-    // both engines.
-    "bm25_search" ->
-      """WITH nrm AS (
-           SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-           FROM documents),
-         dls AS (SELECT doc_id,
-                        len(list_filter(string_split(t, ' '), x -> x <> '')) AS dl
-                 FROM nrm),
-         stats AS (SELECT count(*) AS n, CAST(sum(dl) AS BIGINT) AS sum_dl FROM dls),
-         tok AS (SELECT nrm.doc_id, dls.dl,
-                        unnest(string_split(nrm.t, ' ')) AS term
-                 FROM nrm JOIN dls USING (doc_id)),
-         tf AS (SELECT doc_id, term, count(*) AS tf, max(dl) AS dl
-                FROM tok WHERE term IN ('spark', 'vector', 'customer')
-                GROUP BY 1, 2),
-         dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         scored AS (
-           SELECT tf.doc_id,
-                  sum(ln((CAST(stats.n - dfreq.df AS DOUBLE) + 0.5)
-                          / (CAST(dfreq.df AS DOUBLE) + 0.5) + 1.0)
-                      * (CAST(tf.tf AS DOUBLE) * 2.2
-                         / (tf.tf + 1.2 * (1.0 - 0.75
-                              + 0.75 * CAST(tf.dl AS DOUBLE)
-                                  / (CAST(stats.sum_dl AS DOUBLE) / stats.n))))
-                      ORDER BY tf.term) AS score,
-                  count(*) AS n_hits, CAST(sum(tf.tf) AS BIGINT) AS tf_total,
-                  CAST(max(tf.dl) AS BIGINT) AS dl
-           FROM tf JOIN dfreq USING (term), stats
-           GROUP BY tf.doc_id)
-         SELECT doc_id, n_hits, tf_total, dl
-         FROM (SELECT * FROM scored ORDER BY score DESC, doc_id LIMIT 10)
-         ORDER BY doc_id""",
-
-    // Reciprocal-rank fusion: the bm25_search scored frame feeds BOTH
-    // rankings (BM25, raw tf); rrf terms are 1.0/(60+rank) divisions of
-    // exact integers — bit-identical, so the fused ranking replays exactly.
-    "hybrid_rrf_search" ->
-      """WITH nrm AS (
-           SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-           FROM documents),
-         dls AS (SELECT doc_id,
-                        len(list_filter(string_split(t, ' '), x -> x <> '')) AS dl
-                 FROM nrm),
-         stats AS (SELECT count(*) AS n, CAST(sum(dl) AS BIGINT) AS sum_dl FROM dls),
-         tok AS (SELECT nrm.doc_id, dls.dl,
-                        unnest(string_split(nrm.t, ' ')) AS term
-                 FROM nrm JOIN dls USING (doc_id)),
-         tf AS (SELECT doc_id, term, count(*) AS tf, max(dl) AS dl
-                FROM tok WHERE term IN ('spark', 'vector', 'customer')
-                GROUP BY 1, 2),
-         dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         scored AS (
-           SELECT tf.doc_id,
-                  sum(ln((CAST(stats.n - dfreq.df AS DOUBLE) + 0.5)
-                          / (CAST(dfreq.df AS DOUBLE) + 0.5) + 1.0)
-                      * (CAST(tf.tf AS DOUBLE) * 2.2
-                         / (tf.tf + 1.2 * (1.0 - 0.75
-                              + 0.75 * CAST(tf.dl AS DOUBLE)
-                                  / (CAST(stats.sum_dl AS DOUBLE) / stats.n))))
-                      ORDER BY tf.term) AS score,
-                  count(*) AS n_hits, CAST(sum(tf.tf) AS BIGINT) AS tf_total
-           FROM tf JOIN dfreq USING (term), stats
-           GROUP BY tf.doc_id),
-         a AS (SELECT doc_id,
-                      CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rank_bm25
-               FROM (SELECT * FROM scored ORDER BY score DESC, doc_id LIMIT 20)),
-         b AS (SELECT doc_id,
-                      CAST(row_number() OVER (ORDER BY tf_total DESC, n_hits DESC, doc_id) AS BIGINT) AS rank_tf
-               FROM (SELECT * FROM scored
-                     ORDER BY tf_total DESC, n_hits DESC, doc_id LIMIT 20)),
-         f AS (SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
-                      a.rank_bm25, b.rank_tf,
-                      coalesce(CAST(1.0 AS DOUBLE) / (60 + a.rank_bm25), 0.0)
-                        + coalesce(CAST(1.0 AS DOUBLE) / (60 + b.rank_tf), 0.0) AS rrf_score
-               FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id)
-         SELECT doc_id, rank_bm25, rank_tf, rrf_score,
-                CAST(row_number() OVER (ORDER BY rrf_score DESC, doc_id) AS BIGINT) AS final_rank
-         FROM f ORDER BY final_rank""",
-
-    // Cluster closure recomputed via the recursive CTE (as dedup_clusters),
-    // then the same all-integer multiplicative split hash on the canonical
-    // cluster id; singletons fall back to their own id through the LEFT JOIN.
-    "leakage_split" ->
-      s"""WITH RECURSIVE $NearDupPairCtes,
-          np AS (SELECT id_a, id_b FROM pairs
-                 WHERE CAST(inter AS DOUBLE) / uni >= 0.5),
-          e AS (SELECT id_a AS a, id_b AS b FROM np
-                UNION ALL SELECT id_b, id_a FROM np),
-          reach(src, dst) AS (
-            SELECT DISTINCT a, a FROM e
-            UNION
-            SELECT r.src, e.b FROM reach r JOIN e ON r.dst = e.a),
-          cl AS (SELECT src AS id, min(dst) AS cluster_id FROM reach GROUP BY src)
-          SELECT d.doc_id,
-                 coalesce(cl.cluster_id, d.doc_id) AS cluster_id,
-                 CASE WHEN (coalesce(cl.cluster_id, d.doc_id) * ${Sampling.Knuth}) % 100 < 10
-                      THEN 'test' ELSE 'train' END AS split
-          FROM documents d LEFT JOIN cl ON d.doc_id = cl.id
-          ORDER BY d.doc_id""",
-
-    // All-integer tier CASE + multiplicative keep hash — bit-free of floats,
-    // so the kept set is exactly reproducible.
-    "quality_tiered_sample" ->
-      s"""SELECT doc_id, n_chars,
-                 CASE WHEN n_chars >= 400 THEN 100
-                      WHEN n_chars >= 250 THEN 30 ELSE 10 END AS keep_pct
-          FROM documents
-          WHERE (doc_id * ${Sampling.Knuth}) % 100 <
-                CASE WHEN n_chars >= 400 THEN 100
-                     WHEN n_chars >= 250 THEN 30 ELSE 10 END
-          ORDER BY doc_id""",
-
-    // Brute-force thresholded levenshtein over the length-banded pair space
-    // (|len diff| > k is a levenshtein lower bound, so the band is lossless);
-    // the Spark side's Ed-Join prefix filter is exact, so the pair sets and
-    // distances must agree identically.
-    "editdist_neardup" ->
-      """WITH d AS (SELECT doc_id, substr(text, 1, 64) AS s FROM documents)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                CAST(levenshtein(a.s, b.s) AS BIGINT) AS dist
-         FROM d a JOIN d b
-           ON a.doc_id < b.doc_id
-          AND abs(length(a.s) - length(b.s)) <= 8
-         WHERE levenshtein(a.s, b.s) <= 8
-         ORDER BY id_a, id_b""",
-
-    // Incremental maintenance must converge to the same fixpoint as
-    // clustering from scratch, so it shares the closure oracle verbatim.
-    "incremental_clusters" -> DedupClustersOracle,
-
-    // Connected components over the same brute-force pair list: transitive
-    // closure via a recursive CTE, cluster id = min reachable doc id —
-    // exactly the min-label fixpoint the Spark operator computes.
-    "dedup_clusters" -> DedupClustersOracle,
-
-    // Whole simhashes recomputed in SQL (the md5-derived word hash makes the
-    // bits engine-portable), then brute-force Hamming over all pairs. Exact —
-    // the 4-chunk pigeonhole join in the Spark side has guaranteed 100%
-    // recall at maxHamming=3, so the two pair sets must agree identically.
-    "simhash_neardup" -> {
-      def parse8(off: Int) = (1 to 8).map { j =>
-        val pow = 1L << (4 * (8 - j)) // 16^(8-j)
-        s"(strpos('0123456789abcdef', substr(m, ${off + j}, 1)) - 1) * $pow"
-      }.mkString(" + ")
-      val sumsLo = (0 until 32).map(b =>
-        s"sum(CASE WHEN (lo >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS s$b").mkString(", ")
-      val sumsHi = (0 until 32).map(b =>
-        s"sum(CASE WHEN (hi >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS t$b").mkString(", ")
-      val loBits = (0 until 32).map(b =>
-        s"CASE WHEN s$b > 0 THEN ${1L << b} ELSE 0 END").mkString(" + ")
-      val hiBits = (0 until 32).map(b =>
-        s"CASE WHEN t$b > 0 THEN ${1L << b} ELSE 0 END").mkString(" + ")
-      s"""WITH w AS (
-            SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-            FROM documents),
-          h AS (
-            SELECT doc_id, ${parse8(0)} AS lo, ${parse8(8)} AS hi
-            FROM (SELECT doc_id, md5(word) AS m FROM w)),
-          bits AS (SELECT doc_id, $sumsLo, $sumsHi FROM h GROUP BY doc_id),
-          sh AS (SELECT doc_id, $loBits AS lo, $hiBits AS hi FROM bits),
-          alldocs AS (
-            SELECT d.doc_id, coalesce(sh.lo, 0) AS lo, coalesce(sh.hi, 0) AS hi
-            FROM documents d LEFT JOIN sh ON d.doc_id = sh.doc_id),
-          pairs AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   CAST(bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) AS INT)
-                     AS hamming
-            FROM alldocs a JOIN alldocs b ON a.doc_id < b.doc_id)
-          SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 3
-          ORDER BY id_a, id_b"""
-    },
-
-    // Both fingerprints recomputed from first principles: the rolling hash is
-    // a per-char fold mod 2^31-1 (list_reduce with a prepended 0 accumulator);
-    // the k-gram-min is min over grams of 60 bits hex-parsed from md5(gram).
-    "doc_fingerprints_ext" -> {
-      val parse15 = (1 to 15).map { j =>
-        val pow = 1L << (4 * (15 - j)) // 16^(15-j)
-        s"(strpos('0123456789abcdef', substr(m, $j, 1)) - 1) * $pow"
-      }.mkString(" + ")
-      s"""WITH n AS (
-            SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
-            FROM documents)
-          SELECT doc_id,
-            list_reduce(
-              list_prepend(CAST(0 AS BIGINT),
-                list_transform(regexp_extract_all(t, '.'),
-                               c -> CAST(ascii(c) AS BIGINT))),
-              (a, b) -> (a * 31 + b) % 2147483647) AS fp_rolling,
-            CASE WHEN length(t) >= 8 THEN
-              list_min(list_transform(
-                list_transform(range(1, length(t) - 6),
-                               i -> md5(substr(t, CAST(i AS INT), 8))),
-                m -> $parse15))
-            END AS fp_kgram_min
-          FROM n ORDER BY doc_id"""
-    },
-
-    // Brute-force rendition of the planted-near-dup query (see the Spark
-    // side): perturbed copies of every 25th vector, all-pairs exact cosine.
-    "embedding_neardup" ->
-      """WITH base AS (SELECT vec_id, CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]) AS v FROM embeddings),
-          p AS (SELECT vec_id + 1000000 AS vec_id,
-                       list_concat([v[1] * 1.25], v[2:]) AS v
-                FROM base WHERE vec_id % 25 = 0),
-          c AS (SELECT * FROM base UNION ALL SELECT * FROM p),
-          pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                           list_cosine_similarity(a.v, b.v) AS cos
-                    FROM c a JOIN c b ON a.vec_id < b.vec_id)
-          SELECT id_a, id_b, round(cos, 4) AS cosine
-          FROM pairs WHERE cos >= 0.95 ORDER BY id_a, id_b""",
-
-    // Reproduces Multimodal.StubCodec exactly: h = first 7 hex chars of
-    // md5(utf8 bytes) parsed base-16 (28 bits), then the same integer math.
-    // The 60-bit average-hash re-derived from the byte stream (ascii codes
-    // == UTF-8 bytes on this corpus, the synthetic-media-lane assumption all
-    // multimodal oracles share), then brute-force XOR-popcount pairs — the
-    // exact reference for the pigeonhole chunk join.
-    "media_phash_neardup" ->
-      """WITH codes AS (
-           SELECT doc_id, (i.i - 1) % 60 AS b,
-                  ascii(substr(text, CAST(i.i AS INT), 1)) AS c
-           FROM documents,
-                LATERAL (SELECT unnest(range(1, length(text) + 1)) AS i) i),
-         buck AS (SELECT doc_id, b, sum(c) AS s, count(*) AS nj
-                  FROM codes GROUP BY 1, 2),
-         tot AS (SELECT doc_id, sum(s) AS total, sum(nj) AS n
-                 FROM buck GROUP BY 1),
-         bits AS (SELECT buck.doc_id, b,
-                         CASE WHEN s * n > total * nj THEN 1 ELSE 0 END AS bit
-                  FROM buck JOIN tot USING (doc_id)),
-         ph0 AS (SELECT doc_id,
-                        CAST(sum(bit * (1::BIGINT << CAST(b AS INT))) AS BIGINT) AS h
-                 FROM bits GROUP BY 1),
-         ph AS (SELECT d.doc_id AS media_id, coalesce(ph0.h, 0) AS h
-                FROM documents d LEFT JOIN ph0 ON d.doc_id = ph0.doc_id)
-         SELECT a.media_id AS id_a, b.media_id AS id_b,
-                CAST(bit_count(xor(a.h, b.h)) AS BIGINT) AS hamming
-         FROM ph a JOIN ph b ON a.media_id < b.media_id
-         WHERE bit_count(xor(a.h, b.h)) <= 3
-         ORDER BY id_a, id_b""",
-
-    "multimodal_decode" -> {
-      val hexVal = (1 to 7).map { i =>
-        val pow = math.pow(16, 7 - i).toLong
-        s"(strpos('0123456789abcdef', substr(fp, $i, 1)) - 1) * $pow"
-      }.mkString(" + ")
-      s"""WITH m AS (
-            SELECT CAST(doc_id AS BIGINT) AS media_id, md5(text) AS fp,
-                   CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-            FROM documents),
-          h AS (SELECT media_id, n_bytes, $hexVal AS hv FROM m),
-          d AS (
-            SELECT media_id, n_bytes,
-                   ['jpeg', 'png', 'webp', 'wav'][CAST(hv % 4 AS INT) + 1] AS format,
-                   CAST(64 + hv % 1024 AS INT) AS width,
-                   CAST(64 + (hv // 1024) % 1024 AS INT) AS height,
-                   CAST(1 + n_bytes % 256 AS INT) AS n_frames
-            FROM h),
-          r AS (SELECT *, greatest(width, height) AS ls FROM d),
-          z AS (
-            SELECT media_id, format, width, height, n_frames, n_bytes,
-                   CASE WHEN ls > 512 THEN CAST(floor(width * 512.0 / ls) AS INT)
-                        ELSE width END AS out_width,
-                   CASE WHEN ls > 512 THEN CAST(floor(height * 512.0 / ls) AS INT)
-                        ELSE height END AS out_height,
-                   list_slice(range(0, CAST(n_frames AS BIGINT), 10), 1, 8) AS plan
-            FROM r)
-          SELECT media_id, format, width, height, n_frames, n_bytes,
-                 out_width, out_height,
-                 CAST(len(plan) AS INT) AS n_frames_planned,
-                 array_to_string(plan, ',') AS frame_plan
-          FROM z ORDER BY media_id"""
-    },
-
-    // Data-dependent oracle: the LEARNED merges are embedded as literals
-    // once bpe_tokens has trained them (Verify runs every query before it
-    // dumps oracle SQL, so the real SQL is always what lands in the dump).
-    // The untrained placeholder is schema-shaped but empty — it can only be
-    // reached by comparing a result that was never produced, and then it
-    // fails LOUDLY rather than vacuously passing.
-    "bpe_tokens" -> Artifacts.last[Seq[(String, String)]]("bpe_merges").map(BpeModel.oracleTokenSql)
-      .getOrElse("""SELECT CAST(NULL AS BIGINT) AS doc_id,
-                           CAST(NULL AS BIGINT) AS n_words,
-                           CAST(NULL AS BIGINT) AS n_bpe_tokens
-                    WHERE 1 = 0"""),
-
-    "bpe_encode_hash" -> Artifacts.last[Seq[(String, String)]]("bpe_merges").map(BpeModel.oracleEncodeSql)
-      .getOrElse("""SELECT CAST(NULL AS BIGINT) AS doc_id,
-                           CAST(NULL AS BIGINT) AS n_words,
-                           CAST(NULL AS BIGINT) AS n_bpe_tokens,
-                           CAST(NULL AS VARCHAR) AS enc_md5
-                    WHERE 1 = 0"""),
-
-    // Unigram-LM twin of the BPE pair: learned piece costs embedded as
-    // literals, Viterbi DP unrolled per prefix length (integer arithmetic
-    // end-to-end). Untrained fallback is schema-shaped but empty → loud.
-    "unigram_tokens" -> Artifacts.last[UnigramLm.Model]("unigram_model").map(UnigramLm.oracleTokenSql)
-      .getOrElse("""SELECT CAST(NULL AS BIGINT) AS doc_id,
-                           CAST(NULL AS BIGINT) AS n_words,
-                           CAST(NULL AS BIGINT) AS n_pieces,
-                           CAST(NULL AS BIGINT) AS unigram_cost
-                    WHERE 1 = 0"""),
-
-    // WordPiece twin: learned vocabulary as literals, the greedy
-    // longest-match walk replayed as a precomputed match table + unrolled
-    // step chain. Untrained fallback is schema-shaped but empty → loud.
-    "wordpiece_tokens" -> Artifacts.last[WordPiece.Model]("wordpiece_model").map(WordPiece.oracleTokenSql)
-      .getOrElse("""SELECT CAST(NULL AS BIGINT) AS doc_id,
-                           CAST(NULL AS BIGINT) AS n_words,
-                           CAST(NULL AS BIGINT) AS n_pieces,
-                           CAST(NULL AS BIGINT) AS n_unk,
-                           CAST(NULL AS BIGINT) AS wp_sig
-                    WHERE 1 = 0"""),
-
-    // Byte-level BPE twin: learned merges as literal nested replace()
-    // calls over the hex-pair separator encoding; pre-tokenization replays
-    // the explicit-ASCII-class pattern in RE2. Untrained fallback is
-    // schema-shaped but empty → loud.
-    "bytebpe_tokens" -> Artifacts.last[ByteBpe.Model]("bytebpe_model").map(ByteBpe.oracleSql)
-      .getOrElse("""SELECT CAST(NULL AS BIGINT) AS doc_id,
-                           CAST(NULL AS BIGINT) AS n_pretokens,
-                           CAST(NULL AS BIGINT) AS n_tokens,
-                           CAST(NULL AS VARCHAR) AS enc_md5
-                    WHERE 1 = 0"""),
-
-    // DSIR: learned integer bucket weights as literals over the portable
-    // 60-bit gram hash; the top-20% cut replays with a rank window (DuckDB
-    // is single-node — the engine side uses the distributed two-pass rank).
-    // Untrained fallback is schema-shaped but empty → loud.
-    "dsir_sample" -> Artifacts.last[Dsir.Weights]("dsir_weights").map(dsirOracleSql)
-      .getOrElse("""SELECT CAST(NULL AS BIGINT) AS doc_id,
-                           CAST(NULL AS BIGINT) AS n_feats,
-                           CAST(NULL AS BIGINT) AS dsir_score
-                    WHERE 1 = 0"""),
-
-    // CCNet perplexity buckets: the unigram DP CTE chain (learned vocab as
-    // literals) feeds integer milli-cost scores; tercile bounds are exact
-    // positional picks replayed in SQL — all-integer end to end. Membership
-    // digests replay the engine's order-free 60-bit hash sum mod 2^61−1:
-    // DuckDB's sum(BIGINT) is HUGEINT, so the pre-reduction sum is exact,
-    // matching the engine's DECIMAL sums bit-for-bit.
-    "ccnet_perplexity_buckets" -> Artifacts.last[UnigramLm.Model]("unigram_model").map { m =>
-      val parse15 = (1 to 15).map { j =>
-        val pow = 1L << (4 * (15 - j)) // 16^(15-j)
-        s"(strpos('0123456789abcdef', substr(h, $j, 1)) - 1) * $pow"
-      }.mkString(" + ")
-      s"""WITH ${UnigramLm.oracleStatsCtes(m)},
-          sc AS (SELECT d.doc_id, d.lang,
-                        coalesce(per.n_pieces, 0) AS np,
-                        CASE WHEN coalesce(per.n_pieces, 0) > 0
-                             THEN (per.unigram_cost * 1000) // per.n_pieces END AS score
-                 FROM documents d LEFT JOIN per USING (doc_id)),
-          ranked AS (SELECT doc_id, lang, score,
-                            row_number() OVER (PARTITION BY lang
-                                               ORDER BY score, doc_id) AS rn,
-                            count(*) OVER (PARTITION BY lang) AS n
-                     FROM sc WHERE np > 0),
-          bounds AS (SELECT lang,
-                            max(CASE WHEN rn = (n + 2) // 3 THEN score END) AS b1,
-                            max(CASE WHEN rn = (2 * n + 2) // 3 THEN score END) AS b2
-                     FROM ranked GROUP BY lang),
-          bucketed AS (
-            SELECT r.doc_id, r.lang, r.score,
-                   CASE WHEN r.score <= b.b1 THEN 'head'
-                        WHEN r.score <= b.b2 THEN 'middle'
-                        ELSE 'tail' END AS bucket
-            FROM ranked r JOIN bounds b USING (lang)
-            UNION ALL
-            SELECT doc_id, lang, score, 'empty' FROM sc WHERE np <= 0),
-          hashed AS (
-            SELECT lang, bucket, score, ($parse15) AS idh
-            FROM (SELECT lang, bucket, score,
-                         md5(CAST(doc_id AS VARCHAR)) AS h
-                  FROM bucketed))
-          SELECT lang, bucket, CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(min(score) AS BIGINT) AS min_score,
-                 CAST(max(score) AS BIGINT) AS max_score,
-                 CAST(sum(idh) % $CcnetDigestMod AS BIGINT) AS ids_hash
-          FROM hashed GROUP BY lang, bucket ORDER BY lang, bucket"""
-    }.getOrElse("""SELECT CAST(NULL AS VARCHAR) AS lang,
-                          CAST(NULL AS VARCHAR) AS bucket,
-                          CAST(NULL AS BIGINT) AS n_docs,
-                          CAST(NULL AS BIGINT) AS min_score,
-                          CAST(NULL AS BIGINT) AS max_score,
-                          CAST(NULL AS BIGINT) AS ids_hash
-                   WHERE 1 = 0"""),
-
-    // Learned k-means centroids replayed as literals (pqTrain/srp
-    // discipline): identical dot/norm/argmax IEEE trees on both engines.
-    "kmeans_assign" -> Artifacts.last[Array[Array[Double]]]("kmeans_centroids").map(kmeansOracleSql)
-      .getOrElse("""SELECT CAST(NULL AS BIGINT) AS vec_id,
-                           CAST(NULL AS BIGINT) AS label,
-                           CAST(NULL AS DOUBLE) AS cosine
-                    WHERE 1 = 0"""),
-
-    // Learned-weights replay (data-dependent, like the BPE merges): margins
-    // reproduce bit-for-bit because scoring is a pinned IEEE sequence.
-    "quality_classifier" -> Artifacts.last[Array[Double]]("qc_weights").map(qcOracleSql)
-      .getOrElse("""SELECT CAST(NULL AS BIGINT) AS doc_id,
-                           CAST(NULL AS BIGINT) AS n_chars,
-                           CAST(NULL AS DOUBLE) AS margin,
-                           CAST(NULL AS BOOLEAN) AS pass
-                    WHERE 1 = 0"""),
-
-    // Same data-dependent technique: the learned int8 scales are embedded
-    // once the query has computed them; the untrained placeholder fails
-    // loudly if ever compared.
-    "ann_topk_quant" -> Artifacts.last[Array[Double]]("quant_scales").map(quantOracleSql)
-      .getOrElse("""SELECT CAST(NULL AS BIGINT) AS query_id,
-                           CAST(NULL AS BIGINT) AS rank,
-                           CAST(NULL AS BIGINT) AS neighbor_id,
-                           CAST(NULL AS DOUBLE) AS cosine
-                    WHERE 1 = 0"""),
-
-    // PCA twins: learned mean/components as literal multiply-add chains;
-    // untrained placeholders fail loudly
-    "embedding_pca" -> Artifacts.last[Pca.Model]("pca_model").map(pcaOracleSql)
-      .getOrElse("""SELECT CAST(NULL AS BIGINT) AS vec_id,
-                           CAST(NULL AS BIGINT) AS comp,
-                           CAST(NULL AS DOUBLE) AS proj
-                    WHERE 1 = 0"""),
-    "ann_topk_pca" -> Artifacts.last[Pca.Model]("pca_model").map(pcaAnnOracleSql)
-      .getOrElse("""SELECT CAST(NULL AS BIGINT) AS query_id,
-                           CAST(NULL AS BIGINT) AS rank,
-                           CAST(NULL AS BIGINT) AS neighbor_id,
-                           CAST(NULL AS DOUBLE) AS cosine
-                    WHERE 1 = 0"""),
-
-    // PQ twin of the scales embedding: learned sub-codebooks as literals,
-    // pinned-IEEE encode/ADC chains; untrained placeholder fails loudly
-    "ann_topk_pq" -> Artifacts.last[Array[Array[Array[Double]]]]("pq_codebooks").map(pqOracleSql)
-      .getOrElse("""SELECT CAST(NULL AS BIGINT) AS query_id,
-                           CAST(NULL AS BIGINT) AS rank,
-                           CAST(NULL AS BIGINT) AS neighbor_id,
-                           CAST(NULL AS DOUBLE) AS cosine
-                    WHERE 1 = 0"""),
-
-    // Q21 shape: both correlated self-subqueries expressed as EXISTS /
-    // NOT EXISTS; numwait ties at the LIMIT boundary break on s_name, so
-    // the top-100 cut is a total order in both engines.
-    "q21_waiting_supplier" ->
-      """WITH l1 AS (
-           SELECT l.l_orderkey, l.l_suppkey
-           FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-           WHERE l.l_returnflag = 'R' AND o.o_orderstatus = 'F')
-         SELECT s.s_name, count(*) AS numwait
-         FROM l1
-         JOIN supplier s ON l1.l_suppkey = s.s_suppkey
-         WHERE EXISTS (SELECT 1 FROM lineitem l2
-                       WHERE l2.l_orderkey = l1.l_orderkey
-                         AND l2.l_suppkey <> l1.l_suppkey)
-           AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                           WHERE l3.l_orderkey = l1.l_orderkey
-                             AND l3.l_suppkey <> l1.l_suppkey
-                             AND l3.l_returnflag = 'R')
-         GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 100""",
-
-    // Q22 shape: scalar AVG bound kept as sum/count so the double division
-    // is the identical IEEE operation in both engines; c_acctbal viewed at
-    // the engine's canonical DOUBLE width, sums through the digit string.
-    "q22_sales_opportunity" ->
-      """WITH cset AS (
-           SELECT c_custkey, c_nationkey, CAST(c_acctbal AS DOUBLE) AS bal
-           FROM customer WHERE c_nationkey IN (1, 3, 5, 7, 9, 11, 13)),
-         stats AS (
-           SELECT CAST(sum(CAST(CAST(bal AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS s,
-                  count(*) AS n
-           FROM cset WHERE bal > 0)
-         SELECT c_nationkey AS cntry, count(*) AS numcust,
-                CAST(sum(CAST(CAST(bal AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS totacctbal
-         FROM cset c, stats
-         WHERE c.bal > stats.s / stats.n
-           AND NOT EXISTS (SELECT 1 FROM orders o
-                           WHERE o.o_custkey = c.c_custkey
-                             AND o.o_orderpriority = '1-URGENT')
-         GROUP BY 1 ORDER BY 1""",
-
-    // Q8 shape: both share legs are decimal-exact sums cast to double, so
-    // the division is the identical IEEE operation in both engines.
-    "q8_market_share" ->
-      """WITH vol AS (
-           SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-                  CAST(CAST(CAST(l_extendedprice AS DOUBLE) * (1.0 - CAST(l_discount AS DOUBLE)) AS VARCHAR) AS DECIMAL(27,6)) AS volume,
-                  sn.n_name AS supp_nation
-           FROM lineitem
-           JOIN part     ON l_partkey = p_partkey
-           JOIN orders   ON l_orderkey = o_orderkey
-           JOIN customer ON o_custkey = c_custkey
-           JOIN nation cn ON c_nationkey = cn.n_nationkey
-           JOIN region r  ON cn.n_regionkey = r.r_regionkey
-           JOIN supplier s ON l_suppkey = s.s_suppkey
-           JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-           WHERE r.r_name = 'ASIA' AND p_type = 'ECONOMY')
-         SELECT o_year,
-                CAST(sum(CASE WHEN supp_nation = 'NATION_5' THEN volume
-                              ELSE CAST(0 AS DECIMAL(27,6)) END) AS DOUBLE)
-                / CAST(sum(volume) AS DOUBLE) AS mkt_share
-         FROM vol GROUP BY 1 ORDER BY 1""",
-
-    // Q13 shape: the join-side predicate keeps zero-order customers in the
-    // outer join; all quantities integral.
-    "q13_order_distribution" ->
-      """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist FROM (
-           SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-           FROM customer LEFT OUTER JOIN orders
-             ON c_custkey = o_custkey AND o_orderpriority = '1-URGENT'
-           GROUP BY c_custkey)
-         GROUP BY c_count ORDER BY custdist DESC, c_count DESC""",
-
-    // Q16 shape: lineitem (partkey, suppkey) pairs play partsupp; the
-    // NOT IN keys are non-null so anti-join semantics coincide.
-    "q16_supplier_cnt" ->
-      """SELECT p_brand, p_type, p_size,
-                CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-         FROM lineitem JOIN part ON l_partkey = p_partkey
-         WHERE p_brand <> 'Brand#1' AND p_type <> 'PROMO'
-           AND p_size IN (1, 5, 9, 14, 19, 23, 36, 45)
-           AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-                                 WHERE CAST(s_acctbal AS DOUBLE) < 0)
-         GROUP BY 1, 2, 3
-         ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""",
-
-    // Q20 shape: the dominance test multiplies decimal-exact-sum doubles
-    // the same way on both sides, so the strict > boundary is bit-stable.
-    "q20_dominant_supplier" ->
-      """WITH li AS (
-           SELECT l_partkey, l_suppkey,
-                  CAST(CAST(CAST(l_quantity AS DOUBLE) AS VARCHAR) AS DECIMAL(27,6)) AS qty
-           FROM lineitem
-           WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_type = 'STANDARD')),
-         pair AS (
-           SELECT l_partkey, l_suppkey, CAST(sum(qty) AS DOUBLE) AS pair_qty
-           FROM li GROUP BY 1, 2),
-         tot AS (
-           SELECT l_partkey, CAST(sum(qty) AS DOUBLE) AS tot_qty,
-                  count(DISTINCT l_suppkey) AS ns
-           FROM li GROUP BY 1),
-         dominant AS (
-           SELECT DISTINCT pair.l_suppkey
-           FROM pair JOIN tot ON pair.l_partkey = tot.l_partkey
-           WHERE pair.pair_qty * tot.ns > 2.5 * tot.tot_qty)
-         SELECT s_suppkey, s_name, n_name
-         FROM supplier JOIN nation ON s_nationkey = n_nationkey
-         WHERE s_suppkey IN (SELECT l_suppkey FROM dominant)
-         ORDER BY s_suppkey""",
-
-    // Q9 shape: the profit expression evaluates left-associated in double
-    // on both sides, then sums decimal-exact through the digit string.
-    "q9_product_profit" ->
-      """SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
-                CAST(sum(CAST(CAST(
-                  CAST(l_extendedprice AS DOUBLE) * (1.0 - CAST(l_discount AS DOUBLE))
-                  - 0.6 * CAST(p_retailprice AS DOUBLE) * CAST(l_quantity AS DOUBLE)
-                AS VARCHAR) AS DECIMAL(27,6))) AS DOUBLE) AS profit,
-                count(*) AS n_items
-         FROM lineitem
-         JOIN part ON l_partkey = p_partkey
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN nation ON s_nationkey = n_nationkey
-         WHERE p_name LIKE '%red%'
-         GROUP BY 1, 2 ORDER BY nation, o_year DESC""",
-
-    // ExactSubstr replayed definitionally on the substrings themselves (no
-    // hashes — the engine's hash stage is a candidate prefilter verified on
-    // the text, so both sides compute the identical position set): every
-    // L-codepoint window occurring >= 2 times anywhere marks its start
-    // position; marked starts merge to maximal spans by COVERAGE
-    // gaps-and-islands (a new span where the gap between consecutive starts
-    // exceeds L — start-adjacency alone would emit overlapping spans);
-    // per-doc aggregate left-joins back so clean docs assert their zeros.
-    // Positions are 1-based codepoints in BOTH engines (DuckDB
-    // length/substr and Spark char_length/substring both count code
-    // points).
-    "exact_substring_spans" ->
-      s"""WITH d AS (SELECT doc_id, coalesce(text, '') AS s FROM documents),
-          p AS (SELECT doc_id, unnest(generate_series(1, length(s) - ${SubstrL - 1})) AS pos, s
-                FROM d),
-          win AS (SELECT doc_id, pos, substr(s, CAST(pos AS INT), $SubstrL) AS w FROM p),
-          dw AS (SELECT w FROM win GROUP BY w HAVING count(*) >= 2),
-          v AS (SELECT win.doc_id, win.pos FROM win JOIN dw USING (w)),
-          isl AS (SELECT doc_id, pos,
-                         CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos)
-                                   > $SubstrL THEN 1 ELSE 0 END AS brk
-                  FROM v),
-          grp AS (SELECT doc_id, pos,
-                         sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                                        ROWS UNBOUNDED PRECEDING) AS g
-                  FROM isl),
-          sp AS (SELECT doc_id, min(pos) AS sp, max(pos) + ${SubstrL - 1} AS ep
-                 FROM grp GROUP BY doc_id, g),
-          agg AS (SELECT doc_id, count(*) AS n_dup_spans,
-                         sum(ep - sp + 1) AS dup_chars,
-                         md5(string_agg(sp || ':' || ep, ',' ORDER BY sp)) AS span_digest
-                  FROM sp GROUP BY doc_id)
-          SELECT d.doc_id,
-                 CAST(length(d.s) AS BIGINT) AS n_chars,
-                 CAST(coalesce(a.n_dup_spans, 0) AS BIGINT) AS n_dup_spans,
-                 CAST(coalesce(a.dup_chars, 0) AS BIGINT) AS dup_chars,
-                 CASE WHEN length(d.s) = 0 THEN 0.0
-                      ELSE CAST(coalesce(a.dup_chars, 0) AS DOUBLE) / length(d.s)
-                 END AS dup_frac,
-                 coalesce(a.span_digest, md5('')) AS span_digest
-          FROM d LEFT JOIN agg a USING (doc_id)
-          ORDER BY d.doc_id""",
-
-    // Keyed map aggregation replayed relationally: per-(grp, key)
-    // aggregates re-collected into the engine's key-sorted entry digest.
-    // The measure is viewed at the engine's canonical DOUBLE width before
-    // the integerizing floor (the r08 width rule); per-key sums CAST from
-    // DuckDB's HUGEINT back to BIGINT digits.
-    "map_agg_events" -> mapAggOracleSql,
-    // the STATE form is DEFINED to land the one-shot result (partial map
-    // states per half, re-merged) — same oracle; a broken serialization or
-    // non-commutative merge diverges here
-    "map_agg_state_merge" -> mapAggOracleSql,
-
-    // Encoding repair replayed declaratively: the repair of the planted
-    // garble is, by construction (garble = the exact corruption inverse),
-    // the same replace-chain applied with the FIXED literals — both the
-    // single- and the double-encoded plant land on the identical text.
-    "fix_mojibake" -> fixMojibakeOracleSql,
-
-    // uniqUpTo == least(exact distinct, N+1) by definition; both regimes
-    // (capped sentinel / exact) plus the string lane replayed directly
-    "uniq_upto_events" ->
-      """SELECT event_type,
-                CAST(least(count(DISTINCT user_id % 7), 6) AS BIGINT) AS up_capped,
-                CAST(least(count(DISTINCT user_id % 4), 6) AS BIGINT) AS up_exact,
-                CAST(least(count(DISTINCT CAST(props AS JSON)), 13) AS BIGINT) AS up_props
-         FROM events GROUP BY 1 ORDER BY 1""",
-
-    // HTML extraction replayed declaratively: the plant is closed-form in
-    // (text, doc_id) — kept blocks are the two content halves, the
-    // borderline anchor block iff doc_id % 6 ≥ 3 (the 2·links ≤ words
-    // integer density test), the decoded entity gauntlet, and the two list
-    // items; dropped are title/h1/nav/footer (containers) and the 1-word
-    // block. chr(160) is the decoded &nbsp; (NOT whitespace — glues words).
-    "html_extract" ->
-      """WITH d AS (SELECT doc_id,
-                string_split(trim(regexp_replace(regexp_replace(lower(text),
-                  '[^a-z ]+', '', 'g'), ' +', ' ', 'g')), ' ') AS w
-              FROM documents),
-        c AS (SELECT doc_id, w, len(w) AS nw,
-                CAST(ceil(len(w) / 2.0) AS INT) AS half,
-                CAST(doc_id % 6 AS INT) AS wb
-              FROM d WHERE len(w) >= 4),
-        f AS (SELECT doc_id, wb,
-                array_to_string(list_slice(w, 1, half), ' ') || chr(10) ||
-                array_to_string(list_slice(w, half + 1, nw), ' ') ||
-                CASE WHEN wb >= 3 THEN chr(10) ||
-                  array_to_string(list_slice(w, 1, wb), ' ') ||
-                  ' click here now' ELSE '' END ||
-                chr(10) || 'a & b <c> "d"' || chr(160) || 'e &bogus; AB' ||
-                chr(10) || 'alpha beta' || chr(10) || 'gamma delta' AS ext
-              FROM c)
-        SELECT doc_id, md5(ext) AS extracted_md5,
-               CAST(5 + CASE WHEN wb >= 3 THEN 1 ELSE 0 END AS INT) AS n_blocks_kept,
-               CAST(5 + CASE WHEN wb >= 3 THEN 0 ELSE 1 END AS INT) AS n_blocks_dropped,
-               CAST(length(ext) AS BIGINT) AS n_chars_extracted
-        FROM f ORDER BY doc_id""",
-
-    // RefinedWeb-style per-domain cap + mixture: both rank stages replay the
-    // same multiplicative hash; the cap and the post-cap minority target are
-    // all-integer (// is DuckDB floordiv == positive Long division).
-    "domain_capped_sample" ->
-      s"""WITH lc AS (SELECT CAST(count(*) AS BIGINT) AS total,
-                             CAST(count(DISTINCT lang) AS BIGINT) AS nlang
-                      FROM documents),
-          cap AS (SELECT (6 * total) // (10 * nlang) + 1 AS cap FROM lc),
-          r1 AS (SELECT doc_id, lang, source,
-                        row_number() OVER (PARTITION BY lang
-                          ORDER BY (doc_id * ${Sampling.Knuth}) % 1000000007, doc_id) AS rn
-                 FROM documents),
-          capped AS (SELECT r1.doc_id, r1.lang, r1.source FROM r1, cap
-                     WHERE r1.rn <= cap.cap),
-          sc AS (SELECT source, count(*) AS n FROM capped GROUP BY source),
-          kmin AS (SELECT min(n) AS k FROM sc),
-          r2 AS (SELECT c.doc_id, c.lang, c.source,
-                        row_number() OVER (PARTITION BY source
-                          ORDER BY (doc_id * ${Sampling.Knuth}) % 1000000007, doc_id) AS rn
-                 FROM capped c),
-          kept AS (SELECT r2.doc_id, r2.lang, r2.source FROM r2, kmin
-                   WHERE r2.rn <= kmin.k)
-          SELECT source, lang, CAST(count(*) AS BIGINT) AS n_kept,
-                 md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)) AS ids_md5
-          FROM kept GROUP BY source, lang ORDER BY source, lang""",
-
-    // Registrable-domain cap: the oracle REGENERATES each planted URL's
-    // expected registrable domain from the doc_id arithmetic (never parses —
-    // the corruption-inverse discipline), then replays the cap/mixture
-    // hash ranks integer-for-integer like domain_capped_sample.
-    "url_domain_caps" ->
-      s"""WITH docs AS (SELECT doc_id, source,
-                 CASE WHEN doc_id % 13 = 0
-                      THEN '192.168.0.' || CAST(doc_id % 9 AS VARCHAR)
-                      ELSE 'site' || CAST(doc_id % 10 AS VARCHAR) || '.' ||
-                           CASE doc_id % 4 WHEN 0 THEN 'com' WHEN 1 THEN 'co.uk'
-                                WHEN 2 THEN 'github.io' ELSE 'org' END
-                 END AS domain
-               FROM documents),
-          dc AS (SELECT CAST(count(*) AS BIGINT) AS total,
-                        CAST(count(DISTINCT domain) AS BIGINT) AS ndom FROM docs),
-          cap AS (SELECT (6 * total) // (10 * ndom) + 1 AS cap FROM dc),
-          r1 AS (SELECT doc_id, domain, source,
-                        row_number() OVER (PARTITION BY domain
-                          ORDER BY (doc_id * ${Sampling.Knuth}) % 1000000007, doc_id) AS rn
-                 FROM docs),
-          capped AS (SELECT r1.doc_id, r1.domain, r1.source FROM r1, cap
-                     WHERE r1.rn <= cap.cap),
-          sc AS (SELECT source, count(*) AS n FROM capped GROUP BY source),
-          kmin AS (SELECT min(n) AS k FROM sc),
-          r2 AS (SELECT c.doc_id, c.domain,
-                        row_number() OVER (PARTITION BY source
-                          ORDER BY (doc_id * ${Sampling.Knuth}) % 1000000007, doc_id) AS rn
-                 FROM capped c),
-          kept AS (SELECT r2.doc_id, r2.domain FROM r2, kmin
-                   WHERE r2.rn <= kmin.k)
-          SELECT domain, CAST(count(*) AS BIGINT) AS n_kept,
-                 md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)) AS ids_md5
-          FROM kept GROUP BY domain ORDER BY domain""",
-
-    // sumMapFiltered family: the map_agg_events contract with the keep-list
-    // replayed as a key filter before aggregation. The engine groups the
-    // UNFILTERED base frame, so a cohort with no kept keys still emits a row
-    // (empty maps, n_keys=0) — the oracle LEFT JOINs from the full cohort
-    // list with md5('')-coalesced digests to match.
-    "map_agg_filtered" ->
-      """WITH e AS (SELECT user_id % 20 AS grp, event_type AS k,
-                           CAST(floor(CAST(value AS DOUBLE) * 1000) AS BIGINT) AS v
-                    FROM events WHERE event_type IN ('click', 'purchase')),
-         g AS (SELECT grp, k, count(*) AS cnt, min(v) AS mn, max(v) AS mx,
-                      CAST(sum(v) AS BIGINT) AS sm
-               FROM e GROUP BY 1, 2),
-         agg AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_keys,
-                md5(string_agg(k || '=' || cnt, ',' ORDER BY k)) AS count_map,
-                md5(string_agg(k || '=' || mn, ',' ORDER BY k)) AS min_map,
-                md5(string_agg(k || '=' || mx, ',' ORDER BY k)) AS max_map,
-                md5(string_agg(k || '=' || sm, ',' ORDER BY k)) AS sum_map
-         FROM g GROUP BY grp),
-         allg AS (SELECT DISTINCT user_id % 20 AS grp FROM events)
-         SELECT allg.grp, coalesce(agg.n_keys, 0) AS n_keys,
-                coalesce(agg.count_map, md5('')) AS count_map,
-                coalesce(agg.min_map, md5('')) AS min_map,
-                coalesce(agg.max_map, md5('')) AS max_map,
-                coalesce(agg.sum_map, md5('')) AS sum_map
-         FROM allg LEFT JOIN agg USING (grp) ORDER BY allg.grp""",
-
-    // exponentialMovingAverage / exponentialTimeDecayedSum: the engine's
-    // recurrences replayed step-for-step through a recursive CTE. Decay
-    // factors are exact powers of two (1.0 / (1<<Δdays), Δ clamped 62) and
-    // α=1/4 is an exact binary fraction, so every step is one correctly-
-    // rounded IEEE op in the identical tree — bit-equality, no libm.
-    "events_ema" ->
-      """WITH RECURSIVE e AS (
-           SELECT user_id, event_id, epoch_us(ts) // 86400000000 AS day,
-                  CAST(value AS DOUBLE) AS v,
-                  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-           FROM events),
-         r AS (
-           SELECT user_id, event_id, rn, day, v,
-                  v AS tds, CAST(1.0 AS DOUBLE) AS tdn, v AS ema
-           FROM e WHERE rn = 1
-           UNION ALL
-           SELECT e.user_id, e.event_id, e.rn, e.day, e.v,
-                  e.v + r.tds * (1.0 / CAST((CAST(1 AS BIGINT) << least(e.day - r.day, 62)) AS DOUBLE)),
-                  1.0 + r.tdn * (1.0 / CAST((CAST(1 AS BIGINT) << least(e.day - r.day, 62)) AS DOUBLE)),
-                  0.25 * e.v + 0.75 * r.ema
-           FROM r JOIN e ON e.user_id = r.user_id AND e.rn = r.rn + 1)
-         SELECT event_id, user_id, ema, tds, tds / tdn AS tdavg
-         FROM r ORDER BY event_id""",
-
-    // exponentialTimeDecayedMax/Count: the same recursive replay — greatest
-    // against the decayed running max (a positive constant factors out of
-    // max, so the recurrence IS the definition), tdn surfaced directly.
-    "events_decay_max" ->
-      """WITH RECURSIVE e AS (
-           SELECT user_id, event_id, epoch_us(ts) // 86400000000 AS day,
-                  CAST(value AS DOUBLE) AS v,
-                  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-           FROM events),
-         r AS (
-           SELECT user_id, event_id, rn, day, v,
-                  v AS tdmax, CAST(1.0 AS DOUBLE) AS tdn
-           FROM e WHERE rn = 1
-           UNION ALL
-           SELECT e.user_id, e.event_id, e.rn, e.day, e.v,
-                  greatest(e.v, r.tdmax * (1.0 / CAST((CAST(1 AS BIGINT) << least(e.day - r.day, 62)) AS DOUBLE))),
-                  1.0 + r.tdn * (1.0 / CAST((CAST(1 AS BIGINT) << least(e.day - r.day, 62)) AS DOUBLE))
-           FROM r JOIN e ON e.user_id = r.user_id AND e.rn = r.rn + 1)
-         SELECT event_id, user_id, tdmax, tdn AS tdcount
-         FROM r ORDER BY event_id""",
-
-    // Holt linear smoothing: the same recursive replay discipline — dyadic
-    // gains are exact binary fractions, every op correctly rounded in the
-    // identical tree (the level recurrence appears twice in the step, both
-    // times as the same expression → same bits).
-    "events_holt" ->
-      """WITH RECURSIVE e AS (
-           SELECT user_id, event_id,
-                  CAST(value AS DOUBLE) AS v,
-                  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-           FROM events),
-         r AS (
-           SELECT user_id, event_id, rn, v,
-                  v AS hl, CAST(0.0 AS DOUBLE) AS hb
-           FROM e WHERE rn = 1
-           UNION ALL
-           SELECT e.user_id, e.event_id, e.rn, e.v,
-                  0.25 * e.v + 0.75 * (r.hl + r.hb),
-                  0.125 * ((0.25 * e.v + 0.75 * (r.hl + r.hb)) - r.hl) + 0.875 * r.hb
-           FROM r JOIN e ON e.user_id = r.user_id AND e.rn = r.rn + 1)
-         SELECT event_id, user_id, hl AS holt_level, hb AS holt_trend,
-                hl + hb AS holt_forecast
-         FROM r ORDER BY event_id""",
-
-    // LTTB: the definitional replay — same integer bucket boundaries, same
-    // HUGEINT cross-product areas (the engine's DECIMAL(38,0) and HUGEINT
-    // agree on every exact integer), min((−area, i)) tie rule both sides.
-    "events_lttb" -> lttbOracleSql,
-
-    // groupArrayMovingSum(7): the moving-avg frame, decimal sum through the
-    // digit string, no divide — float-free end to end.
-    "events_moving_sum" ->
-      """SELECT event_id, user_id,
-                count(*) OVER w AS n_window,
-                CAST(CAST(sum(CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2)))
-                            OVER w AS VARCHAR) AS DOUBLE) AS msum
-         FROM events
-         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                      ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-         ORDER BY event_id""",
-
-    // Count-Min: the est_ok-gate discipline for approximate operators —
-    // the oracle reproduces the exact probe counts and asserts the gate
-    // literally TRUE; the engine's gate checks never-undercount + the
-    // 6N/width envelope (regen-flip probability ~1e-4 per probe; a broken
-    // sketch overshoots by orders of magnitude), so it hash-mismatches.
-    "cms_user_counts" ->
-      """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events, TRUE AS est_ok
-         FROM events WHERE user_id % 11 = 0
-         GROUP BY user_id ORDER BY user_id""",
-
-    // MAD: both exact discrete medians replayed as the same value-domain
-    // cumulative picks; decimal arithmetic end-to-end, digit-string casts
-    // at the boundary.
-    "mad_value" ->
-      """WITH dv AS (SELECT event_type,
-                CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2)) AS v
-              FROM events WHERE value IS NOT NULL),
-         g AS (SELECT event_type, v, count(*) AS c FROM dv GROUP BY 1, 2),
-         m AS (SELECT event_type, max(n) AS n,
-                      min(CASE WHEN cum >= (n + 1) // 2 THEN v END) AS med
-               FROM (SELECT event_type, v, c,
-                            sum(c) OVER (PARTITION BY event_type ORDER BY v) AS cum,
-                            sum(c) OVER (PARTITION BY event_type) AS n
-                     FROM g) t
-               GROUP BY event_type),
-         dgrp AS (SELECT g.event_type, abs(g.v - m.med) AS dev, sum(g.c) AS c
-                  FROM g JOIN m USING (event_type) GROUP BY 1, 2),
-         md AS (SELECT event_type,
-                       min(CASE WHEN cum >= (n + 1) // 2 THEN dev END) AS mad
-                FROM (SELECT event_type, dev, c,
-                             sum(c) OVER (PARTITION BY event_type ORDER BY dev) AS cum,
-                             sum(c) OVER (PARTITION BY event_type) AS n
-                      FROM dgrp) t
-                GROUP BY event_type)
-         SELECT m.event_type, CAST(m.n AS BIGINT) AS n,
-                CAST(CAST(m.med AS VARCHAR) AS DOUBLE) AS median,
-                CAST(CAST(md.mad AS VARCHAR) AS DOUBLE) AS mad
-         FROM m JOIN md USING (event_type) ORDER BY event_type""",
-
-    // One-way ANOVA: decimal-exact group/grand sums through the digit
-    // string; the one cross-group float reduction (Σ (Σv_i)²/n_i) replays
-    // as the same pinned event_type-ordered fold (list_reduce), then the
-    // identical IEEE F tree.
-    "anova_value" ->
-      """WITH dv AS (SELECT event_type,
-                CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2)) AS d
-              FROM events),
-         g AS (SELECT event_type, count(*) AS n,
-                      sum(d) AS s1d, sum(d * d) AS s2d
-               FROM dv GROUP BY event_type),
-         t AS (SELECT event_type, n, s1d, s2d,
-                      CAST(CAST(s1d AS VARCHAR) AS DOUBLE)
-                        * CAST(CAST(s1d AS VARCHAR) AS DOUBLE)
-                        / CAST(n AS DOUBLE) AS tg
-               FROM g),
-         f AS (SELECT CAST(count(*) AS BIGINT) AS k,
-                      CAST(sum(n) AS BIGINT) AS n_total,
-                      CAST(CAST(sum(s1d) AS VARCHAR) AS DOUBLE) AS sg,
-                      CAST(CAST(sum(s2d) AS VARCHAR) AS DOUBLE) AS sqg,
-                      list_reduce(list(tg ORDER BY event_type), (a, b) -> a + b) AS tsum
-               FROM t)
-         SELECT k, n_total,
-                tsum - sg * sg / CAST(n_total AS DOUBLE) AS ss_between,
-                sqg - tsum AS ss_within,
-                ((tsum - sg * sg / CAST(n_total AS DOUBLE)) / CAST(k - 1 AS DOUBLE))
-                  / ((sqg - tsum) / CAST(n_total - k AS DOUBLE)) AS f_stat
-         FROM f""",
-
-    // Welch/Student two-sample t-tests: decimal-exact cohort sums (squares
-    // of 2-decimal values are exact 4-decimal decimals), then the IDENTICAL
-    // pinned IEEE expression tree as the engine — every op correctly
-    // rounded, so t and df match bit-for-bit (the corr_value_hour pattern).
-    "ab_ttest_value" ->
-      """WITH dv AS (
-           SELECT event_type, (user_id % 2 = 0) AS a,
-                  CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2)) AS d
-           FROM events),
-         s AS (
-           SELECT event_type,
-                  count(CASE WHEN a THEN 1 END) AS n_a,
-                  count(CASE WHEN NOT a THEN 1 END) AS n_b,
-                  CAST(CAST(sum(CASE WHEN a THEN d END) AS VARCHAR) AS DOUBLE) AS sa,
-                  CAST(CAST(sum(CASE WHEN a THEN d * d END) AS VARCHAR) AS DOUBLE) AS saa,
-                  CAST(CAST(sum(CASE WHEN NOT a THEN d END) AS VARCHAR) AS DOUBLE) AS sb,
-                  CAST(CAST(sum(CASE WHEN NOT a THEN d * d END) AS VARCHAR) AS DOUBLE) AS sbb
-           FROM dv GROUP BY event_type),
-         m AS (
-           SELECT event_type, n_a, n_b, sa, sb, saa, sbb,
-                  CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb,
-                  sa / CAST(n_a AS DOUBLE) AS ma, sb / CAST(n_b AS DOUBLE) AS mb
-           FROM s),
-         v AS (
-           SELECT event_type, n_a, n_b, na, nb, ma, mb,
-                  (saa - sa * ma) / (na - 1.0) AS va,
-                  (sbb - sb * mb) / (nb - 1.0) AS vb
-           FROM m),
-         w AS (
-           SELECT event_type, n_a, n_b, na, nb, ma, mb, va, vb,
-                  va / na AS sea, vb / nb AS seb,
-                  (va / na) + (vb / nb) AS se2
-           FROM v)
-         SELECT event_type, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-                ma AS mean_a, mb AS mean_b,
-                (ma - mb) / sqrt(se2) AS t_welch,
-                (se2 * se2) / (((sea * sea) / (na - 1.0)) + ((seb * seb) / (nb - 1.0))) AS df_welch,
-                (ma - mb) / sqrt(((((na - 1.0) * va) + ((nb - 1.0) * vb)) / ((na + nb) - 2.0))
-                                 * ((1.0 / na) + (1.0 / nb))) AS t_student
-         FROM w ORDER BY event_type""",
-
-    // Chi-squared cohort-uniformity: integer cells/margins pivoted to
-    // columns; the statistic is the engine's pinned per-row tree verbatim —
-    // no cross-row float summation exists on either side.
-    "chi2_cohort" ->
-      """WITH ev AS (SELECT event_type, user_id % 3 AS c FROM events),
-         cells AS (SELECT event_type,
-                          count(CASE WHEN c = 0 THEN 1 END) AS n0,
-                          count(CASE WHEN c = 1 THEN 1 END) AS n1,
-                          count(CASE WHEN c = 2 THEN 1 END) AS n2
-                   FROM ev GROUP BY event_type),
-         m AS (SELECT count(CASE WHEN c = 0 THEN 1 END) AS m0,
-                      count(CASE WHEN c = 1 THEN 1 END) AS m1,
-                      count(CASE WHEN c = 2 THEN 1 END) AS m2,
-                      count(*) AS mt FROM ev),
-         j AS (SELECT cells.event_type, cells.n0, cells.n1, cells.n2,
-                      CAST(cells.n0 + cells.n1 + cells.n2 AS DOUBLE) AS rn,
-                      m.m0, m.m1, m.m2, m.mt
-               FROM cells, m),
-         e AS (SELECT event_type, n0, n1, n2, rn,
-                      rn * (CAST(m0 AS DOUBLE) / CAST(mt AS DOUBLE)) AS e0,
-                      rn * (CAST(m1 AS DOUBLE) / CAST(mt AS DOUBLE)) AS e1,
-                      rn * (CAST(m2 AS DOUBLE) / CAST(mt AS DOUBLE)) AS e2
-               FROM j),
-         t AS (SELECT event_type, n0, n1, n2,
-                      ((CAST(n0 AS DOUBLE) - e0) * (CAST(n0 AS DOUBLE) - e0) / e0
-                       + (CAST(n1 AS DOUBLE) - e1) * (CAST(n1 AS DOUBLE) - e1) / e1)
-                       + (CAST(n2 AS DOUBLE) - e2) * (CAST(n2 AS DOUBLE) - e2) / e2 AS chi2
-               FROM e)
-         SELECT event_type, CAST(n0 AS BIGINT) AS n0, CAST(n1 AS BIGINT) AS n1,
-                CAST(n2 AS BIGINT) AS n2, chi2, chi2 > 5.991 AS nonuniform
-         FROM t ORDER BY event_type""",
-
-    // Cramér's V / bias-corrected V / contingency coefficient: per-row χ²
-    // terms are chi2_cohort's tree; the global χ² is the SAME left fold
-    // (list_reduce over the event_type-ordered list vs the engine's
-    // 0.0-seeded fold — equal because 0.0 + x ≡ x for x ≥ 0); the V/C
-    // trees mirror the engine op-for-op over exact integer n and r.
-    "cramers_v_cohort" ->
-      """WITH ev AS (SELECT event_type, user_id % 3 AS c FROM events),
-         cells AS (SELECT event_type,
-                          count(CASE WHEN c = 0 THEN 1 END) AS n0,
-                          count(CASE WHEN c = 1 THEN 1 END) AS n1,
-                          count(CASE WHEN c = 2 THEN 1 END) AS n2
-                   FROM ev GROUP BY event_type),
-         m AS (SELECT count(CASE WHEN c = 0 THEN 1 END) AS m0,
-                      count(CASE WHEN c = 1 THEN 1 END) AS m1,
-                      count(CASE WHEN c = 2 THEN 1 END) AS m2,
-                      count(*) AS mt FROM ev),
-         j AS (SELECT cells.event_type,
-                      CAST(cells.n0 + cells.n1 + cells.n2 AS DOUBLE) AS rn,
-                      cells.n0, cells.n1, cells.n2, m.m0, m.m1, m.m2, m.mt
-               FROM cells, m),
-         tr AS (SELECT event_type,
-                       ((CAST(n0 AS DOUBLE) - rn * (CAST(m0 AS DOUBLE) / CAST(mt AS DOUBLE)))
-                        * (CAST(n0 AS DOUBLE) - rn * (CAST(m0 AS DOUBLE) / CAST(mt AS DOUBLE)))
-                        / (rn * (CAST(m0 AS DOUBLE) / CAST(mt AS DOUBLE)))
-                        + (CAST(n1 AS DOUBLE) - rn * (CAST(m1 AS DOUBLE) / CAST(mt AS DOUBLE)))
-                        * (CAST(n1 AS DOUBLE) - rn * (CAST(m1 AS DOUBLE) / CAST(mt AS DOUBLE)))
-                        / (rn * (CAST(m1 AS DOUBLE) / CAST(mt AS DOUBLE))))
-                        + (CAST(n2 AS DOUBLE) - rn * (CAST(m2 AS DOUBLE) / CAST(mt AS DOUBLE)))
-                        * (CAST(n2 AS DOUBLE) - rn * (CAST(m2 AS DOUBLE) / CAST(mt AS DOUBLE)))
-                        / (rn * (CAST(m2 AS DOUBLE) / CAST(mt AS DOUBLE))) AS chi2r,
-                       mt
-                FROM j),
-         g AS (SELECT list_reduce(list(chi2r ORDER BY event_type), (a, b) -> a + b) AS chi2,
-                      CAST(count(*) AS BIGINT) AS r,
-                      CAST(max(mt) AS BIGINT) AS n
-               FROM tr)
-         SELECT n, r, chi2,
-                sqrt(chi2 / (CAST(n AS DOUBLE) * CAST(least(r - 1, 2) AS DOUBLE))) AS cramers_v,
-                sqrt(greatest(0.0, chi2 / CAST(n AS DOUBLE)
-                                   - (CAST(r AS DOUBLE) - 1.0) * 2.0 / (CAST(n AS DOUBLE) - 1.0))
-                     / least((CAST(r AS DOUBLE)
-                              - (CAST(r AS DOUBLE) - 1.0) * (CAST(r AS DOUBLE) - 1.0)
-                                / (CAST(n AS DOUBLE) - 1.0)) - 1.0,
-                             (3.0 - 4.0 / (CAST(n AS DOUBLE) - 1.0)) - 1.0)) AS cramers_v_corrected,
-                sqrt(chi2 / (chi2 + CAST(n AS DOUBLE))) AS contingency_coef
-         FROM g""",
-
-    // Mann-Whitney U: doubled midranks (2·rank + peers − 1) keep ties
-    // integer-exact; 2R_A, 2U_A and Σ(t³−t) are exact BIGINTs, and the
-    // normal approximation is the engine's pinned tree verbatim.
-    "mannwhitney_value" ->
-      """WITH ev AS (SELECT event_type, (user_id % 2 = 0) AS a,
-                            CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2)) AS d
-                     FROM events),
-         r AS (SELECT event_type, a,
-                      rank() OVER (PARTITION BY event_type ORDER BY d) * 2
-                        + count(*) OVER (PARTITION BY event_type ORDER BY d
-                            RANGE BETWEEN CURRENT ROW AND CURRENT ROW) - 1 AS mr2
-               FROM ev),
-         s AS (SELECT event_type,
-                      count(CASE WHEN a THEN 1 END) AS n_a,
-                      count(CASE WHEN NOT a THEN 1 END) AS n_b,
-                      CAST(sum(CASE WHEN a THEN mr2 END) AS BIGINT) AS r2a
-               FROM r GROUP BY 1),
-         tt AS (SELECT event_type, CAST(sum(t * t * t - t) AS BIGINT) AS tie3
-                FROM (SELECT event_type, d, count(*) AS t FROM ev GROUP BY 1, 2) g
-                GROUP BY 1),
-         j AS (SELECT s.event_type, s.n_a, s.n_b, s.r2a, tt.tie3,
-                      CAST(s.n_a AS DOUBLE) AS na, CAST(s.n_b AS DOUBLE) AS nb
-               FROM s JOIN tt USING (event_type)),
-         f AS (SELECT event_type, n_a, n_b, r2a, tie3, na, nb, na + nb AS nn,
-                      (CAST(r2a AS DOUBLE) - na * (na + 1.0)) / 2.0 AS ua,
-                      (na * nb) / 2.0 AS mu
-               FROM j),
-         z AS (SELECT event_type, n_a, n_b, r2a, tie3,
-                      (ua - mu)
-                        / sqrt(((na * nb) / 12.0)
-                               * ((nn + 1.0) - (CAST(tie3 AS DOUBLE) / (nn * (nn - 1.0))))) AS z
-               FROM f)
-         SELECT event_type, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-                CAST(r2a - n_a * (n_a + 1) AS BIGINT) AS u2_a, tie3,
-                z, abs(z) > 1.96 AS significant
-         FROM z ORDER BY event_type""",
-
-    // Spearman: doubled midranks on the value-domain marginal frames, all
-    // five moments HUGEINT-exact, the closing rho through digit-string
-    // doubles — mirror of the engine's pinned tree term for term.
-    "spearman_value_hour" ->
-      """WITH ev AS (SELECT event_type,
-                            CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2)) AS d,
-                            CAST(hour(ts) AS BIGINT) AS h
-                     FROM events),
-         g AS (SELECT event_type, d, h, count(*) AS cnt FROM ev GROUP BY 1, 2, 3),
-         vr AS (SELECT event_type, d,
-                       2 * coalesce(sum(vc) OVER (PARTITION BY event_type ORDER BY d
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                         + vc + 1 AS rx2
-                FROM (SELECT event_type, d, sum(cnt) AS vc FROM g GROUP BY 1, 2)),
-         hr AS (SELECT event_type, h,
-                       2 * coalesce(sum(hc) OVER (PARTITION BY event_type ORDER BY h
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                         + hc + 1 AS ry2
-                FROM (SELECT event_type, h, sum(cnt) AS hc FROM g GROUP BY 1, 2)),
-         m AS (SELECT g.event_type, CAST(sum(cnt) AS BIGINT) AS n,
-                      sum(CAST(cnt AS HUGEINT) * rx2) AS sx,
-                      sum(CAST(cnt AS HUGEINT) * ry2) AS sy,
-                      sum(CAST(cnt AS HUGEINT) * (CAST(rx2 AS HUGEINT) * ry2)) AS sxy,
-                      sum(CAST(cnt AS HUGEINT) * (CAST(rx2 AS HUGEINT) * rx2)) AS sxx,
-                      sum(CAST(cnt AS HUGEINT) * (CAST(ry2 AS HUGEINT) * ry2)) AS syy
-               FROM g JOIN vr USING (event_type, d) JOIN hr USING (event_type, h)
-               GROUP BY 1)
-         SELECT event_type, n,
-                (CAST(n AS DOUBLE) * CAST(CAST(sxy AS VARCHAR) AS DOUBLE)
-                   - CAST(CAST(sx AS VARCHAR) AS DOUBLE) * CAST(CAST(sy AS VARCHAR) AS DOUBLE))
-                / (sqrt(CAST(n AS DOUBLE) * CAST(CAST(sxx AS VARCHAR) AS DOUBLE)
-                        - CAST(CAST(sx AS VARCHAR) AS DOUBLE) * CAST(CAST(sx AS VARCHAR) AS DOUBLE))
-                   * sqrt(CAST(n AS DOUBLE) * CAST(CAST(syy AS VARCHAR) AS DOUBLE)
-                          - CAST(CAST(sy AS VARCHAR) AS DOUBLE) * CAST(CAST(sy AS VARCHAR) AS DOUBLE))) AS rank_corr
-         FROM m ORDER BY event_type""",
-
-    // Theil's U: exact contingency counts, three pinned-order entropy
-    // folds (list_reduce; non-negative terms so the seeds agree), every
-    // ln-bearing output rounded to 9 decimals on both sides.
-    "theils_u_cohort" ->
-      """WITH ev AS (SELECT event_type, user_id % 3 AS c FROM events),
-         cells AS (SELECT event_type, c, count(*) AS n FROM ev GROUP BY 1, 2),
-         tot AS (SELECT CAST(sum(n) AS BIGINT) AS nt FROM cells),
-         hx AS (SELECT list_reduce(list(
-                         (CAST(rn AS DOUBLE) / CAST(nt AS DOUBLE))
-                           * ln(CAST(nt AS DOUBLE) / CAST(rn AS DOUBLE))
-                         ORDER BY event_type), (a, b) -> a + b) AS h_x
-                FROM (SELECT event_type, sum(n) AS rn FROM cells GROUP BY 1), tot),
-         hy AS (SELECT list_reduce(list(
-                         (CAST(cn AS DOUBLE) / CAST(nt AS DOUBLE))
-                           * ln(CAST(nt AS DOUBLE) / CAST(cn AS DOUBLE))
-                         ORDER BY c), (a, b) -> a + b) AS h_y
-                FROM (SELECT c, sum(n) AS cn FROM cells GROUP BY 1), tot),
-         hxy AS (SELECT list_reduce(list(
-                          (CAST(n AS DOUBLE) / CAST(nt AS DOUBLE))
-                            * ln(CAST(nt AS DOUBLE) / CAST(n AS DOUBLE))
-                          ORDER BY event_type, c), (a, b) -> a + b) AS h_xy
-                 FROM cells, tot)
-         SELECT tot.nt AS n_total,
-                round(h_x, 9) AS h_x, round(h_y, 9) AS h_y,
-                round(h_xy, 9) AS h_xy,
-                round((h_x + h_y - h_xy) / h_x, 9) AS u_x_given_y,
-                round((h_x + h_y - h_xy) / h_y, 9) AS u_y_given_x
-         FROM hx, hy, hxy, tot""",
-
-    // Interval sweep (maxIntersections / position / intervalLengthSum):
-    // the oracle runs the single-window form of the same sweep — gap
-    // sessionization with the engine's exact (ts, event_id) tie order,
-    // half-open [s, e+1µs) episodes, boundary deltas collapsed per
-    // instant, one running sum per type. All epoch-micros integers; the
-    // engine's midnight-split span sum telescopes to the same total.
-    "interval_concurrency" ->
-      """WITH s0 AS (
-           SELECT user_id, event_type, epoch_us(ts) AS tu, event_id,
-                  CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                         OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                       THEN 1 ELSE 0 END AS st
-           FROM events
-           WINDOW w AS (PARTITION BY user_id, event_type
-                        ORDER BY epoch_us(ts), event_id)),
-         s1 AS (SELECT user_id, event_type, tu,
-                       SUM(st) OVER (PARTITION BY user_id, event_type
-                                     ORDER BY tu, event_id
-                                     ROWS BETWEEN UNBOUNDED PRECEDING
-                                       AND CURRENT ROW) AS sid
-                FROM s0),
-         sess AS (SELECT user_id, event_type, sid,
-                         MIN(tu) AS s, MAX(tu) + 1 AS e
-                  FROM s1 GROUP BY 1, 2, 3),
-         b AS (SELECT event_type, s AS t, 1 AS d FROM sess
-               UNION ALL
-               SELECT event_type, e AS t, -1 AS d FROM sess),
-         tb AS (SELECT event_type, t, SUM(d) AS d FROM b GROUP BY 1, 2),
-         sw AS (SELECT event_type, t,
-                       SUM(d) OVER (PARTITION BY event_type ORDER BY t
-                                    ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND CURRENT ROW) AS run,
-                       lead(t) OVER (PARTITION BY event_type ORDER BY t) AS nt
-                FROM tb),
-         mx AS (SELECT event_type, MAX(run) AS peak FROM sw GROUP BY 1),
-         res AS (SELECT sw.event_type,
-                        CAST(SUM(CASE WHEN run > 0 AND nt IS NOT NULL
-                                      THEN nt - t ELSE 0 END) AS BIGINT) AS covered_us,
-                        CAST(MIN(CASE WHEN run = peak THEN t END) AS BIGINT) AS peak_t_us,
-                        CAST(MAX(run) AS BIGINT) AS peak_concurrency
-                 FROM sw JOIN mx ON sw.event_type = mx.event_type
-                 GROUP BY 1),
-         ns AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_sessions
-                FROM sess GROUP BY 1)
-         SELECT ns.event_type, ns.n_sessions, res.peak_concurrency,
-                res.peak_t_us, res.covered_us
-         FROM ns JOIN res ON ns.event_type = res.event_type
-         ORDER BY ns.event_type""",
-
-    // Shannon entropy: integer tie/count-domain inputs, the one float
-    // log-sum folded in pinned ascending-c order (list_reduce; seeds agree
-    // because the terms are non-negative), entropy rounded to 9 decimals
-    // on both sides (libm log2 is not cross-engine correctly rounded).
-    "entropy_value" ->
-      """WITH ev AS (SELECT event_type,
-                            CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2)) AS d
-                     FROM events),
-         ties AS (SELECT event_type, d, count(*) AS c FROM ev GROUP BY 1, 2),
-         bc AS (SELECT event_type, c, count(*) AS m FROM ties GROUP BY 1, 2),
-         g AS (SELECT event_type,
-                      CAST(sum(c * m) AS BIGINT) AS n,
-                      CAST(sum(m) AS BIGINT) AS n_distinct,
-                      list_reduce(list(CAST(m AS DOUBLE) * CAST(c AS DOUBLE) * log2(c)
-                                       ORDER BY c),
-                                  (a, b) -> a + b) AS clog
-               FROM bc GROUP BY 1)
-         SELECT event_type, n, n_distinct,
-                round(log2(CAST(n AS DOUBLE)) - clog / CAST(n AS DOUBLE), 9) AS entropy_bits
-         FROM g ORDER BY event_type""",
-
-    // Chunk-level cross-doc dedup: the doc_chunks stream reproduced, md5
-    // digests grouped, the ≥2-distinct-docs rule replayed. string_agg over
-    // an all-dup doc is NULL → coalesce('') (the documented DuckDB trap).
-    "chunk_dedup" ->
-      """WITH d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS toks
-                    FROM documents WHERE len(regexp_extract_all(text, '\S+')) > 0),
-         c AS (SELECT doc_id, CAST(s.start / 48 AS INT) AS chunk_idx,
-                      md5(array_to_string(list_slice(toks, s.start + 1, s.start + 64), ' ')) AS dg
-               FROM d, LATERAL (SELECT unnest(range(0, len(toks), 48)) AS start) s),
-         dup AS (SELECT dg FROM (SELECT dg, count(DISTINCT doc_id) AS nd
-                                 FROM c GROUP BY dg) x WHERE nd >= 2),
-         j AS (SELECT c.doc_id, c.chunk_idx, (dup.dg IS NOT NULL) AS isdup
-               FROM c LEFT JOIN dup USING (dg)),
-         agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-                        CAST(count(CASE WHEN isdup THEN 1 END) AS BIGINT) AS n_dup_chunks,
-                        md5(coalesce(string_agg(CASE WHEN NOT isdup
-                              THEN CAST(chunk_idx AS VARCHAR) END, ',' ORDER BY chunk_idx),
-                            '')) AS kept_md5
-                 FROM j GROUP BY doc_id)
-         SELECT doc.doc_id, COALESCE(agg.n_chunks, 0) AS n_chunks,
-                COALESCE(agg.n_dup_chunks, 0) AS n_dup_chunks,
-                COALESCE(agg.kept_md5, md5('')) AS kept_md5
-         FROM documents doc LEFT JOIN agg USING (doc_id) ORDER BY doc.doc_id""",
-
-    // simpleLinearRegression: the corr frame's exact sums, closed-form
-    // solve as the engine's pinned tree verbatim.
-    "linreg_value_hour" ->
-      """WITH dv AS (
-           SELECT event_type,
-                  CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2)) AS y,
-                  CAST(hour(ts) AS BIGINT) AS x
-           FROM events),
-         s AS (
-           SELECT event_type, count(*) AS n,
-                  CAST(CAST(sum(x) AS BIGINT) AS DOUBLE) AS sx,
-                  CAST(CAST(sum(y) AS VARCHAR) AS DOUBLE) AS sy,
-                  CAST(CAST(sum(x * x) AS BIGINT) AS DOUBLE) AS sxx,
-                  CAST(CAST(sum(y * CAST(x AS DECIMAL(4,0))) AS VARCHAR) AS DOUBLE) AS sxy
-           FROM dv GROUP BY event_type),
-         k AS (
-           SELECT event_type, n, sx, sy,
-                  ((CAST(n AS DOUBLE) * sxy) - (sx * sy))
-                    / ((CAST(n AS DOUBLE) * sxx) - (sx * sx)) AS slope
-           FROM s)
-         SELECT event_type, n, slope,
-                (sy - (slope * sx)) / CAST(n AS DOUBLE) AS intercept
-         FROM k ORDER BY event_type""",
-
-    // Incremental chunk dedup: the reproduced chunk stream split 80/20;
-    // a batch digest is dup if it exists in the historical slice OR in ≥2
-    // distinct batch docs.
-    "incremental_chunk_dedup" ->
-      """WITH d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS toks
-                    FROM documents WHERE len(regexp_extract_all(text, '\S+')) > 0),
-         c AS (SELECT doc_id, CAST(s.start / 48 AS INT) AS chunk_idx,
-                      md5(array_to_string(list_slice(toks, s.start + 1, s.start + 64), ' ')) AS dg
-               FROM d, LATERAL (SELECT unnest(range(0, len(toks), 48)) AS start) s),
-         hist AS (SELECT DISTINCT dg FROM c WHERE doc_id % 5 <> 0),
-         b AS (SELECT doc_id, chunk_idx, dg FROM c WHERE doc_id % 5 = 0),
-         dupb AS (SELECT dg FROM (SELECT dg, count(DISTINCT doc_id) AS nd
-                                  FROM b GROUP BY dg) x WHERE nd >= 2),
-         dup AS (SELECT dg FROM hist WHERE dg IN (SELECT dg FROM b)
-                 UNION SELECT dg FROM dupb),
-         j AS (SELECT b.doc_id, b.chunk_idx, (dup.dg IS NOT NULL) AS isdup
-               FROM b LEFT JOIN dup USING (dg)),
-         agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-                        CAST(count(CASE WHEN isdup THEN 1 END) AS BIGINT) AS n_dup_chunks,
-                        md5(coalesce(string_agg(CASE WHEN NOT isdup
-                              THEN CAST(chunk_idx AS VARCHAR) END, ',' ORDER BY chunk_idx),
-                            '')) AS kept_md5
-                 FROM j GROUP BY doc_id)
-         SELECT doc.doc_id, COALESCE(agg.n_chunks, 0) AS n_chunks,
-                COALESCE(agg.n_dup_chunks, 0) AS n_dup_chunks,
-                COALESCE(agg.kept_md5, md5('')) AS kept_md5
-         FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) doc
-         LEFT JOIN agg USING (doc_id) ORDER BY doc.doc_id""",
-
-    // Kolmogorov-Smirnov: integer sup-distance numerator over the tie-group
-    // cumulative counts; only the final divide and the critical-value tree
-    // are float, mirrored verbatim.
-    "ks_test_value" ->
-      """WITH ev AS (SELECT event_type, (user_id % 2 = 0) AS a,
-                            CAST(CAST(CAST(value AS DOUBLE) AS VARCHAR) AS DECIMAL(12,2)) AS d
-                     FROM events),
-         g AS (SELECT event_type, d, count(*) AS cnt,
-                      count(CASE WHEN a THEN 1 END) AS cnt_a
-               FROM ev GROUP BY 1, 2),
-         c AS (SELECT event_type,
-                      sum(cnt_a) OVER (PARTITION BY event_type ORDER BY d
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
-                      sum(cnt) OVER (PARTITION BY event_type ORDER BY d
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ct,
-                      sum(cnt_a) OVER (PARTITION BY event_type) AS na,
-                      sum(cnt) OVER (PARTITION BY event_type) AS nt
-               FROM g),
-         s AS (SELECT event_type, na, nt - na AS nb,
-                      abs(ca * (nt - na) - (ct - ca) * na) AS dn
-               FROM c),
-         m AS (SELECT event_type, CAST(max(dn) AS BIGINT) AS d_num,
-                      CAST(min(na) AS BIGINT) AS n_a, CAST(min(nb) AS BIGINT) AS n_b
-               FROM s GROUP BY 1)
-         SELECT event_type, n_a, n_b, d_num,
-                CAST(d_num AS DOUBLE) / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)) AS d_stat,
-                CAST(d_num AS DOUBLE) / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE))
-                  > 1.358 * sqrt((CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE))
-                                 / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)))
-                  AS reject_same_dist
-         FROM m ORDER BY event_type""",
   )
-
-  /** Shared by `map_agg_events` and its persisted-state twin
-    * `map_agg_state_merge` (merge-of-partials == one-shot by contract). */
-  private val mapAggOracleSql: String =
-    """WITH e AS (SELECT user_id % 20 AS grp, event_type AS k,
-                         CAST(floor(CAST(value AS DOUBLE) * 1000) AS BIGINT) AS v
-                  FROM events),
-       g AS (SELECT grp, k, count(*) AS cnt, min(v) AS mn, max(v) AS mx,
-                    CAST(sum(v) AS BIGINT) AS sm
-             FROM e GROUP BY 1, 2)
-       SELECT grp, CAST(count(*) AS BIGINT) AS n_keys,
-              md5(string_agg(k || '=' || cnt, ',' ORDER BY k)) AS count_map,
-              md5(string_agg(k || '=' || mn, ',' ORDER BY k)) AS min_map,
-              md5(string_agg(k || '=' || mx, ',' ORDER BY k)) AS max_map,
-              md5(string_agg(k || '=' || sm, ',' ORDER BY k)) AS sum_map
-       FROM g GROUP BY grp ORDER BY grp"""
-
-  /** Generated from [[MojibakePats]] so the oracle's fixed literals can
-    * never drift from the engine's plant. */
-  private def fixMojibakeOracleSql: String = {
-    val chain = MojibakePats.foldLeft("text") { case (acc, (src, fixedForm)) =>
-      s"replace($acc, '$src', '$fixedForm')"
-    }
-    s"""WITH a AS (SELECT doc_id, text, $chain AS fixed FROM documents
-                   WHERE length(text) = strlen(text))
-        SELECT doc_id, CAST(length(fixed) AS BIGINT) AS n_chars,
-               (fixed <> text) AS was_garbled,
-               md5(fixed) AS fixed1_md5, md5(fixed) AS fixed2_md5
-        FROM a ORDER BY doc_id"""
+  locally {
+    val dups = registry.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(dups.isEmpty, s"query names registered twice: ${dups.mkString(", ")}")
   }
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    ListMap(registry.map(d => d.name -> d.run): _*)
+
+  /** Every query's DuckDB oracle. A def: the data-dependent oracles embed
+    * constants their query learned, so they are re-read on every call —
+    * Verify runs every query before it dumps this. */
+  def oracleSql: Map[String, String] = registry.map(d => d.name -> d.oracle()).toMap
 }

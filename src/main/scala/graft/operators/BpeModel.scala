@@ -25,7 +25,7 @@ import graft.functions.TextAnalysis
   *    `replace()` over the separator-wrapped symbol encoding
   *    (`·s1··s2··s3·`), which is how the DuckDB oracle replays the learned
   *    merges as literal nested `replace()` calls (see [[oracleTokenSql]];
-  *    same embedded-constants technique as `SparkEntry.srpOracleSql`).
+  *    same embedded-constants technique as `AnnQueries.srpOracleSql`).
   */
 object BpeModel {
 

@@ -132,7 +132,7 @@ object CorpusModel {
 
   /** The pre-limit BM25 score frame — one row per document matching ≥1
     * query term, with (score, n_hits, tf_total, dl). Exposed so rank-fusion
-    * operators ([[SparkEntry]]'s `hybrid_rrf_search`) can derive SEVERAL
+    * operators (`TextQueries`' `hybrid_rrf_search`) can derive SEVERAL
     * rankings (BM25, raw term-frequency) from the one tf pass instead of
     * re-tokenizing per ranker. */
   def bm25Scores(docs: DataFrame, queryTerms: Seq[String],

@@ -177,7 +177,7 @@ object Similarity {
     * #cells × dim doubles — the same driver-resident scale as a production
     * IVF index's coarse quantizer. Public because it is an INGEST-TIME
     * artifact: callers that probe a persisted layout repeatedly build this
-    * once (SparkEntry.warmIngestArtifacts) and pass it to
+    * once (AnnQueries.warmIngestArtifacts) and pass it to
     * [[ivfTopKFromLayout]] instead of re-scanning the corpus per probe. */
   def ivfCentroidTable(corpus: DataFrame, cellCol: String = "label",
                        vecCol: String = "embedding"): DataFrame = {

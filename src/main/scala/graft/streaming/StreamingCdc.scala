@@ -46,7 +46,7 @@ object StreamingCdc {
 
   /** Precondition: the base table at `path` EXISTS before the stream starts
     * (the CDC landing target is an ingest-time artifact — see
-    * `SparkEntry.cdcBaseTree`). `mergeApply` reads the table's schema before
+    * `SegmentQueries.cdcBaseTree`). `mergeApply` reads the table's schema before
     * its empty-batch short-circuit, so an empty FIRST micro-batch against a
     * never-created target throws PATH_NOT_FOUND; create the target (even
     * empty, with its schema) before wiring the stream. */

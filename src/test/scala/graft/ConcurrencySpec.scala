@@ -48,6 +48,12 @@ class ConcurrencySpec extends SparkSpec {
     assert(failed == Map("boom" -> "IllegalStateException: injected"))
   }
 
+  test("the table warm steps read every table without failing") {
+    val failed = Warmup.steps(Warmup.engineSteps(spark, "/root/testdata/sf0.001")
+      .filter(_._1.startsWith("table:")))
+    assert(failed.isEmpty)
+  }
+
   test("mergeApply: a failing probe leaves no Spark job running when it throws") {
     val dir = tmpDir("mutm_fail")
     import spark.implicits._

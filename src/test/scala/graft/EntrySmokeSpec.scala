@@ -1,28 +1,21 @@
 package graft
 
 /** The driver's smoke contract: `SparkEntry.entry` returns >0 rows on
-  * sf0.001, and every registered query has either an oracle or a known
-  * rows-only justification. */
+  * sf0.001, the registry keeps its pinned run order, and the oracle SQL
+  * follows the width-canonicalization lints. Every query carries its oracle
+  * by construction (one `QueryDef` per name). */
 class EntrySmokeSpec extends SparkSpec {
 
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracle key names a registered query") {
-    val unknown = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(unknown.isEmpty, s"oracle entries without a query: $unknown")
-  }
-
-  test("every registered query ships an oracle (rows-only set is empty since round 4)") {
-    // Round 4 closed the oracle gap completely: the HLL pipelines and
-    // seg_idempotent_approx emit exact counts plus deterministic est_ok
-    // envelope columns, pct_value_sketch emits an exact-rank gate, and
-    // ann_topk_srp's oracle SQL embeds the hyperplane constants. Any new
-    // query must ship an oracle or revive this allow-list deliberately.
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(rowsOnly.isEmpty,
-      s"new queries must ship an oracle or be allow-listed here deliberately: $rowsOnly")
+  test("the registry runs every query in the pinned append-only order") {
+    // run order is Bench's published `order`: a query may only be appended,
+    // never inserted, moved or renamed (query_order.txt grows at its end)
+    val pinned = scala.io.Source.fromResource("query_order.txt").getLines()
+      .filter(_.nonEmpty).toSeq
+    assert(SparkEntry.queries.keys.toSeq == pinned)
   }
 
   test("oracle SQL canonicalizes embedding through FLOAT before arithmetic") {

@@ -91,7 +91,7 @@ class PcaSpec extends SparkSpec {
   test("reduced-dim ANN lane: deterministic contract, high recall vs brute") {
     // contract parameters (r=32, candK=160): the synthetic spectrum is
     // flat, so r=dim/2 is what holds recall — see the PcaR note in
-    // SparkEntry; measured 1.000 here, 0.925 at sf0.1 (RecallCheck lane)
+    // AnnQueries; measured 1.000 here, 0.925 at sf0.1 (RecallCheck lane)
     val model = Pca.train(emb, 64, 32)
     val q = emb.filter($"vec_id" < 8)
     val got = Pca.pcaTopK(emb, q, k = 5, candK = 160, model)

@@ -5,7 +5,7 @@ package graft
   * (weakly-similar embeddings, cosines ≈ 0.25-0.36, so 4-bit/8-table buckets
   * miss some true neighbors) — which is precisely why the driver oracle for
   * `ann_topk_srp` recomputes the SRP pipeline itself in SQL (embedded
-  * hyperplanes, `SparkEntry.srpOracleSql`) instead of assuming brute parity.
+  * hyperplanes, `AnnQueries.srpOracleSql`) instead of assuming brute parity.
   * Run this when tuning (nBits, tables) to see the recall trade-off.
   * `Test/runMain graft.SrpParityCheck [sfDir...]` */
 object SrpParityCheck {
