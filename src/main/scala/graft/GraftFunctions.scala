@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.Expression
 import graft.functions._
@@ -9,12 +8,10 @@ import graft.functions._
   * operator is reachable from plain `spark.sql(...)` — the reference's whole
   * API is SQL text, and a Spark-native replacement should accept SQL too.
   *
-  * Two deployment forms:
-  *  - [[GraftFunctions.register]]: imperative, for an existing session
-  *    (tests, notebooks);
-  *  - [[GraftExtensions]]: `spark.sql.extensions=graft.GraftExtensions`,
-  *    which [[GraftSession]] sets on every session it builds (and a cluster
-  *    sets in its conf) — functions exist in every session from startup.
+  * One deployment form: [[GraftExtensions]], i.e.
+  * `spark.sql.extensions=graft.GraftExtensions`, which [[GraftSession]] sets
+  * on every session it builds (and a cluster sets in its conf) — the
+  * functions exist in every session from startup.
   */
 object GraftFunctions {
 
@@ -177,12 +174,6 @@ object GraftFunctions {
     case other => throw new IllegalArgumentException(s"expected numeric literal, got $other")
   }
 
-  def register(spark: SparkSession): Unit =
-    fns.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-
   private[graft] def inject(ext: SparkSessionExtensions): Unit =
     fns.foreach { case (name, builder) =>
       ext.injectFunction(
@@ -194,11 +185,11 @@ object GraftFunctions {
 }
 
 /** `--conf spark.sql.extensions=graft.GraftExtensions`; every
-  * [[GraftSession]] installs it. */
+  * [[GraftSession]] installs it: the graft SQL functions and the
+  * [[graft.plans.RewriteLatestWinsWindow]] optimizer rule. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.inject(ext)
     ext.injectOptimizerRule(_ => graft.plans.RewriteLatestWinsWindow)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteRangeJoin)
   }
 }

@@ -15,9 +15,9 @@ import org.apache.spark.sql.SparkSession
   *    (orders at bench scale is ~15 MB — cheaper to ship to all executors
   *    than to shuffle lineitem).
   *  - [[GraftExtensions]] is the session's `spark.sql.extensions`: the graft
-  *    SQL functions plus both optimizer rules. `RewriteRangeJoin` stays
-  *    dormant unless `spark.graft.rangeJoin.bandWidth` is set, so only
-  *    `RewriteLatestWinsWindow` changes plans.
+  *    SQL functions plus the `RewriteLatestWinsWindow` optimizer rule.
+  *    Range joins need no rule: the queries call
+  *    `graft.operators.RangeJoin` directly.
   */
 object GraftSession {
   def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)

@@ -35,17 +35,16 @@ object BpeModel {
 
   /** Corpus word-TYPE frequency table: (word, n). One shuffle, map-side
     * partial aggregation; output is vocabulary-sized. */
-  def wordFrequencies(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(explode(TextAnalysis.words(col(textCol))).as("word"))
+  def wordFrequencies(docs: DataFrame): DataFrame =
+    docs.select(explode(TextAnalysis.words(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
 
   /** Train `numMerges` BPE merges from the corpus. The collected dictionary
     * is capped at `maxVocab` word types (count desc, word asc — total
     * order, so the cap is deterministic); the driver loop is O(numMerges ×
     * dictionary chars). */
-  def learnMerges(docs: DataFrame, numMerges: Int = 40, maxVocab: Int = 20000,
-                  textCol: String = "text"): Seq[(String, String)] = {
-    val types = wordFrequencies(docs, textCol)
+  def learnMerges(docs: DataFrame, numMerges: Int = 40, maxVocab: Int = 20000): Seq[(String, String)] = {
+    val types = wordFrequencies(docs)
       .orderBy(col("n").desc, col("word"))
       .limit(maxVocab)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -181,13 +180,12 @@ object BpeModel {
     * join (tokenization cost ∝ vocabulary): the cross-check for the native
     * per-row projection, and the shape an engine without the native
     * expression would run. */
-  def docTokenCounts(docs: DataFrame, merges: Seq[(String, String)],
-                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val words = docs.select(col(idCol), explode(TextAnalysis.words(col(textCol))).as("word"))
+  def docTokenCounts(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
+    val words = docs.select(col("doc_id"), explode(TextAnalysis.words(col("text"))).as("word"))
     val vocab = words.select(col("word")).distinct()
       .withColumn("tok", tokenCountChain(col("word"), merges))
     words.join(vocab, Seq("word"))
-      .groupBy(col(idCol)).agg(sum(col("tok")).as("n_bpe_tokens"))
+      .groupBy(col("doc_id")).agg(sum(col("tok")).as("n_bpe_tokens"))
   }
 
   /** DuckDB oracle SQL for the per-doc (doc_id, n_words, n_bpe_tokens)

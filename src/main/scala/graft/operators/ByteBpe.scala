@@ -61,8 +61,8 @@ object ByteBpe {
 
   /** Corpus pre-token TYPE frequency table: (tok, n). One shuffle,
     * map-side partial aggregation; output is vocabulary-sized. */
-  def preTokenFrequencies(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(explode(preTokens(col(textCol))).as("tok"))
+  def preTokenFrequencies(docs: DataFrame): DataFrame =
+    docs.select(explode(preTokens(col("text"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("n"))
 
   /** UTF-8 bytes of `s` as uppercase hex-pair symbols. */
@@ -75,9 +75,8 @@ object ByteBpe {
     * type dictionary is capped at `maxVocab` (count desc, token asc —
     * total order, deterministic cap); driver traffic is vocabulary-bounded
     * (the k·dim / Heaps'-bound discipline). */
-  def learn(docs: DataFrame, numMerges: Int = 64, maxVocab: Int = 20000,
-            textCol: String = "text"): Model = {
-    val types = preTokenFrequencies(docs, textCol)
+  def learn(docs: DataFrame, numMerges: Int = 64, maxVocab: Int = 20000): Model = {
+    val types = preTokenFrequencies(docs)
       .orderBy(col("n").desc, col("tok"))
       .limit(maxVocab)
       .collect().map(r => (hexSymbols(r.getString(0)), r.getLong(1))).toSeq
@@ -130,16 +129,15 @@ object ByteBpe {
     * through [[encodeChain]], digest the '|'-joined encoded stream.
     * Interpreted — the contract query uses the native expression; this is
     * the parity spec's twin. */
-  def docStatsChain(docs: DataFrame, model: Model,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val encs = transform(preTokens(col(textCol)), t => encodeChain(t, model))
+  def docStatsChain(docs: DataFrame, model: Model): DataFrame = {
+    val encs = transform(preTokens(col("text")), t => encodeChain(t, model))
     val enc = concat_ws("|", encs)
     // even-int double division is exact; a long/2 Column divide would be
     // a DOUBLE divide on the long, same thing — cast after, for clarity
     val nTok = aggregate(encs, lit(0L), (acc, r) =>
       acc + ((length(r) - length(replace(r, lit(Sep), lit("")))) / 2).cast("long"))
-    docs.select(col(idCol),
-      coalesce(size(preTokens(col(textCol))).cast("long"), lit(0L)).as("n_pretokens"),
+    docs.select(col("doc_id"),
+      coalesce(size(preTokens(col("text"))).cast("long"), lit(0L)).as("n_pretokens"),
       coalesce(nTok, lit(0L)).as("n_tokens"),
       md5(coalesce(enc, lit("")).cast("binary")).as("enc_md5"))
   }

@@ -40,9 +40,9 @@ object CorpusModel {
 
   /** Train: exact bigram counts and first-char prefix totals over the corpus.
     * Both maps are alphabet-bounded (≤729 / ≤27 entries). */
-  def bigramModel(docs: DataFrame, textCol: String = "text")
+  def bigramModel(docs: DataFrame)
       : (Map[String, Long], Map[String, Long]) = {
-    val counts = docs.select(explode(charBigrams(col(textCol))).as("b"))
+    val counts = docs.select(explode(charBigrams(col("text"))).as("b"))
       .groupBy(col("b")).agg(count(lit(1)).as("c"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val prefix = counts.groupBy(_._1.substring(0, 1))
@@ -54,16 +54,14 @@ object CorpusModel {
     * smoothing: p(b) = (count(b)+1) / (prefixTotal(b[0])+27). Emits the
     * transition count, how many transitions fall under `rareThreshold`, and
     * the rarest transition probability (null when < 2 model chars). */
-  def rareTransitionStats(docs: DataFrame, rareThreshold: Double = 0.01,
-                          idCol: String = "doc_id",
-                          textCol: String = "text"): DataFrame = {
-    val (bc, pc) = bigramModel(docs, textCol)
+  def rareTransitionStats(docs: DataFrame, rareThreshold: Double = 0.01): DataFrame = {
+    val (bc, pc) = bigramModel(docs)
     // native single-pass scorer: the 729-entry probability table is baked
     // into the expression at plan time, so scoring is one byte loop per row
     val stats = graft.functions.NativeExprs.rareTransitionStats(
-      filteredText(col(textCol)), bc, pc, rareThreshold)
-    docs.select(col(idCol), stats.as("__s"))
-      .select(col(idCol),
+      filteredText(col("text")), bc, pc, rareThreshold)
+    docs.select(col("doc_id"), stats.as("__s"))
+      .select(col("doc_id"),
               col("__s.n_transitions").as("n_transitions"),
               col("__s.n_rare").as("n_rare"),
               col("__s.min_p").as("min_p"))
@@ -85,25 +83,24 @@ object CorpusModel {
     * The remaining shuffles are the (doc, term) count and the per-document
     * top-k window (per-doc bounded), plus one metadata-sized driver scalar
     * (the corpus row count, same footprint as [[bigramModel]]'s collect). */
-  def topTermsByRarity(docs: DataFrame, k: Int, textCol: String = "text",
-                       idCol: String = "doc_id"): DataFrame = {
+  def topTermsByRarity(docs: DataFrame, k: Int): DataFrame = {
     val n = docs.count()
     val tf = docs
-      .select(col(idCol),
-              explode(split(TextAnalysis.normalized(col(textCol)), " ")).as("term"))
+      .select(col("doc_id"),
+              explode(split(TextAnalysis.normalized(col("text")), " ")).as("term"))
       .filter(col("term") =!= "")
-      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     // round BEFORE ranking so emitted scores and rank order can never
     // disagree; ties at equal rounded score break on the term string
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("score").desc, col("term"))
+      .partitionBy(col("doc_id")).orderBy(col("score").desc, col("term"))
     tf.join(broadcast(dfreq), "term")
       .withColumn("score",
         round(col("tf").cast("double") * lit((n + 1).toDouble) / (col("df") + 1), 4))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= k)
-      .select(col(idCol), col("term"), col("tf"), col("df"), col("score"))
+      .select(col("doc_id"), col("term"), col("tf"), col("df"), col("score"))
   }
 
   /** BM25 ranked retrieval over the corpus (Robertson–Spärck Jones
@@ -124,9 +121,8 @@ object CorpusModel {
     * `ln` (≤1 ulp), far below any real score gap. Ties (identical
     * per-term profiles) are broken by id. */
   def bm25TopK(docs: DataFrame, queryTerms: Seq[String], topK: Int,
-               k1: Double = 1.2, b: Double = 0.75,
-               textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    bm25Scores(docs, queryTerms, k1, b, textCol, idCol)
+               k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25Scores(docs, queryTerms, k1, b)
       .orderBy(col("score").desc, col("doc_id"))
       .limit(topK)
 
@@ -136,11 +132,10 @@ object CorpusModel {
     * rankings (BM25, raw term-frequency) from the one tf pass instead of
     * re-tokenizing per ranker. */
   def bm25Scores(docs: DataFrame, queryTerms: Seq[String],
-                 k1: Double = 1.2, b: Double = 0.75,
-                 textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+                 k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    val toks = docs.select(col(idCol).as("doc_id"),
-      filter(split(TextAnalysis.normalized(col(textCol)), " "), t => t =!= "").as("w"))
+    val toks = docs.select(col("doc_id"),
+      filter(split(TextAnalysis.normalized(col("text")), " "), t => t =!= "").as("w"))
     val dls = toks.select(col("doc_id"), size(col("w")).cast("long").as("dl"))
     val stats = dls.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val tf = toks.select(col("doc_id"), size(col("w")).cast("long").as("dl"),
@@ -176,18 +171,17 @@ object CorpusModel {
     *
     * Returns one row per matching document: match count and first match
     * position (0-based word offset) — all-integer, exactly reproducible. */
-  def phraseSearch(docs: DataFrame, phrase: Seq[String],
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def phraseSearch(docs: DataFrame, phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "phrase must be non-empty")
-    val postings = docs.select(col(idCol),
-        posexplode(TextAnalysis.words(col(textCol))).as(Seq("pos", "w")))
+    val postings = docs.select(col("doc_id"),
+        posexplode(TextAnalysis.words(col("text"))).as(Seq("pos", "w")))
       .filter(col("w").isInCollection(phrase.distinct))
     val starts = phrase.zipWithIndex.map { case (term, j) =>
       postings.filter(col("w") === term)
-        .select(col(idCol), (col("pos") - lit(j)).as("start"))
+        .select(col("doc_id"), (col("pos") - lit(j)).as("start"))
     }
-    starts.reduce((a, b) => a.join(b, Seq(idCol, "start")))
-      .groupBy(col(idCol))
+    starts.reduce((a, b) => a.join(b, Seq("doc_id", "start")))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_matches"), min(col("start")).as("first_pos"))
   }
 
@@ -202,10 +196,9 @@ object CorpusModel {
     * is O(distinct words)), each top-k is a TakeOrdered, and the overlap of
     * two ≤k-row sets is a broadcast join — the 1-row output is the
     * legitimate single-partition tail. */
-  def vocabOverlap(a: DataFrame, b: DataFrame, k: Int,
-                   textCol: String = "text"): DataFrame = {
+  def vocabOverlap(a: DataFrame, b: DataFrame, k: Int): DataFrame = {
     def topK(df: DataFrame) = df
-      .select(explode(TextAnalysis.words(col(textCol))).as("word"))
+      .select(explode(TextAnalysis.words(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("word")).limit(k)
       .select(col("word"))
@@ -221,16 +214,14 @@ object CorpusModel {
 
   /** Reference HOF form of [[rareTransitionStats]]'s scoring (parity-tested;
     * interpreted map lookups per bigram — do not use in hot paths). */
-  def rareTransitionStatsHof(docs: DataFrame, rareThreshold: Double = 0.01,
-                             idCol: String = "doc_id",
-                             textCol: String = "text"): DataFrame = {
-    val (bc, pc) = bigramModel(docs, textCol)
+  def rareTransitionStatsHof(docs: DataFrame, rareThreshold: Double = 0.01): DataFrame = {
+    val (bc, pc) = bigramModel(docs)
     val bcLit = typedLit(bc)
     val pcLit = typedLit(pc)
-    val ps = transform(charBigrams(col(textCol)), b =>
+    val ps = transform(charBigrams(col("text")), b =>
       (coalesce(element_at(bcLit, b), lit(0L)) + 1).cast("double") /
         (coalesce(element_at(pcLit, b.substr(lit(1), lit(1))), lit(0L)) + 27).cast("double"))
-    docs.select(col(idCol),
+    docs.select(col("doc_id"),
                 size(ps).as("n_transitions"),
                 size(filter(ps, p => p < rareThreshold)).as("n_rare"),
                 array_min(ps).as("min_p"))

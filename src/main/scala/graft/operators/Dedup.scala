@@ -40,19 +40,17 @@ object Dedup {
   /** Exact-duplicate groups: md5 digest of the normalized text, grouped.
     * Returns one row per duplicated digest with the kept (minimum) id and the
     * group size. */
-  def exactDuplicateGroups(docs: DataFrame, textCol: String = "text",
-                           idCol: String = "doc_id"): DataFrame =
-    docs.select(col(idCol), TextAnalysis.fingerprintMd5(col(textCol)).as("digest"))
+  def exactDuplicateGroups(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), TextAnalysis.fingerprintMd5(col("text")).as("digest"))
       .groupBy(col("digest"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("group_size"))
+      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("group_size"))
       .filter(col("group_size") > 1)
 
   /** Exact dedup: keep the lowest-id document per normalized-text digest.
     * Window `row_number()==1` over the digest — one shuffle on the digest. */
-  def dropExactDuplicates(docs: DataFrame, textCol: String = "text",
-                          idCol: String = "doc_id"): DataFrame = {
-    val w = Window.partitionBy(TextAnalysis.fingerprintMd5(col(textCol)))
-      .orderBy(col(idCol))
+  def dropExactDuplicates(docs: DataFrame): DataFrame = {
+    val w = Window.partitionBy(TextAnalysis.fingerprintMd5(col("text")))
+      .orderBy(col("doc_id"))
     docs.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
@@ -67,21 +65,19 @@ object Dedup {
     * shuffle — chunk TEXT never leaves its scan task; the duplicated-digest
     * table is digest-keyed and joined back on the digest. Three shuffles
     * total (distinct, digest groupBy, per-doc groupBy). */
-  def chunkLevelDedup(chunks: DataFrame, idCol: String = "doc_id",
-                      idxCol: String = "chunk_idx",
-                      textCol: String = "chunk_text"): DataFrame = {
-    val digested = chunks.select(col(idCol), col(idxCol),
-      md5(col(textCol).cast("binary")).as("__d"))
-    val dupDigests = digested.select(col("__d"), col(idCol)).distinct()
+  def chunkLevelDedup(chunks: DataFrame): DataFrame = {
+    val digested = chunks.select(col("doc_id"), col("chunk_idx"),
+      md5(col("chunk_text").cast("binary")).as("__d"))
+    val dupDigests = digested.select(col("__d"), col("doc_id")).distinct()
       .groupBy(col("__d")).agg(count(lit(1)).as("__nd"))
       .filter(col("__nd") >= 2)
       .select(col("__d"), col("__nd"))
     digested.join(dupDigests, Seq("__d"), "left")
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_chunks"),
            count(col("__nd")).as("n_dup_chunks"), // non-null = duplicated
            md5(concat_ws(",",
-             transform(sort_array(collect_list(when(col("__nd").isNull, col(idxCol)))),
+             transform(sort_array(collect_list(when(col("__nd").isNull, col("chunk_idx")))),
                _.cast("string"))).cast("binary")).as("kept_md5"))
   }
 
@@ -93,25 +89,23 @@ object Dedup {
     * into the index scan (left-semi); the corpus-sized index is never
     * shuffled, and the surviving digest set (≤ batch size) broadcasts back
     * onto the batch. Same per-doc output contract as the batch operator. */
-  def incrementalChunkDedup(batchChunks: DataFrame, corpusDigests: DataFrame,
-                            idCol: String = "doc_id", idxCol: String = "chunk_idx",
-                            textCol: String = "chunk_text"): DataFrame = {
-    val bd = batchChunks.select(col(idCol), col(idxCol),
-      md5(col(textCol).cast("binary")).as("__d"))
+  def incrementalChunkDedup(batchChunks: DataFrame, corpusDigests: DataFrame): DataFrame = {
+    val bd = batchChunks.select(col("doc_id"), col("chunk_idx"),
+      md5(col("chunk_text").cast("binary")).as("__d"))
     val inCorpus = corpusDigests
       .join(broadcast(bd.select(col("__d")).distinct()), Seq("__d"), "left_semi")
       .select(col("__d")).distinct()
-    val inBatch = bd.select(col("__d"), col(idCol)).distinct()
+    val inBatch = bd.select(col("__d"), col("doc_id")).distinct()
       .groupBy(col("__d")).agg(count(lit(1)).as("__nd"))
       .filter(col("__nd") >= 2).select(col("__d"))
     val dups = inCorpus.unionByName(inBatch).distinct()
       .withColumn("__dup", lit(1))
     bd.join(broadcast(dups), Seq("__d"), "left")
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_chunks"),
            count(col("__dup")).as("n_dup_chunks"),
            md5(concat_ws(",",
-             transform(sort_array(collect_list(when(col("__dup").isNull, col(idxCol)))),
+             transform(sort_array(collect_list(when(col("__dup").isNull, col("chunk_idx")))),
                _.cast("string"))).cast("binary")).as("kept_md5"))
   }
 
@@ -190,7 +184,6 @@ object Dedup {
     *     shingle join: ~10 GB of array shuffle avoided).
     */
   def minhashNearDuplicates(docs: DataFrame, threshold: Double,
-                            textCol: String = "text", idCol: String = "doc_id",
                             shingleK: Int = 5, numHashes: Int = 128,
                             bands: Int = 32, seed: Long = 42L,
                             estMargin: Double = 0.2): DataFrame = {
@@ -199,16 +192,16 @@ object Dedup {
     // one signature pass over the corpus, reused by banding AND the
     // estimate prune
     val sigs = fanOutSmallInput(docs).select(
-        col(idCol),
+        col("doc_id"),
         graft.functions.NativeExprs.minhashSig(
-          graft.functions.TextAnalysis.normalized(col(textCol)),
+          graft.functions.TextAnalysis.normalized(col("text")),
           shingleK, numHashes, seed).as("sig"))
       .localCheckpoint(true)
     val buckets = sigs
-      .select(col(idCol), explode(lshBands(col("sig"), bands, r)).as("bb"))
-      .select(col(idCol), col("bb.band"), col("bb.bucket"))
-    val a = buckets.select(col("band"), col("bucket"), col(idCol).as("id_a"))
-    val b = buckets.select(col("band"), col("bucket"), col(idCol).as("id_b"))
+      .select(col("doc_id"), explode(lshBands(col("sig"), bands, r)).as("bb"))
+      .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
+    val a = buckets.select(col("band"), col("bucket"), col("doc_id").as("id_a"))
+    val b = buckets.select(col("band"), col("bucket"), col("doc_id").as("id_b"))
     // hot-bucket salt guard (see saltedBandJoin): template floods would
     // otherwise serialize the banding self-join on one reducer
     val candidates = saltedBandJoin(a, b, "id_a")
@@ -217,25 +210,25 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
     // estimate prune: cheap per-pair signature comparison, no text payloads
     val pruned = candidates
-      .join(sigs.select(col(idCol).as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigs.select(col(idCol).as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
+      .join(sigs.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
+      .join(sigs.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
       .filter(graft.functions.NativeExprs.sigMatchFraction(col("sig_a"), col("sig_b"))
                 >= threshold - estMargin)
       .select(col("id_a"), col("id_b"))
       .localCheckpoint(true)
     // exact verification only for survivors — shingle sets are computed for
     // (and shipped to) the few docs that still appear in some pair
-    val candIds = pruned.select(col("id_a").as(idCol))
-      .union(pruned.select(col("id_b").as(idCol))).distinct()
+    val candIds = pruned.select(col("id_a").as("doc_id"))
+      .union(pruned.select(col("id_b").as("doc_id"))).distinct()
     // shingle sets SORTED once per doc: the per-pair exact verify is then a
     // zero-allocation linear merge (SortedJaccardExpr) instead of two hash
     // sets over ~10^3-element arrays per surviving candidate
-    val sh = docs.join(candIds, Seq(idCol), "left_semi")
-      .select(col(idCol),
-        sort_array(graft.functions.NativeExprs.shingleSet(col(textCol), shingleK)).as("sh"))
+    val sh = docs.join(candIds, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"),
+        sort_array(graft.functions.NativeExprs.shingleSet(col("text"), shingleK)).as("sh"))
     pruned
-      .join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+      .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+      .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
       .withColumn("jaccard",
         graft.functions.NativeExprs.sortedJaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
@@ -252,12 +245,11 @@ object Dedup {
   /** Brute-force n-gram Jaccard over all pairs — the O(n²) oracle used to
     * validate the LSH path in tests. Never run this at scale. */
   def bruteForceJaccardPairs(docs: DataFrame, threshold: Double,
-                             textCol: String = "text", idCol: String = "doc_id",
                              shingleK: Int = 5): DataFrame = {
-    val sh = docs.select(col(idCol),
-      graft.functions.NativeExprs.shingleSet(col(textCol), shingleK).as("sh"))
-    val a = sh.select(col(idCol).as("id_a"), col("sh").as("sh_a"))
-    val b = sh.select(col(idCol).as("id_b"), col("sh").as("sh_b"))
+    val sh = docs.select(col("doc_id"),
+      graft.functions.NativeExprs.shingleSet(col("text"), shingleK).as("sh"))
+    val a = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
+    val b = sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
     a.crossJoin(b).filter(col("id_a") < col("id_b"))
       .withColumn("jaccard", graft.functions.NativeExprs.jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
@@ -298,13 +290,12 @@ object Dedup {
     *    this dense has Ω(n²) true output and no exact plan at all.
     */
   def ngramJaccardPairs(docs: DataFrame, threshold: Double, n: Int = 2,
-                        textCol: String = "text", idCol: String = "doc_id",
                         maxDenseJoinRows: Double = 5e8,
                         directDensityFactor: Double = 0.5,
                         maxDirectDocs: Long = 100000L,
                         maxDirectBroadcastBytes: Long = 64L << 20): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    val grams = wordGramSets(docs, n, textCol, idCol)
+    val grams = wordGramSets(docs, n)
     val sizes = grams.select(col("id"), size(col("g")).as("sz"))
     // set size rides inline on the posting rows — no join needed to reach it
     val posting = grams.select(col("id"), size(col("g")).as("sz"),
@@ -409,11 +400,10 @@ object Dedup {
   /** Distinct word-n-gram sets per doc, checkpointed (shared by the
     * resemblance and containment joins): (id, g). Empty-gram docs (shorter
     * than `n` words) are dropped — both measures are undefined there. */
-  private def wordGramSets(docs: DataFrame, n: Int,
-                           textCol: String, idCol: String): DataFrame =
+  private def wordGramSets(docs: DataFrame, n: Int): DataFrame =
     fanOutSmallInput(docs).select(
-        col(idCol).as("id"),
-        split(TextAnalysis.normalized(col(textCol)), " ").as("w"))
+        col("doc_id").as("id"),
+        split(TextAnalysis.normalized(col("text")), " ").as("w"))
       .select(col("id"),
         when(size(col("w")) >= n,
              array_distinct(expr(
@@ -449,10 +439,9 @@ object Dedup {
     *    exactly on the gram arrays.
     */
   def containmentPairs(docs: DataFrame, threshold: Double, n: Int = 3,
-                       textCol: String = "text", idCol: String = "doc_id",
                        maxDenseJoinRows: Double = 5e8): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    val grams = wordGramSets(docs, n, textCol, idCol)
+    val grams = wordGramSets(docs, n)
     val sizes = grams.select(col("id"), size(col("g")).as("sz"))
     val posting = grams.select(col("id"), size(col("g")).as("sz"),
                                explode(col("g")).as("gram"))
@@ -615,11 +604,9 @@ object Dedup {
     * not rebuilt per query) and pass it back via `precomputedKeys`.
     * Returned un-materialized; callers that reuse it should
     * `localCheckpoint` it — [[editDistancePairs]] consumes it 3-4 times. */
-  def editDistanceKeys(docs: DataFrame, q: Int,
-                       keyCol: String = "key",
-                       idCol: String = "doc_id"): DataFrame =
+  def editDistanceKeys(docs: DataFrame, q: Int): DataFrame =
     fanOutSmallInput(docs)
-      .select(col(idCol).as("id"), col(keyCol).as("s"))
+      .select(col("doc_id").as("id"), col("key").as("s"))
       .filter(col("s").isNotNull)
       .select(col("id"), col("s"), length(col("s")).as("len"),
         // sorted at build time so the verify stage's count filter runs as
@@ -639,21 +626,20 @@ object Dedup {
       .withColumn("g32", sort_array(transform(col("g"), x => x.cast("int"))))
 
   def editDistancePairs(docs: DataFrame, maxDist: Int, q: Int = 2,
-                        keyCol: String = "key", idCol: String = "doc_id",
                         directJoinFactor: Double = 4.0,
                         maxDirectKeyBytes: Long = 64L << 20,
                         precomputedKeys: Option[DataFrame] = None): DataFrame = {
     require(maxDist >= 0, "maxDist must be >= 0")
     require(q >= 1, "q must be >= 1")
     val kq = maxDist * q
-    // precomputedKeys must be editDistanceKeys(docs, q, keyCol, idCol) (same
+    // precomputedKeys must be editDistanceKeys(docs, q) (same
     // q, and with `g` VALUE-SORTED as that builder emits it — the verify
     // stage's SortedIntersectGeExpr is a sorted-merge count whose bound
     // silently drops true pairs on out-of-order input; a keys frame persisted
     // by any other builder must re-sort before landing here), already
     // materialized by the caller's ingest-artifact cache
     val keys = precomputedKeys.getOrElse(
-      editDistanceKeys(docs, q, keyCol, idCol).localCheckpoint(true))
+      editDistanceKeys(docs, q).localCheckpoint(true))
 
     // Ed-Join's COUNT filter ahead of the DP: one edit removes at most q
     // distinct members from a string's q-gram SET (it touches q gram
@@ -837,14 +823,13 @@ object Dedup {
     * dedup against it WITHOUT touching historical text (see
     * [[incrementalNearDuplicates]]); append each batch's own index rows to
     * keep it current. */
-  def lshIndex(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
-               shingleK: Int = 5, numHashes: Int = 128, bands: Int = 32,
-               seed: Long = 42L): DataFrame = {
+  def lshIndex(docs: DataFrame, shingleK: Int = 5, numHashes: Int = 128,
+               bands: Int = 32, seed: Long = 42L): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    lshSignatures(docs, textCol, idCol, shingleK, numHashes, seed)
-      .select(col(idCol),
+    lshSignatures(docs, shingleK, numHashes, seed)
+      .select(col("doc_id"),
               explode(lshBands(col("sig"), bands, numHashes / bands)).as("bb"))
-      .select(col(idCol), col("bb.band"), col("bb.bucket"))
+      .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
   }
 
   /** The signature half of the persisted index: (doc_id, sig) — ~1 KB/doc,
@@ -852,13 +837,12 @@ object Dedup {
     * [[incrementalNearDuplicates]] spares the probe from recomputing any
     * historical signature for estimate pruning (the dominant probe cost on
     * flood-prone corpora, where candidates touch most of the corpus). */
-  def lshSignatures(docs: DataFrame, textCol: String = "text",
-                    idCol: String = "doc_id", shingleK: Int = 5,
+  def lshSignatures(docs: DataFrame, shingleK: Int = 5,
                     numHashes: Int = 128, seed: Long = 42L): DataFrame =
     fanOutSmallInput(docs).select(
-        col(idCol),
+        col("doc_id"),
         graft.functions.NativeExprs.minhashSig(
-          graft.functions.TextAnalysis.normalized(col(textCol)),
+          graft.functions.TextAnalysis.normalized(col("text")),
           shingleK, numHashes, seed).as("sig"))
 
   /** Incremental near-duplicate detection — the daily-ingest shape at 100 TB:
@@ -873,7 +857,6 @@ object Dedup {
     */
   def incrementalNearDuplicates(newDocs: DataFrame, corpus: DataFrame,
                                 corpusIndex: DataFrame, threshold: Double,
-                                textCol: String = "text", idCol: String = "doc_id",
                                 shingleK: Int = 5, numHashes: Int = 128,
                                 bands: Int = 32, seed: Long = 42L,
                                 estMargin: Double = 0.2,
@@ -886,17 +869,17 @@ object Dedup {
     // the batch's signatures are computed ONCE and feed both the banding
     // pass and the estimate prune (previously two separate minhash passes
     // over the batch text)
-    val newSigs = lshSignatures(newDocs, textCol, idCol, shingleK, numHashes, seed)
+    val newSigs = lshSignatures(newDocs, shingleK, numHashes, seed)
       .localCheckpoint(true)
     val nNew = newSigs.count() // cached-scan count; sizes BOTH byte budgets
     // the banding explode is a cheap projection off the materialized sigs —
     // NOT checkpointed: each consumer re-derives it from the sig cache, which
     // costs less than a third materialization pass + its scheduling point
     val newIndex = newSigs
-      .select(col(idCol),
+      .select(col("doc_id"),
               explode(lshBands(col("sig"), bands, numHashes / bands)).as("bb"))
-      .select(col(idCol), col("bb.band"), col("bb.bucket"))
-    val a = newIndex.select(col("band"), col("bucket"), col(idCol).as("id_new"))
+      .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
+    val a = newIndex.select(col("band"), col("bucket"), col("doc_id").as("id_new"))
     // Candidates vs the historical index + within the new batch itself.
     // The vs-corpus join is the scale pivot: the historical index is the
     // HUGE side (O(corpus × bands) rows), the batch index the small one, so
@@ -930,7 +913,7 @@ object Dedup {
     val nNewIndexRows = nNew * bands
     val batchIdxSmall = nNewIndexRows * 28L <= maxIndexBroadcastBytes
     val corpusIdx = corpusIndex
-      .select(col("band"), col("bucket"), col(idCol).as("id_old"))
+      .select(col("band"), col("bucket"), col("doc_id").as("id_old"))
     val candRaw =
       if (batchIdxSmall) corpusIdx.join(broadcast(a), Seq("band", "bucket"))
       else saltedBandJoin(a, corpusIdx, "id_new",
@@ -947,7 +930,7 @@ object Dedup {
       .filter(col("id_new") =!= col("id_old"))
       .select(col("id_new"), col("id_old"))
       .localCheckpoint(true) // consumed twice: byte-budget count + prune join
-    val b = newIndex.select(col("band"), col("bucket"), col(idCol).as("id_b2"))
+    val b = newIndex.select(col("band"), col("bucket"), col("doc_id").as("id_b2"))
     val vsSelf = (if (batchIdxSmall) a.join(broadcast(b), Seq("band", "bucket"))
                   else saltedBandJoin(a, b, "id_new", skewSalt, skewCap, Some(hot)))
       .filter(col("id_new") < col("id_b2"))
@@ -965,26 +948,26 @@ object Dedup {
     // O(corpus).
     val bcastNew = nNew * (numHashes * 8L + 32L) <= maxSigBroadcastBytes
     def newSide(as1: String, as2: String): DataFrame = {
-      val f = newSigs.select(col(idCol).as(as1), col("sig").as(as2))
+      val f = newSigs.select(col("doc_id").as(as1), col("sig").as(as2))
       if (bcastNew) broadcast(f) else f
     }
     val est = graft.functions.NativeExprs.sigMatchFraction(col("sig_a"), col("sig_b"))
     val candSmall = vsCorpus.count() * 16L <= maxIndexBroadcastBytes
     val candWithSigB = (corpusSigs, candSmall) match {
       case (Some(cs), true) =>
-        cs.select(col(idCol).as("id_old"), col("sig").as("sig_b"))
+        cs.select(col("doc_id").as("id_old"), col("sig").as("sig_b"))
           .join(broadcast(vsCorpus), Seq("id_old"))
       case _ =>
-        val oldIds = vsCorpus.select(col("id_old").as(idCol)).distinct()
+        val oldIds = vsCorpus.select(col("id_old").as("doc_id")).distinct()
         val oldSigs = (corpusSigs match {
-          case Some(cs) => cs.select(col(idCol), col("sig"))
-              .join(oldIds, Seq(idCol), "left_semi")
-          case None => corpus.join(oldIds, Seq(idCol), "left_semi")
-              .select(col(idCol),
+          case Some(cs) => cs.select(col("doc_id"), col("sig"))
+              .join(oldIds, Seq("doc_id"), "left_semi")
+          case None => corpus.join(oldIds, Seq("doc_id"), "left_semi")
+              .select(col("doc_id"),
                 graft.functions.NativeExprs.minhashSig(
-                  graft.functions.TextAnalysis.normalized(col(textCol)),
+                  graft.functions.TextAnalysis.normalized(col("text")),
                   shingleK, numHashes, seed).as("sig"))
-        }).select(col(idCol).as("id_old"), col("sig").as("sig_b"))
+        }).select(col("doc_id").as("id_old"), col("sig").as("sig_b"))
         vsCorpus.join(oldSigs, Seq("id_old"))
     }
     val corpusPruned = candWithSigB
@@ -1004,8 +987,8 @@ object Dedup {
     // through the bucket joins and the prune.
     val pruned = corpusPruned.unionByName(selfPruned)
       .dropDuplicates("id_a", "id_b").localCheckpoint(true)
-    val survivorIds = pruned.select(col("id_a").as(idCol))
-      .union(pruned.select(col("id_b").as(idCol))).distinct()
+    val survivorIds = pruned.select(col("id_a").as("doc_id"))
+      .union(pruned.select(col("id_b").as("doc_id"))).distinct()
     // Sorted shingle sets -> linear-merge exact verify (see the batch
     // pipeline above for the rationale); the shingle arrays are computed for
     // the tiny survivor-doc set only, never for the raw LSH candidate flood,
@@ -1023,14 +1006,14 @@ object Dedup {
     // full text scan here — the union of two filters of the same cached
     // frame otherwise decompresses every text block twice
     val sh = allDocs.getOrElse(corpus.unionByName(newDocs))
-      .join(pairSide(survivorIds), Seq(idCol), "left_semi")
-      .select(col(idCol),
-        sort_array(graft.functions.NativeExprs.shingleSet(col(textCol), shingleK)).as("sh"))
+      .join(pairSide(survivorIds), Seq("doc_id"), "left_semi")
+      .select(col("doc_id"),
+        sort_array(graft.functions.NativeExprs.shingleSet(col("text"), shingleK)).as("sh"))
       .localCheckpoint(true)
     val shBytes = sh.agg(coalesce(sum(size(col("sh"))), lit(0L)).cast("long"))
       .head().getLong(0) * 8L
-    val shB = sh.select(col(idCol).as("id_b"), col("sh").as("sh_b"))
-    sh.select(col(idCol).as("id_a"), col("sh").as("sh_a"))
+    val shB = sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
+    sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
       .join(pairSide(pruned), Seq("id_a"))
       .join(if (shBytes <= maxSigBroadcastBytes) broadcast(shB) else shB, Seq("id_b"))
       .withColumn("jaccard",
@@ -1053,20 +1036,18 @@ object Dedup {
     * with a corpus bloom filter — the join stays the same shape; strings are
     * kept here so the result is engine-portable for the oracle gate.
     */
-  def ngramContamination(corpus: DataFrame, probes: DataFrame, n: Int,
-                         idCol: String = "doc_id",
-                         textCol: String = "text"): DataFrame = {
-    val grams = TextAnalysis.wordNgrams(col(textCol), n)
+  def ngramContamination(corpus: DataFrame, probes: DataFrame, n: Int): DataFrame = {
+    val grams = TextAnalysis.wordNgrams(col("text"), n)
     // fan out: a small parquet corpus arrives as ONE split, serializing the
     // compute-bound n-gram explode onto a single core
     val corpusGrams = fanOutSmallInput(corpus)
       .select(explode(grams).as("gram")).distinct()
     val probeGrams = fanOutSmallInput(probes)
-      .select(col(idCol), explode(array_distinct(grams)).as("gram"))
+      .select(col("doc_id"), explode(array_distinct(grams)).as("gram"))
     val matched = probeGrams.join(corpusGrams, Seq("gram"), "left_semi")
-      .groupBy(col(idCol)).agg(count(lit(1)).as("n_contaminated"))
-    probes.select(col(idCol), size(array_distinct(grams)).as("n_grams"))
-      .join(matched, Seq(idCol), "left")
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_contaminated"))
+    probes.select(col("doc_id"), size(array_distinct(grams)).as("n_grams"))
+      .join(matched, Seq("doc_id"), "left")
       .na.fill(0L, Seq("n_contaminated"))
       .withColumn("contamination",
         coalesce(col("n_contaminated").cast("double") / nullif(col("n_grams"), lit(0)),
@@ -1100,10 +1081,10 @@ object Dedup {
   /** The corpus's distinct word-n-gram frame — the verify-side input of both
     * contamination operators and the Bloom source. An ingest-time artifact
     * at scale: one corpus pass, consumed by every probe set thereafter. */
-  def corpusGramFrame(corpus: DataFrame, n: Int, textCol: String = "text"): DataFrame =
+  def corpusGramFrame(corpus: DataFrame, n: Int): DataFrame =
     // fanOut first: a single-split corpus would serialize the explode
     fanOutSmallInput(corpus)
-      .select(explode(TextAnalysis.wordNgrams(col(textCol), n)).as("gram"))
+      .select(explode(TextAnalysis.wordNgrams(col("text"), n)).as("gram"))
       .distinct()
 
   /** Engine-portable 60-bit gram hash: the first 15 hex chars of md5(gram)
@@ -1130,20 +1111,19 @@ object Dedup {
     * same hashes are replayed (the DuckDB oracle recomputes md5 itself, so
     * even a hash collision is reproduced, not diverged on).
     */
-  def interDocDupNgramStats(docs: DataFrame, n: Int, idCol: String = "doc_id",
-                            textCol: String = "text"): DataFrame = {
-    val grams = array_distinct(TextAnalysis.wordNgrams(col(textCol), n))
+  def interDocDupNgramStats(docs: DataFrame, n: Int): DataFrame = {
+    val grams = array_distinct(TextAnalysis.wordNgrams(col("text"), n))
     // fan out: a small single-split corpus would serialize the explode
     val perDoc = fanOutSmallInput(docs)
-      .select(col(idCol), explode(grams).as("gram"))
-      .select(col(idCol), portableGramHash(col("gram")).as("gh"))
+      .select(col("doc_id"), explode(grams).as("gram"))
+      .select(col("doc_id"), portableGramHash(col("gram")).as("gh"))
     val gramDf = perDoc.groupBy(col("gh")).agg(count(lit(1)).as("df"))
     val stats = perDoc.join(gramDf, Seq("gh"))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
            sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_dup_grams"))
-    docs.select(col(idCol))
-      .join(stats, Seq(idCol), "left")
+    docs.select(col("doc_id"))
+      .join(stats, Seq("doc_id"), "left")
       .na.fill(0L, Seq("n_grams", "n_dup_grams"))
       .withColumn("dup_frac",
         coalesce(col("n_dup_grams").cast("double") / nullif(col("n_grams"), lit(0)),
@@ -1170,31 +1150,30 @@ object Dedup {
     * under. The rebuild is a native two-pointer expression
     * ([[graft.functions.NativeExprs.maskedConcat]]) over the sorted removed
     * set — linear per row, not O(tokens · removed). */
-  def removeDuplicatedSpans(docs: DataFrame, n: Int, idCol: String = "doc_id",
-                            textCol: String = "text"): DataFrame = {
+  def removeDuplicatedSpans(docs: DataFrame, n: Int): DataFrame = {
     // NULL text = empty doc (0 tokens, md5("") digest) — matching the
     // oracle's LEFT JOIN + coalesce semantics instead of null-propagating
     val base = fanOutSmallInput(docs)
-      .select(col(idCol),
-              coalesce(TextAnalysis.words(col(textCol)),
+      .select(col("doc_id"),
+              coalesce(TextAnalysis.words(col("text")),
                        array().cast("array<string>")).as("toks"))
     // gram at token position i covers tokens [i, i+n-1]
-    val grams = base.select(col(idCol),
+    val grams = base.select(col("doc_id"),
       posexplode(when(size(col("toks")) >= n,
           transform(sequence(lit(0), size(col("toks")) - n),
             i => portableGramHash(concat_ws(" ", slice(col("toks"), i + 1, lit(n))))))
         .otherwise(array().cast("array<long>"))).as(Seq("pos", "gh")))
     val dupGrams = grams.groupBy(col("gh"))
-      .agg(count_distinct(col(idCol)).as("df"))
+      .agg(count_distinct(col("doc_id")).as("df"))
       .filter(col("df") >= 2)
       .select(col("gh"))
     val removed = grams.join(dupGrams, Seq("gh"), "left_semi")
-      .select(col(idCol), explode(sequence(col("pos"), col("pos") + (n - 1))).as("rm"))
-      .groupBy(col(idCol))
+      .select(col("doc_id"), explode(sequence(col("pos"), col("pos") + (n - 1))).as("rm"))
+      .groupBy(col("doc_id"))
       .agg(array_sort(collect_set(col("rm"))).as("rm"))
-    base.join(removed, Seq(idCol), "left")
+    base.join(removed, Seq("doc_id"), "left")
       .withColumn("rm", coalesce(col("rm"), array().cast("array<int>")))
-      .select(col(idCol),
+      .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_tokens"),
         size(col("rm")).cast("long").as("n_removed"),
         coalesce((size(col("toks")) - size(col("rm"))).cast("double")
@@ -1254,46 +1233,43 @@ object Dedup {
 
   /** Candidate stage of [[exactSubstringSpans]], exposed for the
     * template-flood spec: positions whose 128-bit window fingerprint pair
-    * occurs ≥ 2 times in the corpus. `base` must carry (`idCol`, `s`).
+    * occurs ≥ 2 times in the corpus. `base` must carry (`doc_id`, `s`).
     * Row count is O(true duplicated positions) + ~2^-128-per-pair collision
     * noise — NO text leaves the scan here. */
-  private[graft] def exactSubstrCandidates(base: DataFrame, minLen: Int,
-                                           idCol: String): DataFrame = {
-    val wins = base.select(col(idCol),
+  private[graft] def exactSubstrCandidates(base: DataFrame, minLen: Int): DataFrame = {
+    val wins = base.select(col("doc_id"),
         posexplode(arrays_zip(
           graft.functions.NativeExprs.windowHashes(col("s"), minLen),
           graft.functions.NativeExprs.windowHashes(col("s"), minLen,
                                                    ExactSubstrSeed2)))
           .as(Seq("pos0", "hs")))
-      .select(col(idCol), (col("pos0") + 1).as("pos"),
+      .select(col("doc_id"), (col("pos0") + 1).as("pos"),
               col("hs.0").as("h1"), col("hs.1").as("h2"))
     val dupPairs = wins.groupBy(col("h1"), col("h2")).agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select(col("h1"), col("h2"))
     wins.join(dupPairs, Seq("h1", "h2"), "left_semi")
-      .select(col(idCol), col("pos"))
+      .select(col("doc_id"), col("pos"))
   }
 
-  def exactSubstringSpans(docs: DataFrame, minLen: Int,
-                          idCol: String = "doc_id",
-                          textCol: String = "text"): DataFrame = {
+  def exactSubstringSpans(docs: DataFrame, minLen: Int): DataFrame = {
     require(minLen >= 2, "minLen must be >= 2")
     val base = fanOutSmallInput(docs)
-      .select(col(idCol), coalesce(col(textCol), lit("")).as("s"))
-    val cand = exactSubstrCandidates(base, minLen, idCol)
+      .select(col("doc_id"), coalesce(col("text"), lit("")).as("s"))
+    val cand = exactSubstrCandidates(base, minLen)
     // exact verify on candidate positions only: extract each candidate's
     // window text in one per-doc pass and re-count on the TEXT — sorted
     // positions keep the extractor's access pattern forward-only
-    val candText = cand.groupBy(col(idCol))
+    val candText = cand.groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("pos"))).as("ps"))
-      .join(base, Seq(idCol))
-      .select(col(idCol), explode(arrays_zip(col("ps"),
+      .join(base, Seq("doc_id"))
+      .select(col("doc_id"), explode(arrays_zip(col("ps"),
         graft.functions.NativeExprs.substringsAt(col("s"), col("ps"), minLen)
           .as("ws"))).as("z"))
-      .select(col(idCol), col("z.ps").as("pos"), col("z.ws").as("w"))
+      .select(col("doc_id"), col("z.ps").as("pos"), col("z.ws").as("w"))
     val dupWindows = candText.groupBy(col("w")).agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select(col("w"))
     val verified = candText.join(dupWindows, Seq("w"), "left_semi")
-      .select(col(idCol), col("pos"))
+      .select(col("doc_id"), col("pos"))
     // gaps-and-islands on COVERAGE, not start-adjacency: starts p < q share
     // one span iff q ≤ p + minLen (q's window overlaps or abuts p's), so a
     // new span begins exactly where the gap between consecutive starts
@@ -1301,24 +1277,24 @@ object Dedup {
     // "spans" (starts {1, 3} with start 2 unduplicated cover [1, L] ∪
     // [3, L+2] — ONE maximal duplicated region) and could sum dup_chars
     // past n_chars.
-    val byDoc = Window.partitionBy(col(idCol)).orderBy(col("pos"))
+    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val spans = verified
       .withColumn("brk",
         when(col("pos") - lag(col("pos"), 1).over(byDoc) > minLen, 1).otherwise(0))
       .withColumn("g", sum(col("brk")).over(
         byDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col(idCol), col("g"))
+      .groupBy(col("doc_id"), col("g"))
       .agg(min(col("pos")).as("sp"), (max(col("pos")) + minLen - 1).as("ep"))
-    val perDoc = spans.groupBy(col(idCol))
+    val perDoc = spans.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_dup_spans"),
            sum(col("ep") - col("sp") + 1).as("dup_chars"),
            md5(array_join(transform(
              array_sort(collect_list(struct(col("sp"), col("ep")))),
              x => concat_ws(":", x("sp").cast("string"), x("ep").cast("string"))),
              ",").cast("binary")).as("span_digest"))
-    base.select(col(idCol), char_length(col("s")).cast("long").as("n_chars"))
-      .join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
+    base.select(col("doc_id"), char_length(col("s")).cast("long").as("n_chars"))
+      .join(perDoc, Seq("doc_id"), "left")
+      .select(col("doc_id"),
         col("n_chars"),
         coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"),
         coalesce(col("dup_chars"), lit(0L)).cast("long").as("dup_chars"),
@@ -1375,26 +1351,24 @@ object Dedup {
 
   def ngramContaminationBloom(corpus: DataFrame, probes: DataFrame, n: Int,
                               expectedGrams: Long = 0L, fpp: Double = 0.01,
-                              idCol: String = "doc_id",
-                              textCol: String = "text",
                               prebuilt: Option[(DataFrame, Array[Byte])] = None): DataFrame = {
-    val grams = TextAnalysis.wordNgrams(col(textCol), n)
+    val grams = TextAnalysis.wordNgrams(col("text"), n)
     // `prebuilt` = the (distinct-gram frame, Bloom bytes) ingest artifacts —
     // the production shape; built here once (eagerly, shared by the sizing
     // count, the build, and the semi join) only when the caller has none.
     val (corpusGrams, bloomBytes) = prebuilt.getOrElse {
-      val g = corpusGramFrame(corpus, n, textCol).localCheckpoint(true)
+      val g = corpusGramFrame(corpus, n).localCheckpoint(true)
       val items = if (expectedGrams > 0) expectedGrams else math.max(1L, g.count())
       (g, buildGramBloom(g, items, fpp))
     }
     val probeGrams = fanOutSmallInput(probes)
-      .select(col(idCol), explode(array_distinct(grams)).as("gram"))
+      .select(col("doc_id"), explode(array_distinct(grams)).as("gram"))
       // map-side shed: rejected grams never reach the semi-join exchange
       .filter(mightContainHash(bloomBytes, xxhash64(col("gram"))))
     val matched = probeGrams.join(corpusGrams, Seq("gram"), "left_semi")
-      .groupBy(col(idCol)).agg(count(lit(1)).as("n_contaminated"))
-    probes.select(col(idCol), size(array_distinct(grams)).as("n_grams"))
-      .join(matched, Seq(idCol), "left")
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_contaminated"))
+    probes.select(col("doc_id"), size(array_distinct(grams)).as("n_grams"))
+      .join(matched, Seq("doc_id"), "left")
       .na.fill(0L, Seq("n_contaminated"))
       .withColumn("contamination",
         coalesce(col("n_contaminated").cast("double") / nullif(col("n_grams"), lit(0)),
@@ -1429,15 +1403,14 @@ object Dedup {
     * The hash is [[Sampling.Knuth]] multiplicative (all-integer,
     * partitioning-independent, reproducible in any engine).
     *
-    * Returns (idCol, cluster_id, split) for every input doc,
+    * Returns (doc_id, cluster_id, split) for every input doc,
     * split ∈ {"test", "train"} with ~testPct% of CLUSTERS in test. */
-  def leakageFreeSplit(docs: DataFrame, pairs: DataFrame, testPct: Int,
-                       idCol: String = "doc_id"): DataFrame = {
+  def leakageFreeSplit(docs: DataFrame, pairs: DataFrame, testPct: Int): DataFrame = {
     require(testPct >= 0 && testPct <= 100, "testPct must be in [0, 100]")
-    val clusters = clusterNearDuplicates(pairs).withColumnRenamed("id", idCol)
-    docs.select(col(idCol))
-      .join(clusters, Seq(idCol), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col(idCol)))
+    val clusters = clusterNearDuplicates(pairs).withColumnRenamed("id", "doc_id")
+    docs.select(col("doc_id"))
+      .join(clusters, Seq("doc_id"), "left")
+      .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
       .withColumn("split",
         when(pmod(col("cluster_id") * lit(Sampling.Knuth), lit(100L)) < testPct,
              lit("test")).otherwise(lit("train")))
@@ -1545,19 +1518,18 @@ object Dedup {
     * Hamming verifies. Same ban-the-n² trick as LSH banding.
     */
   def simhashNearDuplicates(docs: DataFrame, maxHamming: Int = 3,
-                            textCol: String = "text", idCol: String = "doc_id",
                             chunks: Int = 4): DataFrame = {
     val bits = 64 / chunks
-    val hashed = docs.select(col(idCol), simhash64(col(textCol)).as("sh"))
-    val banded = hashed.select(col(idCol), col("sh"),
+    val hashed = docs.select(col("doc_id"), simhash64(col("text")).as("sh"))
+    val banded = hashed.select(col("doc_id"), col("sh"),
       explode(array((0 until chunks).map { c =>
         struct(lit(c).as("chunk"),
                shiftright(col("sh"), c * bits)
                  .bitwiseAND(lit((1L << bits) - 1)).as("key"))
       }: _*)).as("cb"))
-      .select(col(idCol), col("sh"), col("cb.chunk"), col("cb.key"))
-    val a = banded.select(col("chunk"), col("key"), col(idCol).as("id_a"), col("sh").as("sh_a"))
-    val b = banded.select(col("chunk"), col("key"), col(idCol).as("id_b"), col("sh").as("sh_b"))
+      .select(col("doc_id"), col("sh"), col("cb.chunk"), col("cb.key"))
+    val a = banded.select(col("chunk"), col("key"), col("doc_id").as("id_a"), col("sh").as("sh_a"))
+    val b = banded.select(col("chunk"), col("key"), col("doc_id").as("id_b"), col("sh").as("sh_b"))
     a.join(b, Seq("chunk", "key"))
       .filter(col("id_a") < col("id_b"))
       .dropDuplicates("id_a", "id_b")

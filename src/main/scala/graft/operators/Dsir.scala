@@ -46,11 +46,10 @@ object Dsir {
     * bigrams (the paper's feature set), hashed portable, WITH multiplicity
     * (bag model). `extra` columns (e.g. a target-membership flag) ride
     * along so training needs no join back to the docs. */
-  def features(docs: DataFrame, idCol: String = "doc_id",
-               textCol: String = "text", extra: Seq[Column] = Nil): DataFrame = {
-    val ws = TextAnalysis.words(col(textCol))
-    docs.select(col(idCol) +: extra :+
-        explode(concat(ws, TextAnalysis.wordNgrams(col(textCol), 2))).as("gram"): _*)
+  def features(docs: DataFrame, extra: Seq[Column] = Nil): DataFrame = {
+    val ws = TextAnalysis.words(col("text"))
+    docs.select(col("doc_id") +: extra :+
+        explode(concat(ws, TextAnalysis.wordNgrams(col("text"), 2))).as("gram"): _*)
       .withColumn("b",
         pmod(Dedup.portableGramHash(col("gram")), lit(Buckets.toLong)).cast("int"))
       .drop("gram")
@@ -77,19 +76,19 @@ object Dsir {
   /** Per-doc (id, n_feats, dsir_score): integer sum of the doc's feature
     * weights. Docs with zero features never appear (they cannot be scored
     * — mirrored by the oracle's inner join). */
-  def docScores(feats: DataFrame, w: Weights, idCol: String = "doc_id"): DataFrame = {
+  def docScores(feats: DataFrame, w: Weights): DataFrame = {
     val wMap = typedLit(w.byBucket)
     feats
       .withColumn("__w", coalesce(element_at(wMap, col("b")), lit(w.default)))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_feats"), sum(col("__w")).as("dsir_score"))
   }
 
   /** Deterministic top-⌈n/5⌉ resample by (score desc, id asc): the kept
     * frame plus the kept count. Distributed rank — no global window. */
-  def select(scored: DataFrame, idCol: String = "doc_id"): (DataFrame, Long) = {
+  def select(scored: DataFrame): (DataFrame, Long) = {
     val (ranked, n) = Ranks.globalRowNumber(
-      scored, Seq(col("dsir_score").desc, col(idCol)), "__rank")
+      scored, Seq(col("dsir_score").desc, col("doc_id")), "__rank")
     val k = (n + 4) / 5
     (ranked.filter(col("__rank") <= k).drop("__rank"), k)
   }

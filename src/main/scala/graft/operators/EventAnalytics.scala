@@ -16,23 +16,21 @@ object EventAnalytics {
     * key, per-partition sort, no state blow-up. (Streaming twin:
     * `session_window()`, see StreamingSegments.) */
   def sessionize(events: DataFrame, gapSeconds: Long,
-                 userCol: String = "user_id", tsCol: String = "ts",
                  tieBreak: Seq[String] = Seq("event_id")): DataFrame = {
-    val order = (col(tsCol) +: tieBreak.map(col)).map(c => c.asc)
-    val w = Window.partitionBy(col(userCol)).orderBy(order: _*)
-    val prevTs = lag(col(tsCol), 1).over(w)
+    val order = (col("ts") +: tieBreak.map(col)).map(c => c.asc)
+    val w = Window.partitionBy(col("user_id")).orderBy(order: _*)
+    val prevTs = lag(col("ts"), 1).over(w)
     val isStart = when(prevTs.isNull ||
-      unix_timestamp(col(tsCol)) - unix_timestamp(prevTs) > gapSeconds, 1L).otherwise(0L)
+      unix_timestamp(col("ts")) - unix_timestamp(prevTs) > gapSeconds, 1L).otherwise(0L)
     events.withColumn("session_id",
       sum(isStart).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
   /** Per-user session stats over [[sessionize]] output. */
-  def sessionStats(sessionized: DataFrame, userCol: String = "user_id",
-                   tsCol: String = "ts"): DataFrame =
-    sessionized.groupBy(col(userCol), col("session_id"))
+  def sessionStats(sessionized: DataFrame): DataFrame =
+    sessionized.groupBy(col("user_id"), col("session_id"))
       .agg(count(lit(1)).as("n_events"),
-           (unix_timestamp(max(col(tsCol))) - unix_timestamp(min(col(tsCol))))
+           (unix_timestamp(max(col("ts"))) - unix_timestamp(min(col("ts"))))
              .as("duration_s"))
 
   /** ClickHouse-style `windowFunnel(window)(ts, cond1, cond2, …)`: the
@@ -53,8 +51,6 @@ object EventAnalytics {
     * are unchanged (property-tested).
     */
   def windowFunnel(events: DataFrame, steps: Seq[String], windowSeconds: Long,
-                   userCol: String = "user_id", typeCol: String = "event_type",
-                   tsCol: String = "ts",
                    maxEventsPerUser: Int = 1 << 20,
                    mode: String = "default"): DataFrame = {
     require(steps.length < 16, "funnel depth limited to 15 steps (4-bit encoding)")
@@ -71,22 +67,22 @@ object EventAnalytics {
     // keeps NON-funnel events (as step 0): "no interventions of other
     // events" means the chain must be consecutive in the full stream.
     val filtered =
-      if (modeId == 1) events else events.filter(col(typeCol).isin(steps: _*))
+      if (modeId == 1) events else events.filter(col("event_type").isin(steps: _*))
     // strict_increase keeps the DEFAULT second granularity: strictness is
     // only observable where ties exist, and second-floored times tie often
     val (tExpr, window) =
-      if (modeId == 0 || modeId == 3) (unix_timestamp(col(tsCol)), windowSeconds)
-      else (unix_micros(col(tsCol)), windowSeconds * 1000000L)
+      if (modeId == 0 || modeId == 3) (unix_timestamp(col("ts")), windowSeconds)
+      else (unix_micros(col("ts")), windowSeconds * 1000000L)
     val tagged = filtered
-      .select(col(userCol), tExpr.as("__t"),
-              coalesce(element_at(stepIdx, col(typeCol)) + 1, lit(0))
+      .select(col("user_id"), tExpr.as("__t"),
+              coalesce(element_at(stepIdx, col("event_type")) + 1, lit(0))
                 .cast("int").as("__step")) // 1-based; 0 = non-funnel event
     // the key keeps its original type/name; the DP runs as an expression over
     // the sorted (t, step) array, so the shuffle carries 12-byte pairs
-    tagged.groupBy(col(userCol))
+    tagged.groupBy(col("user_id"))
       .agg(graft.functions.NativeExprs.boundedEventSeq(
              struct(col("__t"), col("__step")), maxEventsPerUser).as("__seq"))
-      .select(col(userCol),
+      .select(col("user_id"),
               graft.functions.NativeExprs.funnelLevel(
                 col("__seq"), steps.length, window, modeId).as("funnel_level"))
   }
@@ -96,12 +92,10 @@ object EventAnalytics {
     * the unbounded-window special case of the funnel DP, so it inherits the
     * same hard-bounded per-user state. */
   def sequenceMatch(events: DataFrame, steps: Seq[String],
-                    userCol: String = "user_id", typeCol: String = "event_type",
-                    tsCol: String = "ts",
                     maxEventsPerUser: Int = 1 << 20): DataFrame =
     windowFunnel(events, steps, windowSeconds = Long.MaxValue / 4,
-                 userCol, typeCol, tsCol, maxEventsPerUser)
-      .select(col(userCol), (col("funnel_level") === steps.length).as("matched"))
+                 maxEventsPerUser = maxEventsPerUser)
+      .select(col("user_id"), (col("funnel_level") === steps.length).as("matched"))
 
   /** ClickHouse `sequenceCount('(?1)(?2)…')`: the number of NON-OVERLAPPING
     * in-order step completions per user (unbounded window) — the counting
@@ -112,20 +106,18 @@ object EventAnalytics {
     * corpus contract; second truncation can collide); per-user state rides
     * the same bounded sorted-collect as the funnel DP. */
   def sequenceCount(events: DataFrame, steps: Seq[String],
-                    userCol: String = "user_id", typeCol: String = "event_type",
-                    tsCol: String = "ts",
                     maxEventsPerUser: Int = 1 << 20): DataFrame = {
     require(steps.distinct.length == steps.length, "steps must be distinct")
     val stepIdx = typedLit(steps.zipWithIndex.toMap)
     events
-      .filter(col(typeCol).isin(steps: _*))
-      .select(col(userCol),
-              unix_micros(col(tsCol)).as("__t"),
-              (element_at(stepIdx, col(typeCol)) + 1).cast("int").as("__step"))
-      .groupBy(col(userCol))
+      .filter(col("event_type").isin(steps: _*))
+      .select(col("user_id"),
+              unix_micros(col("ts")).as("__t"),
+              (element_at(stepIdx, col("event_type")) + 1).cast("int").as("__step"))
+      .groupBy(col("user_id"))
       .agg(graft.functions.NativeExprs.boundedEventSeq(
              struct(col("__t"), col("__step")), maxEventsPerUser).as("__seq"))
-      .select(col(userCol),
+      .select(col("user_id"),
               graft.functions.NativeExprs.sequenceCount(
                 col("__seq"), steps.length).as("n_matches"))
   }
@@ -136,17 +128,14 @@ object EventAnalytics {
     * or nothing follows it. The whole stream rides the same bounded
     * per-key sorted collect as the funnel DPs; matching is exact string
     * equality against chain literals, so both engines replay it verbatim. */
-  def sequenceNextNode(events: DataFrame, chain: Seq[String],
-                       keyCol: String = "user_id", tsCol: String = "ts",
-                       idCol: String = "event_id",
-                       typeCol: String = "event_type"): DataFrame = {
+  def sequenceNextNode(events: DataFrame, chain: Seq[String]): DataFrame = {
     require(chain.nonEmpty, "chain must be non-empty")
     val k = chain.length
     val rows = array_sort(collect_list(struct(
-      unix_micros(col(tsCol)).as("t"), col(idCol).as("id"),
-      col(typeCol).as("e"))))
-    val grouped = events.select(col(keyCol), col(tsCol), col(idCol), col(typeCol))
-      .groupBy(col(keyCol)).agg(rows.as("__r"))
+      unix_micros(col("ts")).as("t"), col("event_id").as("id"),
+      col("event_type").as("e"))))
+    val grouped = events.select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .groupBy(col("user_id")).agg(rows.as("__r"))
     val types = transform(col("__r"), r => r.getField("e"))
     val n = size(types)
     def matchAt(i: Column): Column =
@@ -158,19 +147,18 @@ object EventAnalytics {
     val hits = when(n >= k + 1, filter(sequence(lit(1), n - k), i => matchAt(i)))
     val nextNode = when(size(hits) > 0,
       element_at(types, element_at(hits, lit(1)) + lit(k)))
-    grouped.select(col(keyCol), nextNode.as("next_node"))
+    grouped.select(col("user_id"), nextNode.as("next_node"))
   }
 
   /** ClickHouse-style `retention(cond0, cond1, …)`: per user, whether the
     * anchor condition held, and for each subsequent condition whether BOTH it
     * and the anchor held — aggregated to cohort counts. Conditions are
     * arbitrary boolean Columns over the event row. */
-  def retention(events: DataFrame, conds: Seq[Column],
-                userCol: String = "user_id"): DataFrame = {
+  def retention(events: DataFrame, conds: Seq[Column]): DataFrame = {
     val flags = conds.zipWithIndex.map { case (c, i) =>
       max(when(c, 1).otherwise(0)).as(s"r$i")
     }
-    val perUser = events.groupBy(col(userCol)).agg(flags.head, flags.tail: _*)
+    val perUser = events.groupBy(col("user_id")).agg(flags.head, flags.tail: _*)
     val outs = conds.indices.map { i =>
       sum(when(col("r0") === 1 && col(s"r$i") === 1, 1L).otherwise(0L)).as(s"retained_$i")
     }
@@ -183,11 +171,10 @@ object EventAnalytics {
     * days after their first day. Two aggregations and one equi-join on the
     * user key (the cohort table is per-user, joined back to events), all
     * integer — no windows, no per-day user sets carried anywhere. */
-  def cohortMatrix(events: DataFrame, userCol: String = "user_id",
-                   tsCol: String = "ts"): DataFrame = {
-    val days = events.select(col(userCol), to_date(col(tsCol)).as("day")).distinct()
-    val cohorts = days.groupBy(col(userCol)).agg(min(col("day")).as("cohort_day"))
-    days.join(cohorts, Seq(userCol))
+  def cohortMatrix(events: DataFrame): DataFrame = {
+    val days = events.select(col("user_id"), to_date(col("ts")).as("day")).distinct()
+    val cohorts = days.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
+    days.join(cohorts, Seq("user_id"))
       .groupBy(col("cohort_day"),
                datediff(col("day"), col("cohort_day")).as("offset"))
       .agg(count(lit(1)).as("n_active"))
@@ -203,19 +190,17 @@ object EventAnalytics {
     * arithmetic with zero rounding steps, surfaced through the digit
     * string. The final division is the only IEEE op. One per-user window
     * (lead), one aggregation — both on the user partition key. */
-  def timeWeightedAvg(events: DataFrame, userCol: String = "user_id",
-                      tsCol: String = "ts", valueCol: String = "value",
-                      tieBreak: String = "event_id"): DataFrame = {
-    val w = Window.partitionBy(col(userCol))
-      .orderBy(col(tsCol).asc, col(tieBreak).asc)
-    val dt = (unix_timestamp(lead(col(tsCol), 1).over(w)) -
-              unix_timestamp(col(tsCol)))
-    val dv = col(valueCol).cast("string").cast("decimal(12,2)")
+  def timeWeightedAvg(events: DataFrame, tieBreak: String = "event_id"): DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts").asc, col(tieBreak).asc)
+    val dt = (unix_timestamp(lead(col("ts"), 1).over(w)) -
+              unix_timestamp(col("ts")))
+    val dv = col("value").cast("string").cast("decimal(12,2)")
     events
-      .select(col(userCol), col(tsCol), col(tieBreak), col(valueCol))
+      .select(col("user_id"), col("ts"), col(tieBreak), col("value"))
       .withColumn("__dt", dt)
       .filter(col("__dt").isNotNull)
-      .groupBy(col(userCol))
+      .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_intervals"),
            sum(col("__dt")).as("total_seconds"),
            sum(dv * col("__dt").cast("decimal(20,0)"))
@@ -274,41 +259,34 @@ object EventAnalytics {
     * walk (one JVM loop, exactly-sized output buffer — the LTTB promotion
     * playbook); [[decayFoldChain]] below is its bit-exact HOF reference,
     * parity-tested in EmaSpec. */
-  def exponentialMovingStats(events: DataFrame, keyCol: String = "user_id",
-                             tsCol: String = "ts", idCol: String = "event_id",
-                             valCol: String = "value"): DataFrame =
-    exponentialMovingStatsImpl(events, keyCol, tsCol, idCol, valCol,
-      graft.functions.NativeExprs.decayFold)
+  def exponentialMovingStats(events: DataFrame): DataFrame =
+    exponentialMovingStatsImpl(events, graft.functions.NativeExprs.decayFold)
 
   /** HOF twin of [[exponentialMovingStats]] — the interpreted reference
     * form the parity spec runs against the native walk. */
-  def exponentialMovingStatsChain(events: DataFrame, keyCol: String = "user_id",
-                                  tsCol: String = "ts", idCol: String = "event_id",
-                                  valCol: String = "value"): DataFrame =
-    exponentialMovingStatsImpl(events, keyCol, tsCol, idCol, valCol,
-      decayFoldChain)
+  def exponentialMovingStatsChain(events: DataFrame): DataFrame =
+    exponentialMovingStatsImpl(events, decayFoldChain)
 
   /** The collected per-key decay-walk input array: (ts, id, epoch day,
     * double value) sorted — ts then id orders the run; day is exact
     * (µs remainder subtracted before the division, so the double divide is
     * integer-valued — no floor-after-rounding hazard at midnight). */
-  def decayRows(tsCol: String, idCol: String, valCol: String): Column = {
+  def decayRows: Column = {
     val DayUs = 86400000000L
-    val us = unix_micros(col(tsCol))
+    val us = unix_micros(col("ts"))
     val day = ((us - pmod(us, lit(DayUs))) / lit(DayUs)).cast("long")
     array_sort(collect_list(struct(
-      col(tsCol).as("ts"), col(idCol).as("id"), day.as("day"),
-      col(valCol).cast("double").as("v"))))
+      col("ts").as("ts"), col("event_id").as("id"), day.as("day"),
+      col("value").cast("double").as("v"))))
   }
 
   private def exponentialMovingStatsImpl(
-      events: DataFrame, keyCol: String, tsCol: String, idCol: String,
-      valCol: String, fold: Column => Column): DataFrame =
-    events.select(col(keyCol), col(tsCol), col(idCol), col(valCol))
-      .groupBy(col(keyCol))
-      .agg(decayRows(tsCol, idCol, valCol).as("__rows"))
-      .select(col(keyCol), explode(fold(col("__rows"))).as("r"))
-      .select(col("r.id").as(idCol), col(keyCol),
+      events: DataFrame, fold: Column => Column): DataFrame =
+    events.select(col("user_id"), col("ts"), col("event_id"), col("value"))
+      .groupBy(col("user_id"))
+      .agg(decayRows.as("__rows"))
+      .select(col("user_id"), explode(fold(col("__rows"))).as("r"))
+      .select(col("r.id").as("event_id"), col("user_id"),
               col("r.ema").as("ema"), col("r.tds").as("tds"),
               col("r.tdavg").as("tdavg"), col("r.tdmax").as("tdmax"),
               col("r.tdn").as("tdcount"),
@@ -444,27 +422,25 @@ object EventAnalytics {
 
   /** The collected per-key point array every LTTB form consumes:
     * (abs µs, id, centi-value) sorted — id uniquifies timestamp ties. */
-  def lttbPoints(tsCol: String, idCol: String, valCol: String): Column = {
-    val v100 = (col(valCol).cast("string").cast("decimal(12,2)") * lit(100))
+  def lttbPoints: Column = {
+    val v100 = (col("value").cast("string").cast("decimal(12,2)") * lit(100))
       .cast("long")
     array_sort(collect_list(struct(
-      unix_micros(col(tsCol)).as("x"), col(idCol).as("id"), v100.as("y"))))
+      unix_micros(col("ts")).as("x"), col("event_id").as("id"), v100.as("y"))))
   }
 
-  def lttbDownsample(events: DataFrame, k: Int, keyCol: String = "user_id",
-                     tsCol: String = "ts", idCol: String = "event_id",
-                     valCol: String = "value"): DataFrame = {
+  def lttbDownsample(events: DataFrame, k: Int): DataFrame = {
     require(k >= 3, "LTTB needs k >= 3 (first + last + one bucket)")
-    val grouped = events.select(col(keyCol), col(tsCol), col(idCol), col(valCol))
-      .groupBy(col(keyCol))
-      .agg(lttbPoints(tsCol, idCol, valCol).as("__p"))
+    val grouped = events.select(col("user_id"), col("ts"), col("event_id"), col("value"))
+      .groupBy(col("user_id"))
+      .agg(lttbPoints.as("__p"))
     // native walk (one JVM loop per key); lttbChain is the parity reference
     val sel = graft.functions.NativeExprs.lttbSelect(col("__p"), k)
     grouped
-      .select(col(keyCol),
+      .select(col("user_id"),
         posexplode(transform(sel, i => element_at(col("__p"), i + lit(1))))
           .as(Seq("pos0", "p")))
-      .select(col(keyCol), (col("pos0") + 1).cast("long").as("pos"),
+      .select(col("user_id"), (col("pos0") + 1).cast("long").as("pos"),
               col("p.x").as("sel_us"), col("p.y").as("sel_v100"))
   }
 

@@ -120,10 +120,9 @@ object Multimodal {
 
   /** Synthesize a media table from any table with an id + string column —
     * the bytes are the UTF-8 encoding (real binary plumbing, fake media). */
-  def syntheticMediaTable(docs: DataFrame, idCol: String = "doc_id",
-                          textCol: String = "text"): DataFrame =
-    docs.select(col(idCol).cast("long").as("media_id"),
-                encode(col(textCol), "UTF-8").as("content"))
+  def syntheticMediaTable(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").cast("long").as("media_id"),
+                encode(col("text"), "UTF-8").as("content"))
 
   /** Decode pass: `mapPartitions` over the typed rows — the batched-UDF
     * shape. Partition-local codec reuse; output is columnar-friendly.

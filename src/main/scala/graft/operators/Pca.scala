@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Embedding PCA — the standard dimensionality-reduction stage between
@@ -56,10 +55,10 @@ object Pca {
     * dim ≳ 512 (260k pairs/row) should promote this to a
     * TypedImperativeAggregate with a dim×dim buffer (the KeyedMapAgg
     * pattern) — same exchange shape, no row multiplication. */
-  def moments(corpus: DataFrame, dim: Int, vecCol: String = "embedding")
+  def moments(corpus: DataFrame, dim: Int)
       : (Long, Array[BigInt], Array[Array[BigInt]]) = {
     val scale = lit((1L << ScaleBits).toDouble)
-    val z = transform(col(vecCol).cast("array<double>"),
+    val z = transform(col("embedding").cast("array<double>"),
                       x => floor(x * scale + lit(0.5)).cast("long"))
     val d = lit(dim)
     val tri = flatten(transform(sequence(lit(0), lit(dim - 1)), p =>
@@ -139,9 +138,8 @@ object Pca {
   /** Train an r-component model: exact moments → covariance (BigInt
     * n·G − S·Sᵀ, converted once to double with a fixed normalizer) →
     * Jacobi → top-r components by (eigenvalue desc, index asc). */
-  def train(corpus: DataFrame, dim: Int, r: Int,
-            vecCol: String = "embedding"): Model = {
-    val (n, s1, g) = moments(corpus, dim, vecCol)
+  def train(corpus: DataFrame, dim: Int, r: Int): Model = {
+    val (n, s1, g) = moments(corpus, dim)
     val nb = BigInt(n)
     val norm = n.toDouble * n.toDouble * (1L << (2 * ScaleBits)).toDouble
     val cov = Array.tabulate(dim, dim) { (p, q) =>
@@ -178,12 +176,11 @@ object Pca {
   }
 
   /** Flat (vec_id, comp, proj) projection of the whole corpus. */
-  def projectAll(corpus: DataFrame, model: Model, idCol: String = "vec_id",
-                 vecCol: String = "embedding"): DataFrame =
-    corpus.select(col(idCol),
-        posexplode(graft.functions.NativeExprs.pcaProject(col(vecCol), model))
+  def projectAll(corpus: DataFrame, model: Model): DataFrame =
+    corpus.select(col("vec_id"),
+        posexplode(graft.functions.NativeExprs.pcaProject(col("embedding"), model))
           .as(Seq("comp", "proj")))
-      .select(col(idCol), col("comp").cast("long").as("comp"), col("proj"))
+      .select(col("vec_id"), col("comp").cast("long").as("comp"), col("proj"))
 
   /** Reduced-dim ANN: prescreen by the projected-space dot product (pinned
     * comp-order chain), exact full-width cosine re-rank of the top-candK —
@@ -191,33 +188,16 @@ object Pca {
     * in the hot scan instead of dim floats (at scale the projection is a
     * persisted ingest artifact, so the prescreen never touches raw width). */
   def pcaTopK(corpus: DataFrame, queries: DataFrame, k: Int, candK: Int,
-              model: Model, idCol: String = "vec_id",
-              vecCol: String = "embedding"): DataFrame = {
+              model: Model): DataFrame = {
     val r = model.comps.length
     def dotChain(a: Column, b: Column): Column =
       (0 until r).map(c =>
         element_at(a, c + 1) * element_at(b, c + 1)).reduceLeft(_ + _)
-    val pc = corpus.select(col(idCol).as("neighbor_id"),
-                           graft.functions.NativeExprs.pcaProject(col(vecCol), model).as("c_p"))
-    val pq = queries.select(col(idCol).as("query_id"),
-                            graft.functions.NativeExprs.pcaProject(col(vecCol), model).as("q_p"))
-    val wPre = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    val cand = pc.join(broadcast(pq), col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", dotChain(col("q_p"), col("c_p")))
-      .withColumn("prn", row_number().over(wPre))
-      .filter(col("prn") <= candK)
-      .select(col("query_id"), col("neighbor_id"))
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    cand.join(broadcast(qv), Seq("query_id"))
-      .join(cv, Seq("neighbor_id"))
-      .withColumn("cosine", Similarity.cosine(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-              round(col("cosine"), 4).as("cosine"))
+    val pc = corpus.select(col("vec_id").as("neighbor_id"),
+                           graft.functions.NativeExprs.pcaProject(col("embedding"), model).as("c_p"))
+    val pq = queries.select(col("vec_id").as("query_id"),
+                            graft.functions.NativeExprs.pcaProject(col("embedding"), model).as("q_p"))
+    Similarity.prescreenTopK(corpus, queries, pc, pq,
+      dotChain(col("q_p"), col("c_p")), candK, k)
   }
 }

@@ -50,10 +50,9 @@ object QualityClassifier {
   /** Batch-gradient-descent training: w ← w − lr·∇/n per iteration, zero
     * init. One small aggregation job per iteration; gradients decimal-summed
     * so the weights are partitioning-independent. */
-  def train(docs: DataFrame, label: Column, iters: Int = 30, lr: Double = 1.0,
-            textCol: String = "text"): Array[Double] = {
+  def train(docs: DataFrame, label: Column, iters: Int = 30, lr: Double = 1.0): Array[Double] = {
     val k = FeatureNames.length
-    val fs = features(col(textCol))
+    val fs = features(col("text"))
     // materialize the feature frame once: 20+ passes over re-derived regex
     // features would dominate; a production pipeline persists this table
     val data = docs
@@ -81,10 +80,9 @@ object QualityClassifier {
 
   /** Scoring pass: the linear margin (left-associated w·x fold — the exact
     * IEEE sequence an oracle replays) and the pass flag `margin > 0`. */
-  def score(docs: DataFrame, weights: Array[Double],
-            textCol: String = "text"): DataFrame = {
+  def score(docs: DataFrame, weights: Array[Double]): DataFrame = {
     require(weights.length == FeatureNames.length, "weight/feature arity mismatch")
-    val fs = features(col(textCol))
+    val fs = features(col("text"))
     val z = fs.zip(weights).map { case (f, wi) => f * lit(wi) }.reduce(_ + _)
     docs.withColumn("margin", z).withColumn("pass", col("margin") > lit(0.0))
   }

@@ -21,10 +21,9 @@ object Segments {
   /** Naive membership (variant 1): count matching events per user, threshold.
     * `count() >= N` of /root/reference/src/1-naive.test.ts:74-77.
     */
-  def naive(events: DataFrame, seg: SegmentDef,
-            userCol: String = "user_id", typeCol: String = "event_type"): DataFrame =
-    events.filter(col(typeCol) === seg.eventType)
-      .groupBy(col(userCol))
+  def naive(events: DataFrame, seg: SegmentDef): DataFrame =
+    events.filter(col("event_type") === seg.eventType)
+      .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .withColumn("in_segment", col("n_events") >= seg.minCount)
 
@@ -33,38 +32,33 @@ object Segments {
     * membership. `uniq(message_id) >= N` of
     * /root/reference/src/2-idempotent.test.ts:84-91, with exact distinct.
     */
-  def idempotentExact(events: DataFrame, seg: SegmentDef,
-                      userCol: String = "user_id", typeCol: String = "event_type",
-                      idCol: String = "event_id"): DataFrame =
-    events.filter(col(typeCol) === seg.eventType)
-      .groupBy(col(userCol))
-      .agg(count_distinct(col(idCol)).as("n_unique"))
+  def idempotentExact(events: DataFrame, seg: SegmentDef): DataFrame =
+    events.filter(col("event_type") === seg.eventType)
+      .groupBy(col("user_id"))
+      .agg(count_distinct(col("event_id")).as("n_unique"))
       .withColumn("in_segment", col("n_unique") >= seg.minCount)
 
   /** Idempotent membership, approximate — the faithful mapping of ClickHouse
     * `uniq` (HLL-family sketch). At 100 TB this is the variant to run: fixed
     * memory per group vs `count_distinct`'s exact (set-carrying) shuffle.
     */
-  def idempotentApprox(events: DataFrame, seg: SegmentDef,
-                       userCol: String = "user_id", typeCol: String = "event_type",
-                       idCol: String = "event_id"): DataFrame =
-    events.filter(col(typeCol) === seg.eventType)
-      .groupBy(col(userCol))
-      .agg(Sketches.uniq(col(idCol)).as("n_unique"))
+  def idempotentApprox(events: DataFrame, seg: SegmentDef): DataFrame =
+    events.filter(col("event_type") === seg.eventType)
+      .groupBy(col("user_id"))
+      .agg(Sketches.uniq(col("event_id")).as("n_unique"))
       .withColumn("in_segment", col("n_unique") >= seg.minCount)
 
   /** Evaluate MANY segment definitions in ONE pass over the event log —
     * conditional aggregation instead of one scan per segment. At 100 TB the
     * scan dominates, so N segments for the price of one shuffle. Output is
     * wide: per user, `<eventType>_n` and `<eventType>_in` per definition. */
-  def evaluateMany(events: DataFrame, segs: Seq[SegmentDef],
-                   userCol: String = "user_id", typeCol: String = "event_type"): DataFrame = {
+  def evaluateMany(events: DataFrame, segs: Seq[SegmentDef]): DataFrame = {
     require(segs.nonEmpty)
     val counts = segs.map(sg =>
-      count(when(col(typeCol) === sg.eventType, 1)).as(s"${sg.eventType}_n"))
+      count(when(col("event_type") === sg.eventType, 1)).as(s"${sg.eventType}_n"))
     val withFlags = segs.foldLeft(
-      events.filter(col(typeCol).isin(segs.map(_.eventType): _*))
-        .groupBy(col(userCol))
+      events.filter(col("event_type").isin(segs.map(_.eventType): _*))
+        .groupBy(col("user_id"))
         .agg(counts.head, counts.tail: _*)) { (df, sg) =>
       df.withColumn(s"${sg.eventType}_in", col(s"${sg.eventType}_n") >= sg.minCount)
     }
@@ -79,15 +73,11 @@ object Segments {
     * (/root/reference/src/2-idempotent.test.ts:94-101). They differ exactly on
     * users who have LEFT the segment.
     */
-  def membersAnyHistorical(assignments: DataFrame,
-                           userCol: String = "user_id", valueCol: String = "value"): DataFrame =
-    assignments.filter(col(valueCol)).select(col(userCol)).distinct()
+  def membersAnyHistorical(assignments: DataFrame): DataFrame =
+    assignments.filter(col("value")).select(col("user_id")).distinct()
 
-  def membersLatest(assignments: DataFrame,
-                    userCol: String = "user_id", valueCol: String = "value",
-                    ordCol: String = "assigned_at",
-                    tieBreak: Seq[Column] = Nil): DataFrame =
-    LatestWins.maxBy(assignments, Seq(userCol), col(ordCol), Seq(valueCol), tieBreak)
-      .filter(col(valueCol))
-      .select(col(userCol))
+  def membersLatest(assignments: DataFrame, tieBreak: Seq[Column] = Nil): DataFrame =
+    LatestWins.maxBy(assignments, Seq("user_id"), col("assigned_at"), Seq("value"), tieBreak)
+      .filter(col("value"))
+      .select(col("user_id"))
 }

@@ -44,12 +44,17 @@ object Similarity {
     * `queries` must be small (it is broadcast). Self-matches (same id) are
     * excluded. Ties broken by neighbour id for determinism.
     */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
+    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"))
+    cosineTopK(c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+      .withColumn("cosine", cosine(col("q_vec"), col("c_vec"))), k)
+  }
+
+  /** The exact tail of every top-k lane: per query, rank the scored
+    * (query_id, neighbor_id, cosine) rows by (cosine desc, neighbor_id),
+    * keep rank ≤ k, emit (query_id, rank, neighbor_id, cosine to 4 places). */
+  private[operators] def cosineTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
@@ -58,15 +63,37 @@ object Similarity {
               round(col("cosine"), 4).as("cosine"))
   }
 
+  /** Prescreen-then-rerank, the shape of every compressed-vector lane: score
+    * each (query, neighbor) pair of the compressed corpus `c`
+    * (neighbor_id, …) against the broadcast compressed queries `q`
+    * (query_id, …) with `score`, keep the top `candK` per query (score
+    * desc, neighbor_id), then join the full vectors back for the exact
+    * [[cosineTopK]]. Only candidate vectors are touched twice. */
+  private[operators] def prescreenTopK(corpus: DataFrame, queries: DataFrame,
+                                       c: DataFrame, q: DataFrame, score: Column,
+                                       candK: Int, k: Int): DataFrame = {
+    val wPre = Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("neighbor_id"))
+    val cand = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+      .withColumn("score", score)
+      .withColumn("prn", row_number().over(wPre))
+      .filter(col("prn") <= candK)
+      .select(col("query_id"), col("neighbor_id"))
+    val cv = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"))
+    val qv = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
+    cosineTopK(cand.join(broadcast(qv), Seq("query_id"))
+      .join(cv, Seq("neighbor_id"))
+      .withColumn("cosine", cosine(col("q_vec"), col("c_vec"))), k)
+  }
+
   /** Per-label centroids in flat (label, pos, centroid) form: posexplode the
     * vectors, aggregate exactly per dimension (decimal sum → double divide,
     * deterministic under any partitioning). The explode is a narrow 64×
     * row multiplication — no extra shuffle beyond the one the groupBy needs;
     * flat output keeps the oracle SQL-expressible and avoids array
     * reassembly. */
-  def labelCentroids(corpus: DataFrame, labelCol: String = "label",
-                     vecCol: String = "embedding"): DataFrame =
-    corpus.select(col(labelCol), posexplode(col(vecCol)).as(Seq("pos", "e")))
+  def labelCentroids(corpus: DataFrame, labelCol: String = "label"): DataFrame =
+    corpus.select(col(labelCol), posexplode(col("embedding")).as(Seq("pos", "e")))
       .groupBy(col(labelCol), col("pos"))
       // float → shortest string → DECIMAL(27,12): a float's shortest repr has
       // ≤9 significant digits, so the decimal cast is EXACT (no rounding step
@@ -124,29 +151,22 @@ object Similarity {
     */
   def srpBucketedTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
                       nBits: Int = 4, tables: Int = 8,
-                      idCol: String = "vec_id", vecCol: String = "embedding",
                       seed: Long = 42L): DataFrame = {
-    val buckets = srpTableBuckets(col(vecCol), nBits, dim, tables, seed)
-    val c = corpus.select(col(idCol).as("neighbor_id"), explode(buckets).as("tb"))
+    val buckets = srpTableBuckets(col("embedding"), nBits, dim, tables, seed)
+    val c = corpus.select(col("vec_id").as("neighbor_id"), explode(buckets).as("tb"))
       .select(col("neighbor_id"), col("tb.tbl"), col("tb.bucket"))
-    val q = queries.select(col(idCol).as("query_id"), explode(buckets).as("tb"))
+    val q = queries.select(col("vec_id").as("query_id"), explode(buckets).as("tb"))
       .select(col("query_id"), col("tb.tbl"), col("tb.bucket"))
     val candidates = c.join(broadcast(q), Seq("tbl", "bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val scored = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
+    val qv = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
+    cosineTopK(corpus
+      .select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"))
       .join(broadcast(candidates), Seq("neighbor_id"))
       .join(broadcast(qv), Seq("query_id"))
-      .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-              round(col("cosine"), 4).as("cosine"))
+      .withColumn("cosine", cosine(col("q_vec"), col("c_vec"))), k)
   }
 
   /** IVF (inverted-file) approximate top-k — the second canonical ANN scale
@@ -165,12 +185,9 @@ object Similarity {
     * Fully deterministic (exact decimal centroids, pinned tie-breaks) — the
     * contract query is DuckDB-oracle-checked, unusual for an ANN operator.
     */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              cellCol: String = "label"): DataFrame = {
-    val centDf = ivfCentroidTable(corpus, cellCol, vecCol)
-    ivfRerank(corpus, ivfProbeList(queries, centDf, nprobe, idCol, vecCol),
-              k, idCol, vecCol, cellCol)
+  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
+    val centDf = ivfCentroidTable(corpus)
+    ivfRerank(corpus, ivfProbeList(queries, centDf, nprobe), k)
   }
 
   /** The IVF quantizer as a broadcast-sized frame: (__cell, centroid vec).
@@ -179,12 +196,11 @@ object Similarity {
     * artifact: callers that probe a persisted layout repeatedly build this
     * once (AnnQueries.warmIngestArtifacts) and pass it to
     * [[ivfTopKFromLayout]] instead of re-scanning the corpus per probe. */
-  def ivfCentroidTable(corpus: DataFrame, cellCol: String = "label",
-                       vecCol: String = "embedding"): DataFrame = {
+  def ivfCentroidTable(corpus: DataFrame): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    labelCentroids(corpus, cellCol, vecCol)
-      .select(col(cellCol).cast("long").as("cell"), col("pos"), col("centroid"))
+    labelCentroids(corpus)
+      .select(col("label").cast("long").as("cell"), col("pos"), col("centroid"))
       .collect()
       .groupBy(_.getLong(0))
       .map { case (cell, rows) =>
@@ -197,10 +213,9 @@ object Similarity {
   /** Per-query probe list: rank the (broadcast) centroids by cosine, keep
     * the `nprobe` nearest cells. (query_id, qv, __cell) — queries×nprobe
     * rows, broadcast-sized. */
-  private def ivfProbeList(queries: DataFrame, centDf: DataFrame, nprobe: Int,
-                           idCol: String, vecCol: String): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-                           col(vecCol).cast("array<double>").as("qv"))
+  private def ivfProbeList(queries: DataFrame, centDf: DataFrame, nprobe: Int): DataFrame = {
+    val q = queries.select(col("vec_id").as("query_id"),
+                           col("embedding").cast("array<double>").as("qv"))
     val wp = Window.partitionBy(col("query_id"))
       .orderBy(col("__csim").desc, col("__cell"))
     q.crossJoin(broadcast(centDf))
@@ -212,20 +227,13 @@ object Similarity {
 
   /** Exact re-rank of the probed cells: corpus rows join the broadcast
     * probe list on cell — the corpus is never shuffled. */
-  private def ivfRerank(cells: DataFrame, probed: DataFrame, k: Int,
-                        idCol: String, vecCol: String, cellCol: String): DataFrame = {
-    val c = cells.select(col(idCol).as("neighbor_id"),
-                         col(vecCol).cast("array<double>").as("cv"),
-                         col(cellCol).cast("long").as("__cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    c.join(broadcast(probed), Seq("__cell"))
+  private def ivfRerank(cells: DataFrame, probed: DataFrame, k: Int): DataFrame = {
+    val c = cells.select(col("vec_id").as("neighbor_id"),
+                         col("embedding").cast("array<double>").as("cv"),
+                         col("label").cast("long").as("__cell"))
+    cosineTopK(c.join(broadcast(probed), Seq("__cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-              round(col("cosine"), 4).as("cosine"))
+      .withColumn("cosine", cosine(col("qv"), col("cv"))), k)
   }
 
   /** Ingest-time IVF disk layout: the corpus written PARTITIONED BY its
@@ -235,12 +243,10 @@ object Similarity {
     * listed into the scan (`PartitionFilters` in the plan, spec-asserted).
     * At 100 TB this is the difference between reading nprobe/#cells of the
     * corpus and reading all of it. */
-  def writeIvfLayout(corpus: DataFrame, path: String,
-                     idCol: String = "vec_id", vecCol: String = "embedding",
-                     cellCol: String = "label"): Unit =
-    corpus.select(col(idCol), col(vecCol).cast("array<double>").as(vecCol),
-                  col(cellCol).cast("long").as(cellCol))
-      .write.mode("overwrite").partitionBy(cellCol).parquet(path)
+  def writeIvfLayout(corpus: DataFrame, path: String): Unit =
+    corpus.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"),
+                  col("label").cast("long").as("label"))
+      .write.mode("overwrite").partitionBy("label").parquet(path)
 
   /** IVF top-k against a [[writeIvfLayout]] directory. Identical results to
     * [[ivfTopK]] over the same corpus; the difference is the read path: the
@@ -252,17 +258,15 @@ object Similarity {
     * fallback recompute exists only for stand-alone use. */
   def ivfTopKFromLayout(spark: org.apache.spark.sql.SparkSession, path: String,
                         queries: DataFrame, k: Int, nprobe: Int,
-                        idCol: String = "vec_id", vecCol: String = "embedding",
-                        cellCol: String = "label",
                         centroids: Option[DataFrame] = None): DataFrame = {
     val layout = spark.read.parquet(path)
-    val centDf = centroids.getOrElse(ivfCentroidTable(layout, cellCol, vecCol))
-    val probed = ivfProbeList(queries, centDf, nprobe, idCol, vecCol)
+    val centDf = centroids.getOrElse(ivfCentroidTable(layout))
+    val probed = ivfProbeList(queries, centDf, nprobe)
       .localCheckpoint(true) // consumed twice: cell-list collect + re-rank join
     val cells = probed.select(col("__cell")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
-    val pruned = layout.filter(col(cellCol).isin(cells.map(Long.box): _*))
-    ivfRerank(pruned, probed, k, idCol, vecCol, cellCol)
+    val pruned = layout.filter(col("label").isin(cells.map(Long.box): _*))
+    ivfRerank(pruned, probed, k)
   }
 
   /** Nearest-centroid cell assignment under a FROZEN quantizer — IVF index
@@ -271,13 +275,11 @@ object Similarity {
     * cell id, the same pinned order the probe side uses). Only the batch
     * moves: at 100 TB the per-snapshot delta is the small side, the
     * quantizer is driver-sized, and the persisted corpus layout is not
-    * touched at all. Returns (idCol, vecCol double, cellCol long). */
-  def ivfAssign(batch: DataFrame, centroids: DataFrame,
-                idCol: String = "vec_id", vecCol: String = "embedding",
-                cellCol: String = "label"): DataFrame =
-    ivfProbeList(batch, centroids, nprobe = 1, idCol, vecCol)
-      .select(col("query_id").as(idCol), col("qv").as(vecCol),
-              col("__cell").cast("long").as(cellCol))
+    * touched at all. Returns (vec_id, embedding double, label long). */
+  def ivfAssign(batch: DataFrame, centroids: DataFrame): DataFrame =
+    ivfProbeList(batch, centroids, nprobe = 1)
+      .select(col("query_id").as("vec_id"), col("qv").as("embedding"),
+              col("__cell").cast("long").as("label"))
 
   /** Cross-snapshot incremental ANN (the vector twin of the incremental
     * near-dup probe): answer queries over historical-index ∪ new-batch
@@ -292,23 +294,21 @@ object Similarity {
     * shuffled. */
   def ivfIncrementalTopK(spark: org.apache.spark.sql.SparkSession, layoutPath: String,
                          newBatch: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
-                         idCol: String = "vec_id", vecCol: String = "embedding",
-                         cellCol: String = "label",
                          centroids: Option[DataFrame] = None): DataFrame = {
     val layout = spark.read.parquet(layoutPath)
-    val centDf = centroids.getOrElse(ivfCentroidTable(layout, cellCol, vecCol))
-    val assigned = ivfAssign(newBatch, centDf, idCol, vecCol, cellCol)
-    val probed = ivfProbeList(queries, centDf, nprobe, idCol, vecCol)
+    val centDf = centroids.getOrElse(ivfCentroidTable(layout))
+    val assigned = ivfAssign(newBatch, centDf)
+    val probed = ivfProbeList(queries, centDf, nprobe)
       .localCheckpoint(true) // consumed twice: cell-list collect + re-rank join
     val cells = probed.select(col("__cell")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
     val boxed = cells.map(Long.box)
     val prunedHist = layout
-      .select(col(idCol), col(vecCol).cast("array<double>").as(vecCol),
-              col(cellCol).cast("long").as(cellCol))
-      .filter(col(cellCol).isin(boxed: _*)) // partition pruning on the layout
-    val prunedNew = assigned.filter(col(cellCol).isin(boxed: _*))
-    ivfRerank(prunedHist.unionByName(prunedNew), probed, k, idCol, vecCol, cellCol)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"),
+              col("label").cast("long").as("label"))
+      .filter(col("label").isin(boxed: _*)) // partition pruning on the layout
+    val prunedNew = assigned.filter(col("label").isin(boxed: _*))
+    ivfRerank(prunedHist.unionByName(prunedNew), probed, k)
   }
 
   /** Per-dimension int8 quantization scales: s_d = 127 / max_i |x_{i,d}|
@@ -316,10 +316,9 @@ object Similarity {
     * corpus pass, `dim` rows collected; an INGEST-TIME artifact at scale,
     * learned from the data like the BPE merges — and embedded the same way
     * into the oracle as literal constants. */
-  def quantScales(corpus: DataFrame, dim: Int,
-                  vecCol: String = "embedding"): Array[Double] = {
+  def quantScales(corpus: DataFrame, dim: Int): Array[Double] = {
     val rows = corpus
-      .select(posexplode(col(vecCol).cast("array<double>")).as(Seq("pos", "v")))
+      .select(posexplode(col("embedding").cast("array<double>")).as(Seq("pos", "v")))
       .groupBy(col("pos")).agg(max(abs(col("v"))).as("m"))
       .collect()
     val scales = Array.fill(dim)(0.0)
@@ -354,31 +353,13 @@ object Similarity {
     * broadcast-queries zero-corpus-shuffle shape as [[bruteForceTopK]],
     * at ~1/4 the bytes and integer ALU cost. */
   def quantizedTopK(corpus: DataFrame, queries: DataFrame, k: Int, candK: Int,
-                    scales: Array[Double], idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
-    val qc = corpus.select(col(idCol).as("neighbor_id"),
-                           quantize(col(vecCol), scales).as("c_q"))
-    val qq = queries.select(col(idCol).as("query_id"),
-                            quantize(col(vecCol), scales).as("q_q"))
-    val wPre = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    val cand = qc.join(broadcast(qq), col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", graft.functions.NativeExprs.intDot(col("q_q"), col("c_q")))
-      .withColumn("prn", row_number().over(wPre))
-      .filter(col("prn") <= candK)
-      .select(col("query_id"), col("neighbor_id"))
-    // exact re-rank: only candidate vectors are touched again
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    cand.join(broadcast(qv), Seq("query_id"))
-      .join(cv, Seq("neighbor_id"))
-      .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-              round(col("cosine"), 4).as("cosine"))
+                    scales: Array[Double]): DataFrame = {
+    val qc = corpus.select(col("vec_id").as("neighbor_id"),
+                           quantize(col("embedding"), scales).as("c_q"))
+    val qq = queries.select(col("vec_id").as("query_id"),
+                            quantize(col("embedding"), scales).as("q_q"))
+    prescreenTopK(corpus, queries, qc, qq,
+      graft.functions.NativeExprs.intDot(col("q_q"), col("c_q")), candK, k)
   }
 
   /** Train product-quantization codebooks ([[graft.functions.PqExprs]]):
@@ -391,14 +372,13 @@ object Similarity {
     * the BPE merges) — and embedded into the oracle the same way. Returns
     * codebooks[m][k][subDim]. */
   def pqTrain(corpus: DataFrame, dim: Int, m: Int, k: Int,
-              sampleN: Int = 512, iters: Int = 8,
-              idCol: String = "vec_id", vecCol: String = "embedding")
+              sampleN: Int = 512, iters: Int = 8)
       : Array[Array[Array[Double]]] = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val sd = dim / m
     val sample = corpus
-      .select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-      .orderBy(col(idCol)).limit(sampleN)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .orderBy(col("vec_id")).limit(sampleN)
       .collect()
       .map { r => // unit sphere: PQ targets cosine (PqExprs.readVec order)
         val x = r.getSeq[Double](1).toArray
@@ -458,34 +438,17 @@ object Similarity {
     * zero-corpus-shuffle shape as [[quantizedTopK]]: queries broadcast,
     * the only exchanges carry candidate-sized frames. */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int, candK: Int,
-             codebooks: Array[Array[Array[Double]]], scaleBits: Int = 20,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+             codebooks: Array[Array[Array[Double]]], scaleBits: Int = 20): DataFrame = {
     import graft.functions.NativeExprs
     val kCent = codebooks(0).length
-    val cc = corpus.select(col(idCol).as("neighbor_id"),
-      NativeExprs.pqEncode(col(vecCol).cast("array<double>"), codebooks,
+    val cc = corpus.select(col("vec_id").as("neighbor_id"),
+      NativeExprs.pqEncode(col("embedding").cast("array<double>"), codebooks,
                            normalize = true).as("codes"))
-    val ql = queries.select(col(idCol).as("query_id"),
-      NativeExprs.pqLut(col(vecCol).cast("array<double>"), codebooks, scaleBits,
+    val ql = queries.select(col("vec_id").as("query_id"),
+      NativeExprs.pqLut(col("embedding").cast("array<double>"), codebooks, scaleBits,
                         normalize = true).as("lut"))
-    val wPre = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    val cand = cc.join(broadcast(ql), col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", NativeExprs.pqAdc(col("codes"), col("lut"), kCent))
-      .withColumn("prn", row_number().over(wPre))
-      .filter(col("prn") <= candK)
-      .select(col("query_id"), col("neighbor_id"))
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    cand.join(broadcast(qv), Seq("query_id"))
-      .join(cv, Seq("neighbor_id"))
-      .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-              round(col("cosine"), 4).as("cosine"))
+    prescreenTopK(corpus, queries, cc, ql,
+      NativeExprs.pqAdc(col("codes"), col("lut"), kCent), candK, k)
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023, "SemDeDup:
@@ -549,21 +512,20 @@ object Similarity {
     * exact means + deterministic init/tie-breaks ⇒ bit-reproducible
     * centroids run to run, so they embed into a DuckDB oracle as literals
     * (the pqTrain/srp discipline). An INGEST-TIME artifact at scale. */
-  def kmeansTrain(corpus: DataFrame, k: Int, iters: Int,
-                  idCol: String = "vec_id", vecCol: String = "embedding")
+  def kmeansTrain(corpus: DataFrame, k: Int, iters: Int)
       : Array[Array[Double]] = {
-    val hash = pmod(col(idCol) * lit(graft.operators.Sampling.Knuth),
+    val hash = pmod(col("vec_id") * lit(graft.operators.Sampling.Knuth),
                     lit(1000000007L))
     var cents: Array[Array[Double]] = corpus
-      .select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-      .orderBy(hash, col(idCol)).limit(k)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .orderBy(hash, col("vec_id")).limit(k)
       .collect().map(_.getSeq[Double](1).toArray)
     require(cents.nonEmpty, "kmeansTrain: empty corpus")
     var it = 0
     while (it < iters) {
       val assigned = corpus.withColumn(
-        "__label", kmeansArgmax(col(vecCol), cents).getField("i").cast("long"))
-      val next = labelCentroids(assigned, "__label", vecCol)
+        "__label", kmeansArgmax(col("embedding"), cents).getField("i").cast("long"))
+      val next = labelCentroids(assigned, "__label")
         .select(col("__label"), col("pos"), col("centroid"))
         .collect()
         .groupBy(_.getLong(0))
@@ -577,13 +539,11 @@ object Similarity {
   }
 
   def semanticDedup(corpus: DataFrame, threshold: Double,
-                    idCol: String = "vec_id", vecCol: String = "embedding",
-                    clusterCol: String = "label",
                     skewSalt: Int = 8, skewCap: Long = 2048L): DataFrame = {
-    val probe = corpus.select(lit(0).as("band"), col(clusterCol).as("bucket"),
-                              col(idCol).as("__id"), col(vecCol).as("__v"))
-    val mates = corpus.select(lit(0).as("band"), col(clusterCol).as("bucket"),
-                              col(idCol).as("__id_b"), col(vecCol).as("__v_b"))
+    val probe = corpus.select(lit(0).as("band"), col("label").as("bucket"),
+                              col("vec_id").as("__id"), col("embedding").as("__v"))
+    val mates = corpus.select(lit(0).as("band"), col("label").as("bucket"),
+                              col("vec_id").as("__id_b"), col("embedding").as("__v_b"))
     val dropped = Dedup
       .saltedBandJoin(probe, mates, "__id", salt = skewSalt, cap = skewCap)
       .filter(col("__id_b") < col("__id"))
@@ -592,7 +552,7 @@ object Similarity {
       .filter(cosine(col("__v"), col("__v_b")) >= threshold)
       .select(col("__id")).distinct()
       .withColumn("__dropped", lit(true))
-    corpus.join(dropped.withColumnRenamed("__id", idCol), Seq(idCol), "left")
+    corpus.join(dropped.withColumnRenamed("__id", "vec_id"), Seq("vec_id"), "left")
       .withColumn("kept", col("__dropped").isNull)
       .drop("__dropped")
   }
@@ -609,16 +569,15 @@ object Similarity {
     * corpora short-circuit to the plain join. */
   def embeddingNearDuplicates(corpus: DataFrame, threshold: Double, dim: Int,
                               nBits: Int = 8, tables: Int = 8,
-                              idCol: String = "vec_id", vecCol: String = "embedding",
                               seed: Long = 42L,
                               skewSalt: Int = 8, skewCap: Long = 2048L): DataFrame = {
-    val buckets = srpTableBuckets(col(vecCol), nBits, dim, tables, seed)
-    val withSig = corpus.select(col(idCol), col(vecCol), explode(buckets).as("tb"))
-      .select(col(idCol), col(vecCol), col("tb.tbl").as("band"), col("tb.bucket"))
-    val a = withSig.select(col("band"), col("bucket"), col(idCol).as("id_a"),
-                           col(vecCol).as("v_a"))
-    val b = withSig.select(col("band"), col("bucket"), col(idCol).as("id_b"),
-                           col(vecCol).as("v_b"))
+    val buckets = srpTableBuckets(col("embedding"), nBits, dim, tables, seed)
+    val withSig = corpus.select(col("vec_id"), col("embedding"), explode(buckets).as("tb"))
+      .select(col("vec_id"), col("embedding"), col("tb.tbl").as("band"), col("tb.bucket"))
+    val a = withSig.select(col("band"), col("bucket"), col("vec_id").as("id_a"),
+                           col("embedding").as("v_a"))
+    val b = withSig.select(col("band"), col("bucket"), col("vec_id").as("id_b"),
+                           col("embedding").as("v_b"))
     Dedup.saltedBandJoin(a, b, "id_a", salt = skewSalt, cap = skewCap)
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cosine"))

@@ -13,20 +13,19 @@ object TextChunking {
     * tokens shared between consecutive chunks. Pure per-row explode — no
     * shuffle; output is (id, chunk_idx, chunk_text, n_chunk_tokens).
     * Empty documents produce no chunks. */
-  def chunk(docs: DataFrame, chunkTokens: Int, overlap: Int,
-            idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def chunk(docs: DataFrame, chunkTokens: Int, overlap: Int): DataFrame = {
     require(overlap >= 0 && overlap < chunkTokens,
       "overlap must be in [0, chunkTokens) — a negative overlap would silently skip tokens")
     val step = chunkTokens - overlap
-    val toks = TextAnalysis.tokens(col(textCol))
+    val toks = TextAnalysis.tokens(col("text"))
     docs
       .withColumn("__toks", toks)
       .filter(size(col("__toks")) > 0)
-      .select(col(idCol),
+      .select(col("doc_id"),
               posexplode(sequence(lit(0), size(col("__toks")) - 1, lit(step)))
                 .as(Seq("chunk_idx", "start")),
               col("__toks"))
-      .select(col(idCol), col("chunk_idx"),
+      .select(col("doc_id"), col("chunk_idx"),
               array_join(slice(col("__toks"), col("start") + 1, lit(chunkTokens)), " ")
                 .as("chunk_text"),
               size(slice(col("__toks"), col("start") + 1, lit(chunkTokens)))
@@ -35,26 +34,24 @@ object TextChunking {
 
   /** Greedy sequence packing — assign each chunk to a fixed-token-budget
     * pack (the context-window packing step of a training pipeline): chunks
-    * are taken in `orderCol` order; a chunk that would overflow the open
+    * are taken in `chunk_idx` order; a chunk that would overflow the open
     * pack starts a new one (a chunk alone larger than the budget gets its
-    * own pack). Returns (idCol, orderCol, pack_id, pack pos is implied by
+    * own pack). Returns (doc_id, chunk_idx, pack_id, pack pos is implied by
     * order).
     *
     * Packing is SEQUENTIAL by definition, so the distributable form packs
     * within a key (per document here; per shard for corpus-level packing —
-    * pass a shard column as idCol). Per-key chunk counts are bounded by
+    * carry the shard as `doc_id`). Per-key chunk counts are bounded by
     * document length, so the collect_list + fold runs in O(chunks/key)
     * state — the same bounded-group shape as the funnel DP. The fold is a
     * pure integer recurrence, reproducible in any engine. */
-  def packChunks(chunks: DataFrame, budgetTokens: Int,
-                 idCol: String = "doc_id", orderCol: String = "chunk_idx",
-                 tokensCol: String = "n_chunk_tokens"): DataFrame =
-    chunks.groupBy(col(idCol))
+  def packChunks(chunks: DataFrame, budgetTokens: Int): DataFrame =
+    chunks.groupBy(col("doc_id"))
       // casts pin the fold's accumulator element type (array<struct<int,…>>)
       // for any integral input width; per-doc chunk counts and budgets fit int
-      .agg(sort_array(collect_list(struct(col(orderCol).cast("int").as("i"),
-        col(tokensCol).cast("int").as("t")))).as("cs"))
-      .select(col(idCol), explode(expr(
+      .agg(sort_array(collect_list(struct(col("chunk_idx").cast("int").as("i"),
+        col("n_chunk_tokens").cast("int").as("t")))).as("cs"))
+      .select(col("doc_id"), explode(expr(
         s"""aggregate(cs,
               named_struct(
                 'out', cast(array() as array<struct<i:int,t:int,pack_id:int>>),
@@ -65,7 +62,7 @@ object TextChunking {
                 'pack', if(acc.used + x.t <= $budgetTokens, acc.pack, acc.pack + 1),
                 'used', if(acc.used + x.t <= $budgetTokens, acc.used + x.t, x.t)),
               acc -> acc.out)""")).as("o"))
-      .select(col(idCol), col("o.i").as(orderCol), col("o.t").as(tokensCol),
+      .select(col("doc_id"), col("o.i").as("chunk_idx"), col("o.t").as("n_chunk_tokens"),
               col("o.pack_id"))
 }
 
@@ -113,14 +110,14 @@ object Sampling {
     * The generalization of [[stratifiedSample]] from one constant k to a
     * per-group target; `targets` is group-cardinality-sized → broadcast. */
   def mixtureSample(df: DataFrame, groupCol: String, idCol: String,
-                    targets: DataFrame, kCol: String = "k"): DataFrame = {
+                    targets: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(groupCol))
       .orderBy(pmod(col(idCol) * lit(Knuth), lit(1000000007L)), col(idCol))
     df.join(broadcast(targets), Seq(groupCol))
       .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= col(kCol))
-      .drop("__rn", kCol)
+      .filter(col("__rn") <= col("k"))
+      .drop("__rn", "k")
   }
 
   /** Per-domain hard-cap + mixture sampling — the RefinedWeb discipline: no
@@ -136,7 +133,7 @@ object Sampling {
     * then group), each a plain hash repartition — no driver data path. */
   def domainCappedSample(df: DataFrame, domainCol: String, cap: Int,
                          groupCol: String, idCol: String,
-                         targets: DataFrame, kCol: String = "k"): DataFrame =
+                         targets: DataFrame): DataFrame =
     mixtureSample(stratifiedSample(df, domainCol, idCol, cap),
-                  groupCol, idCol, targets, kCol)
+                  groupCol, idCol, targets)
 }

@@ -70,8 +70,8 @@ object UnigramLm {
     * longer than any dictionary word (the UNK single-char branch covers
     * their unseen characters). */
   def learn(docs: DataFrame, vocabSize: Int = 200, emRounds: Int = 3,
-            maxVocab: Int = 20000, textCol: String = "text"): Model = {
-    val wf = BpeModel.wordFrequencies(docs, textCol)
+            maxVocab: Int = 20000): Model = {
+    val wf = BpeModel.wordFrequencies(docs)
       .filter(length(col("word")) < KeyMul.toInt)
     val fullMaxRow = wf.agg(max(length(col("word")))).collect()(0)
     val fullMax = if (fullMaxRow.isNullAt(0)) 1 else fullMaxRow.getInt(0)
@@ -325,9 +325,8 @@ object UnigramLm {
   /** Reference DATAFRAME form of the per-doc stats via the distinct-word
     * join (cost ∝ vocabulary) and the HOF key chain — the cross-check for
     * the native per-row projection. */
-  def docTokenStats(docs: DataFrame, model: Model,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val words = docs.select(col(idCol), explode(TextAnalysis.words(col(textCol))).as("word"))
+  def docTokenStats(docs: DataFrame, model: Model): DataFrame = {
+    val words = docs.select(col("doc_id"), explode(TextAnalysis.words(col("text"))).as("word"))
     // words of length ≥ KeyMul are outside the tokenizer contract: counted
     // in n_words, zero contribution to pieces/cost (mirrors the native
     // expression's skip and the oracle's LEFT JOIN)
@@ -335,7 +334,7 @@ object UnigramLm {
       .select(col("word")).distinct()
       .withColumn("key", viterbiKeyChain(col("word"), model))
     words.join(vocab, Seq("word"), "left")
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
            sum(coalesce(col("key") % KeyMul, lit(0L))).as("n_pieces"),
            // keys are ≤ maxLen·maxCost·KeyMul ≈ 8e10 < 2^53, so the double

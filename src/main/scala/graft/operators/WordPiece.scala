@@ -60,9 +60,8 @@ object WordPiece {
   /** Train from the corpus: one vocabulary-sized shuffle, then a driver
     * merge loop. Deterministic end-to-end (count-desc/word-asc dictionary
     * cap, BigInt score comparison, lexicographic pair tie-break). */
-  def learn(docs: DataFrame, vocabSize: Int = 200, maxVocab: Int = 20000,
-            textCol: String = "text"): Model = {
-    val wf = BpeModel.wordFrequencies(docs, textCol)
+  def learn(docs: DataFrame, vocabSize: Int = 200, maxVocab: Int = 20000): Model = {
+    val wf = BpeModel.wordFrequencies(docs)
       .filter(length(col("word")) <= MaxWordChars)
     val fullMaxRow = wf.agg(max(length(col("word")))).collect()(0)
     val fullMax = if (fullMaxRow.isNullAt(0)) 1 else fullMaxRow.getInt(0)
@@ -231,14 +230,13 @@ object WordPiece {
   /** Reference DATAFRAME form of the per-doc stats via the distinct-word
     * join (cost ∝ vocabulary of the corpus) and the HOF chain — the
     * cross-check for the native per-row projection. */
-  def docTokenStats(docs: DataFrame, model: Model,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val words = docs.select(col(idCol),
-      explode(TextAnalysis.words(col(textCol))).as("word"))
+  def docTokenStats(docs: DataFrame, model: Model): DataFrame = {
+    val words = docs.select(col("doc_id"),
+      explode(TextAnalysis.words(col("text"))).as("word"))
     val enc = words.select(col("word")).distinct()
       .withColumn("e", wordpieceChain(col("word"), model))
     words.join(enc, Seq("word"), "left")
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
            sum(col("e.np")).as("n_pieces"),
            sum(when(col("e.unk"), 1L).otherwise(0L)).as("n_unk"),

@@ -595,7 +595,7 @@ object DedupQueries {
       Dedup.editDistanceKeys(
         docsSharded(s, dir).select(col("doc_id"),
           substring(col("text"), 1, 64).as("key")),
-        q = 2, keyCol = "key")
+        q = 2)
     }
 
   /** Fuzzy key dedup: exact edit-distance self-join (Ed-Join q-gram prefix
@@ -609,7 +609,7 @@ object DedupQueries {
     Dedup.editDistancePairs(
         docsSharded(s, dir).select(col("doc_id"),
           substring(col("text"), 1, 64).as("key")),
-        maxDist = 8, q = 2, keyCol = "key",
+        maxDist = 8, q = 2,
         precomputedKeys = Some(editdistKeysFor(s, dir)))
       .orderBy("id_a", "id_b")
   // Brute-force thresholded levenshtein over the length-banded pair space

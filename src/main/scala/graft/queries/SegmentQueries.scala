@@ -622,7 +622,7 @@ object SegmentQueries {
                                 epochToTs: Long => java.sql.Timestamp,
                                 retentionDays: Option[Int] = None): DataFrame = {
     val pipe = new graft.state.MicroBatchPipeline(
-      s, ClickSeg, graft.state.StateStorePaths(s"$tmp/state"), procTimeCol = "ts")
+      s, ClickSeg, graft.state.StateStorePaths(s"$tmp/state"))
     drain(graft.streaming.StreamingSegments.foreachBatchPipeline(
       stream, pipe, epochToTs, retentionDays = retentionDays), s"$tmp/ckpt")
     pipe.members().orderBy("user_id")

@@ -76,7 +76,8 @@ object Ingest {
   }
 
   /** At-most-once ingest under duplicate delivery (T7): keep one row per
-    * `message_id`. Batch form of streaming `dropDuplicatesWithinWatermark`. */
-  def dedupByMessageId(df: DataFrame, idCol: String = "event_id"): DataFrame =
-    df.dropDuplicates(idCol)
+    * message id (`event_id`, the reference's `message_id`). Batch form of
+    * streaming `dropDuplicatesWithinWatermark`. */
+  def dedupByMessageId(df: DataFrame): DataFrame =
+    df.dropDuplicates("event_id")
 }

@@ -53,10 +53,6 @@ class MicroBatchPipeline(
     spark: SparkSession,
     seg: SegmentDef,
     val paths: StateStorePaths,
-    userCol: String = "user_id",
-    typeCol: String = "event_type",
-    idCol: String = "event_id",
-    procTimeCol: String = "ts",
     eventTimeCol: Option[String] = None,
     lgK: Int = Sketches.DefaultLgK) {
 
@@ -84,13 +80,13 @@ class MicroBatchPipeline(
     // --- state update (INSERT INTO user_states SELECT … uniqState …,
     //     3-microBatch.test.ts:116-133 / 4-eventTime.test.ts:129-147)
     val sliced = events
-      .filter(col(typeCol) === seg.eventType)
-      .filter(col(procTimeCol) >= lit(lowerBound) && col(procTimeCol) < lit(batchTs))
+      .filter(col("event_type") === seg.eventType)
+      .filter(col("ts") >= lit(lowerBound) && col("ts") < lit(batchTs))
     val aggs =
-      Sketches.uniqState(col(idCol), lgK).as("event_count") +:
+      Sketches.uniqState(col("event_id"), lgK).as("event_count") +:
       eventTimeCol.map(c => max(col(c)).as("last_event_time")).toSeq
     val partials = sliced
-      .groupBy(col(userCol))
+      .groupBy(col("user_id"))
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("computed_at", lit(batchTs))
       .withColumn("computed_date", to_date(lit(batchTs)))
@@ -121,7 +117,7 @@ class MicroBatchPipeline(
         //     keys to the change log (3-microBatch.test.ts:50-56 —
         //     ClickHouse MVs trigger on the inserted block, so we project
         //     from `partials`, not a rescan)
-        () => sized.select(col(userCol), col("computed_at"), col("computed_date"))
+        () => sized.select(col("user_id"), col("computed_at"), col("computed_date"))
           .write.mode("append").partitionBy("computed_date").parquet(paths.changeLog))
 
       // --- segment merge restricted to this batch's users
@@ -137,13 +133,13 @@ class MicroBatchPipeline(
       // TABLE is still written above — downstream consumers and the TTL
       // demo read it — only the same-batch read-back is folded away.
       // `sized` is already one row per user (groupBy output): no distinct.
-      val touched = sized.select(col(userCol))
+      val touched = sized.select(col("user_id"))
       val mergeAggs =
         (Sketches.uniqMerge(col("event_count")) >= seg.minCount).as("value") +:
         eventTimeCol.map(_ => max(col("last_event_time")).as("last_event_time")).toSeq
       val merged = spark.read.schema(sized.schema).parquet(paths.states)
-        .join(broadcast(touched), Seq(userCol), "left_semi")
-        .groupBy(col(userCol))
+        .join(broadcast(touched), Seq("user_id"), "left_semi")
+        .groupBy(col("user_id"))
         .agg(mergeAggs.head, mergeAggs.tail: _*)
         .withColumn("assigned_at", lit(batchTs))
         .withColumn("assigned_date", to_date(lit(batchTs)))
@@ -170,7 +166,7 @@ class MicroBatchPipeline(
       val hp = new org.apache.hadoop.fs.Path(p)
       if (hp.getFileSystem(conf).exists(hp))
         graft.sources.Mutations.deleteWhere(spark, p,
-          col(userCol) === lit(user), partCol, Seq(userCol))
+          col("user_id") === lit(user), partCol, Seq("user_id"))
     }
   }
 
@@ -183,12 +179,12 @@ class MicroBatchPipeline(
     val payload = "value" +: eventTimeCol.map(_ => "last_event_time").toSeq
     val latest = LatestWins.maxBy(
       spark.read.parquet(paths.assignments),
-      Seq(userCol), col("assigned_at"), payload)
+      Seq("user_id"), col("assigned_at"), payload)
       .filter(col("value"))
     eventTimeCol match {
-      case Some(_) => latest.select(col(userCol), col("value").as("latest_value"),
+      case Some(_) => latest.select(col("user_id"), col("value").as("latest_value"),
         unix_timestamp(col("last_event_time")).as("last_event_time"))
-      case None => latest.select(col(userCol), col("value").as("latest_value"))
+      case None => latest.select(col("user_id"), col("value").as("latest_value"))
     }
   }
 
@@ -203,7 +199,7 @@ class MicroBatchPipeline(
       eventTimeCol.map(_ => max(col("last_event_time")).as("last_event_time")).toSeq
     val tmp = s"${paths.states}__compacting"
     spark.read.parquet(paths.states)
-      .groupBy(col(userCol))
+      .groupBy(col("user_id"))
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("computed_at", lit(compactTs))
       .withColumn("computed_date", to_date(lit(compactTs)))

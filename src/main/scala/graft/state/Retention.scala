@@ -16,16 +16,16 @@ import org.apache.spark.sql.SparkSession
   */
 object Retention {
 
-  /** Drop `partitionCol=<date>` directories strictly older than
+  /** Drop `computed_date=<date>` directories strictly older than
     * `asOf - retentionDays`. Returns the dropped partition values.
     */
   def expire(spark: SparkSession, tablePath: String, asOf: LocalDate,
-             retentionDays: Int, partitionCol: String = "computed_date"): Seq[String] = {
+             retentionDays: Int): Seq[String] = {
     val horizon = asOf.minusDays(retentionDays.toLong)
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Nil
-    val prefix = partitionCol + "="
+    val prefix = "computed_date="
     fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
       .flatMap { s =>

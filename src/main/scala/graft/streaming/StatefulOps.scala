@@ -39,8 +39,8 @@ final case class SketchState(bytes: Array[Byte])
   */
 object StatefulOps {
 
-  /** Streaming gap sessionization. Input needs `userCol` and an event-time
-    * `tsCol`; the watermark bounds how late events may arrive and drives
+  /** Streaming gap sessionization. Input needs `user_id` and an event-time
+    * `ts`; the watermark bounds how late events may arrive and drives
     * session-close timeouts. Emits [[ClosedSession]] rows (Append mode).
     *
     * Late-data semantics: each batch chains its (sorted) events together
@@ -51,14 +51,12 @@ object StatefulOps {
     * a session emitted closed in an earlier batch cannot be re-opened by a
     * still-later arrival, a divergence bounded by the watermark delay. */
   def statefulSessionize(events: DataFrame, gapSeconds: Long,
-                         watermarkDelay: String = "10 minutes",
-                         userCol: String = "user_id",
-                         tsCol: String = "ts"): Dataset[ClosedSession] = {
+                         watermarkDelay: String = "10 minutes"): Dataset[ClosedSession] = {
     val spark = events.sparkSession
     import spark.implicits._
     events
-      .withWatermark(tsCol, watermarkDelay)
-      .select(col(userCol).cast("string").as("user_id"), col(tsCol).as("ts"))
+      .withWatermark("ts", watermarkDelay)
+      .select(col("user_id").cast("string").as("user_id"), col("ts"))
       .as[(String, java.sql.Timestamp)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[OpenSession, ClosedSession](
@@ -131,14 +129,13 @@ object StatefulOps {
   def streamStreamAttribution(clicks: DataFrame, purchases: DataFrame,
                               attributionWindow: String = "1 hour",
                               watermarkDelay: String = "10 minutes",
-                              userCol: String = "user_id",
                               joinType: String = "inner"): DataFrame = {
     val c = clicks
-      .select(col(userCol).cast("string").as("user_id"),
+      .select(col("user_id").cast("string").as("user_id"),
               col("ts").as("click_ts"), col("event_id").as("click_id"))
       .withWatermark("click_ts", watermarkDelay)
     val p = purchases
-      .select(col(userCol).cast("string").as("p_user_id"),
+      .select(col("user_id").cast("string").as("p_user_id"),
               col("ts").as("purchase_ts"), col("event_id").as("purchase_id"))
       .withWatermark("purchase_ts", watermarkDelay)
     p.join(c,
@@ -156,16 +153,13 @@ object StatefulOps {
     * the refreshed [[SegmentUpdate]] for every user touched by the batch
     * (Update semantics — pair with an upsert sink). */
   def statefulSegmentMembers(events: DataFrame, seg: SegmentDef,
-                             lgK: Int = Sketches.DefaultLgK,
-                             userCol: String = "user_id",
-                             typeCol: String = "event_type",
-                             idCol: String = "event_id"): Dataset[SegmentUpdate] = {
+                             lgK: Int = Sketches.DefaultLgK): Dataset[SegmentUpdate] = {
     val spark = events.sparkSession
     import spark.implicits._
     events
-      .filter(col(typeCol) === seg.eventType)
-      .select(col(userCol).cast("string").as("user_id"),
-              col(idCol).cast("string").as("event_id"))
+      .filter(col("event_type") === seg.eventType)
+      .select(col("user_id").cast("string").as("user_id"),
+              col("event_id").cast("string").as("event_id"))
       .as[(String, String)]
       .groupByKey(_._1)
       .mapGroupsWithState[SketchState, SegmentUpdate](GroupStateTimeout.NoTimeout) {

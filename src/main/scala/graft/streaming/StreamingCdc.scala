@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import graft.operators.LatestWins
 import graft.sources.Mutations
 
 /** Live CDC landing — the streaming twin of
@@ -53,17 +53,14 @@ object StreamingCdc {
   def foreachBatchMergeApply(changes: DataFrame, path: String,
                              keyCols: Seq[String], opCol: String,
                              seqCol: String, partitionCol: String,
-                             sortCols: Seq[String],
-                             trigger: Option[Trigger] = None): DataStreamWriter[Row] = {
-    val base = changes.writeStream.outputMode(OutputMode.Append)
-    trigger.fold(base)(base.trigger)
+                             sortCols: Seq[String]): DataStreamWriter[Row] =
+    changes.writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // no isEmpty pre-check: that is one extra job per micro-batch, and
         // mergeApply's FIRST action (the validation aggregate) already
         // returns DeleteStats(0,0) on an empty batch
         processBatch(batch, path, keyCols, opCol, seqCol, partitionCol, sortCols)
       }
-  }
 
   /** One micro-batch: compact to final ops, then merge. Exposed for direct
     * testing and for hand-rolled micro-batch loops. */
@@ -83,10 +80,6 @@ object StreamingCdc {
   def compactBatch(batch: DataFrame, keyCols: Seq[String],
                    seqCol: String): DataFrame = {
     val others = batch.columns.filter(c => !keyCols.contains(c) && c != seqCol)
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col(seqCol).desc +: others.map(c => col(c).desc): _*)
-    batch.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", seqCol)
+    LatestWins.latestRows(batch, keyCols, col(seqCol), others.map(col)).drop(seqCol)
   }
 }

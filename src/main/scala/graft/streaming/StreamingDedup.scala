@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import graft.operators.Dedup
 
 /** Streaming incremental near-duplicate detection — the daily-ingest loop of
@@ -28,15 +28,11 @@ import graft.operators.Dedup
 object StreamingDedup {
 
   def foreachBatchNearDup(docs: DataFrame, stateDir: String,
-                          threshold: Double,
-                          textCol: String = "text", idCol: String = "doc_id",
-                          trigger: Option[Trigger] = None): DataStreamWriter[Row] = {
-    val base = docs.writeStream.outputMode(OutputMode.Append)
-    trigger.fold(base)(base.trigger)
+                          threshold: Double): DataStreamWriter[Row] =
+    docs.writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) processBatch(batch, batchId, stateDir, threshold, textCol, idCol)
+        if (!batch.isEmpty) processBatch(batch, batchId, stateDir, threshold)
       }
-  }
 
   /** One micro-batch of the loop, REPLAY-IDEMPOTENT: every state table is
     * partitioned by batch_id and written with dynamic partition overwrite,
@@ -45,10 +41,9 @@ object StreamingDedup {
     * guarantee foreachBatch sinks must provide themselves — Spark may
     * re-deliver a batch id). Exposed for direct testing. */
   def processBatch(batch: DataFrame, batchId: Long, stateDir: String,
-                   threshold: Double,
-                   textCol: String = "text", idCol: String = "doc_id"): Unit = {
+                   threshold: Double): Unit = {
     val spark = batch.sparkSession
-    val b = batch.select(col(idCol), col(textCol)).localCheckpoint(true)
+    val b = batch.select(col("doc_id"), col("text")).localCheckpoint(true)
     // empty state bootstraps from correctly-typed empty frames (derived
     // from the batch itself) so batch 0 takes the same code path; a replay
     // must not see its OWN prior output as history, hence the filters.
@@ -63,11 +58,10 @@ object StreamingDedup {
       else withId
     }
     val index = readOr(s"$stateDir/index",
-      Dedup.lshIndex(b.limit(0), textCol = textCol, idCol = idCol))
+      Dedup.lshIndex(b.limit(0)))
     val corpus = readOr(s"$stateDir/corpus", b.limit(0))
     val pairs = Dedup.incrementalNearDuplicates(
-      b, corpus.drop("batch_id"), index.drop("batch_id"), threshold,
-      textCol = textCol, idCol = idCol)
+      b, corpus.drop("batch_id"), index.drop("batch_id"), threshold)
     // Static overwrite of THIS batch's own partition directory. Dynamic
     // partition overwrite only replaces partitions PRESENT in the written
     // frame — a replay whose recomputed pairs frame is empty would leave
@@ -78,7 +72,7 @@ object StreamingDedup {
     def overwriteOwn(df: DataFrame, path: String): Unit =
       df.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
     overwriteOwn(pairs, s"$stateDir/pairs")
-    overwriteOwn(Dedup.lshIndex(b, textCol = textCol, idCol = idCol), s"$stateDir/index")
+    overwriteOwn(Dedup.lshIndex(b), s"$stateDir/index")
     overwriteOwn(b, s"$stateDir/corpus")
   }
 

@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.Row
 import graft.operators.SegmentDef
 import graft.state.{MicroBatchPipeline, StateStorePaths}
@@ -51,10 +51,8 @@ object StreamingSegments {
       events: DataFrame, // streaming DataFrame
       pipeline: MicroBatchPipeline,
       epochToTs: Long => Timestamp,
-      trigger: Option[Trigger] = None,
-      retentionDays: Option[Int] = None): DataStreamWriter[Row] = {
-    val base = events.writeStream.outputMode(OutputMode.Append)
-    trigger.fold(base)(base.trigger)
+      retentionDays: Option[Int] = None): DataStreamWriter[Row] =
+    events.writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val ts = epochToTs(batchId)
         val lower = new Timestamp(0L) // offsets bound the slice; no cursor needed
@@ -64,7 +62,6 @@ object StreamingSegments {
             batch.sparkSession, pipeline.paths.changeLog,
             ts.toLocalDateTime.toLocalDate, days))
       }
-  }
 
   /** Update-mode upsert sink for a streaming aggregation: each trigger's
     * CHANGED per-user rows append to a parquet log stamped with the batch id;
@@ -74,15 +71,12 @@ object StreamingSegments {
     * driver, and the watermark still prunes aggregation state (complete mode
     * disables watermark pruning entirely) — the shape that survives 100 TB.
     */
-  def updateModeParquetUpsert(agg: DataFrame, sinkDir: String,
-                              trigger: Option[Trigger] = None): DataStreamWriter[Row] = {
-    val base = agg.writeStream.outputMode(OutputMode.Update)
-    trigger.fold(base)(base.trigger)
+  def updateModeParquetUpsert(agg: DataFrame, sinkDir: String): DataStreamWriter[Row] =
+    agg.writeStream.outputMode(OutputMode.Update)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.withColumn("batch_id", lit(batchId))
           .write.mode("append").parquet(sinkDir)
       }
-  }
 
   /** Native watermarked streaming aggregation: per-user event count after
     * duplicate-id suppression, + max event time. `withWatermark` bounds BOTH
@@ -98,15 +92,12 @@ object StreamingSegments {
       events: DataFrame, // streaming, with event-time column
       seg: SegmentDef,
       eventTimeCol: String,
-      watermarkDelay: String = "10 minutes",
-      userCol: String = "user_id",
-      typeCol: String = "event_type",
-      idCol: String = "event_id"): DataFrame =
+      watermarkDelay: String = "10 minutes"): DataFrame =
     events
-      .filter(col(typeCol) === seg.eventType)
+      .filter(col("event_type") === seg.eventType)
       .withWatermark(eventTimeCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark(idCol) // exactly-once under duplicate delivery (T7)
-      .groupBy(col(userCol))
+      .dropDuplicatesWithinWatermark("event_id") // exactly-once under duplicate delivery (T7)
+      .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_unique"), max(col(eventTimeCol)).as("last_event_time"))
       .withColumn("in_segment", col("n_unique") >= seg.minCount)
 }

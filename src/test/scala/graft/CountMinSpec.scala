@@ -49,7 +49,6 @@ class CountMinSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect()(0)
     assert(viaExpr._1 >= 3 && viaExpr._2 >= 1 && viaExpr._3 == 5)
     df.createOrReplaceTempView("cms_words")
-    GraftFunctions.register(spark)
     val viaSql = spark.sql(
       """SELECT graft_cms_estimate(st, 'spark'), graft_cms_total(st)
          FROM (SELECT graft_cms_state(w) AS st FROM cms_words)""")

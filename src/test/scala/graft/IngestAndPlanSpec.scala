@@ -60,8 +60,8 @@ class IngestAndPlanSpec extends SparkSpec {
       """{"user_id":"2","event_name":"BUTTON_CLICK","timestamp":"2023-01-01T00:00:00Z","message_id":"m3"}""",
       """{"user_id":"2","event_name":"BUTTON_CLICK","timestamp":"2023-01-01T00:00:00Z","message_id":"m3"}"""
     ).toDS()
-    val df = Ingest.dedupByMessageId(Ingest.jsonLines(spark, lines, eventSchema),
-                                     "message_id")
+    val df = Ingest.dedupByMessageId(Ingest.jsonLines(spark, lines, eventSchema)
+      .withColumnRenamed("message_id", "event_id"))
     assert(df.count() == 1)
   }
 
@@ -223,8 +223,7 @@ class IngestAndPlanSpec extends SparkSpec {
       s"distributed ntile must not funnel rows through one task:\n$plan")
   }
 
-  test("native functions reachable from plain SQL after registration") {
-    GraftFunctions.register(spark)
+  test("native functions reachable from plain SQL through the session extensions") {
     Tables.documents(spark, "/root/testdata/sf0.001").createOrReplaceTempView("docs_sql")
     val viaSql = spark.sql(
       """SELECT doc_id, graft_lang_id(text) AS lang_pred,

@@ -607,7 +607,7 @@ class InvariantSpec extends SparkSpec {
       .sortBy(_.ts.getTime)
     val seg = SegmentDef("BUTTON_CLICK", 8)
     val paths = StateStorePaths(tmpDir("inv"))
-    val pipe = new MicroBatchPipeline(spark, seg, paths, procTimeCol = "ts")
+    val pipe = new MicroBatchPipeline(spark, seg, paths)
     // cut into 4 arbitrary processing-time batches
     val times = events.map(_.ts.getTime)
     val cuts = Seq(times.min, times.max * 1 / 4 + times.min * 3 / 4,

@@ -66,7 +66,7 @@ class LttbSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
     val grouped = ev.groupBy(col("user_id"))
-      .agg(EventAnalytics.lttbPoints("ts", "event_id", "value").as("__p"))
+      .agg(EventAnalytics.lttbPoints.as("__p"))
     val rows = grouped.select(col("user_id"),
         graft.functions.NativeExprs.lttbSelect(col("__p"), 10).as("native"),
         EventAnalytics.lttbChain(col("__p"), 10).as("chain"))

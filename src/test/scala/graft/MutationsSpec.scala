@@ -90,9 +90,7 @@ class MutationsSpec extends SparkSpec {
     import graft.operators.SegmentDef
     val paths = StateStorePaths(tmpDir("forget"))
     val seg = SegmentDef("BUTTON_CLICK", 2)
-    val pipe = new MicroBatchPipeline(spark, seg, paths,
-      userCol = "user_id", typeCol = "event_type", idCol = "event_id",
-      procTimeCol = "ts")
+    val pipe = new MicroBatchPipeline(spark, seg, paths)
     val t0 = Timestamp.valueOf("2024-01-02 00:00:00")
     val events = Seq(
       ("1", "BUTTON_CLICK", Timestamp.valueOf("2024-01-01 10:00:00"), "m1"),

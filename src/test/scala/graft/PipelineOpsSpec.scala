@@ -301,10 +301,10 @@ class PipelineOpsSpec extends SparkSpec {
     // tiny alphabet → dense gram universe → the dispatch picks DIRECT
     val keys = (0L until 40L).map(i =>
       (i, (0 until 12).map(_ => ('a' + rnd.nextInt(3)).toChar).mkString)).toDF("doc_id", "key")
-    val direct = Dedup.editDistancePairs(keys, maxDist = 1, keyCol = "key")
+    val direct = Dedup.editDistancePairs(keys, maxDist = 1)
     assert(!direct.queryExecution.executedPlan.toString.contains("collect_list"),
       "fixture must engage the direct banded lane (no prefix collect_list) under the default budget")
-    val guarded = Dedup.editDistancePairs(keys, maxDist = 1, keyCol = "key",
+    val guarded = Dedup.editDistancePairs(keys, maxDist = 1,
       maxDirectKeyBytes = 1L)
     assert(guarded.queryExecution.executedPlan.toString.contains("collect_list"),
       "over-budget key table must route through the prefix plan")
@@ -350,7 +350,7 @@ class PipelineOpsSpec extends SparkSpec {
       // force BOTH exact plans via the dispatch knob: 0 → prefix-filtered
       // (with its lemma-void fallback lane), +∞ → direct banded
       for (factor <- Seq(0.0, Double.PositiveInfinity)) {
-        val got = Dedup.editDistancePairs(df, maxDist = k, keyCol = "key",
+        val got = Dedup.editDistancePairs(df, maxDist = k,
             directJoinFactor = factor)
           .select($"id_a", $"id_b", $"dist").as[(Long, Long, Long)].collect().toSet
         assert(got == brute, s"k=$k factor=$factor: got ${got.size} pairs vs " +
@@ -1005,7 +1005,7 @@ class PipelineOpsSpec extends SparkSpec {
     val dupSet = wins.filter(t => freq(t._1) >= 2).map(t => (t._2, t._3)).toSet
 
     val base = docs.select($"doc_id", coalesce($"text", lit("")).as("s"))
-    val cand = Dedup.exactSubstrCandidates(base, L, "doc_id")
+    val cand = Dedup.exactSubstrCandidates(base, L)
       .as[(Long, Int)].collect().toSet
     assert(cand == dupSet,
       s"candidate stage must equal true dup positions: got ${cand.size}, want ${dupSet.size}")

@@ -17,6 +17,18 @@ class PlanLintSpec extends SparkSpec {
   // their own specs; building them here would run full streaming lifecycles
   private val streaming = PlanShuffleCount.streamingQueries
 
+  // every non-streaming query's optimized plan and executed-plan text, built
+  // ONCE at sf0.001 and shared by every check below
+  private final case class Plans(
+      optimized: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      executed: String)
+  private lazy val plans: Seq[(String, Plans)] =
+    SparkEntry.queries.toSeq.collect { case (name, fn) if !streaming(name) =>
+      val qe = fn(spark, "/root/testdata/sf0.001").queryExecution
+      name -> Plans(qe.optimizedPlan, qe.executedPlan.toString)
+    }
+  private lazy val plansByName = plans.toMap
+
   // scalar/global outputs: the FINAL one-row aggregate is the result itself,
   // upstream partial aggregation still runs distributed
   private val scalarOutput = Set(
@@ -91,17 +103,14 @@ class PlanLintSpec extends SparkSpec {
     // scalarOutput queries are additionally exempt: their BNLJs join ONE-ROW
     // aggregate frames (corpus stats, overlap algebra) — constant-size by
     // construction, not a quadratic risk
-    for ((name, fn) <- SparkEntry.queries
-         if !streaming(name) && !bnljAllowed(name) && !scalarOutput(name)) {
-      val plan = fn(spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
+    for ((name, Plans(_, plan)) <- plans if !bnljAllowed(name) && !scalarOutput(name)) {
       assert(!plan.contains("BroadcastNestedLoopJoin"),
         s"$name plans a broadcast nested-loop join:\n$plan")
     }
   }
 
   test("no cartesian product in any contract plan") {
-    for ((name, fn) <- SparkEntry.queries if !streaming(name)) {
-      val plan = fn(spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
+    for ((name, Plans(_, plan)) <- plans) {
       assert(!plan.contains("CartesianProduct"), s"$name plans a cartesian join:\n$plan")
     }
   }
@@ -114,9 +123,7 @@ class PlanLintSpec extends SparkSpec {
   test("ranking/bucketing windows stay off doc-sized frames") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
     def windows(name: String): Seq[LWindow] =
-      SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
-        .queryExecution.optimizedPlan
-        .collect { case w: LWindow => w }
+      plansByName(name).optimized.collect { case w: LWindow => w }
     // hybrid_rrf_search: rank assignment is a constant-size global fold
     // (collect_list → array_sort → posexplode) — NO window node at all
     assert(windows("hybrid_rrf_search").isEmpty,
@@ -135,13 +142,12 @@ class PlanLintSpec extends SparkSpec {
     // r16 weak fix: membership digests are order-free exact-integer hash
     // sums — no aggregation buffer in the plan may materialize a
     // corpus-proportional id list
-    val ccnetPlan = SparkEntry.queries("ccnet_perplexity_buckets")(
-      spark, "/root/testdata/sf0.001").queryExecution.optimizedPlan.toString
+    val ccnetPlan = plansByName("ccnet_perplexity_buckets").optimized.toString
     assert(!ccnetPlan.contains("collect_list"),
       s"ccnet must not materialize doc-id lists in aggregation buffers:\n$ccnetPlan")
   }
 
-  // r18 global-window audit (WindowAudit tool): across all 198 queries only
+  // r18 global-window audit (this test): across all 198 queries only
   // TWO no-partition windows exist — events_running_users' day cumsum and
   // theta_weekly_retention's week lag — and the whole contract surface may
   // never grow an unvetted one. Each allowed instance is structurally pinned
@@ -153,10 +159,8 @@ class PlanLintSpec extends SparkSpec {
   test("global (no-partition) windows: exactly the two audited, both over aggregated frames") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
     val allowedGlobal = Set("events_running_users", "theta_weekly_retention")
-    for ((name, fn) <- SparkEntry.queries if !streaming(name)) {
-      val globals = fn(spark, "/root/testdata/sf0.001")
-        .queryExecution.optimizedPlan
-        .collect { case w: LWindow if w.partitionSpec.isEmpty => w }
+    for ((name, Plans(optimized, _)) <- plans) {
+      val globals = optimized.collect { case w: LWindow if w.partitionSpec.isEmpty => w }
       if (!allowedGlobal(name))
         assert(globals.isEmpty,
           s"$name grew an unvetted global window:\n${globals.headOption.getOrElse("")}")
@@ -168,8 +172,7 @@ class PlanLintSpec extends SparkSpec {
   }
 
   test("no single-partition exchange outside scalar-output queries") {
-    for ((name, fn) <- SparkEntry.queries if !streaming(name) && !scalarOutput(name)) {
-      val plan = fn(spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
+    for ((name, Plans(_, plan)) <- plans if !scalarOutput(name)) {
       assert(!plan.contains("Exchange SinglePartition"),
         s"$name funnels rows through one task:\n$plan")
     }
@@ -186,8 +189,7 @@ class PlanLintSpec extends SparkSpec {
   private val pinnedShuffles = PlanShuffleCount.loadGolden()
 
   test("shuffle-exchange count per query stays at its pinned value") {
-    for ((name, fn) <- SparkEntry.queries if !streaming(name)) {
-      val plan = fn(spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
+    for ((name, Plans(_, plan)) <- plans) {
       val n = PlanShuffleCount.count(plan)
       pinnedShuffles.get(name) match {
         case None => fail(s"$name has no pinned shuffle count — run " +

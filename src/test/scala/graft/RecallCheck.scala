@@ -43,7 +43,7 @@ object RecallCheck {
           abs(length(col("ka")) - length(col("kb"))) <= 8)
       .filter(levenshtein(col("ka"), col("kb"), 8) >= 0)
     val edBruteSet = pairSet(edBrute)
-    val ed = pairSet(graft.operators.Dedup.editDistancePairs(keys, maxDist = 8, keyCol = "key"))
+    val ed = pairSet(graft.operators.Dedup.editDistancePairs(keys, maxDist = 8))
     println(s"[recall] editdist pairs: ${ed.size} vs brute ${edBruteSet.size}; " +
       s"missed=${(edBruteSet -- ed).size} extra=${(ed -- edBruteSet).size}")
 

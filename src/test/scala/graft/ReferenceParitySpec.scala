@@ -50,9 +50,7 @@ class ReferenceParitySpec extends SparkSpec {
   // change-log-restricted merge
   test("variant 3: micro-batch incremental state pipeline") {
     val paths = StateStorePaths(tmpDir("mb"))
-    val pipe = new MicroBatchPipeline(spark, seg, paths,
-      userCol = "user_id", typeCol = "event_type", idCol = "event_id",
-      procTimeCol = "ts")
+    val pipe = new MicroBatchPipeline(spark, seg, paths)
     val events = Seq(
       Ev("1", "BUTTON_CLICK", secsAgo(120), "m1"),
       Ev("1", "BUTTON_CLICK", secsAgo(60), "m2"),
@@ -74,8 +72,7 @@ class ReferenceParitySpec extends SparkSpec {
   test("variant 4: event-time/processing-time separation") {
     val paths = StateStorePaths(tmpDir("et"))
     val pipe = new MicroBatchPipeline(spark, seg, paths,
-      userCol = "user_id", typeCol = "event_type", idCol = "event_id",
-      procTimeCol = "ts", eventTimeCol = Some("event_time"))
+      eventTimeCol = Some("event_time"))
     val events = Seq(
       EvT("1", "BUTTON_CLICK", secsAgo(120), secsAgo(90), "de4b1e29"),
       EvT("1", "BUTTON_CLICK", secsAgo(60), secsAgo(30), "ca4222e5"),
@@ -115,7 +112,7 @@ class ReferenceParitySpec extends SparkSpec {
   test("late event-time arrival is never dropped (processing-time cursor)") {
     val paths = StateStorePaths(tmpDir("late"))
     val pipe = new MicroBatchPipeline(spark, seg, paths,
-      procTimeCol = "ts", eventTimeCol = Some("event_time"))
+      eventTimeCol = Some("event_time"))
     val b1 = Seq(EvT("9", "BUTTON_CLICK", secsAgo(120), secsAgo(90), "m1")).toDF()
     pipe.processBatch(b1, secsAgo(200), T0)
     // event_time far in the past, but processing_time is now → still counted

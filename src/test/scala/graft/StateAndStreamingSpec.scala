@@ -16,7 +16,7 @@ class StateAndStreamingSpec extends SparkSpec {
 
   test("state compaction preserves membership and collapses to one row per user") {
     val paths = StateStorePaths(tmpDir("compact"))
-    val pipe = new MicroBatchPipeline(spark, seg, paths, procTimeCol = "ts")
+    val pipe = new MicroBatchPipeline(spark, seg, paths)
     // 3 batches, one event each for user A; one for user B
     for (i <- 0 until 3) {
       val batch = Seq(
@@ -45,7 +45,7 @@ class StateAndStreamingSpec extends SparkSpec {
   test("streaming change-log TTL drops old partitions mid-stream, results unchanged") {
     implicit val sqlCtx = spark.sqlContext
     val paths = StateStorePaths(tmpDir("stream_ttl"))
-    val pipe = new MicroBatchPipeline(spark, seg, paths, procTimeCol = "ts")
+    val pipe = new MicroBatchPipeline(spark, seg, paths)
     val source = MemoryStream[Ev]
     // stamps advance one day per batch; a 2-day TTL must age out the early
     // change-log partitions while later batches are still arriving
@@ -80,7 +80,7 @@ class StateAndStreamingSpec extends SparkSpec {
     // states are set-semantic (HLL unions of event ids) and the event-time
     // max is idempotent, so duplicate state rows merge to the same answer
     val paths = StateStorePaths(tmpDir("replay"))
-    val pipe = new MicroBatchPipeline(spark, seg, paths, procTimeCol = "ts")
+    val pipe = new MicroBatchPipeline(spark, seg, paths)
     val batch = Seq(
       Ev("1", "BUTTON_CLICK", ts("2023-01-01 00:00:00"), "m1"),
       Ev("1", "BUTTON_CLICK", ts("2023-01-01 00:05:00"), "m2"),
@@ -96,14 +96,14 @@ class StateAndStreamingSpec extends SparkSpec {
 
   test("state survives engine restart: a fresh pipeline instance continues") {
     val paths = StateStorePaths(tmpDir("restart"))
-    val pipe1 = new MicroBatchPipeline(spark, seg, paths, procTimeCol = "ts")
+    val pipe1 = new MicroBatchPipeline(spark, seg, paths)
     pipe1.processBatch(
       Seq(Ev("1", "BUTTON_CLICK", ts("2023-01-01 00:00:00"), "m1")).toDF(),
       ts("2023-01-01 00:00:00"), ts("2023-01-01 01:00:00"))
     // "restart": a brand-new pipeline object over the same table paths — all
     // state lives in parquet (the AggregatingMergeTree durability model), so
     // nothing is lost with the first instance
-    val pipe2 = new MicroBatchPipeline(spark, seg, paths, procTimeCol = "ts")
+    val pipe2 = new MicroBatchPipeline(spark, seg, paths)
     pipe2.processBatch(
       Seq(Ev("1", "BUTTON_CLICK", ts("2023-01-01 01:30:00"), "m2")).toDF(),
       ts("2023-01-01 01:00:00"), ts("2023-01-01 02:00:00"))
@@ -113,7 +113,7 @@ class StateAndStreamingSpec extends SparkSpec {
 
   test("compact crash recovery: parked state table is restored, not shadowed") {
     val paths = StateStorePaths(tmpDir("crash"))
-    val pipe = new MicroBatchPipeline(spark, seg, paths, procTimeCol = "ts")
+    val pipe = new MicroBatchPipeline(spark, seg, paths)
     pipe.processBatch(
       Seq(Ev("1", "BUTTON_CLICK", ts("2023-01-01 00:00:00"), "m1"),
           Ev("1", "BUTTON_CLICK", ts("2023-01-01 00:01:00"), "m2")).toDF(),
@@ -147,7 +147,7 @@ class StateAndStreamingSpec extends SparkSpec {
   test("foreachBatch streaming drives the same persisted-state pipeline") {
     implicit val sqlCtx = spark.sqlContext
     val paths = StateStorePaths(tmpDir("stream"))
-    val pipe = new MicroBatchPipeline(spark, seg, paths, procTimeCol = "ts")
+    val pipe = new MicroBatchPipeline(spark, seg, paths)
     val source = MemoryStream[Ev]
     source.addData(
       Ev("1", "BUTTON_CLICK", ts("2023-01-01 00:00:00"), "m1"),
