@@ -56,13 +56,13 @@ object Dsir {
   }
 
   /** Fit the target-vs-raw bucket models in ONE pass (raw = every feature
-    * row, target = rows whose `targetCol` flag is true) and derive integer
+    * row, target = rows whose boolean `t` flag is true) and derive integer
     * weights. The count frame is ≤ [[Buckets]] rows — a metadata-sized
     * collect. */
-  def learnWeights(feats: DataFrame, targetCol: String): Weights = {
+  def learnWeights(feats: DataFrame): Weights = {
     val rows = feats.groupBy(col("b"))
       .agg(count(lit(1)).as("cr"),
-           sum(when(col(targetCol), 1L).otherwise(0L)).as("ct"))
+           sum(when(col("t"), 1L).otherwise(0L)).as("ct"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     val tTot = rows.iterator.map(_._3).sum.toDouble + Buckets
     val rTot = rows.iterator.map(_._2).sum.toDouble + Buckets

@@ -463,9 +463,8 @@ object SegmentQueries {
       linkTree(cdcFeedTree(s, dir), s"$tmp/src")
       val stream = s.readStream.schema(s.read.parquet(s"$tmp/src").schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src")
-      drain(graft.streaming.StreamingCdc.foreachBatchMergeApply(
-          stream, s"$tmp/table", Seq("user_id"), opCol = "op", seqCol = "seq",
-          partitionCol = "cohort", sortCols = Seq("user_id")), s"$tmp/ckpt")
+      drain(graft.streaming.StreamingCdc.foreachBatchMergeApply(stream, s"$tmp/table"),
+        s"$tmp/ckpt")
       s.read.parquet(s"$tmp/table")
         .select(col("user_id"), col("n_clicks"),
                 col("cohort").cast("int").as("cohort"))
@@ -644,7 +643,7 @@ object SegmentQueries {
   private def nativeMembers(s: SparkSession, tmp: String, stream: DataFrame): DataFrame = {
     val agg = graft.streaming.StreamingSegments.watermarkedCounts(
       stream.withColumn("event_id", col("event_id").cast("string")),
-      ClickSeg, eventTimeCol = "ts", watermarkDelay = "40 days")
+      ClickSeg, watermarkDelay = "40 days")
     drain(graft.streaming.StreamingSegments.updateModeParquetUpsert(agg, s"$tmp/sink"),
       s"$tmp/ckpt")
     LatestWins.maxBy(s.read.parquet(s"$tmp/sink"), Seq("user_id"),

@@ -1156,7 +1156,7 @@ object TextQueries {
     Artifacts.value(s, dir, "dsir_weights", "documents") {
       Dsir.learnWeights(
         Dsir.features(docsSharded(s, dir),
-                      extra = Seq((col("lang") === "en").as("t"))), "t")
+                      extra = Seq((col("lang") === "en").as("t"))))
     }
 
   /** DSIR importance resampling ([[graft.operators.Dsir]], Xie et al.):

@@ -8,16 +8,16 @@ import graft.sources.Mutations
 
 /** Live CDC landing — the streaming twin of
   * [[graft.sources.Mutations.mergeApply]], the same way [[StreamingDedup]]
-  * twins the batch near-dup operator: a stream of keyed change rows
-  * (insert/update/delete in `opCol`, ordered by a monotone `seqCol` within
-  * each key) lands on a partitioned parquet table one micro-batch at a
-  * time, each batch compacted to its keys' final ops before one
-  * minimal-touch merge.
+  * twins the batch near-dup operator: a stream of change rows keyed by
+  * `user_id` (insert/update/delete in `op`, ordered by a monotone `seq`
+  * within each key) lands on a `cohort`-partitioned parquet table one
+  * micro-batch at a time, each batch compacted to its keys' final ops
+  * before one minimal-touch merge.
   *
   * Semantics per micro-batch:
   *  1. COMPACT: a raw CDC feed carries multiple ops per key (an update then
   *     a delete can arrive in one trigger interval); the batch keeps only
-  *     each key's highest-`seqCol` row — exactly the compaction Kafka
+  *     each key's highest-`seq` row — exactly the compaction Kafka
   *     Connect / Debezium consumers apply before a keyed sink write.
   *  2. MERGE: [[Mutations.mergeApply]] — the batch's keys broadcast into
   *     the table scan, only partitions holding a changed key or targeted by
@@ -50,36 +50,29 @@ object StreamingCdc {
     * its empty-batch short-circuit, so an empty FIRST micro-batch against a
     * never-created target throws PATH_NOT_FOUND; create the target (even
     * empty, with its schema) before wiring the stream. */
-  def foreachBatchMergeApply(changes: DataFrame, path: String,
-                             keyCols: Seq[String], opCol: String,
-                             seqCol: String, partitionCol: String,
-                             sortCols: Seq[String]): DataStreamWriter[Row] =
+  def foreachBatchMergeApply(changes: DataFrame, path: String): DataStreamWriter[Row] =
     changes.writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // no isEmpty pre-check: that is one extra job per micro-batch, and
         // mergeApply's FIRST action (the validation aggregate) already
         // returns DeleteStats(0,0) on an empty batch
-        processBatch(batch, path, keyCols, opCol, seqCol, partitionCol, sortCols)
+        processBatch(batch, path)
       }
 
   /** One micro-batch: compact to final ops, then merge. Exposed for direct
     * testing and for hand-rolled micro-batch loops. */
-  def processBatch(batch: DataFrame, path: String, keyCols: Seq[String],
-                   opCol: String, seqCol: String, partitionCol: String,
-                   sortCols: Seq[String]): Unit = {
-    Mutations.mergeApply(batch.sparkSession, path,
-      compactBatch(batch, keyCols, seqCol),
-      keyCols, opCol, partitionCol, sortCols)
+  def processBatch(batch: DataFrame, path: String): Unit = {
+    Mutations.mergeApply(batch.sparkSession, path, compactBatch(batch),
+      Seq("user_id"), opCol = "op", partitionCol = "cohort", sortCols = Seq("user_id"))
     ()
   }
 
-  /** Per-key final op of a raw CDC slice: highest `seqCol` wins, ties to
+  /** Per-key final op of a raw CDC slice: highest `seq` wins, ties to
     * the later row by every remaining column (a deterministic pin — a real
-    * feed's seq is unique per key). The `seqCol` is dropped: the landed
+    * feed's seq is unique per key). The `seq` column is dropped: the landed
     * table carries payloads, not transport metadata. */
-  def compactBatch(batch: DataFrame, keyCols: Seq[String],
-                   seqCol: String): DataFrame = {
-    val others = batch.columns.filter(c => !keyCols.contains(c) && c != seqCol)
-    LatestWins.latestRows(batch, keyCols, col(seqCol), others.map(col)).drop(seqCol)
+  def compactBatch(batch: DataFrame): DataFrame = {
+    val others = batch.columns.filter(c => c != "user_id" && c != "seq")
+    LatestWins.latestRows(batch, Seq("user_id"), col("seq"), others.map(col)).drop("seq")
   }
 }

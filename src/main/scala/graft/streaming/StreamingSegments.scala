@@ -89,15 +89,14 @@ object StreamingSegments {
     * change-log-restricted merge (T4).
     */
   def watermarkedCounts(
-      events: DataFrame, // streaming, with event-time column
+      events: DataFrame, // streaming, with event-time column `ts`
       seg: SegmentDef,
-      eventTimeCol: String,
       watermarkDelay: String = "10 minutes"): DataFrame =
     events
       .filter(col("event_type") === seg.eventType)
-      .withWatermark(eventTimeCol, watermarkDelay)
+      .withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark("event_id") // exactly-once under duplicate delivery (T7)
       .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_unique"), max(col(eventTimeCol)).as("last_event_time"))
+      .agg(count(lit(1)).as("n_unique"), max(col("ts")).as("last_event_time"))
       .withColumn("in_segment", col("n_unique") >= seg.minCount)
 }

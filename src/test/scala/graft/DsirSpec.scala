@@ -32,8 +32,8 @@ class DsirSpec extends SparkSpec {
       (3L, "gamma gamma delta", false)
     ).toDF("doc_id", "text", "t")
     val feats = Dsir.features(docs, extra = Seq(col("t")))
-    val w1 = Dsir.learnWeights(feats, "t")
-    val w2 = Dsir.learnWeights(feats, "t")
+    val w1 = Dsir.learnWeights(feats)
+    val w2 = Dsir.learnWeights(feats)
     assert(w1 == w2, "same corpus must learn the same weights")
     // 'alpha' appears in target; 'delta' never does → weight order
     val wAlpha = w1.byBucket(bucketOf("alpha"))
@@ -64,7 +64,7 @@ class DsirSpec extends SparkSpec {
   test("docScores matches an independent driver brute force on real docs") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(80).cache()
     val feats = Dsir.features(docs, extra = Seq((col("lang") === "en").as("t")))
-    val w = Dsir.learnWeights(feats, "t")
+    val w = Dsir.learnWeights(feats)
     val got = Dsir.docScores(Dsir.features(docs), w)
       .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     val raw = docs.select($"doc_id", $"text").as[(Long, String)].collect()

@@ -315,11 +315,11 @@ class MutationsSpec extends SparkSpec {
       (1L, 10L, "a", "U", 3L), (1L, 99L, "a", "D", 1L), (1L, 50L, "a", "U", 2L),
       (2L, 20L, "b", "I", 1L), (2L, 0L, "b", "D", 2L))
       .toDF("user_id", "score", "cohort", "op", "seq")
-    val got = graft.streaming.StreamingCdc.compactBatch(raw, Seq("user_id"), "seq")
+    val got = graft.streaming.StreamingCdc.compactBatch(raw)
       .select($"user_id", $"score", $"op").as[(Long, Long, String)]
       .collect().toSet
     assert(got == Set((1L, 10L, "U"), (2L, 0L, "D")))
-    assert(!graft.streaming.StreamingCdc.compactBatch(raw, Seq("user_id"), "seq")
+    assert(!graft.streaming.StreamingCdc.compactBatch(raw)
       .columns.contains("seq"), "transport seq must not land")
   }
 
@@ -335,8 +335,7 @@ class MutationsSpec extends SparkSpec {
     val b1 = Seq((2L, 22L, "a", "I", 2L), (3L, 0L, "b", "D", 2L))
       .toDF("user_id", "score", "cohort", "op", "seq")
     def apply(b: org.apache.spark.sql.DataFrame) =
-      graft.streaming.StreamingCdc.processBatch(b, dir, Seq("user_id"),
-        "op", "seq", "cohort", Seq("user_id"))
+      graft.streaming.StreamingCdc.processBatch(b, dir)
     apply(b0); apply(b1)
     def table() = spark.read.parquet(dir)
       .select($"user_id", $"score", $"cohort").as[(Long, Long, String)]
@@ -399,8 +398,7 @@ class MutationsSpec extends SparkSpec {
     val b1 = Seq((2L, 22L, "a", "I", 2L))
       .toDF("user_id", "score", "cohort", "op", "seq")
     def apply(b: org.apache.spark.sql.DataFrame) =
-      graft.streaming.StreamingCdc.processBatch(b, dir, Seq("user_id"),
-        "op", "seq", "cohort", Seq("user_id"))
+      graft.streaming.StreamingCdc.processBatch(b, dir)
     def table() = spark.read.parquet(dir)
       .select($"user_id", $"score").as[(Long, Long)].collect().toSet
     apply(b0); apply(b1)

@@ -452,7 +452,7 @@ class StateAndStreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val source = MemoryStream[Ev]
     val agg = StreamingSegments.watermarkedCounts(
-      source.toDF(), seg, eventTimeCol = "ts", watermarkDelay = "10 minutes")
+      source.toDF(), seg, watermarkDelay = "10 minutes")
     val q = agg.writeStream.format("memory").queryName("wm_counts")
       .outputMode("update").start()
     source.addData(
