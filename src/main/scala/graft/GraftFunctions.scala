@@ -12,6 +12,13 @@ import graft.functions._
   * `spark.sql.extensions=graft.GraftExtensions`, which [[GraftSession]] sets
   * on every session it builds (and a cluster sets in its conf) — the
   * functions exist in every session from startup.
+  *
+  * The theta, KLL and frequent-items sketches are not registered here:
+  * they are Spark built-ins (`theta_sketch_agg`, `theta_union_agg`,
+  * `theta_union`, `theta_intersection`, `theta_difference`,
+  * `theta_sketch_estimate`, `kll_*_double`, `approx_top_k_*`) and SQL calls
+  * them by their own names. Only the theta bounds check, which Spark has no
+  * function for, is registered, as `graft_theta_bounds_ok`.
   */
 object GraftFunctions {
 
@@ -75,14 +82,6 @@ object GraftFunctions {
       require(es.length == 2, "graft_masked_concat(tokens, sortedRemovedPositions)")
       MaskedConcatExpr(es.head, es(1))
     },
-    "graft_quantile_estimate" -> { es =>
-      require(es.length == 2, "graft_quantile_estimate(state, q)")
-      KllEstimateExpr(es.head, doubleLit(es(1)))
-    },
-    "graft_topk_estimate" -> { es =>
-      require(es.length == 2, "graft_topk_estimate(state, k)")
-      FreqTopKExpr(es.head, intLit(es(1)))
-    },
     "graft_text_stats" -> { es =>
       require(es.length == 1, "graft_text_stats(text)")
       TextStatsExpr(es.head, TextAnalysis.Stopwords("en"))
@@ -119,35 +118,6 @@ object GraftFunctions {
       require(es.length == 1, "graft_cms_merge_state(state)")
       CmsMergeAgg(es.head)
     },
-    // theta distinct states: aggregate functions registered bare — the
-    // analyzer wraps a returned AggregateFunction in its AggregateExpression
-    "graft_theta_state" -> { es =>
-      require(es.length == 1 || es.length == 2, "graft_theta_state(col[, lgK])")
-      ThetaStateAgg(es.head, if (es.length == 2) intLit(es(1)) else ThetaSketch.DefaultLgK)
-    },
-    "graft_theta_union_state" -> { es =>
-      require(es.length == 1 || es.length == 2, "graft_theta_union_state(state[, lgK])")
-      ThetaMergeAgg(es.head, if (es.length == 2) intLit(es(1)) else ThetaSketch.DefaultLgK)
-    },
-    "graft_theta_union" -> { es =>
-      require(es.length == 2 || es.length == 3, "graft_theta_union(stateA, stateB[, lgK])")
-      ThetaSetOpExpr(es.head, es(1), ThetaSetOpExpr.UnionOp,
-        if (es.length == 3) intLit(es(2)) else ThetaSketch.DefaultLgK)
-    },
-    "graft_theta_intersect" -> { es =>
-      require(es.length == 2 || es.length == 3, "graft_theta_intersect(stateA, stateB[, lgK])")
-      ThetaSetOpExpr(es.head, es(1), ThetaSetOpExpr.IntersectOp,
-        if (es.length == 3) intLit(es(2)) else ThetaSketch.DefaultLgK)
-    },
-    "graft_theta_anotb" -> { es =>
-      require(es.length == 2 || es.length == 3, "graft_theta_anotb(stateA, stateB[, lgK])")
-      ThetaSetOpExpr(es.head, es(1), ThetaSetOpExpr.AnotBOp,
-        if (es.length == 3) intLit(es(2)) else ThetaSketch.DefaultLgK)
-    },
-    "graft_theta_estimate" -> { es =>
-      require(es.length == 1, "graft_theta_estimate(state)")
-      ThetaEstimateExpr(es.head)
-    },
     "graft_theta_bounds_ok" -> { es =>
       require(es.length == 2 || es.length == 3,
         "graft_theta_bounds_ok(state, exact[, numStdDev])")
@@ -163,15 +133,6 @@ object GraftFunctions {
     case i: Int => i.toLong
     case l: Long => l
     case other => throw new IllegalArgumentException(s"expected long literal, got $other")
-  }
-  private def doubleLit(e: Expression): Double = e.eval(null) match {
-    case d: Double => d
-    case f: Float => f.toDouble
-    case i: Int => i.toDouble
-    case l: Long => l.toDouble
-    case d: java.math.BigDecimal => d.doubleValue()
-    case d: org.apache.spark.sql.types.Decimal => d.toDouble
-    case other => throw new IllegalArgumentException(s"expected numeric literal, got $other")
   }
 
   private[graft] def inject(ext: SparkSessionExtensions): Unit =

@@ -15,7 +15,9 @@ import org.apache.spark.sql.types._
   * `groupBitmapMergeState` / `bitmapAnd` / `bitmapOr` / `bitmapAndnot`
   * family, completing the persisted-state algebra's fourth leg next to
   * distinct-count (HLL, [[Sketches]]), quantiles (KLL, [[QuantileSketch]])
-  * and heavy hitters (FI, [[FrequencySketch]]).
+  * and heavy hitters (FI, [[FrequencySketch]]). Those three legs are Spark
+  * built-ins; this one stays graft's own, because Spark's bitmap functions
+  * are 32,768-bit buckets with no AND/OR/ANDNOT between two states.
   *
   * Unlike the HLL leg this is EXACT set algebra: segment membership
   * (which-users, not just how-many) survives the merge, so intersection /

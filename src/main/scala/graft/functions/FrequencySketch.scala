@@ -1,151 +1,48 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-import org.apache.datasketches.common.ArrayOfStringsSerDe
-import org.apache.datasketches.frequencies.{ErrorType, ItemsSketch}
-import org.apache.datasketches.memory.Memory
+import org.apache.spark.sql.functions._
 
 /** Mergeable frequent-items sketches — the ClickHouse `topK` / `topKState` /
   * `topKMerge` combinator family, completing the sketch algebra's third leg
   * next to distinct-count (HLL, [[Sketches]]) and quantiles (KLL,
-  * [[QuantileSketch]]). State is a serialized Frequent-Items sketch
-  * (Misra-Gries family): O(maxMapSize) entries per group with the guarantee
-  * that any item occurring more than n/maxMapSize times is RETAINED (no
-  * false negatives above the error bound) — the property that makes
-  * heavy-hitter extraction safe on skewed 100 TB key distributions where an
-  * exact groupBy-count of every key would itself be the bottleneck.
+  * [[QuantileSketch]]). State is a Frequent-Items sketch (Misra-Gries
+  * family) with a 256-slot map per group: every estimate is within
+  * 3.5·n/256 of the true count, and the read-out returns only items whose
+  * lower bound clears that error, so any item occurring more than 7·n/256
+  * times is always returned — the property that makes heavy-hitter
+  * extraction safe on skewed 100 TB key distributions where an exact
+  * groupBy-count of every key would itself be the bottleneck.
   *
-  * Approximate (estimates carry ±error, result sets depend on stream order)
-  * → rows-only in the driver contract, error-bound-tested in ScalaTest.
+  * Each combinator is one Spark built-in (`approx_top_k_*`, through
+  * `call_function`: the Scala `functions` object has no wrapper for them).
+  * Approximate in the evicting regime (estimates carry ±error, result sets
+  * depend on stream order) → error-bound-tested in ScalaTest.
   */
 object FrequencySketch {
-  private def col(e: Expression): Column = ColumnBridge.column(e)
-  private def expr(c: Column): Expression = ColumnBridge.expression(c)
+  /** Spark sizes the map at the power of two that holds this many items at
+    * its 0.75 load factor: 192 → a 256-slot map. */
+  private val MaxItemsTracked = 192
 
-  /** Power of two; error bound ≈ 3.5·n/maxMapSize. */
-  val DefaultMapSize = 256
-
-  /** Partial: per-group serialized frequent-items sketch over a string column. */
-  def topKState(c: Column, maxMapSize: Int = DefaultMapSize): Column =
-    col(FreqStateAgg(expr(c), maxMapSize).toAggregateExpression())
+  /** Partial: per-group frequent-items sketch state over a string column. */
+  def topKState(c: Column): Column =
+    call_function("approx_top_k_accumulate", c, lit(MaxItemsTracked))
 
   /** Merge persisted sketch states into one state. */
-  def topKMergeState(state: Column, maxMapSize: Int = DefaultMapSize): Column =
-    col(FreqMergeAgg(expr(state), maxMapSize).toAggregateExpression())
+  def topKMergeState(state: Column): Column =
+    call_function("approx_top_k_combine", state)
 
-  /** Top-k heavy hitters from a serialized sketch:
-    * array<struct<item:string, est:long>>, NO_FALSE_NEGATIVES ordering by
-    * estimate desc then item for determinism given the same sketch. */
-  def topKEstimate(state: Column, k: Int): Column =
-    col(FreqTopKExpr(expr(state), k))
-}
-
-private[functions] object FreqSerde {
-  val serde = new ArrayOfStringsSerDe()
-  def toBytes(sk: ItemsSketch[String]): Array[Byte] = sk.toByteArray(serde)
-  def fromBytes(b: Array[Byte]): ItemsSketch[String] =
-    ItemsSketch.getInstance(Memory.wrap(b), serde)
-}
-
-/** Frequent-items build aggregate: strings in, serialized sketch out. */
-case class FreqStateAgg(child: Expression, maxMapSize: Int,
-                        mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ItemsSketch[String]] with UnaryLike[Expression] {
-  require(maxMapSize > 0 && (maxMapSize & (maxMapSize - 1)) == 0,
-    s"maxMapSize must be a power of two (DataSketches ItemsSketch), got $maxMapSize")
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): ItemsSketch[String] =
-    new ItemsSketch[String](maxMapSize)
-
-  override def update(buf: ItemsSketch[String], input: InternalRow): ItemsSketch[String] = {
-    val v = child.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[UTF8String].toString)
-    buf
+  /** Top-k heavy hitters from a sketch state:
+    * array<struct<item:string, est:long>>, ordered by estimate desc then
+    * item. The built-in leaves equal estimates in arbitrary order, so every
+    * retained item is read out and totally ordered before the k cut — ties
+    * that straddle the cut resolve by item, as an exact
+    * `ORDER BY n DESC, item LIMIT k` does. */
+  def topKEstimate(state: Column, k: Int): Column = {
+    val all = call_function("approx_top_k_estimate", state, lit(MaxItemsTracked))
+    val ranked = sort_array(transform(all, r =>
+      struct((-r("count")).as("neg_est"), r("item").as("item"))))
+    slice(transform(ranked, r =>
+      struct(r("item").as("item"), (-r("neg_est")).as("est"))), 1, k)
   }
-
-  override def merge(a: ItemsSketch[String], b: ItemsSketch[String]): ItemsSketch[String] = {
-    a.merge(b); a
-  }
-
-  override def eval(buf: ItemsSketch[String]): Any = FreqSerde.toBytes(buf)
-  override def serialize(buf: ItemsSketch[String]): Array[Byte] = FreqSerde.toBytes(buf)
-  override def deserialize(bytes: Array[Byte]): ItemsSketch[String] =
-    FreqSerde.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): FreqStateAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): FreqStateAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): FreqStateAgg =
-    copy(child = c)
-}
-
-/** Frequent-items re-merge aggregate: serialized sketches in, merged out. */
-case class FreqMergeAgg(child: Expression, maxMapSize: Int,
-                        mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ItemsSketch[String]] with UnaryLike[Expression] {
-  require(maxMapSize > 0 && (maxMapSize & (maxMapSize - 1)) == 0,
-    s"maxMapSize must be a power of two (DataSketches ItemsSketch), got $maxMapSize")
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): ItemsSketch[String] =
-    new ItemsSketch[String](maxMapSize)
-
-  override def update(buf: ItemsSketch[String], input: InternalRow): ItemsSketch[String] = {
-    val v = child.eval(input)
-    if (v != null) buf.merge(FreqSerde.fromBytes(v.asInstanceOf[Array[Byte]]))
-    buf
-  }
-
-  override def merge(a: ItemsSketch[String], b: ItemsSketch[String]): ItemsSketch[String] = {
-    a.merge(b); a
-  }
-
-  override def eval(buf: ItemsSketch[String]): Any = FreqSerde.toBytes(buf)
-  override def serialize(buf: ItemsSketch[String]): Array[Byte] = FreqSerde.toBytes(buf)
-  override def deserialize(bytes: Array[Byte]): ItemsSketch[String] =
-    FreqSerde.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): FreqMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): FreqMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): FreqMergeAgg =
-    copy(child = c)
-}
-
-/** Scalar: top-k (item, estimate) rows from a serialized sketch. */
-case class FreqTopKExpr(child: Expression, k: Int)
-  extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("item", StringType), StructField("est", LongType))),
-    containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any = {
-    val sk = FreqSerde.fromBytes(input.asInstanceOf[Array[Byte]])
-    val rows = sk.getFrequentItems(ErrorType.NO_FALSE_NEGATIVES)
-      .sortBy(r => (-r.getEstimate, r.getItem))
-      .take(k)
-      .map(r => new GenericInternalRow(
-        Array[Any](UTF8String.fromString(r.getItem), r.getEstimate)): Any)
-    new GenericArrayData(rows)
-  }
-  override protected def withNewChildInternal(c: Expression): FreqTopKExpr =
-    copy(child = c)
 }

@@ -1,130 +1,33 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types._
-import org.apache.datasketches.kll.KllDoublesSketch
-import org.apache.datasketches.memory.Memory
+import org.apache.spark.sql.functions._
 
 /** Mergeable quantile sketches — the ClickHouse `quantileState` /
   * `quantileMerge` combinator family, completing the sketch algebra next to
   * the HLL pair in [[Sketches]]. The state is a serialized KLL sketch:
   * O(k log n) bytes per group with a proven rank-error bound (~1.65/√k for
-  * the default k), mergeable associatively — so per-day partial quantile
-  * states persist in the micro-batch state store and re-merge at read, the
-  * same lifecycle as the distinct-count sketches.
+  * k = 200), mergeable associatively — so per-day partial quantile states
+  * persist in the micro-batch state store and re-merge at read, the same
+  * lifecycle as the distinct-count sketches.
   *
   * Approximate AND compaction-randomized (KLL flips coins when it compacts),
-  * so queries over these are rows-only in the driver contract and
-  * error-bound-tested in ScalaTest.
+  * so queries over these are oracle-checked through exact-rank gates and
+  * error-bound-tested in ScalaTest. Like [[Sketches]], each combinator is
+  * one Spark built-in (`kll_*_double`).
   */
 object QuantileSketch {
-  private def col(e: Expression): Column = ColumnBridge.column(e)
-  private def expr(c: Column): Expression = ColumnBridge.expression(c)
-
-  val DefaultK = 200
+  private val K = 200
 
   /** Partial: per-group serialized KLL sketch over a double column. */
-  def quantileState(c: Column, k: Int = DefaultK): Column =
-    col(KllStateAgg(expr(c), k).toAggregateExpression())
+  def quantileState(c: Column): Column = kll_sketch_agg_double(c, K)
 
   /** Merge persisted sketch states into one state (for compaction). */
-  def quantileMergeState(state: Column, k: Int = DefaultK): Column =
-    col(KllMergeAgg(expr(state), k).toAggregateExpression())
+  def quantileMergeState(state: Column): Column = kll_merge_agg_double(state, K)
 
-  /** Estimate quantile `q` (0..1) from a serialized sketch. */
+  /** Estimate quantile `q` (0..1) from a serialized sketch; null for the
+    * empty sketch, which the built-in would reject with an error. */
   def quantileEstimate(state: Column, q: Double): Column =
-    col(KllEstimateExpr(expr(state), q))
-}
-
-/** KLL build aggregate: doubles in, serialized sketch out. */
-case class KllStateAgg(child: Expression, k: Int,
-                       mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllDoublesSketch] with UnaryLike[Expression] {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): KllDoublesSketch =
-    KllDoublesSketch.newHeapInstance(k)
-
-  override def update(buf: KllDoublesSketch, input: InternalRow): KllDoublesSketch = {
-    val v = child.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[Double])
-    buf
-  }
-
-  override def merge(a: KllDoublesSketch, b: KllDoublesSketch): KllDoublesSketch = {
-    a.merge(b); a
-  }
-
-  override def eval(buf: KllDoublesSketch): Any = buf.toByteArray
-
-  override def serialize(buf: KllDoublesSketch): Array[Byte] = buf.toByteArray
-  override def deserialize(bytes: Array[Byte]): KllDoublesSketch =
-    KllDoublesSketch.heapify(Memory.wrap(bytes))
-
-  override def withNewMutableAggBufferOffset(o: Int): KllStateAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KllStateAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): KllStateAgg =
-    copy(child = c)
-}
-
-/** KLL re-merge aggregate: serialized sketches in, merged sketch out. */
-case class KllMergeAgg(child: Expression, k: Int,
-                       mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllDoublesSketch] with UnaryLike[Expression] {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): KllDoublesSketch =
-    KllDoublesSketch.newHeapInstance(k)
-
-  override def update(buf: KllDoublesSketch, input: InternalRow): KllDoublesSketch = {
-    val v = child.eval(input)
-    if (v != null)
-      buf.merge(KllDoublesSketch.heapify(Memory.wrap(v.asInstanceOf[Array[Byte]])))
-    buf
-  }
-
-  override def merge(a: KllDoublesSketch, b: KllDoublesSketch): KllDoublesSketch = {
-    a.merge(b); a
-  }
-
-  override def eval(buf: KllDoublesSketch): Any = buf.toByteArray
-
-  override def serialize(buf: KllDoublesSketch): Array[Byte] = buf.toByteArray
-  override def deserialize(bytes: Array[Byte]): KllDoublesSketch =
-    KllDoublesSketch.heapify(Memory.wrap(bytes))
-
-  override def withNewMutableAggBufferOffset(o: Int): KllMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KllMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): KllMergeAgg =
-    copy(child = c)
-}
-
-/** Scalar: quantile estimate from a serialized KLL sketch (null for the
-  * empty sketch). */
-case class KllEstimateExpr(child: Expression, q: Double)
-  extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true // the empty sketch estimates to null
-
-  override def nullSafeEval(input: Any): Any = {
-    val sk = KllDoublesSketch.heapify(Memory.wrap(input.asInstanceOf[Array[Byte]]))
-    if (sk.isEmpty) null else sk.getQuantile(q)
-  }
-  override protected def withNewChildInternal(c: Expression): KllEstimateExpr =
-    copy(child = c)
+    when(kll_sketch_get_n_double(state) > 0,
+         kll_sketch_get_quantile_double(state, lit(q)))
 }

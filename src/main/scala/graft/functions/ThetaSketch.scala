@@ -1,17 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.datasketches.memory.Memory
-import org.apache.datasketches.theta.{CompactSketch, SetOperation, Sketch, Sketches, Union}
+import org.apache.datasketches.theta.Sketches
 
 /** Mergeable theta distinct sketches with FULL set algebra — the ClickHouse
   * `uniqTheta` / `uniqThetaState` / `uniqThetaMerge` +
@@ -30,226 +27,41 @@ import org.apache.datasketches.theta.{CompactSketch, SetOperation, Sketch, Sketc
   * `bounds-contain-exact` booleans even where the estimate itself is
   * approximate ([[thetaBoundsContain]]).
   *
-  * Aggregates are Catalyst `TypedImperativeAggregate`s (planner-split
-  * partials, map-side combine); set ops and estimates are scalar expressions
-  * over the binary states.
+  * Like [[Sketches]], every combinator is one Spark built-in (`theta_*`,
+  * DataSketches underneath, so the same functions are in plain SQL too);
+  * only the bounds check is graft's own ([[ThetaBoundsExpr]]), because Spark
+  * has no theta-bounds function.
   */
 object ThetaSketch {
-  private def col(e: Expression): Column = ColumnBridge.column(e)
-  private def expr(c: Column): Expression = ColumnBridge.expression(c)
+  /** log2 nominal entries: 2^14 = 16384 retained hashes ≈ 0.8% RSE in
+    * estimation mode, exact below 16384 distinct keys, ≤128 KB state. The
+    * union must be built at the states' lgK too, or it DOWNSAMPLES to
+    * Spark's default (lgK 12) and silently widens the result's bounds. */
+  private val LgK = 14
 
-  /** Default log2 nominal entries: 2^14 = 16384 retained hashes ≈ 0.8% RSE
-    * in estimation mode, exact below 16384 distinct keys, ≤128 KB state. */
-  val DefaultLgK = 14
-
-  /** Partial: per-group serialized theta sketch over a long/string/double
-    * column (ClickHouse `uniqThetaState`). Nulls are skipped. */
-  def thetaState(c: Column, lgK: Int = DefaultLgK): Column =
-    col(ThetaStateAgg(expr(c), lgK).toAggregateExpression())
+  /** Partial: per-group serialized theta sketch over a long/string column
+    * (ClickHouse `uniqThetaState`). Nulls are skipped. */
+  def thetaState(c: Column): Column = theta_sketch_agg(c, LgK)
 
   /** Merge persisted sketch states across rows into one state
     * (`uniqThetaMerge` without the estimate — for state-table compaction). */
-  def thetaUnionState(state: Column, lgK: Int = DefaultLgK): Column =
-    col(ThetaMergeAgg(expr(state), lgK).toAggregateExpression())
+  def thetaUnionState(state: Column): Column = theta_union_agg(state, LgK)
 
-  /** Scalar set ops over two serialized states (each → a new state). `lgK`
-    * sizes the union's nominal entries — it must match the states' build
-    * lgK, or the union DOWNSAMPLES to the DataSketches default (lgK 12) and
-    * silently widens the result's error bounds. */
-  def thetaUnion(a: Column, b: Column, lgK: Int = DefaultLgK): Column =
-    col(ThetaSetOpExpr(expr(a), expr(b), ThetaSetOpExpr.UnionOp, lgK))
-  def thetaIntersect(a: Column, b: Column, lgK: Int = DefaultLgK): Column =
-    col(ThetaSetOpExpr(expr(a), expr(b), ThetaSetOpExpr.IntersectOp, lgK))
-  def thetaAnotB(a: Column, b: Column, lgK: Int = DefaultLgK): Column =
-    col(ThetaSetOpExpr(expr(a), expr(b), ThetaSetOpExpr.AnotBOp, lgK))
+  /** Scalar set ops over two serialized states (each → a new state). */
+  def thetaUnion(a: Column, b: Column): Column = theta_union(a, b, LgK)
+  def thetaIntersect(a: Column, b: Column): Column = theta_intersection(a, b)
+  def thetaAnotB(a: Column, b: Column): Column = theta_difference(a, b)
 
   /** Rounded distinct estimate of a serialized state (`uniqTheta`). */
-  def thetaEstimate(state: Column): Column = col(ThetaEstimateExpr(expr(state)))
+  def thetaEstimate(state: Column): Column = theta_sketch_estimate(state)
 
   /** TRUE iff `exact` lies within the sketch's ±`numStdDev`σ bounds —
     * deterministic given the state, TRUE for a correct sketch at any scale
     * (and exactly `est == exact` in the exact regime), so approximate
     * results stay oracle-checkable. */
   def thetaBoundsContain(state: Column, exact: Column, numStdDev: Int = 3): Column =
-    col(ThetaBoundsExpr(expr(state), expr(exact), numStdDev))
-}
-
-private[functions] object ThetaSerde {
-  def toBytes(u: Union): Array[Byte] = u.getResult.toByteArray
-  def sketch(b: Array[Byte]): Sketch = Sketches.heapifySketch(Memory.wrap(b))
-  def newUnion(lgK: Int): Union =
-    SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
-}
-
-/** Theta build aggregate: raw values in, serialized compact sketch out. */
-case class ThetaStateAgg(child: Expression, lgK: Int,
-                         mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Union] with UnaryLike[Expression] {
-  require(lgK >= 4 && lgK <= 26, s"lgK out of range: $lgK")
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  // analysis-time gate for the type dispatch update() performs per row — a
-  // DateType/DecimalType input should fail resolution, not mid-job
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType | DoubleType | StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"thetaState requires a long/int/double/string input, got $other")
-  }
-
-  override def createAggregationBuffer(): Union = ThetaSerde.newUnion(lgK)
-
-  override def update(buf: Union, input: InternalRow): Union = {
-    val v = child.eval(input)
-    if (v != null) child.dataType match {
-      case LongType    => buf.update(v.asInstanceOf[Long])
-      case IntegerType => buf.update(v.asInstanceOf[Int].toLong)
-      case DoubleType  => buf.update(v.asInstanceOf[Double])
-      case StringType  => buf.update(v.asInstanceOf[UTF8String].toString)
-      case other => throw new IllegalArgumentException(
-        s"thetaState: unsupported input type $other")
-    }
-    buf
-  }
-
-  override def merge(a: Union, b: Union): Union = { a.union(b.getResult); a }
-  override def eval(buf: Union): Any = ThetaSerde.toBytes(buf)
-  override def serialize(buf: Union): Array[Byte] = ThetaSerde.toBytes(buf)
-  override def deserialize(bytes: Array[Byte]): Union = {
-    val u = ThetaSerde.newUnion(lgK)
-    u.union(ThetaSerde.sketch(bytes)); u
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): ThetaStateAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): ThetaStateAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): ThetaStateAgg =
-    copy(child = c)
-}
-
-/** Theta re-merge aggregate: serialized states in, merged state out. */
-case class ThetaMergeAgg(child: Expression, lgK: Int,
-                         mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Union] with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"thetaUnionState requires a binary theta-state input, got $other")
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): Union = ThetaSerde.newUnion(lgK)
-
-  override def update(buf: Union, input: InternalRow): Union = {
-    val v = child.eval(input)
-    if (v != null) buf.union(ThetaSerde.sketch(v.asInstanceOf[Array[Byte]]))
-    buf
-  }
-
-  override def merge(a: Union, b: Union): Union = { a.union(b.getResult); a }
-  override def eval(buf: Union): Any = ThetaSerde.toBytes(buf)
-  override def serialize(buf: Union): Array[Byte] = ThetaSerde.toBytes(buf)
-  override def deserialize(bytes: Array[Byte]): Union = {
-    val u = ThetaSerde.newUnion(lgK)
-    u.union(ThetaSerde.sketch(bytes)); u
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): ThetaMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): ThetaMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): ThetaMergeAgg =
-    copy(child = c)
-}
-
-object ThetaSetOpExpr {
-  sealed trait Op
-  case object UnionOp extends Op
-  case object IntersectOp extends Op
-  case object AnotBOp extends Op
-}
-
-/** Scalar theta set operation: two serialized states → the serialized
-  * result state (union / intersection / A-not-B). `lgK` must match the
-  * states' build lgK: the union builder's nominal-entry count caps the
-  * result's retained hashes, so the DataSketches default (lgK 12 = 4096)
-  * would DOWNSAMPLE lgK-14 inputs and silently widen the result's error
-  * bounds. (Intersection and A-not-B results are bounded by their inputs
-  * and take no nominal-entry parameter.)
-  *
-  * Generates code (doGenCode → compute()), so the expression no longer
-  * breaks the surrounding whole-stage-codegen span; the per-call sketch
-  * HEAPIFY inside compute() remains — fine over today's metadata-sized
-  * frames (one row per week / segment pair in `theta_weekly_retention` /
-  * `seg_theta_algebra`). If theta states ever move into per-user-row
-  * frames, add a Memory-wrapping zero-copy read path, guarded by a
-  * ProfileQueries number. Codegen-vs-interpreted parity is spec-pinned
-  * (ThetaSketchSpec compiles the generated projection directly). */
-case class ThetaSetOpExpr(left: Expression, right: Expression, op: ThetaSetOpExpr.Op,
-                          lgK: Int = ThetaSketch.DefaultLgK)
-  extends BinaryExpression {
-  import ThetaSetOpExpr._
-  require(lgK >= 4 && lgK <= 26, s"lgK out of range: $lgK")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == BinaryType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"theta set ops require two binary theta states, got (${left.dataType}, ${right.dataType})")
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = left.nullable || right.nullable
-
-  /** Public for generated code: the whole set op over raw state bytes. */
-  def compute(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val sa = ThetaSerde.sketch(a)
-    val sb = ThetaSerde.sketch(b)
-    val result: CompactSketch = op match {
-      case UnionOp     => SetOperation.builder().setLogNominalEntries(lgK).buildUnion().union(sa, sb)
-      case IntersectOp => SetOperation.builder().buildIntersection().intersect(sa, sb)
-      case AnotBOp     => SetOperation.builder().buildANotB().aNotB(sa, sb)
-    }
-    result.toByteArray
-  }
-  override def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  // codegen = a static-shaped call into compute() on the referenced
-  // instance: semantically identical to the interpreted path (parity is
-  // the oracle-gated seg_theta_algebra / theta_weekly_retention rows, which
-  // execute these expressions inside codegen'd projections), but the
-  // expression no longer breaks the surrounding whole-stage codegen span
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("thetaSetOp", this, classOf[ThetaSetOpExpr].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ThetaSetOpExpr =
-    copy(left = l, right = r)
-}
-
-/** Scalar: rounded distinct estimate of a serialized theta state. */
-case class ThetaEstimateExpr(child: Expression)
-  extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"thetaEstimate requires a binary theta state, got ${child.dataType}")
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-  /** Public for generated code. */
-  def compute(input: Array[Byte]): Long =
-    math.round(ThetaSerde.sketch(input).getEstimate)
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("thetaEstimate", this, classOf[ThetaEstimateExpr].getName)
-    nullSafeCodeGen(ctx, ev, input => s"${ev.value} = $ref.compute($input);")
-  }
-  override protected def withNewChildInternal(c: Expression): ThetaEstimateExpr =
-    copy(child = c)
+    ColumnBridge.column(ThetaBoundsExpr(
+      ColumnBridge.expression(state), ColumnBridge.expression(exact), numStdDev))
 }
 
 /** Scalar: TRUE iff `exact` is inside the state's ±numStdDev bounds. */
@@ -268,7 +80,7 @@ case class ThetaBoundsExpr(left: Expression, right: Expression, numStdDev: Int)
   override def nullable: Boolean = left.nullable || right.nullable
   /** Public for generated code. */
   def compute(state: Array[Byte], exact: Long): Boolean = {
-    val sk = ThetaSerde.sketch(state)
+    val sk = Sketches.heapifySketch(Memory.wrap(state))
     val x = exact.toDouble
     sk.getLowerBound(numStdDev) <= x && x <= sk.getUpperBound(numStdDev)
   }

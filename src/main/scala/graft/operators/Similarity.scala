@@ -131,14 +131,6 @@ object Similarity {
     transform(sigs, (bucket, t) => struct(t.as("tbl"), bucket.as("bucket")))
   }
 
-  /** Reference HOF form of [[srpTableBuckets]] (interpreted; parity-tested). */
-  def srpTableBucketsHof(vec: Column, nBits: Int, dim: Int, tables: Int,
-                         seed: Long = 42L): Column =
-    array((0 until tables).map { t =>
-      struct(lit(t).as("tbl"),
-             srpSignature(vec, nBits, dim, seed + t * 7919L).as("bucket"))
-    }: _*)
-
   /** Approximate top-k: multi-table SRP bucket join, exact cosine re-rank on
     * candidates. May return fewer than k when buckets are sparse — that is
     * the approximate contract.

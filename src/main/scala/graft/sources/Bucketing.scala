@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed table layout — the shuffle-elimination tool for repeated
   * co-located joins and aggregations on a fixed key.
@@ -30,6 +30,4 @@ object Bucketing {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet")
       .saveAsTable(table)
-
-  def readTable(spark: SparkSession, table: String): DataFrame = spark.table(table)
 }

@@ -52,12 +52,6 @@ object Ingest {
                       partitionCol: Option[String] = None): Unit =
     appendSortedAs("orc", df, path, sortCols, partitionCol)
 
-  /** JSON string column → struct column, same explicit-schema contract
-    * (for embedded payloads like `events.props`). */
-  def parseJsonColumn(df: DataFrame, jsonCol: String, schema: StructType,
-                      as: String): DataFrame =
-    df.withColumn(as, from_json(col(jsonCol), schema))
-
   /** Sorted, day-partitioned append — MergeTree's physical layout:
     * `partitionBy` gives partition pruning (PARTITION BY toYYYYMMDD),
     * `sortWithinPartitions` clusters rows so parquet row-group min/max

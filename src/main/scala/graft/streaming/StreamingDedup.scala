@@ -75,14 +75,4 @@ object StreamingDedup {
     overwriteOwn(Dedup.lshIndex(b), s"$stateDir/index")
     overwriteOwn(b, s"$stateDir/corpus")
   }
-
-  /** Schema-safe reader for the verified pair log: parquet schema inference
-    * fails on a state where every batch emitted zero pairs (partition dirs
-    * exist but hold no data files); the declared schema reads that state as
-    * an empty frame instead. */
-  def readPairs(spark: org.apache.spark.sql.SparkSession, stateDir: String,
-                idType: String = "BIGINT"): DataFrame =
-    spark.read
-      .schema(s"id_a $idType, id_b $idType, jaccard DOUBLE, batch_id BIGINT")
-      .parquet(s"$stateDir/pairs")
 }

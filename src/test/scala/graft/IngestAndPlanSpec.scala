@@ -274,18 +274,18 @@ class IngestAndPlanSpec extends SparkSpec {
          FROM bm_states""").collect()(0)
     assert(bm.getLong(0) == 3L && bm.getLong(1) == 2L &&
            bm.getLong(2) == 4L && bm.getLong(3) == 1L)
-    // round-7 theta registrations: full pipeline in SQL — states via the
-    // aggregate functions, set algebra + estimate + bounds gate via scalars
+    // theta in SQL: states, set algebra and estimate through Spark's own
+    // theta functions, the bounds gate through graft_theta_bounds_ok
     Seq(1L, 2L, 3L, 3L).toDF("id").createOrReplaceTempView("th_a")
     Seq(3L, 4L, 4L).toDF("id").createOrReplaceTempView("th_b")
     val th = spark.sql(
-      """SELECT graft_theta_estimate(graft_theta_union(a, b)) AS u,
-                graft_theta_estimate(graft_theta_intersect(a, b)) AS i,
-                graft_theta_estimate(graft_theta_anotb(a, b)) AS d,
-                graft_theta_bounds_ok(graft_theta_union(a, b), 4L) AS ok
-         FROM (SELECT graft_theta_state(id) AS a FROM th_a)
-              CROSS JOIN (SELECT graft_theta_union_state(st) AS b
-                          FROM (SELECT graft_theta_state(id, 12) AS st FROM th_b))""")
+      """SELECT theta_sketch_estimate(theta_union(a, b)) AS u,
+                theta_sketch_estimate(theta_intersection(a, b)) AS i,
+                theta_sketch_estimate(theta_difference(a, b)) AS d,
+                graft_theta_bounds_ok(theta_union(a, b), 4L) AS ok
+         FROM (SELECT theta_sketch_agg(id) AS a FROM th_a)
+              CROSS JOIN (SELECT theta_union_agg(st) AS b
+                          FROM (SELECT theta_sketch_agg(id, 12) AS st FROM th_b))""")
       .collect()(0)
     assert(th.getLong(0) == 4L && th.getLong(1) == 1L && th.getLong(2) == 2L)
     assert(th.getBoolean(3))

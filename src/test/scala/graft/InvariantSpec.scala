@@ -117,19 +117,19 @@ class InvariantSpec extends SparkSpec {
   test("frequent-items sketch: heavy hitter survives eviction within error bound") {
     import graft.functions.FrequencySketch
     // 20k distinct tail items + one heavy hitter (2k occurrences) through a
-    // 64-entry sketch: far past eviction, the hitter must be retained
-    // (no-false-negatives) with estimate within the 3.5·n/maxMapSize bound
+    // 256-slot sketch: far past eviction, the hitter must be retained with
+    // its estimate within the 3.5·n/256 bound
     val df = spark.range(22000).selectExpr(
       "CASE WHEN id < 2000 THEN 'HEAVY' ELSE concat('tail_', id) END AS item",
       "cast(id % 4 as int) AS part")
     val top = df.groupBy($"part")
-      .agg(FrequencySketch.topKState($"item", maxMapSize = 64).as("st"))
-      .agg(FrequencySketch.topKMergeState($"st", maxMapSize = 64).as("m"))
+      .agg(FrequencySketch.topKState($"item").as("st"))
+      .agg(FrequencySketch.topKMergeState($"st").as("m"))
       .select(explode(FrequencySketch.topKEstimate($"m", 5)).as("t"))
       .select($"t.item", $"t.est").as[(String, Long)].collect()
     val heavy = top.find(_._1 == "HEAVY")
     assert(heavy.isDefined, s"heavy hitter evicted: ${top.toSeq}")
-    val errBound = (3.5 * 22000 / 64).toLong
+    val errBound = (3.5 * 22000 / 256).toLong
     assert(math.abs(heavy.get._2 - 2000L) <= errBound,
       s"estimate ${heavy.get._2} outside ±$errBound of 2000")
   }

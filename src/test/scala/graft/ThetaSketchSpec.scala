@@ -41,16 +41,36 @@ class ThetaSketchSpec extends SparkSpec {
   }
 
   test("estimation regime: bounds contain the truth, estimate is within its own bounds") {
-    // 200k distinct at lgK=10 (1024 nominal) → deep estimation mode
+    // 200k distinct at lgK=14 (16384 nominal) → deep estimation mode
     val n = 200000L
     val st = spark.range(n).select($"id".as("v"))
-      .agg(ThetaSketch.thetaState($"v", lgK = 10).as("st"))
+      .agg(ThetaSketch.thetaState($"v").as("st"))
     val out = st.select(
       ThetaSketch.thetaEstimate($"st").as("est"),
       ThetaSketch.thetaBoundsContain($"st", lit(n)).as("ok")).head()
     val e = out.getLong(0)
     assert(out.getBoolean(1), s"exact $n outside 3-sigma bounds of estimate $e")
     assert(math.abs(e - n).toDouble / n < 0.2, s"estimate $e too far from $n")
+  }
+
+  test("estimation regime: the ±3σ bounds gate holds on every set op") {
+    // A = 0..119999, B = 80000..199999 → |A∪B| = 200k, |A∩B| = 40k,
+    // |A\B| = 80k, each far past the 16384 nominal entries
+    val a = spark.range(0L, 120000L).agg(ThetaSketch.thetaState($"id").as("a"))
+    val b = spark.range(80000L, 200000L).agg(ThetaSketch.thetaState($"id").as("b"))
+    val out = a.crossJoin(b).select(
+      ThetaSketch.thetaUnion($"a", $"b").as("u_st"),
+      ThetaSketch.thetaBoundsContain(ThetaSketch.thetaUnion($"a", $"b"), lit(200000L)),
+      ThetaSketch.thetaBoundsContain(ThetaSketch.thetaIntersect($"a", $"b"), lit(40000L)),
+      ThetaSketch.thetaBoundsContain(ThetaSketch.thetaAnotB($"a", $"b"), lit(80000L)))
+      .head()
+    import org.apache.datasketches.memory.Memory
+    val union = org.apache.datasketches.theta.Sketches
+      .heapifySketch(Memory.wrap(out.getAs[Array[Byte]](0)))
+    assert(union.isEstimationMode, "union state must be in estimation mode")
+    assert(out.getBoolean(1), "union: exact 200000 outside 3-sigma bounds")
+    assert(out.getBoolean(2), "intersection: exact 40000 outside 3-sigma bounds")
+    assert(out.getBoolean(3), "difference: exact 80000 outside 3-sigma bounds")
   }
 
   test("nulls are skipped; empty input yields an empty (zero) sketch") {
@@ -73,29 +93,17 @@ class ThetaSketchSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
     import org.apache.spark.sql.types.BinaryType
-    import graft.functions.{ThetaBoundsExpr, ThetaEstimateExpr, ThetaSetOpExpr}
-    // states over {1..800} and {401..1200}: |A∪B|=1200, |A∩B|=400, |A\B|=400
-    def state(lo: Int, hi: Int): Array[Byte] =
-      (lo to hi).map(_.toLong).toDF("v")
-        .agg(graft.functions.ThetaSketch.thetaState($"v").as("st"))
-        .head.getAs[Array[Byte]]("st")
-    val (a, b) = (state(1, 800), state(401, 1200))
-    val (la, lb) = (Literal(a, BinaryType), Literal(b, BinaryType))
-    val union = ThetaSetOpExpr(la, lb, ThetaSetOpExpr.UnionOp)
-    val inter = ThetaSetOpExpr(la, lb, ThetaSetOpExpr.IntersectOp)
-    val anotb = ThetaSetOpExpr(la, lb, ThetaSetOpExpr.AnotBOp)
-    val exprs = Seq(
-      union, inter, anotb,
-      ThetaEstimateExpr(ThetaSetOpExpr(la, lb, ThetaSetOpExpr.UnionOp)),
-      ThetaBoundsExpr(ThetaSetOpExpr(la, lb, ThetaSetOpExpr.IntersectOp),
-                      Literal(400L), 3))
+    import graft.functions.ThetaBoundsExpr
+    // a state over {1..800}: exact regime, so the bounds are exactly 800
+    val st = (1 to 800).map(_.toLong).toDF("v")
+      .agg(ThetaSketch.thetaState($"v").as("st")).head.getAs[Array[Byte]]("st")
+    val exact = Seq(799L, 800L, 801L)
+    val exprs = exact.map(x => ThetaBoundsExpr(Literal(st, BinaryType), Literal(x), 3))
     // GenerateMutableProjection COMPILES doGenCode — a malformed template
     // throws here instead of silently falling back to interpreted eval
     val row = GenerateMutableProjection.generate(exprs)(InternalRow.empty)
-    assert(row.getBinary(0).toSeq === union.compute(a, b).toSeq)
-    assert(row.getBinary(1).toSeq === inter.compute(a, b).toSeq)
-    assert(row.getBinary(2).toSeq === anotb.compute(a, b).toSeq)
-    assert(row.getLong(3) === 1200L)
-    assert(row.getBoolean(4))
+    val generated = exprs.indices.map(row.getBoolean)
+    assert(generated === exprs.zip(exact).map { case (e, x) => e.compute(st, x) })
+    assert(generated === Seq(false, true, false))
   }
 }
