@@ -25,12 +25,12 @@ import org.apache.spark.sql.functions._
   * stays bounded at 100 TB — unlike exact sets, which grow with the data.
   */
 object Sketches {
-  /** Default log2 of the HLL register count: 2^12 registers ≈ 1.6% rel. error,
+  /** log2 of the HLL register count: 2^12 registers ≈ 1.6% rel. error,
     * ~4 KB per sketch. */
-  val DefaultLgK = 12
+  val LgK = 12
 
   /** Partial: per-group serialized mergeable HLL sketch (BinaryType). */
-  def uniqState(c: Column, lgK: Int = DefaultLgK): Column = hll_sketch_agg(c, lit(lgK))
+  def uniqState(c: Column): Column = hll_sketch_agg(c, LgK)
 
   /** Final: merge persisted sketches across batches, estimate the count. */
   def uniqMerge(sketch: Column): Column = hll_sketch_estimate(hll_union_agg(sketch, lit(true)))
@@ -41,8 +41,9 @@ object Sketches {
   /** Estimate a single sketch (no regrouping). */
   def uniqEstimate(sketch: Column): Column = hll_sketch_estimate(sketch)
 
-  /** One-shot approximate distinct (ClickHouse `uniq`). */
-  def uniq(c: Column, rsd: Double = 0.016): Column = approx_count_distinct(c, rsd)
+  /** One-shot approximate distinct (ClickHouse `uniq`), at the 1.6% relative
+    * error of [[LgK]]. */
+  def uniq(c: Column): Column = approx_count_distinct(c, 0.016)
 
   /** ClickHouse `uniqUpTo(N)(x)`: EXACT distinct count while ≤ N, the
     * sentinel N+1 once the group exceeds it — the "how many, unless it's

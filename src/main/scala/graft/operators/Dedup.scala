@@ -893,7 +893,7 @@ object Dedup {
     // grid through a single reducer.
     //
     // Why the over-budget lane is a salted SHUFFLE join and not a join
-    // against a (band, bucket)-bucketed persisted index (sources/Bucketing,
+    // against a (band, bucket)-bucketed persisted index (Spark's `bucketBy`,
     // which would exchange only the batch side): bucketed reads pin each
     // (band, bucket) key to one task with no exchange for AQE to split, and
     // the salt guard cannot re-key a bucketed layout — so on the
@@ -1317,13 +1317,11 @@ object Dedup {
     // (maxNumBits 64M bits ≈ 7M grams at fpp 0.01, maxNumItems 4M) — a
     // clamped filter would quietly realize a far worse FPP than requested,
     // so raise the ceilings for the build and restore them after
-    val conf = corpusGrams.sparkSession.conf
-    val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val (prevBits, prevItems) = (conf.getOption(bitsKey), conf.getOption(itemsKey))
-    conf.set(bitsKey, math.max(numBits, 67108864L).toString)
-    conf.set(itemsKey, math.max(items, 4000000L).toString)
-    try {
+    graft.GraftSession.withConf(corpusGrams.sparkSession,
+        "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" ->
+          math.max(numBits, 67108864L).toString,
+        "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" ->
+          math.max(items, 4000000L).toString) {
       val agg = new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
           ColumnBridge.expression(xxhash64(col("gram"))),
           org.apache.spark.sql.catalyst.expressions.Literal(items),
@@ -1331,9 +1329,6 @@ object Dedup {
         .toAggregateExpression()
       corpusGrams.agg(ColumnBridge.column(agg).as("bloom"))
         .head().getAs[Array[Byte]]("bloom")
-    } finally {
-      prevBits.fold(conf.unset(bitsKey))(v => conf.set(bitsKey, v))
-      prevItems.fold(conf.unset(itemsKey))(v => conf.set(itemsKey, v))
     }
   }
 

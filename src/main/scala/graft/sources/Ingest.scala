@@ -13,10 +13,14 @@ import org.apache.spark.sql.types.StructType
 object Ingest {
 
   /** Parse JSON-lines rows against an EXPLICIT schema — the `JSONEachRow`
-    * wire format. No schema inference (the reference declares schemas in DDL;
-    * inference would also force a second pass over 100 TB). Rows that fail to
-    * parse surface in `_corrupt_record` mode PERMISSIVE by default; pass
-    * `strict = true` for FAILFAST ingestion. */
+    * wire format, on Spark's built-in JSON reader. No schema inference (the
+    * reference declares schemas in DDL; inference would also force a second
+    * pass over 100 TB). PERMISSIVE by default: the schema has no
+    * `_corrupt_record` column, so a line that fails to parse comes back as a
+    * row with every field null, and a value that does not fit its field's
+    * type (3.7 in a LongType field) nulls that field only. Pass
+    * `strict = true` for FAILFAST ingestion. Timestamps without an offset
+    * resolve in the session time zone. */
   def jsonLines(spark: SparkSession, lines: Dataset[String], schema: StructType,
                 strict: Boolean = false): DataFrame =
     spark.read
@@ -25,48 +29,15 @@ object Ingest {
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss[.SSS][XXX]")
       .json(lines)
 
-  /** Parse CSV rows against an EXPLICIT schema — the `CSVWithNames`-style
-    * wire format (ClickHouse's other bulk-ingest encoding). Same contract as
-    * [[jsonLines]]: no inference, PERMISSIVE by default with corrupt rows
-    * surfaced, FAILFAST when `strict`. */
-  def csvLines(spark: SparkSession, lines: Dataset[String], schema: StructType,
-               header: Boolean = true, strict: Boolean = false): DataFrame =
-    spark.read
-      .schema(schema)
-      .option("header", header.toString)
-      .option("mode", if (strict) "FAILFAST" else "PERMISSIVE")
-      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss[.SSS][XXX]")
-      .csv(lines)
-
-  /** ORC read with an EXPLICIT schema — the columnar interchange format next
-    * to parquet (Spark ships the reader/writer natively). Same no-inference
-    * contract as the other ingest edges; ORC's own stripe-level min/max
-    * statistics give the same data-skipping behaviour as parquet row
-    * groups. */
-  def orc(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).orc(path)
-
-  /** Sorted ORC append — [[appendSorted]]'s layout contract on the ORC
-    * container. */
-  def appendSortedOrc(df: DataFrame, path: String, sortCols: Seq[String],
-                      partitionCol: Option[String] = None): Unit =
-    appendSortedAs("orc", df, path, sortCols, partitionCol)
-
   /** Sorted, day-partitioned append — MergeTree's physical layout:
     * `partitionBy` gives partition pruning (PARTITION BY toYYYYMMDD),
     * `sortWithinPartitions` clusters rows so parquet row-group min/max
     * statistics give the primary-key-prefix skip behaviour of the ORDER BY
     * key (S1/S6: filters on the sort prefix skip whole row groups). */
   def appendSorted(df: DataFrame, path: String, sortCols: Seq[String],
-                   partitionCol: Option[String] = None): Unit =
-    appendSortedAs("parquet", df, path, sortCols, partitionCol)
-
-  private def appendSortedAs(format: String, df: DataFrame, path: String,
-                             sortCols: Seq[String],
-                             partitionCol: Option[String]): Unit = {
-    val sorted = df.sortWithinPartitions(sortCols.map(col): _*)
-    val w = sorted.write.mode("append").format(format)
-    partitionCol.fold(w)(p => w.partitionBy(p)).save(path)
+                   partitionCol: Option[String] = None): Unit = {
+    val w = df.sortWithinPartitions(sortCols.map(col): _*).write.mode("append")
+    partitionCol.fold(w)(p => w.partitionBy(p)).parquet(path)
   }
 
   /** At-most-once ingest under duplicate delivery (T7): keep one row per

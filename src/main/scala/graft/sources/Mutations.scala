@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 
 /** ClickHouse-mutation analogue (`ALTER TABLE … DELETE/UPDATE WHERE`, the
   * right-to-be-forgotten / data-correction primitive — see
@@ -55,19 +56,8 @@ object Mutations {
     if (t.hasNullPart) inParts || col(partitionCol).isNull else inParts
   }
 
-  private def withConf[T](spark: SparkSession, key: String, value: String)
-                         (body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   private def withDynamicOverwrite[T](spark: SparkSession)(body: => T): T =
-    withConf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic")(body)
+    GraftSession.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(body)
 
   /** Every plan inside a mutation lifecycle is explicitly shaped — the small
     * side broadcasts by hint, the rewrite path has no exchange at all, and
@@ -76,7 +66,7 @@ object Mutations {
     * (measured: the CDC lifecycle is mostly 5–40 ms serial jobs, where those
     * gaps dominate; see BASELINE.md r13). Scoped off for the duration. */
   private def withAdaptiveOff[T](spark: SparkSession)(body: => T): T =
-    withConf(spark, "spark.sql.adaptive.enabled", "false")(body)
+    GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false")(body)
 
   /** The on-disk directory name of a partition value, with Spark's own
     * escaping (spaces, ':', '%', … are percent-encoded in paths; NULL maps

@@ -53,8 +53,7 @@ class MicroBatchPipeline(
     spark: SparkSession,
     seg: SegmentDef,
     val paths: StateStorePaths,
-    eventTimeCol: Option[String] = None,
-    lgK: Int = Sketches.DefaultLgK) {
+    eventTimeCol: Option[String] = None) {
 
   import spark.implicits._
 
@@ -83,7 +82,7 @@ class MicroBatchPipeline(
       .filter(col("event_type") === seg.eventType)
       .filter(col("ts") >= lit(lowerBound) && col("ts") < lit(batchTs))
     val aggs =
-      Sketches.uniqState(col("event_id"), lgK).as("event_count") +:
+      Sketches.uniqState(col("event_id")).as("event_count") +:
       eventTimeCol.map(c => max(col(c)).as("last_event_time")).toSeq
     val partials = sliced
       .groupBy(col("user_id"))

@@ -152,8 +152,7 @@ object StatefulOps {
     * of a parquet table (the [[graft.state.MicroBatchPipeline]] twin). Emits
     * the refreshed [[SegmentUpdate]] for every user touched by the batch
     * (Update semantics — pair with an upsert sink). */
-  def statefulSegmentMembers(events: DataFrame, seg: SegmentDef,
-                             lgK: Int = Sketches.DefaultLgK): Dataset[SegmentUpdate] = {
+  def statefulSegmentMembers(events: DataFrame, seg: SegmentDef): Dataset[SegmentUpdate] = {
     val spark = events.sparkSession
     import spark.implicits._
     events
@@ -166,7 +165,7 @@ object StatefulOps {
         case (user, rows, state: GroupState[SketchState]) =>
           val sketch = state.getOption
             .map(s => HllSketch.heapify(s.bytes))
-            .getOrElse(new HllSketch(lgK))
+            .getOrElse(new HllSketch(Sketches.LgK))
           rows.foreach(r => sketch.update(r._2))
           state.update(SketchState(sketch.toUpdatableByteArray))
           val est = math.round(sketch.getEstimate)

@@ -77,7 +77,7 @@ object StreamScope {
       // stage sizes are unknown.
       session("spark.sql.adaptive.enabled", "false"),
       // Checkpoint-log I/O is a measured ~half of the bare AvailableNow
-      // lifecycle here (ProfileStreamFloor: 0.25 s -> 0.13 s warm): the default
+      // lifecycle here (a no-op drain: 0.25 s -> 0.13 s warm): the default
       // FileContext-based manager re-resolves a FileContext per metadata write,
       // while the FileSystem-based one reuses the cached FileSystem handle with
       // the same write-temp-then-rename atomicity. These checkpoints are

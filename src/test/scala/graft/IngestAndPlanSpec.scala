@@ -29,20 +29,6 @@ class IngestAndPlanSpec extends SparkSpec {
     assert(ts == java.sql.Timestamp.valueOf("2023-01-01 00:05:00").getTime / 1000)
   }
 
-  test("CSV ingest with explicit schema parses the same rows as JSONEachRow") {
-    val csv = Seq(
-      "user_id,event_name,timestamp,message_id",
-      "1,BUTTON_CLICK,2023-01-01T00:00:00Z,m1",
-      "1,BUTTON_CLICK,2023-01-01T00:05:00.123Z,m2",
-      "2,BUTTON_CLICK,2023-01-01T00:00:00Z,m3"
-    ).toDS()
-    val df = Ingest.csvLines(spark, csv, eventSchema)
-    assert(df.count() == 3)
-    val ts = df.filter($"message_id" === "m2")
-      .select(unix_timestamp($"timestamp")).as[Long].collect()(0)
-    assert(ts == java.sql.Timestamp.valueOf("2023-01-01 00:05:00").getTime / 1000)
-  }
-
   test("corrupt ingest rows: PERMISSIVE nulls them, FAILFAST throws") {
     val lines = Seq(
       """{"user_id":"1","event_name":"BUTTON_CLICK","timestamp":"2023-01-01T00:00:00Z","message_id":"m1"}""",
@@ -52,6 +38,38 @@ class IngestAndPlanSpec extends SparkSpec {
     assert(permissive.count(_.isNullAt(3)) == 1, "corrupt row surfaces as nulls")
     intercept[org.apache.spark.SparkException] {
       Ingest.jsonLines(spark, lines, eventSchema, strict = true).collect()
+    }
+  }
+
+  test("jsonLines parse rules: non-integral ids null one field, timestamps resolve to UTC") {
+    import java.time.Instant
+    val schema = StructType(Seq(
+      StructField("user_id", LongType),
+      StructField("event_name", StringType),
+      StructField("timestamp", TimestampType)))
+    val lines = Seq(
+      """{"user_id":3.7,"event_name":"frac","timestamp":"2024-03-01T10:00:00Z"}""",
+      """{"user_id":1,"event_name":"local","timestamp":"2024-03-01T10:00:00"}""",
+      """{"user_id":2,"event_name":"offset","timestamp":"2024-03-01T10:00:00.123+02:00"}"""
+    ).toDS()
+    def parse(): Map[String, org.apache.spark.sql.Row] =
+      Ingest.jsonLines(spark, lines, schema).collect().map(r => r.getString(1) -> r).toMap
+    def instant(r: org.apache.spark.sql.Row): Instant = r.getTimestamp(2).toInstant
+
+    val rows = parse()
+    assert(rows.size == 3, "no line is dropped")
+    assert(rows("frac").isNullAt(0), "3.7 in a LongType field reads as null, never truncated")
+    assert(instant(rows("frac")) == Instant.parse("2024-03-01T10:00:00Z"),
+      "the row's other fields are kept")
+    assert(rows("local").getLong(0) == 1L)
+    assert(instant(rows("local")) == Instant.parse("2024-03-01T10:00:00Z"),
+      "an offset-less timestamp resolves in the session zone (UTC)")
+    assert(instant(rows("offset")) == Instant.parse("2024-03-01T08:00:00.123Z"))
+    // only the offset-less value follows the session zone
+    GraftSession.withConf(spark, "spark.sql.session.timeZone" -> "America/New_York") {
+      val ny = parse()
+      assert(instant(ny("local")) == Instant.parse("2024-03-01T15:00:00Z"))
+      assert(instant(ny("offset")) == Instant.parse("2024-03-01T08:00:00.123Z"))
     }
   }
 
@@ -188,31 +206,6 @@ class IngestAndPlanSpec extends SparkSpec {
     sources.Layout.appendZOrdered(df.withColumn("day", lit("2023-01-01")),
       s"$root/z", Seq("x", "y"), bits = 8, partitionCol = Some("day"))
     assert(spark.read.parquet(s"$root/z").count() == 1024)
-  }
-
-  test("bucketed co-located join and aggregation plan with zero exchanges") {
-    val root = tmpDir("bucketed")
-    val ev = Tables.events(spark, "/root/testdata/sf0.001")
-      .select($"user_id", $"event_type")
-    val users = ev.select($"user_id").distinct()
-      .withColumn("flag", lit(1))
-    sources.Bucketing.writeBucketed(ev, "ev_bkt", s"$root/ev", Seq("user_id"), 8)
-    sources.Bucketing.writeBucketed(users, "users_bkt", s"$root/users", Seq("user_id"), 8)
-    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the join shape under test
-    try {
-      val j = spark.table("ev_bkt")
-        .join(spark.table("users_bkt"), Seq("user_id"))
-        .groupBy($"user_id").agg(count(lit(1)).as("n"))
-      assert(j.count() > 0)
-      val plan = j.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"bucketed join + agg on the bucket key must not shuffle:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      spark.sql("DROP TABLE IF EXISTS ev_bkt")
-      spark.sql("DROP TABLE IF EXISTS users_bkt")
-    }
   }
 
   test("ntile query plans with no single-partition exchange (global-window ban)") {

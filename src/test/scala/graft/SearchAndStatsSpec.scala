@@ -656,33 +656,6 @@ class SearchAndStatsSpec extends SparkSpec {
     }
   }
 
-  // --- ORC ingest ---------------------------------------------------------
-
-  test("ORC ingest round-trips with explicit schema and sorted layout") {
-    import org.apache.spark.sql.types._
-    val dir = tmpDir("orc")
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("k", StringType),
-      StructField("v", DoubleType)))
-    val df = (1 to 1000).map(i => ((i * 37L) % 1000, s"k${i % 5}", i / 10.0))
-      .toDF("id", "k", "v")
-    graft.sources.Ingest.appendSortedOrc(df.repartition(2), s"$dir/t.orc", Seq("id"))
-    val back = graft.sources.Ingest.orc(spark, s"$dir/t.orc", schema)
-    assert(back.schema === schema)
-    assert(back.count() === 1000L)
-    // decimal sums: double summation is partition-order dependent
-    assert(back.agg(sum(col("v").cast("decimal(27,6)"))).head.getDecimal(0) ===
-           df.agg(sum(col("v").cast("decimal(27,6)"))).head.getDecimal(0))
-    // sorted-within-file layout: each ORC file's rows are id-ordered
-    import org.apache.spark.sql.functions.{input_file_name, spark_partition_id}
-    val perFile = back.select(input_file_name().as("f"), col("id"))
-      .collect().groupBy(_.getString(0))
-    perFile.values.foreach { rows =>
-      val ids = rows.map(_.getLong(1))
-      assert(ids.sameElements(ids.sorted), "ORC file not sorted on id")
-    }
-  }
-
   // --- compaction ---------------------------------------------------------
 
   test("Layout.compact folds small files, preserves rows, applies clustering") {

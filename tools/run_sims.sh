@@ -4,20 +4,24 @@
 # hive stacked). Run
 # whenever Tables.scala or any oracle SQL changes (CLAUDE.md discipline —
 # regens are the only failure class that has ever produced a red round).
-# Usage: bash tools/run_sims.sh [srcSfDir]   (default /root/testdata/sf0.01)
+# Usage: bash tools/run_sims.sh [srcSfDir] [query ...]
+#   srcSfDir defaults to /root/testdata/sf0.01; query names, when given,
+#   restrict both the Verify dump and the oracle compare of every shape to
+#   that subset (default: every contract query).
 # Exit status is a TRUE gate: nonzero when any shape's Verify fails or any
 # oracle compare line is a MISMATCH / ERROR / missing dump.
 set -e
 cd "$(dirname "$0")/.."
 SRC=${1:-/root/testdata/sf0.01}
+QUERIES=("${@:2}")
 FAILED=0
 
 # one Verify + ONE oracle compare per shape (the compare re-runs every oracle
 # SQL in DuckDB — minutes at sf0.01 — so its output is captured, not re-run)
 check() { # check <label> <simDir> <outDir>
-  sbt -batch "runMain graft.Verify $2 $3" > "/tmp/rs_$1.log" 2>&1 ||
+  sbt -batch "runMain graft.Verify $2 $3 ${QUERIES[*]}" > "/tmp/rs_$1.log" 2>&1 ||
     { echo "SIM $1: VERIFY FAILED (see /tmp/rs_$1.log)"; FAILED=1; return 0; }
-  python3 tools/diff_oracle.py "$2" "$3" > "/tmp/rs_$1.diff" 2>&1 || true
+  python3 tools/diff_oracle.py "$2" "$3" "${QUERIES[@]}" > "/tmp/rs_$1.diff" 2>&1 || true
   local n bad
   n=$(grep -c ": MATCH" "/tmp/rs_$1.diff" || true)
   # real failures only — benign 'NO ORACLE (rows-only)' lines are excluded
