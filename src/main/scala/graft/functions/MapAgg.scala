@@ -83,11 +83,6 @@ object MapAgg {
     col(KeyedMapMergeAgg(expr(state), Min).toAggregateExpression())
   def maxMapMerge(state: Column): Column =
     col(KeyedMapMergeAgg(expr(state), Max).toAggregateExpression())
-
-  /** Merge states into a STATE (state-table compaction, like
-    * uniqMergeState). The op must match the states' own op. */
-  def mapMergeState(state: Column, op: Int): Column =
-    col(KeyedMapMergeAgg(expr(state), op, asState = true).toAggregateExpression())
 }
 
 /** Shared buffer algebra for the map aggregates (build and merge sides). */
@@ -254,10 +249,9 @@ case class KeyedMapAgg(left: Expression, right: Expression, op: Int,
 }
 
 /** Re-merge persisted map STATES ([[MapAgg.sumMapMerge]] etc.): binary
-  * states in, final key-sorted map out (or a compacted state with
-  * `asState`). NULL states are skipped (an absent batch). */
+  * states in, final key-sorted map out. NULL states are skipped (an absent
+  * batch). */
 case class KeyedMapMergeAgg(child: Expression, op: Int,
-                            asState: Boolean = false,
                             mutableAggBufferOffset: Int = 0,
                             inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[java.util.HashMap[String, Long]]
@@ -274,8 +268,7 @@ case class KeyedMapMergeAgg(child: Expression, op: Int,
     }
 
   override def dataType: DataType =
-    if (asState) BinaryType
-    else MapType(StringType, LongType, valueContainsNull = false)
+    MapType(StringType, LongType, valueContainsNull = false)
   override def nullable: Boolean = false
 
   override def createAggregationBuffer(): java.util.HashMap[String, Long] =
@@ -295,7 +288,7 @@ case class KeyedMapMergeAgg(child: Expression, op: Int,
   }
 
   override def eval(buf: java.util.HashMap[String, Long]): Any =
-    if (asState) MapBuf.ser(buf) else MapBuf.toSortedMap(buf)
+    MapBuf.toSortedMap(buf)
 
   override def serialize(buf: java.util.HashMap[String, Long]): Array[Byte] =
     MapBuf.ser(buf)

@@ -19,10 +19,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * signature computations dominate the dedup/ANN pipelines, so each gets a
   * Catalyst `Expression` whose `eval` runs the whole loop in one JVM frame
   * over `UTF8String`/`ArrayData` with zero per-element allocation
-  * (10-50× over the HOF forms; see BENCH history). Except where a doc says
-  * otherwise (minhashSig uses a different hash family than the classic
-  * `Dedup.minhashSignature`), each expression is bit-identical to its
-  * Column-function counterpart — asserted in `NativeExprParitySpec`.
+  * (10-50× over the HOF forms; see BENCH history). Each expression is
+  * bit-identical to its reference counterpart (a Column function, or
+  * `MinHashRef` for minhashSig) — asserted in `NativeExprParitySpec`.
   *
   * `CodegenFallback` is deliberate: the loop body IS the work; fusing it into
   * WholeStageCodegen would save one virtual call per row.
@@ -33,10 +32,8 @@ object NativeExprs {
 
   /** MinHash signature over character k-grams of an (already normalized)
     * text, using a multiply-shift hash family: sig[j] = min over grams g of
-    * (a_j·xxhash64(g) + b_j) >>> 1. NOT interchangeable with the classic
-    * mod-prime `Dedup.minhashSignature` — both estimate Jaccard over the same
-    * shingle space, but their signature VALUES differ; never band one form
-    * against the other. Byte-exact Scala reference: `MinHashRef.signature`.
+    * (a_j·xxhash64(g) + b_j) >>> 1. Byte-exact Scala reference:
+    * `MinHashRef.signature`.
     */
   def minhashSig(text: Column, k: Int, numHashes: Int, seed: Long): Column =
     col(MinHashSigExpr(expr(text), k, numHashes, seed))

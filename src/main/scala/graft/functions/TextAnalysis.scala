@@ -77,25 +77,6 @@ object TextAnalysis {
     coalesce(hitCount(ws, Stopwords(lang)).cast("double") / nullif(size(ws), lit(0)), lit(0.0))
   }
 
-  /** Heuristic document-quality score in [0,1]: blends length saturation,
-    * mean word length plausibility, punctuation restraint, and stopword
-    * presence. Deterministic; thresholds are conventional data-cleaning
-    * heuristics (e.g. C4/Gopher-style rules), not learned.
-    */
-  def qualityScore(text: Column): Column = {
-    val nChars = length(text).cast("double")
-    val nWords = size(words(text)).cast("double")
-    val lengthScore = least(nChars / lit(200.0), lit(1.0)) // saturate at 200 chars
-    val meanWordLen = coalesce(
-      length(regexp_replace(lower(text), "[^a-z]", "")).cast("double") / nullif(nWords, lit(0.0)),
-      lit(0.0))
-    val wordLenScore = when(meanWordLen >= 2.5 && meanWordLen <= 9.0, lit(1.0)).otherwise(lit(0.2))
-    val punctScore = greatest(lit(0.0), lit(1.0) - punctRatio(text) * lit(4.0))
-    val stopScore = least(stopwordRatio(text) * lit(5.0), lit(1.0))
-    round(lengthScore * lit(0.3) + wordLenScore * lit(0.3) +
-          punctScore * lit(0.2) + stopScore * lit(0.2), 4)
-  }
-
   /** N-gram/stopword language ID: score each candidate language by stopword
     * hits (plus a CJK-codepoint signal for zh), pick the argmax; ties resolve
     * to the earlier language in [[langOrder]]. Pure column expression.

@@ -103,6 +103,11 @@ object CorpusModel {
       .select(col("doc_id"), col("term"), col("tf"), col("df"), col("score"))
   }
 
+  /** BM25's term-frequency saturation and length normalization — the
+    * conventional Lucene values, embedded as literals in the oracle SQL. */
+  private val Bm25K1 = 1.2
+  private val Bm25B = 0.75
+
   /** BM25 ranked retrieval over the corpus (Robertson–Spärck Jones
     * probabilistic weighting with Lucene's nonnegative idf,
     * `ln((N − df + ½)/(df + ½) + 1)`): score every document against a fixed
@@ -120,9 +125,8 @@ object CorpusModel {
     * reproducing the same fold gets the identical IEEE sequence up to libm
     * `ln` (≤1 ulp), far below any real score gap. Ties (identical
     * per-term profiles) are broken by id. */
-  def bm25TopK(docs: DataFrame, queryTerms: Seq[String], topK: Int,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25Scores(docs, queryTerms, k1, b)
+  def bm25TopK(docs: DataFrame, queryTerms: Seq[String], topK: Int): DataFrame =
+    bm25Scores(docs, queryTerms)
       .orderBy(col("score").desc, col("doc_id"))
       .limit(topK)
 
@@ -131,8 +135,7 @@ object CorpusModel {
     * operators (`TextQueries`' `hybrid_rrf_search`) can derive SEVERAL
     * rankings (BM25, raw term-frequency) from the one tf pass instead of
     * re-tokenizing per ranker. */
-  def bm25Scores(docs: DataFrame, queryTerms: Seq[String],
-                 k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def bm25Scores(docs: DataFrame, queryTerms: Seq[String]): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
     val toks = docs.select(col("doc_id"),
       filter(split(TextAnalysis.normalized(col("text")), " "), t => t =!= "").as("w"))
@@ -150,8 +153,9 @@ object CorpusModel {
       .withColumn("idf",
         log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)))
       .withColumn("contrib", col("idf") *
-        (col("tf").cast("double") * lit(k1 + 1.0) /
-         (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl")))))
+        (col("tf").cast("double") * lit(Bm25K1 + 1.0) /
+         (col("tf") + lit(Bm25K1) *
+           (lit(1.0) - lit(Bm25B) + lit(Bm25B) * col("dl") / col("avgdl")))))
       .groupBy("doc_id")
       .agg(aggregate(array_sort(collect_list(struct(col("term"), col("contrib")))),
              lit(0.0), (acc, x) => acc + x.getField("contrib")).as("score"),

@@ -28,23 +28,7 @@ object Dedup {
 
   val Prime = 2147483647L // 2^31 - 1, the MinHash field
 
-  /** Deterministic (a, b) pairs for the universal hash family
-    * h_j(x) = (a_j·x + b_j) mod p, from a fixed-seed PRNG. */
-  private def hashParams(numHashes: Int, seed: Long): Seq[(Long, Long)] = {
-    val rnd = new scala.util.Random(seed)
-    Seq.fill(numHashes)((1L + rnd.nextLong().abs % (Prime - 1), rnd.nextLong().abs % Prime))
-  }
-
   // ---------------------------------------------------------------- exact
-
-  /** Exact-duplicate groups: md5 digest of the normalized text, grouped.
-    * Returns one row per duplicated digest with the kept (minimum) id and the
-    * group size. */
-  def exactDuplicateGroups(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), TextAnalysis.fingerprintMd5(col("text")).as("digest"))
-      .groupBy(col("digest"))
-      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("group_size"))
-      .filter(col("group_size") > 1)
 
   /** Exact dedup: keep the lowest-id document per normalized-text digest.
     * Window `row_number()==1` over the digest — one shuffle on the digest. */
@@ -122,17 +106,6 @@ object Dedup {
   }
 
   // ---------------------------------------------------------------- minhash
-
-  /** MinHash signature: sig[j] = min over shingles s of (a_j·s + b_j mod p).
-    * A per-row nested `transform` — embarrassingly parallel, no shuffle. */
-  def minhashSignature(shingles: Column, numHashes: Int = 128,
-                       seed: Long = 42L): Column = {
-    val params = hashParams(numHashes, seed)
-    val sig = params.map { case (a, b) =>
-      array_min(transform(shingles, s => pmod(s * lit(a) + lit(b), lit(Prime))))
-    }
-    array(sig: _*)
-  }
 
   /** Explode a signature into LSH band buckets: (band, bucket-hash) pairs.
     * Two docs collide in a band iff their signature rows in that band agree

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal (image/audio/video) column plumbing for training-data
   * pipelines.
@@ -12,9 +11,8 @@ import org.apache.spark.sql.types._
   * uses (content-addressed blobs + structured metadata, never decoded
   * strings). The Spark-side plumbing — schema, partition-friendly layout,
   * per-partition batch iteration — is real and tested; the codec itself is a
-  * clearly marked deterministic STUB (this container has no image/audio
-  * libraries; swap [[StubCodec.decode]] for a real decoder binding and
-  * nothing else changes).
+  * clearly marked deterministic STUB ([[StubCodec]]), so the oracle can
+  * reproduce every decoded row.
   *
   * The Scala-native analogue of a Pandas-batched UDF is `mapPartitions` over
   * a typed Dataset: one JVM object stream per partition, codec state
@@ -23,24 +21,10 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** (content, meta) schema for a media column. */
-  val MediaMetaType: StructType = StructType(Seq(
-    StructField("format", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_frames", IntegerType)))
-
   final case class MediaMeta(format: String, width: Int, height: Int, n_frames: Int)
   final case class MediaRow(media_id: Long, content: Array[Byte])
   final case class DecodedRow(media_id: Long, format: String, width: Int,
                               height: Int, n_frames: Int, n_bytes: Long)
-
-  /** A media decoder: bytes in, typed metadata out. Implementations must be
-    * serializable singletons — `decodeAll` ships them into `mapPartitions`
-    * closures. */
-  trait Codec extends Serializable {
-    def decode(bytes: Array[Byte]): MediaMeta
-  }
 
   /** STUB codec — deterministic fake in place of a real image/audio decoder.
     * Derives plausible metadata purely from the bytes so tests are stable.
@@ -48,10 +32,10 @@ object Multimodal {
     *
     * The fake metadata is a pure function of md5(bytes) — 28 bits parsed from
     * the first 7 hex chars — so any engine with an md5 function can reproduce
-    * it exactly (the driver's DuckDB oracle does). This keeps the ORACLE lane
-    * engine-portable; [[RealCodec]] is the real-bytes lane.
+    * it exactly (the DuckDB oracle does), which keeps the decode
+    * lane engine-portable.
     */
-  object StubCodec extends Codec {
+  object StubCodec {
     val Formats = Vector("jpeg", "png", "webp", "wav")
     def decode(bytes: Array[Byte]): MediaMeta = {
       val n = bytes.length
@@ -66,58 +50,6 @@ object Multimodal {
     }
   }
 
-  /** REAL codec for the pure-JVM container formats the JDK itself decodes —
-    * no native dependencies, safe inside executor JVMs:
-    *
-    *  - BMP / PNG / GIF / JPEG via `javax.imageio` (a genuine pixel decode —
-    *    dimensions are read from the decoded `BufferedImage`, not a header
-    *    sniff), `format` from the magic bytes;
-    *  - WAV via `javax.sound.sampled` — `width` carries the sample rate,
-    *    `height` the channel count, `n_frames` the PCM frame count (the
-    *    natural mapping of the meta struct onto audio);
-    *  - anything unrecognized falls back to [[StubCodec]], so mixed-media
-    *    (or synthetic-test) corpora still decode every row.
-    *
-    * Construction cost is why [[decodeAll]] is `mapPartitions`: ImageIO's
-    * reader registry lookup is amortized per partition, the per-row work is
-    * the decode itself. */
-  object RealCodec extends Codec {
-    private def magic(b: Array[Byte], at: Int, m: Int*): Boolean =
-      b.length >= at + m.length &&
-        m.zipWithIndex.forall { case (v, i) => (b(at + i) & 0xff) == v }
-
-    def decode(bytes: Array[Byte]): MediaMeta = {
-      val fmt =
-        if (magic(bytes, 0, 0x42, 0x4d)) Some("bmp")
-        else if (magic(bytes, 0, 0x89, 0x50, 0x4e, 0x47)) Some("png")
-        else if (magic(bytes, 0, 0x47, 0x49, 0x46, 0x38)) Some("gif")
-        else if (magic(bytes, 0, 0xff, 0xd8, 0xff)) Some("jpeg")
-        else if (magic(bytes, 0, 0x52, 0x49, 0x46, 0x46) &&
-                 magic(bytes, 8, 0x57, 0x41, 0x56, 0x45)) Some("wav")
-        else None
-      // a recognized magic with a corrupt BODY must not kill the job: both
-      // JDK decoders throw (UnsupportedAudioFileException, IIOException —
-      // ImageIO.read returns null only for some failure modes), so every
-      // path falls back to the stub on any decode error
-      try fmt match {
-        case Some("wav") =>
-          val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          try {
-            val f = in.getFormat
-            val frames = in.getFrameLength // NOT_SPECIFIED = -1 for some streams
-            MediaMeta("wav", f.getSampleRate.toInt, f.getChannels,
-                      if (frames >= 0 && frames <= Int.MaxValue) frames.toInt else 0)
-          } finally in.close()
-        case Some(imageFmt) =>
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-          if (img == null) StubCodec.decode(bytes) // recognized magic, corrupt body
-          else MediaMeta(imageFmt, img.getWidth, img.getHeight, 1)
-        case None => StubCodec.decode(bytes)
-      } catch { case scala.util.control.NonFatal(_) => StubCodec.decode(bytes) }
-    }
-  }
-
   /** Synthesize a media table from any table with an id + string column —
     * the bytes are the UTF-8 encoding (real binary plumbing, fake media). */
   def syntheticMediaTable(docs: DataFrame): DataFrame =
@@ -125,10 +57,8 @@ object Multimodal {
                 encode(col("text"), "UTF-8").as("content"))
 
   /** Decode pass: `mapPartitions` over the typed rows — the batched-UDF
-    * shape. Partition-local codec reuse; output is columnar-friendly.
-    * `codec` defaults to the oracle-portable [[StubCodec]]; pass
-    * [[RealCodec]] to decode actual BMP/PNG/GIF/JPEG/WAV bytes. */
-  def decodeAll(media: DataFrame, codec: Codec = StubCodec): Dataset[DecodedRow] = {
+    * shape. Partition-local codec reuse; output is columnar-friendly. */
+  def decodeAll(media: DataFrame): Dataset[DecodedRow] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("media_id"), col("content")).as[MediaRow]
@@ -136,7 +66,7 @@ object Multimodal {
         // codec singleton resolved once per partition; per-row work is the
         // decode itself
         rows.map { r =>
-          val m = codec.decode(r.content)
+          val m = StubCodec.decode(r.content)
           DecodedRow(r.media_id, m.format, m.width, m.height, m.n_frames,
                      r.content.length.toLong)
         }
@@ -157,9 +87,8 @@ object Multimodal {
     *
     * Fingerprint: 60-bit average-hash over the raw bytes
     * ([[graft.functions.NativeExprs.phash60]] — integer-exact, engine-
-    * reproducible; a real deployment would hash DECODED pixels via the
-    * [[Codec]] lane, which changes the hashed bytes but not one line of
-    * this pipeline). Candidate generation is the SimHash pigeonhole: 4
+    * reproducible; a real deployment would hash DECODED pixels, which
+    * changes the hashed bytes but not one line of this pipeline). Candidate generation is the SimHash pigeonhole: 4
     * chunks of 15 bits — two hashes within Hamming distance `maxHamming`
     * ≤ 3 must agree on ≥ 1 whole chunk — so candidates come from 4 hash
     * equi-joins on (chunk, value), never an all-pairs scan; survivors are

@@ -498,10 +498,10 @@ object DedupQueries {
     * historical signature. Pairs restricted to those touching a new doc.
     *
     * The historical index is `materialized` per (session, sfDir): in
-    * production it is a table written incrementally at ingest (see
-    * [[graft.streaming.StreamingDedup]]), so its build cost is amortized
-    * across the corpus's lifetime — the steady-state cost of this operator,
-    * and what the query measures, is the PROBE. */
+    * production it is a table written incrementally at ingest, so its
+    * build cost is amortized across the corpus's lifetime — the
+    * steady-state cost of this operator, and what the query measures, is
+    * the PROBE. */
   private def incrementalNearDup(s: SparkSession, dir: String): DataFrame = {
     val docs = docsSharded(s, dir) // ingest-sharded corpus (see docsSharded)
     val newDocs = docs.filter(col("doc_id") % 5 === 0)
@@ -815,13 +815,13 @@ object DedupQueries {
 
   /** The family's ingest-time artifacts (see [[graft.Warmup]]), which
     * production writes at INGEST, not query time: the historical LSH index
-    * + signatures (`StreamingDedup.processBatch` appends to them per
-    * micro-batch), the historical cluster assignments (maintained by the
-    * dedup pipeline), the new batch's probe pairs (produced by the probe
-    * stage when the batch arrived), the shared MinHash pair list every
-    * consumer (clustering, leakage split, incremental fold) reads, the
-    * sharded corpus, the edit-distance key+gram table, and the persisted
-    * chunk table and historical chunk-digest index. The timed
+    * + signatures (appended to per micro-batch), the historical cluster
+    * assignments (maintained by the dedup pipeline), the new batch's probe
+    * pairs (produced by the probe stage when the batch arrived), the shared
+    * MinHash pair list every consumer (clustering, leakage split,
+    * incremental fold) reads, the sharded corpus, the edit-distance
+    * key+gram table, and the persisted chunk table and historical
+    * chunk-digest index. The timed
     * `incremental_neardup` / `incremental_clusters` then measure each
     * operator's steady-state cost — the probe, and the star-edge fold —
     * rather than replaying amortized ingest work. Correctness runs build

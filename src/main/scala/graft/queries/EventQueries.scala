@@ -1116,9 +1116,9 @@ object EventQueries {
          GROUP BY d.day ORDER BY 1""")
 
   /** Z-order (Morton) key math through the oracle gate: the 50 events whose
-    * (user, second-of-day) interleave lowest on the space-filling curve. The
-    * layout op itself is write-time (Layout.appendZOrdered, plan-asserted in
-    * tests); this pins the bit math an external engine must agree on. */
+    * (user, second-of-day) interleave lowest on the space-filling curve. A
+    * Z-ordered layout is a write-time sort on this key; this pins the bit
+    * math an external engine must agree on. */
   private def zorderEventKeys(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "events")
       .select(col("event_id"),

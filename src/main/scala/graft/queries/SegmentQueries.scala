@@ -686,7 +686,7 @@ object SegmentQueries {
     val joined = graft.streaming.StatefulOps.streamStreamAttribution(
       source().filter(col("event_type") === "click"),
       source().filter(col("event_type") === "purchase"),
-      attributionWindow = "1 hour", watermarkDelay = "40 days")
+      watermarkDelay = "40 days")
     drain(joined.writeStream.format("parquet").option("path", s"$tmp/sink"), s"$tmp/ckpt")
     s.read.parquet(s"$tmp/sink")
       .select(col("purchase_id"), col("user_id").cast("long").as("user_id"),

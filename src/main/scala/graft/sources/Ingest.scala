@@ -15,17 +15,15 @@ object Ingest {
   /** Parse JSON-lines rows against an EXPLICIT schema — the `JSONEachRow`
     * wire format, on Spark's built-in JSON reader. No schema inference (the
     * reference declares schemas in DDL; inference would also force a second
-    * pass over 100 TB). PERMISSIVE by default: the schema has no
-    * `_corrupt_record` column, so a line that fails to parse comes back as a
-    * row with every field null, and a value that does not fit its field's
-    * type (3.7 in a LongType field) nulls that field only. Pass
-    * `strict = true` for FAILFAST ingestion. Timestamps without an offset
+    * pass over 100 TB). PERMISSIVE: the schema has no `_corrupt_record`
+    * column, so a line that fails to parse comes back as a row with every
+    * field null, and a value that does not fit its field's type (3.7 in a
+    * LongType field) nulls that field only. Timestamps without an offset
     * resolve in the session time zone. */
-  def jsonLines(spark: SparkSession, lines: Dataset[String], schema: StructType,
-                strict: Boolean = false): DataFrame =
+  def jsonLines(spark: SparkSession, lines: Dataset[String], schema: StructType): DataFrame =
     spark.read
       .schema(schema)
-      .option("mode", if (strict) "FAILFAST" else "PERMISSIVE")
+      .option("mode", "PERMISSIVE")
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss[.SSS][XXX]")
       .json(lines)
 

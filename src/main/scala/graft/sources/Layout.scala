@@ -1,9 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Multi-dimensional data layout — Z-order (Morton) clustering.
+/** Multi-dimensional data layout — the Z-order (Morton) clustering key.
   *
   * A single-column ORDER BY gives parquet row-group min/max skipping on the
   * sort prefix only (S6); filters on any other column scan everything.
@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
   * keeps EVERY interleaved column locally clustered, so range filters on any
   * of them skip most row groups. The standard lakehouse trick for multi-key
   * point-lookup tables at 100 TB; costs one extra projection at write time.
+  * `zorder_event_keys` computes the key through the oracle gate.
   */
 object Layout {
 
@@ -25,57 +26,5 @@ object Layout {
       (c, i) <- cols.zipWithIndex
     } yield shiftleft(shiftright(c.cast("long"), b).bitwiseAND(lit(1L)), b * d + i)
     terms.reduce((a, t) => a.bitwiseOR(t))
-  }
-
-  /** Sorted append in Z-order: rows cluster along the space-filling curve,
-    * then the helper column is dropped from the stored schema. */
-  def appendZOrdered(df: DataFrame, path: String, zCols: Seq[String],
-                     bits: Int = 16, partitionCol: Option[String] = None): Unit = {
-    val sorted = df
-      .withColumn("__z", zvalue(zCols.map(col), bits))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-    partitionCol match {
-      case Some(p) => sorted.write.mode("append").partitionBy(p).parquet(path)
-      case None    => sorted.write.mode("append").parquet(path)
-    }
-  }
-
-  /** Small-file compaction (the lakehouse `OPTIMIZE`): rewrite a parquet
-    * directory into `ceil(totalBytes / targetBytes)` files, optionally
-    * re-clustered on `sortCols` (plain or, via [[zvalue]], Z-order) during
-    * the rewrite. Streaming ingest at 100 TB leaves thousands of
-    * trigger-sized files per partition; every subsequent scan pays their
-    * open/footer cost until a compaction pass folds them — the same reason
-    * ClickHouse background-merges its parts.
-    *
-    * The merge is a `coalesce` (no shuffle — files concatenate into fewer
-    * tasks); the frame is eagerly materialized before the overwrite because
-    * Spark refuses lazy self-overwrites (same contract as
-    * [[Mutations]]). Returns (filesBefore, filesAfter). */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-              targetBytes: Long = 128L << 20,
-              sortCols: Seq[String] = Nil): (Int, Int) = {
-    // Path.getFileSystem handles scheme-less local paths AND URI-illegal
-    // characters (spaces etc.) that a hand-built java.net.URI rejects
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parts(): Array[org.apache.hadoop.fs.FileStatus] =
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"$path/part-*.parquet")))
-        .getOrElse(Array.empty)
-    val before = parts()
-    // a partitioned table has no flat part files — rewriting it here would
-    // read the partition column as data and drop the directory layout;
-    // compact each partition directory individually instead
-    require(before.nonEmpty,
-      s"$path has no flat part-*.parquet files (missing or partitioned table)")
-    val totalBytes = before.map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val merged = spark.read.parquet(path).coalesce(nOut)
-    val clustered =
-      if (sortCols.isEmpty) merged
-      else merged.sortWithinPartitions(sortCols.map(col): _*)
-    clustered.localCheckpoint(true).write.mode("overwrite").parquet(path)
-    (before.length, parts().length)
   }
 }

@@ -5,27 +5,22 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import graft.GraftSession
 
-/** ClickHouse-mutation analogue (`ALTER TABLE … DELETE/UPDATE WHERE`, the
-  * right-to-be-forgotten / data-correction primitive — see
-  * /root/reference/README.md's MergeTree family, whose tables are mutable
-  * only through asynchronous rewrite mutations): Spark has no in-place
+/** ClickHouse-mutation analogue: ClickHouse's MergeTree tables are mutable
+  * only through asynchronous rewrite mutations, and Spark has no in-place
   * delete on parquet either, so a mutation is a COPY-ON-WRITE rewrite —
   * and the whole game at 100 TB is rewriting as little as possible.
   *
-  *  1. one pruned scan finds the DISTINCT partitions that contain matching
-  *     rows (for a partition-column predicate, Catalyst prunes the scan to
-  *     those directories without touching the rest);
+  *  1. one pruned scan finds the DISTINCT partitions that contain affected
+  *     rows;
   *  2. only those partitions are rewritten, via dynamic partition overwrite
   *     (`partitionOverwriteMode=dynamic` scoped to the write) — untouched
-  *     partitions keep their files byte-for-byte, so a user-erasure request
-  *     over years of daily partitions rewrites only the days the user
-  *     actually appears in.
+  *     partitions keep their files byte-for-byte.
   *
   * The sorted-layout invariant is preserved: rewritten rows pass through
   * `sortWithinPartitions` on the caller's sort key, so row-group min/max
   * skipping (S1/S6) survives the mutation. Rows whose partition value is
   * NULL live in Spark's default partition directory and are handled like
-  * any other partition (tracked under a sentinel, erased/updated the same).
+  * any other partition (tracked under a sentinel, rewritten the same).
   */
 object Mutations {
 
@@ -56,9 +51,6 @@ object Mutations {
     if (t.hasNullPart) inParts || col(partitionCol).isNull else inParts
   }
 
-  private def withDynamicOverwrite[T](spark: SparkSession)(body: => T): T =
-    GraftSession.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(body)
-
   /** Every plan inside a mutation lifecycle is explicitly shaped — the small
     * side broadcasts by hint, the rewrite path has no exchange at all, and
     * the probe aggregates are metadata-sized — so adaptive execution buys
@@ -76,29 +68,6 @@ object Mutations {
             else ExternalCatalogUtils.escapePathName(value.toString)
     s"${ExternalCatalogUtils.escapePathName(partitionCol)}=$v"
   }
-
-  /** `ALTER TABLE … DELETE WHERE pred` analogue. Partitions whose every row
-    * matched produce no output rows, so dynamic overwrite cannot replace
-    * them — their directories are dropped the way the TTL drops expired
-    * partitions (a metadata delete, no write). */
-  def deleteWhere(spark: SparkSession, path: String, predicate: Column,
-                  partitionCol: String, sortCols: Seq[String]): DeleteStats =
-    withAdaptiveOff(spark) {
-    val table = spark.read.parquet(path)
-    val t = touchedPartitions(table, predicate, partitionCol)
-    if (t.n == 0L) return DeleteStats(0L, 0L)
-    // pass 2: rewrite ONLY the touched partitions, keeping layout. The kept
-    // rows must be materialized BEFORE the overwrite — the frame reads the
-    // very files the write replaces, and Spark (rightly) refuses a lazy
-    // self-overwrite. The checkpoint is MARKED here and materialized by
-    // overwriteTouched's surviving-dirs probe (one job instead of two);
-    // staging cost is bounded by the touched partitions, never the table.
-    val kept = table.filter(inTouched(t, partitionCol)).filter(!predicate)
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .localCheckpoint(false)
-    overwriteTouched(spark, path, kept, t, partitionCol)
-    DeleteStats(t.count, t.n)
-    }
 
   /** Shared write tail for the copy-on-write mutations: dynamic-overwrite
     * the touched partitions with `kept` (checkpoint-MARKED by the caller —
@@ -119,7 +88,7 @@ object Mutations {
                                partitionCol: String): Unit = {
     val survivingDirs = kept.select(col(partitionCol)).distinct()
       .collect().map(r => partitionDirName(partitionCol, r.get(0))).toSet
-    withDynamicOverwrite(spark) {
+    GraftSession.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       kept.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
     }
     val fs = new org.apache.hadoop.fs.Path(path)
@@ -138,7 +107,7 @@ object Mutations {
     * models the merge): rewrite the table so each key keeps only its
     * newest row by `ordCol`, bounding log growth.
     *
-    * Same minimal-touch discipline as [[deleteWhere]]: only partitions that
+    * Minimal-touch, like [[mergeApply]]: only partitions that
     * hold a SUPERSEDED row are rewritten; a partition whose every row is
     * already its key's winner keeps its files byte-for-byte. Partitions
     * left empty (all rows superseded) are dropped like TTL'd ones.
@@ -178,7 +147,7 @@ object Mutations {
       val kept = ranked.filter(inTouched(t, partitionCol))
         .filter(col("__rn") === 1).drop("__rn")
         .sortWithinPartitions(sortCols.map(col): _*)
-        .localCheckpoint(false) // see deleteWhere / overwriteTouched
+        .localCheckpoint(false) // see overwriteTouched
       overwriteTouched(spark, path, kept, t, partitionCol)
       DeleteStats(t.count, t.n)
     } finally ranked.unpersist(false)
@@ -269,36 +238,4 @@ object Mutations {
     DeleteStats(t.count, nApplied)
     }
   }
-
-  /** `ALTER TABLE … UPDATE col = expr WHERE pred` analogue — the same
-    * minimal-touch copy-on-write. ALL assignments are applied in ONE
-    * projection, so every `when(pred, expr)` — and every assignment
-    * expression — sees the PRE-update row even when assignments read or
-    * write the predicate's own columns. Returns (partitionsRewritten,
-    * rowsUpdated). The partition column itself must not be assigned (a
-    * partition-moving update is a delete + insert). */
-  def updateWhere(spark: SparkSession, path: String, predicate: Column,
-                  set: Map[String, Column], partitionCol: String,
-                  sortCols: Seq[String]): DeleteStats =
-    withAdaptiveOff(spark) {
-    require(!set.contains(partitionCol),
-      "updating the partition column moves rows across partitions — express it as delete + insert")
-    val table = spark.read.parquet(path)
-    require(set.keySet.subsetOf(table.columns.toSet),
-      s"unknown columns in SET: ${set.keySet -- table.columns}")
-    val t = touchedPartitions(table, predicate, partitionCol)
-    if (t.n == 0L) return DeleteStats(0L, 0L)
-    val projected = table.columns.map { c =>
-      set.get(c).map(e => when(predicate, e).otherwise(col(c)).as(c))
-        .getOrElse(col(c))
-    }
-    val rewritten = table.filter(inTouched(t, partitionCol))
-      .select(projected.toIndexedSeq: _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .localCheckpoint() // see deleteWhere: never lazily self-overwrite
-    withDynamicOverwrite(spark) {
-      rewritten.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
-    }
-    DeleteStats(t.count, t.n)
-    }
 }

@@ -1,6 +1,7 @@
 package graft.state
 
 import java.sql.Timestamp
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Sketches
@@ -62,11 +63,16 @@ class MicroBatchPipeline(
     * before every state-table access so a half-finished swap can never be
     * silently shadowed by a freshly-appended partial table. */
   private def recoverStatesIfNeeded(): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val statesPath = new org.apache.hadoop.fs.Path(paths.states)
-    val fs = statesPath.getFileSystem(conf)
-    val old = new org.apache.hadoop.fs.Path(s"${paths.states}__old")
+    val (fs, statesPath, old) = statesSwapPaths()
     if (!fs.exists(statesPath) && fs.exists(old)) fs.rename(old, statesPath)
+  }
+
+  /** The live state table, its `__old` parking path during [[compact]]'s
+    * swap, and their FileSystem. */
+  private def statesSwapPaths(): (FileSystem, Path, Path) = {
+    val statesPath = new Path(paths.states)
+    (statesPath.getFileSystem(spark.sparkContext.hadoopConfiguration),
+     statesPath, new Path(s"${paths.states}__old"))
   }
 
   /** One micro-batch: state update + change-log co-write + delta-restricted
@@ -148,27 +154,6 @@ class MicroBatchPipeline(
     } finally partials.unpersist()
   }
 
-  /** Right-to-be-forgotten: erase one user from every derived table of the
-    * state store — partial states, change log, assignment log — via the
-    * minimal-touch copy-on-write mutation ([[graft.sources.Mutations]]): only
-    * the daily partitions the user actually appears in are rewritten, the
-    * rest keep their files untouched. After this, [[members]] cannot emit
-    * the user (there is no assignment row left to win), and no sketch bytes
-    * derived from the user's events remain on disk. The caller erases the
-    * raw event log separately (same deleteWhere, its own table). */
-  def forgetUser(user: Any): Unit = {
-    recoverStatesIfNeeded()
-    val conf = spark.sparkContext.hadoopConfiguration
-    Seq(paths.states -> "computed_date",
-        paths.changeLog -> "computed_date",
-        paths.assignments -> "assigned_date").foreach { case (p, partCol) =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      if (hp.getFileSystem(conf).exists(hp))
-        graft.sources.Mutations.deleteWhere(spark, p,
-          col("user_id") === lit(user), partCol, Seq("user_id"))
-    }
-  }
-
   /** Segment read-back: latest-wins over the assignment log, HAVING
     * latest value = true (/root/reference/src/3-microBatch.test.ts:156-169,
     * 4-eventTime.test.ts:171-185 — `argMax(value, assigned_at)`).
@@ -206,13 +191,10 @@ class MicroBatchPipeline(
     // swap with no lost-table window: park the live dir, promote the new one,
     // THEN delete — a crash between steps leaves either the old or the new
     // table at a recoverable path, never neither
-    val conf = spark.sparkContext.hadoopConfiguration
-    val statesPath = new org.apache.hadoop.fs.Path(paths.states)
-    val fs = statesPath.getFileSystem(conf)
-    val old = new org.apache.hadoop.fs.Path(s"${paths.states}__old")
+    val (fs, statesPath, old) = statesSwapPaths()
     if (fs.exists(old)) fs.delete(old, true) // leftover from a prior crash
     fs.rename(statesPath, old)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), statesPath)
+    fs.rename(new Path(tmp), statesPath)
     fs.delete(old, true)
   }
 }

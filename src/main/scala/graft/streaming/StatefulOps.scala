@@ -114,22 +114,14 @@ object StatefulOps {
 
   /** Stream-stream interval join — last-touch attribution as it runs live:
     * each purchase joins the clicks of the SAME user whose event time falls
-    * within `attributionWindow` BEFORE the purchase. Watermarks on both
-    * sides bound the join state (clicks older than the window + delay are
-    * dropped from state; purchases likewise), which is what lets two
-    * unbounded streams join with finite memory — the streaming twin of
-    * [[graft.operators.AsOf]]'s batch point-in-time join.
-    *
-    * `joinType` "inner" emits matched pairs only; "left_outer" additionally
-    * emits each UNATTRIBUTED purchase once — with null click columns — when
-    * the watermark passes its join horizon and the engine can prove no
-    * matching click can still arrive (the null-side close-out path of the
-    * symmetric hash join; an orphan purchase emits on a LATER batch, never
-    * inline). */
+    * within the hour BEFORE the purchase. Watermarks on both sides bound
+    * the join state (clicks older than the window + delay are dropped from
+    * state; purchases likewise), which is what lets two unbounded streams
+    * join with finite memory — the streaming twin of
+    * [[graft.operators.AsOf]]'s batch point-in-time join. Inner join:
+    * matched pairs only. */
   def streamStreamAttribution(clicks: DataFrame, purchases: DataFrame,
-                              attributionWindow: String = "1 hour",
-                              watermarkDelay: String = "10 minutes",
-                              joinType: String = "inner"): DataFrame = {
+                              watermarkDelay: String = "10 minutes"): DataFrame = {
     val c = clicks
       .select(col("user_id").cast("string").as("user_id"),
               col("ts").as("click_ts"), col("event_id").as("click_id"))
@@ -139,10 +131,9 @@ object StatefulOps {
               col("ts").as("purchase_ts"), col("event_id").as("purchase_id"))
       .withWatermark("purchase_ts", watermarkDelay)
     p.join(c,
-      expr(s"""p_user_id = user_id AND
-               click_ts <= purchase_ts AND
-               click_ts >= purchase_ts - INTERVAL $attributionWindow"""),
-      joinType)
+      expr("""p_user_id = user_id AND
+              click_ts <= purchase_ts AND
+              click_ts >= purchase_ts - INTERVAL 1 hour"""))
       .select(col("purchase_id"), col("p_user_id").as("user_id"),
               col("purchase_ts"), col("click_id"), col("click_ts"))
   }

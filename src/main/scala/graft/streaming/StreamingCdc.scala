@@ -7,8 +7,7 @@ import graft.operators.LatestWins
 import graft.sources.Mutations
 
 /** Live CDC landing — the streaming twin of
-  * [[graft.sources.Mutations.mergeApply]], the same way [[StreamingDedup]]
-  * twins the batch near-dup operator: a stream of change rows keyed by
+  * [[graft.sources.Mutations.mergeApply]]: a stream of change rows keyed by
   * `user_id` (insert/update/delete in `op`, ordered by a monotone `seq`
   * within each key) lands on a `cohort`-partitioned parquet table one
   * micro-batch at a time, each batch compacted to its keys' final ops

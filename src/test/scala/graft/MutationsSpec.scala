@@ -1,172 +1,18 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.sources.{Ingest, Mutations}
 
-/** Copy-on-write DELETE mutation: minimal-touch partition rewrite, layout
-  * preservation, idempotence, and full-partition erasure.
+/** Copy-on-write mutations (collapseLatest, mergeApply, StreamingCdc):
+  * minimal-touch partition rewrite, idempotence, and full-partition erasure.
   */
 class MutationsSpec extends SparkSpec {
   import spark.implicits._
-
-  private def fixture(dir: String): Unit = {
-    val rows = for {
-      d <- Seq("2024-01-01", "2024-01-02", "2024-01-03")
-      i <- 1 to 20
-    } yield (i.toLong % 5, s"evt-$d-$i", d)
-    Ingest.appendSorted(rows.toDF("user_id", "event_id", "day"), dir,
-      sortCols = Seq("user_id"), partitionCol = Some("day"))
-  }
 
   private def fileState(dir: String, part: String): Set[(String, Long)] = {
     val d = new java.io.File(s"$dir/day=$part")
     if (!d.exists()) Set.empty
     else d.listFiles().filter(_.getName.endsWith(".parquet"))
       .map(f => (f.getName, f.lastModified())).toSet
-  }
-
-  test("deleteWhere rewrites only touched partitions and preserves the rest") {
-    val dir = tmpDir("mut1")
-    fixture(dir)
-    // user 3 exists in every day; restrict the delete to two days
-    val before3 = fileState(dir, "2024-01-03")
-    val stats = Mutations.deleteWhere(spark, dir,
-      $"user_id" === 3L && $"day" =!= "2024-01-03", "day", Seq("user_id"))
-    assert(stats.partitionsRewritten == 2L)
-    assert(stats.rowsDeleted == 8L) // 4 rows per day x 2 days
-    val after = spark.read.parquet(dir)
-    assert(after.count() == 52L)
-    assert(after.filter($"user_id" === 3L).count() == 4L) // day 3 untouched
-    assert(fileState(dir, "2024-01-03") == before3,
-      "untouched partition files must be byte-identical (same names, mtimes)")
-    // layout preserved: each rewritten FILE is still sorted by user_id (the
-    // per-file/row-group property min-max skipping needs)
-    new java.io.File(s"$dir/day=2024-01-01").listFiles()
-      .filter(_.getName.endsWith(".parquet")).foreach { f =>
-        val inFile = spark.read.parquet(f.getPath).select($"user_id").as[Long].collect()
-        assert(inFile.sameElements(inFile.sorted),
-          s"${f.getName}: sortWithinPartitions must survive the rewrite")
-      }
-  }
-
-  test("deleteWhere is idempotent: a re-run is a metadata-only no-op") {
-    val dir = tmpDir("mut2")
-    fixture(dir)
-    val s1 = Mutations.deleteWhere(spark, dir, $"user_id" === 2L, "day", Seq("user_id"))
-    assert(s1.partitionsRewritten == 3L && s1.rowsDeleted == 12L)
-    val files = Seq("2024-01-01", "2024-01-02", "2024-01-03")
-      .map(p => fileState(dir, p))
-    val s2 = Mutations.deleteWhere(spark, dir, $"user_id" === 2L, "day", Seq("user_id"))
-    assert(s2 == Mutations.DeleteStats(0L, 0L))
-    assert(Seq("2024-01-01", "2024-01-02", "2024-01-03").map(p => fileState(dir, p)) == files,
-      "no file may change on the idempotent re-run")
-    assert(spark.read.parquet(dir).filter($"user_id" === 2L).count() == 0L)
-  }
-
-  test("updateWhere rewrites only touched partitions, applies assignments to matches only") {
-    val dir = tmpDir("mut4")
-    fixture(dir)
-    val before3 = fileState(dir, "2024-01-03")
-    val stats = Mutations.updateWhere(spark, dir,
-      $"user_id" === 1L && $"day" =!= "2024-01-03",
-      Map("event_id" -> lit("redacted")), "day", Seq("user_id"))
-    assert(stats.partitionsRewritten == 2L && stats.rowsDeleted == 8L)
-    val after = spark.read.parquet(dir)
-    assert(after.count() == 60L, "update never changes row count")
-    assert(after.filter($"event_id" === "redacted").count() == 8L)
-    assert(after.filter($"user_id" === 1L && $"day" === "2024-01-03"
-             && $"event_id" =!= "redacted").count() == 4L)
-    assert(fileState(dir, "2024-01-03") == before3, "untouched partition intact")
-    // partition-column assignment is rejected outright
-    intercept[IllegalArgumentException] {
-      Mutations.updateWhere(spark, dir, $"user_id" === 1L,
-        Map("day" -> lit("2024-01-09")), "day", Seq("user_id"))
-    }
-  }
-
-  test("forgetUser erases a user from every state-store table; others unaffected") {
-    import java.sql.Timestamp
-    import graft.state.{MicroBatchPipeline, StateStorePaths}
-    import graft.operators.SegmentDef
-    val paths = StateStorePaths(tmpDir("forget"))
-    val seg = SegmentDef("BUTTON_CLICK", 2)
-    val pipe = new MicroBatchPipeline(spark, seg, paths)
-    val t0 = Timestamp.valueOf("2024-01-02 00:00:00")
-    val events = Seq(
-      ("1", "BUTTON_CLICK", Timestamp.valueOf("2024-01-01 10:00:00"), "m1"),
-      ("1", "BUTTON_CLICK", Timestamp.valueOf("2024-01-01 11:00:00"), "m2"),
-      ("2", "BUTTON_CLICK", Timestamp.valueOf("2024-01-01 10:30:00"), "m3"),
-      ("2", "BUTTON_CLICK", Timestamp.valueOf("2024-01-01 11:30:00"), "m4")
-    ).toDF("user_id", "event_type", "ts", "event_id")
-    pipe.processBatch(events, Timestamp.valueOf("2024-01-01 00:00:00"), t0)
-    assert(pipe.members().select($"user_id").as[String].collect().sorted.toSeq
-      == Seq("1", "2"))
-    pipe.forgetUser("2")
-    assert(pipe.members().select($"user_id").as[String].collect().toSeq == Seq("1"),
-      "forgotten user must vanish from membership")
-    Seq(paths.states, paths.changeLog, paths.assignments).foreach { p =>
-      assert(spark.read.parquet(p).filter($"user_id" === "2").count() == 0L,
-        s"$p must hold no rows for the forgotten user")
-    }
-    // idempotent, like the underlying mutation
-    pipe.forgetUser("2")
-    assert(pipe.members().select($"user_id").as[String].collect().toSeq == Seq("1"))
-  }
-
-  test("updateWhere: all assignments see the PRE-update row, even self-referencing sets") {
-    val dir = tmpDir("mut5")
-    fixture(dir)
-    // the first assignment rewrites the predicate's own column; the second
-    // must still fire for the originally-matching rows
-    val stats = Mutations.updateWhere(spark, dir, $"event_id".startsWith("evt-2024-01-01-1"),
-      Map("event_id" -> lit("gone"), "user_id" -> lit(99L)), "day", Seq("user_id"))
-    assert(stats.rowsDeleted == 11L) // evt-2024-01-01-1 and -10..-19
-    val after = spark.read.parquet(dir)
-    assert(after.filter($"event_id" === "gone").count() == 11L)
-    assert(after.filter($"user_id" === 99L).count() == 11L,
-      "second assignment must not be starved by the first rewriting the predicate column")
-  }
-
-  test("NULL partition values are erased too, in their default-partition directory") {
-    val dir = tmpDir("mut6")
-    val rows = Seq((1L, "a", "2024-01-01"), (2L, "b", "2024-01-01"),
-                   (3L, "c", null), (4L, "d", null))
-      .toDF("user_id", "event_id", "day")
-    rows.write.mode("overwrite").partitionBy("day").parquet(dir)
-    val stats = Mutations.deleteWhere(spark, dir, $"user_id".isin(2L, 3L), "day", Seq("user_id"))
-    assert(stats == Mutations.DeleteStats(2L, 2L),
-      "the null partition must count as touched")
-    val after = spark.read.parquet(dir)
-    assert(after.select($"user_id").as[Long].collect().sorted.toSeq == Seq(1L, 4L),
-      "row in the NULL partition must actually be deleted")
-    // empty out the null partition entirely: its sentinel directory must go
-    val s2 = Mutations.deleteWhere(spark, dir, $"user_id" === 4L, "day", Seq("user_id"))
-    assert(s2.rowsDeleted == 1L)
-    assert(!new java.io.File(s"$dir/day=__HIVE_DEFAULT_PARTITION__").exists())
-  }
-
-  test("escaped partition values: emptied partitions with special chars still drop") {
-    val dir = tmpDir("mut7")
-    Seq((1L, "2024-01-01 00:00"), (2L, "2024-01-02 00:00"))
-      .toDF("user_id", "day").write.mode("overwrite").partitionBy("day").parquet(dir)
-    val stats = Mutations.deleteWhere(spark, dir, $"user_id" === 1L, "day", Seq("user_id"))
-    assert(stats == Mutations.DeleteStats(1L, 1L))
-    val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).toSet
-    assert(dirs.count(_.startsWith("day=")) == 1,
-      s"the emptied escaped partition must be dropped, found: $dirs")
-    assert(spark.read.parquet(dir).select($"user_id").as[Long].collect().toSeq == Seq(2L))
-  }
-
-  test("a fully-matched partition's directory is dropped, not left stale") {
-    val dir = tmpDir("mut3")
-    fixture(dir)
-    val stats = Mutations.deleteWhere(spark, dir, $"day" === "2024-01-02", "day", Seq("user_id"))
-    assert(stats == Mutations.DeleteStats(1L, 20L))
-    assert(!new java.io.File(s"$dir/day=2024-01-02").exists(), "emptied partition dropped")
-    val left = spark.read.parquet(dir)
-    assert(left.count() == 40L)
-    assert(left.select($"day").distinct().as[String].collect().toSet ==
-      Set("2024-01-01", "2024-01-03"))
   }
 
   // ---- collapseLatest (OPTIMIZE TABLE … FINAL analogue) ----
@@ -306,6 +152,31 @@ class MutationsSpec extends SparkSpec {
       Seq("user_id"))
     assert(spark.read.parquet(dir).filter($"user_id" === 3L)
       .select($"score").as[Long].collect().toSeq == Seq(9L))
+    // a D batch that empties the NULL partition drops its sentinel directory
+    val nullDir = tmpDir("mutm2null")
+    Seq((1L, 1L, Option("a")), (2L, 2L, Option.empty[String]))
+      .toDF("user_id", "score", "cohort")
+      .write.mode("overwrite").partitionBy("cohort").parquet(nullDir)
+    Mutations.mergeApply(spark, nullDir,
+      Seq((2L, 0L, Option.empty[String], "D")).toDF("user_id", "score", "cohort", "op"),
+      Seq("user_id"), "op", "cohort", Seq("user_id"))
+    assert(!new java.io.File(s"$nullDir/cohort=__HIVE_DEFAULT_PARTITION__").exists(),
+      "emptied NULL partition dropped")
+    assert(spark.read.parquet(nullDir).select($"user_id").as[Long].collect().toSeq
+      == Seq(1L))
+    // ... and one whose value is percent-escaped in its directory name
+    val escDir = tmpDir("mutm2esc")
+    Seq((1L, 1L, "2024-01-01 00:00"), (2L, 2L, "2024-01-02 00:00"))
+      .toDF("user_id", "score", "cohort")
+      .write.mode("overwrite").partitionBy("cohort").parquet(escDir)
+    Mutations.mergeApply(spark, escDir,
+      Seq((1L, 0L, "2024-01-01 00:00", "D")).toDF("user_id", "score", "cohort", "op"),
+      Seq("user_id"), "op", "cohort", Seq("user_id"))
+    val dirs = new java.io.File(escDir).listFiles().filter(_.isDirectory).map(_.getName).toSet
+    assert(dirs.count(_.startsWith("cohort=")) == 1,
+      s"the emptied escaped partition must be dropped, found: $dirs")
+    assert(spark.read.parquet(escDir).select($"user_id").as[Long].collect().toSeq
+      == Seq(2L))
   }
 
   // ---- StreamingCdc (the live landing twin of mergeApply) ----

@@ -600,15 +600,6 @@ class SearchAndStatsSpec extends SparkSpec {
       "sum states re-merged must equal the one-shot sumMap")
     assert(merged.map(r => r._1 -> r._3).toMap == direct(MapAgg.minMap))
     assert(merged.map(r => r._1 -> r._4).toMap == direct(MapAgg.maxMap))
-    // state-table COMPACTION (mapMergeState): states → one state, still
-    // mergeable downstream to the same final map
-    val compacted = back.groupBy("g")
-      .agg(MapAgg.mapMergeState(col("ss"), MapAgg.Sum).as("ss"))
-    val afterCompaction = compacted.groupBy("g")
-      .agg(MapAgg.sumMapMerge(col("ss")).as("m"))
-      .as[(Int, Map[String, Long])].collect().toMap
-    assert(afterCompaction == direct(MapAgg.sumMap),
-      "compacted states must still merge to the one-shot result")
   }
 
   test("uniqUpTo: exact below the cap, sentinel above, split-merge invariant, bounded state") {
@@ -653,44 +644,6 @@ class SearchAndStatsSpec extends SparkSpec {
     intercept[Exception] {
       Seq(1L << 30).toDF("id")
         .agg(BitmapAgg.bitmapState(col("id"), maxBit = 1 << 20)).collect()
-    }
-  }
-
-  // --- compaction ---------------------------------------------------------
-
-  test("Layout.compact folds small files, preserves rows, applies clustering") {
-    val dir = tmpDir("compact")
-    val path = s"$dir/t.parquet"
-    val df = (1 to 10000).map(i => (i.toLong, (i * 2654435761L) % 1000, s"row$i"))
-      .toDF("id", "key", "payload")
-    df.repartition(40).write.parquet(path)  // 40 small files
-    val before = spark.read.parquet(path)
-      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long].toString)
-
-    val (nBefore, nAfter) = graft.sources.Layout.compact(
-      spark, path, targetBytes = Long.MaxValue, sortCols = Seq("key"))
-    assert(nBefore === 40 && nAfter === 1, s"expected 40 → 1, got $nBefore → $nAfter")
-
-    val after = spark.read.parquet(path)
-    val afterRows = after.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long].toString)
-    assert(afterRows === before, "compaction changed the row multiset")
-    // clustering applied: the single output file is sorted by key
-    val keys = after.select("key").as[Long].collect()
-    assert(keys.sameElements(keys.sorted), "rows not clustered on sortCols")
-
-    // idempotent re-run: still 1 file, same rows
-    val (b2, a2) = graft.sources.Layout.compact(
-      spark, path, targetBytes = Long.MaxValue, sortCols = Seq("key"))
-    assert(b2 === 1 && a2 === 1)
-
-    // guards: missing path and partitioned tables are refused, not mangled
-    intercept[IllegalArgumentException] {
-      graft.sources.Layout.compact(spark, s"$dir/nope.parquet")
-    }
-    val part = s"$dir/p.parquet"
-    df.withColumn("pt", col("key") % 2).write.partitionBy("pt").parquet(part)
-    intercept[IllegalArgumentException] {
-      graft.sources.Layout.compact(spark, part)
     }
   }
 }

@@ -301,64 +301,12 @@ class StateAndStreamingSpec extends SparkSpec {
       s"too-early late event must form its own earlier session; got $u1")
   }
 
-  test("streaming incremental near-dup: batch union equals whole-corpus brute force") {
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Seq(
-      (0L, "the quick brown fox jumps over the lazy dog"),
-      (1L, "the quick brown fox jumps over the lazy cat"),   // near-dup of 0
-      (2L, "pack my box with five dozen liquor jugs"),
-      (3L, "the quick brown fox jumps over the lazy dog"),   // exact dup of 0
-      (4L, "sphinx of black quartz judge my vow"),
-      (5L, "the quick brown fox jumps over the lazy dogs"))  // near-dup of 0/3
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_stream_dedup").toString
-    val source = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingDedup.foreachBatchNearDup(
-      source.toDF().toDF("doc_id", "text"), stateDir, threshold = 0.5).start()
-    // three ingest days: each batch sees pairs vs everything already indexed
-    source.addData(docs(0), docs(1)); q.processAllAvailable()
-    source.addData(docs(2), docs(3)); q.processAllAvailable()
-    source.addData(docs(4), docs(5)); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.read.parquet(s"$stateDir/pairs")
-      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-    val brute = graft.operators.Dedup.bruteForceJaccardPairs(
-        docs.toDF("doc_id", "text"), threshold = 0.5)
-      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-    assert(brute.contains((0L, 3L)) && brute.size >= 3, s"fixture must have pairs: $brute")
-    assert(streamed == brute,
-      s"each pair must surface exactly when its later member arrives; got $streamed vs $brute")
-    // no pair is reported twice across batches
-    val n = spark.read.parquet(s"$stateDir/pairs").count()
-    assert(n == brute.size, s"pairs log must be duplicate-free: $n rows for ${brute.size} pairs")
-  }
-
-  test("streaming incremental near-dup: batch replay is idempotent") {
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_replay_dedup").toString
-    val b1 = Seq((0L, "the quick brown fox jumps over the lazy dog"),
-                 (1L, "pack my box with five dozen liquor jugs")).toDF("doc_id", "text")
-    val b2 = Seq((2L, "the quick brown fox jumps over the lazy dogs")).toDF("doc_id", "text")
-    graft.streaming.StreamingDedup.processBatch(b1, 0L, stateDir, threshold = 0.5)
-    graft.streaming.StreamingDedup.processBatch(b2, 1L, stateDir, threshold = 0.5)
-    def state() = (
-      spark.read.parquet(s"$stateDir/pairs").select($"id_a", $"id_b")
-        .as[(Long, Long)].collect().sorted.toSeq,
-      spark.read.parquet(s"$stateDir/index").count(),
-      spark.read.parquet(s"$stateDir/corpus").count())
-    val before = state()
-    assert(before._1 == Seq((0L, 2L)), s"near-dup pair expected: $before")
-    // Spark may re-deliver a batch id after failure: replaying batch 1 must
-    // overwrite its own prior output, not double-append
-    graft.streaming.StreamingDedup.processBatch(b2, 1L, stateDir, threshold = 0.5)
-    assert(state() == before, s"replay must be a no-op; got ${state()} vs $before")
-  }
-
   test("stream-stream interval join: purchases attribute to in-window clicks only") {
     implicit val sqlCtx = spark.sqlContext
     val clicks = MemoryStream[Ev]
     val purchases = MemoryStream[Ev]
     val joined = graft.streaming.StatefulOps.streamStreamAttribution(
-      clicks.toDF(), purchases.toDF(),
-      attributionWindow = "1 hour", watermarkDelay = "0 seconds")
+      clicks.toDF(), purchases.toDF(), watermarkDelay = "0 seconds")
     val q = joined.writeStream.format("memory").queryName("attribution")
       .outputMode("append").start()
     clicks.addData(
@@ -379,45 +327,6 @@ class StateAndStreamingSpec extends SparkSpec {
     assert(!got.exists(_._2 == "c2"), "out-of-window click must not attribute")
     assert(!got.exists(p => p._1 == "p1" && p._2 == "c3"),
       "another user's click must not attribute")
-  }
-
-  test("LEFT OUTER stream-stream join: orphan purchase emits null click after watermark close-out") {
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[Ev]
-    val purchases = MemoryStream[Ev]
-    val joined = graft.streaming.StatefulOps.streamStreamAttribution(
-      clicks.toDF(), purchases.toDF(),
-      attributionWindow = "1 hour", watermarkDelay = "0 seconds",
-      joinType = "left_outer")
-    val q = joined.writeStream.format("memory").queryName("attribution_outer")
-      .outputMode("append").start()
-    clicks.addData(Ev("u1", "click", ts("2023-01-01 09:30:00"), "c1"))
-    purchases.addData(
-      Ev("u1", "purchase", ts("2023-01-01 10:00:00"), "p1"),  // matches c1
-      Ev("u2", "purchase", ts("2023-01-01 10:00:00"), "p2"))  // no click ever
-    q.processAllAvailable()
-    def rows() = spark.table("attribution_outer")
-      .select($"purchase_id", $"click_id").collect()
-      .map(r => (r.getString(0), Option(r.getString(1)))).toSet
-    // the orphan must NOT have emitted yet: its null-side row is provable
-    // only once the watermark passes purchase_ts (+ window slack) — emitting
-    // inline would be wrong (a matching click could still arrive)
-    assert(!rows().exists(_._1 == "p2"),
-      s"orphan purchase emitted before watermark close-out: ${rows()}")
-    // advance both watermarks far past p2's horizon; the close-out scan on
-    // the following batch emits the orphan with a null click
-    clicks.addData(Ev("u9", "click", ts("2023-01-02 23:00:00"), "c9"))
-    purchases.addData(Ev("u9", "purchase", ts("2023-01-02 23:30:00"), "p9"))
-    q.processAllAvailable()
-    // one more batch so the eviction-driven emission lands in the sink
-    clicks.addData(Ev("u9", "click", ts("2023-01-03 23:00:00"), "c10"))
-    purchases.addData(Ev("u9", "purchase", ts("2023-01-03 23:30:00"), "p10"))
-    q.processAllAvailable()
-    q.stop()
-    val got = rows()
-    assert(got.contains(("p1", Some("c1"))), s"matched pair must emit: $got")
-    assert(got.contains(("p2", None)),
-      s"orphan purchase must emit with null click after close-out: $got")
   }
 
   test("mapGroupsWithState holds a mergeable HLL sketch per user (uniqState twin)") {

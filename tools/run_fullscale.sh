@@ -14,26 +14,36 @@
 #
 # Usage: bash tools/run_fullscale.sh [sfDir] [timeoutSec]
 #   sfDir default /root/testdata/sf0.1; timeoutSec per-oracle, default 180.
+# Each run works in its own `mktemp -d` directory. The Verify dump is removed
+# on exit; the logs are kept (and their directory printed) only when the gate
+# fails.
 set -e
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.1}
 TMO=${2:-180}
-OUT=/tmp/fullscale_out
+WORK=$(mktemp -d "${TMPDIR:-/tmp}/run_fullscale.XXXXXX")
+OUT=$WORK/out
 FAILED=0
+cleanup() {
+  local status=$?
+  rm -rf "$OUT"
+  if [ "$status" -eq 0 ]; then rm -rf "$WORK"
+  else echo "FULLSCALE GATE: logs kept in $WORK"; fi
+}
+trap cleanup EXIT
 
-rm -rf "$OUT"
 echo "== fullscale gate: Verify at $SF"
-sbt -batch "runMain graft.Verify $SF $OUT" > /tmp/fullscale_verify.log 2>&1 ||
-  { echo "FULLSCALE: VERIFY FAILED (see /tmp/fullscale_verify.log)"; exit 1; }
+sbt -batch "runMain graft.Verify $SF $OUT" > "$WORK/verify.log" 2>&1 ||
+  { echo "FULLSCALE: VERIFY FAILED (see $WORK/verify.log)"; exit 1; }
 
 echo "== fullscale gate: oracle sweep (timeout ${TMO}s/query)"
-python3 tools/sweep_oracle.py "$SF" "$OUT" "$TMO" | tee /tmp/fullscale_sweep.log
+python3 tools/sweep_oracle.py "$SF" "$OUT" "$TMO" | tee "$WORK/sweep.log"
 test "${PIPESTATUS[0]}" -eq 0 || FAILED=1
 
 echo "== fullscale gate: RecallCheck (pair/ANN lanes, Spark-side exact)"
-sbt -batch "Test/runMain graft.RecallCheck" > /tmp/fullscale_recall.log 2>&1 ||
-  { echo "FULLSCALE: RECALLCHECK FAILED (see /tmp/fullscale_recall.log)"; FAILED=1; }
-grep -E "EXACT|OK|FAIL" /tmp/fullscale_recall.log | tail -20
+sbt -batch "Test/runMain graft.RecallCheck" > "$WORK/recall.log" 2>&1 ||
+  { echo "FULLSCALE: RECALLCHECK FAILED (see $WORK/recall.log)"; FAILED=1; }
+grep -E "EXACT|OK|FAIL" "$WORK/recall.log" | tail -20
 
 if [ "$FAILED" -ne 0 ]; then echo "FULLSCALE GATE: FAILED"; exit 1; fi
 echo "FULLSCALE GATE: PASS"
