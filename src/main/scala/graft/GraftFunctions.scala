@@ -66,7 +66,7 @@ object GraftFunctions {
     },
     "graft_funnel_level" -> { es =>
       require(es.length == 3 || es.length == 4,
-        "graft_funnel_level(sortedSeq, nSteps, windowSeconds[, mode]) — mode: 0 default, 1 strict_order, 2 strict_dedup")
+        "graft_funnel_level(sortedSeq, nSteps, windowSeconds[, mode]) — mode: 0 default, 1 strict_order, 2 strict_dedup, 3 strict_increase")
       FunnelLevelExpr(es.head, intLit(es(1)), longLit(es(2)),
         if (es.length == 4) intLit(es(3)) else 0)
     },

@@ -269,22 +269,13 @@ object Dedup {
                         maxDirectBroadcastBytes: Long = 64L << 20): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val grams = wordGramSets(docs, n)
-    val sizes = grams.select(col("id"), size(col("g")).as("sz"))
-    // set size rides inline on the posting rows — no join needed to reach it
-    val posting = grams.select(col("id"), size(col("g")).as("sz"),
-                               explode(col("g")).as("gram"))
-    val gramDf = posting.groupBy("gram").agg(count(lit(1)).as("df"))
     // Strategy choice from one scalar of shuffle-sized statistics (the same
-    // footprint AQE collects): Σ df² is EXACTLY the posting self-join's
-    // output cardinality. Dense gram universes (small vocab, long posting
+    // footprint AQE collects): Σ df², the posting self-join's output
+    // cardinality. Dense gram universes (small vocab, long posting
     // lists — where prefix filtering admits nearly all pairs anyway) take
     // the count-based plan; Zipf universes (the 100 TB text shape, where
     // Σ df² explodes on stopword grams) take the prefix-filtered plan.
-    // coalesce: an all-short corpus (every doc < n words) yields ZERO gram
-    // rows, and sum over zero rows is NULL — take the empty-join (0.0) path
-    val joinRows = gramDf.agg(coalesce(sum(col("df").cast("double") * col("df")),
-                                       lit(0.0)))
-      .first().getDouble(0)
+    val (sizes, posting, gramDf, joinRows) = gramIndex(grams)
     // cheap: grams is checkpointed; one pass yields both dispatch stats
     val st = grams.agg(count(lit(1)), coalesce(sum(size(col("g"))), lit(0L))).first()
     val (nDocs, totalGrams) = (st.getLong(0), st.getLong(1))
@@ -385,6 +376,42 @@ object Dedup {
       .filter(size(col("g")) > 0)
       .localCheckpoint(true)
 
+  /** The gram index both exact pair joins build over (id, g) gram sets:
+    * `sizes` = (id, sz); `posting` = (id, sz, gram), one row per (doc,
+    * distinct gram), the set size riding inline so no join is needed to
+    * reach it; `gramDf` = (gram, df); and Σ df², EXACTLY the posting
+    * self-join's output cardinality (one action). */
+  private def gramIndex(grams: DataFrame): (DataFrame, DataFrame, DataFrame, Double) = {
+    val sizes = grams.select(col("id"), size(col("g")).as("sz"))
+    val posting = grams.select(col("id"), size(col("g")).as("sz"),
+                               explode(col("g")).as("gram"))
+    val gramDf = posting.groupBy("gram").agg(count(lit(1)).as("df"))
+    // coalesce: an all-short corpus (every doc < n words) yields ZERO gram
+    // rows, and sum over zero rows is NULL — take the empty-join (0.0) path
+    val joinRows = gramDf.agg(coalesce(sum(col("df").cast("double") * col("df")),
+                                       lit(0.0)))
+      .first().getDouble(0)
+    (sizes, posting, gramDf, joinRows)
+  }
+
+  /** Each doc's prefix in the rarest-first (df, gram) order, one row per
+    * prefix gram: (id, sz, pos, gram). Length sz − ⌈t·sz⌉ + 1, the AllPairs
+    * bound. The ceil must see the RATIONAL t·sz, not its binary-double
+    * image: (1/91)·273 = 3.0000000000000004 in doubles, whose ceil (4)
+    * would cut the prefix one gram short and silently drop pairs at exactly
+    * the threshold. The epsilon under-ceilings at worst, which only
+    * lengthens the prefix — conservative, still exact. */
+  private def rarestFirstPrefix(posting: DataFrame, gramDf: DataFrame,
+                                sizes: DataFrame, threshold: Double): DataFrame =
+    posting.drop("sz").join(gramDf, "gram")
+      .groupBy("id")
+      .agg(sort_array(collect_list(struct(col("df"), col("gram")))).as("sorted"))
+      .join(sizes, "id")
+      .select(col("id"), col("sz"), expr(
+        s"transform(slice(sorted, 1, sz - CAST(ceil($threshold * sz - 1e-9) AS INT) + 1), s -> s.gram)")
+        .as("pref"))
+      .select(col("id"), col("sz"), posexplode(col("pref")).as(Seq("pos", "gram")))
+
   /** EXACT directed n-gram CONTAINMENT pairs — C(a→b) = |Gₐ ∩ G_b| / |Gₐ|
     * ≥ t for every ordered pair a ≠ b. The ASYMMETRIC complement to
     * [[ngramJaccardPairs]]: resemblance finds same-sized near-twins, while
@@ -415,13 +442,7 @@ object Dedup {
                        maxDenseJoinRows: Double = 5e8): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
     val grams = wordGramSets(docs, n)
-    val sizes = grams.select(col("id"), size(col("g")).as("sz"))
-    val posting = grams.select(col("id"), size(col("g")).as("sz"),
-                               explode(col("g")).as("gram"))
-    val gramDf = posting.groupBy("gram").agg(count(lit(1)).as("df"))
-    val joinRows = gramDf.agg(coalesce(sum(col("df").cast("double") * col("df")),
-                                       lit(0.0)))
-      .first().getDouble(0)
+    val (sizes, posting, gramDf, joinRows) = gramIndex(grams)
     // one-sided size necessity: C ≥ t ⟹ |G_b| ≥ ⌈t·|Gₐ|⌉ (the −1e-9 keeps
     // the rational t·sz boundary from rounding a hair high in doubles)
     val sizeOk = col("sz_b").cast("double") >= lit(threshold) * col("sz_a") - lit(1e-9)
@@ -436,19 +457,9 @@ object Dedup {
         .filter(col("containment") >= threshold)
         .select(col("id_a"), col("id_b"), round(col("containment"), 4).as("containment"))
     } else {
-      // A's prefix in rarest-first order: length sz − ⌈t·sz⌉ + 1 (ceil on
-      // the under-shot product — a too-short prefix would drop boundary
-      // pairs; the epsilon only ever lengthens it)
-      val prefixA = posting.drop("sz").join(gramDf, "gram")
-        .groupBy("id")
-        .agg(sort_array(collect_list(struct(col("df"), col("gram")))).as("sorted"))
-        .join(sizes, "id")
-        .select(col("id"), col("sz"), expr(
-          s"transform(slice(sorted, 1, sz - CAST(ceil($threshold * sz - 1e-9) AS INT) + 1), s -> s.gram)")
-          .as("pref"))
-        .select(col("id"), col("sz"), posexplode(col("pref")).as(Seq("pos", "gram")))
-      val pa = prefixA.select(col("gram"), col("id").as("id_a"),
-                              col("sz").as("sz_a"), col("pos").as("pos_a"))
+      // A's rarest-first prefix against B's full posting list
+      val pa = rarestFirstPrefix(posting, gramDf, sizes, threshold)
+        .select(col("gram"), col("id").as("id_a"), col("sz").as("sz_a"), col("pos").as("pos_a"))
       val pb = posting.select(col("gram"), col("id").as("id_b"), col("sz").as("sz_b"))
       val cand = pa.join(pb, Seq("gram"))
         .filter(col("id_a") =!= col("id_b") && sizeOk)
@@ -496,19 +507,7 @@ object Dedup {
   private[graft] def prefixFilteredCandidates(posting: DataFrame, gramDf: DataFrame,
                                               sizes: DataFrame,
                                               threshold: Double): DataFrame = {
-    // ceil must see the RATIONAL t·sz, not its binary-double image:
-    // (1/91)·273 = 3.0000000000000004 in doubles, whose ceil (4) would
-    // cut the prefix one gram short of the AllPairs bound and silently
-    // drop pairs at exactly J = t. The epsilon under-ceilings at worst,
-    // which only lengthens the prefix — conservative, still exact.
-    val prefix = posting.drop("sz").join(gramDf, "gram")
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("df"), col("gram")))).as("sorted"))
-      .join(sizes, "id")
-      .select(col("id"), col("sz"), expr(
-        s"transform(slice(sorted, 1, sz - CAST(ceil($threshold * sz - 1e-9) AS INT) + 1), s -> s.gram)")
-        .as("pref"))
-      .select(col("id"), col("sz"), posexplode(col("pref")).as(Seq("pos", "gram")))
+    val prefix = rarestFirstPrefix(posting, gramDf, sizes, threshold)
     val pa = prefix.select(col("gram"), col("id").as("id_a"),
                            col("sz").as("sz_a"), col("pos").as("pos_a"))
     val pb = prefix.select(col("gram"), col("id").as("id_b"),

@@ -789,11 +789,14 @@ class NativeExprParitySpec extends SparkSpec {
   }
 
   test("funnelLevel (all 4 modes) + sequenceCount: GENERATED code == interpreted eval") {
-    // The r12 verdict's last CodegenFallback holdouts now carry doGenCode;
-    // force the generated path via GenerateMutableProjection (no silent
-    // fallback — a codegen bug here fails compilation or this assert) and
-    // pin it against the interpreted nullSafeEval over randomized, sorted,
-    // tie-heavy (t, step) arrays including empties and step-0 fillers.
+    // FunnelLevelExpr, SequenceCountExpr and CosineSimExpr generate one call
+    // into their own Scala method instead of falling back; force the
+    // generated path via GenerateMutableProjection (no silent fallback — a
+    // codegen bug here fails compilation or this assert) and pin it against
+    // the interpreted nullSafeEval: the generated null handling, result
+    // type and reference plumbing must agree with eval over randomized,
+    // sorted, tie-heavy (t, step) arrays including empties and step-0
+    // fillers, and over float/double vector pairs for the cosine.
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
     import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
@@ -838,6 +841,41 @@ class NativeExprParitySpec extends SparkSpec {
       // null input stays null on both paths
       val nullRow = new GenericInternalRow(Array[Any](null))
       assert(proj(nullRow).isNullAt(0) && e.eval(nullRow) == null, s"$label null")
+    }
+
+    // CosineSimExpr over float×float, double×double and float×double pairs;
+    // unequal lengths and zero vectors score 0.0, a null input stays null
+    import graft.functions.CosineSimExpr
+    val fArr = ArrayType(FloatType, containsNull = false)
+    val dArr = ArrayType(DoubleType, containsNull = false)
+    def vec(dt: ArrayType, xs: Seq[Double]): GenericArrayData =
+      if (dt.elementType == FloatType) new GenericArrayData(xs.map(_.toFloat).toArray[Any])
+      else new GenericArrayData(xs.toArray[Any])
+    val vecs: Seq[(Seq[Double], Seq[Double], Option[Double])] =
+      Seq((Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0), Some(0.0)),   // unequal lengths
+          (Seq(0.0, 0.0, 0.0), Seq(0.5, -1.0, 2.0), Some(0.0)), // zero vector
+          (Seq.empty, Seq.empty, Some(0.0))) ++
+      (0 until 100).map { _ =>
+        val n = 1 + rng.nextInt(16)
+        (Seq.fill(n)(rng.nextGaussian()), Seq.fill(n)(rng.nextGaussian()), None)
+      }
+    for ((lt, rt) <- Seq((fArr, fArr), (dArr, dArr), (fArr, dArr))) {
+      val e = CosineSimExpr(BoundReference(0, lt, nullable = true),
+                            BoundReference(1, rt, nullable = true))
+      val proj = GenerateMutableProjection.generate(Seq(e))
+      val label = s"cosine ${lt.elementType.simpleString}x${rt.elementType.simpleString}"
+      vecs.zipWithIndex.foreach { case ((x, y, expected), idx) =>
+        val row = new GenericInternalRow(Array[Any](vec(lt, x), vec(rt, y)))
+        val gen = proj(row).getDouble(0)
+        val interp = e.eval(row).asInstanceOf[Double]
+        assert(java.lang.Double.doubleToRawLongBits(gen) ==
+                 java.lang.Double.doubleToRawLongBits(interp),
+          s"$label fixture $idx: generated $gen != interpreted $interp")
+        expected.foreach(v => assert(gen == v, s"$label fixture $idx: $gen != $v"))
+      }
+      for (nullRow <- Seq(new GenericInternalRow(Array[Any](null, vec(rt, Seq(1.0)))),
+                          new GenericInternalRow(Array[Any](vec(lt, Seq(1.0)), null))))
+        assert(proj(nullRow).isNullAt(0) && e.eval(nullRow) == null, s"$label null")
     }
   }
 }

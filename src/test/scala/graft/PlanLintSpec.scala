@@ -201,6 +201,45 @@ class PlanLintSpec extends SparkSpec {
     }
   }
 
+  // CosineSimExpr and FunnelLevelExpr generate a call into their own Scala
+  // method instead of falling back. An operator holding a CodegenFallback
+  // expression is left out of WholeStageCodegen, so a fallback cosine would
+  // split ann_topk_brute's join-and-score stage. The funnel DP runs in the
+  // final ObjectHashAggregate's result projection, an operator no codegen
+  // stage fuses either way; its placement is pinned so that a move into a
+  // fusable operator shows up here. Checked on the FINAL plan: AQE collapses
+  // codegen stages only as it runs them, so each query is executed first.
+  test("cosine scoring evaluates inside WholeStageCodegen; the funnel in its aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.{CodegenSupport, InputAdapter, SparkPlan,
+      WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import graft.functions.{CosineSimExpr, FunnelLevelExpr}
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def fused(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(fused)
+    }
+    def run(name: String, isTarget: Expression => Boolean): (SparkPlan, Seq[SparkPlan]) = {
+      val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      (plan, aqe.collect(plan) { case n if n.expressions.exists(_.exists(isTarget)) => n })
+    }
+    val (annPlan, scoring) = run("ann_topk_brute", _.isInstanceOf[CosineSimExpr])
+    val inStages = aqe.collect(annPlan) { case w: WholeStageCodegenExec => w }
+      .flatMap(w => fused(w.child))
+    assert(scoring.nonEmpty, s"ann_topk_brute: no operator scores the cosine:\n$annPlan")
+    scoring.foreach { n =>
+      assert(n.isInstanceOf[CodegenSupport] && inStages.exists(_ eq n),
+        s"ann_topk_brute scores the cosine outside WholeStageCodegen in ${n.nodeName}:\n$annPlan")
+    }
+    val (funnelPlan, dp) = run("funnel_levels", _.isInstanceOf[FunnelLevelExpr])
+    assert(dp.size == 1 && dp.head.isInstanceOf[ObjectHashAggregateExec],
+      s"funnel_levels: the funnel DP left the final aggregate:\n$funnelPlan")
+  }
+
   test("every suite order plans with the same rules: GraftExtensions' alone") {
     // no spec installs rules into the shared session, so the pins above
     // hold whichever suites ran first

@@ -48,19 +48,26 @@ check() { # check <label> <simDir> <outDir>
   fi
 }
 
+# one table rewrite, logged to regen_<label>.log; a failed rewrite names its
+# shape and ends the gate (every later step would read a missing table)
+regen() { # regen <label> <shape> <srcDir> <dstDir>
+  python3 tools/regen_sim.py "$2" "$3" "$4" > "$LOGS/regen_$1.log" 2>&1 ||
+    { echo "SIM $1: REGEN FAILED (see $LOGS/regen_$1.log)"; exit 1; }
+}
+
 T=$WORK/tables
 O=$WORK/out
 mkdir -p "$T" "$O"
 for sim in widths nanosdir f32meas millis decimal dirall hive encoding tz int96 propstruct; do
-  python3 tools/regen_sim.py $sim "$SRC" "$T/$sim" > /dev/null 2>&1
+  regen $sim $sim "$SRC" "$T/$sim"
   check $sim "$T/$sim" "$O/$sim"
 done
-python3 tools/regen_sim.py propstruct "$SRC" "$T/c0" > /dev/null 2>&1
-python3 tools/regen_sim.py widths "$T/c0" "$T/c1" > /dev/null 2>&1
-python3 tools/regen_sim.py decimal "$T/c1" "$T/c2" > /dev/null 2>&1
-python3 tools/regen_sim.py tz "$T/c2" "$T/c3" > /dev/null 2>&1
-python3 tools/regen_sim.py nanosdir "$T/c3" "$T/c4" > /dev/null 2>&1
-python3 tools/regen_sim.py hive "$T/c4" "$T/c5" > /dev/null 2>&1
+regen composed_propstruct propstruct "$SRC" "$T/c0"
+regen composed_widths widths "$T/c0" "$T/c1"
+regen composed_decimal decimal "$T/c1" "$T/c2"
+regen composed_tz tz "$T/c2" "$T/c3"
+regen composed_nanosdir nanosdir "$T/c3" "$T/c4"
+regen composed_hive hive "$T/c4" "$T/c5"
 # the composed gauntlet: all six layout/type/semantic shapes stacked
 check composed "$T/c5" "$O/composed"
 
