@@ -2,9 +2,6 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // batch main: inputs are never rewritten mid-run — memoize the
-    // per-path fingerprint walk (Tables.pathFingerprint) for the run
-    System.setProperty("graft.fp.ttlMs", "3600000")
     val spark = GraftSession()
     // untimed warm-up (Warmup.run): data pages of every table, one join
     // plan, the ingest-time artifacts, the streaming runtime. Failures are
@@ -161,18 +158,15 @@ object Bench {
     // stdout, and the one-line contract JSON must fit inside it. A map of 80+
     // queries does not (r01/r02 both recorded parsed:null), so the printed line
     // carries the total plus a fixed headline subset and points at the file.
-    def qstr(s: String): String =
-      "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-                         case c if c < ' ' => " "; case c => c.toString } + "\""
     def strMap(m: Iterable[(String, String)]): String =
-      m.map { case (k, v) => s"${qstr(k)}:${qstr(v)}" }.mkString("{", ",", "}")
+      m.map { case (k, v) => s"${Verify.q(k)}:${Verify.q(v)}" }.mkString("{", ",", "}")
     val calJson = calibrations.map(num).mkString("[", ",", "]")
     val calStartsJson = calStarts.map(num).mkString("[", ",", "]")
-    val pollutedJson = polluted.map(qstr).mkString("[", ",", "]")
+    val pollutedJson = polluted.map(Verify.q).mkString("[", ",", "]")
     // run order is published explicitly: SparkEntry.queries is a ListMap
     // (insertion order), so positions are stable round-over-round and any
     // per-position cost (should warmup ever regress) is attributable
-    val orderJson = results.map { case (n, _) => qstr(n) }.mkString("[", ",", "]")
+    val orderJson = results.map { case (n, _) => Verify.q(n) }.mkString("[", ",", "]")
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec","calibration":${num(calibration)},"calibrations":$calJson,"cal_starts":$calStartsJson,"polluted":$pollutedJson,"order":$orderJson,"queries":${fmt(results)},"starts":${fmt(starts)},"steady":${fmt(steady)},"steady_total":${num(steadyTotal)},"steady_total_fixed12":${num(steadyTotal12)},"cold_ratio":${fmt(coldRatio)},"errors":${strMap(errors)},"warm_errors":${strMap(warmErrors)},"n_failed":${errors.size},"sf":"$sfDir","n_queries":${results.size}}"""
     val fullPath = java.nio.file.Paths.get("BENCH_FULL.json")

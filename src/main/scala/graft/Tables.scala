@@ -91,11 +91,19 @@ object Tables {
     case other => throw new IllegalStateException(s"unknown epoch unit: $other")
   }
 
+  /** File-identity fingerprint of a table under `sfDir`: the source stamp
+    * of every [[Artifacts]] entry, so a same-JVM rewrite of the source
+    * parquet rebuilds instead of serving a stale artifact (the
+    * rewrite-reprobe invariant EventsTsUnitSpec pins). */
+  private[graft] def tableFingerprint(sfDir: String, name: String): Long =
+    pathFingerprint(s"$sfDir/$name.parquet")
+
   /** Cheap file-identity fingerprint of a table path, stamped on every
     * [[Artifacts]] entry built from it: a path REWRITTEN within one JVM's
     * lifetime (e.g. iterating regen sims into the same /tmp dst, which
     * `tools/regen_sim.py` encourages) re-probes instead of silently applying
-    * a stale schema or epoch unit. For a single file, (mtime, length). For a DIRECTORY table
+    * a stale schema or epoch unit. Every lookup recomputes it: for a single
+    * file, (mtime, length) — three `stat` calls. For a DIRECTORY table
     * (part-file and hive-partitioned layouts) the top directory's own
     * (mtime, length) is NOT enough — an in-place rewrite of partition
     * contents leaves both untouched — so the fingerprint also folds the
@@ -107,40 +115,7 @@ object Tables {
     * size the cap keeps the per-lookup cost bounded while still seeing
     * every realistic regen layout, and entries past the cap still
     * contribute via the count). */
-  // Optional memoization of the walk below, keyed by path: normalizeWidths
-  // runs at every frame construction, so a 147-query Verify pass over a
-  // DIRECTORY table would otherwise re-stat the tree hundreds of times.
-  // OFF by default (TTL 0) — the rewrite-reprobe invariant pinned in
-  // EventsTsUnitSpec must hold with no sleep — and turned on by the batch
-  // mains (Verify/Bench), which never rewrite their inputs mid-run.
-  private val fpMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-  private def fpTtlMs: Long = java.lang.Long.getLong("graft.fp.ttlMs", 0L)
-
   private def pathFingerprint(path: String): Long = {
-    val ttl = fpTtlMs
-    if (ttl > 0) {
-      val now = System.currentTimeMillis()
-      fpMemo.get(path) match {
-        case Some((fp, at)) if now - at < ttl => return fp
-        case _ =>
-          val fp = computeFingerprint(path)
-          fpMemo.put(path, (fp, now))
-          return fp
-      }
-    }
-    computeFingerprint(path)
-  }
-
-  /** File-identity fingerprint of a table under `sfDir`: the source stamp
-    * of every [[Artifacts]] entry, so a same-JVM rewrite of the source
-    * parquet rebuilds instead of serving a stale artifact (the
-    * rewrite-reprobe invariant EventsTsUnitSpec pins). Batch mains memoize
-    * the underlying tree walk via -Dgraft.fp.ttlMs. */
-  private[graft] def tableFingerprint(sfDir: String, name: String): Long =
-    pathFingerprint(s"$sfDir/$name.parquet")
-
-  private def computeFingerprint(path: String): Long = {
     val root = new java.io.File(path)
     var h = root.lastModified ^ java.lang.Long.rotateLeft(root.length, 32)
     if (root.isDirectory) {
@@ -290,13 +265,6 @@ object Tables {
       normalizeEventsTs(spark, sfDir,
         spark.read.parquet(s"$sfDir/events.parquet")), "events", sfDir)
   }
-  def lineitem(spark: SparkSession, sfDir: String): DataFrame   = load(spark, sfDir, "lineitem")
-  def orders(spark: SparkSession, sfDir: String): DataFrame     = load(spark, sfDir, "orders")
-  def customer(spark: SparkSession, sfDir: String): DataFrame   = load(spark, sfDir, "customer")
-  def supplier(spark: SparkSession, sfDir: String): DataFrame   = load(spark, sfDir, "supplier")
-  def part(spark: SparkSession, sfDir: String): DataFrame       = load(spark, sfDir, "part")
-  def nation(spark: SparkSession, sfDir: String): DataFrame     = load(spark, sfDir, "nation")
-  def region(spark: SparkSession, sfDir: String): DataFrame     = load(spark, sfDir, "region")
   def documents(spark: SparkSession, sfDir: String): DataFrame  = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
 }

@@ -33,7 +33,7 @@ object Verify {
   // JSON string escape: backslash, quote, and ALL control chars (<0x20)
   // — a tab or CR in builder-authored SQL would otherwise make the
   // driver's json.load fail and silently zero the round's correctness.
-  private def q(s: String): String = "\"" + s.flatMap {
+  private[graft] def q(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -54,9 +54,6 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // batch main: inputs are never rewritten mid-run, so the per-path
-    // fingerprint walk (Tables.pathFingerprint) may be memoized for the run
-    System.setProperty("graft.fp.ttlMs", "3600000")
     // optional trailing args: restrict the dump to these query names (dev use)
     val only = args.drop(2).toSet
     val spark = GraftSession()

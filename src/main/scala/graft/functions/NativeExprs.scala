@@ -43,7 +43,7 @@ object NativeExprs {
   def minhashSig(text: Column, k: Int, numHashes: Int, seed: Long): Column =
     col(MinHashSigExpr(expr(text), k, numHashes, seed))
 
-  /** 64-bit SimHash over lowercase [a-z]+ token runs; matches
+  /** 64-bit SimHash over the `[a-z]+` runs of `lower(text)`; matches
     * `Dedup.simhash64`. */
   def simhash64(text: Column): Column = col(SimHash64Expr(expr(text)))
 
@@ -129,7 +129,7 @@ object NativeExprs {
   def rawShingleSet(text: Column, k: Int): Column =
     col(ShingleSetExpr(expr(text), k))
 
-  /** Ed-Join count filter over two SORTED hashed gram sets: TRUE iff the
+  /** Ed-Join count filter over two SORTED array<int> gram sets: TRUE iff the
     * distinct intersection is ≥ max(|a|, |b|) − slack. See
     * [[SortedIntersectGeExpr]]; reference form `size(array_intersect(a, b))
     * >= greatest(size(a), size(b)) - slack` is parity-pinned. */
@@ -367,38 +367,22 @@ case class SimHash64Expr(child: Expression)
     ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
 
   override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
     val md = mdLocal.get()
     val sums = new Array[Int](64)
-    val buf = new Array[Byte](bytes.length)
-    var i = 0
-    while (i <= bytes.length) {
-      // token = maximal run of [a-z] after ASCII lowercasing
-      var bLen = 0
-      var j = i
-      var run = true
-      while (j < bytes.length && run) {
-        val c = bytes(j)
-        val lc = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
-        if (lc >= 'a' && lc <= 'z') { buf(bLen) = lc; bLen += 1; j += 1 }
-        else run = false
+    WordWalker.foreachWord(input.asInstanceOf[UTF8String]) { (w, len) =>
+      md.reset()
+      md.update(w, 0, len)
+      val d = md.digest()
+      val lo = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
+               ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+      val hi = ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
+               ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
+      val h = (hi << 32) | lo
+      var b = 0
+      while (b < 64) {
+        if (((h >>> b) & 1L) == 1L) sums(b) += 1 else sums(b) -= 1
+        b += 1
       }
-      if (bLen > 0) {
-        md.reset()
-        md.update(buf, 0, bLen)
-        val d = md.digest()
-        val lo = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-                 ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-        val hi = ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-                 ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
-        val h = (hi << 32) | lo
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) sums(b) += 1 else sums(b) -= 1
-          b += 1
-        }
-      }
-      i = j + 1
     }
     var out = 0L
     var b = 0
@@ -493,10 +477,11 @@ case class CosineSimExpr(left: Expression, right: Expression)
 }
 
 /** Per-document learned-BPE token count: tokenize `[a-z]+` word runs of the
-  * lowercased text (the [[graft.operators.BpeModel]] word basis), apply the
-  * learned merges to each word, sum the symbol counts. One pass per row; a
-  * per-partition word memo makes the per-word merge loop cost ∝ DISTINCT
-  * words, not corpus words. Exact-match reference forms:
+  * lowercased text ([[WordWalker]], the [[graft.operators.BpeModel]] word
+  * basis), apply the learned merges to each word, sum the symbol counts.
+  * One pass per row; a per-partition word memo makes the per-word merge
+  * loop cost ∝ DISTINCT words, not corpus words. Exact-match reference
+  * forms:
   * `BpeModel.tokenCountChain` (column replace-chain, what the DuckDB oracle
   * replays) and `BpeModel.docTokenCounts` (distinct-word join). */
 case class BpeTokenCountExpr(child: Expression, merges: Seq[(String, String)])
@@ -504,7 +489,6 @@ case class BpeTokenCountExpr(child: Expression, merges: Seq[(String, String)])
   override def dataType: DataType = LongType
 
   @transient private lazy val memo = new java.util.HashMap[String, java.lang.Integer]()
-  @transient private lazy val wordRe = java.util.regex.Pattern.compile("[a-z]+")
 
   private def countWord(w: String): Int = {
     val hit = memo.get(w)
@@ -517,33 +501,9 @@ case class BpeTokenCountExpr(child: Expression, merges: Seq[(String, String)])
   }
 
   override def nullSafeEval(input: Any): Any = {
-    val t = input.asInstanceOf[UTF8String]
     var total = 0L
-    if (t.numBytes() == t.numChars()) {
-      // ASCII fast path: the same byte-run tokenization WordHashTokenizer
-      // uses, which equals regexp [a-z]+ over lower() for ASCII input
-      val bytes = t.getBytes
-      val sb = new java.lang.StringBuilder(32)
-      var i = 0
-      while (i <= bytes.length) {
-        if (i < bytes.length) {
-          val c = bytes(i)
-          val lc = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
-          if (lc >= 'a' && lc <= 'z') { sb.append(lc.toChar); i += 1 }
-          else {
-            if (sb.length > 0) { total += countWord(sb.toString); sb.setLength(0) }
-            i += 1
-          }
-        } else {
-          if (sb.length > 0) total += countWord(sb.toString)
-          i += 1
-        }
-      }
-    } else {
-      // non-ASCII fallback through the same primitives the SQL form uses:
-      // lower() then regex [a-z]+ extraction
-      val m = wordRe.matcher(t.toLowerCase.toString)
-      while (m.find()) total += countWord(m.group())
+    WordWalker.foreachWord(input.asInstanceOf[UTF8String]) { (w, len) =>
+      total += countWord(WordWalker.string(w, len))
     }
     total
   }
@@ -551,12 +511,12 @@ case class BpeTokenCountExpr(child: Expression, merges: Seq[(String, String)])
 }
 
 /** Per-document unigram-LM Viterbi stats: tokenize `[a-z]+` word runs of the
-  * lowercased text (the shared word basis), run the integer combined-key
-  * Viterbi DP per word under the learned vocabulary, sum the decomposed
-  * (n_pieces, cost) pair. Same word-walk as [[BpeTokenCountExpr]]; a
-  * per-partition word→key memo makes the DP cost ∝ DISTINCT words. Exact
-  * reference forms: `UnigramLm.viterbiKeyChain` (HOF DP, what the DuckDB
-  * oracle unrolls) and `UnigramLm.docTokenStats` (distinct-word join). */
+  * lowercased text ([[WordWalker]]), run the integer combined-key Viterbi
+  * DP per word under the learned vocabulary, sum the decomposed (n_pieces,
+  * cost) pair. A per-partition word→key memo makes the DP cost ∝ DISTINCT
+  * words. Exact reference forms: `UnigramLm.viterbiKeyChain` (HOF DP, what
+  * the DuckDB oracle unrolls) and `UnigramLm.docTokenStats` (distinct-word
+  * join). */
 case class UnigramStatsExpr(child: Expression, model: graft.operators.UnigramLm.Model)
     extends UnaryExpression with CodegenFallback {
   import graft.operators.UnigramLm.KeyMul
@@ -565,7 +525,6 @@ case class UnigramStatsExpr(child: Expression, model: graft.operators.UnigramLm.
     StructField("unigram_cost", LongType, nullable = false)))
 
   @transient private lazy val memo = new java.util.HashMap[String, java.lang.Long]()
-  @transient private lazy val wordRe = java.util.regex.Pattern.compile("[a-z]+")
   @transient private lazy val costOf = model.costOf
 
   private def keyOf(w: String): Long = {
@@ -577,40 +536,17 @@ case class UnigramStatsExpr(child: Expression, model: graft.operators.UnigramLm.
   }
 
   override def nullSafeEval(input: Any): Any = {
-    val t = input.asInstanceOf[UTF8String]
     var pieces = 0L
     var cost = 0L
-    def add(w: String): Unit = {
+    WordWalker.foreachWord(input.asInstanceOf[UTF8String]) { (w, len) =>
       // words of length ≥ KeyMul are outside the tokenizer contract (their
       // n_pieces would overflow the packed key): zero contribution, matching
       // UnigramLm.docTokenStats and the oracle's LEFT JOIN
-      if (w.length >= KeyMul) return
-      val k = keyOf(w)
-      pieces += k % KeyMul
-      cost += k / KeyMul
-    }
-    if (t.numBytes() == t.numChars()) {
-      // ASCII fast path: byte-run tokenization == regex [a-z]+ over lower()
-      val bytes = t.getBytes
-      val sb = new java.lang.StringBuilder(32)
-      var i = 0
-      while (i <= bytes.length) {
-        if (i < bytes.length) {
-          val c = bytes(i)
-          val lc = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
-          if (lc >= 'a' && lc <= 'z') { sb.append(lc.toChar); i += 1 }
-          else {
-            if (sb.length > 0) { add(sb.toString); sb.setLength(0) }
-            i += 1
-          }
-        } else {
-          if (sb.length > 0) add(sb.toString)
-          i += 1
-        }
+      if (len < KeyMul) {
+        val k = keyOf(WordWalker.string(w, len))
+        pieces += k % KeyMul
+        cost += k / KeyMul
       }
-    } else {
-      val m = wordRe.matcher(t.toLowerCase.toString)
-      while (m.find()) add(m.group())
     }
     val row = new GenericInternalRow(2)
     row.setLong(0, pieces)
@@ -880,13 +816,12 @@ case class PcaProjectExpr(child: Expression, model: graft.operators.Pca.Model)
 }
 
 /** Per-document WordPiece stats: tokenize `[a-z]+` word runs of the
-  * lowercased text (the shared word basis), greedy longest-match-first
-  * encode per word under the learned vocabulary (`##` continuations, one
-  * `[UNK]` for unmatchable or over-long words), sum the (n_pieces, n_unk,
-  * boundary-sig) triple. Same word-walk as [[UnigramStatsExpr]]; a
-  * per-partition word→packed-stats memo makes the greedy cost ∝ DISTINCT
-  * words. Exact reference forms: `WordPiece.wordpieceChain` (HOF walk, what
-  * the DuckDB oracle unrolls) and `WordPiece.docTokenStats`. */
+  * lowercased text ([[WordWalker]]), greedy longest-match-first encode per
+  * word under the learned vocabulary (`##` continuations, one `[UNK]` for
+  * unmatchable or over-long words), sum the (n_pieces, n_unk, boundary-sig)
+  * triple. A per-partition word→packed-stats memo makes the greedy cost ∝
+  * DISTINCT words. Exact reference forms: `WordPiece.wordpieceChain` (HOF
+  * walk, what the DuckDB oracle unrolls) and `WordPiece.docTokenStats`. */
 case class WordpieceStatsExpr(child: Expression, model: graft.operators.WordPiece.Model)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = StructType(Seq(
@@ -897,7 +832,6 @@ case class WordpieceStatsExpr(child: Expression, model: graft.operators.WordPiec
   // packed memo value: sig·256 + np·2 + unk — np ≤ 63 (≤ word length) and
   // sig < 2^30 (mod 1e9+7), so the pack fits comfortably in a long
   @transient private lazy val memo = new java.util.HashMap[String, java.lang.Long]()
-  @transient private lazy val wordRe = java.util.regex.Pattern.compile("[a-z]+")
   @transient private lazy val pieces = model.pieceSet
   @transient private lazy val maxMatch = model.maxMatchLen
 
@@ -911,38 +845,14 @@ case class WordpieceStatsExpr(child: Expression, model: graft.operators.WordPiec
   }
 
   override def nullSafeEval(input: Any): Any = {
-    val t = input.asInstanceOf[UTF8String]
     var np = 0L
     var unk = 0L
     var sig = 0L
-    def add(w: String): Unit = {
-      val packed = packedOf(w)
+    WordWalker.foreachWord(input.asInstanceOf[UTF8String]) { (w, len) =>
+      val packed = packedOf(WordWalker.string(w, len))
       sig += packed / 256L
       np += (packed % 256L) / 2L
       unk += packed % 2L
-    }
-    if (t.numBytes() == t.numChars()) {
-      // ASCII fast path: byte-run tokenization == regex [a-z]+ over lower()
-      val bytes = t.getBytes
-      val sb = new java.lang.StringBuilder(32)
-      var i = 0
-      while (i <= bytes.length) {
-        if (i < bytes.length) {
-          val c = bytes(i)
-          val lc = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
-          if (lc >= 'a' && lc <= 'z') { sb.append(lc.toChar); i += 1 }
-          else {
-            if (sb.length > 0) { add(sb.toString); sb.setLength(0) }
-            i += 1
-          }
-        } else {
-          if (sb.length > 0) add(sb.toString)
-          i += 1
-        }
-      }
-    } else {
-      val m = wordRe.matcher(t.toLowerCase.toString)
-      while (m.find()) add(m.group())
     }
     val row = new GenericInternalRow(3)
     row.setLong(0, np)
@@ -1598,12 +1508,12 @@ case class SortedJaccardExpr(left: Expression, right: Expression)
   * Reference form (parity-pinned): `size(array_intersect(a, b)) >=
   * greatest(size(a), size(b)) - slack` on duplicate-free arrays.
   *
-  * Accepts array<long> or array<int> (both children alike): the count bound
-  * survives ANY elementwise hash — |h(A)| ≤ |h(A∩B)| + |A\B| gives
+  * Takes array<int> children, the 32-bit-narrowed gram columns the
+  * editdist verify carries through its join (half the row bytes): the count
+  * bound survives ANY elementwise hash — |h(A)| ≤ |h(A∩B)| + |A\B| gives
   * |h(A)∩h(B)| ≥ max(|h(A)|,|h(B)|) − slack whenever |A\B|,|B\A| ≤ slack —
-  * so callers can carry 32-bit-narrowed gram columns through the verify
-  * join (half the row bytes; collisions only admit extra candidates to the
-  * exact verify, never drop true pairs). Inputs MUST be value-sorted. */
+  * so collisions only admit extra candidates to the exact verify, never
+  * drop true pairs. Inputs MUST be value-sorted. */
 case class SortedIntersectGeExpr(left: Expression, right: Expression, slack: Int)
     extends BinaryExpression with CodegenFallback {
   override def dataType: DataType = BooleanType
@@ -1611,52 +1521,15 @@ case class SortedIntersectGeExpr(left: Expression, right: Expression, slack: Int
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
     (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
       case (ArrayType(IntegerType, _), ArrayType(IntegerType, _)) => TypeCheckResult.TypeCheckSuccess
       case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"SortedIntersectGeExpr requires both children array<bigint> or both array<int>; got ${l.sql}, ${r.sql}")
+        s"SortedIntersectGeExpr requires both children array<int>; got ${l.sql}, ${r.sql}")
     }
   }
-
-  private lazy val isLongElems: Boolean =
-    left.dataType.asInstanceOf[ArrayType].elementType == LongType
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    if (isLongElems) evalLong(x, y) else evalInt(x, y)
-  }
-
-  private def evalLong(x: ArrayData, y: ArrayData): Boolean = {
-    val nx = x.numElements(); val ny = y.numElements()
-    var i = 0; var j = 0
-    var inter = 0; var da = 0; var db = 0
-    while (i < nx && j < ny) {
-      val va = x.getLong(i); val vb = y.getLong(j)
-      if (va == vb) {
-        inter += 1; da += 1; db += 1
-        i += 1; while (i < nx && x.getLong(i) == va) i += 1
-        j += 1; while (j < ny && y.getLong(j) == vb) j += 1
-      } else if (va < vb) {
-        da += 1
-        i += 1; while (i < nx && x.getLong(i) == va) i += 1
-      } else {
-        db += 1
-        j += 1; while (j < ny && y.getLong(j) == vb) j += 1
-      }
-    }
-    while (i < nx) {
-      val va = x.getLong(i); da += 1
-      i += 1; while (i < nx && x.getLong(i) == va) i += 1
-    }
-    while (j < ny) {
-      val vb = y.getLong(j); db += 1
-      j += 1; while (j < ny && y.getLong(j) == vb) j += 1
-    }
-    inter >= math.max(da, db) - slack
-  }
-
-  private def evalInt(x: ArrayData, y: ArrayData): Boolean = {
     val nx = x.numElements(); val ny = y.numElements()
     var i = 0; var j = 0
     var inter = 0; var da = 0; var db = 0
@@ -1890,54 +1763,72 @@ case class BoundedTStepCollect(
     copy(child = c)
 }
 
-/** Shared word tokenizer for the text-metric expressions: maximal runs of
-  * [a-z] after ASCII lowercasing, emitted as 64-bit xxhashes of the token
-  * bytes — one byte pass, no string allocation. (Unicode letters fall outside
-  * [a-z] under both this and the `lower()`+regex HOF form, so token
-  * boundaries agree — the same equivalence SimHash64Expr relies on.) */
-private[functions] object WordHashTokenizer {
-  /** Calls `f(hash)` per token; returns the token count. */
-  def foreachToken(t: UTF8String, f: Long => Unit): Int = {
-    val bytes = t.getBytes
+/** The one word walker behind every word-level native expression. Words
+  * are the maximal `[a-z]+` runs of `lower(text)`, what
+  * `TextAnalysis.words` extracts and the DuckDB oracles replay; no
+  * expression walks words on its own. An all-ASCII row is lowered byte by
+  * byte as it is walked. Any other row is first lowered whole with
+  * `UTF8String.toLowerCase`, the SQL `lower()` rule, because a few
+  * non-ASCII characters lower to ASCII letters (U+212A KELVIN SIGN to `k`,
+  * U+0130 to `i` + U+0307). In UTF-8 the bytes `a`-`z` encode only those
+  * letters, so the byte runs of the lowered row are its character runs. */
+private[functions] object WordWalker {
+  /** Calls `f(buf, len)` per word, with the word's bytes in `buf(0 until
+    * len)`; `buf` is reused across the row's words. Returns the word count. */
+  def foreachWord(t: UTF8String)(f: (Array[Byte], Int) => Unit): Int = {
+    var bytes = t.getBytes
+    var k = 0
+    while (k < bytes.length && bytes(k) >= 0) k += 1
+    if (k < bytes.length) bytes = t.toLowerCase.getBytes
     val buf = new Array[Byte](bytes.length)
     var count = 0
+    var len = 0
     var i = 0
     while (i <= bytes.length) {
-      var bLen = 0
-      var j = i
-      var run = true
-      while (j < bytes.length && run) {
-        val c = bytes(j)
-        val lc = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
-        if (lc >= 'a' && lc <= 'z') { buf(bLen) = lc; bLen += 1; j += 1 }
-        else run = false
-      }
-      if (bLen > 0) {
-        count += 1
-        f(XXH64.hashUnsafeBytes(buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-                                bLen, 42L))
-      }
-      i = j + 1
+      val c = if (i < bytes.length) bytes(i) else 0.toByte
+      val lc = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
+      if (lc >= 'a' && lc <= 'z') { buf(len) = lc; len += 1 }
+      else if (len > 0) { f(buf, len); count += 1; len = 0 }
+      i += 1
     }
     count
+  }
+
+  /** The word as a JVM string (words are ASCII by construction). */
+  def string(buf: Array[Byte], len: Int): String =
+    new String(buf, 0, len, java.nio.charset.StandardCharsets.ISO_8859_1)
+
+  /** 64-bit xxhash of the word bytes, the stopword and trigram identity. */
+  def hash(buf: Array[Byte], len: Int): Long =
+    XXH64.hashUnsafeBytes(buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len, 42L)
+
+  /** The [[hash]] of every word in a word list (the stopword lists). */
+  def hashSet(words: Seq[String]): java.util.HashSet[java.lang.Long] = {
+    val s = new java.util.HashSet[java.lang.Long]()
+    words.foreach { w =>
+      val b = w.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      s.add(hash(b, b.length))
+    }
+    s
   }
 }
 
 /** Every counter the word-level quality rules (Gopher flags, the quality
-  * classifier's features) need, in ONE pass over the UTF-8 bytes:
+  * classifier's features) need:
   *
-  *   struct(n_words, sum_wlen, n_stop,      — [a-z]+ runs after ASCII
-  *                                            lowering (WordHashTokenizer's
-  *                                            documented equivalence with
-  *                                            the lower()+regex HOF form)
-  *          n_toks, n_alpha_toks,           — \S+ runs / those with a letter
+  *   struct(n_words, sum_wlen, n_stop,      — the words of [[WordWalker]]:
+  *                                            `[a-z]+` runs of `lower(text)`
+  *          n_toks, n_alpha_toks,           — \S+ runs / those with an ASCII
+  *                                            letter
   *          n_hash, n_ellipsis,             — '#' count, non-overlapping '...'
   *          n_punct)                        — ASCII punctuation characters
   *
-  * Byte-level correctness: UTF-8 continuation bytes are ≥ 0x80, so they can
-  * never alias ASCII whitespace/letters/punctuation — multi-byte characters
-  * simply ride inside non-whitespace runs, exactly as `\S` sees them. The
-  * HOF reference forms live in the gopher parity spec. */
+  * The word counters come from one walker pass; the other five come from
+  * one pass over the raw UTF-8 bytes, which the HOF forms also read
+  * un-lowered. UTF-8 continuation bytes are ≥ 0x80, so they never alias
+  * ASCII whitespace/letters/punctuation — multi-byte characters simply ride
+  * inside non-whitespace runs, exactly as `\S` sees them. The HOF reference
+  * forms live in the gopher parity spec. */
 case class TextStatsExpr(child: Expression, stopwords: Seq[String])
     extends UnaryExpression with CodegenFallback {
 
@@ -1951,15 +1842,7 @@ case class TextStatsExpr(child: Expression, stopwords: Seq[String])
     StructField("n_ellipsis", LongType, nullable = false),
     StructField("n_punct", LongType, nullable = false)))
 
-  @transient private lazy val stopHashes: java.util.HashSet[java.lang.Long] = {
-    val s = new java.util.HashSet[java.lang.Long]()
-    stopwords.foreach { w =>
-      val b = w.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      s.add(XXH64.hashUnsafeBytes(b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-                                  b.length, 42L))
-    }
-    s
-  }
+  @transient private lazy val stopHashes = WordWalker.hashSet(stopwords)
 
   private def isWs(b: Byte): Boolean = // RE2 \s = [ \t\n\f\r] — NO \x0B; the
     // DuckDB oracle tokenizes with RE2 \S+, so the engine must agree on VT
@@ -1969,12 +1852,15 @@ case class TextStatsExpr(child: Expression, stopwords: Seq[String])
     (b >= '[' && b <= '`') || (b >= '{' && b <= '~')
 
   override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    var nWords = 0L; var sumWlen = 0L; var nStop = 0L
+    val t = input.asInstanceOf[UTF8String]
+    var sumWlen = 0L; var nStop = 0L
+    val nWords = WordWalker.foreachWord(t) { (w, len) =>
+      sumWlen += len
+      if (stopHashes.contains(WordWalker.hash(w, len))) nStop += 1
+    }.toLong
+    val bytes = t.getBytes
     var nToks = 0L; var nAlphaToks = 0L
     var nHash = 0L; var nPunct = 0L; var nEllipsis = 0L
-    val wbuf = new Array[Byte](bytes.length max 1)
-    var wLen = 0          // current [a-z] run length (post-lowering)
     var inTok = false     // inside a \S+ run
     var tokHasAlpha = false
     var dotRun = 0L       // current '.' run length
@@ -1982,26 +1868,13 @@ case class TextStatsExpr(child: Expression, stopwords: Seq[String])
     while (i <= bytes.length) {
       val atEnd = i == bytes.length
       val b: Byte = if (atEnd) ' ' else bytes(i)
-      val lc: Byte = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
-      val isLetter = lc >= 'a' && lc <= 'z'
-      // word runs
-      if (isLetter) { wbuf(wLen) = lc; wLen += 1 }
-      else if (wLen > 0) {
-        nWords += 1; sumWlen += wLen
-        if (stopHashes.contains(XXH64.hashUnsafeBytes(
-              wbuf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, wLen, 42L)))
-          nStop += 1
-        wLen = 0
-      }
-      // token runs
       if (!atEnd && !isWs(b)) {
         if (!inTok) { inTok = true; tokHasAlpha = false }
-        if (isLetter) tokHasAlpha = true
+        if ((b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z')) tokHasAlpha = true
       } else if (inTok) {
         nToks += 1; if (tokHasAlpha) nAlphaToks += 1
         inTok = false
       }
-      // symbols
       if (!atEnd) {
         if (b == '#') nHash += 1
         if (isPunct(b)) nPunct += 1
@@ -2022,20 +1895,13 @@ case class StopwordRatioExpr(child: Expression, stopwords: Seq[String])
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = DoubleType
 
-  @transient private lazy val stopHashes: java.util.HashSet[java.lang.Long] = {
-    val s = new java.util.HashSet[java.lang.Long]()
-    stopwords.foreach { w =>
-      val b = w.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      s.add(XXH64.hashUnsafeBytes(b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-                                  b.length, 42L))
-    }
-    s
-  }
+  @transient private lazy val stopHashes = WordWalker.hashSet(stopwords)
 
   override def nullSafeEval(input: Any): Any = {
     var hits = 0
-    val n = WordHashTokenizer.foreachToken(input.asInstanceOf[UTF8String],
-      h => if (stopHashes.contains(h)) hits += 1)
+    val n = WordWalker.foreachWord(input.asInstanceOf[UTF8String]) { (w, len) =>
+      if (stopHashes.contains(WordWalker.hash(w, len))) hits += 1
+    }
     if (n == 0) 0.0 else hits.toDouble / n
   }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
@@ -2049,7 +1915,9 @@ case class RepetitionRatioExpr(child: Expression)
 
   override def nullSafeEval(input: Any): Any = {
     val hashes = new scala.collection.mutable.ArrayBuffer[Long](64)
-    WordHashTokenizer.foreachToken(input.asInstanceOf[UTF8String], hashes += _)
+    WordWalker.foreachWord(input.asInstanceOf[UTF8String]) { (w, len) =>
+      hashes += WordWalker.hash(w, len)
+    }
     val nTri = hashes.length - 2
     if (nTri <= 0) return 0.0
     val seen = new java.util.HashSet[java.lang.Long](nTri * 2)
@@ -2170,27 +2038,15 @@ case class LangIdExpr(child: Expression)
     TextAnalysis.langOrder.map(UTF8String.fromString).toArray
 
   override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
+    val t = input.asInstanceOf[UTF8String]
     val scores = new Array[Long](sets.length)
-    val sb = new java.lang.StringBuilder(16)
-    var i = 0
-    val n = s.length
-    while (i <= n) {
-      sb.setLength(0)
-      var j = i
-      var run = true
-      while (j < n && run) {
-        val c = s.charAt(j)
-        val lc = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
-        if (lc >= 'a' && lc <= 'z') { sb.append(lc); j += 1 } else run = false
-      }
-      if (sb.length > 0) {
-        val tok = sb.toString
-        var l = 0
-        while (l < sets.length) { if (sets(l).contains(tok)) scores(l) += 1; l += 1 }
-      }
-      i = j + 1
+    WordWalker.foreachWord(t) { (w, len) =>
+      val tok = WordWalker.string(w, len)
+      var l = 0
+      while (l < sets.length) { if (sets(l).contains(tok)) scores(l) += 1; l += 1 }
     }
+    val s = t.toString
+    val n = s.length
     // CJK codepoint signal for zh
     var ci = 0
     while (ci < n) {

@@ -470,7 +470,7 @@ object TextQueries {
     * instead of sum/n ≥ 3) so no engine ever divides — the flags are exact
     * everywhere. Pure codegen'd projection, parquet-scan speed. */
   private def gopherQuality(s: SparkSession, dir: String): DataFrame = {
-    // all eight counters from ONE native byte pass (TextStatsExpr; codegen
+    // all eight counters from ONE native expression (TextStatsExpr; codegen
     // subexpression elimination evaluates the shared struct once per row) —
     // the HOF regex/aggregate forms survive as GopherStatsParity's reference
     val st = graft.functions.NativeExprs.textStats(

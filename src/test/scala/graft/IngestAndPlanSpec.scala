@@ -118,7 +118,7 @@ class IngestAndPlanSpec extends SparkSpec {
   }
 
   test("column pruning: 2-column query reads a 2-column schema") {
-    val df = Tables.lineitem(spark, "/root/testdata/sf0.001")
+    val df = Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
       .select($"l_returnflag", $"l_quantity")
       .groupBy($"l_returnflag").agg(sum($"l_quantity"))
     val scan = df.queryExecution.executedPlan.toString

@@ -11,6 +11,10 @@ class NativeExprParitySpec extends SparkSpec {
 
   private lazy val docs = Tables.documents(spark, "/root/testdata/sf0.001").cache()
   private lazy val emb = Tables.embeddings(spark, "/root/testdata/sf0.001").cache()
+  // rows whose lower() holds ASCII letters that no ASCII-only lowering
+  // finds: U+212A KELVIN SIGN lowers to 'k', U+0130 to 'i' + U+0307
+  private val nonAscii = Seq("\u212Aelvin scale", "\u0130stanbul is big",
+                             "the \u0130t \u212Aelvin")
 
   test("minhashSig matches the Scala reference, byte for byte") {
     import graft.functions.MinHashRef
@@ -110,10 +114,13 @@ class NativeExprParitySpec extends SparkSpec {
   }
 
   test("simhash64 native == HOF") {
-    val diff = docs.select(NativeExprs.simhash64($"text").as("a"),
-                           Dedup.simhash64Hof($"text").as("b"))
-      .filter(not($"a" <=> $"b")).count()
-    assert(diff == 0)
+    val weird = (Seq("", "   ", "THE the", "héllo wörld") ++ nonAscii).toDF("text")
+    for (frame <- Seq(docs.select($"text"), weird)) {
+      val diff = frame.select(NativeExprs.simhash64($"text").as("a"),
+                              Dedup.simhash64Hof($"text").as("b"))
+        .filter(not($"a" <=> $"b")).count()
+      assert(diff == 0)
+    }
   }
 
   test("srpSigs native == per-table HOF signatures") {
@@ -214,7 +221,8 @@ class NativeExprParitySpec extends SparkSpec {
       .filter(not($"a" <=> $"b")).count()
     assert(diff == 0)
     // plus degenerate inputs
-    val weird = Seq("", "   ", "THE THE THE", "el el el 的", "xyzzy").toDF("text")
+    val weird = (Seq("", "   ", "THE THE THE", "el el el 的", "xyzzy") ++ nonAscii)
+      .toDF("text")
     val d2 = weird.select(NativeExprs.langId($"text").as("a"),
                           TextAnalysis.langIdHof($"text").as("b"))
       .filter(not($"a" <=> $"b")).count()
@@ -244,14 +252,14 @@ class NativeExprParitySpec extends SparkSpec {
   test("sortedIntersectGe(sort(a), sort(b), k) == array_intersect count-filter reference") {
     val rnd = new scala.util.Random(29)
     val cases = Seq(
-      (Seq.empty[Long], Seq.empty[Long]),
-      (Seq.empty[Long], Seq(1L, 2L)),
-      (Seq(5L, 5L, 5L), Seq(5L)),             // intra-array duplicate runs
-      (Seq(1L, 2L, 3L), Seq(3L, 2L, 1L)),
-      (Seq(-9L, 0L, 9L), Seq(0L, 0L, 7L, -9L))
+      (Seq.empty[Int], Seq.empty[Int]),
+      (Seq.empty[Int], Seq(1, 2)),
+      (Seq(5, 5, 5), Seq(5)),                 // intra-array duplicate runs
+      (Seq(1, 2, 3), Seq(3, 2, 1)),
+      (Seq(-9, 0, 9), Seq(0, 0, 7, -9))
     ) ++ (0 until 80).map { _ =>
-      (Seq.fill(rnd.nextInt(50))(rnd.nextInt(30).toLong),
-       Seq.fill(rnd.nextInt(50))(rnd.nextInt(30).toLong))
+      (Seq.fill(rnd.nextInt(50))(rnd.nextInt(30)),
+       Seq.fill(rnd.nextInt(50))(rnd.nextInt(30)))
     }
     val df = cases.toDF("a", "b")
     for (slack <- Seq(0, 3, 16)) {
@@ -295,6 +303,10 @@ class NativeExprParitySpec extends SparkSpec {
     val mixed = Seq((Seq(1L, 2L), Seq(1, 2))).toDF("a", "b")
     intercept[org.apache.spark.sql.AnalysisException] {
       mixed.select(NativeExprs.sortedIntersectGe($"a", $"b", 0)).collect()
+    }
+    val longs = Seq((Seq(1L, 2L), Seq(1L, 2L))).toDF("a", "b")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      longs.select(NativeExprs.sortedIntersectGe($"a", $"b", 0)).collect()
     }
     val strings = Seq((Seq("x"), Seq("y"))).toDF("a", "b")
     intercept[org.apache.spark.sql.AnalysisException] {
@@ -382,7 +394,8 @@ class NativeExprParitySpec extends SparkSpec {
       .filter(not($"a" <=> coalesce($"b", lit(0L)))).count()
     assert(d == 0)
     // degenerate inputs
-    val weird = Seq("", "   ", "123 !!!", "AAA aaa AaA", "the").toDF("text")
+    val weird = (Seq("", "   ", "123 !!!", "AAA aaa AaA", "the") ++ nonAscii)
+      .toDF("text")
     val d2 = weird.select(
         NativeExprs.bpeTokenCount($"text", merges).as("a"),
         coalesce(aggregate(transform(TextAnalysis.words($"text"),
@@ -393,8 +406,8 @@ class NativeExprParitySpec extends SparkSpec {
   }
 
   test("stopwordRatio and repetitionRatio native == HOF") {
-    val weird = Seq("", "   ", "the the the", "a b", "spam spam spam spam spam")
-      .toDF("text")
+    val weird = (Seq("", "   ", "the the the", "a b", "spam spam spam spam spam") ++
+                 nonAscii).toDF("text")
     for (frame <- Seq(docs.select($"text"), weird)) {
       val d = frame.select(
           NativeExprs.stopwordRatio($"text", TextAnalysis.Stopwords("en")).as("a"),
@@ -424,13 +437,13 @@ class NativeExprParitySpec extends SparkSpec {
 
   test("textStats matches the HOF regex/aggregate reference forms") {
     val stop = TextAnalysis.Stopwords("en")
-    val weird = Seq(
+    val weird = (Seq(
       "", "   ", "the", "THE The tHe", "a#b ... c....d .......",
       "x\ty\nz\u000Bw", "héllo wörld the", "123 45a #tag a.b.c",
       "trailing dots...", "#", "...", "it is a the of and to in you that",
       // VT is a token CHARACTER under the RE2-aligned \s set: "a\u000Bb" is ONE token
       "a\u000Bb two", "\u000B", "the\u000Bthe and"
-    ).toDF("text")
+    ) ++ nonAscii).toDF("text")
     for (frame <- Seq(docs.select($"text"), weird)) {
       val ws = TextAnalysis.words($"text")
       val toks = TextAnalysis.tokens($"text")

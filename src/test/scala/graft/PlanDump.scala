@@ -17,7 +17,6 @@ object PlanDump {
     val names = if (args.length > 2) args.drop(2).toSeq
                 else SparkEntry.queries.keys.toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    System.setProperty("graft.fp.ttlMs", "3600000")
     val spark = GraftSession()
     // a dead warmup changes the captured plans (missing cached artifacts
     // plan differently); Warmup prints every failed step by name

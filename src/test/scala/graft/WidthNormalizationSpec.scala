@@ -92,7 +92,7 @@ class WidthNormalizationSpec extends SparkSpec {
     // magnitude inference instead). 2023-06-15T00:00:00Z = 1686787200 s.
     val us = 1686787200000000L
     def check(dir: String): Unit = {
-      val od = Tables.orders(spark, dir)
+      val od = Tables.load(spark, dir, "orders")
       assert(od.schema("o_orderdate").dataType === TimestampType)
       assert(od.select(unix_micros($"o_orderdate")).as[Long].head() === us)
     }
